@@ -103,29 +103,6 @@ object TempDirs {
     } finally pool.shutdown()
   }
 
-  /** Start [[copyTree]] on a daemon thread and return a join handle that
-    * rethrows the copy's failure (unwrapped). For the hermetic
-    * working-copy seeds: the copy is pure filesystem work with no data
-    * dependency on the probe/tokenize phase that follows it, so the two
-    * overlap (guide §2.6); callers MUST invoke the handle before the
-    * first write touches `dst`.
-    */
-  def copyTreeAsync(spark: org.apache.spark.sql.SparkSession, src: String,
-      dst: String): () => Unit = {
-    val task = new java.util.concurrent.FutureTask[Unit](
-      new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = copyTree(spark, src, dst)
-      })
-    val th = new Thread(task, "graft-copy-tree")
-    th.setDaemon(true)
-    th.start()
-    () =>
-      try task.get() catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
-  }
-
   private def deleteRecursively(p: Path): Unit = {
     import java.nio.file.{FileVisitResult, SimpleFileVisitor}
     import java.nio.file.attribute.BasicFileAttributes

@@ -315,7 +315,7 @@ object CorpusOps {
     * (map-side partials, no skew, no window) — |corpus|×|eval| scoring
     * is inherent to exact semantic decontamination, and the broadcast
     * nested-loop keeps it shuffle-free. The approximate 100 TB fast
-    * path reuses the persisted IVF index ([[Similarity.ensureIvfIndex]]
+    * path reuses the persisted IVF index ([[IvfIndex.ensure]]
     * + probe with the eval rows as queries); this entry is the exact
     * form the index path is gated against.
     */

@@ -1371,9 +1371,10 @@ object Dedup {
     * data dependency on wave 1's probe, and the probe needs only index
     * CONTENT, which is byte-identical at `probeSrc` (the source index)
     * until the first append mutates the copy. When a seed thunk is
-    * given, it runs on its own thread while wave 1's probe executes
-    * against `probeSrc`, and is joined (with exception propagation)
-    * before [[appendDocsBatch]] first touches the working tree.
+    * given, it runs on its own thread ([[graft.Overlap]]) while wave 1's
+    * probe executes against `probeSrc`, and is joined (with exception
+    * propagation) before [[appendDocsBatch]] first touches the working
+    * tree — and on every exit path.
     */
   private def appendCore(spark: SparkSession, dir: String,
       augIndexPath: String, prune: Boolean,
@@ -1390,27 +1391,22 @@ object Dedup {
     val wave1 = docs.where(s"doc_id % ${2 * IncrSplitMod} = 0")
     val wave2 = docs.where(s"doc_id % ${2 * IncrSplitMod} = $IncrSplitMod")
 
-    val seed = seedCopy.map { run =>
-      val t = new java.util.concurrent.FutureTask[Unit](
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = run() })
-      val th = new Thread(t, "graft-seed-copy"); th.setDaemon(true)
-      th.start(); t
-    }
-    val dup1 = timed("probe_wave1") {
-      incrementalProbe(spark, wave1, src, prune = prune)
-        .where("is_dup = 1").select("doc_id").distinct()
-        // materialize NOW, against the source, overlapping the seed copy
-        .localCheckpoint()
-    }
-    seed.foreach { t =>
-      try t.get() catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
+    def cycle(seeded: () => Unit): DataFrame = {
+      val dup1 = timed("probe_wave1") {
+        incrementalProbe(spark, wave1, src, prune = prune)
+          .where("is_dup = 1").select("doc_id").distinct()
+          // materialize NOW, against the source, overlapping the seed copy
+          .localCheckpoint()
       }
+      seeded()
+      appendDocsBatch(spark, augIndexPath,
+        wave1.join(dup1, Seq("doc_id"), "left_anti"), phase)
+      incrementalProbe(spark, wave2, augIndexPath, prune = prune)
     }
-    appendDocsBatch(spark, augIndexPath,
-      wave1.join(dup1, Seq("doc_id"), "left_anti"), phase)
-    incrementalProbe(spark, wave2, augIndexPath, prune = prune)
+    seedCopy match {
+      case Some(run) => graft.Overlap.background(run())(cycle)
+      case None => cycle(() => ())
+    }
   }
 
   /** Sign `docsToAppend` and upsert their band rows into the bucketed

@@ -161,106 +161,97 @@ object Refresh {
     // hides under stages 4-9 (guide §2.6 overlap independent work)
     val augPath = graft.TempDirs.scoped("e2e-refresh") +
       s"/index_b${Dedup.indexBuckets(spark, dir)}"
-    val seedCopy = new java.util.concurrent.FutureTask[Unit](
-      new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = graft.TempDirs.copyTree(spark, idxPath, augPath)
-      })
-    locally {
-      val th = new Thread(seedCopy, "graft-e2e-seed-copy")
-      th.setDaemon(true); th.start()
+    graft.Overlap.background(graft.TempDirs.copyTree(spark, idxPath, augPath)) { seeded =>
+      val dupBase = Dedup.incrementalProbe(spark, exactK, idxPath, prune = true)
+        .where("is_dup = 1").select("doc_id").distinct()
+      val s3 = exactK.join(dupBase, Seq("doc_id"), "left_anti")
+        // consumed ~6× by the within-batch near-dup construction
+        .localCheckpoint()
+
+      // 5. near-dup WITHIN the batch: full LSH→exact-Jaccard confirm at
+      //    batch scale, keep-first (the e2ePrepare stage-3 policy)
+      val dupIn = Dedup.jaccardLshGated(s3.select("doc_id", "text"))
+        .selectExpr("doc_b AS doc_id").distinct()
+      val s4 = s3.join(dupIn, Seq("doc_id"), "left_anti")
+        // truncate the gated-LSH subtree: five downstream consumers
+        // (counts, decon stages, accept) must not re-execute it
+        .localCheckpoint()
+
+      // 6. eval split-off: ids reserved for the benchmark pool are never
+      //    training candidates
+      val cand = s4.where(s"doc_id % $EvalEvery != 0")
+
+      // 7. gram decontamination vs the PERSISTED eval-gram artifact
+      val evalGrams = spark.read.parquet(ensureEvalGramIndex(spark, dir))
+      val gramContaminated = cand
+        .selectExpr("doc_id", "split(text, ' ') AS t")
+        .selectExpr("doc_id", s"explode(${CorpusOps.gramExpr(DecontamN)}) AS gram")
+        .join(broadcast(evalGrams), "gram")
+        .select("doc_id").distinct()
+      val s5 = cand.join(gramContaminated, Seq("doc_id"), "left_anti")
+        // truncate the gram-decon subtree (count + semantic stage + accept)
+        .localCheckpoint()
+
+      // 8. semantic decontamination vs the capped eval embedding slice
+      //    (base members only), broadcast — the decontaminateSemantic
+      //    geometry restricted to the batch side
+      val emb = Tables.load(spark, dir, "embeddings")
+        .selectExpr("vec_id",
+          "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
+        .selectExpr("vec_id", "emb", "sqrt(graft_dot(emb, emb)) AS nrm")
+      val evalVecs = emb.where(
+          s"vec_id % $EvalEvery = 0 AND vec_id < ${EvalEvery * SemanticEvalCap}" +
+            s" AND vec_id % $IncrSplitMod <> 0")
+        .selectExpr("vec_id AS eval_id", "emb AS e_emb", "nrm AS e_nrm")
+      val semContaminated = s5.select("doc_id")
+        .join(emb, expr("vec_id = doc_id"))
+        .join(broadcast(evalVecs))
+        .selectExpr("doc_id",
+          "round(graft_dot(emb, e_emb) / (nrm * e_nrm), 6) AS sim")
+        .groupBy("doc_id").agg(max("sim").as("max_sim"))
+        .where(s"max_sim >= $SemanticTau")
+        .select("doc_id")
+      val accepted = s5.join(semContaminated, Seq("doc_id"), "left_anti")
+        // consumed by the count, line probe, append, re-probe, fingerprint
+        .localCheckpoint()
+
+      // 9. line-dedup accounting vs the PERSISTED line index (+ batch-
+      //    internal first occurrences) — touched-bucket probes only
+      val lineStats = LineDedup.refreshLines(spark, dir, accepted)
+
+      // 10. fold the batch back into the standing state: bucket-wise
+      //     append to a working copy of the band index, then verify with a
+      //     pruned re-probe (every appended doc must now self-match). The
+      //     copy was seeded concurrently at stage 4 — join it (propagating
+      //     any copy failure) before the first write touches the tree.
+      seeded()
+      Dedup.appendDocsBatch(spark, augPath, accepted)
+      val reprobed = Dedup.incrementalProbe(spark, accepted, augPath, prune = true)
+        .where("is_dup = 1").select("doc_id").distinct()
+
+      def one(stage: Int, metric: String, v: DataFrame): DataFrame =
+        v.selectExpr(s"CAST($stage AS BIGINT) AS stage", s"'$metric' AS metric",
+          "CAST(v AS BIGINT) AS value")
+      def cnt(stage: Int, metric: String, df: DataFrame): DataFrame =
+        one(stage, metric, df.agg(count(lit(1)).as("v")))
+      cnt(1, "batch_docs", batch)
+        .unionByName(cnt(2, "quality_docs", quality))
+        .unionByName(cnt(3, "exact_dedup_docs", exactK))
+        .unionByName(cnt(4, "past_base_neardup", s3))
+        .unionByName(cnt(5, "past_batch_neardup", s4))
+        .unionByName(cnt(6, "train_candidates", cand))
+        .unionByName(cnt(7, "gram_clean_docs", s5))
+        .unionByName(cnt(8, "accepted_docs", accepted))
+        .unionByName(one(9, "lines_total", lineStats.agg(
+          expr("coalesce(sum(lines_total), CAST(0 AS BIGINT)) AS v"))))
+        .unionByName(one(9, "lines_kept", lineStats.agg(
+          expr("coalesce(sum(lines_kept), CAST(0 AS BIGINT)) AS v"))))
+        .unionByName(cnt(10, "reprobe_self_dups", reprobed))
+        .unionByName(one(11, "batch_fp", accepted.agg(
+          expr(s"coalesce(sum(${TextAnalysis.polyHashExpr("text")})," +
+            " CAST(0 AS BIGINT)) AS v"))))
+        .orderBy("stage", "metric")
     }
-    val dupBase = Dedup.incrementalProbe(spark, exactK, idxPath, prune = true)
-      .where("is_dup = 1").select("doc_id").distinct()
-    val s3 = exactK.join(dupBase, Seq("doc_id"), "left_anti")
-      // consumed ~6× by the within-batch near-dup construction
-      .localCheckpoint()
-
-    // 5. near-dup WITHIN the batch: full LSH→exact-Jaccard confirm at
-    //    batch scale, keep-first (the e2ePrepare stage-3 policy)
-    val dupIn = Dedup.jaccardLshGated(s3.select("doc_id", "text"))
-      .selectExpr("doc_b AS doc_id").distinct()
-    val s4 = s3.join(dupIn, Seq("doc_id"), "left_anti")
-      // truncate the gated-LSH subtree: five downstream consumers
-      // (counts, decon stages, accept) must not re-execute it
-      .localCheckpoint()
-
-    // 6. eval split-off: ids reserved for the benchmark pool are never
-    //    training candidates
-    val cand = s4.where(s"doc_id % $EvalEvery != 0")
-
-    // 7. gram decontamination vs the PERSISTED eval-gram artifact
-    val evalGrams = spark.read.parquet(ensureEvalGramIndex(spark, dir))
-    val gramContaminated = cand
-      .selectExpr("doc_id", "split(text, ' ') AS t")
-      .selectExpr("doc_id", s"explode(${CorpusOps.gramExpr(DecontamN)}) AS gram")
-      .join(broadcast(evalGrams), "gram")
-      .select("doc_id").distinct()
-    val s5 = cand.join(gramContaminated, Seq("doc_id"), "left_anti")
-      // truncate the gram-decon subtree (count + semantic stage + accept)
-      .localCheckpoint()
-
-    // 8. semantic decontamination vs the capped eval embedding slice
-    //    (base members only), broadcast — the decontaminateSemantic
-    //    geometry restricted to the batch side
-    val emb = Tables.load(spark, dir, "embeddings")
-      .selectExpr("vec_id",
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
-      .selectExpr("vec_id", "emb", "sqrt(graft_dot(emb, emb)) AS nrm")
-    val evalVecs = emb.where(
-        s"vec_id % $EvalEvery = 0 AND vec_id < ${EvalEvery * SemanticEvalCap}" +
-          s" AND vec_id % $IncrSplitMod <> 0")
-      .selectExpr("vec_id AS eval_id", "emb AS e_emb", "nrm AS e_nrm")
-    val semContaminated = s5.select("doc_id")
-      .join(emb, expr("vec_id = doc_id"))
-      .join(broadcast(evalVecs))
-      .selectExpr("doc_id",
-        "round(graft_dot(emb, e_emb) / (nrm * e_nrm), 6) AS sim")
-      .groupBy("doc_id").agg(max("sim").as("max_sim"))
-      .where(s"max_sim >= $SemanticTau")
-      .select("doc_id")
-    val accepted = s5.join(semContaminated, Seq("doc_id"), "left_anti")
-      // consumed by the count, line probe, append, re-probe, fingerprint
-      .localCheckpoint()
-
-    // 9. line-dedup accounting vs the PERSISTED line index (+ batch-
-    //    internal first occurrences) — touched-bucket probes only
-    val lineStats = LineDedup.refreshLines(spark, dir, accepted)
-
-    // 10. fold the batch back into the standing state: bucket-wise
-    //     append to a working copy of the band index, then verify with a
-    //     pruned re-probe (every appended doc must now self-match). The
-    //     copy was seeded concurrently at stage 4 — join it (propagating
-    //     any copy failure) before the first write touches the tree.
-    try seedCopy.get() catch {
-      case e: java.util.concurrent.ExecutionException =>
-        throw Option(e.getCause).getOrElse(e)
-    }
-    Dedup.appendDocsBatch(spark, augPath, accepted)
-    val reprobed = Dedup.incrementalProbe(spark, accepted, augPath, prune = true)
-      .where("is_dup = 1").select("doc_id").distinct()
-
-    def one(stage: Int, metric: String, v: DataFrame): DataFrame =
-      v.selectExpr(s"CAST($stage AS BIGINT) AS stage", s"'$metric' AS metric",
-        "CAST(v AS BIGINT) AS value")
-    def cnt(stage: Int, metric: String, df: DataFrame): DataFrame =
-      one(stage, metric, df.agg(count(lit(1)).as("v")))
-    cnt(1, "batch_docs", batch)
-      .unionByName(cnt(2, "quality_docs", quality))
-      .unionByName(cnt(3, "exact_dedup_docs", exactK))
-      .unionByName(cnt(4, "past_base_neardup", s3))
-      .unionByName(cnt(5, "past_batch_neardup", s4))
-      .unionByName(cnt(6, "train_candidates", cand))
-      .unionByName(cnt(7, "gram_clean_docs", s5))
-      .unionByName(cnt(8, "accepted_docs", accepted))
-      .unionByName(one(9, "lines_total", lineStats.agg(
-        expr("coalesce(sum(lines_total), CAST(0 AS BIGINT)) AS v"))))
-      .unionByName(one(9, "lines_kept", lineStats.agg(
-        expr("coalesce(sum(lines_kept), CAST(0 AS BIGINT)) AS v"))))
-      .unionByName(cnt(10, "reprobe_self_dups", reprobed))
-      .unionByName(one(11, "batch_fp", accepted.agg(
-        expr(s"coalesce(sum(${TextAnalysis.polyHashExpr("text")})," +
-          " CAST(0 AS BIGINT)) AS v"))))
-      .orderBy("stage", "metric")
   }
 
   /** DuckDB replay: recompute EVERY stage from corpus+batch restricted

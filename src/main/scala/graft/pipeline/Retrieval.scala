@@ -438,41 +438,42 @@ object Retrieval {
     val work = graft.TempDirs.scoped("bm25-append") + "/index"
     // hermeticity tax only — runs concurrently with the wave's
     // tokenize+explode below, joined before the first upsert write
-    val seeded = graft.TempDirs.copyTreeAsync(spark, src, work)
-    val wave = Tables.load(spark, dir, "documents")
-      .where(s"doc_id % ${Dedup.IncrSplitMod} = 0")
-    // persisted: consumed by the upsert merge AND the touched-set collect
-    // (the appendDocsBatch convention) — one tokenize+explode, not two
-    val wavePostings = postingsOf(wave)
-      .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
-      .persist()
-    try {
-      // the touched-set collect fills the persist NOW, overlapping the
-      // working-copy seed; the upsert then starts from warm rows
-      val touched = wavePostings.select("tb").distinct()
-        .collect().map(_.getInt(0)).toSet // metadata-scale
-      seeded()
-      graft.streaming.Sinks.partitionedUpsertBatch(
-        wavePostings, s"$work/postings",
-        partitionCols = Seq("tb"), keyCols = Seq("term", "doc_id"),
-        versionCols = Seq("ver"), sortCols = Seq("term", "doc_id"))
-      if (touched.nonEmpty) {
-        val merged = spark.read.option("basePath", s"$work/postings")
-          .parquet(touched.toSeq.sorted.map(tb => s"$work/postings/tb=$tb"): _*)
-        val newStats = merged.groupBy("term").agg(count(lit(1)).as("df"))
-          .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
+    graft.Overlap.background(graft.TempDirs.copyTree(spark, src, work)) { seeded =>
+      val wave = Tables.load(spark, dir, "documents")
+        .where(s"doc_id % ${Dedup.IncrSplitMod} = 0")
+      // persisted: consumed by the upsert merge AND the touched-set collect
+      // (the appendDocsBatch convention) — one tokenize+explode, not two
+      val wavePostings = postingsOf(wave)
+        .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
+        .persist()
+      try {
+        // the touched-set collect fills the persist NOW, overlapping the
+        // working-copy seed; the upsert then starts from warm rows
+        val touched = wavePostings.select("tb").distinct()
+          .collect().map(_.getInt(0)).toSet // metadata-scale
+        seeded()
         graft.streaming.Sinks.partitionedUpsertBatch(
-          newStats, s"$work/stats",
-          partitionCols = Seq("tb"), keyCols = Seq("term"),
-          versionCols = Seq("ver"), sortCols = Seq("term"))
-      }
-      val old = spark.read.parquet(s"$src/meta").head()
-      val add = metaOf(wave).head()
-      writeMeta(spark, s"$work/meta",
-        old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1))
-      augmentTbManifest(spark, work, touched)
-      prunedTopK(spark, work)
-    } finally wavePostings.unpersist(false)
+          wavePostings, s"$work/postings",
+          partitionCols = Seq("tb"), keyCols = Seq("term", "doc_id"),
+          versionCols = Seq("ver"), sortCols = Seq("term", "doc_id"))
+        if (touched.nonEmpty) {
+          val merged = spark.read.option("basePath", s"$work/postings")
+            .parquet(touched.toSeq.sorted.map(tb => s"$work/postings/tb=$tb"): _*)
+          val newStats = merged.groupBy("term").agg(count(lit(1)).as("df"))
+            .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
+          graft.streaming.Sinks.partitionedUpsertBatch(
+            newStats, s"$work/stats",
+            partitionCols = Seq("tb"), keyCols = Seq("term"),
+            versionCols = Seq("ver"), sortCols = Seq("term"))
+        }
+        val old = spark.read.parquet(s"$src/meta").head()
+        val add = metaOf(wave).head()
+        writeMeta(spark, s"$work/meta",
+          old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1))
+        augmentTbManifest(spark, work, touched)
+        prunedTopK(spark, work)
+      } finally wavePostings.unpersist(false)
+    }
   }
 
   val indexAppendSql: String = bm25Sql("TRUE")
@@ -658,69 +659,58 @@ object Retrieval {
     val work = graft.TempDirs.scoped("bm25-bmappend") + "/index"
     // hermeticity tax only — runs concurrently with the wave's
     // tokenize+explode below, joined before the first upsert write
-    val seeded = graft.TempDirs.copyTreeAsync(spark, src, work)
-    val wave = Tables.load(spark, dir, "documents")
-      .where(s"doc_id % ${Dedup.IncrSplitMod} = 0")
-    // persisted: consumed by the upsert merge AND the touched-set collect
-    // (the appendDocsBatch convention) — one tokenize+explode, not two
-    val wavePostings = postingsOf(wave)
-      .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
-      .persist()
-    try {
-      // the touched-set collect fills the persist NOW, overlapping the
-      // working-copy seed; the upsert then starts from warm rows
-      val touched = wavePostings.select("tb").distinct()
-        .collect().map(_.getInt(0)).toSet // metadata-scale
-      seeded()
-      graft.streaming.Sinks.partitionedUpsertBatch(
-        wavePostings, s"$work/postings",
-        partitionCols = Seq("tb"), keyCols = Seq("term", "doc_id"),
-        versionCols = Seq("ver"), sortCols = Seq("term", "doc_id"))
-      if (touched.nonEmpty) {
-        val merged = spark.read.option("basePath", s"$work/postings")
-          .parquet(touched.toSeq.sorted.map(tb => s"$work/postings/tb=$tb"): _*)
-        val newStats = merged.groupBy("term").agg(count(lit(1)).as("df"))
-          .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
-        val newBlockMax = merged
-          .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
-          .groupBy("term", "blk")
-          .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
-          .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
-        // stats and blockmax both derive from the COMMITTED merged
-        // postings and write to DIFFERENT tables — run the two upsert
-        // jobs concurrently (guide §2.6 overlap independent jobs): each
-        // is a tail of small tasks + a 64-file commit, and back-filling
-        // one job's tail with the other's tasks halves the wave's
-        // sidecar-maintenance wall
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val statsF = pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit =
-              graft.streaming.Sinks.partitionedUpsertBatch(
-                newStats, s"$work/stats",
-                partitionCols = Seq("tb"), keyCols = Seq("term"),
-                versionCols = Seq("ver"), sortCols = Seq("term"))
-          })
-          val bmF = pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit =
-              graft.streaming.Sinks.partitionedUpsertBatch(
-                newBlockMax, s"$work/blockmax",
-                partitionCols = Seq("tb"), keyCols = Seq("term", "blk"),
-                versionCols = Seq("ver"), sortCols = Seq("term", "blk"))
-          })
-          try { statsF.get(); bmF.get() } catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
+    graft.Overlap.background(graft.TempDirs.copyTree(spark, src, work)) { seeded =>
+      val wave = Tables.load(spark, dir, "documents")
+        .where(s"doc_id % ${Dedup.IncrSplitMod} = 0")
+      // persisted: consumed by the upsert merge AND the touched-set collect
+      // (the appendDocsBatch convention) — one tokenize+explode, not two
+      val wavePostings = postingsOf(wave)
+        .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
+        .persist()
+      try {
+        // the touched-set collect fills the persist NOW, overlapping the
+        // working-copy seed; the upsert then starts from warm rows
+        val touched = wavePostings.select("tb").distinct()
+          .collect().map(_.getInt(0)).toSet // metadata-scale
+        seeded()
+        graft.streaming.Sinks.partitionedUpsertBatch(
+          wavePostings, s"$work/postings",
+          partitionCols = Seq("tb"), keyCols = Seq("term", "doc_id"),
+          versionCols = Seq("ver"), sortCols = Seq("term", "doc_id"))
+        if (touched.nonEmpty) {
+          val merged = spark.read.option("basePath", s"$work/postings")
+            .parquet(touched.toSeq.sorted.map(tb => s"$work/postings/tb=$tb"): _*)
+          val newStats = merged.groupBy("term").agg(count(lit(1)).as("df"))
+            .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
+          val newBlockMax = merged
+            .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
+            .groupBy("term", "blk")
+            .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
+            .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
+          // stats and blockmax both derive from the COMMITTED merged
+          // postings and write to DIFFERENT tables — run the two upsert
+          // jobs concurrently (guide §2.6 overlap independent jobs): each
+          // is a tail of small tasks + a 64-file commit, and back-filling
+          // one job's tail with the other's tasks halves the wave's
+          // sidecar-maintenance wall
+          graft.Overlap.background(graft.streaming.Sinks.partitionedUpsertBatch(
+              newStats, s"$work/stats",
+              partitionCols = Seq("tb"), keyCols = Seq("term"),
+              versionCols = Seq("ver"), sortCols = Seq("term"))) { _ =>
+            graft.streaming.Sinks.partitionedUpsertBatch(
+              newBlockMax, s"$work/blockmax",
+              partitionCols = Seq("tb"), keyCols = Seq("term", "blk"),
+              versionCols = Seq("ver"), sortCols = Seq("term", "blk"))
           }
-        } finally pool.shutdown()
-      }
-      val old = spark.read.parquet(s"$src/meta").head()
-      val add = metaOf(wave).head()
-      writeMeta(spark, s"$work/meta",
-        old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1))
-      augmentTbManifest(spark, work, touched)
-      blockMaxTopK(spark, work)
-    } finally wavePostings.unpersist(false)
+        }
+        val old = spark.read.parquet(s"$src/meta").head()
+        val add = metaOf(wave).head()
+        writeMeta(spark, s"$work/meta",
+          old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1))
+        augmentTbManifest(spark, work, touched)
+        blockMaxTopK(spark, work)
+      } finally wavePostings.unpersist(false)
+    }
   }
 
   // ------------------------------------- skewed-score block-max surface
@@ -1439,7 +1429,10 @@ object Retrieval {
         "row_number() OVER (PARTITION BY query_id ORDER BY w_sum DESC, doc_id)"))
       .where(s"rk <= $HybridK")
       .selectExpr("query_id", "doc_id", "CAST(rk AS BIGINT) AS lex_rk")
-    val vecRanks = Similarity.ivfRanks(spark, dir, HybridK)
+    val vecRanks = IvfIndex.probe(spark, dir,
+        IvfIndex.ensure(spark, dir, IvfIndex.Float), IvfIndex.Float,
+        Similarity.corpusFloats(spark, dir)
+          .where(s"vec_id < ${Similarity.QuerySetSize}"), HybridK)
       .selectExpr("q_id AS query_id", "vec_id AS doc_id", "rk AS vec_rk")
     def contrib(c: String) =
       s"CASE WHEN $c IS NOT NULL THEN $RrfQ div ($RrfC + $c) ELSE CAST(0 AS BIGINT) END"

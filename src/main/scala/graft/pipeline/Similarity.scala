@@ -59,7 +59,7 @@ object Similarity {
     * [[embDouble]], not per pair — 3× less work in pairwise scoring.
     * `a`,`b` are array<double> column names; `na`,`nb` the norm columns.
     */
-  private def cosineExpr(a: String, b: String, na: String, nb: String): String =
+  private[pipeline] def cosineExpr(a: String, b: String, na: String, nb: String): String =
     s"graft_dot($a, $b) / ($na * $nb)"
 
   /** DuckDB cosine with the same fold order and precomputed norms. */
@@ -67,7 +67,7 @@ object Similarity {
     s"""list_sum(list_transform(range(1, ${Dim + 1}), i -> $a[i] * $b[i]))
        | / ($na * $nb)""".stripMargin
 
-  private def embDouble(spark: SparkSession, dir: String): DataFrame = {
+  private[pipeline] def embDouble(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(spark)
     Tables.load(spark, dir, "embeddings")
       .selectExpr("vec_id", "label",
@@ -83,6 +83,168 @@ object Similarity {
       |        sqrt(list_sum(list_transform(emb, v -> v * v))) AS nrm
       |        FROM (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings))""".stripMargin
 
+  /** The (sim DESC, vec_id) top-`k` per query of scored (q_id, vec_id,
+    * sim) rows, as (q_id, vec_id, sim, rk) ordered for the oracle.
+    */
+  private[pipeline] def rankTopK(scored: DataFrame, k: Int = TopK): DataFrame =
+    scored
+      .withColumn("rk", expr(
+        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
+      .where(s"rk <= $k")
+      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
+      .orderBy("q_id", "rk")
+
+  // -------------------------------------------- DuckDB oracle fragments
+
+  /** Codebook CTE: the first `limit` rows of `from` as (p_id, p_emb, p_nrm). */
+  private def centCte(name: String, p: String = "c", from: String = "emb",
+      limit: String = nCentroidsSqlExpr): String =
+    s"""$name AS (SELECT vec_id AS ${p}_id, emb AS ${p}_emb, nrm AS ${p}_nrm FROM $from
+       |  WHERE vec_id < $limit)""".stripMargin
+
+  /** CTE `name`: the rows of `from` (alias `v`; columns prefixed `pre`,
+    * vec_id/emb/nrm when empty) ranked by rounded cosine to codebook alias
+    * `p` with p_id tiebreak — the DuckDB twin of [[nearestLists]] — and
+    * kept where the rank satisfies `keep`.
+    */
+  private def nearestCte(name: String, out: String, sel: String, from: String,
+      keep: String, v: String, pre: String = "", p: String = "c"): String = {
+    val (id, e, n) =
+      if (pre.isEmpty) ("vec_id", "emb", "nrm") else (s"${pre}id", s"${pre}emb", s"${pre}nrm")
+    s"""$name AS (
+       |  SELECT $out FROM (
+       |    SELECT $sel, $p.${p}_id,
+       |           row_number() OVER (PARTITION BY $v.$id ORDER BY
+       |             round(${cosineSql(s"$v.$e", s"$p.${p}_emb", s"$v.$n", s"$p.${p}_nrm")}, 6) DESC,
+       |             $p.${p}_id) AS ${p}rk
+       |    FROM $from)
+       |  WHERE ${p}rk $keep)""".stripMargin
+  }
+
+  /** Rank-1 assignment of `src` rows to codebook `centName`. */
+  private def assignCte(src: String, centName: String, outName: String): String =
+    nearestCte(outName, "vec_id, emb, nrm, c_id", "e.vec_id, e.emb, e.nrm",
+      s"$src e, $centName c", "= 1", "e")
+
+  /** The [[QuerySetSize]] query rows of `from` (alias e) with their
+    * [[NProbe]] nearest lists, query vectors carried along.
+    */
+  private def queryProbesCte(from: String): String =
+    nearestCte("probes", "q_id, q_emb, q_nrm, c_id",
+      "e.vec_id AS q_id, e.emb AS q_emb, e.nrm AS q_nrm",
+      s"$from WHERE e.vec_id < $QuerySetSize", s"<= $NProbe", "e")
+
+  /** One Lloyd mean step over `assignName`: quantized-integer sums divided
+    * once, so both engines derive bit-identical centroids.
+    */
+  private def meanCte(assignName: String, outName: String): String = {
+    val sums = (0 until Dim)
+      .map(i => s"sum(floor(emb[${i + 1}] * $QScale.0 + 0.5)::BIGINT) AS s$i")
+      .mkString(", ")
+    val arr = (0 until Dim)
+      .map(i => s"s$i::DOUBLE / (cn * $QScale)::DOUBLE")
+      .mkString("[", ", ", "]")
+    s"""${outName}_m AS (
+       |  SELECT c_id, count(*)::BIGINT AS cn, $sums FROM $assignName GROUP BY c_id),
+       |${outName}_e AS (SELECT c_id, $arr AS c_emb FROM ${outName}_m),
+       |$outName AS (SELECT c_id, c_emb,
+       |             sqrt(${normSq("c_emb")}) AS c_nrm
+       |             FROM ${outName}_e)""".stripMargin
+  }
+
+  private def histCte(pred: String = s"vec_id % $IvfSplitMod <> 0"): String =
+    s"hist AS (SELECT vec_id, emb, nrm FROM emb\n  WHERE $pred)"
+
+  private def qCte(pred: String, from: String = "emb"): String =
+    s"q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM $from\n  WHERE $pred)"
+
+  /** `ranked` over `from`'s (q_id, vec_id, sim) rows, then (by default)
+    * the top-[[TopK]] select.
+    */
+  private def rankedSql(from: String, select: Boolean = true): String =
+    s"""ranked AS (
+       |  SELECT q_id, vec_id, sim,
+       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
+       |  FROM $from)""".stripMargin + (if (select) "\n" + topKSelect else "")
+
+  private def topKSelect: String =
+    s"SELECT q_id, vec_id, sim, rk::BIGINT AS rk\nFROM ranked WHERE rk <= $TopK ORDER BY q_id, rk"
+
+  /** The approximate top-(refine·[[rerankK]]) per query of `from` by
+    * `score` — the adaptive re-rank budget as a scalar subquery over
+    * `corpus`.
+    */
+  private def cutCte(score: String, from: String, refine: String = "",
+      corpus: String = "emb", name: String = "cut"): String =
+    s"""$name AS (
+       |  SELECT q_id, vec_id FROM (
+       |    SELECT q_id, vec_id,
+       |           row_number() OVER (PARTITION BY q_id ORDER BY
+       |             $score DESC,
+       |             vec_id ASC) AS ark
+       |    FROM $from)
+       |  WHERE ark <= $refine
+       |    greatest($RerankKMin, (SELECT count(*) // 1000 FROM $corpus)))""".stripMargin
+
+  /** The `cut` candidates re-scored as exact cosines against `queries`. */
+  private def rerankedCte(queries: String): String =
+    s"""reranked AS (
+       |  SELECT c.q_id, c.vec_id,
+       |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
+       |  FROM cut c
+       |  JOIN emb e ON e.vec_id = c.vec_id
+       |  JOIN $queries ON q.q_id = c.q_id)""".stripMargin
+
+  /** Raw-code ADC similarity from the quantized (adcq, rq, q_nrm) sums. */
+  private def adcSimSql: String =
+    s"""round((adcq::DOUBLE / $QScale.0)
+       |               / (q_nrm * sqrt(rq::DOUBLE / $QScale.0)), 6)""".stripMargin
+
+  /** The [[PqM]] subspace slices of `from`'s vectors as (vec_id, nrm, m, sub). */
+  private def subSelects(from: String = "emb"): String = (0 until PqM)
+    .map(m => s"SELECT vec_id, nrm, $m AS m, emb[${m * PqSubDim + 1}:${(m + 1) * PqSubDim}] AS sub FROM $from")
+    .mkString("\n  UNION ALL ")
+
+  private def dotSub(a: String, b: String): String =
+    s"list_sum(list_transform(range(1, ${PqSubDim + 1}), i -> $a[i] * $b[i]))"
+
+  private def dotFull(a: String, b: String): String =
+    s"list_sum(list_transform(range(1, ${Dim + 1}), i -> $a[i] * $b[i]))"
+
+  private def normSq(a: String): String =
+    s"list_sum(list_transform($a, v -> v * v))"
+
+  /** The seeded PQ sub-codebook over `subs`: the first [[PqK]] vectors'
+    * slices with their quantized norms.
+    */
+  private def pqCentCte(name: String, subs: String): String =
+    s"""$name AS (SELECT m, vec_id AS c_id, sub AS c_sub,
+       |                 floor(${normSq("sub")} * $QScale.0 + 0.5)::BIGINT AS cq
+       |          FROM $subs WHERE vec_id < $PqK)""".stripMargin
+
+  /** Nearest sub-code per (vector, subspace) of the `from` join (alias s
+    * for slices, c for codes) — the PQ encode argmin.
+    */
+  private def codesCte(from: String, name: String = "codes"): String =
+    s"""$name AS (
+       |  SELECT vec_id, m, c_id FROM (
+       |    SELECT s.vec_id, s.m, c.c_id,
+       |           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
+       |             round(${normSq("s.sub")} - 2 * ${dotSub("s.sub", "c.c_sub")}
+       |               + ${normSq("c.c_sub")}, 6) ASC, c.c_id ASC) AS crk
+       |    FROM $from)
+       |  WHERE crk = 1)""".stripMargin
+
+  /** The ADC lookup table: quantized query-slice × code partial dots
+    * (plus the query norm and code norms when asked).
+    */
+  private def lutCte(from: String, nrm: Boolean = true, cq: Boolean = true,
+      name: String = "lut"): String =
+    s"""$name AS (
+       |  SELECT s.vec_id AS q_id, ${if (nrm) "s.nrm AS q_nrm, " else ""}s.m, c.c_id,
+       |         floor(${dotSub("s.sub", "c.c_sub")} * $QScale.0 + 0.5)::BIGINT AS pq""".stripMargin +
+      (if (cq) ",\n         c.cq" else "") + s"\n  FROM $from)"
+
   /** Exact brute-force cosine top-k: broadcast the query rows, score every
     * corpus vector, keep k best per query (rank window over a key with ~N/Q
     * rows — at scale use TakeOrderedAndProject per query or aggregate top-k).
@@ -91,30 +253,19 @@ object Similarity {
     val corpus = embDouble(spark, dir)
     val queries = corpus.where(s"vec_id < $QuerySetSize")
       .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+    rankTopK(corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
   }
 
   val bruteForceTopKSql: String =
     s"""WITH $embCte,
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id < $QuerySetSize),
+       |${qCte(s"vec_id < $QuerySetSize")},
        |scored AS (
        |  SELECT q.q_id, e.vec_id,
        |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
        |  FROM emb e, q WHERE e.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
 
   /** Exact cosine ranks at depth `k` — the VECTOR LEG the hybrid RRF
     * entry ([[Retrieval.hybridRrf]]) fuses with lexical BM25 ranks. Same
@@ -199,15 +350,10 @@ object Similarity {
       .withColumn("bucket", bucketColSpark(col("emb")))
     val queries = bucketed.where(s"vec_id < $QuerySetSize")
       .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm", "bucket")
-    bucketed.join(broadcast(queries), Seq("bucket"))
+    rankTopK(bucketed.join(broadcast(queries), Seq("bucket"))
       .where(col("vec_id") =!= col("q_id"))
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
   }
 
   val lshTopKSql: String =
@@ -219,12 +365,7 @@ object Similarity {
        |  SELECT q.q_id, e.vec_id,
        |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
        |  FROM bucketed e JOIN q USING (bucket) WHERE e.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
 
   /** Independent hash tables for the multi-table LSH variant. Table `t`
     * draws its [[NBits]] hyperplanes from the same deterministic family at
@@ -276,15 +417,10 @@ object Similarity {
       .select("q_id", "vec_id").distinct()
     val queries = emb.where(s"vec_id < $QuerySetSize")
       .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    cand.join(emb.select("vec_id", "emb", "nrm"), "vec_id")
+    rankTopK(cand.join(emb.select("vec_id", "emb", "nrm"), "vec_id")
       .join(broadcast(queries), "q_id")
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
   }
 
   val lshMultiTopKSql: String = {
@@ -304,12 +440,7 @@ object Similarity {
        |  FROM cand c
        |  JOIN emb e ON e.vec_id = c.vec_id
        |  JOIN emb q ON q.vec_id = c.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
   }
 
   /** IVF-style ANN — the second scale path besides hyperplane LSH: a
@@ -380,7 +511,7 @@ object Similarity {
     * without re-running a corpus scan every time a plan is constructed
     * (round-11 advice: `rerankK(emb.count())` embedded an eager count job
     * into every ivfPqTopK plan build); the fingerprint — an order-free
-    * hash-sum over (vec_id, embedding) — keys [[ivfIndexPath]] so a
+    * hash-sum over (vec_id, embedding) — keys [[IvfIndex.path]] so a
     * regenerated corpus at the same path can never silently reuse a stale
     * persisted index (the round-10 hazard).
     */
@@ -402,59 +533,26 @@ object Similarity {
     val emb = embDouble(spark, dir)
     val cent = emb.where(s"vec_id < ${nCentroids(spark, dir)}")
       .selectExpr("vec_id AS c_id", "emb AS c_emb", "nrm AS c_nrm")
-    def nearestCentroids(src: DataFrame, idAs: String, keep: Int): DataFrame =
-      if (keep == 1) assignOne(src, cent, idAs, "c_id", "c_emb", "c_nrm", "csim", "crk")
-      else src.crossJoin(broadcast(cent))
-        .selectExpr(s"vec_id AS $idAs", "emb", "nrm", "c_id",
-          s"round(${cosineExpr("emb", "c_emb", "nrm", "c_nrm")}, 6) AS csim")
-        .withColumn("crk", expr(
-          s"row_number() OVER (PARTITION BY $idAs ORDER BY csim DESC, c_id)"))
-        .where(s"crk <= $keep")
-    val assigned = nearestCentroids(emb, "vec_id", 1)
+    val assigned = nearestLists(emb, cent, "vec_id", 1)
       .select("vec_id", "emb", "nrm", "c_id")
-    val probes = nearestCentroids(emb.where(s"vec_id < $QuerySetSize"), "q_id", NProbe)
+    val probes = nearestLists(emb.where(s"vec_id < $QuerySetSize"), cent, "q_id", NProbe)
       .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    probes.join(assigned, "c_id")
+    rankTopK(probes.join(assigned, "c_id")
       .where(col("vec_id") =!= col("q_id"))
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
   }
 
   val ivfTopKSql: String =
     s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |assigned AS (
-       |  SELECT vec_id, emb, nrm, c_id FROM (
-       |    SELECT e.vec_id, e.emb, e.nrm, c.c_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "c.c_emb", "e.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM emb e, cent c)
-       |  WHERE crk = 1),
-       |probes AS (
-       |  SELECT q_id, q_emb, q_nrm, c_id FROM (
-       |    SELECT e.vec_id AS q_id, e.emb AS q_emb, e.nrm AS q_nrm, c.c_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "c.c_emb", "e.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM emb e, cent c WHERE e.vec_id < $QuerySetSize)
-       |  WHERE crk <= $NProbe),
+       |${centCte("cent")},
+       |${assignCte("emb", "cent", "assigned")},
+       |${queryProbesCte("emb e, cent c")},
        |scored AS (
        |  SELECT p.q_id, a.vec_id,
        |         round(${cosineSql("p.q_emb", "a.emb", "p.q_nrm", "a.nrm")}, 6) AS sim
        |  FROM probes p JOIN assigned a USING (c_id) WHERE a.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
 
   // ------------------------------------------- two-level coarse quantizer
 
@@ -526,47 +624,22 @@ object Similarity {
         "row_number() OVER (PARTITION BY q_id ORDER BY fsim DESC, c_id)"))
       .where(s"frk <= $NProbe")
       .select("q_id", "q_emb", "q_nrm", "c_id")
-    qFine.join(assigned, "c_id")
+    rankTopK(qFine.join(assigned, "c_id")
       .where(col("vec_id") =!= col("q_id"))
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
   }
 
   val ivf2TopKSql: String =
     s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |coarse AS (SELECT vec_id AS g_id, emb AS g_emb, nrm AS g_nrm FROM emb
-       |           WHERE vec_id < $l1CellsSqlExpr),
-       |centcell AS (
-       |  SELECT c_id, c_emb, c_nrm, g_id FROM (
-       |    SELECT c.c_id, c.c_emb, c.c_nrm, g.g_id,
-       |           row_number() OVER (PARTITION BY c.c_id ORDER BY
-       |             round(${cosineSql("c.c_emb", "g.g_emb", "c.c_nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM cent c, coarse g)
-       |  WHERE grk = 1),
-       |assigned AS (
-       |  SELECT vec_id, emb, nrm, c_id FROM (
-       |    SELECT e.vec_id, e.emb, e.nrm, c.c_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "c.c_emb", "e.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM emb e, cent c)
-       |  WHERE crk = 1),
-       |qcells AS (
-       |  SELECT q_id, q_emb, q_nrm, g_id FROM (
-       |    SELECT e.vec_id AS q_id, e.emb AS q_emb, e.nrm AS q_nrm, g.g_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "g.g_emb", "e.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM emb e, coarse g WHERE e.vec_id < $QuerySetSize)
-       |  WHERE grk <= $L1Probe),
+       |${centCte("cent")},
+       |${centCte("coarse", "g", limit = l1CellsSqlExpr)},
+       |${nearestCte("centcell", "c_id, c_emb, c_nrm, g_id", "c.c_id, c.c_emb, c.c_nrm",
+            "cent c, coarse g", "= 1", "c", "c_", "g")},
+       |${assignCte("emb", "cent", "assigned")},
+       |${nearestCte("qcells", "q_id, q_emb, q_nrm, g_id",
+            "e.vec_id AS q_id, e.emb AS q_emb, e.nrm AS q_nrm",
+            s"emb e, coarse g WHERE e.vec_id < $QuerySetSize", s"<= $L1Probe", "e", p = "g")},
        |qfine AS (
        |  SELECT q_id, q_emb, q_nrm, c_id FROM (
        |    SELECT q.q_id, q.q_emb, q.q_nrm, cc.c_id,
@@ -579,12 +652,7 @@ object Similarity {
        |  SELECT p.q_id, a.vec_id,
        |         round(${cosineSql("p.q_emb", "a.emb", "p.q_nrm", "a.nrm")}, 6) AS sim
        |  FROM qfine p JOIN assigned a USING (c_id) WHERE a.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
 
   /** IVF with a TRAINED codebook: [[ivfTopK]]'s seeded centroids refined by
     * [[KmRounds]] Lloyd iterations (assign to nearest centroid, recompute
@@ -621,7 +689,7 @@ object Similarity {
     * quantized-sum means, codebook materialized between rounds) — the
     * training loop shared by [[ivfTrainedTopK]] and [[clusterMix]].
     */
-  private def trainedCentroids(spark: SparkSession, dir: String,
+  private[pipeline] def trainedCentroids(spark: SparkSession, dir: String,
       emb: DataFrame): DataFrame = {
     var cent = materializeCodebook(spark,
       emb.where(s"vec_id < ${nCentroids(spark, dir)}")
@@ -648,26 +716,13 @@ object Similarity {
   def ivfTrainedTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
     val cent = trainedCentroids(spark, dir, emb)
-    def nearest(src: DataFrame, idAs: String, keep: Int): DataFrame =
-      if (keep == 1) assignOne(src, cent, idAs, "c_id", "c_emb", "c_nrm", "csim", "crk")
-      else src.crossJoin(broadcast(cent))
-        .selectExpr(s"vec_id AS $idAs", "emb", "nrm", "c_id",
-          s"round(${cosineExpr("emb", "c_emb", "nrm", "c_nrm")}, 6) AS csim")
-        .withColumn("crk", expr(
-          s"row_number() OVER (PARTITION BY $idAs ORDER BY csim DESC, c_id)"))
-        .where(s"crk <= $keep")
-    val assigned = nearest(emb, "vec_id", 1).select("vec_id", "emb", "nrm", "c_id")
-    val probes = nearest(emb.where(s"vec_id < $QuerySetSize"), "q_id", NProbe)
+    val assigned = nearestLists(emb, cent, "vec_id", 1).select("vec_id", "emb", "nrm", "c_id")
+    val probes = nearestLists(emb.where(s"vec_id < $QuerySetSize"), cent, "q_id", NProbe)
       .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    probes.join(assigned, "c_id")
+    rankTopK(probes.join(assigned, "c_id")
       .where(col("vec_id") =!= col("q_id"))
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
   }
 
   /** DuckDB CTE chain replaying [[trainedCentroids]] + the final whole-
@@ -675,60 +730,23 @@ object Similarity {
     * `assigned(vec_id, emb, nrm, c_id)`. Callers compose after
     * [[embCte]]. Shared by the trained-IVF and cluster-mix oracles.
     */
-  private[pipeline] val trainedAssignCtes: String = {
-    def assignCte(centName: String, outName: String): String =
-      s"""$outName AS (
-         |  SELECT vec_id, emb, nrm, c_id FROM (
-         |    SELECT e.vec_id, e.emb, e.nrm, c.c_id,
-         |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |             round(${cosineSql("e.emb", "c.c_emb", "e.nrm", "c.c_nrm")}, 6) DESC,
-         |             c.c_id) AS crk
-         |    FROM emb e, $centName c)
-         |  WHERE crk = 1)""".stripMargin
-    def meanCte(assignName: String, outName: String): String = {
-      val sums = (0 until Dim)
-        .map(i => s"sum(floor(emb[${i + 1}] * $QScale.0 + 0.5)::BIGINT) AS s$i")
-        .mkString(", ")
-      val arr = (0 until Dim)
-        .map(i => s"s$i::DOUBLE / (cn * $QScale)::DOUBLE")
-        .mkString("[", ", ", "]")
-      s"""${outName}_m AS (
-         |  SELECT c_id, count(*)::BIGINT AS cn, $sums FROM $assignName GROUP BY c_id),
-         |${outName}_e AS (SELECT c_id, $arr AS c_emb FROM ${outName}_m),
-         |$outName AS (SELECT c_id, c_emb,
-         |             sqrt(list_sum(list_transform(c_emb, v -> v * v))) AS c_nrm
-         |             FROM ${outName}_e)""".stripMargin
-    }
-    s"""cent0 AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |          WHERE vec_id < $nCentroidsSqlExpr),
-       |${assignCte("cent0", "a1")},
+  private[pipeline] val trainedAssignCtes: String =
+    s"""${centCte("cent0")},
+       |${assignCte("emb", "cent0", "a1")},
        |${meanCte("a1", "cent1")},
-       |${assignCte("cent1", "a2")},
+       |${assignCte("emb", "cent1", "a2")},
        |${meanCte("a2", "cent2")},
-       |${assignCte("cent2", "assigned")}""".stripMargin
-  }
+       |${assignCte("emb", "cent2", "assigned")}""".stripMargin
 
   val ivfTrainedTopKSql: String = {
     s"""WITH $embCte,
        |$trainedAssignCtes,
-       |probes AS (
-       |  SELECT q_id, q_emb, q_nrm, c_id FROM (
-       |    SELECT e.vec_id AS q_id, e.emb AS q_emb, e.nrm AS q_nrm, c.c_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "c.c_emb", "e.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM emb e, cent2 c WHERE e.vec_id < $QuerySetSize)
-       |  WHERE crk <= $NProbe),
+       |${queryProbesCte("emb e, cent2 c")},
        |scored AS (
        |  SELECT p.q_id, a.vec_id,
        |         round(${cosineSql("p.q_emb", "a.emb", "p.q_nrm", "a.nrm")}, 6) AS sim
        |  FROM probes p JOIN assigned a USING (c_id) WHERE a.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
   }
 
   /** Cluster-balanced corpus mixing — the data-curation rebalance over
@@ -900,7 +918,7 @@ object Similarity {
     // pairwise phase). Cached: the plan reads `assigned` three times (both
     // self-join sides + verdict); harness clearCache releases it. A
     // production run reads assignments straight from the persisted IVF
-    // index ([[incrementalIvf]]) instead of recomputing them at all.
+    // index ([[IvfIndex.search]]) instead of recomputing them at all.
     val assigned = assignOne(emb, cent, "vec_id", "c_id", "c_emb", "c_nrm",
         "csim", "crk")
       .select("vec_id", "emb", "nrm", "c_id", "csim")
@@ -918,8 +936,7 @@ object Similarity {
 
   val semDedupSql: String =
     s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
+       |${centCte("cent")},
        |assigned AS (
        |  SELECT vec_id, emb, nrm, c_id, csim FROM (
        |    SELECT e.vec_id, e.emb, e.nrm, c.c_id,
@@ -982,20 +999,15 @@ object Similarity {
         "transform(emb, x -> CAST(floor(x * s + 0.5) AS DOUBLE)) AS qv")
     val queries = sq.where(s"vec_id < $QuerySetSize")
       .selectExpr("vec_id AS q_id", "qv AS q_qv", "s AS q_s", "nrm AS q_nrm")
-    sq.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+    rankTopK(sq.join(broadcast(queries), col("vec_id") =!= col("q_id"))
       .selectExpr("q_id", "vec_id",
-        "round(graft_dot(qv, q_qv) / (s * q_s) / (nrm * q_nrm), 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        "round(graft_dot(qv, q_qv) / (s * q_s) / (nrm * q_nrm), 6) AS sim"))
   }
 
   val sq8TopKSql: String =
     s"""WITH $embCte,
        |sc AS (SELECT vec_id, nrm, emb,
-       |              127.0 / greatest(list_max(list_transform(emb, y -> abs(y))), 1e-300) AS s
+       |              ${sq8ScaleSql("emb")} AS s
        |       FROM emb),
        |sq AS (SELECT vec_id, nrm, s,
        |              list_transform(emb, x -> floor(x * s + 0.5)) AS qv
@@ -1008,12 +1020,7 @@ object Similarity {
        |                 i -> e.qv[i] * q.q_qv[i]))
        |           / (e.s * q.q_s) / (e.nrm * q.q_nrm), 6) AS sim
        |  FROM sq e, q WHERE e.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
 
   /** Product-quantization ANN — the third scale path, orthogonal to
     * LSH (pruning by bucket) and IVF (pruning by inverted list): PQ keeps
@@ -1076,73 +1083,34 @@ object Similarity {
       .withColumn("ark", expr(
         "row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, vec_id ASC)"))
       .where(s"ark <= ${rerankK(corpusStats(spark, dir)._1)}")
-    adc
+    rankTopK(adc
       .join(emb.select("vec_id", "emb", "nrm"), "vec_id")
       .join(broadcast(emb.where(s"vec_id < $QuerySetSize")
         .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm2")), "q_id")
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm2", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm2", "nrm")}, 6) AS sim"))
   }
 
-  val pqTopKSql: String = {
-    val subSelects = (0 until PqM)
-      .map(m => s"SELECT vec_id, nrm, $m AS m, emb[${m * PqSubDim + 1}:${(m + 1) * PqSubDim}] AS sub FROM emb")
-      .mkString("\n  UNION ALL ")
-    def dotSub(a: String, b: String): String =
-      s"list_sum(list_transform(range(1, ${PqSubDim + 1}), i -> $a[i] * $b[i]))"
-    def normSq(a: String): String =
-      s"list_sum(list_transform($a, v -> v * v))"
+  val pqTopKSql: String =
     s"""WITH $embCte,
        |subs AS (
-       |  $subSelects),
-       |cent AS (SELECT m, vec_id AS c_id, sub AS c_sub,
-       |                floor(${normSq("sub")} * $QScale.0 + 0.5)::BIGINT AS cq
-       |         FROM subs WHERE vec_id < $PqK),
-       |codes AS (
-       |  SELECT vec_id, m, c_id FROM (
-       |    SELECT s.vec_id, s.m, c.c_id,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |             round(${normSq("s.sub")} - 2 * ${dotSub("s.sub", "c.c_sub")}
-       |               + ${normSq("c.c_sub")}, 6) ASC, c.c_id ASC) AS crk
-       |    FROM subs s JOIN cent c USING (m))
-       |  WHERE crk = 1),
-       |lut AS (
-       |  SELECT s.vec_id AS q_id, s.nrm AS q_nrm, s.m, c.c_id,
-       |         floor(${dotSub("s.sub", "c.c_sub")} * $QScale.0 + 0.5)::BIGINT AS pq,
-       |         c.cq
-       |  FROM subs s JOIN cent c USING (m) WHERE s.vec_id < $QuerySetSize),
+       |  ${subSelects()}),
+       |${pqCentCte("cent", "subs")},
+       |${codesCte("subs s JOIN cent c USING (m)")},
+       |${lutCte(s"subs s JOIN cent c USING (m) WHERE s.vec_id < $QuerySetSize")},
        |scored AS (
        |  SELECT l.q_id, c.vec_id, max(l.q_nrm) AS q_nrm,
        |         sum(l.pq)::BIGINT AS adcq, sum(l.cq)::BIGINT AS rq
        |  FROM codes c JOIN lut l ON l.m = c.m AND l.c_id = c.c_id
        |  WHERE c.vec_id <> l.q_id GROUP BY l.q_id, c.vec_id),
-       |cut AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id ORDER BY
-       |             round((adcq::DOUBLE / $QScale.0)
-       |               / (q_nrm * sqrt(rq::DOUBLE / $QScale.0)), 6) DESC,
-       |             vec_id ASC) AS ark
-       |    FROM scored)
-       |  WHERE ark <= greatest($RerankKMin, (SELECT count(*) // 1000 FROM emb))),
+       |${cutCte(adcSimSql, "scored")},
        |reranked AS (
        |  SELECT c.q_id, c.vec_id,
        |         round(${cosineSql("q.emb", "e.emb", "q.nrm", "e.nrm")}, 6) AS sim
        |  FROM cut c
        |  JOIN emb e ON e.vec_id = c.vec_id
        |  JOIN emb q ON q.vec_id = c.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM reranked)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
-  }
+       |${rankedSql("reranked")}""".stripMargin
 
   // ------------------------------------------------------------- IVF-PQ
 
@@ -1240,63 +1208,24 @@ object Similarity {
     // exact re-rank of the rerankK survivors (the only full-vector reads)
     val qv = emb.where(s"vec_id < $QuerySetSize")
       .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    adc.select("q_id", "vec_id")
+    rankTopK(adc.select("q_id", "vec_id")
       .join(emb.select("vec_id", "emb", "nrm"), "vec_id")
       .join(broadcast(qv), "q_id")
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
   }
 
-  val ivfPqTopKSql: String = {
-    val subSelects = (0 until PqM)
-      .map(m => s"SELECT vec_id, nrm, $m AS m, emb[${m * PqSubDim + 1}:${(m + 1) * PqSubDim}] AS sub FROM emb")
-      .mkString("\n  UNION ALL ")
-    def dotSub(a: String, b: String): String =
-      s"list_sum(list_transform(range(1, ${PqSubDim + 1}), i -> $a[i] * $b[i]))"
-    def normSq(a: String): String =
-      s"list_sum(list_transform($a, v -> v * v))"
+  val ivfPqTopKSql: String =
     s"""WITH $embCte,
-       |gcent AS (SELECT vec_id AS g_id, emb AS g_emb, nrm AS g_nrm FROM emb
-       |          WHERE vec_id < $nCentroidsSqlExpr),
-       |lists AS (
-       |  SELECT vec_id, g_id FROM (
-       |    SELECT e.vec_id, g.g_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "g.g_emb", "e.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM emb e, gcent g)
-       |  WHERE grk = 1),
-       |probes AS (
-       |  SELECT q_id, g_id FROM (
-       |    SELECT e.vec_id AS q_id, g.g_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "g.g_emb", "e.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM emb e, gcent g WHERE e.vec_id < $QuerySetSize)
-       |  WHERE grk <= $NProbe),
+       |${centCte("gcent", "g")},
+       |${nearestCte("lists", "vec_id, g_id", "e.vec_id", "emb e, gcent g", "= 1", "e", p = "g")},
+       |${nearestCte("probes", "q_id, g_id", "e.vec_id AS q_id",
+            s"emb e, gcent g WHERE e.vec_id < $QuerySetSize", s"<= $NProbe", "e", p = "g")},
        |subs AS (
-       |  $subSelects),
-       |cent AS (SELECT m, vec_id AS c_id, sub AS c_sub,
-       |                floor(${normSq("sub")} * $QScale.0 + 0.5)::BIGINT AS cq
-       |         FROM subs WHERE vec_id < $PqK),
-       |codes AS (
-       |  SELECT vec_id, m, c_id FROM (
-       |    SELECT s.vec_id, s.m, c.c_id,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |             round(${normSq("s.sub")} - 2 * ${dotSub("s.sub", "c.c_sub")}
-       |               + ${normSq("c.c_sub")}, 6) ASC, c.c_id ASC) AS crk
-       |    FROM subs s JOIN cent c USING (m))
-       |  WHERE crk = 1),
-       |lut AS (
-       |  SELECT s.vec_id AS q_id, s.nrm AS q_nrm, s.m, c.c_id,
-       |         floor(${dotSub("s.sub", "c.c_sub")} * $QScale.0 + 0.5)::BIGINT AS pq,
-       |         c.cq
-       |  FROM subs s JOIN cent c USING (m) WHERE s.vec_id < $QuerySetSize),
+       |  ${subSelects()}),
+       |${pqCentCte("cent", "subs")},
+       |${codesCte("subs s JOIN cent c USING (m)")},
+       |${lutCte(s"subs s JOIN cent c USING (m) WHERE s.vec_id < $QuerySetSize")},
        |cand AS (
        |  SELECT p.q_id, l.vec_id
        |  FROM probes p JOIN lists l USING (g_id) WHERE l.vec_id <> p.q_id),
@@ -1321,13 +1250,7 @@ object Similarity {
        |  FROM adc a
        |  JOIN emb e ON e.vec_id = a.vec_id
        |  JOIN emb q ON q.vec_id = a.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM reranked)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
-  }
+       |${rankedSql("reranked")}""".stripMargin
 
   // -------------------------------------------------------- recall gate
 
@@ -1430,15 +1353,10 @@ object Similarity {
     val queries = corpus.where(s"vec_id < $QuerySetSize")
       .selectExpr("vec_id AS q_id", "label AS q_label",
         "emb AS q_emb", "nrm AS q_nrm")
-    corpus.join(broadcast(queries),
+    rankTopK(corpus.join(broadcast(queries),
         col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
       .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
   }
 
   val filteredTopKSql: String =
@@ -1450,12 +1368,7 @@ object Similarity {
        |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
        |  FROM emb e, q
        |  WHERE e.label = q.q_label AND e.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
 
   // ------------------------------------------- incremental IVF index
 
@@ -1463,82 +1376,18 @@ object Similarity {
     * [[graft.pipeline.Dedup.IncrSplitMod]] for the dedup index family):
     * historical corpus = `vec_id % IvfSplitMod != 0`; wave 1 =
     * `vec_id % (2·IvfSplitMod) == 0`; wave 2 =
-    * `vec_id % (2·IvfSplitMod) == IvfSplitMod`.
+    * `vec_id % (2·IvfSplitMod) == IvfSplitMod`. The persisted index
+    * itself is [[IvfIndex]].
     */
-  val IvfSplitMod = 4
-
-  /** Name of the build-time inverted-list manifest inside an IVF index
-    * dir: one non-empty `c_id` per line. Same metastore-stand-in contract
-    * as [[graft.pipeline.Dedup.ManifestFile]] (single-level key here, so
-    * the two manifests stay separate implementations): the probe's ONLY
-    * pruning input, never the filesystem.
-    */
-  val ListsManifestFile = "_lists"
-
-  private def hadoopFs(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def listsManifestWrite(spark: SparkSession, indexPath: String,
-      lists: Set[Long]): Unit = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(indexPath, ListsManifestFile), true)
-    try out.write(lists.toSeq.sorted.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Committed inverted-list ids. FAILS LOUD when absent — a pruned probe
-    * must never silently degrade to an empty result.
-    */
-  def listsManifestRead(spark: SparkSession, indexPath: String): Set[Long] = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    val mf = new org.apache.hadoop.fs.Path(indexPath, ListsManifestFile)
-    if (!fs.exists(mf))
-      throw new IllegalStateException(
-        s"no $ListsManifestFile manifest at $indexPath — index was not " +
-          "built by ensureIvfIndex; rebuild the index")
-    val in = fs.open(mf)
-    val text = try {
-      val bs = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 65536, false)
-      bs.toString("UTF-8")
-    } finally in.close()
-    text.split('\n').iterator.filter(_.nonEmpty).map(_.toLong).toSet
-  }
+  final val IvfSplitMod = 4
 
   /** The shared coarse codebook: the first `nc` corpus vectors (same
     * seeded rule as [[ivfTopK]]/[[ivfPqTopK]]) — a frozen training
-    * artifact. [[ensureIvfIndex]] PERSISTS it inside the index dir
-    * ([[CodebookDir]]), and every consumer of a built index (probe,
-    * append, stream, the scale harness) reads it back from there rather
-    * than re-deriving from whatever corpus happens to be at hand — with
-    * corpus-adaptive sizing, an index's codebook and a different corpus's
-    * derived codebook need not agree.
+    * artifact that [[IvfIndex.ensure]] persists with the index.
     */
-  private def coarseCent(emb: DataFrame, nc: Int): DataFrame =
+  private[pipeline] def coarseCent(emb: DataFrame, nc: Int): DataFrame =
     emb.where(s"vec_id < $nc")
       .selectExpr("vec_id AS c_id", "emb AS c_emb", "nrm AS c_nrm")
-
-  /** Codebook subdir inside an IVF index (leading underscore: invisible
-    * to parquet scans of the index root, like `_lists`/`_SUCCESS`).
-    */
-  val CodebookDir = "_codebook"
-
-  /** The persisted codebook of a built index. Fails loud when absent —
-    * probing with a mismatched codebook silently returns wrong neighbors.
-    */
-  def indexCodebook(spark: SparkSession, indexPath: String): DataFrame = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$CodebookDir/_SUCCESS")))
-      throw new IllegalStateException(
-        s"no $CodebookDir at $indexPath — index was not built by " +
-          "ensureIvfIndex; rebuild the index")
-    spark.read.parquet(s"$indexPath/$CodebookDir")
-  }
 
   /** Rank-1 centroid assignment as a MAP-SIDE-COMBINABLE argmax, shared by
     * every keep=1 site in the ANN family: a row_number window over the N×K
@@ -1552,7 +1401,7 @@ object Similarity {
     * lexicographic and `-cid` turns min-id tiebreak into max. Output
     * schema matches the window form (id, emb, nrm, cid, sim, rk=1).
     */
-  private def assignOne(src: DataFrame, cent: DataFrame, idAs: String,
+  private[pipeline] def assignOne(src: DataFrame, cent: DataFrame, idAs: String,
       cid: String, cemb: String, cnrm: String, simAs: String,
       rkAs: String): DataFrame = {
     val best = src.crossJoin(broadcast(cent))
@@ -1572,7 +1421,7 @@ object Similarity {
     * routes through [[assignOne]] (combinable aggregate — the corpus-sized
     * case); the window form only ever ranks query batches (Q×K rows).
     */
-  private def nearestLists(src: DataFrame, cent: DataFrame, idAs: String,
+  private[pipeline] def nearestLists(src: DataFrame, cent: DataFrame, idAs: String,
       keep: Int): DataFrame =
     if (keep == 1) assignOne(src, cent, idAs, "c_id", "c_emb", "c_nrm", "csim", "crk")
     else src.crossJoin(broadcast(cent))
@@ -1581,99 +1430,6 @@ object Similarity {
       .withColumn("crk", expr(
         s"row_number() OVER (PARTITION BY $idAs ORDER BY csim DESC, c_id)"))
       .where(s"crk <= $keep")
-
-  /** Persisted-IVF-index location, keyed by corpus dir, codebook size AND
-    * the corpus content fingerprint from [[corpusStats]] (same never-share
-    * contract as [[graft.pipeline.Dedup.indexPath]]) — a regenerated
-    * corpus at the same dir lands on a fresh path and rebuilds instead of
-    * silently reusing a stale index (round-11 advice).
-    */
-  def ivfIndexPath(spark: SparkSession, dir: String): String = {
-    val (rows, _, fp) = corpusStats(spark, dir)
-    "/tmp/graft_ivf_index/" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
-      s"_c${nCentroids(rows)}_n${rows}_f$fp"
-  }
-
-  /** Build-once: the historical corpus's inverted lists — (vec_id, emb,
-    * nrm) assigned to the nearest coarse centroid — written partitioned
-    * by `c_id` (one dir per inverted list, rows sorted by vec_id), plus
-    * the [[ListsManifestFile]] manifest. This is the disk-resident form
-    * of what [[ivfTopK]] recomputes per query: at 100 TB the assignment
-    * pass runs once, and every probe after it reads only its
-    * [[NProbe]] touched list dirs — batch-proportional IO, index-size-
-    * independent, the same storage contract as the MinHash band index
-    * ([[graft.pipeline.Dedup.ensureMinhashIndex]]).
-    */
-  def ensureIvfIndex(spark: SparkSession, dir: String): String = {
-    val path = ivfIndexPath(spark, dir)
-    val (fs, root) = hadoopFs(spark, path)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$CodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ListsManifestFile))
-    // build into a temp sibling, publish with ONE atomic rename — racing
-    // processes can no longer clobber each other mid-build (IndexCommit)
-    IndexCommit.ensure(fs, root)(committed) { tmp =>
-      val emb = embDouble(spark, dir)
-      val cent = coarseCent(emb, nCentroids(spark, dir))
-      nearestLists(emb.where(s"vec_id % $IvfSplitMod <> 0"), cent,
-          "vec_id", 1)
-        .select("vec_id", "emb", "nrm", "c_id")
-        .repartition(col("c_id"))
-        .sortWithinPartitions("c_id", "vec_id")
-        .write.mode("overwrite").partitionBy("c_id").parquet(tmp.toString)
-      // codebook travels WITH the index; manifest last = the commit marker
-      // inside the temp — the rename then makes all three visible at once
-      cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
-      val lists = fs.listStatus(tmp).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-        .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-      listsManifestWrite(spark, tmp.toString, lists)
-    }
-    path
-  }
-
-  /** Probe an already-built IVF index: nearest [[NProbe]] centroids per
-    * query, manifest-intersected, then exact cosine over ONLY the touched
-    * `c_id=` dirs (basePath-rooted point lookups — the reader never lists
-    * the index root). Output shape matches the other topk entries.
-    */
-  def incrementalIvfProbe(spark: SparkSession, queries: DataFrame,
-      cent: DataFrame, indexPath: String, k: Int = TopK): DataFrame = {
-    probeCandidates(spark, queries, cent, indexPath)
-      .where(col("vec_id") =!= col("q_id"))
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $k")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
-  }
-
-  /** Manifest-pruned candidate scoring over a persisted float IVF index:
-    * nearest [[NProbe]] lists per query, only touched `c_id=` dirs read
-    * (basePath-rooted point lookups — the reader never lists the index
-    * root), one exact rounded cosine per (query, stored vector)
-    * candidate. [[incrementalIvfProbe]] ranks and cuts this to top-k;
-    * [[decontaminateSemanticIndexed]] thresholds it instead — ALL
-    * near-enough candidates matter there, not the k best.
-    */
-  private def probeCandidates(spark: SparkSession, queries: DataFrame,
-      cent: DataFrame, indexPath: String, nprobe: Int = NProbe): DataFrame = {
-    val probes = nearestLists(queries, cent, "q_id", nprobe)
-      .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    val manifest = listsManifestRead(spark, indexPath) // fails loud if absent
-    val touchedDirs = probes.select("c_id").distinct()
-      .collect() // ≤ Q × NProbe list ids: metadata-scale
-      .map(_.getLong(0))
-      .filter(manifest.contains) // absent from manifest = empty list
-      .sorted.map(c => s"$indexPath/c_id=$c")
-    val idx =
-      if (touchedDirs.isEmpty) spark.read.parquet(indexPath).limit(0)
-      else spark.read.option("basePath", indexPath).parquet(touchedDirs: _*)
-    idx.join(broadcast(probes), "c_id")
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-  }
 
   /** Index-backed semantic decontamination — the production twin
     * [[CorpusOps.decontaminateSemantic]]'s scaladoc promises: at 100 TB
@@ -1690,17 +1446,21 @@ object Similarity {
     * family's [[NProbe]]: a missed contamination costs more than extra
     * list IO, so the recall/IO dial sits recall-ward here (measured
     * 0.50 → 0.82/0.89 going 4 → 10 on the near-uniform synthetic
-    * geometry; real clustered embeddings route far better).
+    * geometry; real clustered embeddings route far better). ALL
+    * near-enough candidates matter here, not the k best, so the float
+    * scores are thresholded instead of ranked.
     */
   val DeconProbes = 10
 
   def decontaminateSemanticIndexed(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    val path = ensureIvfIndex(spark, dir)
-    val cent = indexCodebook(spark, path)
+    val path = IvfIndex.ensure(spark, dir, IvfIndex.Float)
+    val m = IvfIndex.open(spark, path, IvfIndex.Float)
     val evalQ = emb.where(s"vec_id % ${CorpusOps.EvalEvery} = 0 AND " +
       s"vec_id < ${CorpusOps.EvalEvery * CorpusOps.SemanticEvalCap}")
-    probeCandidates(spark, evalQ, cent, path, DeconProbes)
+    val probes = IvfIndex.probesOf(evalQ, m.cent, DeconProbes)
+    IvfIndex.Float.score(IvfIndex.touchedLists(spark, probes, path), probes,
+        evalQ, m, 0)
       .where(s"vec_id % ${CorpusOps.EvalEvery} != 0 AND " +
         s"sim >= ${CorpusOps.SemanticTau}")
       .selectExpr("vec_id AS doc_id",
@@ -1721,10 +1481,8 @@ object Similarity {
          |    FROM $src s, cent c)
          |  WHERE $keep""".stripMargin
     s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb
-       |         WHERE vec_id % $IvfSplitMod <> 0),
+       |${centCte("cent")},
+       |${histCte()},
        |lists AS (${assign("hist", "vec_id", "crk = 1")}),
        |vq AS (SELECT vec_id, emb, nrm FROM emb
        |       WHERE vec_id % ${CorpusOps.EvalEvery} = 0
@@ -1747,48 +1505,17 @@ object Similarity {
        |FROM m WHERE rk = 1 ORDER BY doc_id""".stripMargin
   }
 
-  /** Manifest-pruned IVF ranks at depth `k` for the standard
-    * `vec_id < QuerySetSize` query set — the INDEXED vector leg of
-    * [[Retrieval.hybridRrfIndexed]]: same persisted index, codebook and
-    * probe IO contract as [[incrementalIvf]], rank depth decoupled.
-    */
-  private[pipeline] def ivfRanks(spark: SparkSession, dir: String,
-      k: Int): DataFrame = {
-    val path = ensureIvfIndex(spark, dir)
-    incrementalIvfProbe(spark,
-      embDouble(spark, dir).where(s"vec_id < $QuerySetSize"),
-      indexCodebook(spark, path), path, k)
-      .select("q_id", "vec_id", "rk")
-  }
-
-  /** DuckDB CTE fragment replaying [[ivfRanks]] — defines `emb`, `cent`,
-    * `hist`, `lists`, `vq`, `probes` and `vec_rk(q_id, vec_id, rk)`;
-    * splice after WITH in a caller query.
+  /** DuckDB CTE fragment replaying the INDEXED vector leg of
+    * [[Retrieval.hybridRrfIndexed]] (the float-index probe of the
+    * `vec_id < QuerySetSize` queries at rank depth `k`) — defines `emb`,
+    * `cent`, `hist`, `lists`, `vq`, `probes` and `vec_rk(q_id, vec_id,
+    * rk)`; splice after WITH in a caller query.
     */
   private[pipeline] def ivfRanksCtes(k: Int): String =
-    s"""$embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb
-       |         WHERE vec_id % $IvfSplitMod <> 0),
-       |lists AS (
-       |  SELECT vec_id, c_id FROM (
-       |    SELECT h.vec_id, c.c_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "c.c_emb", "h.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM hist h, cent c)
-       |  WHERE crk = 1),
+    s"""${ivfListsCtes()},
        |vq AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
        |       WHERE vec_id < $QuerySetSize),
-       |probes AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT vq.q_id, c.c_id,
-       |           row_number() OVER (PARTITION BY vq.q_id ORDER BY
-       |             round(${cosineSql("vq.q_emb", "c.c_emb", "vq.q_nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM vq, cent c)
-       |  WHERE crk <= $NProbe),
+       |${nearestCte("probes", "q_id, c_id", "vq.q_id", "vq, cent c", s"<= $NProbe", "vq", "q_")},
        |vec_rk AS (
        |  SELECT q_id, vec_id, rk::BIGINT AS rk FROM (
        |    SELECT p.q_id, l.vec_id,
@@ -1803,194 +1530,41 @@ object Similarity {
        |  WHERE rk <= $k)""".stripMargin
 
   /** Wave-`rem` query vectors: the first [[QuerySetSize]] wave members. */
-  private def waveQueries(emb: DataFrame, rem: Int): DataFrame = {
-    val w = 2 * IvfSplitMod
-    emb.where(
-      s"vec_id % $w = $rem AND vec_id < ${w.toLong * QuerySetSize + rem}")
-  }
+  private[pipeline] def waveQueries(emb: DataFrame, rem: Int): DataFrame =
+    emb.where(wavePred(rem))
+
+  private def wavePred(rem: Int): String = s"vec_id % ${2 * IvfSplitMod} = $rem" +
+    s" AND vec_id < ${2L * IvfSplitMod * QuerySetSize + rem}"
 
   /** Wave-1 queries for `dir` — the probe input the scale harness holds
     * fixed while swapping indexes underneath (`graft.tools.Scale
     * ivfprobe`). The codebook is NOT derived here: with adaptive sizing
-    * it belongs to the index ([[indexCodebook]]), not the query batch.
+    * it belongs to the index ([[IvfIndex.open]]), not the query batch.
     */
   def ivfProbeInputs(spark: SparkSession, dir: String): DataFrame =
     waveQueries(embDouble(spark, dir), 0)
 
-  /** The corpus float vectors (vec_id, emb, nrm) — the exact-re-rank
-    * input of the SQ8 probe, exposed for the scale harness
-    * (`graft.tools.Scale ivfprobe`'s SQ8 leg).
+  /** The corpus float vectors (vec_id, label, emb, nrm) — the exact
+    * re-rank input of the approximate layouts, exposed for the scale
+    * harness and the specs.
     */
   def corpusFloats(spark: SparkSession, dir: String): DataFrame =
     embDouble(spark, dir)
 
-  /** Incremental ANN, probe leg: wave-1 queries against the PERSISTED
-    * historical index — the cross-run "search what is already ingested"
-    * operation, reading only probed list dirs, with the index's own
-    * persisted codebook choosing the probe set.
-    */
-  def incrementalIvf(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfIndex(spark, dir)
-    val emb = embDouble(spark, dir)
-    incrementalIvfProbe(spark, waveQueries(emb, 0),
-      indexCodebook(spark, path), path)
-  }
-
-  /** Incremental ANN, ingest leg: wave-1 vectors are assigned to their
-    * lists and appended IN PLACE — [[graft.streaming.Sinks
-    * .partitionedUpsertBatch]] merges and rewrites ONLY the touched
-    * `c_id=` dirs, the manifest commit makes new lists probe-visible, and
-    * wave-2 queries then probe the augmented index (their top-k can now
-    * contain wave-1 vectors). Append cost is O(batch + touched lists),
-    * independent of index size — the same deployment-shaped cycle as
-    * [[graft.pipeline.Dedup.incrementalAppendInplace]]. The working copy
-    * is a hermeticity tax only (the shared index must not be mutated by a
-    * query entry); a deployment appends to the live index.
-    */
-  def incrementalIvfAppend(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfIndex(spark, dir)
-    val aug = graft.TempDirs.scoped("ivf-incr") +
-      s"/index_c${nCentroids(spark, dir)}"
-    // hermeticity tax only: file-level tree copy (inverted lists,
-    // codebook, manifest, _SUCCESS travel verbatim) — the shared index
-    // stays immutable without a decode/shuffle/re-encode of its rows
-    graft.TempDirs.copyTree(spark, path, aug)
-    val cent = indexCodebook(spark, aug)
-
-    val emb = embDouble(spark, dir)
-    val w = 2 * IvfSplitMod
-    val wave1 = nearestLists(emb.where(s"vec_id % $w = 0"), cent,
-        "vec_id", 1)
-      .select("vec_id", "emb", "nrm", "c_id")
-      .persist() // read twice (touched set, merge+write) — one compute
-    val touched = wave1.select("c_id").distinct()
-      .collect().map(_.getLong(0)).toSet
-    graft.streaming.Sinks.partitionedUpsertBatch(wave1.toDF(), aug,
-      partitionCols = Seq("c_id"), keyCols = Seq("vec_id"),
-      versionCols = Seq("vec_id"), sortCols = Seq("vec_id"))
-    listsManifestWrite(spark, aug, listsManifestRead(spark, aug) ++ touched)
-
-    val out =
-      incrementalIvfProbe(spark, waveQueries(emb, IvfSplitMod),
-        indexCodebook(spark, aug), aug)
-    wave1.unpersist() // probe reads the written files, not the plan
-    out
-  }
-
-  // ---------------------------------------------- index compaction
-
-  /** LSM-style fast-path ingest into a float-IVF index: the batch lands
-    * as NEW part files inside its touched `c_id=` dirs — O(batch) write
-    * cost with NO rewrite of existing list bytes. This is the cheap dual
-    * of [[incrementalIvfAppend]]'s merge-upsert (which REWRITES every
-    * touched list each wave — write amplification a high-rate ingest
-    * can't pay at 100 TB). The price is FRAGMENTATION: every wave adds a
-    * file per touched list and probes pay per-file open/footer overhead,
-    * which [[compactIvfIndex]] — the OPTIMIZE of the index family (r14
-    * verdict item 4) — pays back. Caller commits the manifest after.
-    */
-  private def ivfAppendFiles(spark: SparkSession, indexPath: String,
-      batch: DataFrame): Unit =
-    batch.select("vec_id", "emb", "nrm", "c_id")
-      .repartition(col("c_id"))
-      .sortWithinPartitions("c_id", "vec_id")
-      .write.mode("append").partitionBy("c_id").parquet(indexPath)
-
-  /** Per-list data-file counts of a committed index — the fragmentation
-    * accounting ([[graft.pipeline.IvfCompactSpec]] pins N→1).
-    */
-  def listFileCounts(spark: SparkSession, indexPath: String)
-      : Map[Long, Int] = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    listsManifestRead(spark, indexPath).toSeq.sorted.map { c =>
-      val d = new org.apache.hadoop.fs.Path(s"$indexPath/c_id=$c")
-      c -> fs.listStatus(d).count { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    }.toMap
-  }
-
-  /** OPTIMIZE for the persisted float-IVF index: rewrite every
-    * FRAGMENTED inverted list (>1 data file) to ONE sorted file, copy
-    * single-file lists and the codebook VERBATIM (no decode), and
-    * publish the compacted index at `dst` via [[IndexCommit]] — the
-    * source index stays fully readable until the single atomic rename,
-    * exactly the [[SnapshotMv]] OPTIMIZE contract at index granularity.
-    * Probe results are bit-identical pre/post (same rows, re-sorted):
-    * the spec asserts it and the committed entry's oracle replays the
-    * probe from scratch, so the hash gates it too. At 100 TB compaction
-    * IO is proportional to the FRAGMENTED lists only — freshly-compacted
-    * lists cost a directory listing, nothing more.
-    */
-  def compactIvfIndex(spark: SparkSession, src: String, dst: String): Unit = {
-    val (fs, dstRoot) = hadoopFs(spark, dst)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$CodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ListsManifestFile))
-    val counts = listFileCounts(spark, src)
-    val fragmented = counts.collect { case (c, n) if n > 1 => c }.toSeq.sorted
-    IndexCommit.ensure(fs, dstRoot)(committed) { tmp =>
-      counts.keysIterator.filter(c => counts(c) <= 1).toSeq.sorted.foreach {
-        c => graft.TempDirs.copyTree(spark, s"$src/c_id=$c", s"$tmp/c_id=$c")
-      }
-      graft.TempDirs.copyTree(spark, s"$src/$CodebookDir",
-        s"$tmp/$CodebookDir")
-      if (fragmented.nonEmpty) {
-        val dirs = fragmented.map(c => s"$src/c_id=$c")
-        spark.read.option("basePath", src).parquet(dirs: _*)
-          .select("vec_id", "emb", "nrm", "c_id")
-          .repartition(col("c_id"))
-          .sortWithinPartitions("c_id", "vec_id")
-          .write.mode("append").partitionBy("c_id").parquet(tmp.toString)
-      }
-      val succ = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      if (!fs.exists(succ)) fs.create(succ).close()
-      listsManifestWrite(spark, tmp.toString, counts.keySet)
-    }
-  }
-
   /** Q — the committed compaction entry: file-append wave 1 into a
     * working copy (fragmenting its touched lists), OPTIMIZE into a fresh
-    * root, probe wave-2 queries against the COMPACTED index. Identical
-    * append semantics to [[incrementalIvfAppend]], so the
-    * recompute-from-scratch oracle is shared verbatim — a compaction
-    * that dropped, duplicated, or re-listed any vector breaks the hash.
-    * [[graft.pipeline.IvfCompactSpec]] additionally pins probe equality
-    * pre/post-compaction and the N→1 files-per-list collapse.
+    * root ([[IvfIndex.compact]]), probe wave-2 queries against the
+    * COMPACTED index. Identical append semantics to
+    * `sim_incremental_ivf_append`, so the recompute-from-scratch oracle is
+    * shared verbatim — a compaction that dropped, duplicated, or re-listed
+    * any vector breaks the hash. [[graft.pipeline.IvfCompactSpec]]
+    * additionally pins probe equality pre/post-compaction and the N→1
+    * files-per-list collapse.
     */
   def incrementalIvfCompact(spark: SparkSession, dir: String): DataFrame = {
-    val (frag, opt) = compactedWorkingIndex(spark, dir)
-    val _ = frag
-    incrementalIvfProbe(spark, waveQueries(embDouble(spark, dir), IvfSplitMod),
-      indexCodebook(spark, opt), opt)
-  }
-
-  /** The entry's index pair: (fragmented working copy after a file-append
-    * wave, its compacted OPTIMIZE output) — exposed so the spec can
-    * probe/count both sides of the same artifacts the entry ships.
-    */
-  def compactedWorkingIndex(spark: SparkSession, dir: String)
-      : (String, String) = {
-    val path = ensureIvfIndex(spark, dir)
-    val aug = graft.TempDirs.scoped("ivf-compact") + "/frag"
-    graft.TempDirs.copyTree(spark, path, aug)
-    val cent = indexCodebook(spark, aug)
-    val emb = embDouble(spark, dir)
-    val w = 2 * IvfSplitMod
-    val wave1 = nearestLists(emb.where(s"vec_id % $w = 0"), cent,
-        "vec_id", 1)
-      .select("vec_id", "emb", "nrm", "c_id")
-      .persist() // read twice (touched set, file append) — one compute
-    val touched = wave1.select("c_id").distinct()
-      .collect().map(_.getLong(0)).toSet
-    ivfAppendFiles(spark, aug, wave1.toDF())
-    listsManifestWrite(spark, aug, listsManifestRead(spark, aug) ++ touched)
-    wave1.unpersist()
-    val opt = graft.TempDirs.scoped("ivf-compact") + "/opt"
-    compactIvfIndex(spark, aug, opt)
-    (aug, opt)
+    val (_, opt) = IvfIndex.compactedWorkingIndex(spark, dir)
+    IvfIndex.probe(spark, dir, opt, IvfIndex.Float,
+      waveQueries(embDouble(spark, dir), IvfSplitMod))
   }
 
   // ------------------------------- index refresh under distribution drift
@@ -2022,7 +1596,7 @@ object Similarity {
     *
     *  1. the DRIFTED wave-1 ([[driftDF]]) is appended to a working copy
     *     of the persisted float index using the FROZEN codebook — the
-    *     status-quo ingest path ([[incrementalIvfAppend]]'s cycle);
+    *     status-quo ingest path ([[IvfIndex.appendWave]]);
     *  2. drifted wave-2 queries probe the stale index → top-k; recall is
     *     measured against the EXACT brute-force truth over the index
     *     content (hist ∪ drifted wave);
@@ -2030,8 +1604,8 @@ object Similarity {
     *     ([[trainedCentroids]]' Lloyd loop — the same machinery as
     *     `sim_ivf_trained`), every stored vector is RE-CODED
     *     (re-assigned) and written into a NEW root published atomically
-    *     via [[IndexCommit]] (the [[compactIvfIndex]] OPTIMIZE contract:
-    *     the stale index stays fully readable until one rename);
+    *     ([[IvfIndex.refresh]]: the stale index stays fully readable
+    *     until one rename);
     *  4. the same queries probe the refreshed index → the after row.
     *
     * Output: one row per phase with EXACT integers
@@ -2052,26 +1626,16 @@ object Similarity {
     * codebook no longer fits; publication cost is one rename.
     */
   def ivfRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfIndex(spark, dir)
+    val path = IvfIndex.ensure(spark, dir, IvfIndex.Float)
     val emb = embDouble(spark, dir)
-    val w = 2 * IvfSplitMod
-    val wave = driftDF(emb.where(s"vec_id % $w = 0"))
+    val wave = driftDF(emb.where(s"vec_id % ${2 * IvfSplitMod} = 0"))
     val queries = driftDF(waveQueries(emb, IvfSplitMod))
 
     // 1. stale path: frozen-codebook append into a working copy
     val aug = graft.TempDirs.scoped("ivf-refresh") + "/stale"
     graft.TempDirs.copyTree(spark, path, aug)
-    val centF = indexCodebook(spark, aug)
-    val w1 = nearestLists(wave, centF, "vec_id", 1)
-      .select("vec_id", "emb", "nrm", "c_id")
-      .persist() // read twice (touched set, merge+write) — one compute
-    val touched = w1.select("c_id").distinct()
-      .collect().map(_.getLong(0)).toSet
-    graft.streaming.Sinks.partitionedUpsertBatch(w1.toDF(), aug,
-      partitionCols = Seq("c_id"), keyCols = Seq("vec_id"),
-      versionCols = Seq("vec_id"), sortCols = Seq("vec_id"))
-    listsManifestWrite(spark, aug, listsManifestRead(spark, aug) ++ touched)
-    w1.unpersist()
+    IvfIndex.appendWave(spark, aug, IvfIndex.Float,
+      IvfIndex.open(spark, aug, IvfIndex.Float), wave)
 
     // shared exact truth over the index content
     val content = emb.where(s"vec_id % $IvfSplitMod <> 0")
@@ -2090,14 +1654,12 @@ object Similarity {
       .where(s"rk <= $TopK")
       .select("q_id", "vec_id")
 
-    val stale = incrementalIvfProbe(spark, queries,
-      indexCodebook(spark, aug), aug)
+    val stale = IvfIndex.probe(spark, dir, aug, IvfIndex.Float, queries)
 
     // 3. the refresh: re-train on current content, re-code, publish new
     //    root atomically
-    val refreshedRoot = refreshIvfIndex(spark, dir, content)
-    val refreshed = incrementalIvfProbe(spark, queries,
-      indexCodebook(spark, refreshedRoot), refreshedRoot)
+    val refreshed = IvfIndex.probe(spark, dir,
+      IvfIndex.refresh(spark, dir, content), IvfIndex.Float, queries)
 
     val truthN = truth.agg(count(lit(1)).as("truth"))
     def recallRow(phase: String, topk: DataFrame): DataFrame =
@@ -2111,34 +1673,6 @@ object Similarity {
       .orderBy("phase")
   }
 
-  /** Re-train + re-code `content` into a fresh index root, published
-    * atomically — exposed so the spec can inspect the artifact the entry
-    * ships (codebook, manifest, layout).
-    */
-  private[pipeline] def refreshIvfIndex(spark: SparkSession, dir: String,
-      content: DataFrame): String = {
-    val cent2 = trainedCentroids(spark, dir, content)
-    val dst = graft.TempDirs.scoped("ivf-refresh") + "/refreshed"
-    val (fs, root) = hadoopFs(spark, dst)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$CodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ListsManifestFile))
-    IndexCommit.ensure(fs, root)(committed) { tmp =>
-      nearestLists(content, cent2, "vec_id", 1)
-        .select("vec_id", "emb", "nrm", "c_id")
-        .repartition(col("c_id"))
-        .sortWithinPartitions("c_id", "vec_id")
-        .write.mode("overwrite").partitionBy("c_id").parquet(tmp.toString)
-      cent2.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
-      val lists = fs.listStatus(tmp).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-        .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-      listsManifestWrite(spark, tmp.toString, lists)
-    }
-    dst
-  }
-
   /** DuckDB replay — no persisted state, so both phases are recomputed
     * from the embeddings table: the drift mix, the frozen-codebook
     * assignment of the augmented content, the Lloyd re-train over the
@@ -2149,38 +1683,9 @@ object Similarity {
   val ivfRefreshSql: String = {
     val w = 2 * IvfSplitMod
     val drift = s"list_transform(emb, x -> x + $DriftShift::DOUBLE)"
-    def assignCte(src: String, centName: String, outName: String): String =
-      s"""$outName AS (
-         |  SELECT vec_id, emb, nrm, c_id FROM (
-         |    SELECT e.vec_id, e.emb, e.nrm, c.c_id,
-         |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |             round(${cosineSql("e.emb", "c.c_emb", "e.nrm", "c.c_nrm")}, 6) DESC,
-         |             c.c_id) AS crk
-         |    FROM $src e, $centName c)
-         |  WHERE crk = 1)""".stripMargin
-    def meanCte(assignName: String, outName: String): String = {
-      val sums = (0 until Dim)
-        .map(i => s"sum(floor(emb[${i + 1}] * $QScale.0 + 0.5)::BIGINT) AS s$i")
-        .mkString(", ")
-      val arr = (0 until Dim)
-        .map(i => s"s$i::DOUBLE / (cn * $QScale)::DOUBLE")
-        .mkString("[", ", ", "]")
-      s"""${outName}_m AS (
-         |  SELECT c_id, count(*)::BIGINT AS cn, $sums FROM $assignName GROUP BY c_id),
-         |${outName}_e AS (SELECT c_id, $arr AS c_emb FROM ${outName}_m),
-         |$outName AS (SELECT c_id, c_emb,
-         |             sqrt(list_sum(list_transform(c_emb, v -> v * v))) AS c_nrm
-         |             FROM ${outName}_e)""".stripMargin
-    }
     def probeCte(centName: String, outName: String): String =
-      s"""$outName AS (
-         |  SELECT q_id, c_id FROM (
-         |    SELECT q.q_id, c.c_id,
-         |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-         |             round(${cosineSql("q.q_emb", "c.c_emb", "q.q_nrm", "c.c_nrm")}, 6) DESC,
-         |             c.c_id) AS crk
-         |    FROM dq q, $centName c)
-         |  WHERE crk <= $NProbe)""".stripMargin
+      nearestCte(outName, "q_id, c_id", "q.q_id", s"dq q, $centName c",
+        s"<= $NProbe", "q", "q_")
     def topkCte(probeName: String, listName: String, outName: String): String =
       s"""$outName AS (
          |  SELECT q_id, vec_id FROM (
@@ -2195,7 +1700,7 @@ object Similarity {
          |  WHERE rk <= $TopK)""".stripMargin
     s"""WITH $embCte,
        |dwave AS (
-       |  SELECT vec_id, emb, sqrt(list_sum(list_transform(emb, v -> v * v)))
+       |  SELECT vec_id, emb, sqrt(${normSq("emb")})
        |           AS nrm
        |  FROM (SELECT vec_id, $drift AS emb FROM emb WHERE vec_id % $w = 0)),
        |content AS MATERIALIZED (
@@ -2203,15 +1708,12 @@ object Similarity {
        |  UNION ALL SELECT vec_id, emb, nrm FROM dwave),
        |dq AS (
        |  SELECT vec_id AS q_id, emb AS q_emb,
-       |         sqrt(list_sum(list_transform(emb, v -> v * v))) AS q_nrm
+       |         sqrt(${normSq("emb")}) AS q_nrm
        |  FROM (SELECT vec_id, $drift AS emb FROM emb
-       |        WHERE vec_id % $w = $IvfSplitMod
-       |          AND vec_id < ${w.toLong * QuerySetSize + IvfSplitMod})),
-       |centf AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |          WHERE vec_id < $nCentroidsSqlExpr),
+       |        WHERE ${wavePred(IvfSplitMod)})),
+       |${centCte("centf")},
        |${assignCte("content", "centf", "lists_stale")},
-       |centr0 AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm
-       |           FROM content WHERE vec_id < $nCentroidsSqlExpr),
+       |${centCte("centr0", from = "content")},
        |${assignCte("content", "centr0", "ra1")},
        |${meanCte("ra1", "centr1")},
        |${assignCte("content", "centr1", "ra2")},
@@ -2241,483 +1743,141 @@ object Similarity {
        |SELECT phase, hits, tn.truth FROM rows, tn ORDER BY phase""".stripMargin
   }
 
-  /** Stream-static incremental ANN probe core — the streaming twin of
-    * [[incrementalIvfProbe]] (the embedding analogue of
-    * [[graft.pipeline.Dedup.streamProbeBands]]): incoming vectors as an
-    * unbounded stream, the persisted inverted lists as the STATIC join
-    * side. The probe-list choice per vector is computed STATELESSLY — a
-    * rank window cannot run in streaming append mode, so the codebook
-    * rides as ONE broadcast array<struct> row cross-joined onto the
-    * stream (c_id-sorted for determinism): each row computes all
-    * codebook rounded cosines inside a `transform`, `array_sort` over
-    * (negated sim, c_id) structs picks the [[NProbe]] probe lists, and
-    * one stream-static equi join on list id scores the candidates. No
-    * watermark, no state store, and — unlike the previous
-    * literals-in-the-expression form — no codebook-size ceiling: at the
-    * adaptive cap (65,536 lists) literals would be ~4M constants in one
-    * expression tree, while the broadcast array is ~34 MB of data.
-    * Output is candidate-level (q_id, vec_id, sim) rows; final top-k is
-    * a downstream batch concern, exactly as the dedup twin emits
-    * band-level rows.
-    */
-  def streamProbeIvf(incoming: DataFrame, cent: DataFrame, idx: DataFrame)
-      : DataFrame = {
-    val centArr = cent.agg(array_sort(collect_list(
-      struct(col("c_id"), col("c_emb"), col("c_nrm")))).as("cents"))
-    incoming
-      .crossJoin(broadcast(centArr))
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        explode(expr(
-          s"""slice(array_sort(transform(cents, c -> named_struct(
-             |  'negsim', CAST(0 AS DOUBLE)
-             |    - round(graft_dot(emb, c.c_emb) / (nrm * c.c_nrm), 6),
-             |  'c_id', c.c_id))), 1, $NProbe)""".stripMargin)).as("probe"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        col("probe.c_id").as("c_id"))
-      .join(idx.selectExpr("CAST(c_id AS BIGINT) AS c_id", "vec_id",
-        "emb", "nrm"), Seq("c_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-  }
+  // ---------------------------------------------- persisted-index oracles
 
-  /** The streaming ANN probe as a batch-checkable entry: the WHOLE
-    * incoming wave (not just the query set) probed against the persisted
-    * index through the stream-capable plan, ordered for the oracle.
-    * `IncrementalIvfSpec` proves the same core produces identical rows
-    * from a real MemoryStream across micro-batches with zero state.
+  /** `emb`, the coarse codebook (`cent`, or `gcent` with g_ columns when
+    * the PQ sub-codes own c_id), `hist` = the index CONTENT (DuckDB has no
+    * persisted index, so `histPred` names it) and `lists` = its rank-1
+    * assignment: the head every persisted-index oracle replays.
     */
-  def streamIncrementalIvf(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfIndex(spark, dir)
-    val emb = embDouble(spark, dir)
-    streamProbeIvf(emb.where(s"vec_id % $IvfSplitMod = 0"),
-      indexCodebook(spark, path), spark.read.parquet(path))
-      .orderBy("q_id", "vec_id")
-  }
+  private def ivfListsCtes(histPred: String = s"vec_id % $IvfSplitMod <> 0",
+      p: String = "c"): String =
+    s"""$embCte,
+       |${centCte(codebookName(p), p)},
+       |${histCte(histPred)},
+       |${listsCte(p)}""".stripMargin
 
-  val streamIncrementalIvfSql: String =
-    s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb
-       |         WHERE vec_id % $IvfSplitMod <> 0),
-       |lists AS (
-       |  SELECT vec_id, c_id FROM (
-       |    SELECT h.vec_id, c.c_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "c.c_emb", "h.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM hist h, cent c)
-       |  WHERE crk = 1),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id % $IvfSplitMod = 0),
-       |probes AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.c_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "c.c_emb", "q.q_nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM q, cent c)
-       |  WHERE crk <= $NProbe)
-       |SELECT p.q_id, l.vec_id,
+  private def codebookName(p: String): String = if (p == "c") "cent" else "gcent"
+
+  private def listsCte(p: String = "c", src: String = "hist"): String =
+    nearestCte("lists", s"vec_id, ${p}_id", "h.vec_id",
+      s"$src h, ${codebookName(p)} $p", "= 1", "h", p = p)
+
+  /** The `q` queries' [[NProbe]] nearest lists. */
+  private def probesCte(p: String = "c"): String =
+    nearestCte("probes", s"q_id, ${p}_id", "q.q_id", s"q, ${codebookName(p)} $p",
+      s"<= $NProbe", "q", "q_", p)
+
+  /** The exact-probe join of the `q` queries over the float lists. */
+  private val floatProbeSelect: String =
+    s"""SELECT p.q_id, l.vec_id,
        |       round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
        |FROM probes p
        |JOIN lists l USING (c_id)
        |JOIN emb e ON e.vec_id = l.vec_id
        |JOIN q ON q.q_id = p.q_id
-       |WHERE l.vec_id <> p.q_id
+       |WHERE l.vec_id <> p.q_id""".stripMargin
+
+  val streamIncrementalIvfSql: String =
+    s"""WITH ${ivfListsCtes()},
+       |${qCte(s"vec_id % $IvfSplitMod = 0")},
+       |${probesCte()}
+       |$floatProbeSelect
        |ORDER BY p.q_id, l.vec_id""".stripMargin
 
-  /** Oracle for the incremental entries: the same construction from
-    * scratch — DuckDB has no persisted index, so `histPred` names the
-    * index CONTENT (historical corpus for the probe leg; historical ∪
-    * wave 1 for the append leg) and the rest is the ivf probe replayed.
+  /** Oracle for the float incremental entries: the same construction from
+    * scratch over the `histPred` content (historical corpus for the probe
+    * leg; historical ∪ wave 1 for the append leg), wave-`rem` queries.
     */
-  private def incrementalIvfSql(histPred: String, rem: Int): String = {
-    val w = 2 * IvfSplitMod
-    s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb WHERE $histPred),
-       |lists AS (
-       |  SELECT vec_id, c_id FROM (
-       |    SELECT h.vec_id, c.c_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "c.c_emb", "h.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM hist h, cent c)
-       |  WHERE crk = 1),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id % $w = $rem
-       |        AND vec_id < ${w.toLong * QuerySetSize + rem}),
-       |probes AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.c_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "c.c_emb", "q.q_nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM q, cent c)
-       |  WHERE crk <= $NProbe),
+  private def incrementalIvfSql(histPred: String, rem: Int): String =
+    s"""WITH ${ivfListsCtes(histPred)},
+       |${qCte(wavePred(rem))},
+       |${probesCte()},
        |scored AS (
-       |  SELECT p.q_id, l.vec_id,
-       |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
-       |  FROM probes p
-       |  JOIN lists l USING (c_id)
-       |  JOIN emb e ON e.vec_id = l.vec_id
-       |  JOIN q ON q.q_id = p.q_id
-       |  WHERE l.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM scored)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
-  }
+       |  $floatProbeSelect),
+       |${rankedSql("scored")}""".stripMargin
+
+  private val AppendContent =
+    s"vec_id % $IvfSplitMod <> 0 OR vec_id % ${2 * IvfSplitMod} = 0"
 
   val incrementalIvfSqlProbe: String =
     incrementalIvfSql(s"vec_id % $IvfSplitMod <> 0", 0)
 
-  val incrementalIvfSqlAppend: String = incrementalIvfSql(
-    s"vec_id % $IvfSplitMod <> 0 OR vec_id % ${2 * IvfSplitMod} = 0",
-    IvfSplitMod)
+  val incrementalIvfSqlAppend: String =
+    incrementalIvfSql(AppendContent, IvfSplitMod)
 
-  // ------------------------- SQ8-stored IVF index (the 100 TB layout)
-
-  /** Path of the SQ8-stored IVF index — the float-lists path plus a
-    * layout tag, so the two representations never shadow each other.
+  /** SQ8 quantization of the `lists` rows: per-vector scale `s` and the
+    * exact-integer `floor(x·s + 0.5)` components (the [[sq8TopKSql]]
+    * arithmetic).
     */
-  def ivfSq8IndexPath(spark: SparkSession, dir: String): String =
-    ivfIndexPath(spark, dir) + "_sq8"
-
-  /** Build-once: the historical corpus's inverted lists stored in SQ8 —
-    * per row (vec_id, s, nrm, qb) where `qb` is the 64-byte
-    * `graft_sq8_pack` quantization and `s`/`nrm` the per-vector scale and
-    * original norm — partitioned by `c_id` exactly like
-    * [[ensureIvfIndex]]. This is the honest 100 TB index layout
-    * (FAISS IndexIVFScalarQuantizer QT_8bit): the lists hold 1 byte/dim
-    * instead of 8 (float64 arrays), so every probe moves ~8× less list
-    * IO; the float vectors stay ONLY in the corpus table, touched by the
-    * exact re-rank's keyed lookups. Same codebook + `_lists` manifest +
-    * atomic [[IndexCommit]] publication as the float index.
-    */
-  def ensureIvfSq8Index(spark: SparkSession, dir: String): String = {
-    val path = ivfSq8IndexPath(spark, dir)
-    val (fs, root) = hadoopFs(spark, path)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$CodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ListsManifestFile))
-    IndexCommit.ensure(fs, root)(committed) { tmp =>
-      val emb = embDouble(spark, dir)
-      val cent = coarseCent(emb, nCentroids(spark, dir))
-      nearestLists(emb.where(s"vec_id % $IvfSplitMod <> 0"), cent,
-          "vec_id", 1)
-        .selectExpr("vec_id", "nrm", "c_id",
-          "127.0 / greatest(array_max(transform(emb, y -> abs(y))), 1e-300) AS s", "emb")
-        .selectExpr("vec_id", "nrm", "c_id", "s",
-          "graft_sq8_pack(emb, s) AS qb")
-        .repartition(col("c_id"))
-        .sortWithinPartitions("c_id", "vec_id")
-        .write.mode("overwrite").partitionBy("c_id").parquet(tmp.toString)
-      cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
-      val lists = fs.listStatus(tmp).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-        .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-      listsManifestWrite(spark, tmp.toString, lists)
-    }
-    path
-  }
-
-  /** Quantize a probe batch: tag `(q_id, q_emb, q_nrm, c_id)` rows with
-    * the query-side SQ8 scale and packed bytes.
-    */
-  private def sq8Queries(probes: DataFrame): DataFrame = probes
-    .selectExpr("q_id", "q_emb", "q_nrm", "c_id",
-      "127.0 / greatest(array_max(transform(q_emb, y -> abs(y))), 1e-300) AS q_s")
-    .selectExpr("q_id", "q_emb", "q_nrm", "c_id", "q_s",
-      "graft_sq8_pack(q_emb, q_s) AS q_qb")
-
-  /** SQ8 probe core, shared by the persisted probe and the recall-gate
-    * construction: integer-dot the stored bytes against the quantized
-    * queries (the ONLY pass over list rows — no float vectors move), keep
-    * the approximate top-`rerank` per query, then re-score exactly
-    * against `floats` (rerank·Q keyed full-vector reads) and emit the
-    * final top-`k`. The two-stage shape is [[ivfPqTopK]]'s refine
-    * contract with SQ8 in place of ADC.
-    */
-  private def sq8ProbeCore(lists: DataFrame, quantQ: DataFrame,
-      floats: DataFrame, rerank: Long, k: Int): DataFrame = {
-    val approx = lists.join(broadcast(quantQ), "c_id")
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "q_emb", "q_nrm", "vec_id",
-        s"""round(CAST(graft_sq8_dot(qb, q_qb) AS DOUBLE)
-           |  / (s * q_s) / (nrm * q_nrm), 6) AS asim""".stripMargin)
-      .withColumn("ark", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, vec_id ASC)"))
-      .where(s"ark <= $rerank")
-    approx
-      .join(floats.select("vec_id", "emb", "nrm"), "vec_id")
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $k")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
-  }
-
-  /** Probe an already-built SQ8 index: nearest [[NProbe]] centroids per
-    * query (float codebook), manifest-intersected touched dirs, then the
-    * [[sq8ProbeCore]] two-stage scoring. List IO is the quantized
-    * representation only.
-    */
-  def incrementalIvfSq8Probe(spark: SparkSession, queries: DataFrame,
-      cent: DataFrame, indexPath: String, floats: DataFrame,
-      rerank: Long, k: Int = TopK): DataFrame = {
-    val probes = nearestLists(queries, cent, "q_id", NProbe)
-      .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    val manifest = listsManifestRead(spark, indexPath) // fails loud if absent
-    val touchedDirs = probes.select("c_id").distinct()
-      .collect() // ≤ Q × NProbe list ids: metadata-scale
-      .map(_.getLong(0))
-      .filter(manifest.contains)
-      .sorted.map(c => s"$indexPath/c_id=$c")
-    val idx =
-      if (touchedDirs.isEmpty) spark.read.parquet(indexPath).limit(0)
-      else spark.read.option("basePath", indexPath)
-        .parquet(touchedDirs.toIndexedSeq: _*)
-    sq8ProbeCore(idx, sq8Queries(probes), floats, rerank, k)
-  }
-
-  /** Incremental ANN over the SQ8-stored index, probe leg: wave-1
-    * queries against the persisted quantized lists with exact re-rank on
-    * the float corpus — [[incrementalIvf]]'s cross-run contract at 1/8th
-    * the list IO.
-    */
-  def incrementalIvfSq8(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfSq8Index(spark, dir)
-    val emb = embDouble(spark, dir)
-    incrementalIvfSq8Probe(spark, waveQueries(emb, 0),
-      indexCodebook(spark, path), path, emb,
-      rerankK(corpusStats(spark, dir)._1))
-  }
-
-  /** Stream-static SQ8 probe — the quantized twin of [[streamProbeIvf]]:
-    * incoming vectors quantize STATELESSLY in the expression layer
-    * (`graft_sq8_pack` on the stream side), probe-list choice via the
-    * same broadcast codebook array, then ONE stream-static equi join on
-    * list id against the persisted QUANTIZED lists. Emitted sims are the
-    * SQ8 ROUTING scores (integer dot rescaled by the stored scales) —
-    * exactly what a live path can compute without a rank window; the
-    * exact re-rank is the downstream batch consumer's job, as in
-    * [[incrementalIvfSq8Probe]]. No watermark, no state store, and the
-    * static-side list IO is the 1-byte/dim layout (~8× less than the
-    * float twin's).
-    */
-  def streamProbeIvfSq8(incoming: DataFrame, cent: DataFrame,
-      idx: DataFrame): DataFrame = {
-    val centArr = cent.agg(array_sort(collect_list(
-      struct(col("c_id"), col("c_emb"), col("c_nrm")))).as("cents"))
-    incoming
-      .crossJoin(broadcast(centArr))
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        explode(expr(
-          s"""slice(array_sort(transform(cents, c -> named_struct(
-             |  'negsim', CAST(0 AS DOUBLE)
-             |    - round(graft_dot(emb, c.c_emb) / (nrm * c.c_nrm), 6),
-             |  'c_id', c.c_id))), 1, $NProbe)""".stripMargin)).as("probe"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        col("probe.c_id").as("c_id"))
-      .selectExpr("q_id", "q_nrm", "c_id",
-        "127.0 / greatest(array_max(transform(q_emb, y -> abs(y))), 1e-300) AS q_s", "q_emb")
-      .selectExpr("q_id", "q_nrm", "c_id", "q_s",
-        "graft_sq8_pack(q_emb, q_s) AS q_qb")
-      .join(idx.selectExpr("CAST(c_id AS BIGINT) AS c_id", "vec_id",
-        "nrm", "s", "qb"), Seq("c_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"""round(CAST(graft_sq8_dot(qb, q_qb) AS DOUBLE)
-           |  / (s * q_s) / (nrm * q_nrm), 6) AS asim""".stripMargin)
-  }
-
-  /** The SQ8 streaming probe as a batch-checkable entry (the
-    * [[streamIncrementalIvf]] convention): the whole incoming wave
-    * probed against the persisted quantized index through the
-    * stream-capable plan; `IncrementalIvfSpec` proves the same core
-    * produces identical rows from a real MemoryStream with zero state.
-    */
-  def streamIncrementalIvfSq8(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val path = ensureIvfSq8Index(spark, dir)
-    val emb = embDouble(spark, dir)
-    streamProbeIvfSq8(emb.where(s"vec_id % $IvfSplitMod = 0"),
-      indexCodebook(spark, path), spark.read.parquet(path))
-      .orderBy("q_id", "vec_id")
-  }
-
-  val streamIncrementalIvfSq8Sql: String =
-    s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb
-       |         WHERE vec_id % $IvfSplitMod <> 0),
-       |lists AS (
-       |  SELECT vec_id, c_id FROM (
-       |    SELECT h.vec_id, c.c_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "c.c_emb", "h.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM hist h, cent c)
-       |  WHERE crk = 1),
-       |sc AS (SELECT l.vec_id, l.c_id, e.nrm, e.emb,
-       |              127.0 / greatest(list_max(list_transform(e.emb, y -> abs(y))), 1e-300) AS s
-       |       FROM lists l JOIN emb e USING (vec_id)),
+  private def sq8Ctes(l: String, e: String, from: String): String =
+    s"""sc AS (SELECT $l.vec_id, $l.c_id, $e.nrm, $e.emb,
+       |              ${sq8ScaleSql(s"$e.emb")} AS s
+       |       FROM $from),
        |sq AS (SELECT vec_id, c_id, nrm, s,
        |              list_transform(emb, x -> floor(x * s + 0.5)) AS qv
-       |       FROM sc),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id % $IvfSplitMod = 0),
+       |       FROM sc)""".stripMargin
+
+  private def sq8ScaleSql(v: String): String =
+    s"127.0 / greatest(list_max(list_transform($v, y -> abs(y))), 1e-300)"
+
+  private def sq8AsimSql(q: String): String =
+    s"""round(list_sum(list_transform(range(1, ${Dim + 1}),
+       |                 i -> s.qv[i] * $q.q_qv[i]))
+       |           / (s.s * $q.q_s) / (s.nrm * $q.q_nrm), 6) AS asim""".stripMargin
+
+  val streamIncrementalIvfSq8Sql: String =
+    s"""WITH ${ivfListsCtes()},
+       |${sq8Ctes("l", "e", "lists l JOIN emb e USING (vec_id)")},
+       |${qCte(s"vec_id % $IvfSplitMod = 0")},
        |qq AS (SELECT q_id, q_emb, q_nrm, q_s,
        |              list_transform(q_emb, x -> floor(x * q_s + 0.5)) AS q_qv
        |       FROM (SELECT *,
-       |               127.0 / greatest(list_max(list_transform(q_emb, y -> abs(y))), 1e-300) AS q_s
+       |               ${sq8ScaleSql("q_emb")} AS q_s
        |             FROM q)),
-       |probes AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.c_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "c.c_emb", "q.q_nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM q, cent c)
-       |  WHERE crk <= $NProbe)
+       |${probesCte()}
        |SELECT p.q_id, s.vec_id,
-       |       round(list_sum(list_transform(range(1, ${Dim + 1}),
-       |               i -> s.qv[i] * x.q_qv[i]))
-       |         / (s.s * x.q_s) / (s.nrm * x.q_nrm), 6) AS asim
+       |       ${sq8AsimSql("x")}
        |FROM probes p
        |JOIN sq s USING (c_id)
        |JOIN qq x ON x.q_id = p.q_id
        |WHERE s.vec_id <> p.q_id
        |ORDER BY p.q_id, s.vec_id""".stripMargin
 
-  /** In-place append to the SQ8-stored index — the ingest leg completing
-    * its build/probe/append family (the [[incrementalIvfAppend]] cycle
-    * at the quantized layout): wave-1 vectors are assigned by the
-    * index's float codebook, QUANTIZED via `graft_sq8_pack`, and
-    * upserted into exactly the touched `c_id=` dirs (1/8th the rewritten
-    * bytes per touched list vs the float layout); the manifest commit
-    * makes new lists probe-visible, then wave-2 queries probe the
-    * augmented quantized lists with exact re-rank on the float corpus.
-    * Append cost is O(batch + touched lists), independent of index size.
+  /** DuckDB replay of the SQ8-index probe over lists of `src` (the
+    * persisted index's `hist` content, or the whole corpus for the
+    * in-plan [[ivfSq8TopK]]): SQ8 quantization, approximate top-rerankK
+    * per query of the `qPred` query set, exact re-rank, top-[[TopK]].
     */
-  def incrementalIvfSq8Append(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfSq8Index(spark, dir)
-    val aug = graft.TempDirs.scoped("ivfsq8-incr") + "/index"
-    graft.TempDirs.copyTree(spark, path, aug) // hermeticity tax only
-    val cent = indexCodebook(spark, aug)
-    val emb = embDouble(spark, dir)
-    val w = 2 * IvfSplitMod
-    val wave1 = nearestLists(emb.where(s"vec_id % $w = 0"), cent,
-        "vec_id", 1)
-      .selectExpr("vec_id", "nrm", "c_id",
-        "127.0 / greatest(array_max(transform(emb, y -> abs(y))), 1e-300) AS s", "emb")
-      .selectExpr("vec_id", "nrm", "c_id", "s",
-        "graft_sq8_pack(emb, s) AS qb")
-      .persist() // read twice (touched set, merge+write) — one compute
-    val touched = wave1.select("c_id").distinct()
-      .collect().map(_.getLong(0)).toSet // ≤ |wave| list ids
-    graft.streaming.Sinks.partitionedUpsertBatch(wave1.toDF(), aug,
-      partitionCols = Seq("c_id"), keyCols = Seq("vec_id"),
-      versionCols = Seq("vec_id"), sortCols = Seq("vec_id"))
-    listsManifestWrite(spark, aug, listsManifestRead(spark, aug) ++ touched)
-    val out = incrementalIvfSq8Probe(spark, waveQueries(emb, IvfSplitMod),
-      indexCodebook(spark, aug), aug, emb,
-      rerankK(corpusStats(spark, dir)._1))
-    wave1.unpersist() // probe reads the written files, not the plan
-    out
-  }
-
-  /** DuckDB replay of [[incrementalIvfSq8]] / [[incrementalIvfSq8Append]]
-    * — the same construction from scratch: `histPred` assignment, SQ8
-    * quantization (`floor(x·s + 0.5)` exact integers, the
-    * [[sq8TopKSql]] arithmetic), approximate top-rerankK per query for
-    * the wave-`rem` query set, exact re-rank, top-[[TopK]].
-    */
-  private def ivfSq8IncrSql(histPred: String, rem: Int): String = {
-    val w = 2 * IvfSplitMod
+  private def ivfSq8Sql(hist: String, src: String, qPred: String): String =
     s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb
-       |         WHERE $histPred),
-       |lists AS (
-       |  SELECT vec_id, c_id FROM (
-       |    SELECT h.vec_id, c.c_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "c.c_emb", "h.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM hist h, cent c)
-       |  WHERE crk = 1),
-       |sc AS (SELECT l.vec_id, l.c_id, e.nrm, e.emb,
-       |              127.0 / greatest(list_max(list_transform(e.emb, y -> abs(y))), 1e-300) AS s
-       |       FROM lists l JOIN emb e USING (vec_id)),
-       |sq AS (SELECT vec_id, c_id, nrm, s,
-       |              list_transform(emb, x -> floor(x * s + 0.5)) AS qv
-       |       FROM sc),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id % $w = $rem
-       |        AND vec_id < ${w.toLong * QuerySetSize + rem}),
+       |${centCte("cent")},
+       |$hist${listsCte(src = src)},
+       |${sq8Ctes("l", "e", "lists l JOIN emb e USING (vec_id)")},
+       |${qCte(qPred)},
        |qs AS (SELECT q_id, q_emb, q_nrm,
-       |              127.0 / greatest(list_max(list_transform(q_emb, y -> abs(y))), 1e-300) AS q_s
+       |              ${sq8ScaleSql("q_emb")} AS q_s
        |       FROM q),
        |qq AS (SELECT q_id, q_emb, q_nrm, q_s,
        |              list_transform(q_emb, x -> floor(x * q_s + 0.5)) AS q_qv
        |       FROM qs),
-       |probes AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.c_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "c.c_emb", "q.q_nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM q, cent c)
-       |  WHERE crk <= $NProbe),
+       |${probesCte()},
        |approx AS (
        |  SELECT p.q_id, s.vec_id,
-       |         round(list_sum(list_transform(range(1, ${Dim + 1}),
-       |                 i -> s.qv[i] * qq.q_qv[i]))
-       |           / (s.s * qq.q_s) / (s.nrm * qq.q_nrm), 6) AS asim
+       |         ${sq8AsimSql("qq")}
        |  FROM probes p
        |  JOIN sq s USING (c_id)
        |  JOIN qq ON qq.q_id = p.q_id
        |  WHERE s.vec_id <> p.q_id),
-       |cut AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, vec_id ASC) AS ark
-       |    FROM approx)
-       |  WHERE ark <= greatest($RerankKMin, (SELECT count(*) // 1000 FROM emb))),
-       |reranked AS (
-       |  SELECT c.q_id, c.vec_id,
-       |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
-       |  FROM cut c
-       |  JOIN emb e ON e.vec_id = c.vec_id
-       |  JOIN qq q ON q.q_id = c.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM reranked)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
-  }
+       |${cutCte("asim", "approx")},
+       |${rerankedCte("qq q")},
+       |${rankedSql("reranked")}""".stripMargin
 
-  val incrementalIvfSq8Sql: String =
-    ivfSq8IncrSql(s"vec_id % $IvfSplitMod <> 0", 0)
+  val incrementalIvfSq8Sql: String = ivfSq8Sql(
+    s"${histCte(s"vec_id % $IvfSplitMod <> 0")},\n", "hist", wavePred(0))
 
-  val incrementalIvfSq8AppendSql: String = ivfSq8IncrSql(
-    s"vec_id % $IvfSplitMod <> 0 OR vec_id % ${2 * IvfSplitMod} = 0",
-    IvfSplitMod)
+  val incrementalIvfSq8AppendSql: String = ivfSq8Sql(
+    s"${histCte(AppendContent)},\n", "hist", wavePred(IvfSplitMod))
 
   /** Full-corpus SQ8-IVF construction for the recall gate: the same
     * quantized-lists + exact-re-rank scoring as the persisted index,
@@ -2727,264 +1887,16 @@ object Similarity {
     */
   def ivfSq8TopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    val cent = coarseCent(emb, nCentroids(spark, dir))
-    val lists = nearestLists(emb, cent, "vec_id", 1)
-      .selectExpr("vec_id", "nrm", "c_id",
-        "127.0 / greatest(array_max(transform(emb, y -> abs(y))), 1e-300) AS s", "emb")
-      .selectExpr("vec_id", "nrm", "c_id", "s",
-        "graft_sq8_pack(emb, s) AS qb")
-    val probes = nearestLists(emb.where(s"vec_id < $QuerySetSize"), cent,
-        "q_id", NProbe)
-      .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    sq8ProbeCore(lists, sq8Queries(probes), emb,
-      rerankK(corpusStats(spark, dir)._1), TopK)
+    val m = IvfIndex.Model(coarseCent(emb, nCentroids(spark, dir)))
+    val queries = emb.where(s"vec_id < $QuerySetSize")
+    val probes = IvfIndex.probesOf(queries, m.cent)
+    IvfIndex.topK(IvfIndex.Sq8,
+      IvfIndex.Sq8.encode(nearestLists(emb, m.cent, "vec_id", 1), m),
+      probes, queries, m, emb, rerankK(corpusStats(spark, dir)._1))
   }
 
   val ivfSq8TopKSql: String =
-    s"""WITH $embCte,
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM emb
-       |         WHERE vec_id < $nCentroidsSqlExpr),
-       |lists AS (
-       |  SELECT vec_id, c_id FROM (
-       |    SELECT h.vec_id, c.c_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "c.c_emb", "h.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM emb h, cent c)
-       |  WHERE crk = 1),
-       |sc AS (SELECT l.vec_id, l.c_id, e.nrm, e.emb,
-       |              127.0 / greatest(list_max(list_transform(e.emb, y -> abs(y))), 1e-300) AS s
-       |       FROM lists l JOIN emb e USING (vec_id)),
-       |sq AS (SELECT vec_id, c_id, nrm, s,
-       |              list_transform(emb, x -> floor(x * s + 0.5)) AS qv
-       |       FROM sc),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id < $QuerySetSize),
-       |qs AS (SELECT q_id, q_emb, q_nrm,
-       |              127.0 / greatest(list_max(list_transform(q_emb, y -> abs(y))), 1e-300) AS q_s
-       |       FROM q),
-       |qq AS (SELECT q_id, q_emb, q_nrm, q_s,
-       |              list_transform(q_emb, x -> floor(x * q_s + 0.5)) AS q_qv
-       |       FROM qs),
-       |probes AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.c_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "c.c_emb", "q.q_nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM q, cent c)
-       |  WHERE crk <= $NProbe),
-       |approx AS (
-       |  SELECT p.q_id, s.vec_id,
-       |         round(list_sum(list_transform(range(1, ${Dim + 1}),
-       |                 i -> s.qv[i] * qq.q_qv[i]))
-       |           / (s.s * qq.q_s) / (s.nrm * qq.q_nrm), 6) AS asim
-       |  FROM probes p
-       |  JOIN sq s USING (c_id)
-       |  JOIN qq ON qq.q_id = p.q_id
-       |  WHERE s.vec_id <> p.q_id),
-       |cut AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, vec_id ASC) AS ark
-       |    FROM approx)
-       |  WHERE ark <= greatest($RerankKMin, (SELECT count(*) // 1000 FROM emb))),
-       |reranked AS (
-       |  SELECT c.q_id, c.vec_id,
-       |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
-       |  FROM cut c
-       |  JOIN emb e ON e.vec_id = c.vec_id
-       |  JOIN qq q ON q.q_id = c.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM reranked)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
-
-  // ------------- PQ-coded persisted IVF index (on-disk IndexIVFPQ)
-
-  /** Path of the PQ-coded IVF index — the float-lists path plus a layout
-    * tag, so the three list representations (float / SQ8 / PQ) never
-    * shadow each other.
-    */
-  def ivfPqIndexPath(spark: SparkSession, dir: String): String =
-    ivfIndexPath(spark, dir) + "_pq"
-
-  /** PQ sub-codebook subdir inside the PQ index (leading underscore:
-    * invisible to parquet scans of the index root, like [[CodebookDir]]).
-    */
-  val PqCodebookDir = "_pqcodebook"
-
-  /** The PQ sub-codebook of a corpus frame: the first [[PqK]] vectors'
-    * [[PqM]] subspace slices (the family's frozen seeded-codebook
-    * convention, [[pqTopK]]) with the [[QScale]]-quantized code norm.
-    * Columns (m, p_id, p_sub, pcq) — the `p_` prefix keeps PQ code ids
-    * and coarse list ids (c_id) from ever colliding in a probe plan.
-    */
-  private def pqCodebook(emb: DataFrame): DataFrame = {
-    val subSlices = (0 until PqM)
-      .map(m => s"slice(emb, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    emb.where(s"vec_id < $PqK")
-      .selectExpr("vec_id", s"posexplode(array($subSlices)) AS (m, sub)")
-      .selectExpr("m", "vec_id AS p_id", "sub AS p_sub",
-        s"CAST(floor(graft_dot(sub, sub) * $QScale.0 + 0.5) AS BIGINT) AS pcq")
-  }
-
-  /** PQ-encode `vecs` (vec_id, emb, nrm, c_id): nearest sub-code per
-    * (vector, subspace) — the [[pqTopK]] argmin, term-by-term squared L2
-    * so both engines fold identically — with the [[PqM]] 4-bit codes
-    * packed into ONE 16-bit integer, pcode = Σ code_m·16^m (each code
-    * < [[PqK]] = 16). Packing is storage, not semantics: the probe
-    * unpacks with exact integer arithmetic, so the oracle can replay
-    * from unpacked (m, code) pairs and still hash-match.
-    */
-  private def pqEncode(vecs: DataFrame, pqc: DataFrame): DataFrame = {
-    val subSlices = (0 until PqM)
-      .map(m => s"slice(emb, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    val caseM = (0 until PqM)
-      .map(m => s"WHEN $m THEN ${1L << (4 * m)}L").mkString("CASE m ", " ", " END")
-    vecs.selectExpr("vec_id", "nrm", "c_id",
-        s"posexplode(array($subSlices)) AS (m, sub)")
-      .join(broadcast(pqc), "m")
-      .selectExpr("vec_id", "nrm", "c_id", "m", "p_id",
-        s"""round(graft_dot(sub, sub) - 2 * graft_dot(sub, p_sub)
-           |  + graft_dot(p_sub, p_sub), 6) AS d2""".stripMargin)
-      .withColumn("prk", expr(
-        "row_number() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, p_id ASC)"))
-      .where("prk = 1")
-      .groupBy("vec_id", "nrm", "c_id")
-      .agg(expr(s"CAST(sum(p_id * ($caseM)) AS INT)").as("pcode"))
-  }
-
-  /** The persisted PQ sub-codebook of a built PQ index. Fails loud when
-    * absent — ADC against a mismatched codebook silently returns wrong
-    * neighbors (the [[indexCodebook]] contract).
-    */
-  def indexPqCodebook(spark: SparkSession, indexPath: String): DataFrame = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$PqCodebookDir/_SUCCESS")))
-      throw new IllegalStateException(
-        s"no $PqCodebookDir at $indexPath — index was not built by " +
-          "ensureIvfPqIndex; rebuild the index")
-    spark.read.parquet(s"$indexPath/$PqCodebookDir")
-  }
-
-  /** Build-once: the historical corpus's inverted lists stored as PQ
-    * CODES — per row (vec_id, nrm, pcode) where `pcode` packs the
-    * [[PqM]]×4-bit sub-codes (2 bytes of payload vs SQ8's 64-byte `qb`
-    * and the float layout's 512-byte array), partitioned by `c_id`
-    * exactly like [[ensureIvfIndex]]/[[ensureIvfSq8Index]]. This
-    * completes the FAISS storage ladder (IndexIVFPQ: codes in the lists,
-    * codebooks in the index, ADC at probe time, exact re-rank on the
-    * corpus): at 100 TB the probed lists move ~16× fewer bytes than SQ8
-    * and ~256× fewer than float64. Same persisted coarse codebook,
-    * `_lists` manifest, and atomic [[IndexCommit]] publication as the
-    * sibling layouts; the PQ sub-codebook travels in [[PqCodebookDir]].
-    */
-  def ensureIvfPqIndex(spark: SparkSession, dir: String): String = {
-    val path = ivfPqIndexPath(spark, dir)
-    val (fs, root) = hadoopFs(spark, path)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$CodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$PqCodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ListsManifestFile))
-    IndexCommit.ensure(fs, root)(committed) { tmp =>
-      val emb = embDouble(spark, dir)
-      val cent = coarseCent(emb, nCentroids(spark, dir))
-      val pqc = pqCodebook(emb)
-      pqEncode(
-        nearestLists(emb.where(s"vec_id % $IvfSplitMod <> 0"), cent,
-            "vec_id", 1)
-          .select("vec_id", "emb", "nrm", "c_id"), pqc)
-        .repartition(col("c_id"))
-        .sortWithinPartitions("c_id", "vec_id")
-        .write.mode("overwrite").partitionBy("c_id").parquet(tmp.toString)
-      cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
-      pqc.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$PqCodebookDir")
-      val lists = fs.listStatus(tmp).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-        .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-      listsManifestWrite(spark, tmp.toString, lists)
-    }
-    path
-  }
-
-  /** Probe an already-built PQ index: nearest [[NProbe]] centroids per
-    * query (float coarse codebook), manifest-intersected touched dirs,
-    * then classic ADC — a broadcast Q×M×K lookup table of quantized
-    * partial dots scores the UNPACKED stored codes (the only pass over
-    * list rows moves 2-byte codes, never vectors), the adaptive
-    * top-`rerank` ADC candidates re-score exactly against `floats`, and
-    * the final top-`k` emerges. The [[ivfPqTopK]] refine contract over a
-    * persisted code-layout index.
-    */
-  def incrementalIvfPqProbe(spark: SparkSession, queries: DataFrame,
-      cent: DataFrame, pqc: DataFrame, indexPath: String, floats: DataFrame,
-      rerank: Long, k: Int = TopK): DataFrame = {
-    val probes = nearestLists(queries, cent, "q_id", NProbe)
-      .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    val manifest = listsManifestRead(spark, indexPath) // fails loud if absent
-    val touchedDirs = probes.select("c_id").distinct()
-      .collect() // ≤ Q × NProbe list ids: metadata-scale
-      .map(_.getLong(0))
-      .filter(manifest.contains)
-      .sorted.map(c => s"$indexPath/c_id=$c")
-    val idx =
-      if (touchedDirs.isEmpty) spark.read.parquet(indexPath).limit(0)
-      else spark.read.option("basePath", indexPath)
-        .parquet(touchedDirs.toIndexedSeq: _*)
-    pqProbeCore(idx, queries, probes, pqc, floats, rerank, k)
-  }
-
-  /** ADC probe core over code lists, shared by the persisted probe and
-    * the ×10 recall-gate construction: broadcast Q×M×K LUT, unpacked-code
-    * scoring (the only pass over list rows moves 2-byte codes), adaptive
-    * top-`rerank` cut, exact re-rank on `floats`, final top-`k`.
-    */
-  private def pqProbeCore(codeLists: DataFrame, queries: DataFrame,
-      probes: DataFrame, pqc: DataFrame, floats: DataFrame,
-      rerank: Long, k: Int): DataFrame = {
-    // ADC lookup table: Q×M×K quantized partial dots + code norms
-    val subSlices = (0 until PqM)
-      .map(m => s"slice(emb, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    val lut = queries
-      .selectExpr("vec_id AS q_id", "nrm AS q_nrm",
-        s"posexplode(array($subSlices)) AS (m, sub)")
-      .join(broadcast(pqc), "m")
-      .selectExpr("q_id", "q_nrm", "m", "p_id AS code",
-        s"CAST(floor(graft_dot(sub, p_sub) * $QScale.0 + 0.5) AS BIGINT) AS pq",
-        "pcq")
-    // unpack stored codes with exact integer arithmetic and ADC-score
-    val unpack = (0 until PqM)
-      .map(m => s"CAST((pcode DIV ${1L << (4 * m)}) % $PqK AS BIGINT)")
-      .mkString(", ")
-    val adc = codeLists.join(broadcast(probes.select("q_id", "c_id")), "c_id")
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"posexplode(array($unpack)) AS (m, code)")
-      .join(broadcast(lut), Seq("q_id", "m", "code"))
-      .groupBy("q_id", "vec_id")
-      .agg(max("q_nrm").as("q_nrm"), sum("pq").as("adcq"), sum("pcq").as("rq"))
-      .selectExpr("q_id", "vec_id",
-        s"""round((CAST(adcq AS DOUBLE) / $QScale.0)
-           |  / (q_nrm * sqrt(CAST(rq AS DOUBLE) / $QScale.0)), 6) AS adc_sim""".stripMargin)
-      .withColumn("ark", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY adc_sim DESC, vec_id ASC)"))
-      .where(s"ark <= $rerank")
-    val qv = queries.selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    adc.select("q_id", "vec_id")
-      .join(floats.select("vec_id", "emb", "nrm"), "vec_id")
-      .join(broadcast(qv), "q_id")
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $k")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
-  }
+    ivfSq8Sql("", "emb", s"vec_id < $QuerySetSize")
 
   /** Refine multiplier of the PQ-index probe over the family's adaptive
     * [[rerankK]]: PQ codes are ~16× lossier than SQ8 bytes (2-byte codes
@@ -2996,531 +1908,30 @@ object Similarity {
     */
   final val PqIdxRefine = 4
 
-  /** Incremental ANN over the PQ-coded index, probe leg: wave-1 queries
-    * against the persisted 2-byte-code lists with exact re-rank on the
-    * float corpus — [[incrementalIvf]]'s cross-run contract at the
-    * smallest rung of the storage ladder.
-    */
-  def incrementalIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfPqIndex(spark, dir)
-    val emb = embDouble(spark, dir)
-    incrementalIvfPqProbe(spark, waveQueries(emb, 0),
-      indexCodebook(spark, path), indexPqCodebook(spark, path), path, emb,
-      PqIdxRefine * rerankK(corpusStats(spark, dir)._1))
-  }
-
-  /** In-place append to the PQ-coded index — the ingest leg completing
-    * its build/probe/append family: wave-1 vectors are assigned by the
-    * index's persisted float codebook, ENCODED with its persisted PQ
-    * sub-codebook (a frozen training artifact — appends never retrain),
-    * and upserted into exactly the touched `c_id=` dirs; the manifest
-    * commit makes new lists probe-visible, then wave-2 queries probe the
-    * augmented code lists. Append cost is O(batch + touched lists),
-    * independent of index size.
-    */
-  def incrementalIvfPqAppend(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfPqIndex(spark, dir)
-    val aug = graft.TempDirs.scoped("ivfpq-incr") + "/index"
-    graft.TempDirs.copyTree(spark, path, aug) // hermeticity tax only
-    val cent = indexCodebook(spark, aug)
-    val pqc = indexPqCodebook(spark, aug)
-    val emb = embDouble(spark, dir)
-    val w = 2 * IvfSplitMod
-    val wave1 = pqEncode(
-      nearestLists(emb.where(s"vec_id % $w = 0"), cent, "vec_id", 1)
-        .select("vec_id", "emb", "nrm", "c_id"), pqc)
-      .persist() // read twice (touched set, merge+write) — one compute
-    val touched = wave1.select("c_id").distinct()
-      .collect().map(_.getLong(0)).toSet // ≤ |wave| list ids
-    graft.streaming.Sinks.partitionedUpsertBatch(wave1.toDF(), aug,
-      partitionCols = Seq("c_id"), keyCols = Seq("vec_id"),
-      versionCols = Seq("vec_id"), sortCols = Seq("vec_id"))
-    listsManifestWrite(spark, aug, listsManifestRead(spark, aug) ++ touched)
-    val out = incrementalIvfPqProbe(spark, waveQueries(emb, IvfSplitMod),
-      indexCodebook(spark, aug), pqc, aug, emb,
-      PqIdxRefine * rerankK(corpusStats(spark, dir)._1))
-    wave1.unpersist() // probe reads the written files, not the plan
-    out
-  }
-
-  // --------- residual-coded persisted IVFPQ (the FAISS default form)
-
-  /** Path of the RESIDUAL-coded PQ index. The tag names the LAYOUT
-    * GENERATION (seed offset included): a layout change must never
-    * silently reuse an index built under the old rules.
-    */
-  def ivfPqResIndexPath(spark: SparkSession, dir: String): String =
-    ivfIndexPath(spark, dir) + "_pqr2"
-
-  /** Residual sub-codebook: [[PqK]] seed vectors' RESIDUALS against
-    * their own nearest coarse centroid, sliced into [[PqM]] subspaces —
-    * codes then quantize what the coarse assignment CANNOT explain,
-    * which is why FAISS's IndexIVFPQ encodes residuals by default: the
-    * residual cloud is centered and small, so 4-bit codes spend their
-    * 16 cells on the informative part. The seeds are ids
-    * [`nc`, `nc`+[[PqK]]): the first `nc` vectors ARE the coarse
-    * centroids (their residuals are exactly zero — a degenerate
-    * codebook that collapses ADC to coarse-only ranking; measured
-    * recall 32% at sf0.1 before this offset). Columns (m, p_id, p_sub).
-    */
-  private def pqCodebookRes(emb: DataFrame, cent: DataFrame,
-      nc: Int, perm: Seq[Int] = Nil): DataFrame = {
-    val resSlices = (0 until PqM)
-      .map(m => s"slice(res, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    assignOne(emb.where(s"vec_id >= $nc AND vec_id < ${nc + PqK}"), cent,
-        "vec_id", "c_id", "c_emb", "c_nrm", "csim", "crk")
-      .join(broadcast(cent.select("c_id", "c_emb")), "c_id")
-      .selectExpr("vec_id", "zip_with(emb, c_emb, (x, y) -> x - y) AS res")
-      .selectExpr("vec_id", s"${permuteExpr(perm, "res")} AS res")
-      .selectExpr("vec_id", s"posexplode(array($resSlices)) AS (m, sub)")
-      // re-index seed ids to codes 0..PqK-1: pcode packs 4-bit cells
-      .selectExpr("m", s"vec_id - $nc AS p_id", "sub AS p_sub")
-  }
-
-  /** Reorder an array column by a 0-based source-index permutation —
-    * identity when `perm` is empty. The OPQ rotation as an expression
-    * (a permutation IS an orthogonal matrix, so norms are untouched).
-    */
-  private def permuteExpr(perm: Seq[Int], col: String): String =
-    if (perm.isEmpty) col
-    else perm.map(i => s"element_at($col, ${i + 1})")
-      .mkString("array(", ", ", ")")
-
-  /** Residual-encode `vecs` (vec_id, emb, nrm, c_id): nearest residual
-    * sub-code per (vector, subspace) against the vector's OWN residual
-    * (emb − its list centroid) — the [[pqEncode]] argmin over centered
-    * data; packing identical (pcode = Σ code_m·16^m).
-    */
-  private def pqEncodeRes(vecs: DataFrame, cent: DataFrame,
-      pqcr: DataFrame, perm: Seq[Int] = Nil): DataFrame = {
-    val resSlices = (0 until PqM)
-      .map(m => s"slice(res, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    val caseM = (0 until PqM)
-      .map(m => s"WHEN $m THEN ${1L << (4 * m)}L").mkString("CASE m ", " ", " END")
-    vecs.join(broadcast(cent.select("c_id", "c_emb")), "c_id")
-      .selectExpr("vec_id", "nrm", "c_id",
-        "zip_with(emb, c_emb, (x, y) -> x - y) AS res")
-      .selectExpr("vec_id", "nrm", "c_id",
-        s"${permuteExpr(perm, "res")} AS res")
-      .selectExpr("vec_id", "nrm", "c_id",
-        s"posexplode(array($resSlices)) AS (m, sub)")
-      .join(broadcast(pqcr), "m")
-      .selectExpr("vec_id", "nrm", "c_id", "m", "p_id",
-        s"""round(graft_dot(sub, sub) - 2 * graft_dot(sub, p_sub)
-           |  + graft_dot(p_sub, p_sub), 6) AS d2""".stripMargin)
-      .withColumn("prk", expr(
-        "row_number() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, p_id ASC)"))
-      .where("prk = 1")
-      .groupBy("vec_id", "nrm", "c_id")
-      .agg(expr(s"CAST(sum(p_id * ($caseM)) AS INT)").as("pcode"))
-  }
-
-  /** Build-once residual-coded IVFPQ: same 2-byte (vec_id, nrm, pcode)
-    * list layout, coarse codebook and manifest as [[ensureIvfPqIndex]],
-    * but codes quantize residuals — so an ADC score reconstructs
-    * `q·vec ≈ q·centroid + q·residual-codes` with the EXACT stored norm
-    * in the denominator, instead of approximating both the dot and the
-    * norm from raw-vector codes. Measured on this corpus (wave-0
-    * top-5 vs exact truth): refine-for-refine the residual layout wins
-    * — 68%/64% at ×1 vs the raw layout's 60%/48% — and it reaches the
-    * family's 72% recall gate at ×[[PqResRefine]]=2, HALF the exact
-    * re-rank IO of the raw layout's ×[[PqIdxRefine]]=4. That is why
-    * FAISS makes residual encoding the default.
-    */
-  def ensureIvfPqResIndex(spark: SparkSession, dir: String): String = {
-    val path = ivfPqResIndexPath(spark, dir)
-    val (fs, root) = hadoopFs(spark, path)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$CodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$PqCodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ListsManifestFile))
-    IndexCommit.ensure(fs, root)(committed) { tmp =>
-      val emb = embDouble(spark, dir)
-      val nc = nCentroids(spark, dir)
-      val cent = coarseCent(emb, nc)
-      val pqcr = pqCodebookRes(emb, cent, nc)
-      pqEncodeRes(
-        nearestLists(emb.where(s"vec_id % $IvfSplitMod <> 0"), cent,
-            "vec_id", 1)
-          .select("vec_id", "emb", "nrm", "c_id"), cent, pqcr)
-        .repartition(col("c_id"))
-        .sortWithinPartitions("c_id", "vec_id")
-        .write.mode("overwrite").partitionBy("c_id").parquet(tmp.toString)
-      cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
-      pqcr.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$PqCodebookDir")
-      val lists = fs.listStatus(tmp).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-        .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-      listsManifestWrite(spark, tmp.toString, lists)
-    }
-    path
-  }
-
-  /** Residual-ADC probe: the LUT holds `q_m · p_sub_m` partial dots of
-    * the RAW query against the residual codebook, each probed (q, list)
-    * pair carries one quantized `q · centroid` coarse term, and the ADC
-    * score divides by the STORED exact vector norm —
-    * `(qc + Σ LUT) / (‖q‖·‖v‖)` — so the only inexactness left is the
-    * residual quantization itself. Same manifest-pruned 2-byte list IO
-    * and exact re-rank as the raw-code probe.
-    */
-  def incrementalIvfPqResProbe(spark: SparkSession, queries: DataFrame,
-      cent: DataFrame, pqcr: DataFrame, indexPath: String, floats: DataFrame,
-      rerank: Long, k: Int = TopK, perm: Seq[Int] = Nil): DataFrame = {
-    val probes = nearestLists(queries, cent, "q_id", NProbe)
-      .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    val manifest = listsManifestRead(spark, indexPath) // fails loud if absent
-    val touchedDirs = probes.select("c_id").distinct()
-      .collect() // ≤ Q × NProbe list ids: metadata-scale
-      .map(_.getLong(0))
-      .filter(manifest.contains)
-      .sorted.map(c => s"$indexPath/c_id=$c")
-    val idx =
-      if (touchedDirs.isEmpty) spark.read.parquet(indexPath).limit(0)
-      else spark.read.option("basePath", indexPath)
-        .parquet(touchedDirs.toIndexedSeq: _*)
-    // q·Pᵀ(P·res-codes) = (P·q)·(P·res)-codes: the query rides through
-    // the same rotation the codes were trained under (identity when the
-    // index carries no OPQ permutation)
-    val subSlices = (0 until PqM)
-      .map(m => s"slice(pemb, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    val lut = queries
-      .selectExpr("vec_id", "nrm", s"${permuteExpr(perm, "emb")} AS pemb")
-      .selectExpr("vec_id AS q_id", "nrm AS q_nrm",
-        s"posexplode(array($subSlices)) AS (m, sub)")
-      .join(broadcast(pqcr), "m")
-      .selectExpr("q_id", "q_nrm", "m", "p_id AS code",
-        s"CAST(floor(graft_dot(sub, p_sub) * $QScale.0 + 0.5) AS BIGINT) AS pq")
-    // one quantized coarse term per probed (query, list) pair
-    val qc = probes.join(broadcast(cent.select("c_id", "c_emb")), "c_id")
-      .selectExpr("q_id", "c_id",
-        s"CAST(floor(graft_dot(q_emb, c_emb) * $QScale.0 + 0.5) AS BIGINT) AS qcq")
-    val unpack = (0 until PqM)
-      .map(m => s"CAST((pcode DIV ${1L << (4 * m)}) % $PqK AS BIGINT)")
-      .mkString(", ")
-    val adc = idx.join(broadcast(qc), "c_id")
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id", "nrm", "qcq",
-        s"posexplode(array($unpack)) AS (m, code)")
-      .join(broadcast(lut), Seq("q_id", "m", "code"))
-      .groupBy("q_id", "vec_id")
-      .agg(max("q_nrm").as("q_nrm"), max("nrm").as("nrm"),
-        max("qcq").as("qcq"), sum("pq").as("adcq"))
-      .selectExpr("q_id", "vec_id",
-        s"""round((CAST(qcq + adcq AS DOUBLE) / $QScale.0)
-           |  / (q_nrm * nrm), 6) AS adc_sim""".stripMargin)
-      .withColumn("ark", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY adc_sim DESC, vec_id ASC)"))
-      .where(s"ark <= $rerank")
-    val qv = queries.selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    adc.select("q_id", "vec_id")
-      .join(floats.select("vec_id", "emb", "nrm"), "vec_id")
-      .join(broadcast(qv), "q_id")
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $k")
-      .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
-  }
-
   /** Refine multiplier of the residual probe: ×2 reaches the family's
     * 72% recall gate (measured 72%/72% at sf0.01/sf0.1) — half the
     * raw-code layout's ×[[PqIdxRefine]]; the spec gates this.
     */
   final val PqResRefine = 2
 
-  /** Incremental ANN over the residual-coded index, probe leg. */
-  def incrementalIvfPqRes(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfPqResIndex(spark, dir)
-    val emb = embDouble(spark, dir)
-    incrementalIvfPqResProbe(spark, waveQueries(emb, 0),
-      indexCodebook(spark, path), indexPqCodebook(spark, path), path, emb,
-      PqResRefine * rerankK(corpusStats(spark, dir)._1))
-  }
-
-  /** In-place append to the residual-coded index — family parity with
-    * [[incrementalIvfPqAppend]]: wave vectors are assigned by the
-    * index's persisted coarse codebook and residual-encoded with its
-    * persisted (FROZEN) residual sub-codebook, then upserted into only
-    * the touched `c_id=` dirs; wave-2 queries probe the augmented code
-    * lists. O(batch + touched lists), independent of index size.
+  /** DuckDB CTE chain replaying the PQ-index probe from scratch up to the
+    * ADC table: coarse assignment of the `histPred` content, PQ encode
+    * (codes as (vec_id, m, c_id) rows — the 16-bit packing is Spark-side
+    * storage the unpack inverts exactly), the `qPred` queries' probes and
+    * LUT.
     */
-  def incrementalIvfPqResAppend(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfPqResIndex(spark, dir)
-    val aug = graft.TempDirs.scoped("ivfpqres-incr") + "/index"
-    graft.TempDirs.copyTree(spark, path, aug) // hermeticity tax only
-    val cent = indexCodebook(spark, aug)
-    val pqcr = indexPqCodebook(spark, aug)
-    val emb = embDouble(spark, dir)
-    val w = 2 * IvfSplitMod
-    val wave1 = pqEncodeRes(
-      nearestLists(emb.where(s"vec_id % $w = 0"), cent, "vec_id", 1)
-        .select("vec_id", "emb", "nrm", "c_id"), cent, pqcr)
-      .persist() // read twice (touched set, merge+write) — one compute
-    val touched = wave1.select("c_id").distinct()
-      .collect().map(_.getLong(0)).toSet // ≤ |wave| list ids
-    graft.streaming.Sinks.partitionedUpsertBatch(wave1.toDF(), aug,
-      partitionCols = Seq("c_id"), keyCols = Seq("vec_id"),
-      versionCols = Seq("vec_id"), sortCols = Seq("vec_id"))
-    listsManifestWrite(spark, aug, listsManifestRead(spark, aug) ++ touched)
-    val out = incrementalIvfPqResProbe(spark, waveQueries(emb, IvfSplitMod),
-      indexCodebook(spark, aug), pqcr, aug, emb,
-      PqResRefine * rerankK(corpusStats(spark, dir)._1))
-    wave1.unpersist() // probe reads the written files, not the plan
-    out
-  }
-
-  // ---------------- OPQ: learned-rotation residual-coded IVFPQ
-
-  /** Path of the OPQ index (layout-generation tag, like `_pqr2`). */
-  def ivfPqOpqIndexPath(spark: SparkSession, dir: String): String =
-    ivfIndexPath(spark, dir) + "_opq1"
-
-  /** OPQ permutation subdir inside the index (the learned rotation — a
-    * training artifact that must travel WITH the codes, like the
-    * codebooks: probing with a mismatched rotation silently returns
-    * wrong neighbors).
-    */
-  val OpqPermDir = "_opqperm"
-
-  /** The learned OPQ rotation, restricted to PERMUTATION matrices — Ge
-    * et al. 2013's parametric allocation initialization: OPQ's job is an
-    * orthogonal transform R making the PqM subspaces carry BALANCED
-    * information so each 4-bit sub-quantizer works equally hard; a
-    * dimension permutation IS orthogonal (norms untouched, exact), it is
-    * learnable corpus-driven with one combinable aggregation, and —
-    * unlike the SVD alternation of full OPQ — it is bit-replayable in
-    * the DuckDB oracle. Training statistic: per-dimension RESIDUAL
-    * energy e_i = Σ_v ⌊res_i²·2²⁰+0.5⌋ (quantized-integer sums — exact
-    * in any order; ONE 64-column row collected, parameter-server scale);
-    * dims are ranked by energy (desc, dim asc) and dealt boustrophedon
-    * across the [[PqM]] subspaces — the heaviest dims spread out, each
-    * subspace's total energy near-balanced. Returns target→source (0-
-    * based): permuted[j] = res[perm(j)].
-    */
-  private[pipeline] def opqPermutation(hist: DataFrame,
-      cent: DataFrame): Seq[Int] = {
-    val ranked = opqEnergies(hist, cent).zipWithIndex
-      .sortBy { case (e, d) => (-e, d) }
-    val assign = ranked.zipWithIndex.map { case ((_, dim), r) =>
-      val s0 = r % (2 * PqM)
-      (if (s0 < PqM) s0 else 2 * PqM - 1 - s0, r, dim)
-    }
-    assign.sortBy(t => (t._1, t._2)).map(_._3)
-  }
-
-  /** The OPQ training statistic: per-dimension quantized residual energy
-    * of `hist` against `cent` — exposed so [[graft.pipeline.OpqSpec]] can
-    * independently re-derive the allocation and measure its balance.
-    */
-  private[pipeline] def opqEnergies(hist: DataFrame,
-      cent: DataFrame): Seq[Long] = {
-    val res = assignOne(hist, cent, "vec_id", "c_id", "c_emb", "c_nrm",
-        "csim", "crk")
-      .join(broadcast(cent.select("c_id", "c_emb")), "c_id")
-      .selectExpr("zip_with(emb, c_emb, (x, y) -> x - y) AS res")
-    val sums = (0 until Dim).map(i => sum(expr(
-      s"CAST(floor(element_at(res, ${i + 1}) * element_at(res, ${i + 1})" +
-        s" * $QScale.0 + 0.5) AS BIGINT)")).as(s"e$i"))
-    val row = res.agg(sums.head, sums.tail: _*).head() // ONE 64-long row
-    (0 until Dim).map(row.getLong)
-  }
-
-  /** The persisted rotation of a built OPQ index. Fails loud when
-    * absent (the [[indexCodebook]] contract).
-    */
-  def indexOpqPerm(spark: SparkSession, indexPath: String): Seq[Int] = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(
-        s"$indexPath/$OpqPermDir/_SUCCESS")))
-      throw new IllegalStateException(
-        s"no $OpqPermDir at $indexPath — index was not built by " +
-          "ensureIvfPqOpqIndex; rebuild the index")
-    spark.read.parquet(s"$indexPath/$OpqPermDir")
-      .orderBy("pos").collect().map(_.getInt(1)).toSeq
-  }
-
-  /** Build-once OPQ-rotated residual-coded IVFPQ: identical 2-byte list
-    * layout, coarse codebook and manifest as [[ensureIvfPqResIndex]],
-    * but residuals (codebook seeds AND stored vectors) pass through the
-    * learned permutation before sub-slicing — the standard recall
-    * upgrade at the SAME byte budget (FAISS `OPQMatrix` + IndexIVFPQ).
-    * The rotation persists in [[OpqPermDir]] and every probe reads it
-    * back from the index.
-    */
-  def ensureIvfPqOpqIndex(spark: SparkSession, dir: String): String = {
-    val path = ivfPqOpqIndexPath(spark, dir)
-    val (fs, root) = hadoopFs(spark, path)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$CodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$PqCodebookDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$OpqPermDir/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ListsManifestFile))
-    IndexCommit.ensure(fs, root)(committed) { tmp =>
-      import spark.implicits._
-      val emb = embDouble(spark, dir)
-      val nc = nCentroids(spark, dir)
-      val cent = coarseCent(emb, nc)
-      val hist = emb.where(s"vec_id % $IvfSplitMod <> 0")
-      val perm = opqPermutation(hist, cent)
-      val pqcr = pqCodebookRes(emb, cent, nc, perm)
-      pqEncodeRes(
-        nearestLists(hist, cent, "vec_id", 1)
-          .select("vec_id", "emb", "nrm", "c_id"), cent, pqcr, perm)
-        .repartition(col("c_id"))
-        .sortWithinPartitions("c_id", "vec_id")
-        .write.mode("overwrite").partitionBy("c_id").parquet(tmp.toString)
-      cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
-      pqcr.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$PqCodebookDir")
-      perm.zipWithIndex.map { case (src, pos) => (pos, src) }
-        .toDF("pos", "src").coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/$OpqPermDir")
-      val lists = fs.listStatus(tmp).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-        .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-      listsManifestWrite(spark, tmp.toString, lists)
-    }
-    path
-  }
-
-  /** Incremental ANN over the OPQ index, probe leg — the residual probe
-    * with the index's persisted rotation applied to the query side, at
-    * the residual family's refine (×[[PqResRefine]]: equal list bytes,
-    * equal re-rank IO — the apples-to-apples OPQ comparison).
-    */
-  def incrementalIvfPqOpq(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfPqOpqIndex(spark, dir)
-    val emb = embDouble(spark, dir)
-    incrementalIvfPqResProbe(spark, waveQueries(emb, 0),
-      indexCodebook(spark, path), indexPqCodebook(spark, path), path, emb,
-      PqResRefine * rerankK(corpusStats(spark, dir)._1),
-      perm = indexOpqPerm(spark, path))
-  }
-
-  /** Stream-static PQ probe — the code-layout twin of
-    * [[streamProbeIvfSq8]]: incoming vectors pick their [[NProbe]] probe
-    * lists via the broadcast codebook array, then ONE stream-static equi
-    * join on list id against the persisted CODE lists; each candidate
-    * row ADC-scores STATELESSLY from its unpacked 4-bit codes and a
-    * second broadcast 1-row array of the M×K PQ cells (`element_at` by
-    * m·K+code — the lookup table as an expression, no per-query LUT
-    * frame, no aggregation, no state store). Emitted sims are the ADC
-    * ROUTING scores — exactly what a live path computes without a rank
-    * window; exact re-rank is the downstream batch consumer's job, as in
-    * [[incrementalIvfPqProbe]]. Static-side list IO is the 2-byte-code
-    * layout (~30× less than SQ8's quantized bytes + scales).
-    */
-  def streamProbeIvfPq(incoming: DataFrame, cent: DataFrame,
-      pqc: DataFrame, idx: DataFrame): DataFrame = {
-    val centArr = cent.agg(array_sort(collect_list(
-      struct(col("c_id"), col("c_emb"), col("c_nrm")))).as("cents"))
-    // the PQ codebook as ONE ordered array: cell m·K+p_id at index
-    // m·K+p_id+1 (struct sort is lexicographic and idx is unique)
-    val pqArr = pqc.agg(array_sort(collect_list(
-      struct(expr(s"m * $PqK + p_id").as("idx"), col("p_sub"),
-        col("pcq")))).as("pq"))
-    def cell(m: Int) =
-      s"element_at(pq, ${m * PqK} + CAST((pcode DIV ${1L << (4 * m)}) % $PqK AS INT) + 1)"
-    val adcq = (0 until PqM).map { m =>
-      s"""CAST(floor(graft_dot(
-         |  slice(q_emb, ${m * PqSubDim + 1}, $PqSubDim),
-         |  ${cell(m)}.p_sub) * $QScale.0 + 0.5) AS BIGINT)""".stripMargin
-    }.mkString(" + ")
-    val rq = (0 until PqM).map(m => s"${cell(m)}.pcq").mkString(" + ")
-    incoming
-      .crossJoin(broadcast(centArr))
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        explode(expr(
-          s"""slice(array_sort(transform(cents, c -> named_struct(
-             |  'negsim', CAST(0 AS DOUBLE)
-             |    - round(graft_dot(emb, c.c_emb) / (nrm * c.c_nrm), 6),
-             |  'c_id', c.c_id))), 1, $NProbe)""".stripMargin)).as("probe"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        col("probe.c_id").as("c_id"))
-      .crossJoin(broadcast(pqArr))
-      .join(idx.selectExpr("CAST(c_id AS BIGINT) AS c_id", "vec_id",
-        "pcode"), Seq("c_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"""round((CAST($adcq AS DOUBLE) / $QScale.0)
-           |  / (q_nrm * sqrt(CAST($rq AS DOUBLE) / $QScale.0)), 6)
-           |  AS asim""".stripMargin)
-  }
-
-  /** The PQ streaming probe as a batch-checkable entry (the
-    * [[streamIncrementalIvfSq8]] convention): the whole incoming wave
-    * probed against the persisted code lists through the stream-capable
-    * plan; `IncrementalIvfSpec` proves the same core produces identical
-    * rows from a real MemoryStream with zero state stores.
-    */
-  def streamIncrementalIvfPq(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val path = ensureIvfPqIndex(spark, dir)
-    val emb = embDouble(spark, dir)
-    streamProbeIvfPq(emb.where(s"vec_id % $IvfSplitMod = 0"),
-      indexCodebook(spark, path), indexPqCodebook(spark, path),
-      spark.read.parquet(path))
-      .orderBy("q_id", "vec_id")
-  }
-
-  val streamIncrementalIvfPqSql: String = {
-    val subSelects = (0 until PqM)
-      .map(m => s"SELECT vec_id, nrm, $m AS m, emb[${m * PqSubDim + 1}:${(m + 1) * PqSubDim}] AS sub FROM emb")
-      .mkString("\n  UNION ALL ")
-    def dotSub(a: String, b: String): String =
-      s"list_sum(list_transform(range(1, ${PqSubDim + 1}), i -> $a[i] * $b[i]))"
-    def normSq(a: String): String =
-      s"list_sum(list_transform($a, v -> v * v))"
-    s"""WITH $embCte,
-       |gcent AS (SELECT vec_id AS g_id, emb AS g_emb, nrm AS g_nrm FROM emb
-       |          WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb
-       |         WHERE vec_id % $IvfSplitMod <> 0),
-       |lists AS (
-       |  SELECT vec_id, g_id FROM (
-       |    SELECT h.vec_id, g.g_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "g.g_emb", "h.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM hist h, gcent g)
-       |  WHERE grk = 1),
+  private def ivfPqCtes(histPred: String, qPred: String, qNrm: Boolean): String =
+    s"""${ivfListsCtes(histPred, "g")},
        |subs AS (
-       |  $subSelects),
-       |pcent AS (SELECT m, vec_id AS c_id, sub AS c_sub,
-       |                 floor(${normSq("sub")} * $QScale.0 + 0.5)::BIGINT AS cq
-       |          FROM subs WHERE vec_id < $PqK),
-       |codes AS (
-       |  SELECT vec_id, m, c_id FROM (
-       |    SELECT s.vec_id, s.m, c.c_id,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |             round(${normSq("s.sub")} - 2 * ${dotSub("s.sub", "c.c_sub")}
-       |               + ${normSq("c.c_sub")}, 6) ASC, c.c_id ASC) AS crk
-       |    FROM subs s
-       |    JOIN hist h ON h.vec_id = s.vec_id
-       |    JOIN pcent c USING (m))
-       |  WHERE crk = 1),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id % $IvfSplitMod = 0),
-       |probes AS (
-       |  SELECT q_id, g_id FROM (
-       |    SELECT q.q_id, g.g_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "g.g_emb", "q.q_nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM q, gcent g)
-       |  WHERE grk <= $NProbe),
-       |lut AS (
-       |  SELECT s.vec_id AS q_id, s.m, c.c_id,
-       |         floor(${dotSub("s.sub", "c.c_sub")} * $QScale.0 + 0.5)::BIGINT AS pq,
-       |         c.cq
-       |  FROM subs s
-       |  JOIN q ON q.q_id = s.vec_id
-       |  JOIN pcent c USING (m)),
+       |  ${subSelects()}),
+       |${pqCentCte("pcent", "subs")},
+       |${codesCte("subs s\n    JOIN hist h ON h.vec_id = s.vec_id\n    JOIN pcent c USING (m)")},
+       |${qCte(qPred)},
+       |${probesCte("g")},
+       |${lutCte("subs s\n  JOIN q ON q.q_id = s.vec_id\n  JOIN pcent c USING (m)", qNrm)}""".stripMargin
+
+  val streamIncrementalIvfPqSql: String =
+    s"""WITH ${ivfPqCtes(s"vec_id % $IvfSplitMod <> 0", s"vec_id % $IvfSplitMod = 0", qNrm = false)},
        |adcs AS (
        |  SELECT n.q_id, n.vec_id,
        |         sum(l.pq)::BIGINT AS adcq, sum(l.cq)::BIGINT AS rq
@@ -3535,70 +1946,14 @@ object Similarity {
        |         / (q.q_nrm * sqrt(a.rq::DOUBLE / $QScale.0)), 6) AS asim
        |FROM adcs a JOIN q ON q.q_id = a.q_id
        |ORDER BY a.q_id, a.vec_id""".stripMargin
-  }
 
-  /** DuckDB CTE chain replaying the PQ-index probe from scratch (DuckDB
-    * has no persisted index, so `histPred` names the index CONTENT):
-    * coarse assignment, PQ encode (codes as (vec_id, m, c_id) rows — the
-    * 16-bit packing is Spark-side storage the unpack inverts exactly),
-    * ADC over the probed lists for the wave-`rem` query set, adaptive
-    * cut, exact re-rank. Ends in `ranked(q_id, vec_id, sim, rk)` plus
-    * `hist`/`q` for callers that need them (the recall gate).
+  /** The PQ-index probe replay: ADC over the probed lists, adaptive
+    * ×[[PqIdxRefine]] cut, exact re-rank. Ends in `ranked(q_id, vec_id,
+    * sim, rk)` plus `hist`/`q` for callers that need them (the recall
+    * gate).
     */
-  private def ivfPqIncrCtes(histPred: String, rem: Int): String = {
-    val w = 2 * IvfSplitMod
-    val subSelects = (0 until PqM)
-      .map(m => s"SELECT vec_id, nrm, $m AS m, emb[${m * PqSubDim + 1}:${(m + 1) * PqSubDim}] AS sub FROM emb")
-      .mkString("\n  UNION ALL ")
-    def dotSub(a: String, b: String): String =
-      s"list_sum(list_transform(range(1, ${PqSubDim + 1}), i -> $a[i] * $b[i]))"
-    def normSq(a: String): String =
-      s"list_sum(list_transform($a, v -> v * v))"
-    s"""$embCte,
-       |gcent AS (SELECT vec_id AS g_id, emb AS g_emb, nrm AS g_nrm FROM emb
-       |          WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb WHERE $histPred),
-       |lists AS (
-       |  SELECT vec_id, g_id FROM (
-       |    SELECT h.vec_id, g.g_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "g.g_emb", "h.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM hist h, gcent g)
-       |  WHERE grk = 1),
-       |subs AS (
-       |  $subSelects),
-       |pcent AS (SELECT m, vec_id AS c_id, sub AS c_sub,
-       |                 floor(${normSq("sub")} * $QScale.0 + 0.5)::BIGINT AS cq
-       |          FROM subs WHERE vec_id < $PqK),
-       |codes AS (
-       |  SELECT vec_id, m, c_id FROM (
-       |    SELECT s.vec_id, s.m, c.c_id,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |             round(${normSq("s.sub")} - 2 * ${dotSub("s.sub", "c.c_sub")}
-       |               + ${normSq("c.c_sub")}, 6) ASC, c.c_id ASC) AS crk
-       |    FROM subs s
-       |    JOIN hist h ON h.vec_id = s.vec_id
-       |    JOIN pcent c USING (m))
-       |  WHERE crk = 1),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id % $w = $rem
-       |        AND vec_id < ${w.toLong * QuerySetSize + rem}),
-       |probes AS (
-       |  SELECT q_id, g_id FROM (
-       |    SELECT q.q_id, g.g_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "g.g_emb", "q.q_nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM q, gcent g)
-       |  WHERE grk <= $NProbe),
-       |lut AS (
-       |  SELECT s.vec_id AS q_id, s.nrm AS q_nrm, s.m, c.c_id,
-       |         floor(${dotSub("s.sub", "c.c_sub")} * $QScale.0 + 0.5)::BIGINT AS pq,
-       |         c.cq
-       |  FROM subs s
-       |  JOIN q ON q.q_id = s.vec_id
-       |  JOIN pcent c USING (m)),
+  private def ivfPqIncrCtes(histPred: String, rem: Int): String =
+    s"""${ivfPqCtes(histPred, wavePred(rem), qNrm = true)},
        |cand AS (
        |  SELECT p.q_id, l.vec_id
        |  FROM probes p JOIN lists l USING (g_id) WHERE l.vec_id <> p.q_id),
@@ -3609,180 +1964,27 @@ object Similarity {
        |  JOIN codes c ON c.vec_id = n.vec_id
        |  JOIN lut l ON l.q_id = n.q_id AND l.m = c.m AND l.c_id = c.c_id
        |  GROUP BY n.q_id, n.vec_id),
-       |cut AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id ORDER BY
-       |             round((adcq::DOUBLE / $QScale.0)
-       |               / (q_nrm * sqrt(rq::DOUBLE / $QScale.0)), 6) DESC,
-       |             vec_id ASC) AS ark
-       |    FROM adcs)
-       |  WHERE ark <= $PqIdxRefine
-       |    * greatest($RerankKMin, (SELECT count(*) // 1000 FROM emb))),
-       |reranked AS (
-       |  SELECT c.q_id, c.vec_id,
-       |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
-       |  FROM cut c
-       |  JOIN emb e ON e.vec_id = c.vec_id
-       |  JOIN q ON q.q_id = c.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM reranked)""".stripMargin
-  }
+       |${cutCte(adcSimSql, "adcs", s"$PqIdxRefine *")},
+       |${rerankedCte("q")},
+       |${rankedSql("reranked", select = false)}""".stripMargin
 
-  private def ivfPqIncrSql(histPred: String, rem: Int): String =
-    s"""WITH ${ivfPqIncrCtes(histPred, rem)}
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+  val incrementalIvfPqSql: String =
+    s"""WITH ${ivfPqIncrCtes(s"vec_id % $IvfSplitMod <> 0", 0)}
+       |$topKSelect""".stripMargin
+
+  val incrementalIvfPqAppendSql: String =
+    s"""WITH ${ivfPqIncrCtes(AppendContent, IvfSplitMod)}
+       |$topKSelect""".stripMargin
 
   /** From-scratch replay of the RESIDUAL-coded probe: coarse assignment,
     * residual codebook/encode (centered slices), raw-query LUT, the
     * per-(query, list) coarse term, stored-norm ADC, refine-×[[PqResRefine]]
-    * cut, exact re-rank.
+    * cut, exact re-rank. With `opq` the permutation is learned IN-QUERY —
+    * per-dim quantized residual energies, (energy DESC, dim ASC) ranking,
+    * boustrophedon deal — and applied to codebook seeds, stored vectors,
+    * and the query LUT slices alike.
     */
-  private def ivfPqResIncrSql(histPred: String, rem: Int): String = {
-    val w = 2 * IvfSplitMod
-    def dotSub(a: String, b: String): String =
-      s"list_sum(list_transform(range(1, ${PqSubDim + 1}), i -> $a[i] * $b[i]))"
-    def normSq(a: String): String =
-      s"list_sum(list_transform($a, v -> v * v))"
-    def dotFull(a: String, b: String): String =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> $a[i] * $b[i]))"
-    // residual slice m of vector e against its centroid g, per m
-    def resSubs(assignName: String, outName: String): String = (0 until PqM)
-      .map { m =>
-        val off = m * PqSubDim
-        s"""SELECT a.vec_id, e.nrm, $m AS m,
-           |       list_transform(range(1, ${PqSubDim + 1}),
-           |         i -> e.emb[$off + i] - g.g_emb[$off + i]) AS sub
-           |FROM $assignName a
-           |JOIN emb e ON e.vec_id = a.vec_id
-           |JOIN gcent g ON g.g_id = a.g_id""".stripMargin
-      }.mkString(s"$outName AS (\n", "\n  UNION ALL ", ")")
-    val qSubSelects = (0 until PqM)
-      .map(m => s"SELECT vec_id, nrm, $m AS m, emb[${m * PqSubDim + 1}:${(m + 1) * PqSubDim}] AS sub FROM emb")
-      .mkString("\n  UNION ALL ")
-    s"""WITH $embCte,
-       |gcent AS (SELECT vec_id AS g_id, emb AS g_emb, nrm AS g_nrm FROM emb
-       |          WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb WHERE $histPred),
-       |lists AS (
-       |  SELECT vec_id, g_id FROM (
-       |    SELECT h.vec_id, g.g_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "g.g_emb", "h.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM hist h, gcent g)
-       |  WHERE grk = 1),
-       |nc AS (SELECT count(*)::BIGINT AS n FROM gcent),
-       |cbassign AS (
-       |  SELECT vec_id, g_id FROM (
-       |    SELECT e.vec_id, g.g_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "g.g_emb", "e.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM emb e, gcent g
-       |    WHERE e.vec_id >= (SELECT n FROM nc)
-       |      AND e.vec_id < (SELECT n FROM nc) + $PqK)
-       |  WHERE grk = 1),
-       |${resSubs("cbassign", "rsubs_cb")},
-       |pcentr AS (SELECT m, vec_id - (SELECT n FROM nc) AS c_id, sub AS c_sub
-       |           FROM rsubs_cb),
-       |${resSubs("lists", "rsubs_h")},
-       |codes AS (
-       |  SELECT vec_id, m, c_id FROM (
-       |    SELECT s.vec_id, s.m, c.c_id,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |             round(${normSq("s.sub")} - 2 * ${dotSub("s.sub", "c.c_sub")}
-       |               + ${normSq("c.c_sub")}, 6) ASC, c.c_id ASC) AS crk
-       |    FROM rsubs_h s
-       |    JOIN pcentr c USING (m))
-       |  WHERE crk = 1),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id % $w = $rem
-       |        AND vec_id < ${w.toLong * QuerySetSize + rem}),
-       |qsubs AS (
-       |  $qSubSelects),
-       |probes AS (
-       |  SELECT q_id, g_id FROM (
-       |    SELECT q.q_id, g.g_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "g.g_emb", "q.q_nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM q, gcent g)
-       |  WHERE grk <= $NProbe),
-       |lut AS (
-       |  SELECT s.vec_id AS q_id, s.nrm AS q_nrm, s.m, c.c_id,
-       |         floor(${dotSub("s.sub", "c.c_sub")} * $QScale.0 + 0.5)::BIGINT AS pq
-       |  FROM qsubs s
-       |  JOIN q ON q.q_id = s.vec_id
-       |  JOIN pcentr c USING (m)),
-       |qc AS (
-       |  SELECT p.q_id, p.g_id,
-       |         floor(${dotFull("q.q_emb", "g.g_emb")} * $QScale.0 + 0.5)::BIGINT AS qcq
-       |  FROM probes p
-       |  JOIN q ON q.q_id = p.q_id
-       |  JOIN gcent g ON g.g_id = p.g_id),
-       |cand AS (
-       |  SELECT p.q_id, p.g_id, l.vec_id, h.nrm
-       |  FROM probes p
-       |  JOIN lists l USING (g_id)
-       |  JOIN hist h ON h.vec_id = l.vec_id
-       |  WHERE l.vec_id <> p.q_id),
-       |adcs AS (
-       |  SELECT n.q_id, n.vec_id, max(l.q_nrm) AS q_nrm, max(n.nrm) AS nrm,
-       |         max(qc.qcq) AS qcq, sum(l.pq)::BIGINT AS adcq
-       |  FROM cand n
-       |  JOIN codes c ON c.vec_id = n.vec_id
-       |  JOIN lut l ON l.q_id = n.q_id AND l.m = c.m AND l.c_id = c.c_id
-       |  JOIN qc ON qc.q_id = n.q_id AND qc.g_id = n.g_id
-       |  GROUP BY n.q_id, n.vec_id),
-       |cut AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id ORDER BY
-       |             round(((qcq + adcq)::DOUBLE / $QScale.0)
-       |               / (q_nrm * nrm), 6) DESC,
-       |             vec_id ASC) AS ark
-       |    FROM adcs)
-       |  WHERE ark <= $PqResRefine
-       |    * greatest($RerankKMin, (SELECT count(*) // 1000 FROM emb))),
-       |reranked AS (
-       |  SELECT c.q_id, c.vec_id,
-       |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
-       |  FROM cut c
-       |  JOIN emb e ON e.vec_id = c.vec_id
-       |  JOIN q ON q.q_id = c.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM reranked)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
-  }
-
-  val incrementalIvfPqResSql: String =
-    ivfPqResIncrSql(s"vec_id % $IvfSplitMod <> 0", 0)
-
-  val incrementalIvfPqResAppendSql: String = ivfPqResIncrSql(
-    s"vec_id % $IvfSplitMod <> 0 OR vec_id % ${2 * IvfSplitMod} = 0",
-    IvfSplitMod)
-
-  /** DuckDB replay of [[incrementalIvfPqOpq]]: the residual chain with
-    * the OPQ permutation learned IN-QUERY — per-dim quantized residual
-    * energies, (energy DESC, dim ASC) ranking, boustrophedon deal, and
-    * the permutation applied to codebook seeds, stored vectors, and the
-    * query LUT slices alike.
-    */
-  private def ivfPqOpqIncrSql(histPred: String, rem: Int): String = {
-    val w = 2 * IvfSplitMod
-    def dotSub(a: String, b: String): String =
-      s"list_sum(list_transform(range(1, ${PqSubDim + 1}), i -> $a[i] * $b[i]))"
-    def normSq(a: String): String =
-      s"list_sum(list_transform($a, v -> v * v))"
-    def dotFull(a: String, b: String): String =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> $a[i] * $b[i]))"
+  private def ivfPqResSql(histPred: String, rem: Int, opq: Boolean): String = {
     // full residual of the rows selected by assignName against their
     // centroid — feeds BOTH the energy statistic and the permuted slices
     def resFull(assignName: String, outName: String): String =
@@ -3793,98 +1995,66 @@ object Similarity {
          |  FROM $assignName a
          |  JOIN emb e ON e.vec_id = a.vec_id
          |  JOIN gcent g ON g.g_id = a.g_id)""".stripMargin
-    // permuted subspace m of a full residual: res[p[m·SubDim + i]]
-    def permSubs(fullName: String, outName: String): String = (0 until PqM)
-      .map { m =>
+    // residual subspace m of the rows of assignName: a slice of
+    // e − g, or with opq the permuted res[p[m·SubDim + i]]
+    def resSubs(assignName: String, outName: String): String = {
+      val full = s"rfull_${outName.stripPrefix("rsubs_")}"
+      val head = if (opq) s"${resFull(assignName, full)},\n" else ""
+      head + (0 until PqM).map { m =>
         val off = m * PqSubDim
-        s"""SELECT r.vec_id, r.nrm, $m AS m,
-           |       list_transform(range(1, ${PqSubDim + 1}),
-           |         i -> r.res[pt.p[$off + i]]) AS sub
-           |FROM $fullName r, permt pt""".stripMargin
+        if (opq)
+          s"""SELECT r.vec_id, r.nrm, $m AS m,
+             |       list_transform(range(1, ${PqSubDim + 1}),
+             |         i -> r.res[pt.p[$off + i]]) AS sub
+             |FROM $full r, permt pt""".stripMargin
+        else
+          s"""SELECT a.vec_id, e.nrm, $m AS m,
+             |       list_transform(range(1, ${PqSubDim + 1}),
+             |         i -> e.emb[$off + i] - g.g_emb[$off + i]) AS sub
+             |FROM $assignName a
+             |JOIN emb e ON e.vec_id = a.vec_id
+             |JOIN gcent g ON g.g_id = a.g_id""".stripMargin
       }.mkString(s"$outName AS (\n", "\n  UNION ALL ", ")")
-    val qSubSelects = (0 until PqM)
-      .map { m =>
+    }
+    val qSubSelects =
+      if (!opq) subSelects()
+      else (0 until PqM).map { m =>
         val off = m * PqSubDim
         s"""SELECT vec_id, nrm, $m AS m,
            |       list_transform(range(1, ${PqSubDim + 1}),
            |         i -> e.emb[pt.p[$off + i]]) AS sub
            |FROM emb e, permt pt""".stripMargin
       }.mkString("\n  UNION ALL ")
-    s"""WITH $embCte,
-       |gcent AS (SELECT vec_id AS g_id, emb AS g_emb, nrm AS g_nrm FROM emb
-       |          WHERE vec_id < $nCentroidsSqlExpr),
-       |hist AS (SELECT vec_id, emb, nrm FROM emb WHERE $histPred),
-       |lists AS (
-       |  SELECT vec_id, g_id FROM (
-       |    SELECT h.vec_id, g.g_id,
-       |           row_number() OVER (PARTITION BY h.vec_id ORDER BY
-       |             round(${cosineSql("h.emb", "g.g_emb", "h.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM hist h, gcent g)
-       |  WHERE grk = 1),
-       |permlists AS (
-       |  SELECT vec_id, g_id FROM (
-       |    SELECT e.vec_id, g.g_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "g.g_emb", "e.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM emb e, gcent g WHERE e.vec_id % $IvfSplitMod <> 0)
-       |  WHERE grk = 1),
-       |${resFull("permlists", "rfull_t")},
-       |ren AS (SELECT i, sum(floor(res[i] * res[i] * $QScale.0 + 0.5))::BIGINT AS en
-       |        FROM rfull_t, range(1, ${Dim + 1}) t(i) GROUP BY i),
-       |rrk AS (SELECT i, row_number() OVER (ORDER BY en DESC, i ASC) - 1 AS r
-       |        FROM ren),
-       |rasg AS (SELECT i, r,
-       |               CASE WHEN r % ${2 * PqM} < $PqM THEN r % ${2 * PqM}
-       |                    ELSE ${2 * PqM - 1} - (r % ${2 * PqM}) END AS sub
-       |        FROM rrk),
-       |permt AS MATERIALIZED (SELECT list(i ORDER BY sub, r) AS p FROM rasg),
-       |nc AS (SELECT count(*)::BIGINT AS n FROM gcent),
-       |cbassign AS (
-       |  SELECT vec_id, g_id FROM (
-       |    SELECT e.vec_id, g.g_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosineSql("e.emb", "g.g_emb", "e.nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM emb e, gcent g
-       |    WHERE e.vec_id >= (SELECT n FROM nc)
-       |      AND e.vec_id < (SELECT n FROM nc) + $PqK)
-       |  WHERE grk = 1),
-       |${resFull("cbassign", "rfull_cb")},
-       |${permSubs("rfull_cb", "rsubs_cb")},
+    val rotation =
+      if (!opq) ""
+      else s"""${nearestCte("permlists", "vec_id, g_id", "e.vec_id",
+                s"emb e, gcent g WHERE e.vec_id % $IvfSplitMod <> 0", "= 1", "e", p = "g")},
+         |${resFull("permlists", "rfull_t")},
+         |ren AS (SELECT i, sum(floor(res[i] * res[i] * $QScale.0 + 0.5))::BIGINT AS en
+         |        FROM rfull_t, range(1, ${Dim + 1}) t(i) GROUP BY i),
+         |rrk AS (SELECT i, row_number() OVER (ORDER BY en DESC, i ASC) - 1 AS r
+         |        FROM ren),
+         |rasg AS (SELECT i, r,
+         |               CASE WHEN r % ${2 * PqM} < $PqM THEN r % ${2 * PqM}
+         |                    ELSE ${2 * PqM - 1} - (r % ${2 * PqM}) END AS sub
+         |        FROM rrk),
+         |permt AS MATERIALIZED (SELECT list(i ORDER BY sub, r) AS p FROM rasg),
+         |""".stripMargin
+    s"""WITH ${ivfListsCtes(histPred, "g")},
+       |${rotation}nc AS (SELECT count(*)::BIGINT AS n FROM gcent),
+       |${nearestCte("cbassign", "vec_id, g_id", "e.vec_id",
+            s"emb e, gcent g\n WHERE e.vec_id >= (SELECT n FROM nc)\n AND e.vec_id < (SELECT n FROM nc) + $PqK",
+            "= 1", "e", p = "g")},
+       |${resSubs("cbassign", "rsubs_cb")},
        |pcentr AS (SELECT m, vec_id - (SELECT n FROM nc) AS c_id, sub AS c_sub
        |           FROM rsubs_cb),
-       |${resFull("lists", "rfull_h")},
-       |${permSubs("rfull_h", "rsubs_h")},
-       |codes AS (
-       |  SELECT vec_id, m, c_id FROM (
-       |    SELECT s.vec_id, s.m, c.c_id,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |             round(${normSq("s.sub")} - 2 * ${dotSub("s.sub", "c.c_sub")}
-       |               + ${normSq("c.c_sub")}, 6) ASC, c.c_id ASC) AS crk
-       |    FROM rsubs_h s
-       |    JOIN pcentr c USING (m))
-       |  WHERE crk = 1),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM emb
-       |      WHERE vec_id % $w = $rem
-       |        AND vec_id < ${w.toLong * QuerySetSize + rem}),
+       |${resSubs("lists", "rsubs_h")},
+       |${codesCte("rsubs_h s\n    JOIN pcentr c USING (m)")},
+       |${qCte(wavePred(rem))},
        |qsubs AS (
        |  $qSubSelects),
-       |probes AS (
-       |  SELECT q_id, g_id FROM (
-       |    SELECT q.q_id, g.g_id,
-       |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosineSql("q.q_emb", "g.g_emb", "q.q_nrm", "g.g_nrm")}, 6) DESC,
-       |             g.g_id) AS grk
-       |    FROM q, gcent g)
-       |  WHERE grk <= $NProbe),
-       |lut AS (
-       |  SELECT s.vec_id AS q_id, s.nrm AS q_nrm, s.m, c.c_id,
-       |         floor(${dotSub("s.sub", "c.c_sub")} * $QScale.0 + 0.5)::BIGINT AS pq
-       |  FROM qsubs s
-       |  JOIN q ON q.q_id = s.vec_id
-       |  JOIN pcentr c USING (m)),
+       |${probesCte("g")},
+       |${lutCte("qsubs s\n  JOIN q ON q.q_id = s.vec_id\n  JOIN pcentr c USING (m)", cq = false)},
        |qc AS (
        |  SELECT p.q_id, p.g_id,
        |         floor(${dotFull("q.q_emb", "g.g_emb")} * $QScale.0 + 0.5)::BIGINT AS qcq
@@ -3905,39 +2075,19 @@ object Similarity {
        |  JOIN lut l ON l.q_id = n.q_id AND l.m = c.m AND l.c_id = c.c_id
        |  JOIN qc ON qc.q_id = n.q_id AND qc.g_id = n.g_id
        |  GROUP BY n.q_id, n.vec_id),
-       |cut AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id ORDER BY
-       |             round(((qcq + adcq)::DOUBLE / $QScale.0)
-       |               / (q_nrm * nrm), 6) DESC,
-       |             vec_id ASC) AS ark
-       |    FROM adcs)
-       |  WHERE ark <= $PqResRefine
-       |    * greatest($RerankKMin, (SELECT count(*) // 1000 FROM emb))),
-       |reranked AS (
-       |  SELECT c.q_id, c.vec_id,
-       |         round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) AS sim
-       |  FROM cut c
-       |  JOIN emb e ON e.vec_id = c.vec_id
-       |  JOIN q ON q.q_id = c.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, sim,
-       |         row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS rk
-       |  FROM reranked)
-       |SELECT q_id, vec_id, sim, rk::BIGINT AS rk
-       |FROM ranked WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
+       |${cutCte(s"round(((qcq + adcq)::DOUBLE / $QScale.0)\n / (q_nrm * nrm), 6)", "adcs", s"$PqResRefine *")},
+       |${rerankedCte("q")},
+       |${rankedSql("reranked")}""".stripMargin
   }
 
+  val incrementalIvfPqResSql: String =
+    ivfPqResSql(s"vec_id % $IvfSplitMod <> 0", 0, opq = false)
+
+  val incrementalIvfPqResAppendSql: String =
+    ivfPqResSql(AppendContent, IvfSplitMod, opq = false)
+
   val incrementalIvfPqOpqSql: String =
-    ivfPqOpqIncrSql(s"vec_id % $IvfSplitMod <> 0", 0)
-
-  val incrementalIvfPqSql: String =
-    ivfPqIncrSql(s"vec_id % $IvfSplitMod <> 0", 0)
-
-  val incrementalIvfPqAppendSql: String = ivfPqIncrSql(
-    s"vec_id % $IvfSplitMod <> 0 OR vec_id % ${2 * IvfSplitMod} = 0",
-    IvfSplitMod)
+    ivfPqResSql(s"vec_id % $IvfSplitMod <> 0", 0, opq = true)
 
   /** Recall floor (percent) of the persisted PQ layout — the in-plan
     * ivfpq gate's threshold ([[RecallGatePct]]): the stored-code layout
@@ -3949,9 +2099,9 @@ object Similarity {
   /** Retrieval-quality gate for the PERSISTED PQ layout, apples to
     * apples: truth = exact top-[[TopK]] of the wave-1 queries over the
     * INDEX CONTENT (the historical corpus — the only population the
-    * index can return), hits = the [[incrementalIvfPq]] probe's
-    * intersection with that truth, thresholded at [[IvfPqIdxRecallPct]].
-    * Exact integers + a boolean, hash-oracled like [[recallGate]].
+    * index can return), hits = the persisted PQ probe's intersection with
+    * that truth, thresholded at [[IvfPqIdxRecallPct]]. Exact integers + a
+    * boolean, hash-oracled like [[recallGate]].
     */
   def ivfPqIdxRecallGate(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
@@ -3964,7 +2114,7 @@ object Similarity {
       .withColumn("rk", expr(
         "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
       .where(s"rk <= $TopK").select("q_id", "vec_id")
-    val hits = incrementalIvfPq(spark, dir).select("q_id", "vec_id")
+    val hits = IvfIndex.search(spark, dir, IvfIndex.Pq).select("q_id", "vec_id")
       .join(bf, Seq("q_id", "vec_id"))
       .agg(count(lit(1)).as("hits"))
     val truth = bf.agg(count(lit(1)).as("truth"))
@@ -4079,13 +2229,11 @@ object Similarity {
       .selectExpr("q_id", "vec_id",
         s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
       .cache()
-    val cent = emb.where(s"vec_id < $nc")
-      .selectExpr("vec_id AS c_id", "emb AS c_emb", "nrm AS c_nrm")
+    val cent = coarseCent(emb, nc)
     val assigned = nearestLists(emb, cent, "vec_id", 1)
       .select("vec_id", "emb", "nrm", "c_id")
-    val probes = nearestLists(emb.where(s"vec_id < $QuerySetSize"), cent,
-        "q_id", NProbe)
-      .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
+    val qv = emb.where(s"vec_id < $QuerySetSize")
+    val probes = IvfIndex.probesOf(qv, cent)
     val ivf = topk(probes.join(assigned, "c_id")
       .where(col("vec_id") =!= col("q_id"))
       .selectExpr("q_id", "vec_id",
@@ -4094,23 +2242,16 @@ object Similarity {
     // the same assignment, integer-dot probe, adaptive exact re-rank —
     // recall-at-scale of the quantized index is a gate too, not only the
     // float layout's (round-13, completing verdict item 4's evidence)
-    val sq8Lists = assigned
-      .selectExpr("vec_id", "nrm", "c_id",
-        "127.0 / greatest(array_max(transform(emb, y -> abs(y))), 1e-300) AS s", "emb")
-      .selectExpr("vec_id", "nrm", "c_id", "s",
-        "graft_sq8_pack(emb, s) AS qb")
-    val sq8 = sq8ProbeCore(sq8Lists, sq8Queries(probes), emb,
-        rerankK(corpusStats(spark, dir)._1 * X10Copies), TopK)
-      .select("q_id", "vec_id")
+    val rerank = rerankK(corpusStats(spark, dir)._1 * X10Copies)
+    def layoutTopK(layout: IvfIndex.Layout, m: IvfIndex.Model): DataFrame =
+      IvfIndex.topK(layout, layout.encode(assigned, m), probes, qv, m, emb,
+        rerank).select("q_id", "vec_id")
+    val sq8 = layoutTopK(IvfIndex.Sq8, IvfIndex.Model(cent))
     // the PQ-coded layout at the same ×10 scale: codes over the same
     // assignment, ADC probe, ×PqIdxRefine adaptive exact re-rank —
     // recall-at-scale is now a hash-checked gate for ALL THREE list
     // layouts (round-14, completing the storage-ladder evidence)
-    val pqc10 = pqCodebook(emb)
-    val pq = pqProbeCore(pqEncode(assigned, pqc10),
-        emb.where(s"vec_id < $QuerySetSize"), probes, pqc10, emb,
-        PqIdxRefine * rerankK(corpusStats(spark, dir)._1 * X10Copies), TopK)
-      .select("q_id", "vec_id")
+    val pq = layoutTopK(IvfIndex.Pq, IvfIndex.Pq.train(emb, cent, nc))
     val truth = bf.agg(count(lit(1)).as("truth"))
     def gateRow(hits: DataFrame, name: String): DataFrame = hits
       .join(bf, Seq("q_id", "vec_id"))
@@ -4125,110 +2266,65 @@ object Similarity {
   }
 
   val recallGateX10Sql: String = {
-    def cosX(a: String, b: String, na: String, nb: String) =
-      cosineSql(a, b, na, nb)
     val ncSql = centroidsOverride.map(_.toString).getOrElse(
       s"greatest($NCentroidsMin, least($NCentroidsMax, " +
         s"(SELECT count(*) // $ListTarget FROM embx)))")
+    // exact re-rank of a cut's candidates to top-k (the recall-gate form)
+    def exactTopK(name: String, cut: String): String =
+      s"""$name AS (
+         |  SELECT q_id, vec_id FROM (
+         |    SELECT c.q_id, c.vec_id,
+         |           row_number() OVER (PARTITION BY c.q_id ORDER BY
+         |             round(${cosineSql("qx.q_emb", "e.emb", "qx.q_nrm", "e.nrm")}, 6) DESC,
+         |             c.vec_id ASC) AS rk
+         |    FROM $cut c
+         |    JOIN embx e ON e.vec_id = c.vec_id
+         |    JOIN q qx ON qx.q_id = c.q_id)
+         |  WHERE rk <= $TopK)""".stripMargin
+    def gateRow(method: String, h: String): String =
+      s"""SELECT '$method' AS method, $h.hits, t.truth,
+         |         $RecallGateX10Pct::BIGINT AS thr_pct,
+         |         $h.hits * 100 >= $RecallGateX10Pct * t.truth AS ok
+         |  FROM $h CROSS JOIN t""".stripMargin
     s"""WITH $emb10Cte,
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM embx
-       |      WHERE vec_id < $QuerySetSize),
+       |${qCte(s"vec_id < $QuerySetSize", "embx")},
        |bf AS (
        |  SELECT q_id, vec_id FROM (
        |    SELECT q.q_id, e.vec_id,
        |           row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |             round(${cosX("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) DESC,
+       |             round(${cosineSql("q.q_emb", "e.emb", "q.q_nrm", "e.nrm")}, 6) DESC,
        |             e.vec_id ASC) AS rk
        |    FROM embx e, q WHERE e.vec_id <> q.q_id)
        |  WHERE rk <= $TopK),
-       |cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM embx
-       |         WHERE vec_id < $ncSql),
-       |assigned AS (
-       |  SELECT vec_id, emb, nrm, c_id FROM (
-       |    SELECT e.vec_id, e.emb, e.nrm, c.c_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosX("e.emb", "c.c_emb", "e.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM embx e, cent c)
-       |  WHERE crk = 1),
-       |probes AS (
-       |  SELECT q_id, q_emb, q_nrm, c_id FROM (
-       |    SELECT e.vec_id AS q_id, e.emb AS q_emb, e.nrm AS q_nrm, c.c_id,
-       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |             round(${cosX("e.emb", "c.c_emb", "e.nrm", "c.c_nrm")}, 6) DESC,
-       |             c.c_id) AS crk
-       |    FROM embx e, cent c WHERE e.vec_id < $QuerySetSize)
-       |  WHERE crk <= $NProbe),
+       |${centCte("cent", from = "embx", limit = ncSql)},
+       |${assignCte("embx", "cent", "assigned")},
+       |${queryProbesCte("embx e, cent c")},
        |ivf AS (
        |  SELECT q_id, vec_id FROM (
        |    SELECT p.q_id, a.vec_id,
        |           row_number() OVER (PARTITION BY p.q_id ORDER BY
-       |             round(${cosX("p.q_emb", "a.emb", "p.q_nrm", "a.nrm")}, 6) DESC,
+       |             round(${cosineSql("p.q_emb", "a.emb", "p.q_nrm", "a.nrm")}, 6) DESC,
        |             a.vec_id ASC) AS rk
        |    FROM probes p JOIN assigned a USING (c_id) WHERE a.vec_id <> p.q_id)
        |  WHERE rk <= $TopK),
-       |sc AS (SELECT a.vec_id, a.c_id, a.nrm, a.emb,
-       |              127.0 / greatest(list_max(list_transform(a.emb, y -> abs(y))), 1e-300) AS s
-       |       FROM assigned a),
-       |sq AS (SELECT vec_id, c_id, nrm, s,
-       |              list_transform(emb, x -> floor(x * s + 0.5)) AS qv
-       |       FROM sc),
+       |${sq8Ctes("a", "a", "assigned a")},
        |qq AS (SELECT q_id, q_emb, q_nrm, c_id, q_s,
        |              list_transform(q_emb, x -> floor(x * q_s + 0.5)) AS q_qv
        |       FROM (SELECT *,
-       |               127.0 / greatest(list_max(list_transform(q_emb, y -> abs(y))), 1e-300) AS q_s
+       |               ${sq8ScaleSql("q_emb")} AS q_s
        |             FROM probes)),
        |approx AS (
        |  SELECT p.q_id, s.vec_id,
-       |         round(list_sum(list_transform(range(1, ${Dim + 1}),
-       |                 i -> s.qv[i] * p.q_qv[i]))
-       |           / (s.s * p.q_s) / (s.nrm * p.q_nrm), 6) AS asim
+       |         ${sq8AsimSql("p")}
        |  FROM qq p JOIN sq s USING (c_id)
        |  WHERE s.vec_id <> p.q_id),
-       |cut AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id
-       |             ORDER BY asim DESC, vec_id ASC) AS ark
-       |    FROM approx)
-       |  WHERE ark <= greatest($RerankKMin, (SELECT count(*) // 1000 FROM embx))),
-       |sq8 AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT c.q_id, c.vec_id,
-       |           row_number() OVER (PARTITION BY c.q_id ORDER BY
-       |             round(${cosX("qx.q_emb", "e.emb", "qx.q_nrm", "e.nrm")}, 6) DESC,
-       |             c.vec_id ASC) AS rk
-       |    FROM cut c
-       |    JOIN embx e ON e.vec_id = c.vec_id
-       |    JOIN q qx ON qx.q_id = c.q_id)
-       |  WHERE rk <= $TopK),
+       |${cutCte("asim", "approx", corpus = "embx")},
+       |${exactTopK("sq8", "cut")},
        |subs10 AS (
-       |  ${(0 until PqM).map(m =>
-            s"SELECT vec_id, nrm, $m AS m, emb[${m * PqSubDim + 1}:${(m + 1) * PqSubDim}] AS sub FROM embx")
-            .mkString("\n  UNION ALL ")}),
-       |pcent10 AS (SELECT m, vec_id AS c_id, sub AS c_sub,
-       |                   floor(list_sum(list_transform(sub, v -> v * v))
-       |                     * $QScale.0 + 0.5)::BIGINT AS cq
-       |            FROM subs10 WHERE vec_id < $PqK),
-       |codes10 AS (
-       |  SELECT vec_id, m, c_id FROM (
-       |    SELECT s.vec_id, s.m, c.c_id,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |             round(list_sum(list_transform(s.sub, v -> v * v))
-       |               - 2 * list_sum(list_transform(range(1, ${PqSubDim + 1}),
-       |                     i -> s.sub[i] * c.c_sub[i]))
-       |               + list_sum(list_transform(c.c_sub, v -> v * v)), 6)
-       |             ASC, c.c_id ASC) AS crk
-       |    FROM subs10 s JOIN pcent10 c USING (m))
-       |  WHERE crk = 1),
-       |lut10 AS (
-       |  SELECT s.vec_id AS q_id, s.nrm AS q_nrm, s.m, c.c_id,
-       |         floor(list_sum(list_transform(range(1, ${PqSubDim + 1}),
-       |                 i -> s.sub[i] * c.c_sub[i]))
-       |           * $QScale.0 + 0.5)::BIGINT AS pq,
-       |         c.cq
-       |  FROM subs10 s JOIN pcent10 c USING (m)
-       |  WHERE s.vec_id < $QuerySetSize),
+       |  ${subSelects("embx")}),
+       |${pqCentCte("pcent10", "subs10")},
+       |${codesCte("subs10 s JOIN pcent10 c USING (m)", "codes10")},
+       |${lutCte(s"subs10 s JOIN pcent10 c USING (m)\n  WHERE s.vec_id < $QuerySetSize", name = "lut10")},
        |adcs10 AS (
        |  SELECT n.q_id, n.vec_id, max(l.q_nrm) AS q_nrm,
        |         sum(l.pq)::BIGINT AS adcq, sum(l.cq)::BIGINT AS rq
@@ -4238,45 +2334,18 @@ object Similarity {
        |  JOIN codes10 c ON c.vec_id = n.vec_id
        |  JOIN lut10 l ON l.q_id = n.q_id AND l.m = c.m AND l.c_id = c.c_id
        |  GROUP BY n.q_id, n.vec_id),
-       |cut10 AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id ORDER BY
-       |             round((adcq::DOUBLE / $QScale.0)
-       |               / (q_nrm * sqrt(rq::DOUBLE / $QScale.0)), 6) DESC,
-       |             vec_id ASC) AS ark
-       |    FROM adcs10)
-       |  WHERE ark <= $PqIdxRefine
-       |    * greatest($RerankKMin, (SELECT count(*) // 1000 FROM embx))),
-       |pqr AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT c.q_id, c.vec_id,
-       |           row_number() OVER (PARTITION BY c.q_id ORDER BY
-       |             round(${cosX("qx.q_emb", "e.emb", "qx.q_nrm", "e.nrm")}, 6) DESC,
-       |             c.vec_id ASC) AS rk
-       |    FROM cut10 c
-       |    JOIN embx e ON e.vec_id = c.vec_id
-       |    JOIN q qx ON qx.q_id = c.q_id)
-       |  WHERE rk <= $TopK),
+       |${cutCte(adcSimSql, "adcs10", s"$PqIdxRefine *", "embx", "cut10")},
+       |${exactTopK("pqr", "cut10")},
        |h AS (SELECT count(*)::BIGINT AS hits FROM ivf JOIN bf USING (q_id, vec_id)),
        |h2 AS (SELECT count(*)::BIGINT AS hits FROM sq8 JOIN bf USING (q_id, vec_id)),
        |h3 AS (SELECT count(*)::BIGINT AS hits FROM pqr JOIN bf USING (q_id, vec_id)),
        |t AS (SELECT count(*)::BIGINT AS truth FROM bf)
        |SELECT * FROM (
-       |  SELECT 'ivf_x10' AS method, h.hits, t.truth,
-       |         $RecallGateX10Pct::BIGINT AS thr_pct,
-       |         h.hits * 100 >= $RecallGateX10Pct * t.truth AS ok
-       |  FROM h CROSS JOIN t
+       |  ${gateRow("ivf_x10", "h")}
        |  UNION ALL
-       |  SELECT 'ivf_sq8_x10' AS method, h2.hits, t.truth,
-       |         $RecallGateX10Pct::BIGINT AS thr_pct,
-       |         h2.hits * 100 >= $RecallGateX10Pct * t.truth AS ok
-       |  FROM h2 CROSS JOIN t
+       |  ${gateRow("ivf_sq8_x10", "h2")}
        |  UNION ALL
-       |  SELECT 'ivf_pq_x10' AS method, h3.hits, t.truth,
-       |         $RecallGateX10Pct::BIGINT AS thr_pct,
-       |         h3.hits * 100 >= $RecallGateX10Pct * t.truth AS ok
-       |  FROM h3 CROSS JOIN t)
+       |  ${gateRow("ivf_pq_x10", "h3")})
        |ORDER BY method""".stripMargin
   }
 
@@ -4457,21 +2526,21 @@ object Similarity {
     "sim_ivfpq_topk" -> ivfPqTopK,
     "sim_recall_gate" -> recallGate,
     "sim_recall_gate_x10" -> recallGateX10,
-    "sim_incremental_ivf" -> incrementalIvf,
-    "sim_incremental_ivf_sq8" -> incrementalIvfSq8,
-    "sim_incremental_ivf_sq8_append" -> incrementalIvfSq8Append,
-    "stream_incremental_ivf_sq8" -> streamIncrementalIvfSq8,
-    "sim_incremental_ivf_pq" -> incrementalIvfPq,
-    "sim_incremental_ivf_pq_res" -> incrementalIvfPqRes,
-    "sim_incremental_ivf_opq" -> incrementalIvfPqOpq,
-    "sim_incremental_ivf_pq_res_append" -> incrementalIvfPqResAppend,
-    "sim_incremental_ivf_pq_append" -> incrementalIvfPqAppend,
-    "stream_incremental_ivf_pq" -> streamIncrementalIvfPq,
+    "sim_incremental_ivf" -> (IvfIndex.search(_, _, IvfIndex.Float)),
+    "sim_incremental_ivf_sq8" -> (IvfIndex.search(_, _, IvfIndex.Sq8)),
+    "sim_incremental_ivf_sq8_append" -> (IvfIndex.append(_, _, IvfIndex.Sq8)),
+    "stream_incremental_ivf_sq8" -> (IvfIndex.stream(_, _, IvfIndex.Sq8)),
+    "sim_incremental_ivf_pq" -> (IvfIndex.search(_, _, IvfIndex.Pq)),
+    "sim_incremental_ivf_pq_res" -> (IvfIndex.search(_, _, IvfIndex.PqRes)),
+    "sim_incremental_ivf_opq" -> (IvfIndex.search(_, _, IvfIndex.Opq)),
+    "sim_incremental_ivf_pq_res_append" -> (IvfIndex.append(_, _, IvfIndex.PqRes)),
+    "sim_incremental_ivf_pq_append" -> (IvfIndex.append(_, _, IvfIndex.Pq)),
+    "stream_incremental_ivf_pq" -> (IvfIndex.stream(_, _, IvfIndex.Pq)),
     "sim_ivfpq_idx_recall_gate" -> ivfPqIdxRecallGate,
-    "sim_incremental_ivf_append" -> incrementalIvfAppend,
+    "sim_incremental_ivf_append" -> (IvfIndex.append(_, _, IvfIndex.Float)),
     "sim_incremental_ivf_compact" -> incrementalIvfCompact,
     "sim_ivf_refresh" -> ivfRefresh,
-    "stream_incremental_ivf" -> streamIncrementalIvf,
+    "stream_incremental_ivf" -> (IvfIndex.stream(_, _, IvfIndex.Float)),
     "sim_semdedup" -> semDedup,
     "dedup_embedding_cosine" -> embeddingNearDup)
 

@@ -296,55 +296,25 @@ object Scale {
     * derive 16 — the codebook is an index artifact, not a batch one).
     */
   def ivfProbe(spark: SparkSession, batchDir: String, indexDir: String): Unit = {
-    import graft.pipeline.Similarity
-    val indexPath = Similarity.ensureIvfIndex(spark, indexDir)
-    val indexRows = spark.read.parquet(indexPath).count()
+    import graft.pipeline.{IvfIndex, Similarity}
     val queries = Similarity.ivfProbeInputs(spark, batchDir)
-    val cent = Similarity.indexCodebook(spark, indexPath)
-    val nCent = cent.count()
-    def once(): Double = {
-      val t = timed(
-        Similarity.incrementalIvfProbe(spark, queries, cent, indexPath)
-          .write.format("noop").mode("overwrite").save())
-      spark.catalog.clearCache()
-      t
-    }
-    once() // untimed warmup
-    val sec = math.min(once(), once())
-    // SQ8-stored index: the same queries against the quantized lists with
-    // exact re-rank on the float corpus — wall + on-disk list bytes of
-    // both layouts (the probe's list-IO proxy: same row counts, 1 byte/dim
-    // vs float64 arrays)
-    val sq8Path = Similarity.ensureIvfSq8Index(spark, indexDir)
-    val floats = Similarity.corpusFloats(spark, indexDir)
-    val rerank = Similarity.rerankK(
-      Similarity.corpusStats(spark, indexDir)._1)
-    def onceSq8(): Double = {
-      val t = timed(
-        Similarity.incrementalIvfSq8Probe(spark, queries,
-            Similarity.indexCodebook(spark, sq8Path), sq8Path, floats, rerank)
-          .write.format("noop").mode("overwrite").save())
-      spark.catalog.clearCache()
-      t
-    }
-    onceSq8() // untimed warmup
-    val secQ = math.min(onceSq8(), onceSq8())
-    // PQ-coded index: the same queries against the 2-byte-code lists
-    // (ADC + ×PqIdxRefine exact re-rank) — the smallest rung of the
-    // storage ladder; reports its wall + list bytes next to the others
-    val pqPath = Similarity.ensureIvfPqIndex(spark, indexDir)
-    def oncePq(): Double = {
-      val t = timed(
-        Similarity.incrementalIvfPqProbe(spark, queries,
-            Similarity.indexCodebook(spark, pqPath),
-            Similarity.indexPqCodebook(spark, pqPath), pqPath, floats,
-            Similarity.PqIdxRefine * rerank)
-          .write.format("noop").mode("overwrite").save())
-      spark.catalog.clearCache()
-      t
-    }
-    oncePq() // untimed warmup
-    val secP = math.min(oncePq(), oncePq())
+    // the same queries against each list layout: float lists; SQ8 (1 byte/
+    // dim) and PQ codes (2 bytes) with exact re-rank on the float corpus —
+    // wall + on-disk list bytes of each (the probe's list-IO proxy)
+    val (paths, secs) = Seq(IvfIndex.Float, IvfIndex.Sq8, IvfIndex.Pq).map {
+      layout =>
+        val path = IvfIndex.ensure(spark, indexDir, layout)
+        def once(): Double = {
+          val t = timed(IvfIndex.probe(spark, indexDir, path, layout, queries)
+            .write.format("noop").mode("overwrite").save())
+          spark.catalog.clearCache()
+          t
+        }
+        once() // untimed warmup
+        (path, math.min(once(), once()))
+    }.unzip
+    val indexRows = spark.read.parquet(paths.head).count()
+    val nCent = IvfIndex.open(spark, paths.head, IvfIndex.Float).cent.count()
     def listBytes(root: String): Long = {
       val p = new org.apache.hadoop.fs.Path(root)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -357,9 +327,8 @@ object Scale {
       }
       s
     }
-    val fBytes = listBytes(indexPath)
-    val qBytes = listBytes(sq8Path)
-    val pBytes = listBytes(pqPath)
+    val Seq(fBytes, qBytes, pBytes) = paths.map(listBytes)
+    val Seq(sec, secQ, secP) = secs
     println(s"""[scale] {"ivfprobe_batch":"$batchDir","index":"$indexDir","centroids":$nCent,"index_rows":$indexRows,"sec_pruned":${num(sec)},"sec_sq8":${num(secQ)},"sec_pq":${num(secP)},"list_bytes_float":$fBytes,"list_bytes_sq8":$qBytes,"list_bytes_pq":$pBytes,"list_bytes_ratio":${num(fBytes.toDouble / math.max(1L, qBytes), 2)},"list_bytes_sq8_over_pq":${num(qBytes.toDouble / math.max(1L, pBytes), 2)}}""")
     spark.stop()
   }

@@ -38,23 +38,23 @@ class IncrementalIvfSpec extends AnyFunSuite {
   }
 
   test("second probe reuses the persisted IVF index byte-for-byte") {
-    val path = Similarity.ivfIndexPath(spark, dir)
+    val path = IvfIndex.path(spark, dir, IvfIndex.Float)
     deleteRecursively(Paths.get(path))
 
-    val first = Similarity.incrementalIvf(spark, dir).collect().toSeq
+    val first = IvfIndex.search(spark, dir, IvfIndex.Float).collect().toSeq
     assert(new File(path + "/_SUCCESS").exists(), "index must be committed")
-    assert(new File(path + "/" + Similarity.ListsManifestFile).exists(),
+    assert(new File(path + "/" + IvfIndex.ListsManifestFile).exists(),
       "manifest must be committed with the index")
     val stateAfterBuild = fileState(path)
 
-    val second = Similarity.incrementalIvf(spark, dir).collect().toSeq
+    val second = IvfIndex.search(spark, dir, IvfIndex.Float).collect().toSeq
     assert(second == first, "replayed probe must be bit-identical")
     assert(fileState(path) == stateAfterBuild,
       "second run must not rewrite any index file (reuse, not rebuild)")
   }
 
   test("index partitions every historical vector into exactly one list") {
-    val path = Similarity.ensureIvfIndex(spark, dir)
+    val path = IvfIndex.ensure(spark, dir, IvfIndex.Float)
     val idx = spark.read.parquet(path)
     val nHist = graft.Tables.load(spark, dir, "embeddings")
       .where(s"vec_id % ${Similarity.IvfSplitMod} <> 0").count()
@@ -65,12 +65,12 @@ class IncrementalIvfSpec extends AnyFunSuite {
     // inference reads c_id back as INT — cast to the manifest's LONG)
     val listsOnDisk = idx.selectExpr("CAST(c_id AS BIGINT)").distinct()
       .collect().map(_.getLong(0)).toSet
-    assert(Similarity.listsManifestRead(spark, path) == listsOnDisk)
+    assert(IvfIndex.listsManifestRead(spark, path) == listsOnDisk)
   }
 
   test("append rewrites only probed/touched list dirs and surfaces wave-1") {
-    Similarity.ensureIvfIndex(spark, dir)
-    val out = Similarity.incrementalIvfAppend(spark, dir)
+    IvfIndex.ensure(spark, dir, IvfIndex.Float)
+    val out = IvfIndex.append(spark, dir, IvfIndex.Float)
     val rows = out.collect()
     assert(rows.nonEmpty)
     // wave-2's neighbors may now include wave-1 vectors (vec_id % 8 == 0);
@@ -90,7 +90,7 @@ class IncrementalIvfSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val indexPath = Similarity.ensureIvfIndex(spark, dir)
+    val indexPath = IvfIndex.ensure(spark, dir, IvfIndex.Float)
     val idx = spark.read.parquet(indexPath)
     // same inputs the entry uses: wave vectors + the collected codebook
     val emb = graft.Tables.load(spark, dir, "embeddings")
@@ -98,15 +98,15 @@ class IncrementalIvfSpec extends AnyFunSuite {
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
       .selectExpr("vec_id", "emb", "sqrt(graft_dot(emb, emb)) AS nrm")
     val wave = emb.where(s"vec_id % ${Similarity.IvfSplitMod} = 0")
-    val cent = Similarity.indexCodebook(spark, indexPath)
+    val model = IvfIndex.open(spark, indexPath, IvfIndex.Float)
 
-    val want = Similarity.streamProbeIvf(wave, cent, idx).collect()
+    val want = IvfIndex.streamProbe(wave, idx, model, IvfIndex.Float).collect()
       .map(_.toSeq).sortBy(_.toString)
 
     val rows = wave.as[(Long, Seq[Double], Double)].collect()
     val src = MemoryStream[(Long, Seq[Double], Double)]
-    val q = Similarity.streamProbeIvf(
-        src.toDS().toDF("vec_id", "emb", "nrm"), cent, idx)
+    val q = IvfIndex.streamProbe(
+        src.toDS().toDF("vec_id", "emb", "nrm"), idx, model, IvfIndex.Float)
       .writeStream.format("memory").queryName("ivf_probe")
       .outputMode("append")
       .start()
@@ -132,22 +132,22 @@ class IncrementalIvfSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val indexPath = Similarity.ensureIvfSq8Index(spark, dir)
+    val indexPath = IvfIndex.ensure(spark, dir, IvfIndex.Sq8)
     val idx = spark.read.parquet(indexPath)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .selectExpr("vec_id",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
       .selectExpr("vec_id", "emb", "sqrt(graft_dot(emb, emb)) AS nrm")
     val wave = emb.where(s"vec_id % ${Similarity.IvfSplitMod} = 0")
-    val cent = Similarity.indexCodebook(spark, indexPath)
+    val model = IvfIndex.open(spark, indexPath, IvfIndex.Sq8)
 
-    val want = Similarity.streamProbeIvfSq8(wave, cent, idx).collect()
+    val want = IvfIndex.streamProbe(wave, idx, model, IvfIndex.Sq8).collect()
       .map(_.toSeq).sortBy(_.toString)
 
     val rows = wave.as[(Long, Seq[Double], Double)].collect()
     val src = MemoryStream[(Long, Seq[Double], Double)]
-    val q = Similarity.streamProbeIvfSq8(
-        src.toDS().toDF("vec_id", "emb", "nrm"), cent, idx)
+    val q = IvfIndex.streamProbe(
+        src.toDS().toDF("vec_id", "emb", "nrm"), idx, model, IvfIndex.Sq8)
       .writeStream.format("memory").queryName("ivf_sq8_probe")
       .outputMode("append")
       .start()
@@ -173,23 +173,22 @@ class IncrementalIvfSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val indexPath = Similarity.ensureIvfPqIndex(spark, dir)
+    val indexPath = IvfIndex.ensure(spark, dir, IvfIndex.Pq)
     val idx = spark.read.parquet(indexPath)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .selectExpr("vec_id",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
       .selectExpr("vec_id", "emb", "sqrt(graft_dot(emb, emb)) AS nrm")
     val wave = emb.where(s"vec_id % ${Similarity.IvfSplitMod} = 0")
-    val cent = Similarity.indexCodebook(spark, indexPath)
-    val pqc = Similarity.indexPqCodebook(spark, indexPath)
+    val model = IvfIndex.open(spark, indexPath, IvfIndex.Pq)
 
-    val want = Similarity.streamProbeIvfPq(wave, cent, pqc, idx).collect()
+    val want = IvfIndex.streamProbe(wave, idx, model, IvfIndex.Pq).collect()
       .map(_.toSeq).sortBy(_.toString)
 
     val rows = wave.as[(Long, Seq[Double], Double)].collect()
     val src = MemoryStream[(Long, Seq[Double], Double)]
-    val q = Similarity.streamProbeIvfPq(
-        src.toDS().toDF("vec_id", "emb", "nrm"), cent, pqc, idx)
+    val q = IvfIndex.streamProbe(
+        src.toDS().toDF("vec_id", "emb", "nrm"), idx, model, IvfIndex.Pq)
       .writeStream.format("memory").queryName("ivf_pq_probe")
       .outputMode("append")
       .start()
@@ -211,28 +210,68 @@ class IncrementalIvfSpec extends AnyFunSuite {
   }
 
   test("missing manifest: reader fails loud, ensure treats as uncommitted") {
-    val path = Similarity.ensureIvfIndex(spark, dir)
-    val mf = Paths.get(path, Similarity.ListsManifestFile)
+    val path = IvfIndex.ensure(spark, dir, IvfIndex.Float)
+    val mf = Paths.get(path, IvfIndex.ListsManifestFile)
     Files.delete(mf)
     // the probe's pruning input must never silently degrade to empty
     val e = intercept[IllegalStateException] {
-      Similarity.listsManifestRead(spark, path)
+      IvfIndex.listsManifestRead(spark, path)
     }
-    assert(e.getMessage.contains(Similarity.ListsManifestFile))
+    assert(e.getMessage.contains(IvfIndex.ListsManifestFile))
     // an index without its manifest is uncommitted: the next ensure
     // rebuilds BOTH artifacts and the probe works again
-    val rows = Similarity.incrementalIvf(spark, dir).collect()
+    val rows = IvfIndex.search(spark, dir, IvfIndex.Float).collect()
     assert(Files.exists(mf) && rows.nonEmpty)
   }
 
+  test("every layout: a missing artifact fails the reader loud and ensure rebuilds") {
+    val layouts = Seq(IvfIndex.Float, IvfIndex.Sq8, IvfIndex.Pq, IvfIndex.PqRes,
+      IvfIndex.Opq)
+    for (layout <- layouts; artifact <- Seq("_SUCCESS", IvfIndex.CodebookDir,
+        IvfIndex.ListsManifestFile) ++ layout.artifacts) {
+      val path = IvfIndex.ensure(spark, dir, layout)
+      deleteRecursively(Paths.get(path, artifact))
+      val e = intercept[IllegalStateException] {
+        IvfIndex.open(spark, path, layout)
+      }
+      assert(e.getMessage.contains(s"$layout IVF index") &&
+        e.getMessage.contains(artifact), e.getMessage)
+      // an index missing any artifact is uncommitted: ensure rebuilds it
+      assert(IvfIndex.ensure(spark, dir, layout) == path)
+      assert(Files.exists(Paths.get(path, artifact)),
+        s"$layout: ensure must rebuild $artifact")
+      IvfIndex.open(spark, path, layout)
+    }
+  }
+
+  test("a failing append unpersists its wave and leaves the shared index untouched") {
+    val path = IvfIndex.ensure(spark, dir, IvfIndex.Sq8)
+    val before = fileState(path)
+    val work = graft.TempDirs.scoped("ivf-append-fail") + "/index"
+    graft.TempDirs.copyTree(spark, path, work)
+    val model = IvfIndex.open(spark, work, IvfIndex.Sq8)
+    // the manifest vanishes mid-append: after the wave is persisted and
+    // upserted, the manifest read fails
+    Files.delete(Paths.get(work, IvfIndex.ListsManifestFile))
+    spark.catalog.clearCache()
+    val wave = Similarity.corpusFloats(spark, dir)
+      .where(s"vec_id % ${2 * Similarity.IvfSplitMod} = 0")
+    intercept[IllegalStateException] {
+      IvfIndex.appendWave(spark, work, IvfIndex.Sq8, model, wave)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failed append must unpersist its wave")
+    assert(fileState(path) == before, "the shared index must be untouched")
+  }
+
   test("SQ8 index: 1 byte/dim lists, no float vectors, byte-for-byte reuse") {
-    val path = Similarity.ivfSq8IndexPath(spark, dir)
+    val path = IvfIndex.path(spark, dir, IvfIndex.Sq8)
     deleteRecursively(Paths.get(path))
 
-    val first = Similarity.incrementalIvfSq8(spark, dir).collect().toSeq
+    val first = IvfIndex.search(spark, dir, IvfIndex.Sq8).collect().toSeq
     assert(first.nonEmpty)
     assert(new File(path + "/_SUCCESS").exists(), "index must be committed")
-    assert(new File(path + "/" + Similarity.ListsManifestFile).exists())
+    assert(new File(path + "/" + IvfIndex.ListsManifestFile).exists())
     val stateAfterBuild = fileState(path)
 
     val idx = spark.read.parquet(path)
@@ -248,15 +287,15 @@ class IncrementalIvfSpec extends AnyFunSuite {
       .where(s"vec_id % ${Similarity.IvfSplitMod} <> 0").count()
     assert(idx.count() == nHist)
 
-    val second = Similarity.incrementalIvfSq8(spark, dir).collect().toSeq
+    val second = IvfIndex.search(spark, dir, IvfIndex.Sq8).collect().toSeq
     assert(second == first, "replayed probe must be bit-identical")
     assert(fileState(path) == stateAfterBuild,
       "second run must not rewrite any index file (reuse, not rebuild)")
   }
 
   test("SQ8 append surfaces wave-1 through the quantized lists") {
-    Similarity.ensureIvfSq8Index(spark, dir)
-    val rows = Similarity.incrementalIvfSq8Append(spark, dir).collect()
+    IvfIndex.ensure(spark, dir, IvfIndex.Sq8)
+    val rows = IvfIndex.append(spark, dir, IvfIndex.Sq8).collect()
     assert(rows.nonEmpty)
     val w = 2 * Similarity.IvfSplitMod
     assert(rows.exists(r => r.getLong(1) % w == 0),
@@ -268,9 +307,9 @@ class IncrementalIvfSpec extends AnyFunSuite {
   }
 
   test("SQ8 probe's sims are EXACT cosines (re-rank contract) and list bytes shrink") {
-    Similarity.ensureIvfIndex(spark, dir)
-    val sq8Path = Similarity.ensureIvfSq8Index(spark, dir)
-    val out = Similarity.incrementalIvfSq8(spark, dir)
+    IvfIndex.ensure(spark, dir, IvfIndex.Float)
+    val sq8Path = IvfIndex.ensure(spark, dir, IvfIndex.Sq8)
+    val out = IvfIndex.search(spark, dir, IvfIndex.Sq8)
     // every emitted sim must equal the exact float cosine — the final
     // scoring never uses quantized arithmetic
     val emb = graft.Tables.load(spark, dir, "embeddings")
@@ -293,20 +332,20 @@ class IncrementalIvfSpec extends AnyFunSuite {
           p.toString.contains("c_id=") && p.toString.endsWith(".parquet"))
         .map(Files.size(_)).sum
     }
-    val floatBytes = listBytes(Similarity.ivfIndexPath(spark, dir))
+    val floatBytes = listBytes(IvfIndex.path(spark, dir, IvfIndex.Float))
     val sq8Bytes = listBytes(sq8Path)
     assert(sq8Bytes * 2 < floatBytes,
       s"sq8 lists ($sq8Bytes B) must be well under the float lists ($floatBytes B)")
   }
 
   test("PQ index: 2-byte packed codes, codebooks in the index, byte-for-byte reuse") {
-    val path = Similarity.ivfPqIndexPath(spark, dir)
+    val path = IvfIndex.path(spark, dir, IvfIndex.Pq)
     deleteRecursively(Paths.get(path))
 
-    val first = Similarity.incrementalIvfPq(spark, dir).collect().toSeq
+    val first = IvfIndex.search(spark, dir, IvfIndex.Pq).collect().toSeq
     assert(first.nonEmpty)
     assert(new File(path + "/_SUCCESS").exists(), "index must be committed")
-    assert(new File(path + "/" + Similarity.ListsManifestFile).exists())
+    assert(new File(path + "/" + IvfIndex.ListsManifestFile).exists())
     val stateAfterBuild = fileState(path)
 
     val idx = spark.read.parquet(path)
@@ -322,7 +361,7 @@ class IncrementalIvfSpec extends AnyFunSuite {
       .where(s"vec_id % ${Similarity.IvfSplitMod} <> 0").count()
     assert(idx.count() == nHist)
     // both codebooks travel WITH the index: coarse (16+) + PQ (M×K rows)
-    val pqc = Similarity.indexPqCodebook(spark, path)
+    val pqc = IvfIndex.open(spark, path, IvfIndex.Pq).pq.get
     assert(pqc.count() == Similarity.PqM.toLong * Similarity.PqK)
     // every unpacked sub-code indexes a real codebook row
     val unpackOk = (0 until Similarity.PqM)
@@ -330,15 +369,15 @@ class IncrementalIvfSpec extends AnyFunSuite {
       .mkString(" AND ")
     assert(idx.selectExpr(s"$unpackOk AS ok").where("NOT ok").count() == 0)
 
-    val second = Similarity.incrementalIvfPq(spark, dir).collect().toSeq
+    val second = IvfIndex.search(spark, dir, IvfIndex.Pq).collect().toSeq
     assert(second == first, "replayed probe must be bit-identical")
     assert(fileState(path) == stateAfterBuild,
       "second run must not rewrite any index file (reuse, not rebuild)")
   }
 
   test("PQ append surfaces wave-1 through the code lists") {
-    Similarity.ensureIvfPqIndex(spark, dir)
-    val rows = Similarity.incrementalIvfPqAppend(spark, dir).collect()
+    IvfIndex.ensure(spark, dir, IvfIndex.Pq)
+    val rows = IvfIndex.append(spark, dir, IvfIndex.Pq).collect()
     assert(rows.nonEmpty)
     val w = 2 * Similarity.IvfSplitMod
     assert(rows.exists(r => r.getLong(1) % w == 0),
@@ -350,9 +389,9 @@ class IncrementalIvfSpec extends AnyFunSuite {
   }
 
   test("PQ probe's sims are EXACT cosines and code lists undercut SQ8's") {
-    Similarity.ensureIvfSq8Index(spark, dir)
-    val pqPath = Similarity.ensureIvfPqIndex(spark, dir)
-    val out = Similarity.incrementalIvfPq(spark, dir)
+    IvfIndex.ensure(spark, dir, IvfIndex.Sq8)
+    val pqPath = IvfIndex.ensure(spark, dir, IvfIndex.Pq)
+    val out = IvfIndex.search(spark, dir, IvfIndex.Pq)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .selectExpr("vec_id",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
@@ -375,7 +414,7 @@ class IncrementalIvfSpec extends AnyFunSuite {
           p.toString.contains("c_id=") && p.toString.endsWith(".parquet"))
         .map(Files.size(_)).sum
     }
-    val sq8Bytes = listBytes(Similarity.ivfSq8IndexPath(spark, dir))
+    val sq8Bytes = listBytes(IvfIndex.path(spark, dir, IvfIndex.Sq8))
     val pqBytes = listBytes(pqPath)
     assert(pqBytes < sq8Bytes,
       s"pq code lists ($pqBytes B) must undercut sq8 lists ($sq8Bytes B)")
@@ -395,7 +434,7 @@ class IncrementalIvfSpec extends AnyFunSuite {
   }
 
   test("residual-PQ index: same 2-byte layout, live codebook, recall floor") {
-    val path = Similarity.ensureIvfPqResIndex(spark, dir)
+    val path = IvfIndex.ensure(spark, dir, IvfIndex.PqRes)
     // lists carry only (vec_id, nrm, pcode) — 2-byte codes, no vectors
     val lists = spark.read.parquet(path)
     assert(lists.columns.toSet == Set("vec_id", "nrm", "pcode", "c_id"))
@@ -404,7 +443,7 @@ class IncrementalIvfSpec extends AnyFunSuite {
     // the residual codebook must NOT be degenerate: the first-nc vectors
     // ARE the centroids (zero residuals), so seeds are offset — every
     // subspace has PqK codes and a nonzero spread (the r14 bug class)
-    val pqc = Similarity.indexPqCodebook(spark, path)
+    val pqc = IvfIndex.open(spark, path, IvfIndex.Pq).pq.get
     assert(pqc.groupBy("m").count().collect()
       .forall(_.getLong(1) == Similarity.PqK.toLong))
     val liveCodes = pqc.selectExpr("m", "p_id",
@@ -413,7 +452,7 @@ class IncrementalIvfSpec extends AnyFunSuite {
     assert(liveCodes >= (Similarity.PqM * Similarity.PqK) / 2,
       s"residual codebook degenerate: only $liveCodes live codes")
     // probe output: exact-cosine sims, hist-split members, recall floor
-    val out = Similarity.incrementalIvfPqRes(spark, dir).collect()
+    val out = IvfIndex.search(spark, dir, IvfIndex.PqRes).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(out.length ==
       Similarity.QuerySetSize * Similarity.TopK)

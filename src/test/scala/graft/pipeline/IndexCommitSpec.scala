@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The cross-process commit protocol behind every persisted index
-  * ([[Dedup.ensureMinhashIndex]], [[Similarity.ensureIvfIndex]],
+  * ([[Dedup.ensureMinhashIndex]], [[IvfIndex.ensure]],
   * [[Retrieval.ensureBm25Index]]): build into a temp sibling, publish
   * with one atomic rename. The round-12 verdict demonstrated that the
   * old check-then-build paths torn-overwrote each other under two

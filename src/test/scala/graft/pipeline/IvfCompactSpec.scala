@@ -20,12 +20,12 @@ class IvfCompactSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private lazy val (frag, opt) = Similarity.compactedWorkingIndex(spark, dir)
+  private lazy val (frag, opt) = IvfIndex.compactedWorkingIndex(spark, dir)
 
   test("file-append fragments touched lists; compaction collapses " +
     "every list to one data file") {
-    val before = Similarity.listFileCounts(spark, frag)
-    val after = Similarity.listFileCounts(spark, opt)
+    val before = IvfIndex.listFileCounts(spark, frag)
+    val after = IvfIndex.listFileCounts(spark, opt)
     assert(before.values.exists(_ > 1),
       s"the append wave must fragment at least one list, got $before")
     assert(after.keySet == before.keySet,
@@ -39,8 +39,8 @@ class IvfCompactSpec extends AnyFunSuite {
     val wave2 = emb.where(s"vec_id % ${2 * Similarity.IvfSplitMod} = " +
       s"${Similarity.IvfSplitMod} AND vec_id < " +
       s"${2L * Similarity.IvfSplitMod * Similarity.QuerySetSize + Similarity.IvfSplitMod}")
-    def probe(path: String) = Similarity.incrementalIvfProbe(spark, wave2,
-        Similarity.indexCodebook(spark, path), path)
+    def probe(path: String) = IvfIndex.probe(spark, dir, path, IvfIndex.Float,
+        wave2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
     val pre = probe(frag)

@@ -44,16 +44,16 @@ class IvfRefreshSpec extends AnyFunSuite {
       .selectExpr("vec_id", "emb", "sqrt(graft_dot(emb, emb)) AS nrm")
     val content = emb.where(s"vec_id % ${Similarity.IvfSplitMod} <> 0")
       .select("vec_id", "emb", "nrm").unionByName(wave)
-    val root = Similarity.refreshIvfIndex(spark, dir, content)
+    val root = IvfIndex.refresh(spark, dir, content)
 
     // complete layout: data _SUCCESS, codebook, manifest
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$root/${Similarity.CodebookDir}/_SUCCESS")))
+      s"$root/${IvfIndex.CodebookDir}/_SUCCESS")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      root, Similarity.ListsManifestFile)))
+      root, IvfIndex.ListsManifestFile)))
 
     // re-code preserved the vector set exactly: same ids, same count,
     // and the manifest names exactly the non-empty lists
@@ -67,15 +67,15 @@ class IvfRefreshSpec extends AnyFunSuite {
       .filter(s => s.isDirectory &&
         s.getPath.getName.startsWith("c_id=") )
       .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-    assert(Similarity.listsManifestRead(spark, root) == listDirs,
+    assert(IvfIndex.listsManifestRead(spark, root) == listDirs,
       "manifest must name exactly the written lists")
 
     // the retrained codebook differs from the frozen one — the refresh
     // actually moved the centroids toward the drifted content
-    val frozen = Similarity.indexCodebook(spark,
-      Similarity.ensureIvfIndex(spark, dir))
+    val frozen = IvfIndex.open(spark,
+      IvfIndex.ensure(spark, dir, IvfIndex.Float), IvfIndex.Float).cent
       .orderBy("c_id").collect().map(_.getSeq[Double](1))
-    val retrained = Similarity.indexCodebook(spark, root)
+    val retrained = IvfIndex.open(spark, root, IvfIndex.Float).cent
       .orderBy("c_id").collect().map(_.getSeq[Double](1))
     // Lloyd means drop empty clusters, so the retrained book may be
     // smaller; it must differ from the frozen one in content

@@ -21,19 +21,19 @@ class OpqSpec extends AnyFunSuite {
 
   test("the learned rotation is a permutation, balances subspace energy " +
     "vs the identity layout, and round-trips through the index") {
-    val path = Similarity.ensureIvfPqOpqIndex(spark, dir)
-    val persisted = Similarity.indexOpqPerm(spark, path)
+    val path = IvfIndex.ensure(spark, dir, IvfIndex.Opq)
+    val persisted = IvfIndex.open(spark, path, IvfIndex.Opq).perm
     assert(persisted.sorted == (0 until Similarity.Dim),
       "the rotation must be a permutation of the dimensions")
     val emb = Similarity.corpusFloats(spark, dir)
-    val cent = Similarity.indexCodebook(spark, path)
+    val cent = IvfIndex.open(spark, path, IvfIndex.Opq).cent
       .selectExpr("c_id", "c_emb", "c_nrm")
     val hist = emb.where(s"vec_id % ${Similarity.IvfSplitMod} <> 0")
     // determinism + persistence: retraining reproduces the stored artifact
-    assert(Similarity.opqPermutation(hist, cent) == persisted)
+    assert(IvfIndex.opqPermutation(hist, cent) == persisted)
     // independent replica of the allocation: rank by (energy desc, dim),
     // deal boustrophedon, compare subspace balance against identity
-    val energies = Similarity.opqEnergies(hist, cent)
+    val energies = IvfIndex.opqEnergies(hist, cent)
     val m = Similarity.PqM; val sd = Similarity.PqSubDim
     def spread(alloc: Seq[Seq[Int]]): Long = {
       val sums = alloc.map(_.map(energies).sum)
@@ -67,8 +67,8 @@ class OpqSpec extends AnyFunSuite {
     def hits(df: org.apache.spark.sql.DataFrame): Int =
       df.select("q_id", "vec_id").collect()
         .count(r => truth.contains((r.getLong(0), r.getLong(1))))
-    val opq = hits(Similarity.incrementalIvfPqOpq(spark, dir))
-    val res = hits(Similarity.incrementalIvfPqRes(spark, dir))
+    val opq = hits(IvfIndex.search(spark, dir, IvfIndex.Opq))
+    val res = hits(IvfIndex.search(spark, dir, IvfIndex.PqRes))
     assert(truth.nonEmpty && opq > 0)
     // one-hit tolerance: energy balancing improves recall in EXPECTATION,
     // not pointwise — a testdata regeneration may cost a single hit with

@@ -17,6 +17,43 @@ import duckdb
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
+def collapse_ws(sql):
+    """SQL text with every whitespace run collapsed to one space."""
+    return " ".join(sql.split())
+
+
+def normalise(table):
+    """An Arrow result as (column -> Arrow dtype, pandas frame with columns
+    sorted by name and rows sorted by all columns) — the order-free form two
+    results are compared in."""
+    dtypes = {f.name: str(f.type) for f in table.schema}
+    df = table.to_pandas()
+    df = df.reindex(sorted(df.columns), axis=1)
+    return dtypes, df.sort_values(by=list(df.columns), ignore_index=True)
+
+
+def diff(a, b):
+    """None when two Arrow results are equal as normalised sets of rows, else
+    a one-line description of the first difference. Arrow dtypes are checked
+    first: the driver hash-compares bit-identically, so a type widening
+    (e.g. sum(BIGINT) -> HUGEINT) fails its gate even when values match."""
+    import pandas as pd
+    (ad, af), (bd, bf) = normalise(a), normalise(b)
+    dtype_diff = {k: (ad.get(k), bd.get(k))
+                  for k in set(ad) | set(bd) if ad.get(k) != bd.get(k)}
+    if dtype_diff:
+        return f"arrow dtypes differ: {dtype_diff}"
+    if list(af.columns) != list(bf.columns):
+        return f"columns differ: {list(af.columns)} vs {list(bf.columns)}"
+    if len(af) != len(bf):
+        return f"row counts differ: {len(af)} vs {len(bf)}"
+    try:
+        pd.testing.assert_frame_equal(af, bf, check_dtype=False, check_exact=True)
+    except AssertionError as e:
+        return str(e).replace("\n", " | ")
+    return None
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -25,31 +62,12 @@ def main(sf_dir, out_dir):
     failed = []
     for name, sql in sorted(oracles.items()):
         try:
-            # Arrow-level dtype check first: the driver hash-compares
-            # bit-identically, so a DuckDB type widening (e.g. sum(BIGINT)
-            # -> HUGEINT) fails its gate even when values match. Catch it
-            # here before the value compare papers over it.
             oa = con.sql(sql).arrow()
             sa = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").arrow()
-            od = {f.name: str(f.type) for f in oa.schema}
-            sd = {f.name: str(f.type) for f in sa.schema}
-            dtype_diff = {k: (od.get(k), sd.get(k))
-                          for k in set(od) | set(sd) if od.get(k) != sd.get(k)}
-            if dtype_diff:
-                raise AssertionError(f"arrow dtypes differ: {dtype_diff}")
-            oracle = oa.to_pandas()
-            spark = sa.to_pandas()
-            o = oracle.reindex(sorted(oracle.columns), axis=1)
-            s = spark.reindex(sorted(spark.columns), axis=1)
-            if list(o.columns) != list(s.columns):
-                raise AssertionError(f"columns differ: oracle={list(o.columns)} spark={list(s.columns)}")
-            o = o.sort_values(by=list(o.columns), ignore_index=True)
-            s = s.sort_values(by=list(s.columns), ignore_index=True)
-            if len(o) != len(s):
-                raise AssertionError(f"row counts differ: oracle={len(o)} spark={len(s)}")
-            import pandas as pd
-            pd.testing.assert_frame_equal(o, s, check_dtype=False, check_exact=True)
-            print(f"PASS {name} ({len(o)} rows)")
+            d = diff(oa, sa)
+            if d:
+                raise AssertionError(d)
+            print(f"PASS {name} ({oa.num_rows} rows)")
         except Exception as e:
             failed.append(name)
             msg = str(e).replace("\n", " | ")[:400]
