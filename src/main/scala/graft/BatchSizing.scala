@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * (hashed-feature extraction, MinHash shingling, BPE, tokenize-heavy
   * analysis) then run serially however many cores the session has —
   * measured at sf0.1: the perceptron featurize+epoch stage was a single
-  * 2.9 s task under local[32] (tools/JobDiag). The fix is a parallelism
+  * 2.9 s task under local[32] (tools/Diag). The fix is a parallelism
   * FLOOR derived from the row count, never a constant:
   *
   *   target = clamp(rows / rowsPerTask, 1, defaultParallelism)

@@ -4,12 +4,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.{Event, FadsStream, PacedReplay, ThroughputHistory}
 
 /** Benchmark main (driver contract): runs every declared query on
-  * SPARK_GRAFT_SF_DIR at local[32] and prints ONE JSON line.
+  * SPARK_GRAFT_SF_DIR on the [[Session]] policy and prints ONE JSON line.
   *
   * Queries are materialized through the `noop` sink — a `.count()` would let
   * Catalyst prune the projections under test and report fake-fast times.
@@ -74,72 +72,11 @@ object Bench {
     def remaining(): Double = budget - elapsed()
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    /** MEASURED placement evidence (r15 verdict item 1: the sharded leg's
-      * diag showed 48.9 s of RocksDB fsync under a DECLARED-ramfs
-      * placement — an artifact must prove where its bytes went, not
-      * assert intent). For a directory: the statfs filesystem type plus a
-      * 1 MiB write+fsync microbench in ms. tmpfs fsync is ~0.1 ms/MiB; a
-      * disk-speed probe on a "ramfs" path means the placement claim is
-      * wrong and the fallback below takes the honest label.
-      */
-    def fsProbe(dir: java.nio.file.Path): (String, Double) = {
-      val fsType =
-        try Files.getFileStore(dir).`type`()
-        catch { case NonFatal(_) => "unknown" }
-      val probeMs = try {
-        val f = Files.createTempFile(dir, "graft-fsprobe", ".bin")
-        try {
-          val buf = java.nio.ByteBuffer.wrap(Array.fill(1 << 20)(0x5a.toByte))
-          val t = System.nanoTime()
-          val ch = java.nio.channels.FileChannel.open(f,
-            java.nio.file.StandardOpenOption.WRITE)
-          try { ch.write(buf); ch.force(true) } finally ch.close()
-          (System.nanoTime() - t) / 1e6
-        } finally Files.deleteIfExists(f)
-      } catch { case NonFatal(_) => -1.0 }
-      (fsType, probeMs)
-    }
-    def placementJson(kind: String, t: (String, Double)): String =
-      s"""{"kind":"$kind","fs_type":"${t._1}","fsync_probe_ms":${String
-        .format(java.util.Locale.ROOT, "%.3f", Double.box(t._2))}}"""
-
-    // Spark SCRATCH (shuffle spill + RocksDB state-store working dirs) on
-    // RAM when /dev/shm is present AND the probe confirms tmpfs speed: the
-    // r15 diag showed the residual streaming fsync cost lives in the LOCAL
-    // RocksDB files under spark.local.dir, not the checkpoint location —
-    // on this box /tmp is ext4, so local-file sync rode the disk's mood
-    // into every number. A /dev/shm that probes at disk speed (exotic
-    // sandbox mounts) falls back to the honest "disk" label.
-    val shm = Paths.get("/dev/shm")
-    val shmProbe =
-      if (Files.isDirectory(shm) && Files.isWritable(shm)) fsProbe(shm)
-      else ("absent", -1.0)
-    val shmIsRam = shmProbe._1 == "tmpfs" && shmProbe._2 >= 0 &&
-      shmProbe._2 < 20.0
-    val localDirKind = if (shmIsRam) "ramfs" else "disk"
-    val localDirPath =
-      if (shmIsRam)
-        Files.createTempDirectory(shm, "graft-bench-scratch")
-      else Files.createTempDirectory("graft-bench-scratch")
-    val localDirProbe = fsProbe(localDirPath)
-    // entry-internal staging + throwaway streaming checkpoints follow the
-    // same scratch tier as spark.local.dir (RocksDB working dirs/shuffle):
-    // the per-entry streams' changelog+WAL fsync otherwise rides whatever
-    // disk backs java.io.tmpdir (see TempDirs.preferRoot) — an ADDITION
-    // only; the timing protocol below is unchanged
-    TempDirs.preferRoot(localDirPath.toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", localDirPath.toString)
-    val spark = FadsStream.configure(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.cpus.toString
+    // scratch on the probed tier; entry staging and throwaway streaming
+    // checkpoints follow it (Session.builder points TempDirs there)
+    val scratch = Session.placeScratch()
+    val spark = Session.start("graft-bench", scratch)
 
     def timed(body: => Unit): Double = {
       val t = System.nanoTime()
@@ -257,9 +194,9 @@ object Bench {
       // dirs under spark.local.dir are fixed at JVM start (r15 ADVICE 2),
       // so it is NOT the all-disk production mode and says so.
       val placements =
-        s"""{"local_dir":${placementJson(localDirKind, localDirProbe)},"shm_probe":${placementJson(if (shmIsRam) "ramfs" else "not-ram", shmProbe)},"stream_ckpt":$streamCkptPlacement,"disk_ckpt":$diskCkptPlacement}"""
+        s"""{"local_dir":${scratch.dirProbe.json(scratch.kind)},"shm_probe":${scratch.shm.json(if (scratch.kind == "ramfs") "ramfs" else "not-ram")},"stream_ckpt":$streamCkptPlacement,"disk_ckpt":$diskCkptPlacement}"""
       val jsonLine =
-        s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","total_production_sec":${num(totalProduction, 3)},"excluded_declared_surfaces":$excludedArr,"queries":$qs,"sf":"$sfDir","stream_rows_per_sec":${num(streamRps, 1)},"stream_sharded_rows_per_sec":${num(shardedRps, 1)},"stream_rows_per_sec_disk":${num(diskRps, 1)},"stream_disk_leg_note":"disk checkpoint, $localDirKind scratch (spark.local.dir fixed at JVM start)","stream_ckpt":"$streamCkpt","local_dir":"$localDirKind","placements":$placements,"stream_state_diag":$streamDiag,"stream_sharded_state_diag":$shardedStreamDiag,"stream_disk_state_diag":$diskStreamDiag,"n_queries":$nQ,"entries_timed":${timedNames.size},"passes_completed":$passesCompleted,"partial":$partial,"budget_sec":${num(budget, 1)},"elapsed_sec":${num(elapsed(), 1)},"warmup_completed":$warmupCompleted,"protocol":"median-of-3-interleaved-budgeted-lowermid","median_rule":"lower-middle-on-even","query_stats_min_med_max":$stats,"calibration_sec":$calArr,"load_warning":$loadWarning,"contended_queries":$contendedArr,"contended_repass":$repassJson,"capped_query_doc_ids":$capped}"""
+        s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","total_production_sec":${num(totalProduction, 3)},"excluded_declared_surfaces":$excludedArr,"queries":$qs,"sf":"$sfDir","stream_rows_per_sec":${num(streamRps, 1)},"stream_sharded_rows_per_sec":${num(shardedRps, 1)},"stream_rows_per_sec_disk":${num(diskRps, 1)},"stream_disk_leg_note":"disk checkpoint, ${scratch.kind} scratch (spark.local.dir fixed at JVM start)","stream_ckpt":"$streamCkpt","local_dir":"${scratch.kind}","placements":$placements,"stream_state_diag":$streamDiag,"stream_sharded_state_diag":$shardedStreamDiag,"stream_disk_state_diag":$diskStreamDiag,"n_queries":$nQ,"entries_timed":${timedNames.size},"passes_completed":$passesCompleted,"partial":$partial,"budget_sec":${num(budget, 1)},"elapsed_sec":${num(elapsed(), 1)},"warmup_completed":$warmupCompleted,"protocol":"median-of-3-interleaved-budgeted-lowermid","median_rule":"lower-middle-on-even","query_stats_min_med_max":$stats,"calibration_sec":$calArr,"load_warning":$loadWarning,"contended_queries":$contendedArr,"contended_repass":$repassJson,"capped_query_doc_ids":$capped}"""
       // atomic publish: a kill mid-write must not leave a truncated file
       val tmp = Paths.get(outFile + ".tmp")
       Files.write(tmp,
@@ -339,11 +276,6 @@ object Bench {
     // unthrottled replay of `events` through the FADS transformWithState
     // operator. Headline legs checkpoint to RAM (/dev/shm) when present;
     // the disk-checkpoint production path is a separate diag leg.
-    def ckptBase(): (java.nio.file.Path, String) =
-      if (shmIsRam) // probe-verified tmpfs, not just path existence
-        (Files.createTempDirectory(shm, "graft-bench-ckpt"), "ramfs")
-      else (Files.createTempDirectory("graft-bench-ckpt"), "disk")
-
     def runStreamingLegs(): Unit = try {
       val events = Tables.load(spark, sfDir, "events")
         .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -356,9 +288,12 @@ object Bench {
       val rowsPerFile = math.max(5000, (nRows / 10).toInt)
       PacedReplay.stage(events, Seq("ts", "event_id"), rowsPerFile, stageDir)
       val listener = ThroughputHistory.attach(spark)
-      val (ckptRoot, ckptKind) = ckptBase()
-      streamCkpt = ckptKind
-      streamCkptPlacement = placementJson(ckptKind, fsProbe(ckptRoot))
+      // beside the scratch dir: on the probe-verified tmpfs, else in
+      // java.io.tmpdir
+      val ckptRoot =
+        Files.createTempDirectory(scratch.dir.getParent, "graft-bench-ckpt")
+      streamCkpt = scratch.kind
+      streamCkptPlacement = Session.probe(ckptRoot).json(scratch.kind)
       // per-leg state-store cost attribution (round-11 verdict item 2)
       def stateDiag(
           progs: Array[org.apache.spark.sql.streaming.StreamingQueryProgress])
@@ -404,7 +339,7 @@ object Bench {
         // non-headline diag: DISK checkpoint (RocksDB scratch stays under
         // spark.local.dir — see stream_disk_leg_note), once
         val diskCkpt = Files.createTempDirectory("bench-ckpt-disk")
-        diskCkptPlacement = placementJson("disk", fsProbe(diskCkpt))
+        diskCkptPlacement = Session.probe(diskCkpt).json("disk")
         val (dsec, ddiag) = singleLeg(diskCkpt)
         streamDiskSec = dsec; diskStreamDiag = ddiag
         // scale-out variant: 8 independent FADS shards (hash on user) —

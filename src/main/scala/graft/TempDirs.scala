@@ -11,15 +11,15 @@ import java.nio.file.{Files, Path}
   */
 object TempDirs {
 
-  /** Optional scratch-placement hint, set by an entrypoint BEFORE the
-    * first [[scoped]] call (r17, guide §6 I/O placement): the bench and
-    * the timing tools put `spark.local.dir` (shuffle + RocksDB working
-    * dirs) on tmpfs when /dev/shm probes as RAM — entry-internal staging
-    * and throwaway streaming checkpoints belong on the same scratch tier,
-    * not on whatever disk backs java.io.tmpdir (measured: each
-    * micro-batch pays 100-400 ms of RocksDB changelog + WAL fsync against
-    * ext4 /tmp). Ignored once the root exists; correctness runs (Verify)
-    * set no hint and keep the default placement.
+  /** Optional scratch-placement hint, set BEFORE the first [[scoped]]
+    * call (r17, guide §6 I/O placement): [[Session.builder]] puts
+    * `spark.local.dir` (shuffle + RocksDB working dirs) on tmpfs when
+    * /dev/shm probes as RAM — entry-internal staging and throwaway
+    * streaming checkpoints belong on the same scratch tier, not on
+    * whatever disk backs java.io.tmpdir (measured: each micro-batch pays
+    * 100-400 ms of RocksDB changelog + WAL fsync against ext4 /tmp).
+    * Ignored once the root exists; specs set no hint and keep the default
+    * placement.
     */
   @volatile private var rootHint: Option[Path] = None
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,14 +9,8 @@ object Verify {
       case Array(s, o, sel)  => (s, o, Some(sel.split(',').toSet))
       case _ => sys.error("usage: Verify <sfDir> <outDir> [name1,name2,...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session, so the oracle checks the engine that Bench times
+    val spark = Session.start("graft-verify")
     new java.io.File(outDir).mkdirs()
     // optional selector (3rd arg, comma-separated): dump only the named
     // entries — targeted local iteration; the driver always runs all

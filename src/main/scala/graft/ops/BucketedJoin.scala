@@ -32,11 +32,6 @@ object BucketedJoin {
   /** Bucket fan-out of the staged tables (matches both sides). */
   val Buckets = 8
 
-  private def hadoopFs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   private val statsCache =
     scala.collection.concurrent.TrieMap[String, (Long, Long)]()
 
@@ -71,7 +66,7 @@ object BucketedJoin {
     val (n, f) = sourceStats(spark, dir)
     val root = "/tmp/graft_bucketed/" +
       dir.replaceAll("[^A-Za-z0-9.]", "_") + s"_b${Buckets}_n${n}_f$f"
-    val (fs, rootPath) = hadoopFs(spark, root)
+    val (fs, rootPath) = IndexCommit.fsOf(spark, root)
     IndexCommit.ensure(fs, rootPath)(r =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$r/_DONE"))) { tmp =>
       Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey").foreach {
@@ -108,7 +103,7 @@ object BucketedJoin {
             .getTableMetadata(
               org.apache.spark.sql.catalyst.TableIdentifier(tbl))
             .location
-          val (fs, expect) = hadoopFs(spark, s"$root/$t")
+          val (fs, expect) = IndexCommit.fsOf(spark, s"$root/$t")
           fs.makeQualified(expect).toUri == loc
         }
       if (locCurrent("graft_bkt_orders", "orders") &&

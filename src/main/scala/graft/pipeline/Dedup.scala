@@ -902,48 +902,25 @@ object Dedup {
     */
   val ManifestFile = "_buckets"
 
-  private def hadoopFs(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Overwrite the index's bucket manifest with `buckets`. Metadata-scale
     * by construction (≤ B × IndexBuckets lines).
     */
   private[pipeline] def writeManifest(spark: SparkSession, indexPath: String,
       buckets: Set[(Int, Int)]): Unit = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(indexPath, ManifestFile), true)
-    try out.write(buckets.toSeq.sorted
-      .map { case (b, h) => s"$b,$h" }.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
+    IndexCommit.writeLines(fs, new org.apache.hadoop.fs.Path(root, ManifestFile),
+      buckets.toSeq.sorted.map { case (b, h) => s"$b,$h" })
   }
 
-  /** The committed bucket set of an index. FAILS LOUD when the manifest is
-    * absent — a pruned probe must never silently degrade to "no buckets ⇒
-    * empty result" (the failure mode of probing the filesystem from the
-    * driver on a store where the paths never "exist").
+  /** The committed bucket set of an index; fails loud when the manifest
+    * is absent ([[IndexCommit.readLines]]).
     */
   def readManifest(spark: SparkSession, indexPath: String): Set[(Int, Int)] = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    val mf = new org.apache.hadoop.fs.Path(indexPath, ManifestFile)
-    if (!fs.exists(mf))
-      throw new IllegalStateException(
-        s"no $ManifestFile manifest at $indexPath — index was not built by " +
-          "ensureMinhashIndex (or predates the manifest); rebuild the index")
-    val in = fs.open(mf)
-    val text = try {
-      val bs = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 65536, false)
-      bs.toString("UTF-8")
-    } finally in.close()
-    text.split('\n').iterator.filter(_.nonEmpty).map { l =>
-      val Array(b, h) = l.split(',')
-      (b.toInt, h.toInt)
-    }.toSet
+    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
+    IndexCommit.readLines(fs, new org.apache.hadoop.fs.Path(root, ManifestFile),
+      s"no $ManifestFile manifest at $indexPath — index was not built by " +
+        "ensureMinhashIndex (or predates the manifest); rebuild the index")
+      .map { l => val Array(b, h) = l.split(','); (b.toInt, h.toInt) }.toSet
   }
 
   /** Add `extra` buckets to an index's manifest (the append path's
@@ -985,7 +962,7 @@ object Dedup {
     */
   def ensureMinhashIndex(spark: SparkSession, dir: String): String = {
     val path = indexPath(spark, dir)
-    val (fs, root) = hadoopFs(spark, path)
+    val (fs, root) = IndexCommit.fsOf(spark, path)
     def committed(r: org.apache.hadoop.fs.Path) =
       fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
         fs.exists(new org.apache.hadoop.fs.Path(r, ManifestFile))

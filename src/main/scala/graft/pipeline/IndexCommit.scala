@@ -1,6 +1,9 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** Cross-process atomic build-then-commit for the persisted index
   * families (MinHash band index, IVF inverted lists, BM25 postings).
@@ -18,8 +21,44 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * builders exactly one publishes; the losers observe the winner's
   * committed index, discard their temp, and proceed — no torn state is
   * ever visible at the final path.
+  *
+  * It also owns the one line-file format of the families' manifests
+  * (`_buckets`, `_postings`, `_lists`, the snapshot versions): each caller
+  * keeps its own line syntax and its own missing-manifest message.
   */
 object IndexCommit {
+
+  /** The Hadoop FileSystem that serves `path`, with `path` itself. */
+  def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** Overwrite the line file `file` with `lines`, each newline-terminated
+    * UTF-8. The manifests written here are metadata-scale by construction.
+    */
+  def writeLines(fs: FileSystem, file: Path, lines: Seq[String]): Unit = {
+    val out = fs.create(file, true)
+    try out.write(lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** The non-empty lines of the manifest `file`. FAILS LOUD with
+    * `missing` as the message when the file is absent: a pruned reader
+    * must never silently degrade to "no entries, so an empty result" (the
+    * failure mode of probing the filesystem from the driver on a store
+    * where the paths never "exist").
+    */
+  def readLines(fs: FileSystem, file: Path, missing: => String): Seq[String] = {
+    if (!fs.exists(file)) throw new IllegalStateException(missing)
+    val in = fs.open(file)
+    val text = try {
+      val bs = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 65536, false)
+      bs.toString("UTF-8")
+    } finally in.close()
+    text.split('\n').toSeq.filter(_.nonEmpty)
+  }
 
   /** Ensure a committed index at `finalRoot`: no-op when `isCommitted`
     * already holds; otherwise run `build` into a temp sibling and commit

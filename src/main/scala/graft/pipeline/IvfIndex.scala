@@ -208,11 +208,6 @@ object IvfIndex {
 
   // ------------------------------------------------------ on-disk protocol
 
-  private def hadoopFs(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Index location, keyed by corpus dir, codebook size AND the corpus
     * content fingerprint of [[corpusStats]] (the never-share contract of
     * [[Dedup.indexPath]]: a regenerated corpus at the same dir rebuilds
@@ -235,30 +230,20 @@ object IvfIndex {
 
   private def listsManifestWrite(spark: SparkSession, indexPath: String,
       lists: Set[Long]): Unit = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    val out = fs.create(new Path(indexPath, ListsManifestFile), true)
-    try out.write(lists.toSeq.sorted.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
+    IndexCommit.writeLines(fs, new Path(root, ListsManifestFile),
+      lists.toSeq.sorted.map(_.toString))
   }
 
-  /** Committed inverted-list ids. FAILS LOUD when absent — a pruned probe
-    * must never silently degrade to an empty result.
+  /** Committed inverted-list ids; fails loud when absent
+    * ([[IndexCommit.readLines]]).
     */
   def listsManifestRead(spark: SparkSession, indexPath: String): Set[Long] = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    val mf = new Path(indexPath, ListsManifestFile)
-    if (!fs.exists(mf))
-      throw new IllegalStateException(
-        s"no $ListsManifestFile manifest at $indexPath — index was not " +
-          "built by IvfIndex.ensure; rebuild the index")
-    val in = fs.open(mf)
-    val text = try {
-      val bs = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 65536, false)
-      bs.toString("UTF-8")
-    } finally in.close()
-    text.split('\n').iterator.filter(_.nonEmpty).map(_.toLong).toSet
+    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
+    IndexCommit.readLines(fs, new Path(root, ListsManifestFile),
+      s"no $ListsManifestFile manifest at $indexPath — index was not " +
+        "built by IvfIndex.ensure; rebuild the index")
+      .map(_.toLong).toSet
   }
 
   /** Repartition-by-list write of list rows under `root`. */
@@ -274,7 +259,7 @@ object IvfIndex {
     */
   private def publish(spark: SparkSession, root: String, layout: Layout)(
       build: Path => Unit): Unit = {
-    val (fs, r) = hadoopFs(spark, root)
+    val (fs, r) = IndexCommit.fsOf(spark, root)
     IndexCommit.ensure(fs, r)(committed(fs, _, layout)) { tmp =>
       build(tmp)
       val lists = fs.listStatus(tmp).iterator
@@ -322,7 +307,7 @@ object IvfIndex {
     * neighbors.
     */
   def open(spark: SparkSession, indexPath: String, layout: Layout): Model = {
-    val (fs, root) = hadoopFs(spark, indexPath)
+    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
     val gone = missing(fs, root, layout)
     if (gone.nonEmpty)
       throw new IllegalStateException(
@@ -533,7 +518,7 @@ object IvfIndex {
     * accounting ([[graft.pipeline.IvfCompactSpec]] pins N→1).
     */
   def listFileCounts(spark: SparkSession, indexPath: String): Map[Long, Int] = {
-    val (fs, _) = hadoopFs(spark, indexPath)
+    val (fs, _) = IndexCommit.fsOf(spark, indexPath)
     listsManifestRead(spark, indexPath).toSeq.sorted.map { c =>
       c -> fs.listStatus(new Path(s"$indexPath/c_id=$c")).count { s =>
         val n = s.getPath.getName
@@ -561,7 +546,7 @@ object IvfIndex {
         writeLists(spark.read.option("basePath", src)
           .parquet(fragmented.map(c => s"$src/c_id=$c"): _*)
           .select("vec_id", "emb", "nrm", "c_id"), tmp.toString, "append")
-      val (fs, _) = hadoopFs(spark, tmp.toString)
+      val (fs, _) = IndexCommit.fsOf(spark, tmp.toString)
       val succ = new Path(tmp, "_SUCCESS")
       if (!fs.exists(succ)) fs.create(succ).close()
     }

@@ -150,7 +150,7 @@ object QualityClassifier {
     * floor (guide §2, r17): the single-file bench corpus scans as ONE task,
     * and featurize's per-row work (token split + 32 bucket counts over the
     * marker-padded text) then runs serially — measured 2.9 s in one task at
-    * sf0.1 under local[32] (tools/JobDiag). At scale the scan is already
+    * sf0.1 under local[32] (tools/Diag). At scale the scan is already
     * wide and [[graft.BatchSizing.widen]] is a no-op.
     */
   private def labeledWide(spark: SparkSession, dir: String): DataFrame =

@@ -225,38 +225,20 @@ object Retrieval {
     */
   val ManifestFile = "_postings"
 
-  private def hadoopFs(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   private[pipeline] def writeTbManifest(spark: SparkSession, root: String,
       tbs: Set[Int]): Unit = {
-    val (fs, _) = hadoopFs(spark, root)
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, ManifestFile), true)
-    try out.write(tbs.toSeq.sorted.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val (fs, r) = IndexCommit.fsOf(spark, root)
+    IndexCommit.writeLines(fs, new org.apache.hadoop.fs.Path(r, ManifestFile),
+      tbs.toSeq.sorted.map(_.toString))
   }
 
-  /** FAILS LOUD when absent — a pruned probe must never silently degrade
-    * to "no buckets ⇒ empty result".
-    */
+  /** Fails loud when absent ([[IndexCommit.readLines]]). */
   def readTbManifest(spark: SparkSession, root: String): Set[Int] = {
-    val (fs, _) = hadoopFs(spark, root)
-    val mf = new org.apache.hadoop.fs.Path(root, ManifestFile)
-    if (!fs.exists(mf))
-      throw new IllegalStateException(
-        s"no $ManifestFile manifest at $root — index was not built by " +
-          "ensureBm25Index (or predates the manifest); rebuild the index")
-    val in = fs.open(mf)
-    val text = try {
-      val bs = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 65536, false)
-      bs.toString("UTF-8")
-    } finally in.close()
-    text.split('\n').iterator.filter(_.nonEmpty).map(_.toInt).toSet
+    val (fs, r) = IndexCommit.fsOf(spark, root)
+    IndexCommit.readLines(fs, new org.apache.hadoop.fs.Path(r, ManifestFile),
+      s"no $ManifestFile manifest at $root — index was not built by " +
+        "ensureBm25Index (or predates the manifest); rebuild the index")
+      .map(_.toInt).toSet
   }
 
   private def augmentTbManifest(spark: SparkSession, root: String,
@@ -299,7 +281,7 @@ object Retrieval {
     */
   def ensureBm25Index(spark: SparkSession, dir: String): String = {
     val root = indexPath(spark, dir)
-    val (fs, rootP) = hadoopFs(spark, root)
+    val (fs, rootP) = IndexCommit.fsOf(spark, root)
     def committed(r: org.apache.hadoop.fs.Path) = {
       def ok(rel: String) =
         fs.exists(new org.apache.hadoop.fs.Path(s"$r/$rel"))
@@ -502,7 +484,7 @@ object Retrieval {
     * stay query-proportional.
     */
   def ensureBlockMax(spark: SparkSession, root: String): Unit = {
-    val (fs, _) = hadoopFs(spark, root)
+    val (fs, _) = IndexCommit.fsOf(spark, root)
     // committed = _SUCCESS present AND the upsert-layout `ver` column
     // exists (a sidecar from before the append support is rebuilt — the
     // schema read is metadata-only)
@@ -757,7 +739,7 @@ object Retrieval {
     val (rows, fp) = Dedup.docsStats(spark, dir)
     val d = s"/tmp/graft_bm25_$tag/" +
       dir.replaceAll("[^A-Za-z0-9.]", "_") + s"_n${rows}_f$fp"
-    val (fs, root) = hadoopFs(spark, d)
+    val (fs, root) = IndexCommit.fsOf(spark, d)
     IndexCommit.ensure(fs, root)(r =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$r/documents.parquet/_SUCCESS"))) {
       tmp =>

@@ -2169,7 +2169,7 @@ object Similarity {
     // scan): the caller caches this frame, and an unwidened cache holds
     // ONE partition — every downstream probe/topk job over the ×10
     // corpus then runs its 50k-row vector math as a chain of SINGLE-TASK
-    // jobs (JobDiag: seven ~1.3 s one-task jobs at sf0.1)
+    // jobs (Diag: seven ~1.3 s one-task jobs at sf0.1)
     graft.BatchSizing.widen(
         Tables.load(spark, dir, "embeddings"),
         corpusStats(spark, dir)._1)

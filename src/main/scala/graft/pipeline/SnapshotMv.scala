@@ -41,11 +41,6 @@ object SnapshotMv {
 
   private val VersionsDir = "_versions"
 
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Write manifest `lines` for snapshot `ver` and commit it atomically
     * (temp file + rename — the protocol's only commit primitive).
     */
@@ -60,10 +55,7 @@ object SnapshotMv {
       entries: Seq[(String, String)]): Unit = {
     fs.mkdirs(new Path(work, VersionsDir))
     val tmp = new Path(s"$work/$VersionsDir/.tmp-$name")
-    val out = fs.create(tmp, true)
-    try out.write(entries.sorted.map { case (s, f) => s"$s,$f" }
-      .mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    IndexCommit.writeLines(fs, tmp, entries.sorted.map { case (s, f) => s"$s,$f" })
     val fin = new Path(s"$work/$VersionsDir/$name")
     if (!fs.rename(tmp, fin))
       throw new java.io.IOException(s"manifest commit failed for $name")
@@ -80,21 +72,13 @@ object SnapshotMv {
   /** Named-ref read — fails loud like the versioned form. */
   def readManifestNamed(spark: SparkSession, work: String,
       name: String): Seq[(String, String)] = {
-    val (fs, _) = fsOf(spark, work)
-    val mf = new Path(s"$work/$VersionsDir/$name")
-    if (!fs.exists(mf))
-      throw new IllegalStateException(
-        s"snapshot $name has no manifest at $work — vacuumed or never committed")
-    val in = fs.open(mf)
-    val text = try {
-      val bs = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 65536, false)
-      bs.toString("UTF-8")
-    } finally in.close()
-    text.split('\n').iterator.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf(',')
-      (l.substring(0, i), l.substring(i + 1))
-    }.toSeq
+    val (fs, _) = IndexCommit.fsOf(spark, work)
+    IndexCommit.readLines(fs, new Path(s"$work/$VersionsDir/$name"),
+      s"snapshot $name has no manifest at $work — vacuumed or never committed")
+      .map { l =>
+        val i = l.indexOf(',')
+        (l.substring(0, i), l.substring(i + 1))
+      }
   }
 
   /** Read snapshot `ver`, optionally restricted to `sources` (manifest-
@@ -138,7 +122,7 @@ object SnapshotMv {
     val staging = graft.TempDirs.scoped(s"snap-$tag")
     rows.repartition(col("source"))
       .write.mode("overwrite").partitionBy("source").parquet(staging)
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     fs.listStatus(new Path(staging))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("source="))
       .flatMap { d =>
@@ -158,7 +142,7 @@ object SnapshotMv {
 
   /** Commit snapshot 1: the full rollup as the initial file set. */
   def commitInitial(spark: SparkSession, work: String, docs: DataFrame): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val files = writePartitionFiles(spark, work, 1L, rollup(docs))
     commitManifest(fs, work, 1L, files)
   }
@@ -171,7 +155,7 @@ object SnapshotMv {
     */
   def commitDelta(spark: SparkSession, work: String, docs: DataFrame,
       ver: Long): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val delta = rollup(docs)
     val touched = delta.select("source").distinct()
       .collect().map(_.getString(0)).toSet // metadata-scale: partition keys
@@ -203,7 +187,7 @@ object SnapshotMv {
     */
   def commitDelete(spark: SparkSession, work: String, ver: Long,
       deleteWhere: String): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val prev = readSnapshotManifest(spark, work, ver - 1)
     val touched = readSnapshot(spark, work, ver - 1)
       .where(deleteWhere).select("source").distinct()
@@ -258,7 +242,7 @@ object SnapshotMv {
     * touches a file the kept snapshot references.
     */
   def vacuum(spark: SparkSession, work: String, keep: Long): Unit = {
-    val (fs, root) = fsOf(spark, work)
+    val (fs, root) = IndexCommit.fsOf(spark, work)
     val referenced = readSnapshotManifest(spark, work, keep)
       .map { case (s, f) => s"source=$s/$f" }.toSet
     fs.listStatus(root)
@@ -479,7 +463,7 @@ object SnapshotMv {
     */
   def commitAppend(spark: SparkSession, work: String, ver: Long,
       rows: DataFrame): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val prev = if (ver == 1L) Seq.empty
       else readSnapshotManifest(spark, work, ver - 1)
     commitManifest(fs, work, ver, prev ++ writePartitionFiles(spark, work, ver, rows))
@@ -494,7 +478,7 @@ object SnapshotMv {
     * time travel is untouched until a vacuum reclaims them.
     */
   def commitOptimize(spark: SparkSession, work: String, ver: Long): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val prev = readSnapshotManifest(spark, work, ver - 1)
     val fragmented = prev.groupBy(_._1).filter(_._2.size > 1).keySet
     if (fragmented.isEmpty) { commitManifest(fs, work, ver, prev); return }
@@ -576,7 +560,7 @@ object SnapshotMv {
     */
   def commitIdempotent(spark: SparkSession, work: String, ver: Long,
       batch: DataFrame): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     if (fs.exists(new Path(s"$work/$VersionsDir/v$ver"))) return
     if (batch.isEmpty) return
     if (ver == 1L) commitInitial(spark, work, batch)
@@ -622,7 +606,7 @@ object SnapshotMv {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally q.stop()
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val versions = (1L to StreamChunks.toLong)
       .filter(v => fs.exists(new Path(s"$work/$VersionsDir/v$v")))
     versions.map { v =>
@@ -651,7 +635,7 @@ object SnapshotMv {
     */
   def commitBranch(spark: SparkSession, work: String, fromVer: Long,
       branch: String): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     commitManifestNamed(fs, work, s"$branch-v1",
       readSnapshotManifest(spark, work, fromVer))
   }
@@ -662,7 +646,7 @@ object SnapshotMv {
     */
   def commitBranchDelta(spark: SparkSession, work: String, branch: String,
       ver: Long, docs: DataFrame): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val delta = rollup(docs)
     val touched = delta.select("source").distinct()
       .collect().map(_.getString(0)).toSet // metadata-scale: partition keys
@@ -694,7 +678,7 @@ object SnapshotMv {
   def mergeBranch(spark: SparkSession, work: String, mainHeadVer: Long,
       branch: String, branchBase: Long, branchHead: Long,
       newVer: Long): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val mBase = readManifestNamed(spark, work, s"$branch-v$branchBase").toSet
     val mHead = readManifestNamed(spark, work, s"$branch-v$branchHead").toSet
     val changed = ((mBase diff mHead) ++ (mHead diff mBase)).map(_._1)
@@ -795,7 +779,7 @@ object SnapshotMv {
     val staging = graft.TempDirs.scoped(s"snap-$tag-ev")
     rows.repartition(col("source"), col("lang"))
       .write.mode("overwrite").partitionBy("source", "lang").parquet(staging)
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     fs.listStatus(new Path(staging))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("source="))
       .flatMap { d =>
@@ -827,7 +811,7 @@ object SnapshotMv {
     */
   def commitEvolved(spark: SparkSession, work: String, docs: DataFrame,
       ver: Long): Unit = {
-    val (fs, _) = fsOf(spark, work)
+    val (fs, _) = IndexCommit.fsOf(spark, work)
     val prev = readSnapshotManifest(spark, work, ver - 1)
     val newFiles = writeEvolvedFiles(spark, work, s"v$ver", rollup(docs))
     commitManifest(fs, work, ver, prev ++ newFiles)

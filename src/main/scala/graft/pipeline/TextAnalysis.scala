@@ -292,7 +292,7 @@ object TextAnalysis {
     // widen the single-file scan before the per-CHARACTER explode: the
     // trigram derivation below is consumed by THREE subtrees (c3, pre,
     // score join), each of which otherwise re-runs the ~3.5M-row explode
-    // as one serial task (JobDiag: three ~0.8 s one-task jobs). The
+    // as one serial task (Diag: three ~0.8 s one-task jobs). The
     // round-robin exchange is identical under all three, so ReuseExchange
     // shares it; counts/integer math are partition-order-free. No-op on
     // an already-wide scan (BatchSizing).

@@ -52,7 +52,7 @@ object CrawlAdmit {
     // table's derivation (row-local candidate regex chain over the whole
     // corpus + robots parse) re-ran per trigger just to rebuild the same
     // domain-bounded broadcast. One checkpoint makes each trigger's
-    // broadcast build a cached-row read (StreamDiag: addBatch 1.6-1.7 s →
+    // broadcast build a cached-row read (Diag: addBatch 1.6-1.7 s →
     // the row-local stream chain alone).
     val rules = RobotsFilter.ruleTable(spark,
       CrawlFrontier.candidatesRowLocal(docs).select("domain").distinct())

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -33,10 +34,7 @@ object PacedReplay {
     // full row deserialization; round-2 verdict) and NOT a row_number()
     // window over an empty frame (drags the whole input onto one partition)
     //
-    // __chunk is a ZERO-PADDED string: FileStreamSource admits files by
-    // (modification time, path) and all chunks are written by one job with
-    // near-identical mtimes — the padded path is what guarantees in-order
-    // replay (chunk 10 would sort before chunk 2 unpadded).
+    // __chunk is a ZERO-PADDED string, so path order is chunk order.
     // %09d: lexicographic == numeric order up to 1e9 chunks (%05d broke at
     // 100k — chunk "100000" sorts before "99999"; ADVICE r2)
     // sortWithinPartitions(__chunk, __seq) after the chunk repartition: the
@@ -56,6 +54,19 @@ object PacedReplay {
       .sortWithinPartitions(col("__chunk"), col("__seq"))
       .drop("__seq")
       .write.mode("overwrite").partitionBy("__chunk").parquet(stageDir)
+    // FileStreamSource admits files in modification-time order, and the
+    // path order above does not decide it: concurrent writer tasks finish
+    // chunks out of order (chunk 7 was written before chunk 6, and a
+    // sharded FADS stream then differed from the engine replay in 24,633
+    // of 80,000 rows). So stamp the chunk files with strictly increasing
+    // mtimes in path order, one metadata call per file.
+    val root = new Path(stageDir)
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val files = fs.globStatus(new Path(root, "__chunk=*/*"),
+        (p: Path) => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.toString)
+    val t0 = System.currentTimeMillis() - files.length
+    files.zipWithIndex.foreach { case (f, i) => fs.setTimes(f, t0 + i, -1L) }
   }
 
   /** Open the staged directory as a paced stream.

@@ -1,0 +1,160 @@
+package graft.tools
+
+import java.util.concurrent.Semaphore
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+
+import graft.{Session, SparkEntry}
+
+/** Per-entry diagnosis on Bench's session. For each named entry: one
+  * untimed warm-up and two timed runs through the `noop` sink (Bench's
+  * protocol), then the best-of-2 time and, for the last timed run,
+  *  - every Spark job (wall, stages, tasks, summed task time, description),
+  *    rolled up by description, with the jobs over 200 ms listed;
+  *  - a per-stage-name rollup, where the wall time actually lives;
+  *  - every streaming trigger's duration breakdown and state-store commit
+  *    metrics (a streaming entry's queries are gone once it returns).
+  *
+  * `SPARK_GRAFT_CONF="k=v;k=v"` adds session confs on top of the policy,
+  * so a config hypothesis can be timed without a code edit.
+  *
+  * Usage: runMain graft.tools.Diag <sfDir> <entry...>
+  */
+object Diag {
+
+  final case class JobRow(desc: String, started: Long, nStages: Int,
+      var ended: Long = -1L, var nTasks: Int = 0, var taskMs: Long = 0L)
+
+  /** Description of the marker jobs that bracket the recorded run. */
+  private val Mark = "graft-diag-mark"
+
+  def main(args: Array[String]): Unit = {
+    if (args.length < 2) sys.error("usage: Diag <sfDir> <entry...>")
+    val sfDir = args(0)
+    val builder = Session.builder("graft-diag", Session.placeScratch())
+    // applied after the policy so an experiment can override its values
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
+      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+
+    // Listener events arrive after the actions that caused them, so the
+    // recorded run is bracketed by marker jobs: the listener thread alone
+    // touches these buffers between the markers, and `recorded` releases
+    // once it has seen the closing one, i.e. every event of the run.
+    val jobs = mutable.LinkedHashMap.empty[Int, JobRow]
+    val stageToJob = mutable.Map.empty[Int, Int]
+    val stages = mutable.ArrayBuffer.empty[(String, Long, Int, Long)] // name, wall, tasks, taskMs
+    val stageTasks = mutable.Map.empty[Int, (Int, Long)]
+    val triggers = mutable.ArrayBuffer.empty[String]
+    val recorded = new Semaphore(0)
+    var recording = false
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        // the result stage (highest id) is named after the action's call
+        // site; a stream's description adds its id lines
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.maxBy(_.stageId).name).takeWhile(_ != '\n')
+        if (desc == Mark) {
+          recording = !recording
+          if (!recording) recorded.release()
+        } else if (recording) {
+          jobs(e.jobId) = JobRow(desc, e.time, e.stageIds.size)
+          e.stageIds.foreach(stageToJob(_) = e.jobId)
+        }
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (recording) jobs.get(e.jobId).foreach(_.ended = e.time)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (recording && stageToJob.contains(e.stageId)) {
+          val ms = Option(e.taskMetrics)
+            .map(m => m.executorRunTime + m.executorDeserializeTime).getOrElse(0L)
+          val (n, t) = stageTasks.getOrElse(e.stageId, (0, 0L))
+          stageTasks(e.stageId) = (n + 1, t + ms)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (recording) {
+          val si = e.stageInfo
+          stageToJob.get(si.stageId).flatMap(jobs.get).foreach { job =>
+            val (n, t) = stageTasks.getOrElse(si.stageId, (0, 0L))
+            job.nTasks += n; job.taskMs += t
+            val wall = (for (s <- si.submissionTime; c <- si.completionTime)
+              yield c - s).getOrElse(0L)
+            stages += ((si.name, wall, n, t))
+          }
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent if recording => triggers += trigger(p)
+        case _ => ()
+      }
+    })
+
+    def mark(): Unit = {
+      spark.sparkContext.setJobDescription(Mark)
+      try spark.sparkContext.parallelize(Seq(0), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    def s(ms: Long): String = f"${ms / 1000.0}%8.3f s"
+
+    args.drop(1).foreach { name =>
+      val fn = SparkEntry.queries(name)
+      def run(): Double = {
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        finally spark.catalog.clearCache() // entries cache() internally
+        (System.nanoTime() - t0) / 1e9
+      }
+      run() // warm-up
+      val first = run()
+      jobs.clear(); stageToJob.clear(); stages.clear(); stageTasks.clear()
+      triggers.clear()
+      mark()
+      val last = try run() finally mark()
+      recorded.acquire()
+
+      val rows = jobs.values.toSeq
+      def wall(r: JobRow): Long = math.max(0L, r.ended - r.started)
+      println(f"\n===== $name: best-of-2 ${math.min(first, last)}%.3f s, " +
+        f"last run ${rows.size} jobs, sum job wall ${rows.map(wall).sum / 1000.0}%.3f s =====")
+      rows.groupBy(_.desc.take(90)).toSeq.sortBy(-_._2.map(wall).sum)
+        .foreach { case (d, rs) =>
+          println(f"  ${s(rs.map(wall).sum)}  jobs=${rs.size}%-3d " +
+            f"tasks=${rs.map(_.nTasks).sum}%-5d taskTime=${s(rs.map(_.taskMs).sum)}  $d")
+        }
+      jobs.toSeq.filter(j => wall(j._2) > 200).sortBy(j => -wall(j._2)).take(20)
+        .foreach { case (id, r) =>
+          println(f"    job $id%-4d ${s(wall(r))} stages=${r.nStages} " +
+            f"tasks=${r.nTasks} ${r.desc.take(90)}")
+        }
+      stages.groupBy(_._1).toSeq.sortBy(-_._2.map(_._2).sum).take(25)
+        .foreach { case (nm, ss) =>
+          println(f"  stage ${s(ss.map(_._2).sum)}  n=${ss.size}%-3d " +
+            f"tasks=${ss.map(_._3).sum}%-5d taskTime=${s(ss.map(_._4).sum)}  ${nm.take(100)}")
+        }
+      triggers.foreach(println)
+    }
+    spark.stop()
+  }
+
+  /** One trigger's duration breakdown and state-store commit metrics. */
+  private def trigger(e: QueryProgressEvent): String = {
+    val p = e.progress
+    def ms(k: String): Long =
+      Option(p.durationMs.get(k)).map(_.longValue).getOrElse(-1L)
+    val st = p.stateOperators.map { so =>
+      val fsync = Option(so.customMetrics.get("rocksdbCommitFileSyncLatencyMs"))
+        .map(_.longValue).getOrElse(0L)
+      s"commit=${so.commitTimeMs}ms upd=${so.allUpdatesTimeMs}ms " +
+        s"fsync=${fsync}ms rows=${so.numRowsTotal} shards=${so.numShufflePartitions}"
+    }.mkString(" | ")
+    s"  trigger ${p.name} batch=${p.batchId} in=${p.numInputRows} " +
+      s"trigger=${ms("triggerExecution")}ms addBatch=${ms("addBatch")}ms " +
+      s"getBatch=${ms("getBatch")}ms latestOffset=${ms("latestOffset")}ms " +
+      s"walCommit=${ms("walCommit")}ms commitOffsets=${ms("commitOffsets")}ms " +
+      s"state[$st]"
+  }
+}

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Plan auditor: prints the formatted physical plan of every declared query
   * (or the ones named in args) so scan pruning (`ReadSchema`), pushed filters
@@ -15,13 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSet else SparkEntry.queries.keySet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start("graft-explain")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.contains(name)) {
         println(s"\n========== $name ==========")

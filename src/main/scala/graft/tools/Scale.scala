@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.{SparkEntry, Tables}
+import graft.{Session, SparkEntry, Tables}
 
 /** Scale-evidence harness (round-7 verdict item 1): replicate the sf0.1
   * tables k-fold with key shifts and per-copy text salting, then time the
@@ -52,18 +52,7 @@ object Scale {
   private def num(v: Double, dp: Int = 3): String =
     String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+  private lazy val spark: SparkSession = Session.start("graft-scale")
 
   private def timed(body: => Unit): Double = {
     val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
@@ -71,24 +60,24 @@ object Scale {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: base :: out :: k :: rest =>
-      gen(session(), base, out, k.toInt, corpusOnly = rest.contains("corpusOnly"),
+      gen(spark, base, out, k.toInt, corpusOnly = rest.contains("corpusOnly"),
         eventsOnly = rest.contains("eventsOnly"),
         relOnly = rest.contains("relOnly"))
     case "run" :: dir :: label :: names if names.nonEmpty =>
-      run(session(), dir, label, names)
+      run(spark, dir, label, names)
     case "show" :: dir :: names if names.nonEmpty =>
-      show(session(), dir, names)
+      show(spark, dir, names)
     case "append" :: dir :: Nil =>
-      appendCost(session(), dir)
+      appendCost(spark, dir)
     case "inplace" :: batchDir :: indexDir :: Nil =>
-      inplaceCost(session(), batchDir, indexDir)
+      inplaceCost(spark, batchDir, indexDir)
     case "probe" :: batchDir :: indexDir :: rest if rest.size <= 1 =>
-      probe(session(), batchDir, indexDir,
+      probe(spark, batchDir, indexDir,
         rest.headOption.map(_.toInt).getOrElse(1))
     case "ivfprobe" :: batchDir :: indexDir :: Nil =>
-      ivfProbe(session(), batchDir, indexDir)
+      ivfProbe(spark, batchDir, indexDir)
     case "bm25" :: indexDir :: Nil =>
-      bm25Probe(session(), indexDir)
+      bm25Probe(spark, indexDir)
     case "stream" :: dir :: Nil =>
       stream(dir)
     case "streamdiag" :: dir :: Nil =>
@@ -383,16 +372,7 @@ object Scale {
     * custom metrics) can be attributed instead of argued about.
     */
   def streamDiag(dir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.streaming.FadsStream.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.cpus.toString
     import spark.implicits._
     import graft.streaming.{Event, FadsStream, PacedReplay}
 
@@ -432,16 +412,7 @@ object Scale {
   }
 
   def stream(dir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.streaming.FadsStream.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.cpus.toString
     import spark.implicits._
     import graft.streaming.{Event, FadsStream, PacedReplay}
 

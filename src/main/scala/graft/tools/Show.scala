@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Print a query's result rows — quick eyeball check while iterating.
   *
@@ -12,15 +10,7 @@ object Show {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start("graft-show")
     names.foreach { name =>
       println(s"=== $name @ $sfDir")
       SparkEntry.queries(name)(spark, sfDir).show(50, truncate = false)

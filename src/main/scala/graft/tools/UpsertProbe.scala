@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.pipeline.Dedup
 
 /** Scratch measurement harness (guide §1) for the bucket-wise upsert that
@@ -16,15 +16,7 @@ import graft.pipeline.Dedup
 object UpsertProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start("graft-upsert-probe")
     def timed[A](name: String)(body: => A): A = {
       val t0 = System.nanoTime(); val a = body
       println(f"[probe] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")

@@ -1,0 +1,74 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.FadsStream
+
+/** The one session policy, checked without starting a session: the specs
+  * share one JVM, and a `getOrCreate` here would push RocksDB and the other
+  * policy confs onto every later spec.
+  */
+class SessionSpec extends AnyFunSuite {
+
+  /** A builder that only records what is set on it. */
+  private class Recording extends SparkSession.Builder {
+    def confs: Map[String, String] = options.toMap
+  }
+
+  test("the policy sets every FadsStream.configure conf and one shuffle partition per core") {
+    val fads = new Recording
+    FadsStream.configure(fads)
+    assert(fads.confs.nonEmpty)
+    // a scratch dir that does not exist leaves the TempDirs hint untouched
+    val scratch = Session.Scratch(Paths.get("/nonexistent/graft-scratch"), "disk",
+      Session.Probe("absent", -1.0), Session.Probe("absent", -1.0))
+    val policy = new Recording
+    Session.builder("spec", scratch, policy)
+    val confs = policy.confs
+    fads.confs.foreach { case (k, v) =>
+      assert(confs.get(k).contains(v), s"$k must be $v")
+    }
+    val cpus = Session.cpus
+    assert(confs("spark.master") == s"local[$cpus]")
+    assert(confs("spark.sql.shuffle.partitions") == cpus.toString)
+    assert(confs("spark.sql.adaptive.enabled") == "true")
+    assert(confs("spark.sql.session.timeZone") == "UTC")
+    assert(confs("spark.ui.enabled") == "false")
+    assert(confs("spark.local.dir") == scratch.dir.toString)
+  }
+
+  test("scratch is labelled disk when /dev/shm is absent or probes at disk speed") {
+    val s = Session.placeScratch(Paths.get("/nonexistent/shm"))
+    try {
+      assert(s.kind == "disk")
+      assert(s.shm.fsType == "absent")
+      assert(s.dir.getParent == Paths.get(System.getProperty("java.io.tmpdir")))
+    } finally Files.deleteIfExists(s.dir)
+    assert(!Session.onRam(Session.Probe("tmpfs", 35.0)), "tmpfs at disk speed")
+    assert(!Session.onRam(Session.Probe("tmpfs", -1.0)), "failed probe")
+    assert(!Session.onRam(Session.Probe("ext4", 0.1)), "fast disk")
+    assert(Session.onRam(Session.Probe("tmpfs", 0.1)))
+  }
+
+  test("Session.scala holds the only SparkSession.builder() call under src/main") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root))
+    val walk = Files.walk(root)
+    val sites = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .toList.flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("SparkSession.builder()") && {
+                val t = l.trim
+                !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+              } => s"${root.relativize(f)}:${i + 1}"
+        }
+      } finally walk.close()
+    assert(sites.size == 1 && sites.head.startsWith("graft/Session.scala:"),
+      s"builder sites: $sites")
+  }
+}

@@ -49,6 +49,44 @@ class PacedReplaySpec extends AnyFunSuite {
     spark.streams.removeListener(listener)
   }
 
+  test("staged chunks replay in chunk order under concurrent writers") {
+    val chunks = 40
+    val stageDir = Files.createTempDirectory("order-stage").toString
+    // four writer tasks finish their chunk files in any order; AQE would
+    // otherwise coalesce this tiny input into a single writer
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try PacedReplay.stage(spark.range(0, 2 * chunks).selectExpr("id AS i"),
+      Seq("i"), rowsPerFile = 2, stageDir)
+    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+
+    val root = new org.apache.hadoop.fs.Path(stageDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.globStatus(new org.apache.hadoop.fs.Path(root, "__chunk=*/*.parquet"))
+      .sortBy(_.getPath.toString)
+    assert(files.length == chunks, "one file per chunk")
+    val mtimes = files.map(_.getModificationTime).toSeq
+    assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
+      s"chunk mtimes must strictly increase in chunk order: $mtimes")
+
+    val batches = java.util.concurrent.ConcurrentHashMap.newKeySet[(Long, Long, Long)]()
+    val q = PacedReplay.stream(spark, stageDir, new org.apache.spark.sql.types.StructType()
+        .add("i", "long"), filesPerTrigger = 1)
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        val r = df.agg(org.apache.spark.sql.functions.min("i"),
+          org.apache.spark.sql.functions.max("i")).head()
+        batches.add((id, r.getLong(0), r.getLong(1)))
+        ()
+      }
+      .option("checkpointLocation", Files.createTempDirectory("order-ckpt").toString)
+      .trigger(PacedReplay.trigger(0))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val got = batches.toArray(Array.empty[(Long, Long, Long)]).sortBy(_._1).toSeq
+    assert(got == (0 until chunks).map(c => (c.toLong, 2L * c, 2L * c + 1)),
+      "one chunk per trigger, admitted in chunk order")
+  }
+
   test("runFor enforces the reference's wall-clock runtime bound") {
     import spark.implicits._
     val sfDir = "/root/testdata/sf0.001"

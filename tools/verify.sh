@@ -42,7 +42,7 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt -batch "runMain graft.Bench" \
   > /tmp/verify_gate_bench.out 2>&1 || { tail -20 /tmp/verify_gate_bench.out; exit 1; }
 python3 - <<'EOF'
 import json
-with open('/root/repo/bench_out.json') as f:  # Bench writes it every run
+with open('bench_out.json') as f:  # Bench writes it into this checkout every run
     d = json.loads(f.readline())
 assert d.get('queries'), 'bench JSON has no queries map'
 bad = [k for k, v in d['queries'].items()
