@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.{PacedReplay, StateSizing}
 
 /** Sketch/approximate aggregates — the cardinality/quantile estimators a
   * 100 TB pipeline leans on when exact distinct/sort is too expensive
@@ -219,32 +220,20 @@ object Sketches {
     */
   def streamCmsHeavy(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.TextAnalysis.polyHashExpr
-    import graft.streaming.PacedReplay
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
-    val stageDir = graft.TempDirs.scoped("cms-stage") + "/docs"
     val nDocs = docs.count()
-    val rowsPerFile = math.max(1L, nDocs / 4L).toInt
-    PacedReplay.stage(docs, Seq("doc_id"), rowsPerFile, stageDir)
-    val streamAgg = PacedReplay.stream(spark, stageDir, docs.schema)
-      .selectExpr("explode(split(text, ' ')) AS w")
-      .selectExpr(s"${polyHashExpr("w")} AS ph")
-      .selectExpr(s"posexplode(array($cmsCellArrExpr)) AS (r, cell)")
-      .groupBy("r", "cell").agg(count(lit(1)).as("cellsum"))
-    val qn = "graft_stream_cms_sketch"
     // the sketch's whole state is ≤ d·w cells FOREVER — partitions beyond
     // that are per-trigger commit overhead at any corpus size (StateSizing)
-    graft.streaming.StateSizing.withStatePartitions(spark,
-      graft.streaming.StateSizing.statePartitions(spark, nDocs,
-        stateRowsBound = CmsA.size.toLong * CmsW)) {
-      val q = streamAgg.writeStream
-        .outputMode("complete").format("memory").queryName(qn)
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
+    val sketch = PacedReplay.drain(docs, Seq("doc_id"), nDocs,
+        "graft_stream_cms_sketch", "complete",
+        Some(StateSizing.statePartitions(spark, nDocs,
+          stateRowsBound = CmsA.size.toLong * CmsW))) {
+      _.selectExpr("explode(split(text, ' ')) AS w")
+        .selectExpr(s"${polyHashExpr("w")} AS ph")
+        .selectExpr(s"posexplode(array($cmsCellArrExpr)) AS (r, cell)")
+        .groupBy("r", "cell").agg(count(lit(1)).as("cellsum"))
     }
-    cmsVerdict(cmsTokenCounts(docs), spark.table(qn))
+    cmsVerdict(cmsTokenCounts(docs), sketch)
   }
 
   val cmsHeavySql: String = {
@@ -377,32 +366,19 @@ object Sketches {
     * contract).
     */
   def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.PacedReplay
     KmvAgg.register(spark)
     val ev = Tables.load(spark, dir, "events")
       .selectExpr("event_id", "event_type", "user_id")
-    val stageDir = graft.TempDirs.scoped("kmv-stage") + "/events"
     val nEv = ev.count()
-    val rowsPerFile = math.max(1L, nEv / 4L).toInt
-    PacedReplay.stage(ev, Seq("event_id"), rowsPerFile, stageDir)
-    val agg = PacedReplay.stream(spark, stageDir, ev.schema)
-      .selectExpr("event_type",
-        s"((user_id % $KmvP) * 2654435761) % $KmvP AS h")
-      .groupBy("event_type").agg(expr("graft_kmv(h)").as("mins"))
-    val qn = "graft_stream_kmv_sketch"
     // state = one ≤k-minima sketch per scope; partitions from the input
     // scale, not the session constant (StateSizing)
-    graft.streaming.StateSizing.withStatePartitions(spark,
-      graft.streaming.StateSizing.statePartitions(spark, nEv)) {
-      val q = agg.writeStream
-        .outputMode("complete").format("memory").queryName(qn)
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
+    val sk = PacedReplay.drain(ev, Seq("event_id"), nEv,
+        "graft_stream_kmv_sketch", "complete",
+        Some(StateSizing.statePartitions(spark, nEv))) {
+      _.selectExpr("event_type",
+          s"((user_id % $KmvP) * 2654435761) % $KmvP AS h")
+        .groupBy("event_type").agg(expr("graft_kmv(h)").as("mins"))
     }
-    val sk = spark.table(qn)
     val perType = sk
       .selectExpr("event_type", "CAST(size(mins) AS BIGINT) AS n_kept",
         "element_at(mins, -1) AS h_k")
@@ -550,37 +526,24 @@ object Sketches {
     * [[streamCmsHeavy]] contract).
     */
   def streamQsketchQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.PacedReplay
     // (r17: widening + localCheckpoint of `cents` was tried and REVERTED —
     // the 600k-row eager materialization cost more than the re-scans it
     // saved: 5.5-6.3 s -> 6.5-7.3 s at sf0.1)
     val cents = qsCents(spark, dir)
-    val stageDir = graft.TempDirs.scoped("qsketch-stage") + "/lineitem"
     val nCents = cents.count()
-    val rowsPerFile = math.max(1L, nCents / 4L).toInt
-    PacedReplay.stage(cents, Seq("l_orderkey", "l_linenumber"), rowsPerFile, stageDir)
-    val streamHist = PacedReplay.stream(spark, stageDir, cents.schema)
-      .selectExpr("rf", s"${qsBucketExpr("c")} AS b")
-      .groupBy("rf", "b").agg(count(lit(1)).as("cnt"))
-    val qn = "graft_stream_qsketch_hist"
     // state ≤ |l_returnflag ∈ {A,N,R}| · 64·S bucket rows by construction
     // (TPC-H domain × the 64-octave × S sub-bucket grid) — partitions
     // beyond that are per-trigger commit overhead at any scale
-    graft.streaming.StateSizing.withStatePartitions(spark,
-      graft.streaming.StateSizing.statePartitions(spark, nCents,
-        stateRowsBound = 3L * 64L * QsS)) {
-      val q = streamHist.writeStream
-        .outputMode("complete").format("memory").queryName(qn)
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
+    val hist = PacedReplay.drain(cents, Seq("l_orderkey", "l_linenumber"),
+        nCents, "graft_stream_qsketch_hist", "complete",
+        Some(StateSizing.statePartitions(spark, nCents,
+          stateRowsBound = 3L * 64L * QsS))) {
+      _.selectExpr("rf", s"${qsBucketExpr("c")} AS b")
+        .groupBy("rf", "b").agg(count(lit(1)).as("cnt"))
     }
-    // the verdict tail uses the histogram TWICE (cum + n_buckets); a
-    // memory-sink view self-join trips analyzer reference dedup, so break
-    // lineage on the sketch-sized (≤ groups·64·S rows) table first
-    qsVerdict(cents, spark.table(qn).localCheckpoint(true))
+    // the verdict tail uses the histogram TWICE (cum + n_buckets): the
+    // drained rows are a local relation, which self-joins cleanly
+    qsVerdict(cents, hist)
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

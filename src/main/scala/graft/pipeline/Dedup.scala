@@ -152,17 +152,43 @@ object Dedup {
     hs.groupBy("doc_id").agg(mins.head, mins.tail: _*).orderBy("doc_id")
   }
 
-  val minhashSignaturesSql: String = {
-    val mins = (0 until H).map(i =>
-      s"min((${As(i)} * h + ${Bs(i)}) % $FpMod) AS m$i").mkString(",\n       ")
-    s"""WITH $hashedShinglesCte
-       |SELECT doc_id, $mins
-       |FROM hs GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
+  /** The H MinHash minima over `hs` rows as SQL select items m0..m15 —
+    * the oracle twin of [[minhashSignatures]]' aggregates.
+    */
+  private val minsSql: String = (0 until H).map(i =>
+    s"min((${As(i)} * h + ${Bs(i)}) % $FpMod) AS m$i").mkString(", ")
 
   /** Band hash: polynomial fold of the band's R minhash values. */
   private def bandFold(ms: Seq[String]): String =
     ms.reduceLeft((acc, m) => s"(($acc) * 31 + $m) % $FpMod")
+
+  /** The oracle CTEs `sig` (per-doc minima over `hs`) and `bands` (one
+    * (doc_id, band, bh) row per band) every MinHash-band oracle shares.
+    */
+  private val sigBandsCtes: String = {
+    val bandSelects = (0 until B).map { b =>
+      val ms = (0 until R).map(r => s"m${b * R + r}")
+      s"SELECT doc_id, $b AS band, ${bandFold(ms)} AS bh FROM sig"
+    }.mkString("\n  UNION ALL ")
+    s"""sig AS (SELECT doc_id, $minsSql FROM hs GROUP BY doc_id),
+       |bands AS (
+       |  $bandSelects
+       |)""".stripMargin
+  }
+
+  /** Agreeing signature slots of two docs, `$a<i> = $b<i>` summed over
+    * the H slots — the signature-agreement estimate's numerator.
+    */
+  private[pipeline] def matchSum(a: String, b: String): String = (0 until H)
+    .map(i => s"CASE WHEN $a$i = $b$i THEN 1 ELSE 0 END").mkString(" + ")
+
+  /** [[matchSum]] of the oracles' `sig a` / `sig b` join sides. */
+  private val abMatches: String = matchSum("a.m", "b.m")
+
+  val minhashSignaturesSql: String =
+    s"""WITH $hashedShinglesCte
+       |SELECT doc_id, $minsSql
+       |FROM hs GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** MinHash LSH candidate pairs: docs sharing any (band, band-hash) bucket.
     * Per band: groupable bucket key → self-join runs bucket-local after one
@@ -194,17 +220,8 @@ object Dedup {
   }
 
   val minhashCandidatesSql: String = {
-    val mins = (0 until H).map(i =>
-      s"min((${As(i)} * h + ${Bs(i)}) % $FpMod) AS m$i").mkString(", ")
-    val bandSelects = (0 until B).map { b =>
-      val ms = (0 until R).map(r => s"m${b * R + r}")
-      s"SELECT doc_id, $b AS band, ${bandFold(ms)} AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
     s"""WITH $hashedShinglesCte,
-       |sig AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id),
-       |bands AS (
-       |  $bandSelects
-       |)
+       |$sigBandsCtes
        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |FROM bands a JOIN bands b
        |  ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
@@ -249,12 +266,6 @@ object Dedup {
     * join shape — no all-pairs shingle join here either).
     */
   private[pipeline] def lshGatedCtes(src: String): String = {
-    val mins = (0 until H).map(i =>
-      s"min((${As(i)} * h + ${Bs(i)}) % $FpMod) AS m$i").mkString(", ")
-    val bandSelects = (0 until B).map { b =>
-      val ms = (0 until R).map(r => s"m${b * R + r}")
-      s"SELECT doc_id, $b AS band, ${bandFold(ms)} AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
     s"""tokstr AS (SELECT doc_id, string_split(text, ' ') AS t FROM $src),
        |sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
        |       FROM (SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i
@@ -265,10 +276,7 @@ object Dedup {
        |              ((((th[i] * 31 + th[i+1]) % $FpMod) * 31) + th[i+2]) % $FpMod AS h
        |       FROM (SELECT doc_id, th, unnest(range(1, greatest(len(th) - 1, 1))) AS i
        |             FROM thash)),
-       |sig AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id),
-       |bands AS (
-       |  $bandSelects
-       |),
+       |$sigBandsCtes,
        |cand AS (SELECT DISTINCT a.doc_id AS c_a, b.doc_id AS c_b
        |         FROM bands a JOIN bands b
        |           ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
@@ -1003,17 +1011,8 @@ object Dedup {
   }
 
   val incrementalIndexSql: String = {
-    val mins = (0 until H).map(i =>
-      s"min((${As(i)} * h + ${Bs(i)}) % $FpMod) AS m$i").mkString(", ")
-    val bandSelects = (0 until B).map { b =>
-      val ms = (0 until R).map(r => s"m${b * R + r}")
-      s"SELECT doc_id, $b AS band, ${bandFold(ms)} AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
     s"""WITH $hashedShinglesCte,
-       |sig AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id),
-       |bands AS (
-       |  $bandSelects
-       |)
+       |$sigBandsCtes
        |SELECT doc_id, band, bh FROM bands
        |WHERE doc_id % $IncrSplitMod <> 0
        |ORDER BY doc_id, band""".stripMargin
@@ -1106,8 +1105,7 @@ object Dedup {
     val idx = idxPruned
       .selectExpr(Seq("doc_id AS hist_id", "band", "bh")
         ++ (0 until H).map(i => s"i$i"): _*)
-    val matchExpr = (0 until H)
-      .map(i => s"CASE WHEN m$i = i$i THEN 1 ELSE 0 END").mkString(" + ")
+    val matchExpr = matchSum("m", "i")
     newBands.join(idx, Seq("band", "bh"))
       .withColumn("mt", expr(s"CAST($matchExpr AS BIGINT)"))
       .groupBy("doc_id", "hist_id")
@@ -1120,26 +1118,15 @@ object Dedup {
   }
 
   val incrementalBatchSql: String = {
-    val mins = (0 until H).map(i =>
-      s"min((${As(i)} * h + ${Bs(i)}) % $FpMod) AS m$i").mkString(", ")
-    val bandSelects = (0 until B).map { b =>
-      val ms = (0 until R).map(r => s"m${b * R + r}")
-      s"SELECT doc_id, $b AS band, ${bandFold(ms)} AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
-    val matchSum = (0 until H)
-      .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
     s"""WITH $hashedShinglesCte,
-       |sig AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id),
-       |bands AS (
-       |  $bandSelects
-       |),
+       |$sigBandsCtes,
        |cand AS (SELECT DISTINCT n.doc_id AS doc_id, h.doc_id AS hist_id
        |         FROM bands n JOIN bands h ON n.band = h.band AND n.bh = h.bh
        |         WHERE n.doc_id % $IncrSplitMod = 0
        |           AND h.doc_id % $IncrSplitMod <> 0)
-       |SELECT c.doc_id, c.hist_id, ($matchSum)::BIGINT AS matches,
-       |       ($matchSum)::DOUBLE / $H AS jaccard_est,
-       |       (CASE WHEN ($matchSum) >= $EstDupMatches THEN 1 ELSE 0 END)::BIGINT AS is_dup
+       |SELECT c.doc_id, c.hist_id, ($abMatches)::BIGINT AS matches,
+       |       ($abMatches)::DOUBLE / $H AS jaccard_est,
+       |       (CASE WHEN ($abMatches) >= $EstDupMatches THEN 1 ELSE 0 END)::BIGINT AS is_dup
        |FROM cand c
        |JOIN sig a ON c.doc_id = a.doc_id
        |JOIN sig b ON c.hist_id = b.doc_id
@@ -1181,8 +1168,7 @@ object Dedup {
     * streaming == batch across micro-batches.
     */
   def streamProbeBands(incoming: DataFrame, idx: DataFrame): DataFrame = {
-    val matchExpr = (0 until H)
-      .map(i => s"CASE WHEN m$i = i$i THEN 1 ELSE 0 END").mkString(" + ")
+    val matchExpr = matchSum("m", "i")
     rowSignatures(incoming)
       .selectExpr(Seq("doc_id") ++ (0 until H).map(i => s"m$i")
         :+ s"posexplode($bandArrayExpr) AS (band, bh)": _*)
@@ -1208,23 +1194,12 @@ object Dedup {
   }
 
   val streamIncrementalSql: String = {
-    val mins = (0 until H).map(i =>
-      s"min((${As(i)} * h + ${Bs(i)}) % $FpMod) AS m$i").mkString(", ")
-    val bandSelects = (0 until B).map { b =>
-      val ms = (0 until R).map(r => s"m${b * R + r}")
-      s"SELECT doc_id, $b AS band, ${bandFold(ms)} AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
-    val matchSum = (0 until H)
-      .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
     s"""WITH $hashedShinglesCte,
-       |sig AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id),
-       |bands AS (
-       |  $bandSelects
-       |)
+       |$sigBandsCtes
        |SELECT n.doc_id, h.doc_id AS hist_id, n.band::BIGINT AS band,
-       |       ($matchSum)::BIGINT AS matches,
-       |       ($matchSum)::DOUBLE / $H AS jaccard_est,
-       |       (CASE WHEN ($matchSum) >= $EstDupMatches THEN 1 ELSE 0 END)::BIGINT AS is_dup
+       |       ($abMatches)::BIGINT AS matches,
+       |       ($abMatches)::DOUBLE / $H AS jaccard_est,
+       |       (CASE WHEN ($abMatches) >= $EstDupMatches THEN 1 ELSE 0 END)::BIGINT AS is_dup
        |FROM bands n JOIN bands h ON n.band = h.band AND n.bh = h.bh
        |JOIN sig a ON n.doc_id = a.doc_id
        |JOIN sig b ON h.doc_id = b.doc_id
@@ -1262,10 +1237,6 @@ object Dedup {
     */
   def incrementalAppend(spark: SparkSession, dir: String,
       phase: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    def timed[A](name: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val a = body
-      phase(name, (System.nanoTime() - t0) / 1e9); a
-    }
     val path = ensureMinhashIndex(spark, dir)
     val augPath =
       graft.TempDirs.scoped("incr-append") +
@@ -1279,7 +1250,7 @@ object Dedup {
     // byte-identical to the still-unmutated copy, and the copy is joined
     // before the first write touches the working tree (appendCore).
     appendCore(spark, dir, augPath, prune = false, phase,
-      probeSrc = path, seedCopy = Some(() => timed("seed_working_copy") {
+      probeSrc = path, seedCopy = Some(() => timed(phase, "seed_working_copy") {
         graft.TempDirs.copyTree(spark, path, augPath)
       }))
   }
@@ -1309,10 +1280,6 @@ object Dedup {
     */
   def incrementalAppendInplace(spark: SparkSession, dir: String,
       phase: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    def timed[A](name: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val a = body
-      phase(name, (System.nanoTime() - t0) / 1e9); a
-    }
     val path = ensureMinhashIndex(spark, dir)
     val augPath =
       graft.TempDirs.scoped("incr-inplace") +
@@ -1323,7 +1290,7 @@ object Dedup {
     // read from the source index. Run CONCURRENTLY with wave 1's pruned
     // probe against the (byte-identical) source — see incrementalAppend.
     appendCore(spark, dir, augPath, prune = true, phase,
-      probeSrc = path, seedCopy = Some(() => timed("seed_layout_copy") {
+      probeSrc = path, seedCopy = Some(() => timed(phase, "seed_layout_copy") {
         graft.TempDirs.copyTree(spark, path, augPath)
       }))
   }
@@ -1358,10 +1325,6 @@ object Dedup {
       phase: (String, Double) => Unit,
       probeSrc: String = null,
       seedCopy: Option[() => Unit] = None): DataFrame = {
-    def timed[A](name: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val a = body
-      phase(name, (System.nanoTime() - t0) / 1e9); a
-    }
     val src = Option(probeSrc).getOrElse(augIndexPath)
     val p = bucketsOf(augIndexPath)
     val docs = Tables.load(spark, dir, "documents")
@@ -1369,7 +1332,7 @@ object Dedup {
     val wave2 = docs.where(s"doc_id % ${2 * IncrSplitMod} = $IncrSplitMod")
 
     def cycle(seeded: () => Unit): DataFrame = {
-      val dup1 = timed("probe_wave1") {
+      val dup1 = timed(phase, "probe_wave1") {
         incrementalProbe(spark, wave1, src, prune = prune)
           .where("is_dup = 1").select("doc_id").distinct()
           // materialize NOW, against the source, overlapping the seed copy
@@ -1386,17 +1349,13 @@ object Dedup {
     }
   }
 
-  /** Sign `docsToAppend` and upsert their band rows into the bucketed
-    * index at `augIndexPath`, committing the manifest — the WRITE half of
-    * the probe → accept → append cycle, shared by [[appendCore]] and the
-    * end-to-end refresh ([[Refresh]]). The deployment-shaped append: ONE
-    * batch through the partition-wise upsert merge body — no driver-side
-    * row collect, no nested streaming query (a streaming ingest composes
-    * the same body per micro-batch via
-    * [[graft.streaming.Sinks.partitionedUpsertParquet]], unit-tested in
-    * UpsertSinkSpec). Cost is O(batch + touched buckets), index-size-
-    * independent.
-    */
+  /** Run `body`, reporting its wall seconds to `phase` under `name`. */
+  private def timed[A](phase: (String, Double) => Unit, name: String)(
+      body: => A): A = {
+    val t0 = System.nanoTime(); val a = body
+    phase(name, (System.nanoTime() - t0) / 1e9); a
+  }
+
   /** The index-layout band rows of `docs` — signature columns (i0..i15)
     * plus (band, bh, bhp) — the exact frame the bucketed index stores.
     * Factored from [[appendDocsBatch]] for the measurement harness
@@ -1408,23 +1367,30 @@ object Dedup {
         :+ s"posexplode($bandArrayExpr) AS (band, bh)": _*)
       .withColumn("bhp", expr(s"CAST(pmod(bh, $buckets) AS INT)"))
 
+  /** Sign `docsToAppend` and upsert their band rows into the bucketed
+    * index at `augIndexPath`, committing the manifest — the WRITE half of
+    * the probe → accept → append cycle, shared by [[appendCore]] and the
+    * end-to-end refresh ([[Refresh]]). The deployment-shaped append: ONE
+    * batch through the partition-wise upsert merge body — no driver-side
+    * row collect, no nested streaming query (a streaming ingest composes
+    * the same body per micro-batch via
+    * [[graft.streaming.Sinks.partitionedUpsertParquet]], unit-tested in
+    * UpsertSinkSpec). Cost is O(batch + touched buckets), index-size-
+    * independent.
+    */
   private[pipeline] def appendDocsBatch(spark: SparkSession,
       augIndexPath: String, docsToAppend: DataFrame,
       phase: (String, Double) => Unit = (_, _) => ()): Unit = {
-    def timed[A](name: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val a = body
-      phase(name, (System.nanoTime() - t0) / 1e9); a
-    }
     val p = bucketsOf(augIndexPath)
     val accepted = bandRowsFor(docsToAppend, p)
       .persist() // read 3× below (touched set, merge, write) — one compute
     try {
-      val touchedBuckets = timed("probe_wave1_sign_accepted") {
+      val touchedBuckets = timed(phase, "probe_wave1_sign_accepted") {
         accepted.select("band", "bhp").distinct()
           .collect() // ≤ B × p bucket ids: metadata-scale
           .map(r => (r.getInt(0), r.getInt(1))).toSet
       }
-      timed("bucketwise_append") {
+      timed(phase, "bucketwise_append") {
         graft.streaming.Sinks.partitionedUpsertBatch(
           accepted.toDF(), augIndexPath,
           partitionCols = Seq("band", "bhp"),
@@ -1434,34 +1400,23 @@ object Dedup {
       // the manifest commit is LOAD-BEARING: an appended row landing in a
       // bucket the manifest does not name would be invisible to the
       // pruned probe
-      timed("manifest_commit") {
+      timed(phase, "manifest_commit") {
         augmentManifest(spark, augIndexPath, touchedBuckets)
       }
     } finally accepted.unpersist()
   }
 
   val incrementalAppendSql: String = {
-    val mins = (0 until H).map(i =>
-      s"min((${As(i)} * h + ${Bs(i)}) % $FpMod) AS m$i").mkString(", ")
-    val bandSelects = (0 until B).map { b =>
-      val ms = (0 until R).map(r => s"m${b * R + r}")
-      s"SELECT doc_id, $b AS band, ${bandFold(ms)} AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
-    val matchSum = (0 until H)
-      .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
     val w = 2 * IncrSplitMod
     s"""WITH $hashedShinglesCte,
-       |sig AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id),
-       |bands AS (
-       |  $bandSelects
-       |),
+       |$sigBandsCtes,
        |dup1 AS (
        |  SELECT DISTINCT n.doc_id AS doc_id
        |  FROM bands n JOIN bands h ON n.band = h.band AND n.bh = h.bh
        |  JOIN sig a ON n.doc_id = a.doc_id
        |  JOIN sig b ON h.doc_id = b.doc_id
        |  WHERE n.doc_id % $w = 0 AND h.doc_id % $IncrSplitMod <> 0
-       |    AND ($matchSum) >= $EstDupMatches),
+       |    AND ($abMatches) >= $EstDupMatches),
        |cand AS (
        |  SELECT DISTINCT n.doc_id AS doc_id, h.doc_id AS hist_id
        |  FROM bands n JOIN bands h ON n.band = h.band AND n.bh = h.bh
@@ -1469,9 +1424,9 @@ object Dedup {
        |    AND (h.doc_id % $IncrSplitMod <> 0
        |         OR (h.doc_id % $w = 0
        |             AND h.doc_id NOT IN (SELECT doc_id FROM dup1))))
-       |SELECT c.doc_id, c.hist_id, ($matchSum)::BIGINT AS matches,
-       |       ($matchSum)::DOUBLE / $H AS jaccard_est,
-       |       (CASE WHEN ($matchSum) >= $EstDupMatches THEN 1 ELSE 0 END)::BIGINT AS is_dup
+       |SELECT c.doc_id, c.hist_id, ($abMatches)::BIGINT AS matches,
+       |       ($abMatches)::DOUBLE / $H AS jaccard_est,
+       |       (CASE WHEN ($abMatches) >= $EstDupMatches THEN 1 ELSE 0 END)::BIGINT AS is_dup
        |FROM cand c
        |JOIN sig a ON c.doc_id = a.doc_id
        |JOIN sig b ON c.hist_id = b.doc_id

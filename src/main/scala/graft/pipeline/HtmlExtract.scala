@@ -147,21 +147,10 @@ object HtmlExtract {
   def streamQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.PacedReplay
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
-    val stage = graft.TempDirs.scoped("html-extract") + "/docs"
-    val rowsPerFile = math.max(1L, docs.count() / 4L).toInt
-    PacedReplay.stage(docs, Seq("doc_id"), rowsPerFile, stage)
-    val out = extractBlocksCore(
-      PacedReplay.stream(spark, stage, docs.schema)
-        .selectExpr("doc_id", s"$pageExpr AS page"))
-    val qn = "graft_stream_html_extract"
-    val q = out.writeStream
-      .outputMode("append").format("memory").queryName(qn)
-      // throwaway checkpoint on the session scratch tier (TempDirs doc)
-      .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    spark.table(qn).orderBy("doc_id", "block_idx")
+    PacedReplay.drain(docs, Seq("doc_id"), docs.count(),
+        "graft_stream_html_extract", "append", None) { src =>
+      extractBlocksCore(src.selectExpr("doc_id", s"$pageExpr AS page"))
+    }.orderBy("doc_id", "block_idx")
   }
 
   /** Outlink (href) extraction — the OTHER half of what a crawl does

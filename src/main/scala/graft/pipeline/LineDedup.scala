@@ -156,30 +156,18 @@ object LineDedup {
     * inside a batch cannot change it.
     */
   def streamQuery(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.PacedReplay
+    import graft.streaming.{PacedReplay, StateSizing}
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
-    val stage = graft.TempDirs.scoped("line-dedup") + "/docs"
     val nDocs = docs.count()
-    val rowsPerFile = math.max(1L, nDocs / 4L).toInt
-    PacedReplay.stage(docs, Seq("doc_id"), rowsPerFile, stage)
-    val out = lineTable(PacedReplay.stream(spark, stage, docs.schema))
-      .selectExpr("line", s"doc_id * ${1L << IdxBits} + line_idx AS k")
-      .groupBy("line")
-      .agg(org.apache.spark.sql.functions.expr("min(k) AS first_key"))
-    val qn = "graft_stream_line_dedup"
     // state partitions from the replayed line volume (~8 lines/doc), not
     // the session constant (per-trigger per-partition commits — StateSizing)
-    graft.streaming.StateSizing.withStatePartitions(spark,
-      graft.streaming.StateSizing.statePartitions(spark, nDocs * 8)) {
-      val q = out.writeStream
-        .outputMode("complete").format("memory").queryName(qn)
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    }
-    spark.table(qn).orderBy("line")
+    PacedReplay.drain(docs, Seq("doc_id"), nDocs, "graft_stream_line_dedup",
+        "complete", Some(StateSizing.statePartitions(spark, nDocs * 8))) {
+      lineTable(_)
+        .selectExpr("line", s"doc_id * ${1L << IdxBits} + line_idx AS k")
+        .groupBy("line")
+        .agg(org.apache.spark.sql.functions.expr("min(k) AS first_key"))
+    }.orderBy("line")
   }
 
   val streamSql: String =

@@ -262,33 +262,22 @@ object QualityClassifier {
     val w = try train(feats) finally feats.unpersist(false)
     // online scoring of the replayed stream with the frozen weights
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
-    val stage = graft.TempDirs.scoped("qc-stream") + "/docs"
     val nDocs = docs.count()
-    val rowsPerFile = math.max(1L, nDocs / 4L).toInt
-    PacedReplay.stage(docs, Seq("doc_id"), rowsPerFile, stage)
     // spread each micro-batch to the row-derived floor (the labeledWide
     // rationale, stream side): a staged chunk scans as ONE task, so the
     // featurize+margin scoring of a whole trigger otherwise runs serially
     // — scoring is row-local, so a round-robin spread changes nothing but
     // the task count (each trigger carries ~nDocs/4 rows)
     val perTrigger = graft.BatchSizing.targetParts(docs, nDocs / 4)
-    val scored = featurize(
-      PacedReplay.stream(spark, stage, docs.schema)
-        .repartition(perTrigger).selectExpr(labelExprs: _*))
-      .selectExpr("doc_id", "y", "is_train", s"${marginExpr(w)} AS margin")
-      .selectExpr("doc_id", "y", "is_train", "margin",
-        "CAST(CASE WHEN margin > 0 THEN 1 ELSE -1 END AS BIGINT) AS pred")
-      .selectExpr("doc_id", "y", "is_train", "margin", "pred",
-        "pred = y AS correct")
-    val qn = "graft_stream_quality_filter"
-    val q = scored.writeStream
-      .outputMode("append").format("memory").queryName(qn)
-      // throwaway checkpoint on the session scratch tier (TempDirs doc)
-      .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    spark.table(qn).orderBy("doc_id")
+    PacedReplay.drain(docs, Seq("doc_id"), nDocs,
+        "graft_stream_quality_filter", "append", None) { replay =>
+      featurize(replay.repartition(perTrigger).selectExpr(labelExprs: _*))
+        .selectExpr("doc_id", "y", "is_train", s"${marginExpr(w)} AS margin")
+        .selectExpr("doc_id", "y", "is_train", "margin",
+          "CAST(CASE WHEN margin > 0 THEN 1 ELSE -1 END AS BIGINT) AS pred")
+        .selectExpr("doc_id", "y", "is_train", "margin", "pred",
+          "pred = y AS correct")
+    }.orderBy("doc_id")
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -265,9 +265,7 @@ object Refresh {
   val sql: String = {
     val m = IncrSplitMod
     val shift = 1L << LineDedup.IdxBits
-    val matchSum = (0 until Dedup.H)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
+    val matchSum = Dedup.matchSum("sa.m", "sb.m")
     val gram =
       s"""unnest(list_distinct(list_transform(
          |  range(1, greatest(len(t) - ${DecontamN - 1}, 0) + 1),

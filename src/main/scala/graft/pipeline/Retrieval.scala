@@ -415,9 +415,23 @@ object Retrieval {
     * mass, stale df, or missing manifest line all break the hash.
     * Append cost is O(wave + touched buckets), independent of index size.
     */
-  def indexAppend(spark: SparkSession, dir: String): DataFrame = {
-    val src = ensureBm25Index(spark, dir)
-    val work = graft.TempDirs.scoped("bm25-append") + "/index"
+  def indexAppend(spark: SparkSession, dir: String): DataFrame =
+    prunedTopK(spark,
+      appendWave(spark, dir, ensureBm25Index(spark, dir), "bm25-append"))
+
+  /** The bucket-wise wave merge both append entries run, on a working
+    * copy of the index at `src`: seed the copy (concurrently with the
+    * wave's tokenize+explode), upsert the wave's postings, recompute df
+    * from the merged postings of exactly the touched buckets and upsert
+    * it into `stats`, add the wave's counts to `meta`, and commit the
+    * manifest. `sidecar` (none by default), given the touched buckets'
+    * merged postings and the working root, upserts one more derived table
+    * concurrently with the stats upsert. Returns the working root.
+    */
+  private def appendWave(spark: SparkSession, dir: String, src: String,
+      scope: String,
+      sidecar: (DataFrame, String) => Unit = (_, _) => ()): String = {
+    val work = graft.TempDirs.scoped(scope) + "/index"
     // hermeticity tax only — runs concurrently with the wave's
     // tokenize+explode below, joined before the first upsert write
     graft.Overlap.background(graft.TempDirs.copyTree(spark, src, work)) { seeded =>
@@ -443,17 +457,24 @@ object Retrieval {
             .parquet(touched.toSeq.sorted.map(tb => s"$work/postings/tb=$tb"): _*)
           val newStats = merged.groupBy("term").agg(count(lit(1)).as("df"))
             .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
-          graft.streaming.Sinks.partitionedUpsertBatch(
-            newStats, s"$work/stats",
-            partitionCols = Seq("tb"), keyCols = Seq("term"),
-            versionCols = Seq("ver"), sortCols = Seq("term"))
+          // a sidecar derives from the same COMMITTED merged postings and
+          // writes a DIFFERENT table — run the two upsert jobs concurrently
+          // (guide §2.6 overlap independent jobs): each is a tail of small
+          // tasks + a 64-file commit, and back-filling one job's tail with
+          // the other's tasks halves the wave's sidecar-maintenance wall
+          graft.Overlap.background(graft.streaming.Sinks.partitionedUpsertBatch(
+              newStats, s"$work/stats",
+              partitionCols = Seq("tb"), keyCols = Seq("term"),
+              versionCols = Seq("ver"), sortCols = Seq("term"))) { _ =>
+            sidecar(merged, work)
+          }
         }
         val old = spark.read.parquet(s"$src/meta").head()
         val add = metaOf(wave).head()
         writeMeta(spark, s"$work/meta",
           old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1))
         augmentTbManifest(spark, work, touched)
-        prunedTopK(spark, work)
+        work
       } finally wavePostings.unpersist(false)
     }
   }
@@ -638,61 +659,17 @@ object Retrieval {
   def blockMaxAppend(spark: SparkSession, dir: String): DataFrame = {
     val src = ensureBm25Index(spark, dir)
     ensureBlockMax(spark, src)
-    val work = graft.TempDirs.scoped("bm25-bmappend") + "/index"
-    // hermeticity tax only — runs concurrently with the wave's
-    // tokenize+explode below, joined before the first upsert write
-    graft.Overlap.background(graft.TempDirs.copyTree(spark, src, work)) { seeded =>
-      val wave = Tables.load(spark, dir, "documents")
-        .where(s"doc_id % ${Dedup.IncrSplitMod} = 0")
-      // persisted: consumed by the upsert merge AND the touched-set collect
-      // (the appendDocsBatch convention) — one tokenize+explode, not two
-      val wavePostings = postingsOf(wave)
-        .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
-        .persist()
-      try {
-        // the touched-set collect fills the persist NOW, overlapping the
-        // working-copy seed; the upsert then starts from warm rows
-        val touched = wavePostings.select("tb").distinct()
-          .collect().map(_.getInt(0)).toSet // metadata-scale
-        seeded()
+    blockMaxTopK(spark, appendWave(spark, dir, src, "bm25-bmappend",
+      (merged, work) =>
         graft.streaming.Sinks.partitionedUpsertBatch(
-          wavePostings, s"$work/postings",
-          partitionCols = Seq("tb"), keyCols = Seq("term", "doc_id"),
-          versionCols = Seq("ver"), sortCols = Seq("term", "doc_id"))
-        if (touched.nonEmpty) {
-          val merged = spark.read.option("basePath", s"$work/postings")
-            .parquet(touched.toSeq.sorted.map(tb => s"$work/postings/tb=$tb"): _*)
-          val newStats = merged.groupBy("term").agg(count(lit(1)).as("df"))
-            .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
-          val newBlockMax = merged
+          merged
             .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
             .groupBy("term", "blk")
             .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
-            .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
-          // stats and blockmax both derive from the COMMITTED merged
-          // postings and write to DIFFERENT tables — run the two upsert
-          // jobs concurrently (guide §2.6 overlap independent jobs): each
-          // is a tail of small tasks + a 64-file commit, and back-filling
-          // one job's tail with the other's tasks halves the wave's
-          // sidecar-maintenance wall
-          graft.Overlap.background(graft.streaming.Sinks.partitionedUpsertBatch(
-              newStats, s"$work/stats",
-              partitionCols = Seq("tb"), keyCols = Seq("term"),
-              versionCols = Seq("ver"), sortCols = Seq("term"))) { _ =>
-            graft.streaming.Sinks.partitionedUpsertBatch(
-              newBlockMax, s"$work/blockmax",
-              partitionCols = Seq("tb"), keyCols = Seq("term", "blk"),
-              versionCols = Seq("ver"), sortCols = Seq("term", "blk"))
-          }
-        }
-        val old = spark.read.parquet(s"$src/meta").head()
-        val add = metaOf(wave).head()
-        writeMeta(spark, s"$work/meta",
-          old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1))
-        augmentTbManifest(spark, work, touched)
-        blockMaxTopK(spark, work)
-      } finally wavePostings.unpersist(false)
-    }
+            .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L)),
+          s"$work/blockmax",
+          partitionCols = Seq("tb"), keyCols = Seq("term", "blk"),
+          versionCols = Seq("ver"), sortCols = Seq("term", "blk"))))
   }
 
   // ------------------------------------- skewed-score block-max surface
@@ -1665,20 +1642,9 @@ object Retrieval {
   def streamPhraseRoute(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.PacedReplay
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
-    val stage = graft.TempDirs.scoped("phrase-route") + "/docs"
-    val rowsPerFile = math.max(1L, docs.count() / 4L).toInt
-    PacedReplay.stage(docs, Seq("doc_id"), rowsPerFile, stage)
-    val out = phraseRouteFrame(
-      PacedReplay.stream(spark, stage, docs.schema))
-    val qn = "graft_stream_phrase_route"
-    val q = out.writeStream
-      .outputMode("append").format("memory").queryName(qn)
-      // throwaway checkpoint on the session scratch tier (TempDirs doc)
-      .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    spark.table(qn).orderBy("query_id", "doc_id")
+    PacedReplay.drain(docs, Seq("doc_id"), docs.count(),
+        "graft_stream_phrase_route", "append", None)(phraseRouteFrame)
+      .orderBy("query_id", "doc_id")
   }
 
   val streamPhraseRouteSql: String = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, lit}
 import org.apache.spark.sql.streaming._
 
@@ -57,26 +57,16 @@ object CrawlAdmit {
     val rules = RobotsFilter.ruleTable(spark,
       CrawlFrontier.candidatesRowLocal(docs).select("domain").distinct())
       .localCheckpoint()
-    val stage = graft.TempDirs.scoped("crawl-admit") + "/docs"
     val nDocs = docs.count()
-    val rowsPerFile = math.max(1L, nDocs / 4L).toInt
-    PacedReplay.stage(docs, Seq("doc_id"), rowsPerFile, stage)
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val qn = "graft_stream_crawl_admit"
     // state partitions sized to the candidate feed (~6 links/doc), not the
     // session constant: every trigger commits one RocksDB store per
     // partition, and at 32 partitions the 4-trigger replay spent its wall
     // on empty-store commits (guide §2 / StateSizing)
-    try StateSizing.withStatePartitions(spark,
-      StateSizing.statePartitions(spark, nDocs * 6)) {
-      val cand = CrawlFrontier.candidatesRowLocal(
-          PacedReplay.stream(spark, stage, docs.schema))
+    PacedReplay.drain(docs, Seq("doc_id"), nDocs, "graft_stream_crawl_admit",
+        "append", Some(StateSizing.statePartitions(spark, nDocs * 6))) { src =>
+      CrawlFrontier.candidatesRowLocal(src)
         .selectExpr("lid", "domain", "canon",
           "regexp_extract(canon, '^[a-z]+://[^/?]+(/[^?]*)?', 1) AS path")
-      val gated: Dataset[UrlRow] = cand
         .join(broadcast(rules), Seq("domain"), "left")
         .selectExpr("lid", "domain", "canon",
           s"${RobotsFilter.allowedExpr} AS allowed")
@@ -85,27 +75,13 @@ object CrawlAdmit {
         .where("already IS NULL")
         .selectExpr("lid AS doc_id", "domain", "canon")
         .as[UrlRow](Encoders.product[UrlRow])
-      val admitted = gated.groupByKey(_.domain)(Encoders.STRING)
+        .groupByKey(_.domain)(Encoders.STRING)
         .transformWithState(
           new DomainQuotaProcessor(CrawlFrontier.FrontierCap),
           TimeMode.None(), OutputMode.Append())(Encoders.product[UrlRow])
-      val q = admitted.writeStream
-        .outputMode("append").format("memory").queryName(qn)
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      spark.table(qn)
-        .selectExpr("doc_id DIV 8 AS doc_id", "doc_id % 8 AS link_idx",
-          "domain", "canon")
-        .orderBy("doc_id", "link_idx")
-    } finally prevProvider match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    }.selectExpr("doc_id DIV 8 AS doc_id", "doc_id % 8 AS link_idx",
+        "domain", "canon")
+      .orderBy("doc_id", "link_idx")
   }
 
   /** Composed DuckDB replay: the robots-verdict chain

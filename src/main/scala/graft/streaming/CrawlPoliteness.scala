@@ -163,17 +163,23 @@ object CrawlPoliteness {
   /** The gated, scheduled admission stream — exposed for the spec, which
     * attaches a per-trigger foreachBatch sink to PROVE a deferred URL is
     * released in a later trigger than it arrived in. Stages the feed as
-    * a side effect; the caller owns the state-store provider conf.
+    * a side effect (the [[politenessQuery]] chunking); the caller owns
+    * the state-store provider conf.
     */
-  /** Candidate-feed row estimate for [[StateSizing]] — set by
-    * [[admittedStream]] as a side effect of staging (the feed is the
-    * staged candidate count, already computed for chunk sizing), read by
-    * [[politenessQuery]] to size state partitions around `start()`.
-    */
-  @volatile private var lastFeedRows = 0L
-
   private[graft] def admittedStream(spark: SparkSession,
       dir: String): Dataset[FetchAdmit] = {
+    val (feed, schedule) = feedAndSchedule(spark, dir)
+    schedule(PacedReplay.replay(feed, Seq("ts_ms"), feed.count(),
+      "crawl-politeness"))
+  }
+
+  /** The candidate FEED (frontier → fetch-scheduler hand-off, drain
+    * sentinel included) and the plan that gates and schedules its
+    * replay: robots verdict, crawled check, then the timer-based
+    * per-domain scheduler.
+    */
+  private def feedAndSchedule(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame => Dataset[FetchAdmit]) = {
     val docs = graft.Tables.load(spark, dir, "documents")
       .select("doc_id", "text")
     // static artifacts, derived OFFLINE (the CrawlAdmit deployment shape).
@@ -210,21 +216,11 @@ object CrawlPoliteness {
     val sentinel = spark.range(1).selectExpr(
       "CAST(-1 AS BIGINT) AS lid", "'~sentinel' AS domain", "'' AS canon",
       "'' AS path", s"CAST($sentinelTs AS BIGINT) AS ts_ms")
-    val staged = feed.union(sentinel)
-    val stage = graft.TempDirs.scoped("crawl-politeness") + "/feed"
-    // 4 in-order chunks (the CrawlAdmit pacing): enough triggers to
-    // exercise cross-trigger timer releases, half the per-trigger
-    // state-commit + static-join cost of the previous 8-chunk replay
-    val nStaged = staged.count()
-    lastFeedRows = nStaged
-    val rowsPerFile = math.max(1L, nStaged / 4L).toInt
-    PacedReplay.stage(staged, Seq("ts_ms"), rowsPerFile, stage)
-    val cand = PacedReplay.stream(spark, stage, staged.schema)
+    val schedule = (replay: DataFrame) => replay
       .selectExpr("lid", "domain", "canon", "path", "ts_ms",
         "timestamp_millis(ts_ms) AS ts")
       .withWatermark("ts", "0 seconds")
       .where("lid >= 0") // the sentinel has advanced the watermark
-    val gated: Dataset[FetchCand] = cand
       .join(broadcast(rules), Seq("domain"), "left")
       .selectExpr("lid", "domain", "canon", "ts_ms",
         "coalesce(delay_ms, CAST(0 AS BIGINT)) AS delay_ms",
@@ -234,43 +230,28 @@ object CrawlPoliteness {
       .where("already IS NULL")
       .selectExpr("lid", "domain", "canon", "ts_ms", "delay_ms")
       .as[FetchCand](Encoders.product[FetchCand])
-    gated.groupByKey(_.domain)(Encoders.STRING)
+      .groupByKey(_.domain)(Encoders.STRING)
       .transformWithState(
         new DomainPolitenessProcessor(CrawlFrontier.FrontierCap),
         TimeMode.EventTime(), OutputMode.Append())(
         Encoders.product[FetchAdmit])
+    (feed.union(sentinel), schedule)
   }
 
   def politenessQuery(spark: SparkSession, dir: String): DataFrame = {
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val qn = "graft_stream_crawl_politeness"
-    try {
-      val admitted = admittedStream(spark, dir)
-      // state partitions sized to the staged feed (lastFeedRows, set by
-      // admittedStream above), not the session constant — per-trigger
-      // RocksDB commits are per-partition, and the timer-driven extra
-      // batches of this entry pay them more often than any other stream
-      // (guide §2 / StateSizing)
-      StateSizing.withStatePartitions(spark,
-        StateSizing.statePartitions(spark, lastFeedRows)) {
-        val q = admitted.writeStream
-          .outputMode("append").format("memory").queryName(qn)
-          // throwaway checkpoint on the session scratch tier (TempDirs doc)
-          .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      }
-      spark.table(qn).orderBy("doc_id", "link_idx")
-    } finally prevProvider match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    val (feed, schedule) = feedAndSchedule(spark, dir)
+    val nFeed = feed.count()
+    // 4 in-order chunks (the CrawlAdmit pacing): enough triggers to
+    // exercise cross-trigger timer releases, half the per-trigger
+    // state-commit + static-join cost of the previous 8-chunk replay
+    // state partitions sized to the staged feed, not the session constant
+    // — per-trigger RocksDB commits are per-partition, and the
+    // timer-driven extra batches of this entry pay them more often than
+    // any other stream (guide §2 / StateSizing)
+    PacedReplay.drain(feed, Seq("ts_ms"), nFeed,
+      "graft_stream_crawl_politeness", "append",
+      Some(StateSizing.statePartitions(spark, nFeed)))(schedule)
+      .orderBy("doc_id", "link_idx")
   }
 
   /** Declarative replay: the admitted set is [[CrawlAdmit]]'s (allowed →

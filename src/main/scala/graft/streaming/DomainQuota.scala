@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.streaming._
 
 /** A crawl-frontier URL admission row (canonicalized, pre-state). */
@@ -65,40 +65,18 @@ object DomainQuota {
   def quotaQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.UrlDedup
     val urls = UrlDedup.derivedUrls(spark, dir)
-    val stage = graft.TempDirs.scoped("domain-quota") + "/urls"
     val nUrls = urls.count()
-    val rowsPerFile = math.max(1L, nUrls / 4L).toInt
-    PacedReplay.stage(urls, Seq("doc_id"), rowsPerFile, stage)
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val qn = "graft_stream_domain_quota"
     // state partitions from the staged URL count, not the session constant
     // (per-trigger per-partition RocksDB commits — guide §2 / StateSizing)
-    try StateSizing.withStatePartitions(spark,
-      StateSizing.statePartitions(spark, nUrls)) {
-      val rows: Dataset[UrlRow] = UrlDedup.canonCols(
-          PacedReplay.stream(spark, stage, urls.schema))
+    PacedReplay.drain(urls, Seq("doc_id"), nUrls, "graft_stream_domain_quota",
+        "append", Some(StateSizing.statePartitions(spark, nUrls))) { src =>
+      UrlDedup.canonCols(src)
         .selectExpr("doc_id", "domain", "canon")
         .as[UrlRow](Encoders.product[UrlRow])
-      val admitted = rows.groupByKey(_.domain)(Encoders.STRING)
+        .groupByKey(_.domain)(Encoders.STRING)
         .transformWithState(new DomainQuotaProcessor(UrlDedup.DomainCap),
           TimeMode.None(), OutputMode.Append())(Encoders.product[UrlRow])
-      val q = admitted.writeStream
-        .outputMode("append").format("memory").queryName(qn)
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      spark.table(qn).orderBy("doc_id")
-    } finally prevProvider match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    }.orderBy("doc_id")
   }
 
   /** Oracle: the batch entry's admitted rows (canonical keepers within

@@ -210,6 +210,14 @@ object FadsStream {
         new FadsProcessor(cfg, drainIdleMs), timeMode, OutputMode.Append())
   }
 
+  /** The state-store provider conf and the RocksDB provider the session
+    * runs; [[StateSizing.pinned]] pins the same one around each bounded
+    * streaming query.
+    */
+  val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Session config required by transformWithState (RocksDB state store).
     * Changelog checkpointing writes per-batch deltas instead of full
     * snapshot uploads — much lighter commits for small hot state.
@@ -229,8 +237,7 @@ object FadsStream {
     * job again — hence env-overridable, not hardcoded higher).
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    b.config(ProviderKey, RocksDbProvider)
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
@@ -325,50 +332,38 @@ object FadsStream {
     val cfg = regionCfg(spark, dir)
     val shardOf = regionShardOf
 
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // 8 shards = 8 state stores
     val table = s"stream_fads_region_${System.nanoTime()}"
-    try {
-      implicit val sqlCtx = spark.sqlContext
-      val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-      val query = anonymizeSharded(src.toDS(), cfg, shardOf)
-        .writeStream.format("memory").queryName(table).outputMode("append")
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .start()
+    // 8 shards = 8 state stores
+    StateSizing.pinned(spark, Some(8)) {
       try {
-        src.addData(events.orderBy("ts", "event_id").collect().toIndexedSeq)
-        query.processAllAvailable()
-        // one drain sentinel per shard, routed by value (region key)
-        src.addData((0 until 8).map(s =>
-          Event(-1L, 0L, 0L, "", s * 64.0, "")))
-        query.processAllAvailable()
-      } finally query.stop()
-      // materialize before the memory table is dropped; ts_us reporting
-      // convention (DuckDB reads TIMESTAMP(NANOS) at micros)
-      val projected = spark.table(table)
-        .select(col("event_id"), graft.Tables.tsNanosToMicros("ts").as("ts_us"),
-          col("user_id_lo"), col("user_id_hi"), col("event_type"),
-          col("value_lo"), col("value_hi"), col("props"), col("suppressed"))
-      val out = projected.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toIndexedSeq, 1), projected.schema)
-    } finally {
-      // drop the memory-sink view: each invocation otherwise pins its full
-      // collected output in driver memory for the session lifetime
-      spark.catalog.dropTempView(table)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      // restore-or-UNSET: leaving the RocksDB override in a session that
-      // never set a provider would silently change every later streaming
-      // query's state store (code review r6)
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        implicit val sqlCtx = spark.sqlContext
+        val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
+        val query = anonymizeSharded(src.toDS(), cfg, shardOf)
+          .writeStream.format("memory").queryName(table).outputMode("append")
+          // throwaway checkpoint on the session scratch tier (TempDirs doc)
+          .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
+          .start()
+        try {
+          src.addData(events.orderBy("ts", "event_id").collect().toIndexedSeq)
+          query.processAllAvailable()
+          // one drain sentinel per shard, routed by value (region key)
+          src.addData((0 until 8).map(s =>
+            Event(-1L, 0L, 0L, "", s * 64.0, "")))
+          query.processAllAvailable()
+        } finally query.stop()
+        // materialize before the memory table is dropped; ts_us reporting
+        // convention (DuckDB reads TIMESTAMP(NANOS) at micros)
+        val projected = spark.table(table)
+          .select(col("event_id"), graft.Tables.tsNanosToMicros("ts").as("ts_us"),
+            col("user_id_lo"), col("user_id_hi"), col("event_type"),
+            col("value_lo"), col("value_hi"), col("props"), col("suppressed"))
+        val out = projected.collect()
+        spark.createDataFrame(
+          spark.sparkContext.parallelize(out.toIndexedSeq, 1), projected.schema)
+      } finally {
+        // drop the memory-sink view: each invocation otherwise pins its
+        // full collected output in driver memory for the session lifetime
+        spark.catalog.dropTempView(table)
       }
     }
   }

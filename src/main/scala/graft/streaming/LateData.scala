@@ -43,40 +43,24 @@ object LateData {
       "'zz_sentinel' AS event_type",
       s"CAST(${sentinelTs}L AS BIGINT) AS ts",
       s"CAST($Chunks AS BIGINT) AS replay_ord")
-    val staged = ev.unionByName(sentinel)
-    val stageDir = graft.TempDirs.scoped("late-stage") + "/events"
     val nEv = ev.count()
-    val rowsPerFile = math.max(1L, nEv / Chunks).toInt
-    PacedReplay.stage(staged, Seq("replay_ord", "event_id"), rowsPerFile,
-      stageDir)
-    val qn = "graft_stream_late"
-    val agg = PacedReplay.stream(spark, stageDir, staged.schema)
-      .withColumn("event_ts", Windows.tsCol("ts"))
-      .withWatermark("event_ts", "2 hours")
-      .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(
-        unix_millis(col("window.start")).as("win_start_ms"),
-        unix_millis(col("window.end")).as("win_end_ms"),
-        col("event_type"), col("n"))
-    // state partitions from the replayed row count, not the session
-    // constant (per-trigger per-partition state commits — StateSizing)
-    StateSizing.withStatePartitions(spark,
-      StateSizing.statePartitions(spark, nEv)) {
-      val q = agg.writeStream
-        .outputMode("append").format("memory").queryName(qn)
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    }
-    val out = spark.table(qn)
-      .where("event_type <> 'zz_sentinel'")
+    // chunks sized from the count before the sentinel is added (the
+    // sentinel sorts last, into the final chunk); state partitions from the
+    // replayed row count, not the session constant (per-trigger
+    // per-partition state commits — StateSizing)
+    PacedReplay.drain(ev.unionByName(sentinel), Seq("replay_ord", "event_id"),
+        nEv, "graft_stream_late", "append",
+        Some(StateSizing.statePartitions(spark, nEv))) {
+      _.withColumn("event_ts", Windows.tsCol("ts"))
+        .withWatermark("event_ts", "2 hours")
+        .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(
+          unix_millis(col("window.start")).as("win_start_ms"),
+          unix_millis(col("window.end")).as("win_end_ms"),
+          col("event_type"), col("n"))
+    }.where("event_type <> 'zz_sentinel'")
       .orderBy("win_start_ms", "event_type")
-      .localCheckpoint() // detach from the about-to-be-dropped temp view
-    spark.catalog.dropTempView(qn)
-    out
   }
 
   /** The watermark machine replayed in SQL: per-chunk ms maxima → running

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -82,6 +82,48 @@ object PacedReplay {
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(stageDir)
       .drop("__chunk")
+
+  /** Stage `frame` in four in-order chunk files under a fresh scratch dir
+    * and open them as a stream, one chunk per micro-batch. `rows` sizes
+    * the chunks (rows / 4 each): the frame's row count, or the count
+    * taken before any drain sentinels are added, so that a sentinel
+    * sorted last trails the real rows' four chunks.
+    */
+  def replay(frame: DataFrame, orderCols: Seq[String], rows: Long,
+      name: String): DataFrame = {
+    val stageDir = graft.TempDirs.scoped(name) + "/stage"
+    stage(frame, orderCols, math.max(1L, rows / 4L).toInt, stageDir)
+    stream(frame.sparkSession, stageDir, frame.schema)
+  }
+
+  /** Run one BOUNDED paced stream to completion and return its rows: the
+    * [[replay]] of `frame` goes through `plan` into a memory sink named
+    * `name`, drained by `AvailableNow` from a throwaway checkpoint under
+    * [[StateSizing.pinned]] (RocksDB state store, `stateParts` state
+    * partitions; `None` for a stateless plan keeps the session's count).
+    * The rows come back detached from the sink — a local relation that
+    * outlives the sink's view, which is dropped on every exit path, and
+    * that a later run under the same name cannot change.
+    */
+  def drain(frame: DataFrame, orderCols: Seq[String], rows: Long,
+      name: String, outputMode: String, stateParts: Option[Int])(
+      plan: DataFrame => Dataset[_]): DataFrame = {
+    val spark = frame.sparkSession
+    val src = replay(frame, orderCols, rows, name)
+    StateSizing.pinned(spark, stateParts) {
+      try {
+        val q = plan(src).writeStream
+          .outputMode(outputMode).format("memory").queryName(name)
+          // throwaway checkpoint on the session scratch tier (TempDirs doc)
+          .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
+          .trigger(Trigger.AvailableNow())
+          .start()
+        try q.awaitTermination() finally q.stop()
+        val sink = spark.table(name)
+        spark.createDataFrame(sink.collectAsList(), sink.schema)
+      } finally spark.catalog.dropTempView(name)
+    }
+  }
 
   def trigger(triggerMs: Long): Trigger =
     if (triggerMs <= 0) Trigger.ProcessingTime(0) else Trigger.ProcessingTime(triggerMs)

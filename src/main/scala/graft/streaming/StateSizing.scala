@@ -29,9 +29,8 @@ import org.apache.spark.sql.SparkSession
   *  - never fewer than 2, so the distributed code path (hash exchange,
   *    per-partition stores, cross-partition drains) stays exercised.
   *
-  * `SPARK_GRAFT_STREAM_STATE_PARTS` overrides the derivation for scale
-  * experiments without a code change (the [[graft.pipeline.Dedup.indexBuckets]]
-  * convention).
+  * [[pinned]] applies the count, together with the RocksDB state store,
+  * around one query's start and drain.
   */
 object StateSizing {
 
@@ -51,11 +50,6 @@ object StateSizing {
     */
   val StateRowsPerPartition = 1024L
 
-  private def envOverride: Option[Int] =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS").flatMap { s =>
-      try Some(s.toInt) catch { case _: NumberFormatException => None }
-    }
-
   /** Partition count for a stateful streaming query fed `inputRows` rows.
     * `stateRowsBound`: a STATIC upper bound on the operator's total state
     * rows, when one exists by construction (sketch aggregations) — never
@@ -63,28 +57,38 @@ object StateSizing {
     * exists to avoid).
     */
   def statePartitions(spark: SparkSession, inputRows: Long,
-      stateRowsBound: Long = Long.MaxValue): Int =
-    envOverride.getOrElse {
-      val cores = spark.sparkContext.defaultParallelism.toLong
-      val byRows =
-        (inputRows + RowsPerStatePartition - 1L) / RowsPerStatePartition
-      val byState =
-        if (stateRowsBound == Long.MaxValue) Long.MaxValue
-        else (stateRowsBound + StateRowsPerPartition - 1L) /
-          StateRowsPerPartition
-      math.max(2L, Seq(byRows, byState, cores).min).toInt
-    }
+      stateRowsBound: Long = Long.MaxValue): Int = {
+    val cores = spark.sparkContext.defaultParallelism.toLong
+    val byRows =
+      (inputRows + RowsPerStatePartition - 1L) / RowsPerStatePartition
+    val byState =
+      if (stateRowsBound == Long.MaxValue) Long.MaxValue
+      else (stateRowsBound + StateRowsPerPartition - 1L) /
+        StateRowsPerPartition
+    math.max(2L, Seq(byRows, byState, cores).min).toInt
+  }
 
-  /** Run `body` (plan + start + drain one streaming query) with the
-    * session's shuffle-partition count pinned to `n`, restoring the
-    * previous value even when planning or `start()` throws — the
-    * [[StreamJoin.outerJoinQuery]] set/restore contract, shared.
+  /** Run `body` (plan, start and drain one streaming query) with the
+    * session's state store pinned to the RocksDB provider
+    * [[FadsStream.configure]] sets (`transformWithState` needs its column
+    * families) and, when `parts` is given, the shuffle-partition count —
+    * the query's state-store count — pinned to it. Each conf is restored
+    * on every exit path, planning or `start()` failures included, and
+    * unset again when it was unset before: a leaked override would
+    * silently change every later query of the session.
     */
-  def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+  def pinned[A](spark: SparkSession, parts: Option[Int])(body: => A): A = {
+    val pins = Map(FadsStream.ProviderKey -> FadsStream.RocksDbProvider) ++
+      parts.map("spark.sql.shuffle.partitions" -> _.toString)
+    val prior = spark.conf.getAll
     try {
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+      pins.foreach { case (k, v) => spark.conf.set(k, v) }
       body
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    } finally pins.keys.foreach { k =>
+      prior.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
   }
 }

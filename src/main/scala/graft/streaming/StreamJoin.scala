@@ -103,46 +103,26 @@ object StreamJoin {
       .unionByName(spark.range(1).selectExpr(
         "CAST(-2 AS BIGINT) AS event_id", "'purchase' AS event_type",
         "CAST(-2 AS BIGINT) AS user_id", s"CAST(${sentinelTs}L AS BIGINT) AS ts"))
-    val staged = ev.unionByName(sentinels)
-    val stageDir = graft.TempDirs.scoped("sj-outer-stage") + "/events"
-    val rowsPerFile = math.max(1L, ev.count() / chunks).toInt
-    PacedReplay.stage(staged, Seq("ts", "event_id"), rowsPerFile, stageDir)
-    val src = PacedReplay.stream(spark, stageDir, staged.schema)
-      .withColumn("event_ts", Windows.tsCol("ts"))
-    val clicks = src.where("event_type = 'click'")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("event_ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-    val purchases = src.where("event_type = 'purchase'")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("event_ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    val qn = "graft_stream_outer_join"
-    // stream-stream joins keep FOUR state-store instances per shuffle
-    // partition; at the session's 32 partitions that is 128 RocksDB
-    // stores paying the per-trigger changelog-fsync floor (the streamdiag
-    // finding) — measured 46 s for a 5-trigger query. 4 partitions = 16
-    // stores matches the data volume (the FadsStream set/restore pattern)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    // set AND start() inside the try: if plan analysis or start() throws,
-    // the finally still restores the session-wide partition count (the
-    // override would otherwise leak into every later entry)
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = clickToPurchaseOuter(clicks, purchases).writeStream
-        .outputMode("append").format("memory").queryName(qn)
-        // throwaway checkpoint on the session scratch tier (TempDirs doc)
-        .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    val out = spark.table(qn)
-      .where("click_id >= 0") // drop the sentinel's own unmatched row
+    // chunks sized from the count before the sentinels are added (they
+    // sort last, into the final chunk). Stream-stream joins keep FOUR state-store
+    // instances per shuffle partition; at the session's 32 partitions that
+    // is 128 RocksDB stores paying the per-trigger changelog-fsync floor
+    // (the streamdiag finding) — measured 46 s for a 5-trigger query.
+    // 4 partitions = 16 stores matches the data volume
+    PacedReplay.drain(ev.unionByName(sentinels), Seq("ts", "event_id"),
+        ev.count(), "graft_stream_outer_join", "append", Some(4)) { replay =>
+      val src = replay.withColumn("event_ts", Windows.tsCol("ts"))
+      val clicks = src.where("event_type = 'click'")
+        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
+          col("event_ts").as("c_ts"))
+        .withWatermark("c_ts", "2 hours")
+      val purchases = src.where("event_type = 'purchase'")
+        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+          col("event_ts").as("p_ts"))
+        .withWatermark("p_ts", "2 hours")
+      clickToPurchaseOuter(clicks, purchases)
+    }.where("click_id >= 0") // drop the sentinel's own unmatched row
       .orderBy("click_id", "purchase_id")
-      .localCheckpoint() // detach from the about-to-be-dropped temp view
-    spark.catalog.dropTempView(qn)
-    out
   }
 
   /** Batch LEFT JOIN replica — content-equal to the streamed outer join

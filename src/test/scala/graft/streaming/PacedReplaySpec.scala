@@ -104,4 +104,75 @@ class PacedReplaySpec extends AnyFunSuite {
     assert(!finished, "bound elapsed before the stream could finish")
     assert(!q.isActive, "query stopped at the runtime bound")
   }
+
+  /** The session state [[PacedReplay.drain]] must leave as it found it:
+    * the two pinned confs as explicitly set (absent = unset), the active
+    * queries and whether the sink view `name` exists.
+    */
+  private def sessionState(name: String) = {
+    val set = spark.conf.getAll
+    (set.get(FadsStream.ProviderKey), set.get("spark.sql.shuffle.partitions"),
+      spark.streams.active.toSeq, spark.catalog.tableExists(name))
+  }
+
+  /** Run `body` with the provider conf set to `provider` (None = unset),
+    * then put back whatever the session had.
+    */
+  private def withProvider(provider: Option[String])(body: => Unit): Unit = {
+    val prior = spark.conf.getAll.get(FadsStream.ProviderKey)
+    def put(v: Option[String]): Unit = v match {
+      case Some(p) => spark.conf.set(FadsStream.ProviderKey, p)
+      case None => spark.conf.unset(FadsStream.ProviderKey)
+    }
+    put(provider)
+    try body finally put(prior)
+  }
+
+  test("drain: a failure inside a batch propagates, and the query, the " +
+    "pinned confs (an unset provider stays unset) and the view are gone") {
+    withProvider(None) {
+      val before = sessionState("drain_fail_batch")
+      assert(before._1.isEmpty && before._3.isEmpty && !before._4)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        PacedReplay.drain(spark.range(0, 40).selectExpr("id AS i"), Seq("i"),
+            40, "drain_fail_batch", "append", Some(3)) {
+          _.selectExpr("CASE WHEN i = 25 THEN raise_error('boom in batch') " +
+            "ELSE i END AS i")
+        }
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("boom in batch")))
+      assert(sessionState("drain_fail_batch") == before)
+    }
+  }
+
+  test("drain: a failure at start() propagates, and the query, the pinned " +
+    "confs and the view are gone") {
+    val hdfs = "org.apache.spark.sql.execution.streaming.state." +
+      "HDFSBackedStateStoreProvider"
+    withProvider(Some(hdfs)) {
+      val before = sessionState("drain_fail_start")
+      assert(before._1.contains(hdfs))
+      // complete mode needs an aggregation: analysis fails at start()
+      intercept[org.apache.spark.sql.AnalysisException] {
+        PacedReplay.drain(spark.range(0, 40).selectExpr("id AS i"), Seq("i"),
+          40, "drain_fail_start", "complete", Some(3))(df => df)
+      }
+      assert(sessionState("drain_fail_start") == before)
+    }
+  }
+
+  test("drain: a result keeps its own rows after a second run under the " +
+    "same query name") {
+    def run(from: Long, until: Long) =
+      PacedReplay.drain(spark.range(from, until).selectExpr("id AS i"),
+        Seq("i"), until - from, "drain_twice", "append", None)(df => df)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getLong(0)).sorted.toSeq
+    val first = run(0, 8)
+    val second = run(100, 104)
+    assert(ids(first) == (0L until 8L))
+    assert(ids(second) == (100L until 104L))
+    assert(!spark.catalog.tableExists("drain_twice"))
+  }
 }

@@ -34,6 +34,7 @@ rm -rf "$OUT_DIR"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"
 
 step "4/5 DuckDB oracle compare"
+python3 tools/test_oracle_tools.py
 python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
 (cd tools && python3 check_fads_oracle.py "$SF_DIR" "$OUT_DIR")
 
