@@ -10,8 +10,8 @@ import graft.streaming.FadsStream
 
 /** The one session policy every main runs on, so the engine Verify checks
   * is the engine Bench times: local mode on [[cpus]] cores with one
-  * shuffle partition per core, AQE on, UTC, UI off, `spark.local.dir` on
-  * the probed scratch tier ([[placeScratch]]), then
+  * shuffle partition per core, AQE on, UTC, UI off, `spark.local.dir` and
+  * the catalog warehouse on the probed scratch tier ([[placeScratch]]), then
   * [[FadsStream.configure]] (RocksDB state store with changelog
   * checkpointing, listing threshold, cached-plan AQE, codegen cache).
   */
@@ -76,8 +76,10 @@ object Session {
     val dir =
       if (ram) Files.createTempDirectory(shm, "graft-scratch")
       else Files.createTempDirectory("graft-scratch")
-    // removed at exit once Spark and TempDirs have emptied it
+    // removed at exit once Spark and TempDirs have emptied it; the empty
+    // catalog warehouse inside it is registered second, so it goes first
     dir.toFile.deleteOnExit()
+    dir.resolve("warehouse").toFile.deleteOnExit()
     Scratch(dir, if (ram) "ramfs" else "disk", shmProbe, probe(dir))
   }
 
@@ -94,7 +96,24 @@ object Session {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", scratch.dir.toString))
+      .config("spark.local.dir", scratch.dir.toString)
+      // the catalog makes this dir at session start; default is the cwd
+      .config("spark.sql.warehouse.dir", scratch.dir.resolve("warehouse").toString))
+  }
+
+  /** Run `body` with each of `pins` set on the session, then put every
+    * pinned key back as it was, on every exit path: its prior value, or
+    * unset when it was unset before. A leaked override would silently
+    * change every later query of the session.
+    */
+  def withConfs[A](spark: SparkSession, pins: Map[String, String])(body: => A): A = {
+    val prior = spark.conf.getAll
+    try {
+      pins.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally pins.keys.foreach { k =>
+      prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 
   /** Start (or join) the session on `scratch`, logging errors only. */

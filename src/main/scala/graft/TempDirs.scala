@@ -18,8 +18,7 @@ object TempDirs {
     * streaming checkpoints belong on the same scratch tier, not on
     * whatever disk backs java.io.tmpdir (measured: each micro-batch pays
     * 100-400 ms of RocksDB changelog + WAL fsync against ext4 /tmp).
-    * Ignored once the root exists; specs set no hint and keep the default
-    * placement.
+    * Ignored once the root exists.
     */
   @volatile private var rootHint: Option[Path] = None
 

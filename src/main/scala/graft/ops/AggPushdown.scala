@@ -33,23 +33,13 @@ object AggPushdown {
         org.apache.spark.sql.functions.expr(s"max($col) AS mx"))
       .selectExpr(s"'$table' AS tbl", "n", "mn", "mx")
 
-  /** Run `body` with the DSv2 + aggregate-pushdown confs set, restoring
-    * the previous values in a finally (the [[graft.streaming.StreamJoin]]
-    * conf-scoping convention).
+  /** Run `body` with the DSv2 + aggregate-pushdown confs set, each
+    * restored (or unset again) afterwards by [[graft.Session.withConfs]].
     */
-  private[ops] def withPushdownConfs[T](spark: SparkSession)(body: => T): T = {
-    val kAgg = "spark.sql.parquet.aggregatePushdown"
-    val kV1 = "spark.sql.sources.useV1SourceList"
-    val oldAgg = spark.conf.getOption(kAgg)
-    val oldV1 = spark.conf.getOption(kV1)
-    spark.conf.set(kAgg, "true")
-    spark.conf.set(kV1, "")
-    try body
-    finally {
-      oldAgg.fold(spark.conf.unset(kAgg))(spark.conf.set(kAgg, _))
-      oldV1.fold(spark.conf.unset(kV1))(spark.conf.set(kV1, _))
-    }
-  }
+  private[ops] def withPushdownConfs[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConfs(spark, Map(
+      "spark.sql.parquet.aggregatePushdown" -> "true",
+      "spark.sql.sources.useV1SourceList" -> ""))(body)
 
   /** Q — footer-answered table stats for lineitem + orders. Collected
     * EAGERLY under the scoped confs (2 rows — metadata scale) so the

@@ -234,13 +234,12 @@ object FadsStream {
     * bucket counts this repo ever passes to one read (bounded by
     * Dedup.MaxIndexBuckets dirs per band only at extreme corpus sizes,
     * where a deployment's object-store listing belongs in a distributed
-    * job again — hence env-overridable, not hardcoded higher).
+    * job again — hence not higher).
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config(ProviderKey, RocksDbProvider)
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       // Let AQE size the output partitioning of CACHED plans (off by
       // default). The iterative/multi-consumer operators (connected
       // components, perceptron training, MW rounds, MMR/TextRank loops,
@@ -255,8 +254,7 @@ object FadsStream {
       // dedup_components 3.6→2.7 s, stream_quality_filter 11.6→7.6 s,
       // pipeline_e2e_refresh 12.4→8.4 s, pipeline_learned_mix 7.9→5.6 s,
       // q9_fads_sharded 0.55→0.30 s; no measured regression.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // Whole-stage-codegen compile cache (guide §1/§7: per-stage fixed
       // cost). Spark caches generated-class compilations in a
       // 100-entry cache (spark.sql.codegen.cache.maxEntries default);
@@ -267,10 +265,8 @@ object FadsStream {
       // pass resident (measured at sf0.001, where fixed costs dominate:
       // one bench pass 228.8 s → 175.4 s, −23%). The value is workload-
       // shaped (number of distinct plans), not cluster-shaped — a
-      // production job with few plans never notices, and the env
-      // override tunes it for exotic memory budgets.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
+      // production job with few plans never notices.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
 
   /** Driver entry: the REGION-sharded FADS stream end-to-end — the 100 TB
     * streaming shape (8 independent QID-region shards through ONE

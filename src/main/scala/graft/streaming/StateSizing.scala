@@ -72,23 +72,11 @@ object StateSizing {
     * session's state store pinned to the RocksDB provider
     * [[FadsStream.configure]] sets (`transformWithState` needs its column
     * families) and, when `parts` is given, the shuffle-partition count —
-    * the query's state-store count — pinned to it. Each conf is restored
-    * on every exit path, planning or `start()` failures included, and
-    * unset again when it was unset before: a leaked override would
-    * silently change every later query of the session.
+    * the query's state-store count — pinned to it, both restored by
+    * [[graft.Session.withConfs]], planning or `start()` failures included.
     */
-  def pinned[A](spark: SparkSession, parts: Option[Int])(body: => A): A = {
-    val pins = Map(FadsStream.ProviderKey -> FadsStream.RocksDbProvider) ++
-      parts.map("spark.sql.shuffle.partitions" -> _.toString)
-    val prior = spark.conf.getAll
-    try {
-      pins.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally pins.keys.foreach { k =>
-      prior.get(k) match {
-        case Some(v) => spark.conf.set(k, v)
-        case None => spark.conf.unset(k)
-      }
-    }
-  }
+  def pinned[A](spark: SparkSession, parts: Option[Int])(body: => A): A =
+    graft.Session.withConfs(spark,
+      Map(FadsStream.ProviderKey -> FadsStream.RocksDbProvider) ++
+        parts.map("spark.sql.shuffle.partitions" -> _.toString))(body)
 }

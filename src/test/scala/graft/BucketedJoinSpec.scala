@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,21 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * carries ZERO shuffle exchanges (the write-time shuffle replaced both
   * query-time exchanges), and bucketing is invisible to results.
   */
-class BucketedJoinSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketedJoinSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
   test("the bucketed join plans as an exchange-free SortMergeJoin") {
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConfs(spark, Map("spark.sql.adaptive.enabled" -> "false")) {
       val plan = ops.BucketedJoin.joinFrame(spark, dir)
         .queryExecution.executedPlan
       val smj = plan.collect { case j: SortMergeJoinExec => j }
@@ -32,7 +22,7 @@ class BucketedJoinSpec extends AnyFunSuite {
       val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
       assert(shuffles.isEmpty,
         s"bucketed join must carry zero shuffle exchanges, got:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    }
   }
 
   test("each staged bucket is one file and both sides agree on fan-out") {
@@ -56,9 +46,7 @@ class BucketedJoinSpec extends AnyFunSuite {
 
   test("the point lookup prunes to the keys' buckets and stays " +
     "exchange-free") {
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConfs(spark, Map("spark.sql.adaptive.enabled" -> "false")) {
       val plan = ops.BucketedJoin.lookupFrame(spark, dir)
         .queryExecution.executedPlan
       assert(plan.collect {
@@ -75,7 +63,7 @@ class BucketedJoinSpec extends AnyFunSuite {
           s"expected <= ${ops.BucketedJoin.LookupKeys.size} buckets, " +
             s"got ${picked.get.cardinality()}")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    }
   }
 
   test("bucketing is invisible to results (parity with the plain join)") {

@@ -1,19 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract smoke: `SparkEntry.entry` must work on a plain session
-  * with NO graft-specific configs (the driver builds its own session) and
-  * return rows. Also exercises every query's plan construction (analysis
-  * errors surface even without execution).
+/** Entry-contract smoke on the policy session: `SparkEntry.entry` returns
+  * rows, and every declared query's plan construction analyzes (analysis
+  * errors surface even without execution). A caller's own session without
+  * the graft policy is not what this spec runs on.
   */
-class EntrySmokeSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EntrySmokeSpec extends AnyFunSuite with SparkSpec {
 
   test("entry returns rows on a vanilla session") {
     assert(SparkEntry.entry(spark).count() > 0)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -14,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan audit. (Correctness is the driver oracle's job; this is the
   * scale-shape gate.)
   */
-class PlanAuditSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanAuditSpec extends AnyFunSuite with SparkSpec {
 
   /** Entries whose single-partition window is bounded BY CONSTRUCTION:
     * text_vocab ranks only the VocabK=50 rows surviving a
@@ -138,13 +130,13 @@ class PlanAuditSpec extends AnyFunSuite {
     */
   private lazy val plans: Seq[(String, SparkPlan)] = {
     val dir = "/root/testdata/sf0.001"
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val plan = fn(spark, dir).queryExecution.executedPlan
-      spark.catalog.clearCache()
-      name -> plan
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    Session.withConfs(spark, Map("spark.sql.adaptive.enabled" -> "false")) {
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val plan = fn(spark, dir).queryExecution.executedPlan
+        spark.catalog.clearCache()
+        name -> plan
+      }
+    }
   }
 
   test("no cartesian products, unvetted nested-loop joins, or unpartitioned windows") {

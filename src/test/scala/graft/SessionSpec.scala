@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.FadsStream
 
-/** The one session policy, checked without starting a session: the specs
-  * share one JVM, and a `getOrCreate` here would push RocksDB and the other
-  * policy confs onto every later spec.
+/** The one session policy, read back from a recording builder without
+  * starting a session, and the one builder site on each side of the source
+  * tree.
   */
 class SessionSpec extends AnyFunSuite {
 
@@ -23,7 +23,9 @@ class SessionSpec extends AnyFunSuite {
   test("the policy sets every FadsStream.configure conf and one shuffle partition per core") {
     val fads = new Recording
     FadsStream.configure(fads)
-    assert(fads.confs.nonEmpty)
+    assert(fads.confs("spark.sql.sources.parallelPartitionDiscovery.threshold") == "1024")
+    assert(fads.confs("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(fads.confs("spark.sql.codegen.cache.maxEntries") == "8192")
     // a scratch dir that does not exist leaves the TempDirs hint untouched
     val scratch = Session.Scratch(Paths.get("/nonexistent/graft-scratch"), "disk",
       Session.Probe("absent", -1.0), Session.Probe("absent", -1.0))
@@ -40,6 +42,7 @@ class SessionSpec extends AnyFunSuite {
     assert(confs("spark.sql.session.timeZone") == "UTC")
     assert(confs("spark.ui.enabled") == "false")
     assert(confs("spark.local.dir") == scratch.dir.toString)
+    assert(confs("spark.sql.warehouse.dir") == scratch.dir.resolve("warehouse").toString)
   }
 
   test("scratch is labelled disk when /dev/shm is absent or probes at disk speed") {
@@ -55,20 +58,37 @@ class SessionSpec extends AnyFunSuite {
     assert(Session.onRam(Session.Probe("tmpfs", 0.1)))
   }
 
-  test("Session.scala holds the only SparkSession.builder() call under src/main") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root))
-    val walk = Files.walk(root)
-    val sites = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .toList.flatMap { f =>
+  /** `path:line` of every code line under `root` that calls the session
+    * builder. String literals are blanked before matching, so the needle
+    * below and the test names that quote it are not sites.
+    */
+  private def builderSites(root: String): List[String] = {
+    val needle = "SparkSession.builder()"
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir))
+    val walk = Files.walk(dir)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sorted
+      .flatMap { f =>
         Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (l, i) if l.contains("SparkSession.builder()") && {
+          case (l, i) if l.replaceAll("\"[^\"]*\"", "\"\"").contains(needle) && {
                 val t = l.trim
                 !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
-              } => s"${root.relativize(f)}:${i + 1}"
+              } => s"${dir.relativize(f)}:${i + 1}"
         }
       } finally walk.close()
+  }
+
+  test("Session.scala holds the only SparkSession.builder() call under src/main") {
+    val sites = builderSites("src/main/scala")
     assert(sites.size == 1 && sites.head.startsWith("graft/Session.scala:"),
+      s"builder sites: $sites")
+  }
+
+  test("under src/test only VectorExpressionsSpec's GraftExtensions case " +
+    "builds a session; every other spec runs on SparkSpec") {
+    val sites = builderSites("src/test/scala")
+    assert(sites.size == 1 &&
+      sites.head.startsWith("graft/functions/VectorExpressionsSpec.scala:"),
       s"builder sites: $sites")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ts-arithmetic step. If a future regeneration defeats the normalization,
   * this fails as one named test instead of 36 scattered analysis errors.
   */
-class TsEncodingCanarySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TsEncodingCanarySpec extends AnyFunSuite with SparkSpec {
 
   test("every parquet ts encoding normalizes to the same epoch-nanos") {
     // canonical: real events rows with ts floored to whole MILLIS so every
@@ -49,14 +41,12 @@ class TsEncodingCanarySpec extends AnyFunSuite {
       ("tz_micros", "timestamp_micros(ts div 1000)", "TIMESTAMP_MICROS"),
       ("tz_millis", "timestamp_micros(ts div 1000)", "TIMESTAMP_MILLIS"))
 
-    val outTypeKey = "spark.sql.parquet.outputTimestampType"
-    val outTypeWas = spark.conf.get(outTypeKey)
     variants.foreach { case (label, tsExpr, outType) =>
       val dir = TempDirs.scoped(s"tscanary-$label")
-      spark.conf.set(outTypeKey, outType)
-      try base.withColumn("ts", expr(tsExpr))
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      finally spark.conf.set(outTypeKey, outTypeWas)
+      Session.withConfs(spark, Map("spark.sql.parquet.outputTimestampType" -> outType)) {
+        base.withColumn("ts", expr(tsExpr))
+          .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      }
 
       val got = Tables.load(spark, dir, "events")
       assert(got.schema("ts").dataType == LongType,

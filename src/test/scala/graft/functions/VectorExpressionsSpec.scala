@@ -3,16 +3,12 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
+
 /** graft_dot must equal the higher-order-function fold bit-for-bit (same
   * left-to-right IEEE summation) in both interpreted and codegen paths.
   */
-class VectorExpressionsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VectorExpressionsSpec extends AnyFunSuite with SparkSpec {
 
   test("graft_dot == aggregate(zip_with(...)) bit-for-bit on real embeddings") {
     VectorExpressions.register(spark)

@@ -1,21 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The load-bearing plan shape of `x_agg_pushdown`: under the scoped
   * confs the aggregate reaches the parquet footer (`PushedAggregation`
   * non-empty), a filter correctly disables it, results match the
   * unpushed path, and the confs never leak.
   */
-class AggPushdownSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AggPushdownSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

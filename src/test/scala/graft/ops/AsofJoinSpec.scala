@@ -1,19 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** As-of join semantics: latest right row with time <= left time per key,
   * exact-time ties match, leading left rows get nulls, keys never mix.
   */
-class AsofJoinSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsofJoinSpec extends AnyFunSuite with SparkSpec {
 
   test("asof picks the latest right row at or before each left time") {
     import spark.implicits._

@@ -1,21 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The bloom pre-filter's structural guarantees: no false negatives (the
   * pruned set is a superset of the exact semi-join survivors), real pruning
   * (non-members are mostly rejected), and end-result equality with the
   * plain semi join.
   */
-class BloomJoinSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BloomJoinSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

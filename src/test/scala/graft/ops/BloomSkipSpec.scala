@@ -1,19 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Liveness + saturation gates for the per-file bloom skip index (value
   * correctness is the driver oracle's job).
   */
-class BloomSkipSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BloomSkipSpec extends AnyFunSuite with SparkSpec {
 
   test("bloom skip prunes files and fetches every probe on testdata") {
     val r = Formats.bloomskipPrune(spark, "/root/testdata/sf0.001").head()

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Pins the plan shape of `x_dpp_join`: the hive-partitioned fact scan
   * must carry a DYNAMIC pruning filter (fed by the broadcast dimension at
@@ -9,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole point of the entry is that the 100 TB scan never touches the
   * days the dimension rejects.
   */
-class DppSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DppSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

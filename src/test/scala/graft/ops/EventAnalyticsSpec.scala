@@ -1,21 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Structural properties of the event-analytics operators that the
   * cross-engine oracle cannot see: funnel stage monotonicity, session
   * partition integrity, SCD2 interval chaining, and the RANGE-frame
   * peer-inclusion semantics.
   */
-class EventAnalyticsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventAnalyticsSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,22 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 
 /** Batch FADS surface: cardinality, containment, and the sharded scale-out
   * mode's per-shard independence; plus a golden-output drift guard at
   * sf0.001 (SURVEY §5.2: "golden outputs checked in").
   */
-class FadsBatchSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FadsBatchSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

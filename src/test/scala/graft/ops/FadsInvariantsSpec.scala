@@ -1,21 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The driver-facing invariant gates ([[FadsInvariants]]) must themselves be
   * zero-violation on real data, and must actually FAIL when the engine's
   * guarantees are broken — a gate that can't turn red proves nothing, so the
   * second test feeds the checker a deliberately corrupted replay.
   */
-class FadsInvariantsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FadsInvariantsSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,22 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 
 /** Property checks for the round-4 operator additions (the DuckDB oracle is
   * the exact-value gate; these pin the semantic invariants that would not
   * show up as a hash mismatch if both engines drifted together).
   */
-class FunctionSuitesSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FunctionSuitesSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

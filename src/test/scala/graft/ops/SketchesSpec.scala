@@ -1,15 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class SketchesSpec extends AnyFunSuite {
+import graft.SparkSpec
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchesSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.01"
 

@@ -1,17 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 
-class SkewJoinSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkewJoinSpec extends AnyFunSuite with SparkSpec {
 
   test("salted join equals the plain join and spreads the hot key") {
     val dir = "/root/testdata/sf0.001"

@@ -1,22 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Z-order layout invariants: the Morton bucketing must bound BOTH
   * dimensions inside every bucket — the property a linear sort cannot
   * deliver for its trailing column.
   */
-class ZorderSpec extends AnyFunSuite {
+class ZorderSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("every z-bucket bounds both dimensions simultaneously") {
     val li = graft.Tables.load(spark, dir, "lineitem")

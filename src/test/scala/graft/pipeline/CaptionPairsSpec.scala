@@ -1,22 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Invariants of the CLIP-style pairing entry: the image vector really
   * is the decoded first-frame luma, both gate classes live, hard
   * negatives exclude the aligned caption and respect the rank contract.
   */
-class CaptionPairsSpec extends AnyFunSuite {
+class CaptionPairsSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("pairs: one per caption with an image, both gate classes live") {
     val df = Multimodal.captionPairs(spark, dir).cache()

@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The span contract: slicing the rendered sequence with the emitted
   * (start, end) must reproduce each turn's text exactly, masks follow
   * roles, and degenerate short conversations stay well-formed.
   */
-class ChatTemplateSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChatTemplateSpec extends AnyFunSuite with SparkSpec {
 
   private def roundTrip(texts: (Long, String)*): Unit = {
     import spark.implicits._

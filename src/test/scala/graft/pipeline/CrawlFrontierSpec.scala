@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Composition contracts of the crawl-frontier entry: verdict-class
   * implications, the live already-crawled path (self links), exact cap
   * exhaustion on the head domains, and rank wiring.
   */
-class CrawlFrontierSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrawlFrontierSpec extends AnyFunSuite with SparkSpec {
 
   // (doc_id, link_idx, href, canon, domain, already_crawled, is_first,
   //  admitted, domain_r)

@@ -1,19 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Determinism, epoch independence, and shard-balance contracts of the
   * epoch-shuffle shard writer on the committed entry's surface.
   */
-class EpochShuffleSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EpochShuffleSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val rows =
     EpochShuffle.query(spark, "/root/testdata/sf0.001").collect()

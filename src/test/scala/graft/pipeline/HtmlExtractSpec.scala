@@ -1,21 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The generic block extractor against hand-built pages the derived
   * template never produces — pure-text blocks, nested tags, empty lines,
   * boundary lengths — plus the committed entry's class liveness on the
   * real corpus (every rejection rule must actually fire somewhere).
   */
-class HtmlExtractSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HtmlExtractSpec extends AnyFunSuite with SparkSpec {
 
   private def extract(page: String): Seq[(Long, Long, Long, Boolean, String)] = {
     import spark.implicits._

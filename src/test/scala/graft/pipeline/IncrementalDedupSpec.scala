@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Cross-run reuse contract of the incremental dedup flow: the FIRST
   * invocation builds and persists the historical MinHash band index; every
@@ -14,16 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * WITHOUT rewriting a byte of them — that is what makes the batch pass a
   * cross-run operation instead of a one-shot recompute.
   */
-class IncrementalDedupSpec extends AnyFunSuite {
+class IncrementalDedupSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))

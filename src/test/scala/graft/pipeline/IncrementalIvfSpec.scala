@@ -5,24 +5,18 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Cross-run contracts of the incremental IVF (ANN) index — the embedding
   * twin of [[IncrementalDedupSpec]]: build-once reuse, manifest-gated
   * pruned probes, and the in-place list-wise append that makes appended
   * vectors probe-visible without touching unrelated lists.
   */
-class IncrementalIvfSpec extends AnyFunSuite {
+class IncrementalIvfSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))

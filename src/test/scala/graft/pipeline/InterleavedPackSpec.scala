@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Contracts of `mm_interleaved_pack` (MMC4-shape interleaving): fixed
   * sequence lengths survive the splice, exactly one placeholder of the
@@ -10,16 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * offset arithmetic — every image lands immediately BEFORE the first
   * token of its best-aligned sentence.
   */
-class InterleavedPackSpec extends AnyFunSuite {
+class InterleavedPackSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // (shard, seq_id, doc_id, pos_in_seq, tok_start, span_len, span_idsum,
   //  doc_tokens, img_sent, img_tok)

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** OPTIMIZE contract of the persisted float-IVF index (r14 verdict item
   * 4): a file-append ingest wave fragments its touched inverted lists;
@@ -9,16 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * probe answers are bit-identical on both sides — compaction is a pure
   * layout change, invisible to results.
   */
-class IvfCompactSpec extends AnyFunSuite {
+class IvfCompactSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val (frag, opt) = IvfIndex.compactedWorkingIndex(spark, dir)
 

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Contracts of the drift-refresh entry (`sim_ivf_refresh`): the drifted
   * wave measurably loses recall through the frozen codebook and recovers
@@ -10,16 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * whose content equals the stale index's content re-coded — nothing
   * lost, nothing duplicated.
   */
-class IvfRefreshSpec extends AnyFunSuite {
+class IvfRefreshSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("frozen-codebook recall decays under drift and the retrained index recovers it") {
     val rows = Similarity.ivfRefresh(spark, dir).collect()

@@ -1,23 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** DoReMi-lite weight-learning contracts (r14 verdict item 6): exact
   * multiplicative-weights algebra, clamping, and the committed entry's
   * live learning dynamics (both up- and down-weighted clusters must
   * exist, verdicts must re-derive from the emitted weights).
   */
-class LearnedMixSpec extends AnyFunSuite {
+class LearnedMixSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("updateWeights: exact integer ratio, neutral on empty clusters, " +
     "clamped per round and overall") {

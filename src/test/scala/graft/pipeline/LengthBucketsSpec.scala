@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Exact batch-assembly algebra on hand-built length sets, and the
   * load-bearing claim on the committed entry: bucketed batching wastes
   * strictly less padding than arrival-order batching.
   */
-class LengthBucketsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LengthBucketsSpec extends AnyFunSuite with SparkSpec {
 
   test("bucket ranking and batch maxima follow the exact algebra") {
     import spark.implicits._

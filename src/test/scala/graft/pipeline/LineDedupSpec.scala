@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Line-derivation arithmetic, corpus-global keep-first semantics, and
   * reassembly order on constructed corpora, plus class liveness on the
   * committed entry's real corpus.
   */
-class LineDedupSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LineDedupSpec extends AnyFunSuite with SparkSpec {
 
   private def run(docs: (Long, String)*): Map[Long, (Long, Long, String)] = {
     import spark.implicits._

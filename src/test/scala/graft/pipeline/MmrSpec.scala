@@ -1,17 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Greedy-replay and diversity-property gates for the MMR re-ranker. */
-class MmrSpec extends AnyFunSuite {
+import graft.SparkSpec
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+/** Greedy-replay and diversity-property gates for the MMR re-ranker. */
+class MmrSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,23 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** OPQ rotation contracts (r14 verdict item 8): the learned permutation
   * is a true orthogonal reorder balancing per-subspace residual energy,
   * it persists with the index and round-trips, and the rotated layout's
   * recall is ≥ the residual family's at equal bytes and equal re-rank IO.
   */
-class OpqSpec extends AnyFunSuite {
+class OpqSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("the learned rotation is a permutation, balances subspace energy " +
     "vs the identity layout, and round-trips through the index") {

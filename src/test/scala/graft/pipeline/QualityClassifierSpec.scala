@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Batch-perceptron semantics on hand-built corpora (exact weight algebra,
   * update-on-misclassified-only, held-out isolation) and the learning
   * gates of the committed entry's planted surface.
   */
-class QualityClassifierSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityClassifierSpec extends AnyFunSuite with SparkSpec {
 
   private def classify(rows: (Long, Long, Boolean, String)*)
       : Map[Long, (Long, Long, Boolean)] = {

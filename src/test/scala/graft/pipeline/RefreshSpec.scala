@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Contracts of the incremental end-to-end refresh (`pipeline_e2e_refresh`):
   * the batch flows against STANDING artifacts — which the refresh must
@@ -16,16 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * tests pin the properties the oracle cannot see (IO shape, artifact
   * immutability, memoization).
   */
-class RefreshSpec extends AnyFunSuite {
+class RefreshSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** (relative path, size, mtime) of every file under an index root. */
   private def fileState(root: String): Set[(String, Long, Long)] = {

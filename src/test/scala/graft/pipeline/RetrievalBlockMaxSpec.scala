@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Block-max probe invariants that the shared hash oracle cannot show:
   * (1) result equality with the unpruned probe on the real testdata
@@ -10,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DROPS blocks — the upper-bound machinery is live, and equality still
   * holds on exactly the input shape pruning exists for.
   */
-class RetrievalBlockMaxSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RetrievalBlockMaxSpec extends AnyFunSuite with SparkSpec {
 
   test("block-max probe equals the unpruned probe on testdata") {
     val root = Retrieval.ensureBm25Index(spark, "/root/testdata/sf0.001")

@@ -1,24 +1,18 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The BM25 inverted-index family's non-oracle invariants: driver-side
   * hash parity (the pruning metadata), cross-run index reuse, pruned-probe
   * equivalence with the full-scan scorer, append visibility + meta
   * accounting, and the stateless streaming routing twin.
   */
-class RetrievalSpec extends AnyFunSuite {
+class RetrievalSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("driver-side polyhash mirror matches the engine expression") {
     graft.Tables.load(spark, dir, "documents") // registers graft_polyhash

@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** RFC 9309 resolution semantics on hand-built robots files — group
   * binding, longest-match-wins, allow-on-ties, bot-group override — and
   * class liveness on the committed entry's surface.
   */
-class RobotsFilterSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RobotsFilterSpec extends AnyFunSuite with SparkSpec {
 
   private def eval(robots: Map[String, String],
       cand: Seq[(Long, String, String)]): Map[Long, (String, String, Boolean)] = {

@@ -1,16 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class SnapshotMvSpec extends AnyFunSuite {
+import graft.SparkSpec
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotMvSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Streaming twin of the incremental-dedup probe: incoming docs fed as a
   * real stream across several micro-batches, the persisted MinHash index as
@@ -10,16 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (b) run STATELESS — no watermark, no state store — which is the property
   * the per-row signature construction buys.
   */
-class StreamingIncrementalSpec extends AnyFunSuite {
+class StreamingIncrementalSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("streamed probe equals the batch core and keeps no state") {
     import spark.implicits._

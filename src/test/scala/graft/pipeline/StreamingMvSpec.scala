@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Streaming twin of the incremental materialized view: documents arrive
   * as a REAL micro-batched stream, each batch folded into the persisted
@@ -12,16 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * streamed — across batch boundaries, so a key updated by three
   * different micro-batches proves the additive merge, not just the write.
   */
-class StreamingMvSpec extends AnyFunSuite {
+class StreamingMvSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("micro-batched maintenance converges to the one-shot rollup") {
     import spark.implicits._

@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Brute-force replay + liveness gates for the exact repeated-substring
   * operator (oracle equality is the driver gate's job; this pins the
   * SEMANTICS against an independent in-memory reimplementation).
   */
-class SubstringDedupSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SubstringDedupSpec extends AnyFunSuite with SparkSpec {
 
   private val L = SubstringDedup.GramLen
 

@@ -1,22 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** TextRank invariants: full node coverage, the damping floor, bounded
   * total mass under integer truncation, and determinism. Cross-engine
   * value equality is the driver oracle's job.
   */
-class TextRankSpec extends AnyFunSuite {
+class TextRankSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("ranks cover the vocabulary, respect the floor, conserve mass") {
     val rows = TextRank.textrank(spark, dir).collect()

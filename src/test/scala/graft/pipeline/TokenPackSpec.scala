@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Token-ID packing contracts (r14 verdict item 3): sequence-length
   * exactness, provenance round-trip, and a full independent driver-side
@@ -9,16 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the distributed entry must equal a sequential re-derivation that
   * shares no Spark code with it).
   */
-class TokenPackSpec extends AnyFunSuite {
+class TokenPackSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // (shard, seq_id, doc_id, pos_in_seq, tok_start, span_len, span_idsum,
   //  doc_tokens)

@@ -1,22 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** BPE trainer invariants: greedy merge semantics of the bracketed-string
   * representation, monotone pair counts, lossless segmentation, and
   * determinism. Cross-engine value equality is the driver oracle's job.
   */
-class TokenizerSpec extends AnyFunSuite {
+class TokenizerSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("bracketed replace implements greedy left-to-right BPE pairing") {
     import spark.implicits._

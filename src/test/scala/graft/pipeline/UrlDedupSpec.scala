@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Canonical-URL normalization rules on hand-built urls, keep-policy
   * determinism, and the skew contract of the per-domain cap on the
   * committed entry's derived surface.
   */
-class UrlDedupSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UrlDedupSpec extends AnyFunSuite with SparkSpec {
 
   private def canon(urls: (Long, String)*): Map[Long, (String, Boolean, Boolean)] = {
     import spark.implicits._

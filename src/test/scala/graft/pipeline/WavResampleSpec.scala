@@ -1,20 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Exact 2:1 decimation algebra on hand-built waveforms — truncation
   * semantics on negative odd pair sums (the `//`-compatibility rule the
   * scaladoc pins), odd-tail passthrough, and the sequence fingerprint.
   */
-class WavResampleSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WavResampleSpec extends AnyFunSuite with SparkSpec {
 
   /** Build a text whose decoded 16-bit samples are exactly `samples`
     * (inverse of the entry's text→sample map: lo = (v+16384) & 0xff,

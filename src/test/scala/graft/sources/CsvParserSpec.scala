@@ -1,19 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Reference O3 CSVParser parity: typed parse (Int/Double/String), custom
   * delimiter, strict-mode failure on malformed rows, contiguous PID.
   */
-class CsvParserSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CsvParserSpec extends AnyFunSuite with SparkSpec {
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType),

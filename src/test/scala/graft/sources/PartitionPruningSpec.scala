@@ -2,8 +2,9 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Partition-layout proof: a hive-partitioned parquet write produces
   * per-value directories, and a filter on the partition column reaches the
@@ -12,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition and scanning the lake; the spec pins that the plan actually
   * prunes (not merely filters after the read).
   */
-class PartitionPruningSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PartitionPruningSpec extends AnyFunSuite with SparkSpec {
 
   test("write partitioned by event_type; filter prunes to one directory") {
     val dir = Files.createTempDirectory("part-out").toString + "/events_by_type"

@@ -4,21 +4,15 @@ import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Reference O1/O2 parse semantics (NYCTaxiRideSource.fromString,
   * /root/reference/src/main/java/datasources/NYCTaxiRideSource.java:204-244):
   * START/END time swap, empty lon/lat → 0.0, gzip transparency, typed fields.
   */
-class TaxiRideSourceSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TaxiRideSourceSpec extends AnyFunSuite with SparkSpec {
 
   private def writeGz(lines: Seq[String]): String = {
     val dir = Files.createTempDirectory("taxi").toFile

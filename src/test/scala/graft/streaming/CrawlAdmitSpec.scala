@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Online crawl-loop contracts (r14 verdict item 5): the streamed
   * admitted set equals an independent batch-window replica of the same
@@ -9,16 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * candidate, never re-admits a canonical URL, and honors the per-domain
   * politeness budget.
   */
-class CrawlAdmitSpec extends AnyFunSuite {
+class CrawlAdmitSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // (doc_id, link_idx, domain, canon)
   private lazy val admitted: Seq[(Long, Long, String, String)] =

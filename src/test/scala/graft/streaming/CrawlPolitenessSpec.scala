@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.pipeline.{CrawlFrontier, RobotsFilter}
 
 /** Politeness-scheduler contracts (r15 verdict item 4): the admitted
@@ -11,16 +11,9 @@ import graft.pipeline.{CrawlFrontier, RobotsFilter}
   * in a LATER trigger than it arrived in (the timer path actually runs —
   * oracle equality alone cannot see trigger boundaries).
   */
-class CrawlPolitenessSpec extends AnyFunSuite {
+class CrawlPolitenessSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // (doc_id, link_idx, domain, canon, ts_ms, admit_ms, deferred, batchId)
   private type Adm = (Long, Long, String, String, Long, Long, Boolean, Long)
@@ -29,9 +22,6 @@ class CrawlPolitenessSpec extends AnyFunSuite {
     * carries the micro-batch it was EMITTED in.
     */
   private lazy val admitted: Seq[Adm] = {
-    // transformWithState needs column families = the RocksDB provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Adm]
     val q = CrawlPoliteness.admittedStream(spark, dir).writeStream
       .outputMode("append")

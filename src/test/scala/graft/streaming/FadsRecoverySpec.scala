@@ -2,26 +2,17 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 
 /** Exactly-once streaming state: (1) sharded streams drain per key via
   * processing-time timers; (2) a query killed mid-stream resumes from its
   * checkpoint and produces the complete, correct output (the state snapshot
   * in RocksDB survives the restart).
   */
-class FadsRecoverySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = FadsStream.configure(
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

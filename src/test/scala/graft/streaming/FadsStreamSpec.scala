@@ -2,32 +2,22 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 
 /** Streaming e2e (SURVEY.md §5.2): replay `events` sf0.001 through the
   * transformWithState operator in several micro-batches (exercising state
   * snapshot/restore across batches) and assert exact equality with the batch
   * replay — including the final drain.
   */
-class FadsStreamSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = FadsStream.configure(
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+class FadsStreamSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
   test("streaming FADS equals batch replay, multi-batch, with drain") {
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val input = Tables.load(spark, sfDir, "events")
       .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")

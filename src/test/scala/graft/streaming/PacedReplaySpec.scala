@@ -2,28 +2,18 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables}
+import graft.{Session, SparkEntry, SparkSpec, Tables}
 
 /** End-to-end reference-pipeline parity (SURVEY.md §2.1 wiring): paced source
   * (O1) → FADS generalizer (O6) → memory sink (O7), with throughput history
   * (O5) recorded by the listener.
   */
-class PacedReplaySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = FadsStream.configure(
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+class PacedReplaySpec extends AnyFunSuite with SparkSpec {
 
   test("paced replay drives the full pipeline and records throughput") {
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     val sfDir = "/root/testdata/sf0.001"
     val events = Tables.load(spark, sfDir, "events")
       .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -54,10 +44,10 @@ class PacedReplaySpec extends AnyFunSuite {
     val stageDir = Files.createTempDirectory("order-stage").toString
     // four writer tasks finish their chunk files in any order; AQE would
     // otherwise coalesce this tiny input into a single writer
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try PacedReplay.stage(spark.range(0, 2 * chunks).selectExpr("id AS i"),
-      Seq("i"), rowsPerFile = 2, stageDir)
-    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    Session.withConfs(spark, Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
+      PacedReplay.stage(spark.range(0, 2 * chunks).selectExpr("id AS i"),
+        Seq("i"), rowsPerFile = 2, stageDir)
+    }
 
     val root = new org.apache.hadoop.fs.Path(stageDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -118,15 +108,11 @@ class PacedReplaySpec extends AnyFunSuite {
   /** Run `body` with the provider conf set to `provider` (None = unset),
     * then put back whatever the session had.
     */
-  private def withProvider(provider: Option[String])(body: => Unit): Unit = {
-    val prior = spark.conf.getAll.get(FadsStream.ProviderKey)
-    def put(v: Option[String]): Unit = v match {
-      case Some(p) => spark.conf.set(FadsStream.ProviderKey, p)
-      case None => spark.conf.unset(FadsStream.ProviderKey)
+  private def withProvider(provider: Option[String])(body: => Unit): Unit =
+    Session.withConfs(spark, Map(FadsStream.ProviderKey -> provider.getOrElse(""))) {
+      if (provider.isEmpty) spark.conf.unset(FadsStream.ProviderKey)
+      body
     }
-    put(provider)
-    try body finally put(prior)
-  }
 
   test("drain: a failure inside a batch propagates, and the query, the " +
     "pinned confs (an unset provider stays unset) and the view are gone") {

@@ -2,24 +2,15 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 
 /** O7 sink parity: the foreachBatch partitioned-parquet writer produces a
   * partitioned layout with every released row.
   */
-class SinksSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = FadsStream.configure(
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+class SinksSpec extends AnyFunSuite with SparkSpec {
 
   test("foreachBatch partitioned parquet sink writes all rows, partitioned") {
     import spark.implicits._

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 case class Ev(event_id: Long, user_id: Long, event_type: String, value: Double)
 
@@ -14,20 +15,12 @@ case class Ev(event_id: Long, user_id: Long, event_type: String, value: Double)
   * static side holds no state and needs no watermark; complete output mode
   * re-emits the running aggregate.
   */
-class StaticEnrichSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StaticEnrichSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
   test("stream-static broadcast enrich equals batch across micro-batches") {
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val nation = graft.Tables.load(spark, sfDir, "nation")
     val eventsDF = graft.Tables.load(spark, sfDir, "events")

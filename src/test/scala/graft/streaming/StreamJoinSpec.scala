@@ -3,9 +3,10 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 case class Click(c_user: Long, click_id: Long, c_ts: Timestamp)
 case class Purchase(p_user: Long, purchase_id: Long, p_ts: Timestamp)
@@ -15,20 +16,12 @@ case class Purchase(p_user: Long, purchase_id: Long, p_ts: Timestamp)
   * delivered across several micro-batches — result must equal the batch
   * form over the same rows (StreamJoin.clickToPurchase is the shared core).
   */
-class StreamJoinSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamJoinSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
   test("stream-stream interval join equals batch, multi-batch, watermarked") {
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val (clicksDF, purchasesDF) = StreamJoin.sides(spark, sfDir)
     val clicks = clicksDF.as[Click].collect().sortBy(_.click_id)
@@ -69,7 +62,6 @@ class StreamJoinSpec extends AnyFunSuite {
   }
 
   test("streamed LEFT OUTER join equals the batch outer form, both legs live") {
-    spark.sparkContext.setLogLevel("WARN")
     val got = StreamJoin.outerJoinQuery(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) -1L else r.getLong(2),

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 case class Upd(event_id: Long, user_id: Long, event_type: String,
     value: Double, ts_us: Long)
@@ -13,14 +14,7 @@ case class Upd(event_id: Long, user_id: Long, event_type: String,
   * snapshot equals the batch latest-per-key compaction
   * (graft.ops.TableOps.latestByKey) — streaming merge == batch merge.
   */
-class UpsertSinkSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UpsertSinkSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -2,21 +2,15 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Watermarked event-time windowed aggregation: windows emit once the
   * watermark passes; too-late events are dropped (bounded state).
   */
-class WindowsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WindowsSpec extends AnyFunSuite with SparkSpec {
 
   private def ev(id: Long, hour: Long, minute: Long, typ: String, v: Double): Event =
     Event(id, (hour * 3600L + minute * 60L) * 1000000000L, id % 7, typ, v, "{}")
