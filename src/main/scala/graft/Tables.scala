@@ -42,13 +42,14 @@ object Tables {
     }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // every query path goes through here: make graft's native expressions
-    // (graft_dot, graft_polyhash) available to selectExpr/spark.sql
-    graft.functions.VectorExpressions.register(spark)
     val perSession = loadCache.synchronized {
       val got = loadCache.get(spark)
       if (got != null) got
       else {
+        // every query path goes through here: make graft's native
+        // expressions (graft_dot, graft_polyhash) available to
+        // selectExpr/spark.sql, once per session — when its memo is made
+        graft.functions.VectorExpressions.register(spark)
         val fresh =
           scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
         loadCache.put(spark, fresh)

@@ -962,18 +962,20 @@ object Dedup {
     * those dirs — see [[incrementalProbe]] with `prune = true`. Rows are
     * range-sorted by bh inside each bucket file so parquet row-group
     * stats stay tight if buckets ever span row groups. The build commits
-    * TWO artifacts: the partitioned data and the [[ManifestFile]] bucket
-    * manifest the pruned probe consults — an index without its manifest
-    * is treated as uncommitted and rebuilt. All existence checks go
-    * through the Hadoop FileSystem API, so the build-reuse contract holds
-    * on any store, not just local disk.
+    * the partitioned data, the [[ManifestFile]] bucket manifest the
+    * pruned probe consults and the data's schema record
+    * ([[IndexCommit.SchemaFile]]) every probe reads under — an index
+    * without either is treated as uncommitted and rebuilt. All existence
+    * checks go through the Hadoop FileSystem API, so the build-reuse
+    * contract holds on any store, not just local disk.
     */
   def ensureMinhashIndex(spark: SparkSession, dir: String): String = {
     val path = indexPath(spark, dir)
     val (fs, root) = IndexCommit.fsOf(spark, path)
     def committed(r: org.apache.hadoop.fs.Path) =
       fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ManifestFile))
+        fs.exists(new org.apache.hadoop.fs.Path(r, ManifestFile)) &&
+        IndexCommit.recorded(fs, r, IndexCommit.Root)
     // build into a temp sibling, publish with ONE atomic rename — N
     // racing processes produce exactly one committed index, never a
     // torn overwrite at the shared path ([[IndexCommit]])
@@ -992,6 +994,7 @@ object Dedup {
       // manifest = the dirs the write just created, listed ONCE at build
       // time through the Hadoop FS API (a one-time O(B×buckets) LIST is
       // the layout-commit cost; the PROBE side never lists anything)
+      IndexCommit.recordSchemas(spark, tmp.toString, Seq(IndexCommit.Root))
       writeManifest(spark, tmp.toString, listBucketDirs(fs, tmp))
     }
     path
@@ -1005,7 +1008,7 @@ object Dedup {
     */
   def incrementalIndex(spark: SparkSession, dir: String): DataFrame = {
     val path = ensureMinhashIndex(spark, dir)
-    spark.read.parquet(path)
+    IndexCommit.read(spark, path, IndexCommit.Root, None)
       .select("doc_id", "band", "bh")
       .orderBy("doc_id", "band")
   }
@@ -1068,8 +1071,9 @@ object Dedup {
     * store where "exists" is slow or lies, and a miss would fail SILENT
     * to an empty result instead of loud), and opens the index reader
     * over ONLY the surviving `band=/bhp=` dirs (basePath-rooted point
-    * lookups). Any index row outside a touched bucket cannot equi-join
-    * the batch on (band, bh), so the result is identical; what changes
+    * lookups under the recorded schema, [[IndexCommit.read]]). Any index
+    * row outside a touched bucket cannot equi-join the batch on
+    * (band, bh), so the result is identical; what changes
     * is the probe's ENTIRE metadata+IO footprint: both the dir listing
     * and the scanned bytes are batch-proportional instead of
     * index-proportional (filtering after a root-dir read still lists
@@ -1087,21 +1091,18 @@ object Dedup {
     val newBands = minhashSignatures(incoming)
       .selectExpr(Seq("doc_id") ++ (0 until H).map(i => s"m$i")
         :+ s"posexplode($bandArrayExpr) AS (band, bh)": _*)
-    val idxPruned =
-      if (!prune) spark.read.parquet(indexPath)
-      else {
-        val p = bucketsOf(indexPath)
-        val manifest = readManifest(spark, indexPath) // fails loud if absent
-        val touchedDirs = newBands
-          .selectExpr("band", s"CAST(pmod(bh, $p) AS INT) AS bhp").distinct()
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1)))
-          .filter(manifest.contains) // absent from manifest = no rows
-          .map { case (b, h) => s"$indexPath/band=$b/bhp=$h" }
-          .sorted
-        if (touchedDirs.isEmpty) spark.read.parquet(indexPath).limit(0)
-        else spark.read.option("basePath", indexPath).parquet(touchedDirs: _*)
-      }
+    val touchedDirs = Option.when(prune) {
+      val p = bucketsOf(indexPath)
+      val manifest = readManifest(spark, indexPath) // fails loud if absent
+      newBands
+        .selectExpr("band", s"CAST(pmod(bh, $p) AS INT) AS bhp").distinct()
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1)))
+        .filter(manifest.contains) // absent from manifest = no rows
+        .map { case (b, h) => s"band=$b/bhp=$h" }
+        .sorted.toSeq
+    }
+    val idxPruned = IndexCommit.read(spark, indexPath, IndexCommit.Root, touchedDirs)
     val idx = idxPruned
       .selectExpr(Seq("doc_id AS hist_id", "band", "bh")
         ++ (0 until H).map(i => s"i$i"): _*)
@@ -1189,7 +1190,7 @@ object Dedup {
     val path = ensureMinhashIndex(spark, dir)
     val incoming = Tables.load(spark, dir, "documents")
       .where(s"doc_id % $IncrSplitMod = 0")
-    streamProbeBands(incoming, spark.read.parquet(path))
+    streamProbeBands(incoming, IndexCommit.read(spark, path, IndexCommit.Root, None))
       .orderBy("doc_id", "hist_id", "band")
   }
 

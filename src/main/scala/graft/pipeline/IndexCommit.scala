@@ -3,7 +3,8 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Cross-process atomic build-then-commit for the persisted index
   * families (MinHash band index, IVF inverted lists, BM25 postings).
@@ -25,8 +26,28 @@ import org.apache.spark.sql.SparkSession
   * It also owns the one line-file format of the families' manifests
   * (`_buckets`, `_postings`, `_lists`, the snapshot versions): each caller
   * keeps its own line syntax and its own missing-manifest message.
+  *
+  * And it owns the one pruned reader of committed index artifacts: every
+  * build records each artifact's schema in [[SchemaFile]] (one inference
+  * at build time), and a probe reads exactly the dirs it touches under
+  * that recorded schema ([[read]]) — no schema-inference job, no listing
+  * of the artifact root, and an empty frame when nothing is touched.
   */
 object IndexCommit {
+
+  /** The schema record at an index root: one `artifact<TAB>schema-json`
+    * line per committed artifact, `.` naming the root itself. An index
+    * without it is uncommitted.
+    */
+  final val SchemaFile = "_schemas"
+
+  /** The root itself as an artifact name (the MinHash, line and IVF list
+    * layouts partition the index root directly).
+    */
+  final val Root = "."
+
+  private def artifactPath(root: String, artifact: String): String =
+    if (artifact == Root) root else s"$root/$artifact"
 
   /** The Hadoop FileSystem that serves `path`, with `path` itself. */
   def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
@@ -58,6 +79,65 @@ object IndexCommit {
       bs.toString("UTF-8")
     } finally in.close()
     text.split('\n').toSeq.filter(_.nonEmpty)
+  }
+
+  /** Record the schemas of `artifacts` under `root` in its [[SchemaFile]],
+    * each exactly as `spark.read.parquet` infers it (the one inference the
+    * artifact ever gets), keeping any artifact recorded before.
+    */
+  def recordSchemas(spark: SparkSession, root: String,
+      artifacts: Seq[String]): Unit = {
+    val (fs, r) = fsOf(spark, root)
+    val file = new Path(r, SchemaFile)
+    val kept = if (fs.exists(file)) schemas(spark, root) else Map.empty
+    val fresh = artifacts.map(a =>
+      a -> spark.read.parquet(artifactPath(root, a)).schema)
+    writeLines(fs, file, (kept ++ fresh).toSeq.sortBy(_._1).map {
+      case (a, s) => s"$a\t${s.json}"
+    })
+  }
+
+  /** Every recorded artifact schema of the index at `root`; fails loud
+    * when the record is absent.
+    */
+  def schemas(spark: SparkSession, root: String): Map[String, StructType] = {
+    val (fs, r) = fsOf(spark, root)
+    readLines(fs, new Path(r, SchemaFile),
+      s"no $SchemaFile record at $root — the index predates recorded " +
+        "schemas or was not committed; rebuild the index")
+      .map { l =>
+        val Array(a, json) = l.split('\t')
+        a -> DataType.fromJson(json).asInstanceOf[StructType]
+      }.toMap
+  }
+
+  /** Whether `artifact` has a recorded schema under `root`. */
+  def recorded(fs: FileSystem, root: Path, artifact: String): Boolean = {
+    val file = new Path(root, SchemaFile)
+    fs.exists(file) && readLines(fs, file, "")
+      .exists(_.startsWith(artifact + "\t"))
+  }
+
+  /** The pruned reader: `dirs` (partition dirs relative to the artifact,
+    * e.g. `tb=3` or `band=1/bhp=5`) of `artifact` under `root`, read as
+    * basePath-rooted point lookups under the recorded schema. No dir
+    * touched ⇒ an empty frame of that schema, and nothing under `root`
+    * is listed. `dirs = None` reads the whole artifact.
+    */
+  def read(spark: SparkSession, root: String, artifact: String,
+      dirs: Option[Seq[String]]): DataFrame = {
+    val schema = schemas(spark, root).getOrElse(artifact,
+      throw new IllegalStateException(
+        s"no recorded schema for $artifact at $root — rebuild the index"))
+    val base = artifactPath(root, artifact)
+    dirs match {
+      case Some(ds) if ds.isEmpty =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      case Some(ds) =>
+        spark.read.schema(schema).option("basePath", base)
+          .parquet(ds.map(d => s"$base/$d"): _*)
+      case None => spark.read.schema(schema).parquet(base)
+    }
   }
 
   /** Ensure a committed index at `finalRoot`: no-op when `isCommitted`

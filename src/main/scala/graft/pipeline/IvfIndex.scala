@@ -19,7 +19,9 @@ import Similarity._
   *    from here);
   *  - the layout's extra training artifacts ([[Layout.artifacts]]);
   *  - [[ListsManifestFile]]: the non-empty list ids, the probe's ONLY
-  *    pruning input (never the filesystem).
+  *    pruning input (never the filesystem);
+  *  - [[IndexCommit.SchemaFile]]: the schemas of the lists and of every
+  *    artifact, which every probe reads under ([[IndexCommit.read]]).
   *
   * All of it is built into a temp sibling and published by ONE atomic
   * rename ([[IndexCommit]]), and an index missing any artifact counts as
@@ -222,7 +224,8 @@ object IvfIndex {
   /** The committed artifacts of a `layout` index absent under `root`. */
   private def missing(fs: FileSystem, root: Path, layout: Layout): Seq[String] =
     (Seq("_SUCCESS", s"$CodebookDir/_SUCCESS") ++
-      layout.artifacts.map(a => s"$a/_SUCCESS") :+ ListsManifestFile)
+      layout.artifacts.map(a => s"$a/_SUCCESS") ++
+      Seq(ListsManifestFile, IndexCommit.SchemaFile))
       .filterNot(a => fs.exists(new Path(root, a)))
 
   private def committed(fs: FileSystem, root: Path, layout: Layout): Boolean =
@@ -253,9 +256,10 @@ object IvfIndex {
       .write.mode(mode).partitionBy("c_id").parquet(root)
 
   /** Build-then-publish an index root: `build` lays the list dirs and
-    * artifacts into a temp sibling, the manifest of the written list dirs
-    * goes last, and [[IndexCommit]] makes it all visible with one rename.
-    * A no-op when `root` already holds a committed `layout` index.
+    * artifacts into a temp sibling, their schemas are recorded, the
+    * manifest of the written list dirs goes last, and [[IndexCommit]]
+    * makes it all visible with one rename. A no-op when `root` already
+    * holds a committed `layout` index.
     */
   private def publish(spark: SparkSession, root: String, layout: Layout)(
       build: Path => Unit): Unit = {
@@ -265,6 +269,8 @@ object IvfIndex {
       val lists = fs.listStatus(tmp).iterator
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
         .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
+      IndexCommit.recordSchemas(spark, tmp.toString,
+        IndexCommit.Root +: CodebookDir +: layout.artifacts)
       listsManifestWrite(spark, tmp.toString, lists)
     }
   }
@@ -313,7 +319,7 @@ object IvfIndex {
       throw new IllegalStateException(
         s"$layout IVF index at $indexPath lacks ${gone.mkString(", ")} — " +
           "it was not built by IvfIndex.ensure; rebuild the index")
-    def read(a: String): DataFrame = spark.read.parquet(s"$indexPath/$a")
+    def read(a: String): DataFrame = IndexCommit.read(spark, indexPath, a, None)
     Model(read(CodebookDir),
       Option.when(layout.artifacts.contains(PqCodebookDir))(read(PqCodebookDir)),
       if (!layout.artifacts.contains(OpqPermDir)) Nil
@@ -329,20 +335,18 @@ object IvfIndex {
       .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
 
   /** The list rows of the probed lists: manifest-intersected, read as
-    * basePath-rooted point lookups of the touched `c_id=` dirs only — the
-    * reader never lists the index root.
+    * basePath-rooted point lookups of the touched `c_id=` dirs only
+    * ([[IndexCommit.read]]) — the reader never lists the index root.
     */
   private[pipeline] def touchedLists(spark: SparkSession, probes: DataFrame,
       indexPath: String): DataFrame = {
     val manifest = listsManifestRead(spark, indexPath) // fails loud if absent
-    val touchedDirs = probes.select("c_id").distinct()
+    val touched = probes.select("c_id").distinct()
       .collect() // ≤ Q × NProbe list ids: metadata-scale
       .map(_.getLong(0))
       .filter(manifest.contains) // absent from manifest = empty list
-      .sorted.map(c => s"$indexPath/c_id=$c")
-    if (touchedDirs.isEmpty) spark.read.parquet(indexPath).limit(0)
-    else spark.read.option("basePath", indexPath)
-      .parquet(touchedDirs.toIndexedSeq: _*)
+      .sorted.map(c => s"c_id=$c")
+    IndexCommit.read(spark, indexPath, IndexCommit.Root, Some(touched.toSeq))
   }
 
   private def cut(approx: DataFrame, score: String, rerank: Long): DataFrame =
@@ -508,7 +512,8 @@ object IvfIndex {
   def stream(spark: SparkSession, dir: String, layout: Layout): DataFrame = {
     val path = ensure(spark, dir, layout)
     streamProbe(embDouble(spark, dir).where(s"vec_id % $IvfSplitMod = 0"),
-      spark.read.parquet(path), open(spark, path, layout), layout)
+      IndexCommit.read(spark, path, IndexCommit.Root, None),
+      open(spark, path, layout), layout)
       .orderBy("q_id", "vec_id")
   }
 
@@ -543,8 +548,8 @@ object IvfIndex {
       }
       graft.TempDirs.copyTree(spark, s"$src/$CodebookDir", s"$tmp/$CodebookDir")
       if (fragmented.nonEmpty)
-        writeLists(spark.read.option("basePath", src)
-          .parquet(fragmented.map(c => s"$src/c_id=$c"): _*)
+        writeLists(IndexCommit.read(spark, src, IndexCommit.Root,
+            Some(fragmented.map(c => s"c_id=$c")))
           .select("vec_id", "emb", "nrm", "c_id"), tmp.toString, "append")
       val (fs, _) = IndexCommit.fsOf(spark, tmp.toString)
       val succ = new Path(tmp, "_SUCCESS")

@@ -192,9 +192,10 @@ object LineDedup {
   /** Build-once: the BASE corpus's (line, first_key) table — the batch
     * form of `stream_line_dedup`'s standing RocksDB state — partitioned
     * into [[LineBuckets]] `lb=` hash buckets with a [[Dedup.ManifestFile]]
-    * manifest, so a refresh probe reads only its batch's touched buckets
-    * (the [[Dedup.ensureMinhashIndex]] storage contract; manifest lines
-    * reuse the (band, bhp) form with band pinned to 0).
+    * manifest and a schema record, so a refresh probe reads only its
+    * batch's touched buckets (the [[Dedup.ensureMinhashIndex]] storage
+    * contract; manifest lines reuse the (band, bhp) form with band pinned
+    * to 0).
     */
   def ensureLineIndex(spark: SparkSession, dir: String): String = {
     val path = lineIndexPath(spark, dir)
@@ -202,7 +203,8 @@ object LineDedup {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def committed(r: org.apache.hadoop.fs.Path) =
       fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, Dedup.ManifestFile))
+        fs.exists(new org.apache.hadoop.fs.Path(r, Dedup.ManifestFile)) &&
+        IndexCommit.recorded(fs, r, IndexCommit.Root)
     IndexCommit.ensure(fs, p)(committed) { tmp =>
       val base = graft.Tables.load(spark, dir, "documents")
         .where(s"doc_id % ${Dedup.IncrSplitMod} <> 0")
@@ -218,6 +220,7 @@ object LineDedup {
       val buckets = fs.listStatus(tmp).iterator
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("lb="))
         .map(s => (0, s.getPath.getName.stripPrefix("lb=").toInt)).toSet
+      IndexCommit.recordSchemas(spark, tmp.toString, Seq(IndexCommit.Root))
       Dedup.writeManifest(spark, tmp.toString, buckets)
     }
     path
@@ -227,9 +230,10 @@ object LineDedup {
     * the PERSISTED base line state plus within-batch first occurrences —
     * equal to the corpus+batch recompute restricted to the batch's rows,
     * with base-corpus IO bounded by the batch's touched `lb=` buckets
-    * (manifest-intersected point lookups; the index root is never
-    * listed). A batch line occurrence is kept iff its packed key is the
-    * minimum over {base first key if present, batch-internal minimum}.
+    * (manifest-intersected point lookups under the recorded schema,
+    * [[IndexCommit.read]]; the index root is never listed). A batch line
+    * occurrence is kept iff its packed key is the minimum over {base first
+    * key if present, batch-internal minimum}.
     */
   def refreshLines(spark: SparkSession, dir: String,
       incoming: DataFrame): DataFrame = {
@@ -242,10 +246,8 @@ object LineDedup {
     val touched = batchLines
       .selectExpr(s"CAST(pmod(xxhash64(line), $LineBuckets) AS INT) AS lb")
       .distinct().collect().map(_.getInt(0)) // ≤ LineBuckets: metadata
-      .filter(manifest.contains).sorted.map(l => s"$path/lb=$l")
-    val idx =
-      if (touched.isEmpty) spark.read.parquet(path).limit(0)
-      else spark.read.option("basePath", path).parquet(touched: _*)
+      .filter(manifest.contains).sorted.map(l => s"lb=$l")
+    val idx = IndexCommit.read(spark, path, IndexCommit.Root, Some(touched.toSeq))
     val batchFirsts = batchLines.groupBy("line")
       .agg(expr("min(k) AS batch_first"))
     batchLines

@@ -112,7 +112,8 @@ object Refresh {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     IndexCommit.ensure(fs, p)(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS"))) { tmp =>
+      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
+        IndexCommit.recorded(fs, r, IndexCommit.Root)) { tmp =>
       Tables.load(spark, dir, "documents")
         .where(s"doc_id % $EvalEvery = 0 AND doc_id % $IncrSplitMod <> 0")
         .selectExpr("split(text, ' ') AS t")
@@ -120,6 +121,7 @@ object Refresh {
         .distinct()
         .coalesce(4) // eval-suite-sized: a handful of files
         .write.mode("overwrite").parquet(tmp.toString)
+      IndexCommit.recordSchemas(spark, tmp.toString, Seq(IndexCommit.Root))
     }
     path
   }
@@ -182,7 +184,8 @@ object Refresh {
       val cand = s4.where(s"doc_id % $EvalEvery != 0")
 
       // 7. gram decontamination vs the PERSISTED eval-gram artifact
-      val evalGrams = spark.read.parquet(ensureEvalGramIndex(spark, dir))
+      val evalGrams = IndexCommit.read(spark, ensureEvalGramIndex(spark, dir),
+        IndexCommit.Root, None)
       val gramContaminated = cand
         .selectExpr("doc_id", "split(text, ' ') AS t")
         .selectExpr("doc_id", s"explode(${CorpusOps.gramExpr(DecontamN)}) AS gram")

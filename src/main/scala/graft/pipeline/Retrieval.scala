@@ -41,8 +41,8 @@ import graft.Tables
   * buckets (selected via the build-time `_postings` manifest, never the
   * filesystem — the [[Dedup.ensureMinhashIndex]] object-store contract),
   * and per-term df rides in a `stats` table bucketed the same way while
-  * corpus-wide N/TT live in a one-row `meta` table, so idf/avgdl reflect
-  * every append without touching unrelated buckets.
+  * the corpus-wide N/TT totals are committed in that same manifest, so
+  * idf/avgdl reflect every append without touching unrelated buckets.
   */
 object Retrieval {
 
@@ -155,7 +155,7 @@ object Retrieval {
       .selectExpr("query_id", "doc_id", "n_hit", "w_sum",
         s"CAST(w_sum AS DOUBLE) / ${Qt * Qi}.0 AS score",
         "CAST(rk AS BIGINT) AS rk")
-      .orderBy("query_id", "rk")
+      .transform(RankedOrder("query_id", "rk"))
   }
 
   /** The full-scan baseline entry: BM25 top-10 for the standing queries
@@ -221,60 +221,76 @@ object Retrieval {
     * the probe's ONLY pruning input, never the filesystem (the
     * [[Dedup.ManifestFile]] object-store contract: a metastore stand-in
     * that answers "which buckets exist" in one small read on any
-    * Hadoop-compatible store).
+    * Hadoop-compatible store) — plus the corpus totals as
+    * `n_docs=<N>` and `total_tokens=<TT>` lines, committed by the same
+    * write at build and at every append.
     */
   val ManifestFile = "_postings"
 
+  private val TotalsKeys = Seq("n_docs", "total_tokens")
+
   private[pipeline] def writeTbManifest(spark: SparkSession, root: String,
-      tbs: Set[Int]): Unit = {
+      tbs: Set[Int], totals: (Long, Long)): Unit = {
     val (fs, r) = IndexCommit.fsOf(spark, root)
     IndexCommit.writeLines(fs, new org.apache.hadoop.fs.Path(r, ManifestFile),
-      tbs.toSeq.sorted.map(_.toString))
+      tbs.toSeq.sorted.map(_.toString) ++
+        TotalsKeys.zip(Seq(totals._1, totals._2)).map { case (k, v) => s"$k=$v" })
   }
 
-  /** Fails loud when absent ([[IndexCommit.readLines]]). */
-  def readTbManifest(spark: SparkSession, root: String): Set[Int] = {
+  /** The manifest's lines; fails loud when absent ([[IndexCommit.readLines]]). */
+  private def manifestLines(spark: SparkSession, root: String): Seq[String] = {
     val (fs, r) = IndexCommit.fsOf(spark, root)
     IndexCommit.readLines(fs, new org.apache.hadoop.fs.Path(r, ManifestFile),
       s"no $ManifestFile manifest at $root — index was not built by " +
         "ensureBm25Index (or predates the manifest); rebuild the index")
-      .map(_.toInt).toSet
   }
 
-  private def augmentTbManifest(spark: SparkSession, root: String,
-      extra: Set[Int]): Unit =
-    writeTbManifest(spark, root, readTbManifest(spark, root) ++ extra)
+  def readTbManifest(spark: SparkSession, root: String): Set[Int] =
+    manifestLines(spark, root).filterNot(_.contains('=')).map(_.toInt).toSet
 
-  /** The one-row `meta` table read back through a max() aggregate —
-    * identical values (single row by construction) and a provably BOUNDED
-    * broadcast build side: the plan linter rejects scan-shaped cross-join
-    * builds (data-proportional at scale), and an aggregate's one-row
-    * output is bounded whatever the file holds.
+  /** The committed corpus totals (n_docs, total_tokens); fails loud when
+    * the manifest carries none (an index built before the totals moved
+    * into the manifest is rebuilt by [[ensureBm25Index]]).
     */
-  private def metaFrame(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/meta")
-      .agg(max("n_docs").as("n_docs"),
-        max("total_tokens").as("total_tokens"))
+  def readTotals(spark: SparkSession, root: String): (Long, Long) = {
+    val kv = manifestLines(spark, root).filter(_.contains('=')).map { l =>
+      val Array(k, v) = l.split('='); k -> v.toLong
+    }.toMap
+    val Seq(n, tt) = TotalsKeys.map(k => kv.getOrElse(k,
+      throw new IllegalStateException(s"no $k in the $ManifestFile manifest " +
+        s"at $root — the index predates committed totals; rebuild the index")))
+    (n, tt)
+  }
 
-  private def writeMeta(spark: SparkSession, path: String, nDocs: Long,
-      totalTokens: Long): Unit =
-    spark.range(1).selectExpr(
-      s"CAST($nDocs AS BIGINT) AS n_docs",
-      s"CAST($totalTokens AS BIGINT) AS total_tokens")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+  /** Commit the wave's buckets and its token/document counts together. */
+  private def augmentTbManifest(spark: SparkSession, root: String,
+      extra: Set[Int], added: (Long, Long)): Unit = {
+    val (n, tt) = readTotals(spark, root)
+    writeTbManifest(spark, root, readTbManifest(spark, root) ++ extra,
+      (n + added._1, tt + added._2))
+  }
+
+  /** The committed totals as a literal one-row relation: a bounded
+    * broadcast build side the plan linter accepts, planned with no job.
+    */
+  private[graft] def metaFrame(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    Seq(readTotals(spark, root)).toDF("n_docs", "total_tokens")
+  }
 
   /** Build-once: the persisted inverted index of the HISTORICAL corpus
     * split (`doc_id % 4 != 0`, the [[Dedup.ensureMinhashIndex]]
-    * convention). Three artifacts plus the manifest:
+    * convention). Two artifacts plus the manifest and schema record:
     *
     *  - `postings/tb=<n>/` — (term, doc_id, tf, dl, ver) rows partitioned
     *    by term bucket, term-sorted inside each file;
     *  - `stats/tb=<n>/`   — (term, df, ver) bucketed identically, so an
     *    append recomputes df for exactly the touched buckets;
-    *  - `meta/`           — one (n_docs, total_tokens) row: the
-    *    corpus-global idf/avgdl inputs, which every append must update
-    *    and no bucket-local rewrite can carry;
-    *  - `_postings`       — the bucket manifest the pruned probe reads.
+    *  - `_postings`       — the bucket manifest the pruned probe reads,
+    *    with the corpus-global (n_docs, total_tokens) idf/avgdl inputs,
+    *    which every append must update and no bucket-local rewrite can
+    *    carry;
+    *  - [[IndexCommit.SchemaFile]] — both artifacts' schemas.
     *
     * All existence checks via the Hadoop FS API (object-store-portable);
     * an index missing any artifact is treated as uncommitted and rebuilt.
@@ -285,8 +301,8 @@ object Retrieval {
     def committed(r: org.apache.hadoop.fs.Path) = {
       def ok(rel: String) =
         fs.exists(new org.apache.hadoop.fs.Path(s"$r/$rel"))
-      ok("postings/_SUCCESS") && ok("stats/_SUCCESS") &&
-        ok("meta/_SUCCESS") && ok(ManifestFile)
+      ok("postings/_SUCCESS") && ok("stats/_SUCCESS") && ok(ManifestFile) &&
+        IndexCommit.recorded(fs, r, "stats")
     }
     // build into a temp sibling, publish with ONE atomic rename — racing
     // processes can no longer clobber each other mid-build (IndexCommit)
@@ -309,10 +325,10 @@ object Retrieval {
         .write.mode("overwrite").partitionBy("tb")
         .parquet(s"$tmp/stats")
       val m = metaOf(hist).head()
-      writeMeta(spark, s"$tmp/meta", m.getLong(0), m.getLong(1))
       val tbs = spark.read.parquet(s"$tmp/postings")
         .select("tb").distinct().collect().map(_.getInt(0)).toSet
-      writeTbManifest(spark, tmp.toString, tbs)
+      IndexCommit.recordSchemas(spark, tmp.toString, Seq("postings", "stats"))
+      writeTbManifest(spark, tmp.toString, tbs, (m.getLong(0), m.getLong(1)))
     }
     root
   }
@@ -325,12 +341,12 @@ object Retrieval {
     */
   def indexSummary(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureBm25Index(spark, dir)
-    val p = spark.read.parquet(s"$root/postings")
+    val p = IndexCommit.read(spark, root, "postings", None)
       .groupBy("tb").agg(
         countDistinct("term").as("n_terms"),
         count(lit(1)).as("n_postings"),
         sum("tf").as("sum_tf"))
-    val s = spark.read.parquet(s"$root/stats")
+    val s = IndexCommit.read(spark, root, "stats", None)
       .groupBy("tb").agg(sum("df").as("sum_df"))
     p.join(s, "tb")
       .selectExpr("CAST(tb AS BIGINT) AS tb", "n_terms", "n_postings",
@@ -362,8 +378,9 @@ object Retrieval {
     * jobs) — intersected with the manifest; the postings AND stats readers
     * open only those `tb=` dirs (basePath-rooted point lookups), so the
     * probe's listing and scan footprint is query-proportional, not
-    * index-proportional. idf and avgdl come from `meta` + the pruned
-    * stats, so the scores are identical to the full scan by construction.
+    * index-proportional. idf and avgdl come from the committed totals +
+    * the pruned stats, so the scores are identical to the full scan by
+    * construction.
     */
   private def touchedBuckets(spark: SparkSession, root: String,
       pairs: Seq[(Long, String)] = queryPairs): Seq[Int] =
@@ -371,14 +388,12 @@ object Retrieval {
       .intersect(readTbManifest(spark, root)) // fails loud if absent
       .toSeq.sorted
 
-  /** Point-lookup read of `sub`'s touched `tb=` dirs (empty-touched ⇒ an
-    * empty frame with the right schema, NOT a full scan).
+  /** Point-lookup read of `sub`'s touched `tb=` dirs ([[IndexCommit.read]]:
+    * recorded schema, empty-touched ⇒ an empty frame, NOT a full scan).
     */
   private def prunedRead(spark: SparkSession, root: String, sub: String,
       touched: Seq[Int]): DataFrame =
-    if (touched.isEmpty) spark.read.parquet(s"$root/$sub").limit(0)
-    else spark.read.option("basePath", s"$root/$sub")
-      .parquet(touched.map(tb => s"$root/$sub/tb=$tb"): _*)
+    IndexCommit.read(spark, root, sub, Some(touched.map(tb => s"tb=$tb")))
 
   def prunedTopK(spark: SparkSession, root: String): DataFrame = {
     val touched = touchedBuckets(spark, root)
@@ -405,14 +420,15 @@ object Retrieval {
     * index via [[graft.streaming.Sinks.partitionedUpsertBatch]] (only
     * touched `tb=` dirs rewritten, layout preserved); per-term df is
     * recomputed from the merged postings of exactly those buckets and
-    * upserted into `stats` the same way; `meta` absorbs the wave's
-    * document/token counts (idf of UNTOUCHED terms shifts too when N
-    * grows — that flows through meta at probe time, which is why N is
-    * global state, not denormalized onto buckets); the manifest commit
-    * makes new buckets probe-visible. Then the SAME pruned probe runs
-    * against the augmented index, and the oracle recomputes BM25 over the
-    * FULL corpus from scratch — a lost posting, double-counted token
-    * mass, stale df, or missing manifest line all break the hash.
+    * upserted into `stats` the same way; the manifest commit makes new
+    * buckets probe-visible and absorbs the wave's document/token counts
+    * into the totals (idf of UNTOUCHED terms shifts too when N grows —
+    * that flows through the totals at probe time, which is why N is
+    * global state, not denormalized onto buckets). Then the SAME pruned
+    * probe runs against the augmented index, and the oracle recomputes
+    * BM25 over the FULL corpus from scratch — a lost posting,
+    * double-counted token mass, stale df, or missing manifest line all
+    * break the hash.
     * Append cost is O(wave + touched buckets), independent of index size.
     */
   def indexAppend(spark: SparkSession, dir: String): DataFrame =
@@ -423,12 +439,13 @@ object Retrieval {
     * copy of the index at `src`: seed the copy (concurrently with the
     * wave's tokenize+explode), upsert the wave's postings, recompute df
     * from the merged postings of exactly the touched buckets and upsert
-    * it into `stats`, add the wave's counts to `meta`, and commit the
-    * manifest. `sidecar` (none by default), given the touched buckets'
-    * merged postings and the working root, upserts one more derived table
-    * concurrently with the stats upsert. Returns the working root.
+    * it into `stats`, and commit the manifest with the wave's counts
+    * added to the totals. `sidecar` (none by default), given the touched
+    * buckets' merged postings and the working root, upserts one more
+    * derived table concurrently with the stats upsert. Returns the
+    * working root.
     */
-  private def appendWave(spark: SparkSession, dir: String, src: String,
+  private[pipeline] def appendWave(spark: SparkSession, dir: String, src: String,
       scope: String,
       sidecar: (DataFrame, String) => Unit = (_, _) => ()): String = {
     val work = graft.TempDirs.scoped(scope) + "/index"
@@ -453,8 +470,7 @@ object Retrieval {
           partitionCols = Seq("tb"), keyCols = Seq("term", "doc_id"),
           versionCols = Seq("ver"), sortCols = Seq("term", "doc_id"))
         if (touched.nonEmpty) {
-          val merged = spark.read.option("basePath", s"$work/postings")
-            .parquet(touched.toSeq.sorted.map(tb => s"$work/postings/tb=$tb"): _*)
+          val merged = prunedRead(spark, work, "postings", touched.toSeq.sorted)
           val newStats = merged.groupBy("term").agg(count(lit(1)).as("df"))
             .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
           // a sidecar derives from the same COMMITTED merged postings and
@@ -469,11 +485,8 @@ object Retrieval {
             sidecar(merged, work)
           }
         }
-        val old = spark.read.parquet(s"$src/meta").head()
         val add = metaOf(wave).head()
-        writeMeta(spark, s"$work/meta",
-          old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1))
-        augmentTbManifest(spark, work, touched)
+        augmentTbManifest(spark, work, touched, (add.getLong(0), add.getLong(1)))
         work
       } finally wavePostings.unpersist(false)
     }
@@ -499,21 +512,20 @@ object Retrieval {
     * upper-bounds every member posting's weight. Deliberately stored as
     * the RAW (max_tf, min_dl) extrema rather than a precomputed impact:
     * max/min are append-mergeable, and df/avgdl/N — which move under
-    * every append — are resolved at probe time from stats/meta, so the
-    * sidecar never goes stale the way a materialized impact would.
-    * Bucketed by the same `tb` as postings: the probe's sidecar reads
-    * stay query-proportional.
+    * every append — are resolved at probe time from stats and the
+    * committed totals, so the sidecar never goes stale the way a
+    * materialized impact would. Bucketed by the same `tb` as postings:
+    * the probe's sidecar reads stay query-proportional.
     */
   def ensureBlockMax(spark: SparkSession, root: String): Unit = {
-    val (fs, _) = IndexCommit.fsOf(spark, root)
-    // committed = _SUCCESS present AND the upsert-layout `ver` column
-    // exists (a sidecar from before the append support is rebuilt — the
-    // schema read is metadata-only)
+    val (fs, r) = IndexCommit.fsOf(spark, root)
+    // committed = _SUCCESS present AND its schema recorded (the record is
+    // written after the sidecar, so a torn build is rebuilt)
     val committed =
       fs.exists(new org.apache.hadoop.fs.Path(s"$root/blockmax/_SUCCESS")) &&
-        spark.read.parquet(s"$root/blockmax").columns.contains("ver")
-    if (!committed)
-      spark.read.parquet(s"$root/postings")
+        IndexCommit.recorded(fs, r, "blockmax")
+    if (!committed) {
+      IndexCommit.read(spark, root, "postings", None)
         .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
         .groupBy("term", "blk")
         .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
@@ -522,15 +534,8 @@ object Retrieval {
         .sortWithinPartitions("tb", "term", "blk")
         .write.mode("overwrite").partitionBy("tb")
         .parquet(s"$root/blockmax")
-  }
-
-  /** The one-row meta read driver-side (two longs — metadata-scale, the
-    * [[streamRouteQuery]] precedent) so the probe can inline N/TT as
-    * literals instead of cross-joining the meta frame repeatedly.
-    */
-  private def metaVals(spark: SparkSession, root: String): (Long, Long) = {
-    val m = spark.read.parquet(s"$root/meta").head()
-    (m.getLong(0), m.getLong(1))
+      IndexCommit.recordSchemas(spark, root, Seq("blockmax"))
+    }
   }
 
   /** Query-term stats with resolved idfq and inlined corpus globals —
@@ -592,7 +597,7 @@ object Retrieval {
   private[graft] def blockSurvivors(spark: SparkSession, root: String)
       : DataFrame = {
     val touched = touchedBuckets(spark, root)
-    val (nd, tt) = metaVals(spark, root)
+    val (nd, tt) = readTotals(spark, root)
     val qstats = qstatsIdf(spark, root, touched, nd, tt)
       .select("query_id", "term", "idfq", "n_docs", "total_tokens")
     val postings = prunedRead(spark, root, "postings", touched)
@@ -621,7 +626,7 @@ object Retrieval {
   def blockMaxTopK(spark: SparkSession, root: String): DataFrame = {
     ensureBlockMax(spark, root)
     val touched = touchedBuckets(spark, root)
-    val (nd, tt) = metaVals(spark, root)
+    val (nd, tt) = readTotals(spark, root)
     val survivors = blockSurvivors(spark, root).select("query_id", "blk")
     prunedRead(spark, root, "postings", touched)
       .select("term", "doc_id", "tf", "dl")
@@ -637,7 +642,7 @@ object Retrieval {
       .selectExpr("query_id", "doc_id", "n_hit", "w_sum",
         s"CAST(w_sum AS DOUBLE) / ${Qt * Qi}.0 AS score",
         "CAST(rk AS BIGINT) AS rk")
-      .orderBy("query_id", "rk")
+      .transform(RankedOrder("query_id", "rk"))
   }
 
   /** Driver entry: block-max pruned top-k over the persisted index —
@@ -660,17 +665,22 @@ object Retrieval {
     val src = ensureBm25Index(spark, dir)
     ensureBlockMax(spark, src)
     blockMaxTopK(spark, appendWave(spark, dir, src, "bm25-bmappend",
-      (merged, work) =>
-        graft.streaming.Sinks.partitionedUpsertBatch(
-          merged
-            .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
-            .groupBy("term", "blk")
-            .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
-            .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L)),
-          s"$work/blockmax",
-          partitionCols = Seq("tb"), keyCols = Seq("term", "blk"),
-          versionCols = Seq("ver"), sortCols = Seq("term", "blk"))))
+      blockMaxSidecar))
   }
+
+  /** The [[appendWave]] sidecar that rebuilds the touched buckets'
+    * blockmax rows from their merged postings.
+    */
+  private[pipeline] def blockMaxSidecar(merged: DataFrame, work: String): Unit =
+    graft.streaming.Sinks.partitionedUpsertBatch(
+      merged
+        .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
+        .groupBy("term", "blk")
+        .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
+        .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L)),
+      s"$work/blockmax",
+      partitionCols = Seq("tb"), keyCols = Seq("term", "blk"),
+      versionCols = Seq("ver"), sortCols = Seq("term", "blk"))
 
   // ------------------------------------- skewed-score block-max surface
 
@@ -765,7 +775,7 @@ object Retrieval {
       .join(broadcast(acct), "query_id")
       .select("query_id", "doc_id", "n_hit", "w_sum", "score", "rk",
         "n_blocks", "n_survivors", "prune_ok")
-      .orderBy("query_id", "rk")
+      .transform(RankedOrder("query_id", "rk"))
   }
 
   /** DuckDB replay of [[blockMaxSkewed]]: derive the same corpus, score
@@ -929,7 +939,7 @@ object Retrieval {
     ensureBlockMax(spark, root)
     val pairs = wandPairs
     val touched = touchedBuckets(spark, root, pairs)
-    val (nd, tt) = metaVals(spark, root)
+    val (nd, tt) = readTotals(spark, root)
     val qstats = qstatsIdf(spark, root, touched, nd, tt, wandQueryTerms)
       .select("query_id", "term", "idfq", "n_docs", "total_tokens")
     val postings = prunedRead(spark, root, "postings", touched)
@@ -1132,7 +1142,7 @@ object Retrieval {
 
   /** Per-query scoring payload for the STATELESS stream: each standing
     * query as ONE row carrying a term-sorted array of (term, idfq)
-    * structs — idf pre-resolved against the index's stats/meta (the
+    * structs — idf pre-resolved against the index's stats and totals (the
     * background-corpus statistics, exactly how production routing scores
     * a live stream), the [[Similarity]] broadcast-codebook pattern.
     */
@@ -1146,7 +1156,8 @@ object Retrieval {
     RelevantTerms.map(t => s"'$t'").mkString("array(", ", ", ")")
 
   def queryPayload(spark: SparkSession, root: String): DataFrame = {
-    val stats = spark.read.parquet(s"$root/stats").select("term", "df")
+    val stats = prunedRead(spark, root, "stats", touchedBuckets(spark, root))
+      .select("term", "df")
     queryTerms(spark).join(stats, "term")
       .crossJoin(broadcast(metaFrame(spark, root)))
       .selectExpr("query_id",
@@ -1207,11 +1218,10 @@ object Retrieval {
     */
   def streamRouteQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureBm25Index(spark, dir)
-    val m = spark.read.parquet(s"$root/meta").head()
+    val (nd, tt) = readTotals(spark, root)
     val wave = Tables.load(spark, dir, "documents")
       .where(s"doc_id % ${Dedup.IncrSplitMod} = 0")
-    routeCore(wave, queryPayload(spark, root),
-      m.getLong(0), m.getLong(1) / m.getLong(0))
+    routeCore(wave, queryPayload(spark, root), nd, tt / nd)
       .orderBy("query_id", "doc_id")
   }
 
@@ -1298,7 +1308,7 @@ object Retrieval {
       .where(s"rk <= $HybridK")
       .selectExpr("query_id", "doc_id", "lex_rk", "vec_rk", "rrf",
         "CAST(rk AS BIGINT) AS rk")
-      .orderBy("query_id", "rk")
+      .transform(RankedOrder("query_id", "rk"))
   }
 
   val hybridRrfSql: String = {
@@ -1405,7 +1415,7 @@ object Retrieval {
       .where(s"rk <= $HybridK")
       .selectExpr("query_id", "doc_id", "lex_rk", "vec_rk", "rrf",
         "CAST(rk AS BIGINT) AS rk")
-      .orderBy("query_id", "rk")
+      .transform(RankedOrder("query_id", "rk"))
   }
 
   val hybridRrfIndexedSql: String = {
@@ -1509,7 +1519,7 @@ object Retrieval {
       .where(s"rk <= $TopK")
       .selectExpr("query_id", "doc_id", "n_occ", "first_start",
         "CAST(rk AS BIGINT) AS rk")
-      .orderBy("query_id", "rk")
+      .transform(RankedOrder("query_id", "rk"))
   }
 
   /** Oracle for phrase top-k over `documents WHERE docFilter`. */
@@ -1593,7 +1603,7 @@ object Retrieval {
       .where(s"rk <= $TopK")
       .selectExpr("query_id", "doc_id", "n_occ", "first_start",
         "CAST(rk AS BIGINT) AS rk")
-      .orderBy("query_id", "rk")
+      .transform(RankedOrder("query_id", "rk"))
   }
 
   val phraseIndexSearchSql: String =

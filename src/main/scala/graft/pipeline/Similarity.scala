@@ -84,7 +84,8 @@ object Similarity {
       |        FROM (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings))""".stripMargin
 
   /** The (sim DESC, vec_id) top-`k` per query of scored (q_id, vec_id,
-    * sim) rows, as (q_id, vec_id, sim, rk) ordered for the oracle.
+    * sim) rows, as (q_id, vec_id, sim, rk) ordered for the oracle
+    * ([[RankedOrder]]: the rank filter bounds the rows).
     */
   private[pipeline] def rankTopK(scored: DataFrame, k: Int = TopK): DataFrame =
     scored
@@ -92,7 +93,7 @@ object Similarity {
         "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
       .where(s"rk <= $k")
       .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+      .transform(RankedOrder("q_id", "rk"))
 
   // -------------------------------------------- DuckDB oracle fragments
 
@@ -322,7 +323,7 @@ object Similarity {
       .selectExpr("q_id", "posexplode(tk) AS (i, p)")
       .selectExpr("q_id", "p._2 AS vec_id", "p._1 AS sim",
         "CAST(i + 1 AS BIGINT) AS rk")
-      .orderBy("q_id", "rk")
+      .transform(RankedOrder("q_id", "rk"))
   }
 
   /** LSH bucket id: sign bits of `NBits` hyperplane dot products. */
@@ -2412,7 +2413,7 @@ object Similarity {
         .selectExpr("q_id", "vec_id", "7 * relq - 3 * divq AS score")
       sel = sel.unionByName(argmax(scored, r)).localCheckpoint()
     }
-    sel.orderBy("q_id", "rk")
+    sel.transform(RankedOrder("q_id", "rk"))
   }
 
   val mmrTopKSql: String = {
@@ -2486,7 +2487,7 @@ object Similarity {
         "row_number() OVER (PARTITION BY q_id, role ORDER BY sim DESC, vec_id ASC)"))
       .where(s"rk <= $HnK")
       .selectExpr("q_id", "role", "CAST(rk AS BIGINT) AS rk", "vec_id", "sim")
-      .orderBy("q_id", "role", "rk")
+      .transform(RankedOrder("q_id", "role", "rk"))
   }
 
   val hardNegativesSql: String =

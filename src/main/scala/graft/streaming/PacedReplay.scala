@@ -72,8 +72,6 @@ object PacedReplay {
   /** Open the staged directory as a paced stream.
     *
     * @param filesPerTrigger chunk files admitted per micro-batch
-    * @param triggerMs       processing-time trigger interval (0 = as fast as
-    *                        possible — the reference's `runtime=-1` mode)
     */
   def stream(spark: SparkSession, stageDir: String, schema: StructType,
       filesPerTrigger: Int = 1): DataFrame =

@@ -11,9 +11,12 @@ import graft.{Session, SparkEntry}
 
 /** Per-entry diagnosis on Bench's session. For each named entry: one
   * untimed warm-up and two timed runs through the `noop` sink (Bench's
-  * protocol), then the best-of-2 time and, for the last timed run,
+  * protocol), each timed in two phases: define (the entry function building
+  * its DataFrame, with whatever eager jobs that starts) and action (the
+  * noop write). It prints the best-of-2 time, both runs' phase split and,
+  * for the last timed run,
   *  - every Spark job (wall, stages, tasks, summed task time, description),
-  *    rolled up by description, with the jobs over 200 ms listed;
+  *    rolled up by phase and description, with the jobs over 200 ms listed;
   *  - a per-stage-name rollup, where the wall time actually lives;
   *  - every streaming trigger's duration breakdown and state-store commit
   *    metrics (a streaming entry's queries are gone once it returns).
@@ -25,10 +28,16 @@ import graft.{Session, SparkEntry}
   */
 object Diag {
 
-  final case class JobRow(desc: String, started: Long, nStages: Int,
-      var ended: Long = -1L, var nTasks: Int = 0, var taskMs: Long = 0L)
+  final case class JobRow(phase: String, desc: String, started: Long,
+      nStages: Int, var ended: Long = -1L, var nTasks: Int = 0,
+      var taskMs: Long = 0L)
 
-  /** Description of the marker jobs that bracket the recorded run. */
+  /** The phases of one run, in order. */
+  private val Phases = Seq("define", "action")
+
+  /** Description of the marker jobs that open each phase of the recorded
+    * run and close it.
+    */
   private val Mark = "graft-diag-mark"
 
   def main(args: Array[String]): Unit = {
@@ -42,16 +51,18 @@ object Diag {
     spark.sparkContext.setLogLevel("ERROR")
 
     // Listener events arrive after the actions that caused them, so the
-    // recorded run is bracketed by marker jobs: the listener thread alone
-    // touches these buffers between the markers, and `recorded` releases
-    // once it has seen the closing one, i.e. every event of the run.
+    // recorded run is split by marker jobs: one opens each phase and one
+    // closes the run. The listener thread alone touches these buffers
+    // between the markers, and `recorded` releases once it has seen the
+    // closing one, i.e. every event of the run.
     val jobs = mutable.LinkedHashMap.empty[Int, JobRow]
     val stageToJob = mutable.Map.empty[Int, Int]
     val stages = mutable.ArrayBuffer.empty[(String, Long, Int, Long)] // name, wall, tasks, taskMs
     val stageTasks = mutable.Map.empty[Int, (Int, Long)]
     val triggers = mutable.ArrayBuffer.empty[String]
     val recorded = new Semaphore(0)
-    var recording = false
+    var marks = 0 // markers seen in the recorded run
+    def phase: Option[String] = Phases.lift(marks - 1)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         // the result stage (highest id) is named after the action's call
@@ -60,24 +71,24 @@ object Diag {
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse(e.stageInfos.maxBy(_.stageId).name).takeWhile(_ != '\n')
         if (desc == Mark) {
-          recording = !recording
-          if (!recording) recorded.release()
-        } else if (recording) {
-          jobs(e.jobId) = JobRow(desc, e.time, e.stageIds.size)
+          marks += 1
+          if (marks > Phases.size) { marks = 0; recorded.release() }
+        } else phase.foreach { ph =>
+          jobs(e.jobId) = JobRow(ph, desc, e.time, e.stageIds.size)
           e.stageIds.foreach(stageToJob(_) = e.jobId)
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (recording) jobs.get(e.jobId).foreach(_.ended = e.time)
+        if (phase.nonEmpty) jobs.get(e.jobId).foreach(_.ended = e.time)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (recording && stageToJob.contains(e.stageId)) {
+        if (phase.nonEmpty && stageToJob.contains(e.stageId)) {
           val ms = Option(e.taskMetrics)
             .map(m => m.executorRunTime + m.executorDeserializeTime).getOrElse(0L)
           val (n, t) = stageTasks.getOrElse(e.stageId, (0, 0L))
           stageTasks(e.stageId) = (n + 1, t + ms)
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (recording) {
+        if (phase.nonEmpty) {
           val si = e.stageInfo
           stageToJob.get(si.stageId).flatMap(jobs.get).foreach { job =>
             val (n, t) = stageTasks.getOrElse(si.stageId, (0, 0L))
@@ -88,7 +99,7 @@ object Diag {
           }
         }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case p: QueryProgressEvent if recording => triggers += trigger(p)
+        case p: QueryProgressEvent if phase.nonEmpty => triggers += trigger(p)
         case _ => ()
       }
     })
@@ -102,32 +113,47 @@ object Diag {
 
     args.drop(1).foreach { name =>
       val fn = SparkEntry.queries(name)
-      def run(): Double = {
+      // (define s, action s); `between` runs after define, before the action
+      def run(between: () => Unit = () => ()): (Double, Double) = {
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        finally spark.catalog.clearCache() // entries cache() internally
-        (System.nanoTime() - t0) / 1e9
+        try {
+          val df = fn(spark, sfDir)
+          val t1 = System.nanoTime()
+          between()
+          val t2 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          ((t1 - t0) / 1e9, (System.nanoTime() - t2) / 1e9)
+        } finally spark.catalog.clearCache() // entries cache() internally
       }
       run() // warm-up
       val first = run()
       jobs.clear(); stageToJob.clear(); stages.clear(); stageTasks.clear()
       triggers.clear()
       mark()
-      val last = try run() finally mark()
+      val last = try run(() => mark()) finally mark()
       recorded.acquire()
 
       val rows = jobs.values.toSeq
       def wall(r: JobRow): Long = math.max(0L, r.ended - r.started)
-      println(f"\n===== $name: best-of-2 ${math.min(first, last)}%.3f s, " +
+      def total(t: (Double, Double)): Double = t._1 + t._2
+      def split(t: (Double, Double)): String =
+        f"define ${t._1}%.3f s + action ${t._2}%.3f s"
+      println(f"\n===== $name: best-of-2 ${math.min(total(first), total(last))}%.3f s, " +
         f"last run ${rows.size} jobs, sum job wall ${rows.map(wall).sum / 1000.0}%.3f s =====")
-      rows.groupBy(_.desc.take(90)).toSeq.sortBy(-_._2.map(wall).sum)
-        .foreach { case (d, rs) =>
-          println(f"  ${s(rs.map(wall).sum)}  jobs=${rs.size}%-3d " +
+      println(s"  first run ${split(first)}; last run ${split(last)}")
+      Phases.foreach { ph =>
+        val rs = rows.filter(_.phase == ph)
+        println(f"  $ph%-6s jobs=${rs.size}%-3d sum job wall ${s(rs.map(wall).sum)}")
+      }
+      rows.groupBy(r => (r.phase, r.desc.take(90))).toSeq
+        .sortBy(-_._2.map(wall).sum)
+        .foreach { case ((ph, d), rs) =>
+          println(f"  ${s(rs.map(wall).sum)}  $ph%-6s jobs=${rs.size}%-3d " +
             f"tasks=${rs.map(_.nTasks).sum}%-5d taskTime=${s(rs.map(_.taskMs).sum)}  $d")
         }
       jobs.toSeq.filter(j => wall(j._2) > 200).sortBy(j => -wall(j._2)).take(20)
         .foreach { case (id, r) =>
-          println(f"    job $id%-4d ${s(wall(r))} stages=${r.nStages} " +
+          println(f"    job $id%-4d ${s(wall(r))} ${r.phase}%-6s stages=${r.nStages} " +
             f"tasks=${r.nTasks} ${r.desc.take(90)}")
         }
       stages.groupBy(_._1).toSeq.sortBy(-_._2.map(_._2).sum).take(25)

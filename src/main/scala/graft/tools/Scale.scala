@@ -332,7 +332,9 @@ object Scale {
   def bm25Probe(spark: SparkSession, indexDir: String): Unit = {
     import graft.pipeline.Retrieval
     val root = Retrieval.ensureBm25Index(spark, indexDir)
-    val postRows = spark.read.parquet(s"$root/postings").count()
+    def read(artifact: String) =
+      graft.pipeline.IndexCommit.read(spark, root, artifact, None)
+    val postRows = read("postings").count()
     val manifest = Retrieval.readTbManifest(spark, root)
     val touched = Retrieval.Queries.flatMap(_._2.split(' '))
       .map(Retrieval.termBucket).toSet.intersect(manifest).size
@@ -344,14 +346,12 @@ object Scale {
     def pruned() = once(Retrieval.prunedTopK(spark, root))
     def full() = once(Retrieval.scoreTopK(
       Retrieval.queryTerms(spark),
-      spark.read.parquet(s"$root/postings").select("term", "doc_id", "tf", "dl"),
-      spark.read.parquet(s"$root/stats").select("term", "df"),
-      spark.read.parquet(s"$root/meta")
-        .agg(org.apache.spark.sql.functions.max("n_docs").as("n_docs"),
-          org.apache.spark.sql.functions.max("total_tokens").as("total_tokens"))))
+      read("postings").select("term", "doc_id", "tf", "dl"),
+      read("stats").select("term", "df"),
+      Retrieval.metaFrame(spark, root)))
     Retrieval.ensureBlockMax(spark, root)
     val qterms = Retrieval.queryTerms(spark)
-    val candPairs = spark.read.parquet(s"$root/blockmax")
+    val candPairs = read("blockmax")
       .join(qterms, "term").select("query_id", "blk").distinct().count()
     val survPairs = Retrieval.blockSurvivors(spark, root).count()
     def blockmax() = once(Retrieval.blockMaxTopK(spark, root))

@@ -99,22 +99,24 @@ object PlanAuditBudgets {
     "stream_qsketch_quantiles" -> 8,
     // two full retrieval legs in one plan: the lexical side's postings/
     // df aggs + (query, doc) partial agg + rank window, the vector side's
-    // rank window, the k·|queries|-scale fuse join and final sort — each
-    // leg keeps exactly its standalone production shape
-    "text_hybrid_rrf" -> 11,
+    // rank window and the k·|queries|-scale fuse join — each leg keeps
+    // exactly its standalone production shape; the rank-bounded output
+    // is ordered without an exchange (RankedOrder)
+    "text_hybrid_rrf" -> 10,
     // the indexed twin: pruned-postings (query, doc) agg + lex rank
-    // window, the IVF probe's assignment/rank exchanges, the fuse join
-    // and final sort — both corpus-scan legs replaced by index point
-    // lookups, so every exchange is query- or bucket-proportional
-    "text_hybrid_rrf_indexed" -> 9,
+    // window, the IVF probe's assignment/rank exchanges and the fuse
+    // join — both corpus-scan legs replaced by index point lookups, so
+    // every exchange is query- or bucket-proportional; the corpus totals
+    // are a literal row, not an aggregate
+    "text_hybrid_rrf_indexed" -> 7,
     // positional explode → broadcast term join, then the (q, doc, start)
-    // vote agg, the per-doc occurrence agg, rank window and final sort —
-    // one corpus-sized combinable exchange, the rest candidate-scale
-    "text_phrase_search" -> 5,
-    // the pruned-index twin: same alignment aggs/window/sort, but the
+    // vote agg, the per-doc occurrence agg and rank window — one
+    // corpus-sized combinable exchange, the rest candidate-scale
+    "text_phrase_search" -> 4,
+    // the pruned-index twin: same alignment aggs/window, but the
     // exploded input is the phrase terms' bucketed position lists —
     // every exchange candidate-scale, the corpus never scanned
-    "text_phrase_index" -> 5,
+    "text_phrase_index" -> 4,
     // set-similarity join: the distinct-set agg, the df agg, the per-clip
     // prefix window, the candidate distinct and the intersection agg —
     // all set-/candidate-scale after the one frame-hash distinct
@@ -198,43 +200,59 @@ object PlanAuditBudgets {
     // +3 for the capacity-aware gate: the per-shard distinct-PID agg pair
     // + its one-row broadcast onto the summary (metadata-scale rows)
     "q9_inv_sharded" -> 7,
-    "sim_bruteforce_topk" -> 2,
-    "sim_filtered_topk" -> 2,
-    "sim_ivf_topk" -> 6,
-    // flat IVF's 6 plus the centroid→L1-cell assignment agg (codebook-
+    // the rank-bounded top-k entries below order their ≤ Q·k output rows
+    // without an exchange (RankedOrder), one fewer than an orderBy
+    "sim_bruteforce_topk" -> 1,
+    "sim_bruteforce_agg_topk" -> 1,
+    "sim_filtered_topk" -> 1,
+    "sim_hard_negatives" -> 1,
+    // the MMR rounds run over localCheckpoint-ed pool tables
+    "sim_mmr_topk" -> 0,
+    "sim_sq8_topk" -> 1,
+    // the float/SQ8 persisted-IVF probes: query-batch-sized exchanges
+    // after the list scan
+    "sim_incremental_ivf" -> 2,
+    "sim_incremental_ivf_append" -> 2,
+    "sim_incremental_ivf_compact" -> 2,
+    "sim_incremental_ivf_sq8" -> 2,
+    "sim_incremental_ivf_sq8_append" -> 2,
+    "sim_ivf_topk" -> 5,
+    // flat IVF's 5 plus the centroid→L1-cell assignment agg (codebook-
     // sized rows; the query-side L1/fine rank windows ride the same
     // Q-partitioned exchanges the flat probe already pays)
-    "sim_ivf2_topk" -> 7,
-    "sim_ivf_trained_topk" -> 6,
+    "sim_ivf2_topk" -> 6,
+    "sim_ivf_trained_topk" -> 5,
     // IVF-PQ composes three indexes (coarse lists, per-subspace codes,
     // candidate ADC) plus an exact re-rank join — each stage shuffles once
-    "sim_ivfpq_topk" -> 9,
+    "sim_ivfpq_topk" -> 8,
     // persisted-PQ probe: the ADC sum is a (q_id, vec_id)-keyed aggregate
     // over the exploded (m, code) rows (one shuffle the SQ8 integer-dot
-    // probe doesn't pay), plus the ark window, exact re-rank join, and
-    // presentation sort — all query-batch-sized after the list scan
-    "sim_incremental_ivf_pq" -> 4,
+    // probe doesn't pay), plus the ark window and exact re-rank join —
+    // all query-batch-sized after the list scan
+    "sim_incremental_ivf_pq" -> 3,
     // residual layout: same probe shape (assignment agg/join, ADC agg,
-    // re-rank window, presentation sort); the coarse-term join is a
-    // broadcast against the bounded codebook — no extra exchange
-    "sim_incremental_ivf_pq_res" -> 4,
+    // re-rank window); the coarse-term join is a broadcast against the
+    // bounded codebook — no extra exchange
+    "sim_incremental_ivf_pq_res" -> 3,
     // OPQ probe = the residual probe shape (rotation is a projection,
-    // not an exchange): same 4 stages — probe-set rank, ADC agg, exact
-    // re-rank rank, presentation sort
-    "sim_incremental_ivf_opq" -> 4,
-    "sim_incremental_ivf_pq_res_append" -> 4,
-    "sim_incremental_ivf_pq_append" -> 4,
+    // not an exchange): same 3 stages — probe-set rank, ADC agg, exact
+    // re-rank rank
+    "sim_incremental_ivf_opq" -> 3,
+    "sim_incremental_ivf_pq_res_append" -> 3,
+    "sim_incremental_ivf_pq_append" -> 3,
     // the probe's 4 plus the hist brute-force truth (its top-k window +
     // hit join + two scalar aggregates) — a declared verification surface
     "sim_ivfpq_idx_recall_gate" -> 8,
     "sim_label_centroids" -> 2,
-    "sim_lsh_topk" -> 2,
-    "sim_pq_topk" -> 4,
+    "sim_lsh_topk" -> 1,
+    "sim_pq_topk" -> 3,
     // runs all SIX ANN constructions incl. IVF-PQ; +3 in r11 for the
     // multi-table LSH member (explode-keyed candidate join + dedup)
     // 38 since the SQ8 method joined the panel (7 constructions + truth)
     // 39 since the SQ8-stored-IVF construction joined (8 constructions)
-    "sim_recall_gate" -> 39,
+    // 30 since each construction's rank-bounded top-k is ordered without
+    // a range exchange (RankedOrder)
+    "sim_recall_gate" -> 30,
     // ×10 gate: brute-force truth + one IVF construction over the derived
     // corpus (windows for both top-ks, assignment, probe set, hit join) —
     // a declared verification surface, constant methods regardless of sf
@@ -244,7 +262,7 @@ object PlanAuditBudgets {
     // window, ADC aggregate, cut window, its hit join) — all three list
     // layouts now recall-gate at ×10
     "sim_recall_gate_x10" -> 16,
-    "sim_lsh_multi_topk" -> 3, // bucket join, candidate dedup, score join
+    "sim_lsh_multi_topk" -> 2, // bucket join, candidate dedup
     // assignment argmax agg + emb rejoin (the cached `assigned` subtree,
     // appearing on both self-join sides), c_id-keyed pair join, dropped-set
     // distinct, verdict join, presentation sort — ceiling pinned at the
@@ -268,37 +286,39 @@ object PlanAuditBudgets {
     "stream_sliding_counts" -> 2,
     "stream_static_enrich" -> 2,
     "stream_window_counts" -> 2,
-    // stateless doc-routing core: payload agg + its stats/qterms join,
-    // presentation sort
-    "stream_bm25_route" -> 3,
+    // stateless doc-routing core: payload agg + presentation sort (the
+    // pruned stats join the broadcast query terms; the corpus totals are
+    // a literal row, not an aggregate)
+    "stream_bm25_route" -> 2,
     "taxi_fads_replay" -> 1,
     // BM25 full-scan baseline: tf agg, df agg, meta agg, (q,doc) score
-    // agg, per-query top-k window, presentation sort, + the broadcast
-    // qstats subtree's own agg — the verification anchor; the production
-    // path is the index probe at 4
-    "text_bm25_topk" -> 7,
+    // agg, per-query top-k window, + the broadcast qstats subtree's own
+    // agg — the verification anchor; the production path is the index
+    // probe at 2
+    "text_bm25_topk" -> 6,
     // build readback: per-bucket aggs over postings (distinct-term double
     // agg) and stats, summary join
     "text_bm25_index" -> 4,
-    // pruned probe: score agg, top-k window, sort, meta agg — postings
-    // arrive pre-bucketed, no build-side shuffles
-    "text_bm25_index_topk" -> 4,
+    // pruned probe: score agg, top-k window — postings arrive
+    // pre-bucketed, no build-side shuffles; the corpus totals are a
+    // literal row and the bounded output is ordered without an exchange
+    "text_bm25_index_topk" -> 2,
     // returned plan = the same pruned probe over the augmented index
     // (the bucket-wise upsert runs before the returned frame is built)
-    "text_bm25_append" -> 4,
+    "text_bm25_append" -> 2,
     // two-phase exact pruning is 3 more exchanges than the plain probe
     // by design: the θ window + per-query agg (phase 1), the
     // (query, blk) upper-bound agg, and the survivors semi join — the
     // spend that removes pruned blocks' rows from the scoring shuffle
-    "text_bm25_blockmax" -> 7,
+    "text_bm25_blockmax" -> 6,
     // the returned plan is the same block-max probe (the bucket-wise
     // merge ran in the upsert sink before this frame was built)
-    "text_bm25_blockmax_append" -> 7,
-    // the block-max probe's 7 + the admission accounting the skewed gate
+    "text_bm25_blockmax_append" -> 6,
+    // the block-max probe's 6 + the admission accounting the skewed gate
     // carries in-plan: candidate distinct + per-query count, survivor
     // count, and the acct join onto the top-k — all queries×blocks-scale
     // rows AFTER the bound aggs, spent to make the prune rate hash-checked
-    "text_bm25_blockmax_skewed" -> 11,
+    "text_bm25_blockmax_skewed" -> 10,
     // the composed 5-stage prepare DAG: md5-dedup window, eval-gram
     // distinct + contamination join + candidate distinct + anti join,
     // shard agg, and the per-stage count aggregates the long-format

@@ -56,4 +56,16 @@ class TablesContractSpec extends AnyFunSuite with SparkSpec {
       s"embeddings.embedding is ${emb.schema("embedding").dataType}, " +
         "contract Array[Float]")
   }
+
+  test("load registers graft's functions once per session, not per call") {
+    val dot = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
+    val registry = spark.sessionState.functionRegistry
+    Tables.load(spark, sfDir, "documents")
+    val first = registry.lookupFunctionBuilder(dot)
+    assert(first.nonEmpty, "graft_dot is not registered after load")
+    Tables.load(spark, sfDir, "documents")
+    Tables.load(spark, sfDir, "region")
+    assert(registry.lookupFunctionBuilder(dot).exists(_ eq first.get),
+      "a later load re-registered graft_dot")
+  }
 }

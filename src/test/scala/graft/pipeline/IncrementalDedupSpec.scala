@@ -170,6 +170,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSpec {
       .selectExpr("band", "CAST(bhp AS INT) AS bhp").distinct()
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     Dedup.writeManifest(spark, aug, augBuckets)
+    IndexCommit.recordSchemas(spark, aug, Seq(IndexCommit.Root))
     val rowsBefore = spark.read.parquet(aug).count()
     val before = fileState(aug)
       .filter(_._1.startsWith("band=")) // data files only, not _SUCCESS etc.

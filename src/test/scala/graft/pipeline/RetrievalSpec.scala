@@ -7,8 +7,8 @@ import graft.SparkSpec
 
 /** The BM25 inverted-index family's non-oracle invariants: driver-side
   * hash parity (the pruning metadata), cross-run index reuse, pruned-probe
-  * equivalence with the full-scan scorer, append visibility + meta
-  * accounting, and the stateless streaming routing twin.
+  * equivalence with the full-scan scorer, append visibility + corpus
+  * totals accounting, and the stateless streaming routing twin.
   */
 class RetrievalSpec extends AnyFunSuite with SparkSpec {
 
@@ -43,7 +43,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec {
       Retrieval.queryTerms(spark),
       spark.read.parquet(s"$root/postings").select("term", "doc_id", "tf", "dl"),
       spark.read.parquet(s"$root/stats").select("term", "df"),
-      spark.read.parquet(s"$root/meta")).collect().map(_.toSeq)
+      Retrieval.metaFrame(spark, root)).collect().map(_.toSeq)
     val pruned = Retrieval.prunedTopK(spark, root).collect().map(_.toSeq)
     assert(pruned.toSeq == full.toSeq,
       "bucket pruning must not change the result")
@@ -69,9 +69,9 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val root = Retrieval.ensureBm25Index(spark, dir)
-    val m = spark.read.parquet(s"$root/meta").head()
+    val (n, tt) = Retrieval.readTotals(spark, root)
     val payload = Retrieval.queryPayload(spark, root)
-    val (nDocs, avgdlI) = (m.getLong(0), m.getLong(1) / m.getLong(0))
+    val (nDocs, avgdlI) = (n, tt / n)
     val wave = graft.Tables.load(spark, dir, "documents")
       .where(s"doc_id % ${Dedup.IncrSplitMod} = 0")
       .select("doc_id", "text")
