@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.util.control.NonFatal
 
-import graft.streaming.{Event, FadsStream, PacedReplay, ThroughputHistory}
+import graft.streaming.FadsStream
 
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR on the [[Session]] policy and prints ONE JSON line.
@@ -72,7 +72,6 @@ object Bench {
     def remaining(): Double = budget - elapsed()
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Session.cpus.toString
     // scratch on the probed tier; entry staging and throwaway streaming
     // checkpoints follow it (Session.builder points TempDirs there)
     val scratch = Session.placeScratch()
@@ -277,100 +276,36 @@ object Bench {
     // operator. Headline legs checkpoint to RAM (/dev/shm) when present;
     // the disk-checkpoint production path is a separate diag leg.
     def runStreamingLegs(): Unit = try {
-      val events = Tables.load(spark, sfDir, "events")
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
-      val nRows = events.count()
-      streamRows = nRows
-      val stageDir = Files.createTempDirectory("bench-stage").toString
-      // floor of 5k rows/chunk: at small sf the per-trigger fixed cost
-      // dominated 1k-row batches (NOTES_r2) — fewer, larger chunks
-      // amortize it. Stays well under FadsProcessor.DefaultMaxBatchRows.
-      val rowsPerFile = math.max(5000, (nRows / 10).toInt)
-      PacedReplay.stage(events, Seq("ts", "event_id"), rowsPerFile, stageDir)
-      val listener = ThroughputHistory.attach(spark)
+      val staged = FadsStream.stageEvents(FadsStream.eventsFrame(spark, sfDir))
+      streamRows = staged.rows
       // beside the scratch dir: on the probe-verified tmpfs, else in
       // java.io.tmpdir
       val ckptRoot =
         Files.createTempDirectory(scratch.dir.getParent, "graft-bench-ckpt")
       streamCkpt = scratch.kind
       streamCkptPlacement = Session.probe(ckptRoot).json(scratch.kind)
-      // per-leg state-store cost attribution (round-11 verdict item 2)
-      def stateDiag(
-          progs: Array[org.apache.spark.sql.streaming.StreamingQueryProgress])
-          : String = {
-        var commit = 0L; var fsync = 0L; var upd = 0L
-        progs.foreach(_.stateOperators.foreach { so =>
-          commit += so.commitTimeMs; upd += so.allUpdatesTimeMs
-          fsync += Option(so.customMetrics
-            .get("rocksdbCommitFileSyncLatencyMs")).map(_.longValue).getOrElse(0L)
-        })
-        s"""{"state_commit_ms":$commit,"rocksdb_fsync_ms":$fsync,"state_update_ms":$upd}"""
-      }
-      def singleLeg(ckptDir: java.nio.file.Path): (Double, String) = {
-        var diag = "{}"
-        val sec = timed {
-          val q = FadsStream.anonymize(
-              PacedReplay.stream(spark, stageDir, events.schema).as[Event](
-                org.apache.spark.sql.Encoders.product[Event]),
-              SparkEntry.eventsFadsConfig)
-            .writeStream.format("noop").outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(PacedReplay.trigger(0))
-            .start()
-          q.processAllAvailable()
-          diag = stateDiag(q.recentProgress)
-          q.stop()
-        }
-        (sec, diag)
-      }
+      // best-of-2 (budget permitting), each run on a fresh checkpoint
+      def best(shards: Int, name: String): FadsStream.TimedRun =
+        (1 to (if (remaining() > 120) 2 else 1)).map { i =>
+          FadsStream.timedRun(spark, staged, shards,
+            Files.createTempDirectory(ckptRoot, s"$name$i").toString)()
+        }.minBy(_.sec)
       try {
-        // single-key stream: 32 shuffle partitions would mean 32 RocksDB
-        // state stores per batch (31 empty) — size state partitioning to
-        // the stream
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        // headline: best-of-2 on the RAM checkpoint (budget permitting)
-        val legs = (if (remaining() > 120) 2 else 1)
-        val singles = (1 to legs).map { i =>
-          singleLeg(Files.createTempDirectory(ckptRoot, s"single$i"))
-        }
-        val best = singles.minBy(_._1)
-        streamSec = best._1; streamDiag = best._2
+        val single = best(1, "single")
+        streamSec = single.sec; streamDiag = single.summary.stateJson
         writeArtifact(partial = true)
         // non-headline diag: DISK checkpoint (RocksDB scratch stays under
         // spark.local.dir — see stream_disk_leg_note), once
         val diskCkpt = Files.createTempDirectory("bench-ckpt-disk")
         diskCkptPlacement = Session.probe(diskCkpt).json("disk")
-        val (dsec, ddiag) = singleLeg(diskCkpt)
-        streamDiskSec = dsec; diskStreamDiag = ddiag
+        val disk = FadsStream.timedRun(spark, staged, 1, diskCkpt.toString)()
+        streamDiskSec = disk.sec; diskStreamDiag = disk.summary.stateJson
         // scale-out variant: 8 independent FADS shards (hash on user) —
         // the 1000-executor shape
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        def shardedLeg(ckptDir: java.nio.file.Path): (Double, String) = {
-          var diag = "{}"
-          val sec = timed {
-            val q = FadsStream.anonymizeSharded(
-                PacedReplay.stream(spark, stageDir, events.schema).as[Event](
-                  org.apache.spark.sql.Encoders.product[Event]),
-                SparkEntry.eventsFadsConfig, e => e.user_id % 8)
-              .writeStream.format("noop").outputMode("append")
-              .option("checkpointLocation", ckptDir.toString)
-              .trigger(PacedReplay.trigger(0))
-              .start()
-            q.processAllAvailable()
-            diag = stateDiag(q.recentProgress)
-            q.stop()
-          }
-          (sec, diag)
-        }
-        val shLegs = (if (remaining() > 120) 2 else 1)
-        val shs = (1 to shLegs).map { i =>
-          shardedLeg(Files.createTempDirectory(ckptRoot, s"sharded$i"))
-        }
-        val bestSh = shs.minBy(_._1)
-        streamShardedSec = bestSh._1; shardedStreamDiag = bestSh._2
+        val sharded = best(8, "sharded")
+        streamShardedSec = sharded.sec
+        shardedStreamDiag = sharded.summary.stateJson
       } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
-        spark.streams.removeListener(listener)
         // RAM is a shared resource — reclaim the /dev/shm checkpoints now.
         // Files.list must be CLOSED (r15 ADVICE 4): the stream holds a
         // directory fd, and RocksDB checkpoints nest many directories —
@@ -389,7 +324,6 @@ object Bench {
       // -1 alongside the good per-query rows instead of zeroing the round
       case NonFatal(e) =>
         System.err.println(s"[bench] streaming leg failed: ${e.getMessage}")
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
     }
 
     // Next-pass cost estimate (r15 verdict item 2b): the COLD pass-1 wall

@@ -103,15 +103,7 @@ object FadsBatch {
       clockCol: org.apache.spark.sql.Column,
       cfg: Fads.Config,
       globalNorm: Boolean = false): DataFrame = {
-    val effCfg = if (!globalNorm) cfg else {
-      val aggs = qidCols.flatMap(q =>
-        Seq(min(col(q).cast(DoubleType)).as(s"__lo_$q"),
-            max(col(q).cast(DoubleType)).as(s"__hi_$q")))
-      val r = df.agg(aggs.head, aggs.tail: _*).head()
-      cfg.copy(
-        fixedLo = Some(qidCols.indices.map(i => r.getDouble(2 * i)).toArray),
-        fixedHi = Some(qidCols.indices.map(i => r.getDouble(2 * i + 1)).toArray))
-    }
+    val effCfg = if (globalNorm) globalBounds(df, qidCols, cfg) else cfg
     val prepared = df
       .withColumn("__clock_ms", clockCol.cast(LongType))
       .repartition(col(shardCol))
@@ -120,6 +112,24 @@ object FadsBatch {
     // runPartitions starts a fresh engine whenever the shard value changes,
     // which the sort guarantees is a contiguous run
     runPartitions(prepared, df.schema, qidCols, pidCol, effCfg, Some(shardCol))
+  }
+
+  /** `cfg` with distance/info-loss normalization fixed to the true per-QID
+    * domain bounds of `df` (see [[Fads.Config.fixedLo]]), from one
+    * map-side-combined min/max pre-pass. The batch ([[anonymizeByKey]]
+    * with `globalNorm`) and stream
+    * ([[graft.streaming.FadsStream.regionCfg]]) twins of region sharding
+    * both take their bounds from here.
+    */
+  def globalBounds(df: DataFrame, qidCols: Seq[String],
+      cfg: Fads.Config): Fads.Config = {
+    val aggs = qidCols.flatMap(q =>
+      Seq(min(col(q).cast(DoubleType)).as(s"__lo_$q"),
+          max(col(q).cast(DoubleType)).as(s"__hi_$q")))
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    cfg.copy(
+      fixedLo = Some(qidCols.indices.map(i => r.getDouble(2 * i)).toArray),
+      fixedHi = Some(qidCols.indices.map(i => r.getDouble(2 * i + 1)).toArray))
   }
 
   private def runPartitions(

@@ -836,26 +836,14 @@ object Dedup {
     * did not deliver: at sf0.1 the index held ~60 rows per bucket and
     * every append paid 256 tiny parquet files of write+commit (measured
     * 4.5-6 s of dedup_incremental_append's 13 s), while a 100 TB corpus
-    * would have drowned 256 buckets. The env override
-    * (`SPARK_GRAFT_INDEX_BUCKETS`) still pins an exact count for the
-    * scale harness. The count is baked into the index path so a build
-    * and a probe can never disagree about the layout.
+    * would have drowned 256 buckets. The count is baked into the index
+    * path so a build and a probe can never disagree about the layout.
     */
   def indexBuckets(spark: SparkSession, dir: String): Int = {
-    val n = sys.env.get("SPARK_GRAFT_INDEX_BUCKETS").map { s =>
-      try s.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_INDEX_BUCKETS must be a positive integer, got '$s'")
-      }
-    }.getOrElse {
-      val (rows, _) = docsStats(spark, dir)
-      val bandRows = rows * (IncrSplitMod - 1) / IncrSplitMod * B
-      math.max(MinIndexBuckets.toLong, math.min(MaxIndexBuckets.toLong,
-        (bandRows + RowsPerIndexBucket - 1) / RowsPerIndexBucket)).toInt
-    }
-    require(n > 0, s"SPARK_GRAFT_INDEX_BUCKETS must be > 0, got $n " +
-      "(pmod(bh, 0) is null and would route every row to the default partition)")
-    n
+    val (rows, _) = docsStats(spark, dir)
+    val bandRows = rows * (IncrSplitMod - 1) / IncrSplitMod * B
+    math.max(MinIndexBuckets.toLong, math.min(MaxIndexBuckets.toLong,
+      (bandRows + RowsPerIndexBucket - 1) / RowsPerIndexBucket)).toInt
   }
 
   /** Persisted-index location, keyed by the corpus directory so different
@@ -1359,10 +1347,8 @@ object Dedup {
 
   /** The index-layout band rows of `docs` — signature columns (i0..i15)
     * plus (band, bh, bhp) — the exact frame the bucketed index stores.
-    * Factored from [[appendDocsBatch]] for the measurement harness
-    * ([[graft.tools.UpsertProbe]]).
     */
-  private[graft] def bandRowsFor(docs: DataFrame, buckets: Int): DataFrame =
+  private def bandRowsFor(docs: DataFrame, buckets: Int): DataFrame =
     minhashSignatures(docs)
       .selectExpr(Seq("doc_id") ++ (0 until H).map(i => s"m$i AS i$i")
         :+ s"posexplode($bandArrayExpr) AS (band, bh)": _*)

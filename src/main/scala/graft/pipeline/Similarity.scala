@@ -462,9 +462,7 @@ object Similarity {
     * floor binds at every committed sf (≤2,000 vectors), leaving the
     * test-scale constructions — and their hashes — at 16 lists, while a
     * ×100 scale corpus (200k vectors) derives 250 lists (probe fraction
-    * 4/250 = 1.6%) with no override. `SPARK_GRAFT_IVF_CENTROIDS` remains
-    * a manual escape hatch for experiments; the driver's Verify never
-    * sets it.
+    * 4/250 = 1.6%) with no override.
     */
   val NCentroidsMin = 16
 
@@ -478,21 +476,10 @@ object Similarity {
   /** Target inverted-list population (vectors per list). */
   val ListTarget = 800L
 
-  private val centroidsOverride: Option[Int] =
-    sys.env.get("SPARK_GRAFT_IVF_CENTROIDS").map { s =>
-      val n =
-        try s.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_IVF_CENTROIDS must be a positive integer, got '$s'")
-        }
-      require(n > 0, s"SPARK_GRAFT_IVF_CENTROIDS must be > 0, got $n")
-      n
-    }
-
   /** Effective codebook size for a corpus of `corpusRows` vectors. */
-  def nCentroids(corpusRows: Long): Int = centroidsOverride.getOrElse(
+  def nCentroids(corpusRows: Long): Int =
     math.max(NCentroidsMin.toLong,
-      math.min(NCentroidsMax.toLong, corpusRows / ListTarget)).toInt)
+      math.min(NCentroidsMax.toLong, corpusRows / ListTarget)).toInt
 
   def nCentroids(spark: SparkSession, dir: String): Int =
     nCentroids(corpusStats(spark, dir)._1)
@@ -502,10 +489,9 @@ object Similarity {
     * replays the identical codebook size without the value being baked
     * into the SQL string.
     */
-  private def nCentroidsSqlExpr: String = centroidsOverride
-    .map(_.toString)
-    .getOrElse(s"greatest($NCentroidsMin, least($NCentroidsMax, " +
-      s"(SELECT count(*) // $ListTarget FROM emb)))")
+  private def nCentroidsSqlExpr: String =
+    s"greatest($NCentroidsMin, least($NCentroidsMax, " +
+      s"(SELECT count(*) // $ListTarget FROM emb)))"
 
   /** Memoized per-corpus stats from ONE aggregate pass: (row count,
     * max vec_id, content fingerprint). The count drives [[nCentroids]]/[[rerankK]]
@@ -2267,9 +2253,8 @@ object Similarity {
   }
 
   val recallGateX10Sql: String = {
-    val ncSql = centroidsOverride.map(_.toString).getOrElse(
-      s"greatest($NCentroidsMin, least($NCentroidsMax, " +
-        s"(SELECT count(*) // $ListTarget FROM embx)))")
+    val ncSql = s"greatest($NCentroidsMin, least($NCentroidsMax, " +
+      s"(SELECT count(*) // $ListTarget FROM embx)))"
     // exact re-rank of a cut's candidates to top-k (the recall-gate form)
     def exactTopK(name: String, cut: String): String =
       s"""$name AS (

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.types.StructType
 import graft.fads.Fads
 
 /** Typed event record for the streaming surface (the `events` table with ts
@@ -182,15 +183,8 @@ object FadsStream {
     * constant key (reference parity: one global stream context).
     */
   def anonymize(events: Dataset[Event], cfg: Fads.Config,
-      drainIdleMs: Long = 0L): Dataset[GenEvent] = {
-    implicit val genEnc = Encoders.product[GenEvent]
-    val timeMode =
-      if (drainIdleMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .groupByKey(_ => 0L)(Encoders.scalaLong)
-      .transformWithState(
-        new FadsProcessor(cfg, drainIdleMs), timeMode, OutputMode.Append())
-  }
+      drainIdleMs: Long = 0L): Dataset[GenEvent] =
+    anonymizeSharded(events, cfg, _ => 0L, drainIdleMs)
 
   /** Scale-out: shard the stream by key; one independent FADS instance per
     * shard, k-anonymity guaranteed within each shard. `drainIdleMs > 0`
@@ -268,6 +262,27 @@ object FadsStream {
       // production job with few plans never notices.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
 
+  /** Typed twin of `SparkEntry.regionShard` — floor, not toLong truncation:
+    * truncation rounds toward zero, so a negative value would land in a
+    * different shard than the batch twin's least(floor(value / 64.0), 7)
+    * and the shared oracle (code review r6). A capture-free FUNCTION VALUE,
+    * not a method: an eta-expanded method here would close over the
+    * non-serializable FadsStream module and fail task serialization inside
+    * groupByKey.
+    */
+  val regionShardOf: Event => Long =
+    e => math.min(math.floor(e.value / 64.0).toLong, 7L)
+
+  /** The region-sharded pipeline's config: reference parameters with
+    * normalization FIXED to the true domain bounds (globalNorm), from the
+    * same pre-pass as the batch twin ([[graft.ops.FadsBatch.globalBounds]]).
+    * Shared by the driver entry below and the checkpoint-restart spec so
+    * both provably run the identical pipeline.
+    */
+  def regionCfg(spark: SparkSession, dir: String): Fads.Config =
+    graft.ops.FadsBatch.globalBounds(graft.Tables.load(spark, dir, "events"),
+      Seq("user_id", "value"), graft.SparkEntry.eventsFadsConfig)
+
   /** Driver entry: the REGION-sharded FADS stream end-to-end — the 100 TB
     * streaming shape (8 independent QID-region shards through ONE
     * transformWithState operator, per-shard state + per-shard drain), run to
@@ -281,50 +296,18 @@ object FadsStream {
     * sorts per shard by (ts, event_id), and drain uses one sentinel per
     * shard, so the replay equals the batch per-shard sequential order.
     * Normalization uses the true domain bounds (globalNorm), computed by the
-    * same pre-pass aggregation as [[graft.ops.FadsBatch.anonymizeByKey]].
+    * same pre-pass as the batch twin ([[regionCfg]]).
     *
     * COST NOTE: the `collect()` feeds MemoryStream — a driver-resident TEST
     * source chosen for deterministic batch boundaries; the distributed
     * surface under test is the sharded transformWithState operator. The
     * production source is [[PacedReplay]] (files), as Bench runs it.
     */
-  /** Typed twin of `SparkEntry.regionShard` — floor, not toLong truncation:
-    * truncation rounds toward zero, so a negative value would land in a
-    * different shard than the batch twin's least(floor(value / 64.0), 7)
-    * and the shared oracle (code review r6). A capture-free FUNCTION VALUE,
-    * not a method: an eta-expanded method here would close over the
-    * non-serializable FadsStream module and fail task serialization inside
-    * groupByKey.
-    */
-  val regionShardOf: Event => Long =
-    e => math.min(math.floor(e.value / 64.0).toLong, 7L)
-
-  /** The region-sharded pipeline's config: reference parameters with
-    * normalization FIXED to the true domain bounds (globalNorm), computed by
-    * the same pre-pass aggregation as [[graft.ops.FadsBatch.anonymizeByKey]].
-    * Shared by the driver entry below and the checkpoint-restart spec so
-    * both provably run the identical pipeline.
-    */
-  def regionCfg(spark: SparkSession, dir: String): Fads.Config = {
-    import spark.implicits._
-    val b = graft.Tables.load(spark, dir, "events")
-      .agg(
-        org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.expr("CAST(user_id AS DOUBLE)")),
-        org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.expr("CAST(user_id AS DOUBLE)")),
-        org.apache.spark.sql.functions.min($"value"),
-        org.apache.spark.sql.functions.max($"value")).head()
-    graft.SparkEntry.eventsFadsConfig.copy(
-      fixedLo = Some(Array(b.getDouble(0), b.getDouble(2))),
-      fixedHi = Some(Array(b.getDouble(1), b.getDouble(3))))
-  }
-
   def regionShardedQuery(spark: SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val events = graft.Tables.load(spark, dir, "events")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
-      .as[Event]
+    val events = eventsFrame(spark, dir).as[Event]
     val cfg = regionCfg(spark, dir)
     val shardOf = regionShardOf
 
@@ -363,4 +346,59 @@ object FadsStream {
       }
     }
   }
+
+  /** The `events` columns an [[Event]] reads, from the tables under `dir`. */
+  def eventsFrame(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.load(spark, dir, "events")
+      .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** An events frame staged once as a paced replay for [[timedRun]]. */
+  final case class StagedEvents(dir: String, schema: StructType, rows: Long)
+
+  /** Stage `events` in (ts, event_id) order on the session scratch tier,
+    * in chunk files of max(5,000, rows / 10) rows, one per trigger. The
+    * 5k floor amortizes the per-trigger fixed cost that dominated 1k-row
+    * triggers at small SF (NOTES_r2); it stays far under
+    * [[FadsProcessor.DefaultMaxBatchRows]].
+    */
+  def stageEvents(events: DataFrame): StagedEvents = {
+    val rows = events.count()
+    val dir = graft.TempDirs.scoped("fads-stage")
+    PacedReplay.stage(events, Seq("ts", "event_id"),
+      math.max(5000L, rows / 10).toInt, dir)
+    StagedEvents(dir, events.schema, rows)
+  }
+
+  /** One timed run: wall seconds from wiring and `start()` through
+    * `stop()`, and the query's progress.
+    */
+  final case class TimedRun(sec: Double, progress: Seq[StreamingQueryProgress]) {
+    def summary: ProgressSummary = ProgressSummary(progress)
+  }
+
+  /** Run the staged replay unthrottled through the FADS operator (reference
+    * parameters) into a noop sink, keyed by `user_id % shards` — one shard
+    * is the single-key stream — from checkpoint `ckpt`, with
+    * [[StateSizing.pinned]] state partitions max(2, shards): a shard per
+    * store, and the distributed code path kept even for one key. `until`
+    * holds the started query (default: until every staged row is
+    * processed); the query is stopped on every exit path, and a failure
+    * at `start()`, inside a batch or in `until` propagates.
+    */
+  def timedRun(spark: SparkSession, staged: StagedEvents, shards: Int,
+      ckpt: String)(
+      until: StreamingQuery => Unit = _.processAllAvailable()): TimedRun =
+    StateSizing.pinned(spark, Some(math.max(2, shards))) {
+      val t0 = System.nanoTime()
+      val q = anonymizeSharded(
+          PacedReplay.stream(spark, staged.dir, staged.schema)
+            .as[Event](Encoders.product[Event]),
+          graft.SparkEntry.eventsFadsConfig, e => e.user_id % shards)
+        .writeStream.format("noop").outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(PacedReplay.trigger(0))
+        .start()
+      val progress = try { until(q); q.recentProgress.toSeq } finally q.stop()
+      TimedRun((System.nanoTime() - t0) / 1e9, progress)
+    }
 }

@@ -3,8 +3,59 @@ package graft.streaming
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
+
+/** One streaming run's progress, summed and printed one way: the
+  * state-store totals Bench's artifact carries per streaming leg, and the
+  * one-line trigger format that Scale `streamdiag`, `tools/Diag` and
+  * [[ThroughputHistory]] print.
+  */
+final case class ProgressSummary(progress: Seq[StreamingQueryProgress]) {
+
+  private def stateTotal(f: StateOperatorProgress => Long): Long =
+    progress.iterator.flatMap(_.stateOperators).map(f).sum
+
+  def rows: Long = progress.iterator.map(_.numInputRows).sum
+  def stateCommitMs: Long = stateTotal(_.commitTimeMs)
+  def rocksdbFsyncMs: Long = stateTotal(ProgressSummary.fsyncMs)
+  def stateUpdateMs: Long = stateTotal(_.allUpdatesTimeMs)
+
+  /** The state totals as one JSON object. */
+  def stateJson: String =
+    s"""{"state_commit_ms":$stateCommitMs,"rocksdb_fsync_ms":$rocksdbFsyncMs,"state_update_ms":$stateUpdateMs}"""
+
+  def lines: Seq[String] = progress.map(ProgressSummary.line)
+}
+
+object ProgressSummary {
+
+  /** RocksDB's changelog file-sync time in one operator's commit (0 on
+    * another state store).
+    */
+  private def fsyncMs(so: StateOperatorProgress): Long =
+    Option(so.customMetrics.get("rocksdbCommitFileSyncLatencyMs"))
+      .map(_.longValue).getOrElse(0L)
+
+  /** One trigger: rows in, processing rate, duration breakdown and each
+    * state operator's commit metrics.
+    */
+  def line(p: StreamingQueryProgress): String = {
+    def ms(k: String): Long =
+      Option(p.durationMs.get(k)).map(_.longValue).getOrElse(-1L)
+    val st = p.stateOperators.map { so =>
+      s"commit=${so.commitTimeMs}ms upd=${so.allUpdatesTimeMs}ms " +
+        s"fsync=${fsyncMs(so)}ms rows=${so.numRowsTotal} shards=${so.numShufflePartitions}"
+    }.mkString(" | ")
+    val rate = String.format(java.util.Locale.ROOT, "%.1f",
+      Double.box(p.processedRowsPerSecond))
+    s"trigger ${p.name} batch=${p.batchId} in=${p.numInputRows} proc=$rate/s " +
+      s"trigger=${ms("triggerExecution")}ms addBatch=${ms("addBatch")}ms " +
+      s"getBatch=${ms("getBatch")}ms latestOffset=${ms("latestOffset")}ms " +
+      s"walCommit=${ms("walCommit")}ms commitOffsets=${ms("commitOffsets")}ms " +
+      s"state[$st]"
+  }
+}
 
 /** Throughput observability — parity with the reference's
   * ParallelThroughputLogger / ParallelThroughputStatistics
@@ -19,37 +70,31 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   */
 final class ThroughputHistory extends StreamingQueryListener {
 
-  final case class Sample(
-      batchId: Long, timestamp: String,
-      numInputRows: Long, inputRowsPerSecond: Double,
-      processedRowsPerSecond: Double, batchDurationMs: Long)
+  private val progress = mutable.ArrayBuffer.empty[StreamingQueryProgress]
 
-  private val samples = mutable.ArrayBuffer.empty[Sample]
+  def summary: ProgressSummary = synchronized(ProgressSummary(progress.toSeq))
 
-  def history: Seq[Sample] = synchronized(samples.toSeq)
+  def history: Seq[StreamingQueryProgress] = summary.progress
 
-  def meanProcessedRowsPerSecond: Double = synchronized {
-    val s = samples.filter(x => !x.processedRowsPerSecond.isNaN)
-    if (s.isEmpty) 0.0 else s.map(_.processedRowsPerSecond).sum / s.size
+  def totalRows: Long = summary.rows
+
+  def meanProcessedRowsPerSecond: Double = {
+    val s = history.map(_.processedRowsPerSecond).filterNot(_.isNaN)
+    if (s.isEmpty) 0.0 else s.sum / s.size
   }
-
-  def totalRows: Long = synchronized(samples.map(_.numInputRows).sum)
 
   override def onQueryStarted(event: QueryStartedEvent): Unit = ()
 
-  override def onQueryProgress(event: QueryProgressEvent): Unit = synchronized {
-    val p = event.progress
-    samples += Sample(p.batchId, p.timestamp, p.numInputRows,
-      p.inputRowsPerSecond, p.processedRowsPerSecond, p.batchDuration)
-  }
+  override def onQueryProgress(event: QueryProgressEvent): Unit =
+    synchronized(progress += event.progress)
 
   /** Reference parity: dump mean + full history when the query stops
     * (ParallelThroughputLogger.close, :44-48).
     */
-  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = synchronized {
-    println(f"[throughput] mean processed rows/s: $meanProcessedRowsPerSecond%.1f over ${samples.size} triggers, ${totalRows} rows")
-    samples.foreach(s =>
-      println(f"[throughput] batch ${s.batchId}: in=${s.numInputRows} rows, ${s.inputRowsPerSecond}%.1f in/s, ${s.processedRowsPerSecond}%.1f proc/s, ${s.batchDurationMs} ms"))
+  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
+    val s = summary
+    println(f"[throughput] mean processed rows/s: $meanProcessedRowsPerSecond%.1f over ${s.progress.size} triggers, ${s.rows} rows")
+    s.lines.foreach(l => println(s"[throughput] $l"))
   }
 }
 

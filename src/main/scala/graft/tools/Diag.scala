@@ -8,6 +8,7 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
 import graft.{Session, SparkEntry}
+import graft.streaming.ProgressSummary
 
 /** Per-entry diagnosis on Bench's session. For each named entry: one
   * untimed warm-up and two timed runs through the `noop` sink (Bench's
@@ -18,8 +19,9 @@ import graft.{Session, SparkEntry}
   *  - every Spark job (wall, stages, tasks, summed task time, description),
   *    rolled up by phase and description, with the jobs over 200 ms listed;
   *  - a per-stage-name rollup, where the wall time actually lives;
-  *  - every streaming trigger's duration breakdown and state-store commit
-  *    metrics (a streaming entry's queries are gone once it returns).
+  *  - every streaming trigger's [[ProgressSummary]] line: duration
+  *    breakdown and state-store commit metrics (a streaming entry's
+  *    queries are gone once it returns).
   *
   * `SPARK_GRAFT_CONF="k=v;k=v"` adds session confs on top of the policy,
   * so a config hypothesis can be timed without a code edit.
@@ -99,7 +101,8 @@ object Diag {
           }
         }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case p: QueryProgressEvent if phase.nonEmpty => triggers += trigger(p)
+        case p: QueryProgressEvent if phase.nonEmpty =>
+          triggers += "  " + ProgressSummary.line(p.progress)
         case _ => ()
       }
     })
@@ -164,23 +167,5 @@ object Diag {
       triggers.foreach(println)
     }
     spark.stop()
-  }
-
-  /** One trigger's duration breakdown and state-store commit metrics. */
-  private def trigger(e: QueryProgressEvent): String = {
-    val p = e.progress
-    def ms(k: String): Long =
-      Option(p.durationMs.get(k)).map(_.longValue).getOrElse(-1L)
-    val st = p.stateOperators.map { so =>
-      val fsync = Option(so.customMetrics.get("rocksdbCommitFileSyncLatencyMs"))
-        .map(_.longValue).getOrElse(0L)
-      s"commit=${so.commitTimeMs}ms upd=${so.allUpdatesTimeMs}ms " +
-        s"fsync=${fsync}ms rows=${so.numRowsTotal} shards=${so.numShufflePartitions}"
-    }.mkString(" | ")
-    s"  trigger ${p.name} batch=${p.batchId} in=${p.numInputRows} " +
-      s"trigger=${ms("triggerExecution")}ms addBatch=${ms("addBatch")}ms " +
-      s"getBatch=${ms("getBatch")}ms latestOffset=${ms("latestOffset")}ms " +
-      s"walCommit=${ms("walCommit")}ms commitOffsets=${ms("commitOffsets")}ms " +
-      s"state[$st]"
   }
 }

@@ -36,6 +36,8 @@ import graft.{Session, SparkEntry, Tables}
   *   runMain graft.tools.Scale run      <dir> <label> <query...>
   *   runMain graft.tools.Scale probe    <batchDir> <indexDir>
   *   runMain graft.tools.Scale ivfprobe <batchDir> <indexDir>
+  *   runMain graft.tools.Scale stream     <dir>
+  *   runMain graft.tools.Scale streamdiag <dir>
   *
   * `run` prints one JSON line per query: best-of-2 after one untimed
   * warmup (noop sink), plus the result row count for candidate-shaped
@@ -269,14 +271,6 @@ object Scale {
     spark.stop()
   }
 
-  /** Streaming FADS throughput at scale: unthrottled paced replay of the
-    * given dir's `events` through the transformWithState operator (the
-    * graft.Bench streaming leg, parameterized by corpus) — single-stream
-    * and 8-shard, best-of-2. At 10× events per trigger the per-batch
-    * RocksDB commit floor amortizes (NOTES_r2 predicted streaming shards
-    * converge to the batch ratio at production batch sizes; this measures
-    * it).
-    */
   /** IVF probe wall vs index size: hold `batchDir`'s wave-1 queries
     * fixed while probing `indexDir`'s persisted IVF index — the ANN twin
     * of [[probe]]'s batch-cost-vs-index-size measurement. The probe set
@@ -363,91 +357,46 @@ object Scale {
     spark.stop()
   }
 
+  /** A fresh checkpoint directory for one timed stream. */
+  private def streamCkpt(): String =
+    java.nio.file.Files.createTempDirectory("scale-ckpt").toString
+
   /** Per-micro-batch diagnosis of the streaming legs (round-11 verdict
     * item 2: the sharded throughput halved in the driver artifact with no
-    * explanation). Runs the Bench wiring — single-stream (2 partitions)
-    * and 8-shard — twice each and dumps EVERY StreamingQueryProgress as
-    * raw JSON (`[streamdiag] {...}` lines), so trigger-level durations
-    * (addBatch, walCommit, stateOperators commit/update times, RocksDB
-    * custom metrics) can be attributed instead of argued about.
+    * explanation). Runs Bench's legs — single-key and 8-shard — twice
+    * each and prints each run's wall time and state totals, then every
+    * trigger's [[graft.streaming.ProgressSummary]] line (durations,
+    * state-operator commit/update/fsync), so trigger-level cost can be
+    * attributed instead of argued about.
     */
   def streamDiag(dir: String): Unit = {
-    val cpus = Session.cpus.toString
-    import spark.implicits._
-    import graft.streaming.{Event, FadsStream, PacedReplay}
-
-    val events = Tables.load(spark, dir, "events")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
-    val nRows = events.count()
-    val stageDir = java.nio.file.Files.createTempDirectory("diag-stage").toString
-    val rowsPerFile = math.max(5000, (nRows / 10).toInt)
-    PacedReplay.stage(events, Seq("ts", "event_id"), rowsPerFile, stageDir)
-
-    def runOnce(label: String, parts: String,
-        wire: org.apache.spark.sql.Dataset[Event] => org.apache.spark.sql.Dataset[_]): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      val ckpt = java.nio.file.Files.createTempDirectory("diag-ckpt").toString
-      val t0 = System.nanoTime()
-      val q = wire(PacedReplay.stream(spark, stageDir, events.schema).as[Event])
-        .writeStream.format("noop").outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(PacedReplay.trigger(0))
-        .start()
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val progs = q.recentProgress
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      println(s"""[streamdiag] {"run":"$label","wall_sec":${num(wall)},"rows":$nRows,"rps":${num(nRows / wall, 1)},"batches":${progs.length}}""")
-      progs.foreach(p => println(s"[streamdiag:$label] ${p.json}"))
-    }
-
-    val cfg = graft.SparkEntry.eventsFadsConfig
-    (1 to 2).foreach { i =>
-      runOnce(s"single#$i", "2", ds => FadsStream.anonymize(ds, cfg))
-      runOnce(s"sharded8#$i", "8",
-        ds => FadsStream.anonymizeSharded(ds, cfg, e => e.user_id % 8))
+    import graft.streaming.FadsStream
+    val staged = FadsStream.stageEvents(FadsStream.eventsFrame(spark, dir))
+    for (i <- 1 to 2; (name, shards) <- Seq("single" -> 1, "sharded8" -> 8)) {
+      val label = s"$name#$i"
+      val run = FadsStream.timedRun(spark, staged, shards, streamCkpt())()
+      println(s"""[streamdiag] {"run":"$label","wall_sec":${num(run.sec)},"rows":${staged.rows},"rps":${num(staged.rows / run.sec, 1)},"batches":${run.progress.size},"state":${run.summary.stateJson}}""")
+      run.summary.lines.foreach(l => println(s"[streamdiag:$label] $l"))
     }
     spark.stop()
   }
 
+  /** Streaming FADS throughput at scale: unthrottled paced replay of the
+    * given dir's `events` through the transformWithState operator (the
+    * graft.Bench streaming leg, parameterized by corpus) — single-key and
+    * 8/16/32 shards, best-of-2, then the checkpoint-restart cost of the
+    * widest. At 10× events per trigger the per-batch RocksDB commit floor
+    * amortizes (NOTES_r2 predicted streaming shards converge to the batch
+    * ratio at production batch sizes; this measures it).
+    */
   def stream(dir: String): Unit = {
-    val cpus = Session.cpus.toString
-    import spark.implicits._
-    import graft.streaming.{Event, FadsStream, PacedReplay}
-
-    val events = Tables.load(spark, dir, "events")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
-    val nRows = events.count()
-    val stageDir = java.nio.file.Files.createTempDirectory("scale-stage").toString
-    val rowsPerFile = math.max(5000, (nRows / 10).toInt)
-    PacedReplay.stage(events, Seq("ts", "event_id"), rowsPerFile, stageDir)
-
-    def streamOnce(parts: String,
-        wire: org.apache.spark.sql.Dataset[Event] => org.apache.spark.sql.Dataset[_]): Double = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      val ckpt = java.nio.file.Files.createTempDirectory("scale-ckpt").toString
-      val t = timed {
-        val q = wire(PacedReplay.stream(spark, stageDir, events.schema).as[Event])
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(PacedReplay.trigger(0))
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      t
-    }
-
-    val cfg = graft.SparkEntry.eventsFadsConfig
-    def single() = streamOnce("2", ds => FadsStream.anonymize(ds, cfg))
-    def sharded(n: Int) = streamOnce(n.toString,
-      ds => FadsStream.anonymizeSharded(ds, cfg, e => e.user_id % n))
-    val s1 = math.min(single(), single())
-    val shardWalls = Seq(8, 16, 32).map { n =>
-      n -> math.min(sharded(n), sharded(n))
-    }
+    import graft.streaming.FadsStream
+    val staged = FadsStream.stageEvents(FadsStream.eventsFrame(spark, dir))
+    val nRows = staged.rows
+    def once(shards: Int): Double =
+      FadsStream.timedRun(spark, staged, shards, streamCkpt())().sec
+    val s1 = math.min(once(1), once(1))
+    val shardWalls = Seq(8, 16, 32).map(n => n -> math.min(once(n), once(n)))
 
     // Checkpoint-restart cost at this state size (round-7 verdict item 4):
     // run the widest sharded config to ~half its micro-batches, hard-stop,
@@ -457,33 +406,20 @@ object Scale {
     // uninterrupted wall so the recovery overhead is the difference.
     val restartShards = 32
     val restartSec = {
-      spark.conf.set("spark.sql.shuffle.partitions", restartShards.toString)
-      val ckpt = java.nio.file.Files.createTempDirectory("scale-ckpt").toString
-      def wired() = FadsStream.anonymizeSharded(
-        PacedReplay.stream(spark, stageDir, events.schema).as[Event], cfg,
-        e => e.user_id % restartShards)
-        .writeStream.format("noop").outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(PacedReplay.trigger(0))
-      val q1 = wired().start()
+      val ckpt = streamCkpt()
       // stop mid-stream at batch ≥ 4; bail on drain (a small staged replay
       // can yield < 5 micro-batches — a drained FileStreamSource stops
       // advancing batchId while the query stays active, which would spin
       // this loop forever) or on a hard deadline
-      val deadline = System.nanoTime() + 10L * 60 * 1000 * 1000 * 1000
-      def drained(p: org.apache.spark.sql.streaming.StreamingQueryProgress) =
-        p.batchId > 0 && p.numInputRows == 0
-      while (q1.isActive && System.nanoTime() < deadline &&
-          Option(q1.lastProgress).forall(p => p.batchId < 4 && !drained(p)))
-        Thread.sleep(50)
-      q1.stop(); q1.awaitTermination()
-      val t = timed {
-        val q2 = wired().start()
-        q2.processAllAvailable()
-        q2.stop()
+      FadsStream.timedRun(spark, staged, restartShards, ckpt) { q =>
+        val deadline = System.nanoTime() + 10L * 60 * 1000 * 1000 * 1000
+        def drained(p: org.apache.spark.sql.streaming.StreamingQueryProgress) =
+          p.batchId > 0 && p.numInputRows == 0
+        while (q.isActive && System.nanoTime() < deadline &&
+            Option(q.lastProgress).forall(p => p.batchId < 4 && !drained(p)))
+          Thread.sleep(50)
       }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      t
+      FadsStream.timedRun(spark, staged, restartShards, ckpt)().sec
     }
 
     val shardJson = shardWalls.map { case (n, s) =>

@@ -4,11 +4,13 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Session, SparkEntry, SparkSpec, Tables}
+import graft.{Session, SparkEntry, SparkSpec, Tables, TempDirs}
 
 /** End-to-end reference-pipeline parity (SURVEY.md §2.1 wiring): paced source
   * (O1) → FADS generalizer (O6) → memory sink (O7), with throughput history
-  * (O5) recorded by the listener.
+  * (O5) recorded by the listener; the bounded-stream runner
+  * ([[PacedReplay.drain]]) and the timed FADS runner
+  * ([[FadsStream.timedRun]]) with its [[ProgressSummary]].
   */
 class PacedReplaySpec extends AnyFunSuite with SparkSpec {
 
@@ -160,5 +162,87 @@ class PacedReplaySpec extends AnyFunSuite with SparkSpec {
     assert(ids(first) == (0L until 8L))
     assert(ids(second) == (100L until 104L))
     assert(!spark.catalog.tableExists("drain_twice"))
+  }
+
+  /** sf0.001 `events`, staged once for the [[FadsStream.timedRun]] cases. */
+  private lazy val staged =
+    FadsStream.stageEvents(FadsStream.eventsFrame(spark, "/root/testdata/sf0.001"))
+
+  /** One single-key and one 3-shard run of the staged events. */
+  private lazy val timedRuns = Seq(1, 3).map { shards =>
+    shards -> FadsStream.timedRun(spark, staged, shards,
+      TempDirs.scoped("timed-ckpt"))()
+  }
+
+  test("timedRun: single-key and 3-shard runs process every staged row on " +
+    "2 and 3 state partitions, and stop their query") {
+    assert(staged.rows == 1000)
+    timedRuns.foreach { case (shards, run) =>
+      assert(run.sec > 0)
+      assert(run.progress.map(_.numInputRows).sum == staged.rows, s"shards=$shards")
+      val ops = run.progress.flatMap(_.stateOperators)
+      assert(ops.nonEmpty, s"shards=$shards")
+      assert(ops.forall(_.numShufflePartitions == math.max(2, shards)),
+        s"shards=$shards: ${ops.map(_.numShufflePartitions)}")
+    }
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("timedRun: a failure at start(), inside a batch or in the caller's " +
+    "wait propagates, and the query and the pinned confs are gone") {
+    def chain(t: Throwable) =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    withProvider(None) {
+      val before = sessionState("timed_run")
+      assert(before._1.isEmpty && before._3.isEmpty)
+      // a checkpoint root that is a file: start() cannot create its logs
+      val fileCkpt = Files.createFile(
+        java.nio.file.Paths.get(TempDirs.scoped("timed-ckpt"), "file")).toString
+      intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+        FadsStream.timedRun(spark, staged, 1, fileCkpt)()
+      }
+      assert(sessionState("timed_run") == before)
+      // a null user_id fails the typed decode of the batch that holds it
+      val nullUser = FadsStream.stageEvents(spark.range(0, 40).selectExpr(
+        "id AS event_id", "id AS ts",
+        "CASE WHEN id = 25 THEN NULL ELSE id END AS user_id",
+        "'view' AS event_type", "CAST(id AS DOUBLE) AS value", "'' AS props"))
+      val inBatch = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        FadsStream.timedRun(spark, nullUser, 3,
+          TempDirs.scoped("timed-ckpt"))()
+      }
+      assert(chain(inBatch).exists(t => String.valueOf(t.getMessage).contains("NOT_NULL_ASSERT_VIOLATION")),
+        inBatch.getMessage)
+      assert(sessionState("timed_run") == before)
+      val inWait = intercept[IllegalStateException] {
+        FadsStream.timedRun(spark, staged, 3,
+          TempDirs.scoped("timed-ckpt")) { _ =>
+          throw new IllegalStateException("boom in wait")
+        }
+      }
+      assert(inWait.getMessage == "boom in wait")
+      assert(sessionState("timed_run") == before)
+    }
+  }
+
+  test("ProgressSummary totals are the sums over the same progress's state " +
+    "operators") {
+    timedRuns.foreach { case (shards, run) =>
+      val ops = run.progress.flatMap(_.stateOperators)
+      val fsync = "rocksdbCommitFileSyncLatencyMs"
+      assert(ops.forall(_.customMetrics.containsKey(fsync)), s"shards=$shards")
+      val s = run.summary
+      assert(s.rows == staged.rows)
+      assert(s.stateCommitMs == ops.map(_.commitTimeMs).sum)
+      assert(s.rocksdbFsyncMs == ops.map(_.customMetrics.get(fsync).longValue).sum)
+      assert(s.stateUpdateMs == ops.map(_.allUpdatesTimeMs).sum)
+      assert(s.stateJson == s"""{"state_commit_ms":${s.stateCommitMs},""" +
+        s""""rocksdb_fsync_ms":${s.rocksdbFsyncMs},"state_update_ms":${s.stateUpdateMs}}""")
+      assert(s.lines.size == run.progress.size)
+      s.lines.zip(run.progress).foreach { case (l, p) =>
+        assert(l.startsWith(s"trigger ${p.name} batch=${p.batchId} in=${p.numInputRows} "), l)
+        assert(l.contains(s"shards=${math.max(2, shards)}"), l)
+      }
+    }
   }
 }

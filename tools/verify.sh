@@ -38,7 +38,7 @@ python3 tools/test_oracle_tools.py
 python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
 (cd tools && python3 check_fads_oracle.py "$SF_DIR" "$OUT_DIR")
 
-step "5/5 bench smoke (sf0.001; asserts the driver-parseable JSON line)"
+step "5/5 bench smoke (sf0.001; asserts the driver-parseable JSON line and every streaming leg)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt -batch "runMain graft.Bench" \
   > /tmp/verify_gate_bench.out 2>&1 || { tail -20 /tmp/verify_gate_bench.out; exit 1; }
 python3 - <<'EOF'
@@ -49,7 +49,16 @@ assert d.get('queries'), 'bench JSON has no queries map'
 bad = [k for k, v in d['queries'].items()
        if (v[1] if isinstance(v, list) else v) < 0]
 assert not bad, f'bench-failed queries: {bad}'
-print(f"bench smoke OK: {len(d['queries'])} queries, metric={d.get('value')}")
+# every streaming leg ran: a failed leg reports 0 rows/s and an empty diag
+legs = {'stream_rows_per_sec': 'stream_state_diag',
+        'stream_sharded_rows_per_sec': 'stream_sharded_state_diag',
+        'stream_rows_per_sec_disk': 'stream_disk_state_diag'}
+for rps, diag in legs.items():
+    assert d.get(rps, 0) > 0, f'{rps} is {d.get(rps)}: the leg failed'
+    missing = {'state_commit_ms', 'rocksdb_fsync_ms', 'state_update_ms'} - set(d.get(diag, {}))
+    assert not missing, f'{diag} lacks {sorted(missing)}'
+print(f"bench smoke OK: {len(d['queries'])} queries, metric={d.get('value')}, " +
+      ", ".join(f"{k}={d[k]}" for k in legs))
 EOF
 
 echo
