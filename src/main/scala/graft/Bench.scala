@@ -278,17 +278,18 @@ object Bench {
     def runStreamingLegs(): Unit = try {
       val staged = FadsStream.stageEvents(FadsStream.eventsFrame(spark, sfDir))
       streamRows = staged.rows
-      // beside the scratch dir: on the probe-verified tmpfs, else in
+      // on the session scratch tier: the probe-verified tmpfs, else
       // java.io.tmpdir
-      val ckptRoot =
-        Files.createTempDirectory(scratch.dir.getParent, "graft-bench-ckpt")
+      val ckptRoot = Paths.get(TempDirs.scoped("bench-ckpt"))
       streamCkpt = scratch.kind
       streamCkptPlacement = Session.probe(ckptRoot).json(scratch.kind)
+      // the non-headline diag leg's DISK checkpoint, in java.io.tmpdir
+      val diskCkpt = Files.createTempDirectory("bench-ckpt-disk")
       // best-of-2 (budget permitting), each run on a fresh checkpoint
       def best(shards: Int, name: String): FadsStream.TimedRun =
         (1 to (if (remaining() > 120) 2 else 1)).map { i =>
           FadsStream.timedRun(spark, staged, shards,
-            Files.createTempDirectory(ckptRoot, s"$name$i").toString)()
+            ckptRoot.resolve(s"$name$i").toString)()
         }.minBy(_.sec)
       try {
         val single = best(1, "single")
@@ -296,7 +297,6 @@ object Bench {
         writeArtifact(partial = true)
         // non-headline diag: DISK checkpoint (RocksDB scratch stays under
         // spark.local.dir — see stream_disk_leg_note), once
-        val diskCkpt = Files.createTempDirectory("bench-ckpt-disk")
         diskCkptPlacement = Session.probe(diskCkpt).json("disk")
         val disk = FadsStream.timedRun(spark, staged, 1, diskCkpt.toString)()
         streamDiskSec = disk.sec; diskStreamDiag = disk.summary.stateJson
@@ -306,7 +306,8 @@ object Bench {
         streamShardedSec = sharded.sec
         shardedStreamDiag = sharded.summary.stateJson
       } finally {
-        // RAM is a shared resource — reclaim the /dev/shm checkpoints now.
+        // RAM is a shared resource — reclaim the /dev/shm checkpoints now,
+        // and the disk leg's, which TempDirs does not own.
         // Files.list must be CLOSED (r15 ADVICE 4): the stream holds a
         // directory fd, and RocksDB checkpoints nest many directories —
         // unclosed streams leak one fd each for the JVM's life.
@@ -317,7 +318,8 @@ object Bench {
           }
           Files.deleteIfExists(p)
         }
-        try rmTree(ckptRoot) catch { case NonFatal(_) => () }
+        Seq(ckptRoot, diskCkpt).foreach(p =>
+          try rmTree(p) catch { case NonFatal(_) => () })
       }
     } catch {
       // guarded (round-10 verdict item 3): a streaming-leg failure reports

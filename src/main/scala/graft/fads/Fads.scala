@@ -163,8 +163,9 @@ object Fads {
     * key — the reference's state is per-subtask at parallelism 1
     * (SURVEY.md §3.3); the Spark layers pin one state partition.
     *
-    * Serializable snapshot via [[Engine.snapshot]]/[[Engine.restore]] for the
-    * streaming state store.
+    * The streaming state store snapshots it per trigger through
+    * [[graft.streaming.FadsProcessor]]'s `persist` and rebuilds it with
+    * its `restore`.
     */
   final class State(nQid: Int) {
     /** Pending tuples, oldest-first by (arrivalMs, seq) (Generalizer.java:85). */
@@ -343,8 +344,9 @@ object Fads {
       s / cfg.nQid
     }
 
-    /** Convenience: run a whole bounded input deterministically (used by the
-      * batch replay and as the test oracle). `clock` maps each input to the
+    /** Convenience: run a whole bounded input deterministically (the
+      * specs' oracle; the batch replay, `FadsBatch.runPartitions`, has its
+      * own loop over per-shard state). `clock` maps each input to the
       * processing-time instant at which it is handled.
       */
     def runAll(input: Iterator[In], clock: In => Long): Iterator[Out] = {

@@ -16,9 +16,8 @@ import graft.pipeline.IndexCommit
   * sorted file ([[BucketedJoinSpec]] pins the SortMergeJoin subtree to
   * ZERO ShuffleExchange nodes).
   *
-  * Mechanics: the bucketed copies stage ONCE at a content-keyed path
-  * (orders count + key hash-sum fingerprint, the [[graft.pipeline.Retrieval]]
-  * staging convention) under [[IndexCommit]]'s atomic publication, then
+  * Mechanics: the bucketed copies stage ONCE at a content-keyed
+  * [[IndexCommit.root]] under [[IndexCommit.publish]], then
   * register per session as external bucketed catalog tables — bucket
   * membership rides in the file names (`_0000N` suffixes), the DDL carries
   * the bucket spec, exactly how a metastore deployment ships them.
@@ -32,29 +31,21 @@ object BucketedJoin {
   /** Bucket fan-out of the staged tables (matches both sides). */
   val Buckets = 8
 
-  private val statsCache =
-    scala.collection.concurrent.TrieMap[String, (Long, Long)]()
-
-  /** Content fingerprint of BOTH staged sources, covering the key AND the
-    * value columns the entries emit (memoized per dir) so a regenerated
-    * testdata dir re-stages instead of silently reusing stale buckets —
-    * the [[graft.pipeline.Dedup.docsStats]] pattern. Orders alone was not
-    * enough (r14 advice): an in-place lineitem change, or an orders value
-    * change preserving the key set, must also move the staged root.
+  /** The staged root ([[IndexCommit.root]]): keyed by the content of BOTH
+    * sources, covering the key AND the value columns the entries emit, so
+    * a regenerated testdata dir re-stages instead of silently reusing
+    * stale buckets. Orders alone was not enough (r14 advice): an in-place
+    * lineitem change, or an orders value change preserving the key set,
+    * must also move the staged root.
     */
-  private def sourceStats(spark: SparkSession, dir: String): (Long, Long) =
-    statsCache.getOrElseUpdate(dir, {
-      def fp(t: String, cols: String): (Long, Long) = {
-        val r = Tables.load(spark, dir, t)
-          .agg(count(lit(1)),
-            sum(expr(s"CAST(pmod(hash($cols), 1000003) AS BIGINT)")))
-          .head()
-        (r.getLong(0), math.floorMod(r.getLong(1), 1000000007L))
-      }
-      val (no, fo) = fp("orders", "o_orderkey, o_orderpriority, o_totalprice")
-      val (nl, fl) = fp("lineitem", "l_orderkey, l_extendedprice, l_discount")
-      (no, math.floorMod(fo * 31L + nl * 17L + fl, 1000000007L))
-    })
+  private[graft] def root(spark: SparkSession, dir: String): String = {
+    val o = IndexCommit.content(spark, dir, "orders",
+      "o_orderkey", "o_orderpriority", "o_totalprice")
+    val l = IndexCommit.content(spark, dir, "lineitem",
+      "l_orderkey", "l_extendedprice", "l_discount")
+    IndexCommit.root("bucketed", dir, s"_b$Buckets",
+      o.copy(fp = math.floorMod(o.fp * 31L + l.rows * 17L + l.fp, 1000000007L)))
+  }
 
   /** Stage bucketed copies of orders + lineitem once, atomically. The
     * write `repartition(Buckets, key)` aligns input partitions with
@@ -62,13 +53,8 @@ object BucketedJoin {
     * sorted file — the layout that lets the read side skip even the
     * per-bucket sort.
     */
-  private def stagedRoot(spark: SparkSession, dir: String): String = {
-    val (n, f) = sourceStats(spark, dir)
-    val root = "/tmp/graft_bucketed/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + s"_b${Buckets}_n${n}_f$f"
-    val (fs, rootPath) = IndexCommit.fsOf(spark, root)
-    IndexCommit.ensure(fs, rootPath)(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$r/_DONE"))) { tmp =>
+  private[graft] def stagedRoot(spark: SparkSession, dir: String): String =
+    IndexCommit.publish(spark, root(spark, dir), Seq("orders", "lineitem")) { tmp =>
       Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey").foreach {
         case (t, k) =>
           // bucketBy requires a catalog write: register a throwaway
@@ -81,10 +67,7 @@ object BucketedJoin {
             .option("path", s"$tmp/$t").mode("overwrite").saveAsTable(tbl)
           spark.sql(s"DROP TABLE IF EXISTS $tbl")
       }
-      fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_DONE")).close()
     }
-    root
-  }
 
   /** Register the staged buckets as external bucketed catalog tables for
     * this session (idempotent; re-registers when the staged root moves —
@@ -111,7 +94,7 @@ object BucketedJoin {
       Seq(("graft_bkt_orders", "orders", "o_orderkey"),
         ("graft_bkt_lineitem", "lineitem", "l_orderkey")).foreach {
         case (tbl, t, k) =>
-          val ddl = spark.read.parquet(s"$root/$t").schema.toDDL
+          val ddl = IndexCommit.schemas(spark, root)(t).toDDL
           spark.sql(s"DROP TABLE IF EXISTS $tbl")
           spark.sql(
             s"""CREATE TABLE $tbl ($ddl) USING parquet

@@ -72,7 +72,7 @@ object Containment {
     // (BatchSizing — no-op on a wide scan)
     val docs = graft.BatchSizing.widen(
       Tables.load(spark, dir, "documents"),
-      graft.pipeline.Dedup.docsStats(spark, dir)._1)
+      graft.pipeline.Dedup.docsStats(spark, dir).rows)
     val corpusSh = docs.selectExpr("doc_id", "split(text, ' ') AS ws")
       .where("size(ws) >= 3")
       .selectExpr("doc_id", shingles("ws"))

@@ -465,6 +465,10 @@ object CorpusOps {
 
   // ------------------------------------- incremental materialized view
 
+  private def rollup(docs: DataFrame): DataFrame =
+    docs.groupBy("source", "lang")
+      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
+
   /** Incremental materialized-view maintenance — the warehouse op that
     * keeps a pre-aggregated rollup current as batches land, WITHOUT
     * re-scanning history: a per-(source, lang) aggregate table is built
@@ -476,32 +480,21 @@ object CorpusOps {
     * index families use. Maintenance cost is O(wave + touched partitions)
     * — independent of history size. The oracle recomputes the rollup over
     * the FULL corpus from scratch, so a lost delta, a double-merge, or a
-    * partition the merge failed to touch all break the hash.
+    * partition the merge failed to touch all break the hash. The built
+    * view lives at its content-keyed [[IndexCommit.root]] and is published
+    * by [[IndexCommit.publish]].
     */
-  def mvPath(spark: SparkSession, dir: String): String = {
-    val (rows, fp) = Dedup.docsStats(spark, dir)
-    "/tmp/graft_agg_mv/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + s"_n${rows}_f$fp"
-  }
-
-  private def rollup(docs: DataFrame): DataFrame =
-    docs.groupBy("source", "lang")
-      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-
-  def ensureAggMv(spark: SparkSession, dir: String): String = {
-    val root = mvPath(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$root/_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
+  def ensureAggMv(spark: SparkSession, dir: String): String =
+    IndexCommit.publish(spark,
+      IndexCommit.root("agg_mv", dir, "", Dedup.docsStats(spark, dir)),
+      Seq(IndexCommit.Root)) { tmp =>
       rollup(Tables.load(spark, dir, "documents")
         .where(s"doc_id % ${Dedup.IncrSplitMod} <> 0"))
         .withColumn("ver", lit(0L))
         .repartition(col("source"))
         .sortWithinPartitions("source", "lang")
-        .write.mode("overwrite").partitionBy("source").parquet(root)
+        .write.mode("overwrite").partitionBy("source").parquet(tmp)
     }
-    root
-  }
 
   /** Merge one delta batch of raw document rows into the persisted view at
     * `work`, additively and touched-partition-only — the SAME body a

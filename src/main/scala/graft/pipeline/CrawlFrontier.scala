@@ -60,7 +60,7 @@ object CrawlFrontier {
     // No-op on an already-wide scan (BatchSizing).
     candidatesRowLocal(graft.BatchSizing.widen(
       Tables.load(spark, dir, "documents"),
-      Dedup.docsStats(spark, dir)._1))
+      Dedup.docsStats(spark, dir).rows))
 
   /** The candidate chain as a PURE ROW-LOCAL frame over (doc_id, text)
     * rows — page render, href extraction, the rel=canonical self link

@@ -572,7 +572,7 @@ object Dedup {
     // Widened before the bigram explode + 64 bit-sum aggregates (one
     // serial task otherwise; sums are order-free — BatchSizing).
     val toks = graft.BatchSizing.widen(
-        Tables.load(spark, dir, "documents"), docsStats(spark, dir)._1)
+        Tables.load(spark, dir, "documents"), docsStats(spark, dir).rows)
       .selectExpr("doc_id", "split(text, ' ') AS t")
       .selectExpr("doc_id",
         """explode(array_distinct(CASE WHEN size(t) >= 2
@@ -665,7 +665,7 @@ object Dedup {
     // exchange is shared by both via ReuseExchange, and min/max/count are
     // partition-order-free (BatchSizing; no-op on a wide scan)
     val spans = graft.BatchSizing.widen(
-        Tables.load(spark, dir, "documents"), docsStats(spark, dir)._1)
+        Tables.load(spark, dir, "documents"), docsStats(spark, dir).rows)
       .selectExpr("doc_id", "split(text, ' ') AS t")
       .where(s"size(t) >= $SpanTokens")
       .selectExpr("doc_id",
@@ -840,42 +840,25 @@ object Dedup {
     * path so a build and a probe can never disagree about the layout.
     */
   def indexBuckets(spark: SparkSession, dir: String): Int = {
-    val (rows, _) = docsStats(spark, dir)
+    val rows = docsStats(spark, dir).rows
     val bandRows = rows * (IncrSplitMod - 1) / IncrSplitMod * B
     math.max(MinIndexBuckets.toLong, math.min(MaxIndexBuckets.toLong,
       (bandRows + RowsPerIndexBucket - 1) / RowsPerIndexBucket)).toInt
   }
 
-  /** Persisted-index location, keyed by the corpus directory so different
-    * scale factors never share an index, and by the bucket count so a
-    * re-bucketed build never shadows an old layout. /tmp is the stand-in
-    * for the warehouse path a deployment would use.
+  /** Persisted-index location ([[IndexCommit.root]]), keyed by the
+    * bucket count so a re-bucketed build never shadows an old layout.
     */
-  def indexPath(spark: SparkSession, dir: String): String = {
-    val (rows, fp) = docsStats(spark, dir)
-    "/tmp/graft_minhash_index/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") +
-      s"_b${indexBuckets(spark, dir)}_n${rows}_f$fp"
-  }
+  def indexPath(spark: SparkSession, dir: String): String =
+    IndexCommit.root("minhash_index", dir, s"_b${indexBuckets(spark, dir)}",
+      docsStats(spark, dir))
 
-  /** Memoized per-corpus stats from ONE aggregate pass: (row count,
-    * content fingerprint — an order-free hash-sum over (doc_id, text)).
-    * Folded into [[indexPath]] so a regenerated corpus at the same dir
-    * rebuilds instead of silently reusing a stale persisted index — the
-    * same round-10-hazard guard [[graft.pipeline.Similarity.corpusStats]]
-    * gives the IVF index family.
+  /** The corpus's content key over (doc_id, text) — the memoized
+    * [[IndexCommit.content]] every documents-keyed index root and
+    * row-count-sized layout reads.
     */
-  private val docsStatsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-
-  def docsStats(spark: SparkSession, dir: String): (Long, Long) =
-    docsStatsCache.getOrElseUpdate(dir, {
-      val r = Tables.load(spark, dir, "documents")
-        .agg(count(lit(1)),
-          sum(expr("CAST(pmod(hash(doc_id, text), 1000003) AS BIGINT)")))
-        .head()
-      (r.getLong(0), math.floorMod(r.getLong(1), 1000000007L))
-    })
+  def docsStats(spark: SparkSession, dir: String): IndexCommit.Content =
+    IndexCommit.content(spark, dir, "documents", "doc_id", "text")
 
   /** Bucket count of an already-built index, parsed back from its path. */
   private[graft] def bucketsOf(indexPath: String): Int = {
@@ -902,22 +885,18 @@ object Dedup {
     * by construction (≤ B × IndexBuckets lines).
     */
   private[pipeline] def writeManifest(spark: SparkSession, indexPath: String,
-      buckets: Set[(Int, Int)]): Unit = {
-    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
-    IndexCommit.writeLines(fs, new org.apache.hadoop.fs.Path(root, ManifestFile),
+      buckets: Set[(Int, Int)]): Unit =
+    IndexCommit.writeManifest(spark, indexPath, ManifestFile,
       buckets.toSeq.sorted.map { case (b, h) => s"$b,$h" })
-  }
 
   /** The committed bucket set of an index; fails loud when the manifest
     * is absent ([[IndexCommit.readLines]]).
     */
-  def readManifest(spark: SparkSession, indexPath: String): Set[(Int, Int)] = {
-    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
-    IndexCommit.readLines(fs, new org.apache.hadoop.fs.Path(root, ManifestFile),
+  def readManifest(spark: SparkSession, indexPath: String): Set[(Int, Int)] =
+    IndexCommit.readManifest(spark, indexPath, ManifestFile,
       s"no $ManifestFile manifest at $indexPath — index was not built by " +
         "ensureMinhashIndex (or predates the manifest); rebuild the index")
       .map { l => val Array(b, h) = l.split(','); (b.toInt, h.toInt) }.toSet
-  }
 
   /** Add `extra` buckets to an index's manifest (the append path's
     * metadata commit — new buckets become probe-visible).
@@ -925,18 +904,6 @@ object Dedup {
   private[pipeline] def augmentManifest(spark: SparkSession, indexPath: String,
       extra: Set[(Int, Int)]): Unit =
     writeManifest(spark, indexPath, readManifest(spark, indexPath) ++ extra)
-
-  /** The (band=, bhp=) bucket dirs under an index root, via Hadoop FS. */
-  private def listBucketDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Set[(Int, Int)] =
-    fs.listStatus(root).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("band="))
-      .flatMap { bandDir =>
-        val band = bandDir.getPath.getName.stripPrefix("band=").toInt
-        fs.listStatus(bandDir.getPath).iterator
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bhp="))
-          .map(s => (band, s.getPath.getName.stripPrefix("bhp=").toInt))
-      }.toSet
 
   /** Build-once: write the historical corpus's MinHash band index —
     * (doc_id, band, bh) plus the full 16-component signature (i0..i15) —
@@ -950,24 +917,12 @@ object Dedup {
     * those dirs — see [[incrementalProbe]] with `prune = true`. Rows are
     * range-sorted by bh inside each bucket file so parquet row-group
     * stats stay tight if buckets ever span row groups. The build commits
-    * the partitioned data, the [[ManifestFile]] bucket manifest the
-    * pruned probe consults and the data's schema record
-    * ([[IndexCommit.SchemaFile]]) every probe reads under — an index
-    * without either is treated as uncommitted and rebuilt. All existence
-    * checks go through the Hadoop FileSystem API, so the build-reuse
-    * contract holds on any store, not just local disk.
+    * the partitioned data and the [[ManifestFile]] bucket manifest the
+    * pruned probe consults through [[IndexCommit.publish]].
     */
-  def ensureMinhashIndex(spark: SparkSession, dir: String): String = {
-    val path = indexPath(spark, dir)
-    val (fs, root) = IndexCommit.fsOf(spark, path)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, ManifestFile)) &&
-        IndexCommit.recorded(fs, r, IndexCommit.Root)
-    // build into a temp sibling, publish with ONE atomic rename — N
-    // racing processes produce exactly one committed index, never a
-    // torn overwrite at the shared path ([[IndexCommit]])
-    IndexCommit.ensure(fs, root)(committed) { tmp =>
+  def ensureMinhashIndex(spark: SparkSession, dir: String): String =
+    IndexCommit.publish(spark, indexPath(spark, dir), Seq(IndexCommit.Root),
+      Seq(ManifestFile)) { tmp =>
       val hist = Tables.load(spark, dir, "documents")
         .where(s"doc_id % $IncrSplitMod <> 0")
       val sig = minhashSignatures(hist)
@@ -978,15 +933,13 @@ object Dedup {
         .repartition(col("band"), col("bhp"))
         .sortWithinPartitions("band", "bhp", "bh")
         .write.mode("overwrite").partitionBy("band", "bhp")
-        .parquet(tmp.toString)
+        .parquet(tmp)
       // manifest = the dirs the write just created, listed ONCE at build
-      // time through the Hadoop FS API (a one-time O(B×buckets) LIST is
-      // the layout-commit cost; the PROBE side never lists anything)
-      IndexCommit.recordSchemas(spark, tmp.toString, Seq(IndexCommit.Root))
-      writeManifest(spark, tmp.toString, listBucketDirs(fs, tmp))
+      // time (a one-time O(B×buckets) LIST is the layout-commit cost)
+      writeManifest(spark, tmp, IndexCommit.partitionValues(spark, tmp, "band")
+        .flatMap(b => IndexCommit.partitionValues(spark, s"$tmp/band=$b", "bhp")
+          .map(h => (b.toInt, h.toInt))).toSet)
     }
-    path
-  }
 
   /** The persisted index, read back (the driver-checkable surface of the
     * build): one (band, bh) row per historical doc per band. Runs the

@@ -4,20 +4,30 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, expr, lit, max, sum}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Cross-process atomic build-then-commit for the persisted index
-  * families (MinHash band index, IVF inverted lists, BM25 postings).
+/** Where every persisted index lives and when it counts as committed,
+  * written once for the families: the BM25 index (postings, stats and
+  * block-max sidecar), the BM25 staged skew and WAND corpora, the MinHash
+  * band index, the line index, the eval-gram table, the five IVF layouts,
+  * the aggregate MV and the bucketed join tables.
   *
-  * The pre-round-13 `ensure*` paths were check-then-build: two JVMs
-  * racing both observe "uncommitted" and `mode("overwrite")` into the
-  * SAME shared index root, clobbering each other mid-build. This helper
-  * applies the snapshot protocol's only commit primitive
-  * ([[SnapshotMv]]'s `commitManifest`: write aside, then ONE atomic
-  * rename) at whole-index granularity: the build runs in a hidden
-  * sibling temp dir (invisible to every reader — readers only ever
-  * resolve the final root), and publication is a single
-  * `fs.rename(tmp, finalRoot)`. Rename-onto-existing fails on every
+  * One root rule ([[root]]): [[Base]], the family's name, the corpus dir
+  * with non-alphanumerics replaced, the family's layout parameters and a
+  * content key from one memoized fingerprint query ([[content]]), so a
+  * regenerated corpus at the same dir rebuilds instead of silently reusing
+  * a stale index.
+  *
+  * One commit rule ([[publish]]): the build runs in a hidden sibling temp
+  * dir (invisible to every reader — readers only ever resolve the final
+  * root), the schemas of the declared artifacts are recorded, and
+  * publication is a single `fs.rename(tmp, finalRoot)` — the snapshot
+  * protocol's only commit primitive ([[SnapshotMv]]'s `commitManifest`:
+  * write aside, then ONE atomic rename) at whole-index granularity. An
+  * index is committed when every declared artifact has its `_SUCCESS` and
+  * its schema record and every declared manifest file is present; nothing
+  * ever writes into a published root. Rename-onto-existing fails on every
   * Hadoop FileSystem when the destination is present, so of N racing
   * builders exactly one publishes; the losers observe the winner's
   * committed index, discard their temp, and proceed — no torn state is
@@ -27,13 +37,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (`_buckets`, `_postings`, `_lists`, the snapshot versions): each caller
   * keeps its own line syntax and its own missing-manifest message.
   *
-  * And it owns the one pruned reader of committed index artifacts: every
-  * build records each artifact's schema in [[SchemaFile]] (one inference
-  * at build time), and a probe reads exactly the dirs it touches under
-  * that recorded schema ([[read]]) — no schema-inference job, no listing
-  * of the artifact root, and an empty frame when nothing is touched.
+  * And it owns the one pruned reader of committed index artifacts: the
+  * schema record [[SchemaFile]] holds one inference per artifact, made at
+  * build time, and a probe reads exactly the dirs it touches under that
+  * recorded schema ([[read]]) — no schema-inference job, no listing of the
+  * artifact root, and an empty frame when nothing is touched.
   */
 object IndexCommit {
+
+  /** The base of every index root: the stand-in for the warehouse path a
+    * deployment would use.
+    */
+  final val Base = "/tmp"
 
   /** The schema record at an index root: one `artifact<TAB>schema-json`
     * line per committed artifact, `.` naming the root itself. An index
@@ -41,13 +56,45 @@ object IndexCommit {
     */
   final val SchemaFile = "_schemas"
 
-  /** The root itself as an artifact name (the MinHash, line and IVF list
-    * layouts partition the index root directly).
+  /** The root itself as an artifact name (the MinHash, line, eval-gram,
+    * aggregate-MV and IVF list layouts partition the index root directly).
     */
   final val Root = "."
 
   private def artifactPath(root: String, artifact: String): String =
     if (artifact == Root) root else s"$root/$artifact"
+
+  /** A table's content key: its row count, the largest value of its first
+    * key column and an order-free hash-sum over the key columns.
+    */
+  final case class Content(rows: Long, maxKey: Long, fp: Long)
+
+  private val contentCache =
+    scala.collection.concurrent.TrieMap.empty[(String, String, Seq[String]), Content]
+
+  /** The [[Content]] of `table` under `dir` over `cols`, from ONE
+    * aggregate pass memoized per JVM: the count also sizes the
+    * corpus-adaptive layouts without a scan per plan built.
+    */
+  def content(spark: SparkSession, dir: String, table: String,
+      cols: String*): Content =
+    contentCache.getOrElseUpdate((dir, table, cols), {
+      val r = graft.Tables.load(spark, dir, table)
+        .agg(count(lit(1)), max(col(cols.head).cast("long")),
+          sum(expr(s"CAST(pmod(hash(${cols.mkString(", ")}), 1000003) AS BIGINT)")))
+        .head()
+      Content(r.getLong(0), r.getLong(1), math.floorMod(r.getLong(2), 1000000007L))
+    })
+
+  /** The one root rule: `<Base>/graft_<family>/<dir><layout>_n<rows>_f<fp><tag>`,
+    * `dir` with every character but letters, digits and dots replaced by
+    * `_`, `layout` the family's layout parameters, `key` the content key
+    * and `tag` a layout variant that follows it (the IVF list layouts).
+    */
+  def root(family: String, dir: String, layout: String, key: Content,
+      tag: String = ""): String =
+    s"$Base/graft_$family/" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
+      s"${layout}_n${key.rows}_f${key.fp}$tag"
 
   /** The Hadoop FileSystem that serves `path`, with `path` itself. */
   def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
@@ -81,20 +128,42 @@ object IndexCommit {
     text.split('\n').toSeq.filter(_.nonEmpty)
   }
 
+  /** Overwrite the manifest `file` of the index at `root` with `lines`. */
+  def writeManifest(spark: SparkSession, root: String, file: String,
+      lines: Seq[String]): Unit = {
+    val (fs, r) = fsOf(spark, root)
+    writeLines(fs, new Path(r, file), lines)
+  }
+
+  /** The non-empty lines of the manifest `file` of the index at `root`;
+    * fails loud with `absent` ([[readLines]]).
+    */
+  def readManifest(spark: SparkSession, root: String, file: String,
+      absent: => String): Seq[String] = {
+    val (fs, r) = fsOf(spark, root)
+    readLines(fs, new Path(r, file), absent)
+  }
+
+  /** The values `v` of the `<column>=v` partition dirs directly under
+    * `dir`: a build's one listing of the layout it just wrote, for its
+    * manifest (probes never list).
+    */
+  def partitionValues(spark: SparkSession, dir: String,
+      column: String): Seq[String] = {
+    val (fs, d) = fsOf(spark, dir)
+    fs.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith(s"$column=")).map(_.stripPrefix(s"$column="))
+  }
+
   /** Record the schemas of `artifacts` under `root` in its [[SchemaFile]],
     * each exactly as `spark.read.parquet` infers it (the one inference the
-    * artifact ever gets), keeping any artifact recorded before.
+    * artifact ever gets).
     */
-  def recordSchemas(spark: SparkSession, root: String,
+  private[pipeline] def recordSchemas(spark: SparkSession, root: String,
       artifacts: Seq[String]): Unit = {
     val (fs, r) = fsOf(spark, root)
-    val file = new Path(r, SchemaFile)
-    val kept = if (fs.exists(file)) schemas(spark, root) else Map.empty
-    val fresh = artifacts.map(a =>
-      a -> spark.read.parquet(artifactPath(root, a)).schema)
-    writeLines(fs, file, (kept ++ fresh).toSeq.sortBy(_._1).map {
-      case (a, s) => s"$a\t${s.json}"
-    })
+    writeLines(fs, new Path(r, SchemaFile), artifacts.sorted.map(a =>
+      s"$a\t${spark.read.parquet(artifactPath(root, a)).schema.json}"))
   }
 
   /** Every recorded artifact schema of the index at `root`; fails loud
@@ -111,11 +180,39 @@ object IndexCommit {
       }.toMap
   }
 
-  /** Whether `artifact` has a recorded schema under `root`. */
-  def recorded(fs: FileSystem, root: Path, artifact: String): Boolean = {
-    val file = new Path(root, SchemaFile)
-    fs.exists(file) && readLines(fs, file, "")
-      .exists(_.startsWith(artifact + "\t"))
+  /** What the index at `root` lacks of its declared `artifacts` (each one's
+    * `_SUCCESS` and schema record) and `manifests`, relative to `root`:
+    * empty exactly when the index is committed.
+    */
+  def missing(spark: SparkSession, root: String, artifacts: Seq[String],
+      manifests: Seq[String]): Seq[String] = {
+    val (fs, r) = fsOf(spark, root)
+    val record = new Path(r, SchemaFile)
+    val recorded =
+      if (!fs.exists(record)) Set.empty[String]
+      else readLines(fs, record, "").map(_.takeWhile(_ != '\t')).toSet
+    artifacts.flatMap { a =>
+      val success = if (a == Root) "_SUCCESS" else s"$a/_SUCCESS"
+      Option.when(!fs.exists(new Path(r, success)))(success) ++
+        Option.when(!recorded(a))(s"$SchemaFile:$a")
+    } ++ manifests.filterNot(m => fs.exists(new Path(r, m)))
+  }
+
+  /** The one commit rule: reuse the committed index at `root`, or run
+    * `build` into a temp sibling dir (it writes the declared `artifacts`,
+    * each with its `_SUCCESS`, and the declared `manifests`), record the
+    * artifacts' schemas and publish the whole index with one atomic
+    * rename ([[ensure]]). Returns `root`.
+    */
+  def publish(spark: SparkSession, root: String, artifacts: Seq[String],
+      manifests: Seq[String] = Nil)(build: String => Unit): String = {
+    val (fs, r) = fsOf(spark, root)
+    ensure(fs, r)(p => missing(spark, p.toString, artifacts, manifests).isEmpty) {
+      tmp =>
+        build(tmp.toString)
+        recordSchemas(spark, tmp.toString, artifacts)
+    }
+    root
   }
 
   /** The pruned reader: `dirs` (partition dirs relative to the artifact,
@@ -148,7 +245,8 @@ object IndexCommit {
     * but not committed) is cleared first — under this protocol partial
     * state can only ever exist at temp paths, never at `finalRoot`.
     */
-  def ensure(fs: FileSystem, finalRoot: Path)(isCommitted: Path => Boolean)(
+  private[pipeline] def ensure(fs: FileSystem, finalRoot: Path)(
+      isCommitted: Path => Boolean)(
       build: Path => Unit): Unit = {
     if (isCommitted(finalRoot)) return
     val parent = finalRoot.getParent

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -210,44 +210,33 @@ object IvfIndex {
 
   // ------------------------------------------------------ on-disk protocol
 
-  /** Index location, keyed by corpus dir, codebook size AND the corpus
-    * content fingerprint of [[corpusStats]] (the never-share contract of
-    * [[Dedup.indexPath]]: a regenerated corpus at the same dir rebuilds
-    * instead of silently reusing a stale index), plus the layout tag.
+  /** Index location ([[IndexCommit.root]]), keyed by the codebook size,
+    * the content key of [[corpusStats]] and the layout tag.
     */
   def path(spark: SparkSession, dir: String, layout: Layout): String = {
-    val (rows, _, fp) = corpusStats(spark, dir)
-    "/tmp/graft_ivf_index/" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
-      s"_c${nCentroids(rows)}_n${rows}_f$fp" + layout.tag
+    val c = corpusStats(spark, dir)
+    IndexCommit.root("ivf_index", dir, s"_c${nCentroids(c.rows)}", c, layout.tag)
   }
 
-  /** The committed artifacts of a `layout` index absent under `root`. */
-  private def missing(fs: FileSystem, root: Path, layout: Layout): Seq[String] =
-    (Seq("_SUCCESS", s"$CodebookDir/_SUCCESS") ++
-      layout.artifacts.map(a => s"$a/_SUCCESS") ++
-      Seq(ListsManifestFile, IndexCommit.SchemaFile))
-      .filterNot(a => fs.exists(new Path(root, a)))
-
-  private def committed(fs: FileSystem, root: Path, layout: Layout): Boolean =
-    missing(fs, root, layout).isEmpty
+  /** The artifacts a committed `layout` index declares: the lists at the
+    * root, the codebook and the layout's own.
+    */
+  private def artifacts(layout: Layout): Seq[String] =
+    IndexCommit.Root +: CodebookDir +: layout.artifacts
 
   private def listsManifestWrite(spark: SparkSession, indexPath: String,
-      lists: Set[Long]): Unit = {
-    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
-    IndexCommit.writeLines(fs, new Path(root, ListsManifestFile),
+      lists: Set[Long]): Unit =
+    IndexCommit.writeManifest(spark, indexPath, ListsManifestFile,
       lists.toSeq.sorted.map(_.toString))
-  }
 
   /** Committed inverted-list ids; fails loud when absent
     * ([[IndexCommit.readLines]]).
     */
-  def listsManifestRead(spark: SparkSession, indexPath: String): Set[Long] = {
-    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
-    IndexCommit.readLines(fs, new Path(root, ListsManifestFile),
+  def listsManifestRead(spark: SparkSession, indexPath: String): Set[Long] =
+    IndexCommit.readManifest(spark, indexPath, ListsManifestFile,
       s"no $ListsManifestFile manifest at $indexPath — index was not " +
         "built by IvfIndex.ensure; rebuild the index")
       .map(_.toLong).toSet
-  }
 
   /** Repartition-by-list write of list rows under `root`. */
   private def writeLists(lists: DataFrame, root: String, mode: String): Unit =
@@ -255,31 +244,25 @@ object IvfIndex {
       .sortWithinPartitions("c_id", "vec_id")
       .write.mode(mode).partitionBy("c_id").parquet(root)
 
-  /** Build-then-publish an index root: `build` lays the list dirs and
-    * artifacts into a temp sibling, their schemas are recorded, the
-    * manifest of the written list dirs goes last, and [[IndexCommit]]
-    * makes it all visible with one rename. A no-op when `root` already
-    * holds a committed `layout` index.
+  /** Build-then-publish an index root ([[IndexCommit.publish]]): `build`
+    * lays the list dirs and artifacts into a temp sibling and the manifest
+    * of the written list dirs follows. A no-op when `root` already holds a
+    * committed `layout` index.
     */
   private def publish(spark: SparkSession, root: String, layout: Layout)(
-      build: Path => Unit): Unit = {
-    val (fs, r) = IndexCommit.fsOf(spark, root)
-    IndexCommit.ensure(fs, r)(committed(fs, _, layout)) { tmp =>
-      build(tmp)
-      val lists = fs.listStatus(tmp).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-        .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-      IndexCommit.recordSchemas(spark, tmp.toString,
-        IndexCommit.Root +: CodebookDir +: layout.artifacts)
-      listsManifestWrite(spark, tmp.toString, lists)
+      build: String => Unit): String =
+    IndexCommit.publish(spark, root, artifacts(layout), Seq(ListsManifestFile)) {
+      tmp =>
+        build(tmp)
+        listsManifestWrite(spark, tmp,
+          IndexCommit.partitionValues(spark, tmp, "c_id").map(_.toLong).toSet)
     }
-  }
 
   /** Lists plus every artifact of `m` into `tmp`. */
-  private def writeIndex(spark: SparkSession, tmp: Path, lists: DataFrame,
+  private def writeIndex(spark: SparkSession, tmp: String, lists: DataFrame,
       m: Model): Unit = {
     import spark.implicits._
-    writeLists(lists, tmp.toString, "overwrite")
+    writeLists(lists, tmp, "overwrite")
     m.cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
     m.pq.foreach(_.coalesce(1).write.mode("overwrite")
       .parquet(s"$tmp/$PqCodebookDir"))
@@ -294,9 +277,8 @@ object IvfIndex {
     * encoded by `layout`, published with its artifacts. Reused
     * byte-for-byte while committed.
     */
-  def ensure(spark: SparkSession, dir: String, layout: Layout): String = {
-    val root = path(spark, dir, layout)
-    publish(spark, root, layout) { tmp =>
+  def ensure(spark: SparkSession, dir: String, layout: Layout): String =
+    publish(spark, path(spark, dir, layout), layout) { tmp =>
       val emb = embDouble(spark, dir)
       val nc = nCentroids(spark, dir)
       val m = layout.train(emb, coarseCent(emb, nc), nc)
@@ -304,8 +286,6 @@ object IvfIndex {
         nearestLists(emb.where(s"vec_id % $IvfSplitMod <> 0"), m.cent,
           "vec_id", 1).select("vec_id", "emb", "nrm", "c_id"), m), m)
     }
-    root
-  }
 
   /** The trained artifacts of the committed `layout` index at `indexPath`.
     * Fails loud, naming the layout, when any committed artifact is absent:
@@ -313,8 +293,8 @@ object IvfIndex {
     * neighbors.
     */
   def open(spark: SparkSession, indexPath: String, layout: Layout): Model = {
-    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
-    val gone = missing(fs, root, layout)
+    val gone = IndexCommit.missing(spark, indexPath, artifacts(layout),
+      Seq(ListsManifestFile))
     if (gone.nonEmpty)
       throw new IllegalStateException(
         s"$layout IVF index at $indexPath lacks ${gone.mkString(", ")} — " +
@@ -385,7 +365,7 @@ object IvfIndex {
     val m = open(spark, indexPath, layout)
     val probes = probesOf(queries, m.cent)
     topK(layout, touchedLists(spark, probes, indexPath), probes, queries, m,
-      embDouble(spark, dir), rerankK(corpusStats(spark, dir)._1), k)
+      embDouble(spark, dir), rerankK(corpusStats(spark, dir).rows), k)
   }
 
   /** Incremental ANN, probe leg: wave-1 queries against the PERSISTED
@@ -550,9 +530,8 @@ object IvfIndex {
       if (fragmented.nonEmpty)
         writeLists(IndexCommit.read(spark, src, IndexCommit.Root,
             Some(fragmented.map(c => s"c_id=$c")))
-          .select("vec_id", "emb", "nrm", "c_id"), tmp.toString, "append")
-      val (fs, _) = IndexCommit.fsOf(spark, tmp.toString)
-      val succ = new Path(tmp, "_SUCCESS")
+          .select("vec_id", "emb", "nrm", "c_id"), tmp, "append")
+      val (fs, succ) = IndexCommit.fsOf(spark, s"$tmp/_SUCCESS")
       if (!fs.exists(succ)) fs.create(succ).close()
     }
   }
@@ -580,12 +559,11 @@ object IvfIndex {
   private[pipeline] def refresh(spark: SparkSession, dir: String,
       content: DataFrame): String = {
     val m = Model(trainedCentroids(spark, dir, content))
-    val dst = graft.TempDirs.scoped("ivf-refresh") + "/refreshed"
-    publish(spark, dst, Float) { tmp =>
-      writeIndex(spark, tmp, nearestLists(content, m.cent, "vec_id", 1)
-        .select("vec_id", "emb", "nrm", "c_id"), m)
+    publish(spark, graft.TempDirs.scoped("ivf-refresh") + "/refreshed", Float) {
+      tmp =>
+        writeIndex(spark, tmp, nearestLists(content, m.cent, "vec_id", 1)
+          .select("vec_id", "emb", "nrm", "c_id"), m)
     }
-    dst
   }
 
   // ------------------------------------------------- layout internals

@@ -96,7 +96,7 @@ object LineDedup {
     // first-per-line selection is keyed min — order-free. BatchSizing)
     dedupLines(lineTable(graft.BatchSizing.widen(
       Tables.load(spark, dir, "documents"),
-      Dedup.docsStats(spark, dir)._1)))
+      Dedup.docsStats(spark, dir).rows)))
 
   /** The derived-lines CTE chain (ends in `l(doc_id, text, line_idx,
     * line)`), shared by the batch and streaming oracles.
@@ -180,32 +180,19 @@ object LineDedup {
   /** Hash-bucket fan-out of the persisted line index (`lb=` dirs). */
   val LineBuckets = 64
 
-  /** Content-keyed index path (the [[Dedup.indexPath]] convention: a
-    * regenerated corpus rebuilds instead of reusing a stale index).
-    */
-  def lineIndexPath(spark: SparkSession, dir: String): String = {
-    val (rows, fp) = Dedup.docsStats(spark, dir)
-    "/tmp/graft_line_index/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + s"_b${LineBuckets}_n${rows}_f$fp"
-  }
-
   /** Build-once: the BASE corpus's (line, first_key) table — the batch
     * form of `stream_line_dedup`'s standing RocksDB state — partitioned
     * into [[LineBuckets]] `lb=` hash buckets with a [[Dedup.ManifestFile]]
     * manifest and a schema record, so a refresh probe reads only its
     * batch's touched buckets (the [[Dedup.ensureMinhashIndex]] storage
     * contract; manifest lines reuse the (band, bhp) form with band pinned
-    * to 0).
+    * to 0), at its content-keyed [[IndexCommit.root]].
     */
-  def ensureLineIndex(spark: SparkSession, dir: String): String = {
-    val path = lineIndexPath(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def committed(r: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(r, Dedup.ManifestFile)) &&
-        IndexCommit.recorded(fs, r, IndexCommit.Root)
-    IndexCommit.ensure(fs, p)(committed) { tmp =>
+  def ensureLineIndex(spark: SparkSession, dir: String): String =
+    IndexCommit.publish(spark,
+      IndexCommit.root("line_index", dir, s"_b$LineBuckets",
+        Dedup.docsStats(spark, dir)),
+      Seq(IndexCommit.Root), Seq(Dedup.ManifestFile)) { tmp =>
       val base = graft.Tables.load(spark, dir, "documents")
         .where(s"doc_id % ${Dedup.IncrSplitMod} <> 0")
       lineTable(base)
@@ -216,15 +203,10 @@ object LineDedup {
           s"CAST(pmod(xxhash64(line), $LineBuckets) AS INT) AS lb")
         .repartition(org.apache.spark.sql.functions.col("lb"))
         .sortWithinPartitions("lb", "line")
-        .write.mode("overwrite").partitionBy("lb").parquet(tmp.toString)
-      val buckets = fs.listStatus(tmp).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("lb="))
-        .map(s => (0, s.getPath.getName.stripPrefix("lb=").toInt)).toSet
-      IndexCommit.recordSchemas(spark, tmp.toString, Seq(IndexCommit.Root))
-      Dedup.writeManifest(spark, tmp.toString, buckets)
+        .write.mode("overwrite").partitionBy("lb").parquet(tmp)
+      Dedup.writeManifest(spark, tmp, IndexCommit.partitionValues(spark, tmp, "lb")
+        .map(l => (0, l.toInt)).toSet)
     }
-    path
-  }
 
   /** Refresh probe: per-doc line accounting for an incoming batch against
     * the PERSISTED base line state plus within-batch first occurrences —

@@ -155,7 +155,7 @@ object QualityClassifier {
     */
   private def labeledWide(spark: SparkSession, dir: String): DataFrame =
     graft.BatchSizing.widen(Tables.load(spark, dir, "documents"),
-      Dedup.docsStats(spark, dir)._1).selectExpr(labelExprs: _*)
+      Dedup.docsStats(spark, dir).rows).selectExpr(labelExprs: _*)
 
   /** Q — the committed entry: plant the classes, train the perceptron,
     * score every doc. The margin column under the hash gates the ENTIRE

@@ -79,8 +79,8 @@ object Refresh {
     */
   private[pipeline] def ensureFrozenWeights(spark: SparkSession,
       dir: String): Array[Long] = {
-    val (rows, fp) = Dedup.docsStats(spark, dir)
-    weightsCache.getOrElseUpdate(s"$dir|$rows|$fp", {
+    val c = Dedup.docsStats(spark, dir)
+    weightsCache.getOrElseUpdate(s"$dir|${c.rows}|${c.fp}", {
       // base split spread to the row-derived parallelism floor (the
       // QualityClassifier.labeledWide rationale): the single-file scan
       // otherwise trains the perceptron in one task
@@ -88,43 +88,32 @@ object Refresh {
         graft.BatchSizing.widen(
             Tables.load(spark, dir, "documents")
               .where(s"doc_id % $IncrSplitMod <> 0"),
-            rows * (IncrSplitMod - 1) / IncrSplitMod)
+            c.rows * (IncrSplitMod - 1) / IncrSplitMod)
           .selectExpr(QualityClassifier.labelExprs: _*)).cache()
       try QualityClassifier.train(feats) finally feats.unpersist(false)
     })
-  }
-
-  /** Content-keyed location of the persisted eval-gram table. */
-  def evalGramPath(spark: SparkSession, dir: String): String = {
-    val (rows, fp) = Dedup.docsStats(spark, dir)
-    "/tmp/graft_evalgram_index/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + s"_g${DecontamN}_n${rows}_f$fp"
   }
 
   /** Build-once: the benchmark suite's distinct word-grams — the eval
     * docs that are base-corpus members (the standing benchmark existed
     * before any batch arrived), exactly [[CorpusOps.decontaminate]]'s
     * gram derivation. Grams are eval-suite-sized, so the artifact stays
-    * broadcastable whatever the corpus grows to.
+    * broadcastable whatever the corpus grows to. Content-keyed
+    * [[IndexCommit.root]], keyed by the gram length.
     */
-  def ensureEvalGramIndex(spark: SparkSession, dir: String): String = {
-    val path = evalGramPath(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexCommit.ensure(fs, p)(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS")) &&
-        IndexCommit.recorded(fs, r, IndexCommit.Root)) { tmp =>
+  def ensureEvalGramIndex(spark: SparkSession, dir: String): String =
+    IndexCommit.publish(spark,
+      IndexCommit.root("evalgram_index", dir, s"_g$DecontamN",
+        Dedup.docsStats(spark, dir)),
+      Seq(IndexCommit.Root)) { tmp =>
       Tables.load(spark, dir, "documents")
         .where(s"doc_id % $EvalEvery = 0 AND doc_id % $IncrSplitMod <> 0")
         .selectExpr("split(text, ' ') AS t")
         .selectExpr(s"explode(${CorpusOps.gramExpr(DecontamN)}) AS gram")
         .distinct()
         .coalesce(4) // eval-suite-sized: a handful of files
-        .write.mode("overwrite").parquet(tmp.toString)
-      IndexCommit.recordSchemas(spark, tmp.toString, Seq(IndexCommit.Root))
+        .write.mode("overwrite").parquet(tmp)
     }
-    path
-  }
 
   /** Q — `pipeline_e2e_refresh`. Stage numbering matches the metric
     * rows; every count is over the batch's docs only.

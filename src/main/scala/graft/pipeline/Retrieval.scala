@@ -205,18 +205,6 @@ object Retrieval {
 
   // ------------------------------------------------- persisted index
 
-  /** Index location, keyed by corpus dir + bucket count + corpus content
-    * fingerprint (via [[Dedup.docsStats]]) so a regenerated corpus
-    * rebuilds instead of silently reusing a stale index.
-    */
-  def indexPath(spark: SparkSession, dir: String): String = {
-    val (rows, fp) = Dedup.docsStats(spark, dir)
-    // p1 = positional-postings layout generation: a committed pre-positions
-    // index at the old path must not be silently reused by phrase probes
-    "/tmp/graft_bm25_index/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + s"_p1_t${TermBuckets}_n${rows}_f$fp"
-  }
-
   /** Bucket manifest (`_postings`): one `tb` line per non-empty bucket —
     * the probe's ONLY pruning input, never the filesystem (the
     * [[Dedup.ManifestFile]] object-store contract: a metastore stand-in
@@ -230,20 +218,16 @@ object Retrieval {
   private val TotalsKeys = Seq("n_docs", "total_tokens")
 
   private[pipeline] def writeTbManifest(spark: SparkSession, root: String,
-      tbs: Set[Int], totals: (Long, Long)): Unit = {
-    val (fs, r) = IndexCommit.fsOf(spark, root)
-    IndexCommit.writeLines(fs, new org.apache.hadoop.fs.Path(r, ManifestFile),
+      tbs: Set[Int], totals: (Long, Long)): Unit =
+    IndexCommit.writeManifest(spark, root, ManifestFile,
       tbs.toSeq.sorted.map(_.toString) ++
         TotalsKeys.zip(Seq(totals._1, totals._2)).map { case (k, v) => s"$k=$v" })
-  }
 
   /** The manifest's lines; fails loud when absent ([[IndexCommit.readLines]]). */
-  private def manifestLines(spark: SparkSession, root: String): Seq[String] = {
-    val (fs, r) = IndexCommit.fsOf(spark, root)
-    IndexCommit.readLines(fs, new org.apache.hadoop.fs.Path(r, ManifestFile),
+  private def manifestLines(spark: SparkSession, root: String): Seq[String] =
+    IndexCommit.readManifest(spark, root, ManifestFile,
       s"no $ManifestFile manifest at $root — index was not built by " +
         "ensureBm25Index (or predates the manifest); rebuild the index")
-  }
 
   def readTbManifest(spark: SparkSession, root: String): Set[Int] =
     manifestLines(spark, root).filterNot(_.contains('=')).map(_.toInt).toSet
@@ -280,33 +264,26 @@ object Retrieval {
 
   /** Build-once: the persisted inverted index of the HISTORICAL corpus
     * split (`doc_id % 4 != 0`, the [[Dedup.ensureMinhashIndex]]
-    * convention). Two artifacts plus the manifest and schema record:
+    * convention), at its [[IndexCommit.root]] keyed by the term-bucket
+    * count (`p1` = the positional-postings layout generation, so a
+    * pre-positions index is never reused by phrase probes). Three
+    * artifacts plus the manifest, published by [[IndexCommit.publish]]:
     *
     *  - `postings/tb=<n>/` — (term, doc_id, tf, dl, ver) rows partitioned
     *    by term bucket, term-sorted inside each file;
     *  - `stats/tb=<n>/`   — (term, df, ver) bucketed identically, so an
     *    append recomputes df for exactly the touched buckets;
+    *  - `blockmax/tb=<n>/` — the block-max sidecar ([[BlockDocs]]);
     *  - `_postings`       — the bucket manifest the pruned probe reads,
     *    with the corpus-global (n_docs, total_tokens) idf/avgdl inputs,
     *    which every append must update and no bucket-local rewrite can
-    *    carry;
-    *  - [[IndexCommit.SchemaFile]] — both artifacts' schemas.
-    *
-    * All existence checks via the Hadoop FS API (object-store-portable);
-    * an index missing any artifact is treated as uncommitted and rebuilt.
+    *    carry.
     */
-  def ensureBm25Index(spark: SparkSession, dir: String): String = {
-    val root = indexPath(spark, dir)
-    val (fs, rootP) = IndexCommit.fsOf(spark, root)
-    def committed(r: org.apache.hadoop.fs.Path) = {
-      def ok(rel: String) =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/$rel"))
-      ok("postings/_SUCCESS") && ok("stats/_SUCCESS") && ok(ManifestFile) &&
-        IndexCommit.recorded(fs, r, "stats")
-    }
-    // build into a temp sibling, publish with ONE atomic rename — racing
-    // processes can no longer clobber each other mid-build (IndexCommit)
-    IndexCommit.ensure(fs, rootP)(committed) { tmp =>
+  def ensureBm25Index(spark: SparkSession, dir: String): String =
+    IndexCommit.publish(spark,
+      IndexCommit.root("bm25_index", dir, s"_p1_t$TermBuckets",
+        Dedup.docsStats(spark, dir)),
+      Seq("postings", "stats", "blockmax"), Seq(ManifestFile)) { tmp =>
       val hist = Tables.load(spark, dir, "documents")
         .where(s"doc_id % ${Dedup.IncrSplitMod} <> 0")
       val postings = postingsOf(hist)
@@ -324,14 +301,16 @@ object Retrieval {
         .sortWithinPartitions("tb", "term")
         .write.mode("overwrite").partitionBy("tb")
         .parquet(s"$tmp/stats")
+      blockMaxOf(spark.read.parquet(s"$tmp/postings"), 0L)
+        .repartition(col("tb"))
+        .sortWithinPartitions("tb", "term", "blk")
+        .write.mode("overwrite").partitionBy("tb")
+        .parquet(s"$tmp/blockmax")
       val m = metaOf(hist).head()
       val tbs = spark.read.parquet(s"$tmp/postings")
         .select("tb").distinct().collect().map(_.getInt(0)).toSet
-      IndexCommit.recordSchemas(spark, tmp.toString, Seq("postings", "stats"))
-      writeTbManifest(spark, tmp.toString, tbs, (m.getLong(0), m.getLong(1)))
+      writeTbManifest(spark, tmp, tbs, (m.getLong(0), m.getLong(1)))
     }
-    root
-  }
 
   /** The build's driver-checkable surface: per-bucket totals of BOTH index
     * tables (terms, postings, tf mass from `postings`; df mass from
@@ -503,7 +482,7 @@ object Retrieval {
     */
   val BlockDocs = 64L
 
-  /** Build-or-reuse the `blockmax/` sidecar of an existing index — the
+  /** The `blockmax/` sidecar rows of `postings`, stamped `ver` — the
     * skip metadata of Block-Max WAND (Ding & Suel, SIGIR 2011)
     * re-expressed for set-at-a-time distributed search: per (term, block),
     * the tf MAXIMUM and dl MINIMUM over the block's postings. The tf
@@ -515,28 +494,16 @@ object Retrieval {
     * every append — are resolved at probe time from stats and the
     * committed totals, so the sidecar never goes stale the way a
     * materialized impact would. Bucketed by the same `tb` as postings:
-    * the probe's sidecar reads stay query-proportional.
+    * the probe's sidecar reads stay query-proportional. Built with the
+    * index ([[ensureBm25Index]]) and upserted per touched bucket by an
+    * append ([[blockMaxSidecar]]).
     */
-  def ensureBlockMax(spark: SparkSession, root: String): Unit = {
-    val (fs, r) = IndexCommit.fsOf(spark, root)
-    // committed = _SUCCESS present AND its schema recorded (the record is
-    // written after the sidecar, so a torn build is rebuilt)
-    val committed =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/blockmax/_SUCCESS")) &&
-        IndexCommit.recorded(fs, r, "blockmax")
-    if (!committed) {
-      IndexCommit.read(spark, root, "postings", None)
-        .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
-        .groupBy("term", "blk")
-        .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
-        .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(0L))
-        .repartition(col("tb"))
-        .sortWithinPartitions("tb", "term", "blk")
-        .write.mode("overwrite").partitionBy("tb")
-        .parquet(s"$root/blockmax")
-      IndexCommit.recordSchemas(spark, root, Seq("blockmax"))
-    }
-  }
+  private def blockMaxOf(postings: DataFrame, ver: Long): DataFrame =
+    postings
+      .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
+      .groupBy("term", "blk")
+      .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
+      .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(ver))
 
   /** Query-term stats with resolved idfq and inlined corpus globals —
     * the probe-time join of the pruned `stats` buckets against the
@@ -624,7 +591,6 @@ object Retrieval {
     * machinery actually dropping blocks, and equality holds either way.
     */
   def blockMaxTopK(spark: SparkSession, root: String): DataFrame = {
-    ensureBlockMax(spark, root)
     val touched = touchedBuckets(spark, root)
     val (nd, tt) = readTotals(spark, root)
     val survivors = blockSurvivors(spark, root).select("query_id", "blk")
@@ -662,10 +628,8 @@ object Retrieval {
     * prune the block under the new θ — breaks the hash.
     */
   def blockMaxAppend(spark: SparkSession, dir: String): DataFrame = {
-    val src = ensureBm25Index(spark, dir)
-    ensureBlockMax(spark, src)
-    blockMaxTopK(spark, appendWave(spark, dir, src, "bm25-bmappend",
-      blockMaxSidecar))
+    blockMaxTopK(spark, appendWave(spark, dir, ensureBm25Index(spark, dir),
+      "bm25-bmappend", blockMaxSidecar))
   }
 
   /** The [[appendWave]] sidecar that rebuilds the touched buckets'
@@ -673,11 +637,7 @@ object Retrieval {
     */
   private[pipeline] def blockMaxSidecar(merged: DataFrame, work: String): Unit =
     graft.streaming.Sinks.partitionedUpsertBatch(
-      merged
-        .selectExpr("term", s"doc_id div $BlockDocs AS blk", "tf", "dl")
-        .groupBy("term", "blk")
-        .agg(max("tf").as("max_tf"), min("dl").as("min_dl"))
-        .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L)),
+      blockMaxOf(merged, 1L),
       s"$work/blockmax",
       partitionCols = Seq("tb"), keyCols = Seq("term", "blk"),
       versionCols = Seq("ver"), sortCols = Seq("term", "blk"))
@@ -711,32 +671,25 @@ object Retrieval {
       "lang", "source", "n_chars")
   }
 
-  /** Stage a derived corpus ONCE at a stable content-keyed path (source
-    * fingerprint via [[Dedup.docsStats]], so a regenerated source corpus
-    * re-derives instead of silently reusing) — the derivation is
-    * deterministic, so the staged table AND the index the real builder
-    * commits over it are reusable across invocations (a fresh temp dir
-    * per call was re-deriving and REBUILDING the whole index every run:
-    * 6 s/invocation at sf0.001, all build). Atomic [[IndexCommit]]
-    * publication, same cross-process safety as the indexes themselves.
-    * The entries only PROBE the staged corpus/index, so sharing is safe.
+  /** Stage a derived corpus ONCE at its [[IndexCommit.root]] (keyed by
+    * the SOURCE corpus's content, so a regenerated source re-derives
+    * instead of silently reusing) — the derivation is deterministic, so
+    * the staged table AND the index the real builder commits over it are
+    * reusable across invocations (a fresh temp dir per call was
+    * re-deriving and REBUILDING the whole index every run: 6 s/invocation
+    * at sf0.001, all build). The entries only PROBE the staged
+    * corpus/index, so sharing is safe.
     */
   private def stagedDerived(spark: SparkSession, dir: String, tag: String)(
-      derive: => DataFrame): String = {
-    val (rows, fp) = Dedup.docsStats(spark, dir)
-    val d = s"/tmp/graft_bm25_$tag/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + s"_n${rows}_f$fp"
-    val (fs, root) = IndexCommit.fsOf(spark, d)
-    IndexCommit.ensure(fs, root)(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$r/documents.parquet/_SUCCESS"))) {
-      tmp =>
-        derive.coalesce(1).write.mode("overwrite")
-          .parquet(s"$tmp/documents.parquet")
+      derive: => DataFrame): String =
+    IndexCommit.publish(spark,
+      IndexCommit.root(s"bm25_$tag", dir, "", Dedup.docsStats(spark, dir)),
+      Seq("documents.parquet")) { tmp =>
+      derive.coalesce(1).write.mode("overwrite")
+        .parquet(s"$tmp/documents.parquet")
     }
-    d
-  }
 
-  private def skewedStage(spark: SparkSession, dir: String): String =
+  private[pipeline] def skewedStage(spark: SparkSession, dir: String): String =
     stagedDerived(spark, dir, "skew")(skewedDocs(spark, dir))
 
   /** Committed skewed-surface gate (round-12 verdict item 5): the
@@ -754,7 +707,6 @@ object Retrieval {
     */
   def blockMaxSkewed(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureBm25Index(spark, skewedStage(spark, dir))
-    ensureBlockMax(spark, root)
     val touched = touchedBuckets(spark, root)
     val cand = prunedRead(spark, root, "blockmax", touched)
       .join(broadcast(queryTerms(spark)), "term")
@@ -906,7 +858,7 @@ object Retrieval {
       s"concat(text, ${wandMarkerCase("div", (a, m) => s"pmod($a, $m)")}) AS text",
       "lang", "source", "n_chars")
 
-  private def wandStage(spark: SparkSession, dir: String): String =
+  private[pipeline] def wandStage(spark: SparkSession, dir: String): String =
     stagedDerived(spark, dir, "wand")(wandDocs(spark, dir))
 
   /** Block-Max WAND with ADAPTIVE θ (Ding & Suel 2011, the document-at-
@@ -936,7 +888,6 @@ object Retrieval {
   private[graft] def wandTopK(spark: SparkSession, root: String)
       : (Seq[(Long, Long, Long, Long)], Map[Long, (Long, Long, Long)]) = {
     import spark.implicits._
-    ensureBlockMax(spark, root)
     val pairs = wandPairs
     val touched = touchedBuckets(spark, root, pairs)
     val (nd, tt) = readTotals(spark, root)

@@ -482,7 +482,7 @@ object Similarity {
       math.min(NCentroidsMax.toLong, corpusRows / ListTarget)).toInt
 
   def nCentroids(spark: SparkSession, dir: String): Int =
-    nCentroids(corpusStats(spark, dir)._1)
+    nCentroids(corpusStats(spark, dir).rows)
 
   /** The same derivation as a DuckDB scalar expression over the `emb` CTE
     * (integer division, like the adaptive-rerankK subquery) — the oracle
@@ -493,26 +493,15 @@ object Similarity {
     s"greatest($NCentroidsMin, least($NCentroidsMax, " +
       s"(SELECT count(*) // $ListTarget FROM emb)))"
 
-  /** Memoized per-corpus stats from ONE aggregate pass: (row count,
-    * max vec_id, content fingerprint). The count drives [[nCentroids]]/[[rerankK]]
-    * without re-running a corpus scan every time a plan is constructed
-    * (round-11 advice: `rerankK(emb.count())` embedded an eager count job
-    * into every ivfPqTopK plan build); the fingerprint — an order-free
-    * hash-sum over (vec_id, embedding) — keys [[IvfIndex.path]] so a
-    * regenerated corpus at the same path can never silently reuse a stale
-    * persisted index (the round-10 hazard).
+  /** The embeddings' content key over (vec_id, embedding), from the
+    * memoized [[IndexCommit.content]]: the count drives
+    * [[nCentroids]]/[[rerankK]] without an eager count job in every plan
+    * build (round-11 advice), the max vec_id numbers appended vectors, and
+    * the fingerprint keys [[IvfIndex.path]] so a regenerated corpus at the
+    * same path never silently reuses a stale persisted index.
     */
-  private val corpusStatsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Long)]
-
-  def corpusStats(spark: SparkSession, dir: String): (Long, Long, Long) =
-    corpusStatsCache.getOrElseUpdate(dir, {
-      val r = Tables.load(spark, dir, "embeddings")
-        .agg(count(lit(1)), max("vec_id"),
-          sum(expr("CAST(pmod(hash(vec_id, embedding), 1000003) AS BIGINT)")))
-        .head()
-      (r.getLong(0), r.getLong(1), math.floorMod(r.getLong(2), 1000000007L))
-    })
+  def corpusStats(spark: SparkSession, dir: String): IndexCommit.Content =
+    IndexCommit.content(spark, dir, "embeddings", "vec_id", "embedding")
 
   val NProbe = 4
 
@@ -583,7 +572,7 @@ object Similarity {
   def ivf2TopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
     val nC = nCentroids(spark, dir)
-    val l1 = l1Cells(corpusStats(spark, dir)._1)
+    val l1 = l1Cells(corpusStats(spark, dir).rows)
     val cent = emb.where(s"vec_id < $nC")
       .selectExpr("vec_id AS c_id", "emb AS c_emb", "nrm AS c_nrm")
     val coarse = emb.where(s"vec_id < $l1")
@@ -1069,7 +1058,7 @@ object Similarity {
            |  / (q_nrm * sqrt(CAST(rq AS DOUBLE) / $QScale.0)), 6) AS asim""".stripMargin)
       .withColumn("ark", expr(
         "row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, vec_id ASC)"))
-      .where(s"ark <= ${rerankK(corpusStats(spark, dir)._1)}")
+      .where(s"ark <= ${rerankK(corpusStats(spark, dir).rows)}")
     rankTopK(adc
       .join(emb.select("vec_id", "emb", "nrm"), "vec_id")
       .join(broadcast(emb.where(s"vec_id < $QuerySetSize")
@@ -1191,7 +1180,7 @@ object Similarity {
            |  / (q_nrm * sqrt(CAST(rq AS DOUBLE) / $QScale.0)), 6) AS adc_sim""".stripMargin)
       .withColumn("ark", expr(
         "row_number() OVER (PARTITION BY q_id ORDER BY adc_sim DESC, vec_id ASC)"))
-      .where(s"ark <= ${rerankK(corpusStats(spark, dir)._1)}")
+      .where(s"ark <= ${rerankK(corpusStats(spark, dir).rows)}")
     // exact re-rank of the rerankK survivors (the only full-vector reads)
     val qv = emb.where(s"vec_id < $QuerySetSize")
       .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
@@ -1879,7 +1868,7 @@ object Similarity {
     val probes = IvfIndex.probesOf(queries, m.cent)
     IvfIndex.topK(IvfIndex.Sq8,
       IvfIndex.Sq8.encode(nearestLists(emb, m.cent, "vec_id", 1), m),
-      probes, queries, m, emb, rerankK(corpusStats(spark, dir)._1))
+      probes, queries, m, emb, rerankK(corpusStats(spark, dir).rows))
   }
 
   val ivfSq8TopKSql: String =
@@ -2150,7 +2139,7 @@ object Similarity {
 
   private def emb10(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(spark)
-    val vBase = corpusStats(spark, dir)._2 + 1
+    val vBase = corpusStats(spark, dir).maxKey + 1
     // widen the single-file base scan BEFORE the ×10 explode + per-row
     // vector derivation (BatchSizing: row-derived floor, no-op on a wide
     // scan): the caller caches this frame, and an unwidened cache holds
@@ -2159,7 +2148,7 @@ object Similarity {
     // jobs (Diag: seven ~1.3 s one-task jobs at sf0.1)
     graft.BatchSizing.widen(
         Tables.load(spark, dir, "embeddings"),
-        corpusStats(spark, dir)._1)
+        corpusStats(spark, dir).rows)
       .selectExpr("vec_id AS v0",
         s"explode(sequence(0, ${X10Copies - 1})) AS c",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS e0")
@@ -2205,7 +2194,7 @@ object Similarity {
     */
   def recallGateX10(spark: SparkSession, dir: String): DataFrame = {
     val emb = emb10(spark, dir).cache()
-    val nc = nCentroids(corpusStats(spark, dir)._1 * X10Copies)
+    val nc = nCentroids(corpusStats(spark, dir).rows * X10Copies)
     def topk(cand: DataFrame): DataFrame = cand
       .withColumn("rk", expr(
         "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
@@ -2229,7 +2218,7 @@ object Similarity {
     // the same assignment, integer-dot probe, adaptive exact re-rank —
     // recall-at-scale of the quantized index is a gate too, not only the
     // float layout's (round-13, completing verdict item 4's evidence)
-    val rerank = rerankK(corpusStats(spark, dir)._1 * X10Copies)
+    val rerank = rerankK(corpusStats(spark, dir).rows * X10Copies)
     def layoutTopK(layout: IvfIndex.Layout, m: IvfIndex.Model): DataFrame =
       IvfIndex.topK(layout, layout.encode(assigned, m), probes, qv, m, emb,
         rerank).select("q_id", "vec_id")

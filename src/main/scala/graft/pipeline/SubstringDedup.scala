@@ -62,7 +62,7 @@ object SubstringDedup {
     // every downstream agg/window is keyed (order-free). No-op on an
     // already-wide scan (BatchSizing).
     val grams = graft.BatchSizing
-      .widen(docs, Dedup.docsStats(spark, dir)._1)
+      .widen(docs, Dedup.docsStats(spark, dir).rows)
       .selectExpr("doc_id",
         s"posexplode(graft_gram_fps(text, $GramLen)) AS (p0, g)")
       .selectExpr("doc_id", "p0 + 1 AS pos", "g")

@@ -84,7 +84,7 @@ object TextAnalysis {
     // (row-local, otherwise one serial task; BatchSizing — no-op on a
     // wide scan). Pure projection + final sort: partition-order-free.
     graft.BatchSizing.widen(Tables.load(spark, dir, "documents"),
-        graft.pipeline.Dedup.docsStats(spark, dir)._1)
+        graft.pipeline.Dedup.docsStats(spark, dir).rows)
       .selectExpr(Seq("doc_id", "lang") ++ counts: _*)
       .selectExpr("doc_id", "lang", "c_en", "c_de", "c_es", "c_fr", pred)
       .orderBy("doc_id")
@@ -298,7 +298,7 @@ object TextAnalysis {
     // an already-wide scan (BatchSizing).
     val docs = graft.BatchSizing.widen(
       Tables.load(spark, dir, "documents").where("n_chars >= 3"),
-      graft.pipeline.Dedup.docsStats(spark, dir)._1)
+      graft.pipeline.Dedup.docsStats(spark, dir).rows)
     // trigrams ride as ONE BIGINT each (ASCII codepoints packed base-256 —
     // injective, so counts are identical to string trigrams) and the
     // prefix bigram is `tri div 256`: integer shuffle/join keys instead of

@@ -352,21 +352,24 @@ object FadsStream {
     graft.Tables.load(spark, dir, "events")
       .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
 
-  /** An events frame staged once as a paced replay for [[timedRun]]. */
-  final case class StagedEvents(dir: String, schema: StructType, rows: Long)
-
-  /** Stage `events` in (ts, event_id) order on the session scratch tier,
-    * in chunk files of max(5,000, rows / 10) rows, one per trigger. The
-    * 5k floor amortizes the per-trigger fixed cost that dominated 1k-row
+  /** An events frame staged once as a paced replay for [[timedRun]]: in
+    * chunk files of max(5,000, rows / 10) rows, one per trigger. The 5k
+    * floor amortizes the per-trigger fixed cost that dominated 1k-row
     * triggers at small SF (NOTES_r2); it stays far under
     * [[FadsProcessor.DefaultMaxBatchRows]].
     */
+  final case class StagedEvents(dir: String, schema: StructType, rows: Long) {
+    def chunkRows: Long = math.max(5000L, rows / 10)
+    def chunks: Long = (rows + chunkRows - 1) / chunkRows
+  }
+
+  /** Stage `events` in (ts, event_id) order on the session scratch tier. */
   def stageEvents(events: DataFrame): StagedEvents = {
-    val rows = events.count()
-    val dir = graft.TempDirs.scoped("fads-stage")
-    PacedReplay.stage(events, Seq("ts", "event_id"),
-      math.max(5000L, rows / 10).toInt, dir)
-    StagedEvents(dir, events.schema, rows)
+    val staged = StagedEvents(graft.TempDirs.scoped("fads-stage"),
+      events.schema, events.count())
+    PacedReplay.stage(events, Seq("ts", "event_id"), staged.chunkRows.toInt,
+      staged.dir)
+    staged
   }
 
   /** One timed run: wall seconds from wiring and `start()` through

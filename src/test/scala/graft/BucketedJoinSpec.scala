@@ -29,10 +29,7 @@ class BucketedJoinSpec extends AnyFunSuite with SparkSpec {
     Seq("orders", "lineitem").foreach { t =>
       val smj = ops.BucketedJoin.joinFrame(spark, dir) // forces staging
       smj.queryExecution // no-op touch
-      val root = new java.io.File("/tmp/graft_bucketed")
-        .listFiles().filter(_.getName.startsWith(dir
-          .replaceAll("[^A-Za-z0-9.]", "_")))
-        .maxBy(_.lastModified())
+      val root = new java.io.File(ops.BucketedJoin.root(spark, dir))
       val files = new java.io.File(root, t).listFiles()
         .filter(f => f.getName.startsWith("part-"))
       assert(files.length == ops.BucketedJoin.Buckets,

@@ -58,25 +58,30 @@ class SessionSpec extends AnyFunSuite {
     assert(Session.onRam(Session.Probe("tmpfs", 0.1)))
   }
 
-  /** `path:line` of every code line under `root` that calls the session
-    * builder. String literals are blanked before matching, so the needle
-    * below and the test names that quote it are not sites.
+  /** `path:line` of every code line under `root` that holds `needle`;
+    * comment lines are skipped. Unless `inStrings`, string literals are
+    * blanked before matching, so the needles below and the test names that
+    * quote them are not sites.
     */
-  private def builderSites(root: String): List[String] = {
-    val needle = "SparkSession.builder()"
+  private def sites(root: String, needle: String,
+      inStrings: Boolean = false): List[String] = {
     val dir = Paths.get(root)
     assert(Files.isDirectory(dir))
     val walk = Files.walk(dir)
     try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sorted
       .flatMap { f =>
         Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (l, i) if l.replaceAll("\"[^\"]*\"", "\"\"").contains(needle) && {
+          case (l, i) if (if (inStrings) l else l.replaceAll("\"[^\"]*\"", "\"\""))
+                .contains(needle) && {
                 val t = l.trim
                 !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
               } => s"${dir.relativize(f)}:${i + 1}"
         }
       } finally walk.close()
   }
+
+  private def builderSites(root: String): List[String] =
+    sites(root, "SparkSession.builder()")
 
   test("Session.scala holds the only SparkSession.builder() call under src/main") {
     val sites = builderSites("src/main/scala")
@@ -90,5 +95,30 @@ class SessionSpec extends AnyFunSuite {
     assert(sites.size == 1 &&
       sites.head.startsWith("graft/functions/VectorExpressionsSpec.scala:"),
       s"builder sites: $sites")
+  }
+
+  test("under src/main only IndexCommit calls IndexCommit.ensure and recordSchemas") {
+    val calls = Seq("IndexCommit.ensure", "IndexCommit.recordSchemas")
+      .flatMap(sites("src/main/scala", _))
+      .filterNot(_.startsWith("graft/pipeline/IndexCommit.scala:"))
+    assert(calls.isEmpty, s"commit calls outside IndexCommit: $calls")
+  }
+
+  test("the /tmp index base is written only in IndexCommit") {
+    val bases = sites("src/main/scala", "\"/tmp", inStrings = true)
+    assert(bases.size == 1 && bases.head.startsWith("graft/pipeline/IndexCommit.scala:"),
+      s"/tmp literals: $bases")
+  }
+
+  test("Files.createTempDirectory is called only by TempDirs, Session and " +
+    "Bench's disk checkpoint, and by no spec") {
+    val needle = "Files.createTempDirectory"
+    val (bench, others) = sites("src/main/scala", needle)
+      .partition(_.startsWith("graft/Bench.scala:"))
+    assert(bench.size == 1, s"Bench temp dirs: $bench")
+    assert(others.forall(s => s.startsWith("graft/TempDirs.scala:") ||
+      s.startsWith("graft/Session.scala:")), s"temp dirs outside TempDirs: $others")
+    val specs = sites("src/test/scala", needle)
+    assert(specs.isEmpty, s"specs must use TempDirs.scoped: $specs")
   }
 }

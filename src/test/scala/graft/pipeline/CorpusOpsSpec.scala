@@ -214,6 +214,24 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     assert(f.lastModified() == before)
   }
 
+  test("an aggregate-MV root holding only _SUCCESS is rebuilt, not reused") {
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val root = CorpusOps.ensureAggMv(spark, dir)
+    val (fs, p) = IndexCommit.fsOf(spark, root)
+    fs.delete(p, true)
+    fs.create(new org.apache.hadoop.fs.Path(p, "_SUCCESS")).close()
+    assert(CorpusOps.ensureAggMv(spark, dir) == root)
+    assert(IndexCommit.schemas(spark, root).keySet == Set(IndexCommit.Root))
+    val got = spark.read.parquet(root).select("source", "lang", "n_docs", "sum_chars")
+      .orderBy("source", "lang").collect().map(_.toSeq)
+    val want = graft.Tables.load(spark, dir, "documents")
+      .where(s"doc_id % ${Dedup.IncrSplitMod} <> 0")
+      .groupBy("source", "lang")
+      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
+      .orderBy("source", "lang").collect().map(_.toSeq)
+    assert(got.toSeq == want.toSeq, "the rebuilt view must hold the historical rollup")
+  }
+
   test("fuzzyMatch: blocking finds every probe's source word") {
     val rows = CorpusOps.fuzzyMatch(spark, dir).collect()
     assert(rows.nonEmpty)

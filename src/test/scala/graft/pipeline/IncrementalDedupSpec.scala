@@ -158,7 +158,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSpec {
     // spec pins one explicitly (the bucket count rides in the path, which
     // is the layout contract appendInplaceCore reads back)
     val specBuckets = 64
-    val aug = Files.createTempDirectory("inplace-spec").toString +
+    val aug = graft.TempDirs.scoped("inplace-spec") +
       s"/index_b$specBuckets"
     spark.read.parquet(path)
       .withColumn("bhp", org.apache.spark.sql.functions.expr(

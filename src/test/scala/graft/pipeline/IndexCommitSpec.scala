@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class IndexCommitSpec extends AnyFunSuite {
 
   private def freshRoot(tag: String): Path = {
-    val d = Files.createTempDirectory(s"index-commit-$tag").toString
+    val d = graft.TempDirs.scoped(s"index-commit-$tag")
     new Path(d, "idx")
   }
 

@@ -14,8 +14,9 @@ import graft.{SparkEntry, SparkSpec, Tables, TempDirs}
 /** The one pruned reader of committed indexes ([[IndexCommit.read]]) and
   * what it buys: every committed artifact's schema is recorded exactly as
   * inference returns it, before and after an append; probes plan with no
-  * schema-inference job; an empty touched set lists nothing; an index
-  * without the record is rebuilt.
+  * schema-inference job; an empty touched set lists nothing; in every
+  * family an index lacking its record, an artifact's `_SUCCESS` or a
+  * manifest is rebuilt ([[IndexCommit.publish]]).
   */
 class IndexReaderSpec extends AnyFunSuite with SparkSpec {
 
@@ -46,7 +47,6 @@ class IndexReaderSpec extends AnyFunSuite with SparkSpec {
 
   test("BM25: recorded schemas equal inference after build and after an append") {
     val root = Retrieval.ensureBm25Index(spark, dir)
-    Retrieval.ensureBlockMax(spark, root)
     assert(IndexCommit.schemas(spark, root).keySet ==
       Set("postings", "stats", "blockmax"))
     assertParity(root, "bm25 build")
@@ -82,20 +82,47 @@ class IndexReaderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("an index without its schema record counts as uncommitted and is rebuilt") {
-    val roots = Seq[(String, () => String)](
-      "bm25" -> (() => Retrieval.ensureBm25Index(spark, dir)),
-      "minhash" -> (() => Dedup.ensureMinhashIndex(spark, dir)),
-      "line" -> (() => LineDedup.ensureLineIndex(spark, dir)),
-      "ivf" -> (() => IvfIndex.ensure(spark, dir, IvfIndex.Float)))
-    roots.foreach { case (what, ensure) =>
+  /** Every persisted index family: its build-or-reuse call, the artifacts
+    * its committed rule must cover (the first is the one whose `_SUCCESS`
+    * the rebuild case removes) and its manifest files.
+    */
+  private def families: Seq[(String, () => String, Seq[String], Seq[String])] = {
+    import IndexCommit.Root
+    Seq(
+      ("bm25", () => Retrieval.ensureBm25Index(spark, dir),
+        Seq("blockmax", "postings", "stats"), Seq(Retrieval.ManifestFile)),
+      ("bm25 skew corpus", () => Retrieval.skewedStage(spark, dir),
+        Seq("documents.parquet"), Nil),
+      ("bm25 wand corpus", () => Retrieval.wandStage(spark, dir),
+        Seq("documents.parquet"), Nil),
+      ("minhash", () => Dedup.ensureMinhashIndex(spark, dir),
+        Seq(Root), Seq(Dedup.ManifestFile)),
+      ("line", () => LineDedup.ensureLineIndex(spark, dir),
+        Seq(Root), Seq(Dedup.ManifestFile)),
+      ("eval-gram", () => Refresh.ensureEvalGramIndex(spark, dir), Seq(Root), Nil),
+      ("aggregate MV", () => CorpusOps.ensureAggMv(spark, dir), Seq(Root), Nil),
+      ("bucketed", () => graft.ops.BucketedJoin.stagedRoot(spark, dir),
+        Seq("orders", "lineitem"), Nil)) ++
+      ivfLayouts.map(l => (s"ivf $l", () => IvfIndex.ensure(spark, dir, l),
+        Seq(IvfIndex.CodebookDir, Root) ++ l.artifacts,
+        Seq(IvfIndex.ListsManifestFile)))
+  }
+
+  test("an index lacking its schema record, an artifact's _SUCCESS or a " +
+    "manifest counts as uncommitted and is rebuilt, in every family") {
+    families.foreach { case (what, ensure, artifacts, manifests) =>
       val root = ensure()
-      val (fs, r) = IndexCommit.fsOf(spark, root)
-      val record = new Path(r, IndexCommit.SchemaFile)
-      assert(fs.delete(record, false), s"$what: no record to remove")
-      assert(ensure() == root)
-      assert(fs.exists(record), s"$what: rebuild did not record schemas")
-      assertParity(root, s"$what rebuild")
+      val success =
+        if (artifacts.head == IndexCommit.Root) "_SUCCESS" else s"${artifacts.head}/_SUCCESS"
+      (IndexCommit.SchemaFile +: success +: manifests).foreach { rel =>
+        val (fs, p) = IndexCommit.fsOf(spark, s"$root/$rel")
+        assert(fs.delete(p, false), s"$what: no $rel to remove")
+        assert(ensure() == root)
+        assert(fs.exists(p), s"$what: the rebuild did not restore $rel")
+        assert(IndexCommit.schemas(spark, root).keySet == artifacts.toSet,
+          s"$what: artifacts recorded by the rebuild after removing $rel")
+        assertParity(root, s"$what rebuild after removing $rel")
+      }
     }
   }
 

@@ -291,7 +291,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     // sequence(2, size(t)) DESCENDS for size(t)=1 and element_at(t, 0)
     // throws under ANSI mode without the size guard (code review r6)
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("wide-docs").toString
+    val tmp = graft.TempDirs.scoped("wide-docs")
     Seq((0L, "lonely"), (1L, ""), (2L, "two words"),
         (3L, "a b c d e f g h"), (4L, "a b c d e f g h"))
       .toDF("doc_id", "text")

@@ -13,6 +13,36 @@ import graft.SparkSpec
   */
 class RetrievalBlockMaxSpec extends AnyFunSuite with SparkSpec {
 
+  /** (relative path, size, modification time) of every file under `root`. */
+  private def fileState(root: String): Set[(String, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try walk.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => (base.relativize(p).toString, java.nio.file.Files.size(p),
+        java.nio.file.Files.getLastModifiedTime(p).toMillis))
+      .toSet
+    finally walk.close()
+  }
+
+  test("block-max and WAND probes leave a freshly published index untouched") {
+    // a private copy of the corpus, so the index under test is built now
+    val dir = graft.TempDirs.scoped("bm25-published")
+    graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+      .write.parquet(s"$dir/documents.parquet")
+    val root = Retrieval.ensureBm25Index(spark, dir)
+    try {
+      val published = fileState(root)
+      Retrieval.blockMaxTopK(spark, root).collect()
+      Retrieval.wandTopK(spark, root)
+      assert(fileState(root) == published,
+        "a probe wrote into the published index root")
+    } finally {
+      val (fs, p) = IndexCommit.fsOf(spark, root)
+      fs.delete(p, true)
+    }
+  }
+
   test("block-max probe equals the unpruned probe on testdata") {
     val root = Retrieval.ensureBm25Index(spark, "/root/testdata/sf0.001")
     val pruned = Retrieval.prunedTopK(spark, root).collect().map(_.toSeq)
@@ -50,7 +80,6 @@ class RetrievalBlockMaxSpec extends AnyFunSuite with SparkSpec {
   test("on a skewed corpus, blocks are pruned and the result is unchanged") {
     val dir = skewedCorpus()
     val root = Retrieval.ensureBm25Index(spark, dir)
-    Retrieval.ensureBlockMax(spark, root)
 
     // pruning accounting: candidate (query, blk) pairs before the θ cut
     // vs the survivors the probe admits
@@ -91,7 +120,6 @@ class RetrievalBlockMaxSpec extends AnyFunSuite with SparkSpec {
     Retrieval.skewedDocs(spark, dir).coalesce(1).write.mode("overwrite")
       .parquet(s"$skDir/documents.parquet")
     val root = Retrieval.ensureBm25Index(spark, skDir)
-    Retrieval.ensureBlockMax(spark, root)
     val unpruned = Retrieval.prunedTopK(spark, root).collect().map(_.toSeq)
     val bm = Retrieval.blockMaxTopK(spark, root).collect().map(_.toSeq)
     assert(bm.toSeq == unpruned.toSeq,

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -16,7 +14,7 @@ import graft.SparkSpec
 class PartitionPruningSpec extends AnyFunSuite with SparkSpec {
 
   test("write partitioned by event_type; filter prunes to one directory") {
-    val dir = Files.createTempDirectory("part-out").toString + "/events_by_type"
+    val dir = graft.TempDirs.scoped("part-out") + "/events_by_type"
     graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
       .write.partitionBy("event_type").parquet(dir)
 

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
-import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +14,7 @@ import graft.SparkSpec
 class TaxiRideSourceSpec extends AnyFunSuite with SparkSpec {
 
   private def writeGz(lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory("taxi").toFile
+    val dir = new java.io.File(graft.TempDirs.scoped("taxi"))
     val f = new java.io.File(dir, "rides.gz")
     val w = new BufferedWriter(new OutputStreamWriter(
       new GZIPOutputStream(new FileOutputStream(f)), "UTF-8"))

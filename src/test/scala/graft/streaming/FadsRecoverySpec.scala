@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,7 +26,7 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = loadEvents().take(400)
     val stream = MemoryStream[Event]
-    val ckpt = Files.createTempDirectory("fads-shard-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("fads-shard-ckpt")
     // 4 shards; a single drain sentinel would reach only ITS key group —
     // the idle timer is the correct drain for sharded streams
     implicit val genEnc = org.apache.spark.sql.Encoders.product[GenEvent]
@@ -64,12 +62,12 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
 
     // replayable source: 10 ts-ordered chunk files (single-digit chunk ids
     // keep lexicographic discovery order == replay order)
-    val stageDir = Files.createTempDirectory("fads-recover-stage").toString
+    val stageDir = graft.TempDirs.scoped("fads-recover-stage")
     PacedReplay.stage(events, Seq("ts", "event_id"), rowsPerFile = 100, stageDir)
-    val ckpt = Files.createTempDirectory("fads-recover-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("fads-recover-ckpt")
     // the memory sink cannot recover from a checkpoint; the parquet file
     // sink is exactly-once across restarts (commit log in _spark_metadata)
-    val outDir = Files.createTempDirectory("fads-recover-out").toString
+    val outDir = graft.TempDirs.scoped("fads-recover-out")
 
     def startQuery() = FadsStream.anonymize(
         PacedReplay.stream(spark, stageDir, events.schema, filesPerTrigger = 1)
@@ -132,13 +130,13 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = loadEvents()
-    val path = Files.createTempDirectory("upsert-crash").toString + "/snap"
+    val path = graft.TempDirs.scoped("upsert-crash") + "/snap"
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     def runBatch(events: Seq[Event]): Unit = {
       val src = MemoryStream[Event]
-      val ckpt = Files.createTempDirectory("upsert-crash-ckpt").toString
+      val ckpt = graft.TempDirs.scoped("upsert-crash-ckpt")
       val q = Sinks.upsertParquet(src.toDS().toDF(), path, ckpt,
         keyCols = Seq("event_id"), versionCols = Seq("ts", "event_id")).start()
       try {
@@ -191,10 +189,10 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
     val events = Tables.load(spark, sfDir, "events")
       .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
 
-    val stageDir = Files.createTempDirectory("fads-region-stage").toString
+    val stageDir = graft.TempDirs.scoped("fads-region-stage")
     PacedReplay.stage(events, Seq("ts", "event_id"), rowsPerFile = 100, stageDir)
-    val ckpt = Files.createTempDirectory("fads-region-ckpt").toString
-    val outDir = Files.createTempDirectory("fads-region-out").toString
+    val ckpt = graft.TempDirs.scoped("fads-region-ckpt")
+    val outDir = graft.TempDirs.scoped("fads-region-out")
     val cfg = FadsStream.regionCfg(spark, sfDir)
 
     def startQuery() = FadsStream.anonymizeSharded(

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,7 +23,7 @@ class FadsStreamSpec extends AnyFunSuite with SparkSpec {
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[Event]
-    val ckpt = Files.createTempDirectory("fads-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("fads-ckpt")
     val query = FadsStream.anonymize(stream.toDS(), SparkEntry.eventsFadsConfig)
       .writeStream.format("memory").queryName("gen").outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -70,7 +68,7 @@ class FadsStreamSpec extends AnyFunSuite with SparkSpec {
     def region(v: Double): Long = math.min((v / 128.0).floor.toLong, 3L)
 
     val stream = MemoryStream[Event]
-    val ckpt = Files.createTempDirectory("fads-shard-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("fads-shard-ckpt")
     val query = FadsStream.anonymizeSharded(stream.toDS(), cfg,
         shardOf = e => if (e.event_id < 0) e.user_id else region(e.value))
       .writeStream.format("memory").queryName("gen_shard").outputMode("append")
@@ -132,7 +130,7 @@ class FadsStreamSpec extends AnyFunSuite with SparkSpec {
       .as[Event].collect().sortBy(e => (e.ts, e.event_id)).take(100)
 
     val stream = MemoryStream[Event]
-    val ckpt = java.nio.file.Files.createTempDirectory("fads-timer-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("fads-timer-ckpt")
     val query = FadsStream.anonymize(stream.toDS(), SparkEntry.eventsFadsConfig,
         drainIdleMs = 500L)
       .writeStream.format("memory").queryName("gen_timer").outputMode("append")

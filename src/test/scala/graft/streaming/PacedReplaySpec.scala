@@ -20,12 +20,12 @@ class PacedReplaySpec extends AnyFunSuite with SparkSpec {
     val events = Tables.load(spark, sfDir, "events")
       .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
 
-    val stageDir = Files.createTempDirectory("paced-stage").toString
+    val stageDir = graft.TempDirs.scoped("paced-stage")
     PacedReplay.stage(events, Seq("ts", "event_id"), rowsPerFile = 100, stageDir)
 
     val listener = ThroughputHistory.attach(spark)
     val stream = PacedReplay.stream(spark, stageDir, events.schema, filesPerTrigger = 5)
-    val ckpt = Files.createTempDirectory("paced-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("paced-ckpt")
     val q = FadsStream.anonymize(stream.as[Event], SparkEntry.eventsFadsConfig)
       .writeStream.format("memory").queryName("paced_gen").outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -43,7 +43,7 @@ class PacedReplaySpec extends AnyFunSuite with SparkSpec {
 
   test("staged chunks replay in chunk order under concurrent writers") {
     val chunks = 40
-    val stageDir = Files.createTempDirectory("order-stage").toString
+    val stageDir = graft.TempDirs.scoped("order-stage")
     // four writer tasks finish their chunk files in any order; AQE would
     // otherwise coalesce this tiny input into a single writer
     Session.withConfs(spark, Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
@@ -70,7 +70,7 @@ class PacedReplaySpec extends AnyFunSuite with SparkSpec {
         batches.add((id, r.getLong(0), r.getLong(1)))
         ()
       }
-      .option("checkpointLocation", Files.createTempDirectory("order-ckpt").toString)
+      .option("checkpointLocation", graft.TempDirs.scoped("order-ckpt"))
       .trigger(PacedReplay.trigger(0))
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -84,9 +84,9 @@ class PacedReplaySpec extends AnyFunSuite with SparkSpec {
     val sfDir = "/root/testdata/sf0.001"
     val events = Tables.load(spark, sfDir, "events")
       .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")
-    val stageDir = Files.createTempDirectory("runfor-stage").toString
+    val stageDir = graft.TempDirs.scoped("runfor-stage")
     PacedReplay.stage(events, Seq("ts", "event_id"), rowsPerFile = 100, stageDir)
-    val ckpt = Files.createTempDirectory("runfor-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("runfor-ckpt")
     // one file per 10 s trigger: 10 files cannot finish inside the bound
     val q = PacedReplay.stream(spark, stageDir, events.schema, filesPerTrigger = 1)
       .writeStream.format("noop").option("checkpointLocation", ckpt)

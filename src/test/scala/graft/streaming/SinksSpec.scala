@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,8 +18,8 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
       .as[Event].collect().sortBy(e => (e.ts, e.event_id)).take(300)
 
     val stream = MemoryStream[Event]
-    val outDir = Files.createTempDirectory("sink-out").toString
-    val ckpt = Files.createTempDirectory("sink-ckpt").toString
+    val outDir = graft.TempDirs.scoped("sink-out")
+    val ckpt = graft.TempDirs.scoped("sink-ckpt")
     val gen = FadsStream.anonymize(stream.toDS(), SparkEntry.eventsFadsConfig).toDF()
     val q = Sinks.partitionedParquet(gen, outDir, ckpt, Seq("suppressed")).start()
     try {

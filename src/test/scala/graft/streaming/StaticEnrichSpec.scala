@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,7 +31,7 @@ class StaticEnrichSpec extends AnyFunSuite with SparkSpec {
       .groupBy($"n_name".as("nation"))
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
-    val ckpt = Files.createTempDirectory("se-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("se-ckpt")
     val query = agg.writeStream
       .format("memory").queryName("se").outputMode("complete")
       .option("checkpointLocation", ckpt)

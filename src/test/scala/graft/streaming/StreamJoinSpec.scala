@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -33,7 +32,7 @@ class StreamJoinSpec extends AnyFunSuite with SparkSpec {
     val joined = StreamJoin.clickToPurchase(
       cs.toDF().withWatermark("c_ts", "1 hour"),
       ps.toDF().withWatermark("p_ts", "1 hour"))
-    val ckpt = Files.createTempDirectory("sj-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("sj-ckpt")
     val query = joined.writeStream
       .format("memory").queryName("sj").outputMode("append")
       .option("checkpointLocation", ckpt)

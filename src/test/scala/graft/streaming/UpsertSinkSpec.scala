@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,8 +26,8 @@ class UpsertSinkSpec extends AnyFunSuite with SparkSpec {
       .as[Upd].collect().sortBy(u => (u.ts_us, u.event_id))
 
     val stream = MemoryStream[Upd]
-    val outDir = Files.createTempDirectory("ups-out").toString + "/snap"
-    val ckpt = Files.createTempDirectory("ups-ckpt").toString
+    val outDir = graft.TempDirs.scoped("ups-out") + "/snap"
+    val ckpt = graft.TempDirs.scoped("ups-ckpt")
     val q = Sinks.upsertParquet(stream.toDF(), outDir, ckpt,
       keyCols = Seq("user_id"), versionCols = Seq("ts_us", "event_id")).start()
     try {
@@ -56,8 +54,8 @@ class UpsertSinkSpec extends AnyFunSuite with SparkSpec {
   test("streaming partitioned upsert rewrites only touched partition dirs") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val outDir = Files.createTempDirectory("pups-out").toString + "/idx"
-    val ckpt = Files.createTempDirectory("pups-ckpt").toString
+    val outDir = graft.TempDirs.scoped("pups-out") + "/idx"
+    val ckpt = graft.TempDirs.scoped("pups-ckpt")
 
     Seq((1L, 0, 10L), (2L, 0, 20L), (3L, 1, 30L))
       .toDF("doc_id", "band", "bh")
@@ -102,7 +100,7 @@ class UpsertSinkSpec extends AnyFunSuite with SparkSpec {
     def readIds(dir: String): Seq[Long] =
       spark.read.parquet(dir).as[Long].collect().toSeq.sorted
     def fresh(): String =
-      Files.createTempDirectory("ups-rec").toString + "/snap"
+      graft.TempDirs.scoped("ups-rec") + "/snap"
 
     // Shape 1: crash between rename(live, old) and rename(tmp, live) —
     // live missing, complete tmp present. tmp must be promoted (it holds
@@ -139,7 +137,7 @@ class UpsertSinkSpec extends AnyFunSuite with SparkSpec {
     // over the same path — prior keys must survive (this was the silent
     // truncation ADVICE r4 flagged).
     val s4 = fresh()
-    val ck4 = Files.createTempDirectory("ups-rec-ckpt").toString
+    val ck4 = graft.TempDirs.scoped("ups-rec-ckpt")
     writeSnap(s"$s4.tmp-0", Seq(1L, 2L, 3L))   // crashed mid-swap…
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[Long]

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +17,7 @@ class WindowsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[Event]
-    val ckpt = Files.createTempDirectory("win-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("win-ckpt")
     val q = Windows.tumblingCounts(stream.toDF(), "1 hour", "30 minutes")
       .writeStream.format("memory").queryName("win_out").outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -53,7 +51,7 @@ class WindowsSpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.functions.{col, session_window, unix_millis}
     val stream = MemoryStream[Event]
-    val ckpt = Files.createTempDirectory("sess-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("sess-ckpt")
     val q = stream.toDF()
       .withColumn("event_ts", Windows.tsCol("ts"))
       .withWatermark("event_ts", "30 minutes")
@@ -87,7 +85,7 @@ class WindowsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[Event]
-    val ckpt = Files.createTempDirectory("dedup-ckpt").toString
+    val ckpt = graft.TempDirs.scoped("dedup-ckpt")
     val q = StreamingDedup.dedupStream(stream.toDF(), "30 minutes",
         Seq("user_id", "event_type"))
       .writeStream.format("memory").queryName("dedup_out").outputMode("append")
