@@ -13,7 +13,8 @@ import graft.streaming.FadsStream
   * shuffle partition per core, AQE on, UTC, UI off, `spark.local.dir` and
   * the catalog warehouse on the probed scratch tier ([[placeScratch]]), then
   * [[FadsStream.configure]] (RocksDB state store with changelog
-  * checkpointing, listing threshold, cached-plan AQE, codegen cache).
+  * checkpointing, local checkpoint files through java.nio, listing
+  * threshold, cached-plan AQE, codegen cache).
   */
 object Session {
 

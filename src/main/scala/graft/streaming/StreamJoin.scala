@@ -106,8 +106,9 @@ object StreamJoin {
     // chunks sized from the count before the sentinels are added (they
     // sort last, into the final chunk). Stream-stream joins keep FOUR state-store
     // instances per shuffle partition; at the session's 32 partitions that
-    // is 128 RocksDB stores paying the per-trigger changelog-fsync floor
-    // (the streamdiag finding) — measured 46 s for a 5-trigger query.
+    // is 128 RocksDB stores paying the per-trigger changelog-commit floor,
+    // a write and rename through the checkpoint file manager (the
+    // streamdiag finding) — measured 46 s for a 5-trigger query.
     // 4 partitions = 16 stores matches the data volume
     PacedReplay.drain(ev.unionByName(sentinels), Seq("ts", "event_id"),
         ev.count(), "graft_stream_outer_join", "append", Some(4)) { replay =>

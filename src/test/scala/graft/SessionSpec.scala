@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.FadsStream
+import graft.streaming.{FadsStream, LocalCheckpointFiles}
 
 /** The one session policy, read back from a recording builder without
   * starting a session, and the one builder site on each side of the source
@@ -26,6 +26,7 @@ class SessionSpec extends AnyFunSuite {
     assert(fads.confs("spark.sql.sources.parallelPartitionDiscovery.threshold") == "1024")
     assert(fads.confs("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
     assert(fads.confs("spark.sql.codegen.cache.maxEntries") == "8192")
+    assert(fads.confs(LocalCheckpointFiles.ConfKey) == classOf[LocalCheckpointFiles].getName)
     // a scratch dir that does not exist leaves the TempDirs hint untouched
     val scratch = Session.Scratch(Paths.get("/nonexistent/graft-scratch"), "disk",
       Session.Probe("absent", -1.0), Session.Probe("absent", -1.0))

@@ -1,14 +1,18 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, SparkSpec, Tables}
+import graft.{Session, SparkEntry, SparkSpec, Tables}
 
 /** Exactly-once streaming state: (1) sharded streams drain per key via
   * processing-time timers; (2) a query killed mid-stream resumes from its
   * checkpoint and produces the complete, correct output (the state snapshot
-  * in RocksDB survives the restart).
+  * in RocksDB survives the restart), also when the checkpoint changes
+  * hands between Spark's default checkpoint file manager and
+  * [[LocalCheckpointFiles]] at the restart, in either direction.
   */
 class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
 
@@ -54,7 +58,40 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("restart from checkpoint resumes state and completes the stream") {
+  /** Runs one phase of a restarted stream under a checkpoint manager. */
+  private type Manager = (=> Unit) => Unit
+
+  private val installed: Manager = phase => phase
+
+  /** Spark's own manager: the conf unset for the phase, restored after. */
+  private val sparkDefault: Manager = phase =>
+    Session.withConfs(spark, Map(LocalCheckpointFiles.ConfKey ->
+        spark.conf.get(LocalCheckpointFiles.ConfKey))) {
+      spark.conf.unset(LocalCheckpointFiles.ConfKey)
+      phase
+    }
+
+  /** Hadoop's checksum sidecars under `dir`, which Spark's default manager
+    * writes and [[LocalCheckpointFiles]] does not. RocksDB copies its SST
+    * files into the checkpoint through Hadoop's file system, not the
+    * checkpoint file manager, so their sidecars are left out.
+    */
+  private def sidecars(dir: String): Set[String] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator.asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith(".") && n.endsWith(".crc") && !n.endsWith(".sst.crc"))
+      .toSet
+    finally walk.close()
+  }
+
+  /** Stream the events in 10 files, stop the query mid-stream under
+    * `first`, resume it from the same checkpoint under `second`, drain,
+    * and check the output equals the single-run engine replay with every
+    * row released once. Returns the checkpoint's sidecars after each
+    * phase.
+    */
+  private def restartMatchesReplay(first: Manager,
+      second: Manager): (Set[String], Set[String]) = {
     import spark.implicits._
     val input = loadEvents()
     val events = Tables.load(spark, sfDir, "events")
@@ -83,30 +120,35 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
       scala.util.Try(spark.read.parquet(outDir).count()).getOrElse(0L)
 
     // phase 1: kill the query mid-stream (after ~2 of 10 files)
-    val q1 = startQuery()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (sunk() < 150 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(sunk() >= 150, "phase 1 made progress")
-    } finally q1.stop()
+    first {
+      val q1 = startQuery()
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        while (sunk() < 150 && System.currentTimeMillis() < deadline)
+          Thread.sleep(100)
+        assert(sunk() >= 150, "phase 1 made progress")
+      } finally q1.stop()
+    }
     val phase1Count = sunk()
     assert(phase1Count < input.length, "stopped mid-stream")
+    val afterFirst = sidecars(ckpt)
 
     // phase 2: SAME checkpoint + sink — resumes at the next uncommitted file
     // with the RocksDB state snapshot (buffer/bounds/clusters) restored
-    val q2 = startQuery()
-    try {
-      val deadline = System.currentTimeMillis() + 120000
-      while (sunk() < input.length - 50 &&
-          System.currentTimeMillis() < deadline) Thread.sleep(200)
-      // all files consumed; append a sentinel chunk file to trigger the drain
-      Seq(Event(-1L, Long.MaxValue, 0L, "", 0.0, "{}")).toDS()
-        .withColumn("__chunk", org.apache.spark.sql.functions.lit("99999"))
-        .write.mode("append").partitionBy("__chunk").parquet(stageDir)
-      while (sunk() < input.length && System.currentTimeMillis() < deadline)
-        Thread.sleep(200)
-    } finally q2.stop()
+    second {
+      val q2 = startQuery()
+      try {
+        val deadline = System.currentTimeMillis() + 120000
+        while (sunk() < input.length - 50 &&
+            System.currentTimeMillis() < deadline) Thread.sleep(200)
+        // all files consumed; append a sentinel chunk file to trigger the drain
+        Seq(Event(-1L, Long.MaxValue, 0L, "", 0.0, "{}")).toDS()
+          .withColumn("__chunk", org.apache.spark.sql.functions.lit("99999"))
+          .write.mode("append").partitionBy("__chunk").parquet(stageDir)
+        while (sunk() < input.length && System.currentTimeMillis() < deadline)
+          Thread.sleep(200)
+      } finally q2.stop()
+    }
 
     // exactly-once file sink: the combined output must EXACTLY equal the
     // single-run batch oracle — only possible if mid-stream state was
@@ -124,6 +166,24 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
     assert(got.length == input.length, s"cardinality after drain: ${got.length}")
     assert(got.toSeq == want.toSeq,
       "restarted stream must produce exactly the single-run oracle output")
+    (afterFirst, sidecars(ckpt))
+  }
+
+  test("restart from checkpoint resumes state and completes the stream") {
+    val (first, second) = restartMatchesReplay(installed, installed)
+    assert(first.isEmpty && second.isEmpty, s"no checksum sidecars: $second")
+  }
+
+  test("a checkpoint written by Spark's default manager resumes under LocalCheckpointFiles") {
+    val (first, second) = restartMatchesReplay(sparkDefault, installed)
+    assert(first.nonEmpty, "phase 1 ran Spark's default manager")
+    assert(second.subsetOf(first), s"phase 2 wrote sidecars: ${second -- first}")
+  }
+
+  test("a LocalCheckpointFiles checkpoint resumes under Spark's default manager") {
+    val (first, second) = restartMatchesReplay(installed, sparkDefault)
+    assert(first.isEmpty, s"phase 1 wrote sidecars: $first")
+    assert(second.nonEmpty, "phase 2 ran Spark's default manager")
   }
 
   test("upsert sink recovers a mid-swap crash through the orphan-promotion branch") {
