@@ -27,14 +27,26 @@ object TempDirs {
     if (Files.isDirectory(p) && Files.isWritable(p)) rootHint = Some(p)
   }
 
+  /** The managed root once it is made; [[holding]] reads it without
+    * making it.
+    */
+  @volatile private var made: Option[String] = None
+
   private lazy val root: Path = {
     val r = rootHint match {
       case Some(base) => Files.createTempDirectory(base, "graft-run-")
       case None => Files.createTempDirectory("graft-run-")
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(r)))
+    made = Some(r.toString)
     r
   }
+
+  /** The managed root when `path` lies under it: a string test that makes
+    * no directory and does no IO (a root not yet made holds nothing).
+    */
+  def holding(path: String): Option[String] =
+    made.filter(r => path.startsWith(r + "/"))
 
   /** A fresh directory under the managed root. */
   def scoped(prefix: String): String =

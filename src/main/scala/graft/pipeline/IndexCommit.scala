@@ -90,11 +90,14 @@ object IndexCommit {
     * `dir` with every character but letters, digits and dots replaced by
     * `_`, `layout` the family's layout parameters, `key` the content key
     * and `tag` a layout variant that follows it (the IVF list layouts).
+    * A throwaway corpus under the [[graft.TempDirs]] root keeps its index
+    * under that root instead of [[Base]], so the index goes when the
+    * corpus does.
     */
   def root(family: String, dir: String, layout: String, key: Content,
       tag: String = ""): String =
-    s"$Base/graft_$family/" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
-      s"${layout}_n${key.rows}_f${key.fp}$tag"
+    s"${graft.TempDirs.holding(dir).getOrElse(Base)}/graft_$family/" +
+      dir.replaceAll("[^A-Za-z0-9.]", "_") + s"${layout}_n${key.rows}_f${key.fp}$tag"
 
   /** The Hadoop FileSystem that serves `path`, with `path` itself. */
   def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {

@@ -55,8 +55,10 @@ object IvfIndex {
     * contract: an index built under other rules is never reused), the
     * training `artifacts` it persists beyond the codebook and manifest,
     * the `encode` of assigned rows into list rows, and its `score` of
-    * probed list rows. `refine` multiplies [[rerankK]] for the exact
-    * re-rank of the approximate layouts; 0 marks exact scores.
+    * probed list rows. `refine` multiplies [[rerankK]] into the cut of the
+    * approximate layouts' exact re-rank ([[topK]]); 0 marks exact scores.
+    * The in-plan [[ivfPqTopK]] composes the same steps over unpacked codes
+    * and cuts at ×1.
     */
   sealed abstract class Layout(val tag: String, val artifacts: Seq[String],
       val refine: Int) {
@@ -69,10 +71,10 @@ object IvfIndex {
 
     /** Scores of `lists` rows against the (q_id, q_emb, q_nrm, c_id)
       * probes of `queries`: exact `sim` for [[Float]]; otherwise the
-      * approximate scores cut to the top `rerank` per query.
+      * approximate `asim` that [[refineTopK]] cuts and re-ranks.
       */
     def score(lists: DataFrame, probes: DataFrame, queries: DataFrame,
-        m: Model, rerank: Long): DataFrame
+        m: Model): DataFrame
   }
 
   /** Float64 vectors in the lists, scored exactly. */
@@ -80,7 +82,7 @@ object IvfIndex {
     def encode(assigned: DataFrame, m: Model): DataFrame = assigned
 
     def score(lists: DataFrame, probes: DataFrame, queries: DataFrame,
-        m: Model, rerank: Long): DataFrame =
+        m: Model): DataFrame =
       lists.join(broadcast(probes), "c_id")
         .selectExpr("q_id", "vec_id",
           s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
@@ -99,10 +101,10 @@ object IvfIndex {
       .selectExpr("vec_id", "nrm", "c_id", "s", "graft_sq8_pack(emb, s) AS qb")
 
     def score(lists: DataFrame, probes: DataFrame, queries: DataFrame,
-        m: Model, rerank: Long): DataFrame =
-      cut(lists.join(broadcast(sq8Queries(probes)), "c_id")
+        m: Model): DataFrame =
+      lists.join(broadcast(sq8Queries(probes)), "c_id")
         .where(col("vec_id") =!= col("q_id"))
-        .selectExpr("q_id", "q_emb", "q_nrm", "vec_id", Sq8Asim), "asim", rerank)
+        .selectExpr("q_id", "q_emb", "q_nrm", "vec_id", Sq8Asim)
   }
 
   /** PQ-coded lists (FAISS IndexIVFPQ): per row (vec_id, nrm, pcode), the
@@ -116,30 +118,14 @@ object IvfIndex {
     override def train(emb: DataFrame, cent: DataFrame, nc: Int): Model =
       Model(cent, Some(pqCodebook(emb)))
 
-    def encode(assigned: DataFrame, m: Model): DataFrame = argminPack(
-      assigned.selectExpr("vec_id", "nrm", "c_id",
-        s"posexplode(array(${subSlices("emb")})) AS (m, sub)"), m.pq.get)
+    def encode(assigned: DataFrame, m: Model): DataFrame = pack(argmin(
+      assigned.selectExpr("vec_id", "nrm", "c_id", subsOf("emb")), m.pq.get))
 
     def score(lists: DataFrame, probes: DataFrame, queries: DataFrame,
-        m: Model, rerank: Long): DataFrame = {
-      val lut = queries
-        .selectExpr("vec_id AS q_id", "nrm AS q_nrm",
-          s"posexplode(array(${subSlices("emb")})) AS (m, sub)")
-        .join(broadcast(m.pq.get), "m")
-        .selectExpr("q_id", "q_nrm", "m", "p_id AS code",
-          s"CAST(floor(graft_dot(sub, p_sub) * $QScale.0 + 0.5) AS BIGINT) AS pq",
-          "pcq")
-      cut(lists.join(broadcast(probes.select("q_id", "c_id")), "c_id")
-        .where(col("vec_id") =!= col("q_id"))
-        .selectExpr("q_id", "vec_id", s"posexplode(array($unpack)) AS (m, code)")
-        .join(broadcast(lut), Seq("q_id", "m", "code"))
-        .groupBy("q_id", "vec_id")
-        .agg(max("q_nrm").as("q_nrm"), sum("pq").as("adcq"), sum("pcq").as("rq"))
-        .selectExpr("q_id", "vec_id",
-          s"""round((CAST(adcq AS DOUBLE) / $QScale.0)
-             |  / (q_nrm * sqrt(CAST(rq AS DOUBLE) / $QScale.0)), 6) AS adc_sim""".stripMargin),
-        "adc_sim", rerank)
-    }
+        m: Model): DataFrame =
+      adc(lists.join(broadcast(probes.select("q_id", "c_id")), "c_id")
+          .selectExpr("q_id", "vec_id", s"posexplode(array($unpack)) AS (m, code)"),
+        pqLut(queries, m.pq.get), Seq("q_id", "m", "code"))
   }
 
   /** Residual-coded PQ lists (the FAISS IndexIVFPQ default): the same
@@ -153,23 +139,21 @@ object IvfIndex {
   sealed abstract class Residual(t: String, a: Seq[String])
       extends Layout(t, a, PqResRefine) {
 
-    def encode(assigned: DataFrame, m: Model): DataFrame = argminPack(
+    def encode(assigned: DataFrame, m: Model): DataFrame = pack(argmin(
       assigned.join(broadcast(m.cent.select("c_id", "c_emb")), "c_id")
         .selectExpr("vec_id", "nrm", "c_id",
           "zip_with(emb, c_emb, (x, y) -> x - y) AS res")
         .selectExpr("vec_id", "nrm", "c_id",
           s"${permuteExpr(m.perm, "res")} AS res")
-        .selectExpr("vec_id", "nrm", "c_id",
-          s"posexplode(array(${subSlices("res")})) AS (m, sub)"), m.pq.get)
+        .selectExpr("vec_id", "nrm", "c_id", subsOf("res")), m.pq.get))
 
     def score(lists: DataFrame, probes: DataFrame, queries: DataFrame,
-        m: Model, rerank: Long): DataFrame = {
+        m: Model): DataFrame = {
       // q·Pᵀ(P·res-codes) = (P·q)·(P·res)-codes: the query rides through
       // the rotation the codes were trained under
       val lut = queries
         .selectExpr("vec_id", "nrm", s"${permuteExpr(m.perm, "emb")} AS pemb")
-        .selectExpr("vec_id AS q_id", "nrm AS q_nrm",
-          s"posexplode(array(${subSlices("pemb")})) AS (m, sub)")
+        .selectExpr("vec_id AS q_id", "nrm AS q_nrm", subsOf("pemb"))
         .join(broadcast(m.pq.get), "m")
         .selectExpr("q_id", "q_nrm", "m", "p_id AS code",
           s"CAST(floor(graft_dot(sub, p_sub) * $QScale.0 + 0.5) AS BIGINT) AS pq")
@@ -177,7 +161,7 @@ object IvfIndex {
       val qc = probes.join(broadcast(m.cent.select("c_id", "c_emb")), "c_id")
         .selectExpr("q_id", "c_id",
           s"CAST(floor(graft_dot(q_emb, c_emb) * $QScale.0 + 0.5) AS BIGINT) AS qcq")
-      cut(lists.join(broadcast(qc), "c_id")
+      lists.join(broadcast(qc), "c_id")
         .where(col("vec_id") =!= col("q_id"))
         .selectExpr("q_id", "vec_id", "nrm", "qcq",
           s"posexplode(array($unpack)) AS (m, code)")
@@ -187,8 +171,7 @@ object IvfIndex {
           max("qcq").as("qcq"), sum("pq").as("adcq"))
         .selectExpr("q_id", "vec_id",
           s"""round((CAST(qcq + adcq AS DOUBLE) / $QScale.0)
-             |  / (q_nrm * nrm), 6) AS adc_sim""".stripMargin),
-        "adc_sim", rerank)
+             |  / (q_nrm * nrm), 6) AS asim""".stripMargin)
     }
   }
 
@@ -329,33 +312,46 @@ object IvfIndex {
     IndexCommit.read(spark, indexPath, IndexCommit.Root, Some(touched.toSeq))
   }
 
-  private def cut(approx: DataFrame, score: String, rerank: Long): DataFrame =
-    approx.withColumn("ark", expr(
-        s"row_number() OVER (PARTITION BY q_id ORDER BY $score DESC, vec_id ASC)"))
-      .where(s"ark <= $rerank")
-
   /** Ranked top-`k` of probed list rows. An exact layout ranks its scores;
-    * an approximate one keeps its top refine·`rerank` candidates and
-    * re-scores them as exact cosines against `floats` (rerank·Q keyed
-    * full-vector reads — the FAISS refine contract).
+    * an approximate one goes through [[refineTopK]] with a cut of
+    * refine·`rerank` candidates per query — ×[[PqIdxRefine]] for [[Pq]],
+    * where the in-plan [[ivfPqTopK]] over the same codes cuts at ×1.
     */
   def topK(layout: Layout, lists: DataFrame, probes: DataFrame,
       queries: DataFrame, m: Model, floats: => DataFrame, rerank: => Long,
-      k: Int = TopK): DataFrame = rankTopK(
-    if (layout.refine == 0)
-      layout.score(lists, probes, queries, m, 0).where(col("vec_id") =!= col("q_id"))
-    else {
-      val approx = layout.score(lists, probes, queries, m, layout.refine * rerank)
-      val exact = floats.select("vec_id", "emb", "nrm")
-      // a per-row scorer carries the query vector; aggregated ADC scores
-      // re-join the query batch
-      (if (approx.columns.contains("q_emb")) approx.join(exact, "vec_id")
-      else approx.select("q_id", "vec_id").join(exact, "vec_id")
-        .join(broadcast(queries.selectExpr("vec_id AS q_id", "emb AS q_emb",
-          "nrm AS q_nrm")), "q_id"))
-        .selectExpr("q_id", "vec_id",
-          s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-    }, k)
+      k: Int = TopK): DataFrame = {
+    val scored = layout.score(lists, probes, queries, m)
+    if (layout.refine == 0) rankTopK(scored.where(col("vec_id") =!= col("q_id")), k)
+    else refineTopK(scored, layout.refine * rerank, queries, floats, k)
+  }
+
+  /** The refine step of every approximate top-k (the FAISS refine
+    * contract): of the approximate (q_id, vec_id, asim) scores keep the
+    * top `n` per query by (asim DESC, vec_id ASC), re-score them as exact
+    * cosines against `floats` (n·Q keyed full-vector reads) and rank the
+    * top `k`.
+    */
+  private[pipeline] def refineTopK(approx: DataFrame, n: Long,
+      queries: DataFrame, floats: DataFrame, k: Int = TopK): DataFrame =
+    rankTopK(exactSims(approx.withColumn("ark", expr(
+        "row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, vec_id ASC)"))
+      .where(s"ark <= $n"), queries, floats), k)
+
+  /** Exact `round(cosine, 6) AS sim` of candidate (q_id, vec_id) pairs
+    * against their `floats` vectors: a per-row scorer's candidates carry
+    * the query vector (q_emb, q_nrm); the others re-join the `queries`
+    * batch (vec_id, emb, nrm).
+    */
+  private[pipeline] def exactSims(cand: DataFrame, queries: DataFrame,
+      floats: DataFrame): DataFrame = {
+    val exact = floats.select("vec_id", "emb", "nrm")
+    (if (cand.columns.contains("q_emb")) cand.join(exact, "vec_id")
+    else cand.select("q_id", "vec_id").join(exact, "vec_id")
+      .join(broadcast(queries.selectExpr("vec_id AS q_id", "emb AS q_emb",
+        "nrm AS q_nrm")), "q_id"))
+      .selectExpr("q_id", "vec_id",
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
+  }
 
   /** Top-`k` of `queries` against the committed index at `indexPath`;
     * `dir` is the corpus whose floats the approximate layouts re-rank on.
@@ -581,41 +577,76 @@ object IvfIndex {
     .selectExpr("q_id", "q_emb", "q_nrm", "c_id", "q_s",
       "graft_sq8_pack(q_emb, q_s) AS q_qb")
 
-  private def subSlices(v: String): String = (0 until PqM)
-    .map(i => s"slice($v, ${i * PqSubDim + 1}, $PqSubDim)").mkString(", ")
+  /** The [[PqM]] subspace slices of array column `v` as (m, sub) rows. */
+  private[pipeline] def subsOf(v: String): String = (0 until PqM)
+    .map(i => s"slice($v, ${i * PqSubDim + 1}, $PqSubDim)")
+    .mkString("posexplode(array(", ", ", ")) AS (m, sub)")
 
   /** The packed codes unpacked with exact integer arithmetic. */
   private val unpack = (0 until PqM)
     .map(i => s"CAST((pcode DIV ${1L << (4 * i)}) % $PqK AS BIGINT)")
     .mkString(", ")
 
-  /** Nearest sub-code per (vector, subspace) of `subs` (vec_id, nrm, c_id,
-    * m, sub) — term-by-term squared L2 so both engines fold identically —
-    * with the [[PqM]] 4-bit codes packed into ONE integer, pcode =
-    * Σ code_m·16^m. Packing is storage, not semantics: the probe unpacks
-    * exactly, so the oracle replays from unpacked (m, code) pairs.
+  /** The PQ encode: the nearest sub-code per (vector, subspace) of `subs`
+    * (vec_id, …, m, sub) against `pqc` — term-by-term squared L2 so both
+    * engines fold identically — as unpacked (vec_id, …, m, code) rows.
     */
-  private def argminPack(subs: DataFrame, pqc: DataFrame): DataFrame = {
+  private[pipeline] def argmin(subs: DataFrame, pqc: DataFrame): DataFrame = {
+    val keep = subs.columns.filter(_ != "sub").toSeq
+    subs.join(broadcast(pqc), "m")
+      .selectExpr(keep ++ Seq("p_id AS code",
+        s"""round(graft_dot(sub, sub) - 2 * graft_dot(sub, p_sub)
+           |  + graft_dot(p_sub, p_sub), 6) AS d2""".stripMargin): _*)
+      .withColumn("prk", expr(
+        "row_number() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, code ASC)"))
+      .where("prk = 1")
+      .select((keep :+ "code").map(col): _*)
+  }
+
+  /** The [[PqM]] 4-bit codes of each (vec_id, nrm, c_id) packed into ONE
+    * integer, pcode = Σ code_m·16^m. Packing is storage, not semantics:
+    * the probe unpacks exactly, so the oracle replays from unpacked
+    * (m, code) pairs.
+    */
+  private def pack(codes: DataFrame): DataFrame = {
     val caseM = (0 until PqM)
       .map(i => s"WHEN $i THEN ${1L << (4 * i)}L").mkString("CASE m ", " ", " END")
-    subs.join(broadcast(pqc), "m")
-      .selectExpr("vec_id", "nrm", "c_id", "m", "p_id",
-        s"""round(graft_dot(sub, sub) - 2 * graft_dot(sub, p_sub)
-           |  + graft_dot(p_sub, p_sub), 6) AS d2""".stripMargin)
-      .withColumn("prk", expr(
-        "row_number() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, p_id ASC)"))
-      .where("prk = 1")
-      .groupBy("vec_id", "nrm", "c_id")
-      .agg(expr(s"CAST(sum(p_id * ($caseM)) AS INT)").as("pcode"))
+    codes.groupBy("vec_id", "nrm", "c_id")
+      .agg(expr(s"CAST(sum(code * ($caseM)) AS INT)").as("pcode"))
   }
+
+  /** The ADC lookup table of the `queries` batch (vec_id, emb, nrm) over
+    * the raw sub-codebook `pqc`: Q×M×K quantized partial dots with the
+    * query norm and the code norms.
+    */
+  private[pipeline] def pqLut(queries: DataFrame, pqc: DataFrame): DataFrame =
+    queries.selectExpr("vec_id AS q_id", "nrm AS q_nrm", subsOf("emb"))
+      .join(broadcast(pqc), "m")
+      .selectExpr("q_id", "q_nrm", "m", "p_id AS code",
+        s"CAST(floor(graft_dot(sub, p_sub) * $QScale.0 + 0.5) AS BIGINT) AS pq",
+        "pcq")
+
+  /** Raw-code ADC: unpacked (…, m, code) candidate rows read through the
+    * broadcast `lut` on the `on` keys, summed per (q_id, vec_id) into the
+    * approximate cosine `asim` against the reconstructed vector.
+    * Quantized BIGINT sums are order-free, so both engines agree.
+    */
+  private[pipeline] def adc(codes: DataFrame, lut: DataFrame,
+      on: Seq[String]): DataFrame =
+    codes.join(broadcast(lut), on)
+      .where(col("vec_id") =!= col("q_id"))
+      .groupBy("q_id", "vec_id")
+      .agg(max("q_nrm").as("q_nrm"), sum("pq").as("adcq"), sum("pcq").as("rq"))
+      .selectExpr("q_id", "vec_id",
+        s"""round((CAST(adcq AS DOUBLE) / $QScale.0)
+           |  / (q_nrm * sqrt(CAST(rq AS DOUBLE) / $QScale.0)), 6) AS asim""".stripMargin)
 
   /** The raw PQ sub-codebook: the first [[PqK]] vectors' [[PqM]] subspace
     * slices (the [[pqTopK]] seeded convention) with the quantized code
     * norm. The `p_` prefix keeps code ids and list ids (c_id) apart.
     */
   private[pipeline] def pqCodebook(emb: DataFrame): DataFrame =
-    emb.where(s"vec_id < $PqK")
-      .selectExpr("vec_id", s"posexplode(array(${subSlices("emb")})) AS (m, sub)")
+    emb.where(s"vec_id < $PqK").selectExpr("vec_id", subsOf("emb"))
       .selectExpr("m", "vec_id AS p_id", "sub AS p_sub",
         s"CAST(floor(graft_dot(sub, sub) * $QScale.0 + 0.5) AS BIGINT) AS pcq")
 
@@ -632,7 +663,7 @@ object IvfIndex {
       .join(broadcast(cent.select("c_id", "c_emb")), "c_id")
       .selectExpr("vec_id", "zip_with(emb, c_emb, (x, y) -> x - y) AS res")
       .selectExpr("vec_id", s"${permuteExpr(perm, "res")} AS res")
-      .selectExpr("vec_id", s"posexplode(array(${subSlices("res")})) AS (m, sub)")
+      .selectExpr("vec_id", subsOf("res"))
       // re-index seed ids to codes 0..PqK-1: pcode packs 4-bit cells
       .selectExpr("m", s"vec_id - $nc AS p_id", "sub AS p_sub")
 

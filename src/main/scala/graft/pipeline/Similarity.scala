@@ -1,20 +1,29 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Approximate-nearest-neighbor similarity search over the `embeddings`
   * table (64-dim float vectors).
   *
-  * Two paths (SURVEY-mandated pattern for the north-star extensions):
-  *  - [[bruteForceTopK]]: exact cosine top-k — the correctness baseline.
-  *    A broadcast of the (tiny) query set against the corpus: one pass,
-  *    no shuffle of the corpus, per-partition top-k via window rank.
-  *  - [[lshTopK]]: random-hyperplane LSH — the 100 TB scale path. Vectors
-  *    hash to sign-pattern buckets (one cheap per-row expression); only
-  *    same-bucket candidates are scored, turning O(N·Q) into
-  *    O(N/2^bits · Q) with one bucket-key shuffle.
+  * Every top-k entry is one filter-and-refine path: a cheap candidate
+  * step prunes the corpus, exact cosines verify the survivors, and a rank
+  * window keeps the k best.
+  *  - Exact scoring, [[exactScores]]: the [[QuerySetSize]] query batch
+  *    broadcast against a corpus, `round(cosine, 6) AS sim`. The
+  *    brute-force entries and every recall gate's ground truth score the
+  *    whole corpus; [[lshTopK]] and [[filteredTopK]] add a join condition.
+  *  - Candidates: LSH buckets ([[lshTopK]], [[lshMultiTopK]]), IVF probed
+  *    lists ([[ivfTopK]] and its trained, two-level and SQ8 forms), PQ codes
+  *    ([[pqTopK]] over the whole corpus, [[ivfPqTopK]] over probed lists).
+  *  - Refine, in [[IvfIndex]]: an exact list layout ranks its scores
+  *    ([[IvfIndex.topK]]); an approximate score (the SQ8 integer dot, the
+  *    PQ ADC of [[IvfIndex.adc]]) is cut to the top refine·[[rerankK]] per
+  *    query by (score DESC, vec_id ASC), re-scored as the exact cosine and
+  *    ranked ([[IvfIndex.refineTopK]]). The persisted index
+  *    ([[IvfIndex.probe]]) and the in-plan entries run the same steps.
+  *  - Ranking, [[rankTopK]]: (sim DESC, vec_id ASC) per query.
   *
   * Determinism: hyperplane coefficients are integer-derived pseudo-random
   * constants (exact in both engines); dot products fold left-to-right in both
@@ -67,13 +76,11 @@ object Similarity {
     s"""list_sum(list_transform(range(1, ${Dim + 1}), i -> $a[i] * $b[i]))
        | / ($na * $nb)""".stripMargin
 
-  private[pipeline] def embDouble(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
+  private[pipeline] def embDouble(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "embeddings")
       .selectExpr("vec_id", "label",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
       .selectExpr("vec_id", "label", "emb", "sqrt(graft_dot(emb, emb)) AS nrm")
-  }
 
   /** DuckDB emb CTE matching [[embDouble]] (shared with [[LearnedMix]]'s
     * composed oracle).
@@ -88,12 +95,32 @@ object Similarity {
     * ([[RankedOrder]]: the rank filter bounds the rows).
     */
   private[pipeline] def rankTopK(scored: DataFrame, k: Int = TopK): DataFrame =
+    ranked(scored, k).transform(RankedOrder("q_id", "rk"))
+
+  /** [[rankTopK]]'s rows in no particular order. */
+  private def ranked(scored: DataFrame, k: Int = TopK): DataFrame =
     scored
       .withColumn("rk", expr(
         "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
       .where(s"rk <= $k")
       .selectExpr("q_id", "vec_id", "sim", "CAST(rk AS BIGINT) AS rk")
-      .transform(RankedOrder("q_id", "rk"))
+
+  /** The query batch of a corpus: its `vec_id < QuerySetSize` rows. */
+  private def queryBatch(corpus: DataFrame): DataFrame =
+    corpus.where(s"vec_id < $QuerySetSize")
+
+  /** Exact scores of every `queries` row against every other `corpus` row:
+    * the batch broadcast with its columns renamed vec_id → q_id and
+    * c → q_c (emb, nrm, label, …), `vec_id <> q_id` and `on` as the join
+    * condition, then `keep` and `round(cosine, 6) AS sim` selected.
+    */
+  private def exactScores(corpus: DataFrame, queries: DataFrame,
+      on: Column = lit(true), keep: Seq[String] = Nil): DataFrame =
+    corpus.join(broadcast(queries.select(queries.columns.map(c =>
+        col(c).as(if (c == "vec_id") "q_id" else s"q_$c")).toSeq: _*)),
+        col("vec_id") =!= col("q_id") && on)
+      .selectExpr(Seq("q_id", "vec_id") ++ keep :+
+        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim": _*)
 
   // -------------------------------------------- DuckDB oracle fragments
 
@@ -252,11 +279,7 @@ object Similarity {
     */
   def bruteForceTopK(spark: SparkSession, dir: String): DataFrame = {
     val corpus = embDouble(spark, dir)
-    val queries = corpus.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    rankTopK(corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    rankTopK(exactScores(corpus, queryBatch(corpus)))
   }
 
   val bruteForceTopKSql: String =
@@ -275,15 +298,7 @@ object Similarity {
     */
   private[pipeline] def cosineRanks(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val corpus = embDouble(spark, dir)
-    val queries = corpus.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $k")
-      .selectExpr("q_id", "vec_id", "CAST(rk AS BIGINT) AS rk")
+    ranked(exactScores(corpus, queryBatch(corpus)), k).select("q_id", "vec_id", "rk")
   }
 
   /** DuckDB CTE fragment replaying [[cosineRanks]] — defines `emb`, `vq`
@@ -314,11 +329,7 @@ object Similarity {
   def bruteForceAggTopK(spark: SparkSession, dir: String): DataFrame = {
     TopKAgg.register(spark)
     val corpus = embDouble(spark, dir)
-    val queries = corpus.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
+    exactScores(corpus, queryBatch(corpus))
       .groupBy("q_id").agg(expr("graft_topk(sim, vec_id)").as("tk"))
       .selectExpr("q_id", "posexplode(tk) AS (i, p)")
       .selectExpr("q_id", "p._2 AS vec_id", "p._1 AS sim",
@@ -349,12 +360,8 @@ object Similarity {
   def lshTopK(spark: SparkSession, dir: String): DataFrame = {
     val bucketed = embDouble(spark, dir)
       .withColumn("bucket", bucketColSpark(col("emb")))
-    val queries = bucketed.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm", "bucket")
-    rankTopK(bucketed.join(broadcast(queries), Seq("bucket"))
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    rankTopK(exactScores(bucketed, queryBatch(bucketed),
+      col("bucket") === col("q_bucket")))
   }
 
   val lshTopKSql: String =
@@ -416,12 +423,7 @@ object Similarity {
     val cand = buckets.join(broadcast(qb), Seq("t", "bucket"))
       .where(col("vec_id") =!= col("q_id"))
       .select("q_id", "vec_id").distinct()
-    val queries = emb.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    rankTopK(cand.join(emb.select("vec_id", "emb", "nrm"), "vec_id")
-      .join(broadcast(queries), "q_id")
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    rankTopK(IvfIndex.exactSims(cand, queryBatch(emb), emb))
   }
 
   val lshMultiTopKSql: String = {
@@ -507,16 +509,20 @@ object Similarity {
 
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    val cent = emb.where(s"vec_id < ${nCentroids(spark, dir)}")
-      .selectExpr("vec_id AS c_id", "emb AS c_emb", "nrm AS c_nrm")
-    val assigned = nearestLists(emb, cent, "vec_id", 1)
-      .select("vec_id", "emb", "nrm", "c_id")
-    val probes = nearestLists(emb.where(s"vec_id < $QuerySetSize"), cent, "q_id", NProbe)
-      .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    rankTopK(probes.join(assigned, "c_id")
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    inPlanTopK(IvfIndex.Float, emb,
+      IvfIndex.Model(coarseCent(emb, nCentroids(spark, dir))))
+  }
+
+  /** The persisted index's probe ([[IvfIndex.topK]]) run in-plan: the
+    * whole corpus `emb` assigned to the lists of `m`'s codebook and
+    * encoded by `layout`, probed by the query batch's [[NProbe]] nearest
+    * lists, `rerank` sizing an approximate layout's exact re-rank.
+    */
+  private def inPlanTopK(layout: IvfIndex.Layout, emb: DataFrame,
+      m: IvfIndex.Model, rerank: => Long = 0L): DataFrame = {
+    val queries = queryBatch(emb)
+    IvfIndex.topK(layout, layout.encode(nearestLists(emb, m.cent, "vec_id", 1), m),
+      IvfIndex.probesOf(queries, m.cent), queries, m, emb, rerank)
   }
 
   val ivfTopKSql: String =
@@ -571,10 +577,8 @@ object Similarity {
     */
   def ivf2TopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    val nC = nCentroids(spark, dir)
     val l1 = l1Cells(corpusStats(spark, dir).rows)
-    val cent = emb.where(s"vec_id < $nC")
-      .selectExpr("vec_id AS c_id", "emb AS c_emb", "nrm AS c_nrm")
+    val cent = coarseCent(emb, nCentroids(spark, dir))
     val coarse = emb.where(s"vec_id < $l1")
       .selectExpr("vec_id AS g_id", "emb AS g_emb", "nrm AS g_nrm")
     // fine centroid → owning level-1 cell (codebook-sized, combinable)
@@ -582,10 +586,8 @@ object Similarity {
       cent.selectExpr("c_id AS vec_id", "c_emb AS emb", "c_nrm AS nrm"),
       coarse, "c_id", "g_id", "g_emb", "g_nrm", "gsim", "grk")
       .select("c_id", "emb", "nrm", "g_id")
-    // corpus → fine list: unchanged from flat IVF (build-time, once)
-    val assigned = assignOne(emb, cent, "vec_id", "c_id", "c_emb", "c_nrm",
-      "csim", "crk").select("vec_id", "emb", "nrm", "c_id")
-    val qCells = emb.where(s"vec_id < $QuerySetSize")
+    val queries = queryBatch(emb)
+    val qCells = queries
       .crossJoin(broadcast(coarse))
       .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm", "g_id",
         s"round(${cosineExpr("emb", "g_emb", "nrm", "g_nrm")}, 6) AS gsim")
@@ -600,10 +602,9 @@ object Similarity {
         "row_number() OVER (PARTITION BY q_id ORDER BY fsim DESC, c_id)"))
       .where(s"frk <= $NProbe")
       .select("q_id", "q_emb", "q_nrm", "c_id")
-    rankTopK(qFine.join(assigned, "c_id")
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    // corpus → fine list: unchanged from flat IVF (build-time, once)
+    IvfIndex.topK(IvfIndex.Float, nearestLists(emb, cent, "vec_id", 1), qFine,
+      queries, IvfIndex.Model(cent), emb, 0L)
   }
 
   val ivf2TopKSql: String =
@@ -691,14 +692,8 @@ object Similarity {
 
   def ivfTrainedTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    val cent = trainedCentroids(spark, dir, emb)
-    val assigned = nearestLists(emb, cent, "vec_id", 1).select("vec_id", "emb", "nrm", "c_id")
-    val probes = nearestLists(emb.where(s"vec_id < $QuerySetSize"), cent, "q_id", NProbe)
-      .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
-    rankTopK(probes.join(assigned, "c_id")
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    inPlanTopK(IvfIndex.Float, emb,
+      IvfIndex.Model(trainedCentroids(spark, dir, emb)))
   }
 
   /** DuckDB CTE chain replaying [[trainedCentroids]] + the final whole-
@@ -1020,51 +1015,12 @@ object Similarity {
     */
   def pqTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    val subSlices = (0 until PqM)
-      .map(m => s"slice(emb, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    val subs = emb.selectExpr("vec_id", "nrm",
-      s"posexplode(array($subSlices)) AS (m, sub)")
-    val cent = subs.where(s"vec_id < $PqK")
-      .selectExpr("m", "vec_id AS c_id", "sub AS c_sub",
-        s"CAST(floor(graft_dot(sub, sub) * $QScale.0 + 0.5) AS BIGINT) AS cq")
-    // encode: per (vector, subspace) argmin of squared L2 to the 16 codes —
-    // term-by-term |s|² - 2·s·c + |c|² so both engines fold identically
-    val codes = subs.join(broadcast(cent), "m")
-      .selectExpr("vec_id", "m", "c_id",
-        s"""round(graft_dot(sub, sub) - 2 * graft_dot(sub, c_sub)
-           |  + graft_dot(c_sub, c_sub), 6) AS d2""".stripMargin)
-      .withColumn("crk", expr(
-        "row_number() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, c_id ASC)"))
-      .where("crk = 1").select("vec_id", "m", "c_id")
-    // ADC lookup table: Q × M × K quantized partial dots (+ code norms)
-    val lut = subs.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "nrm AS q_nrm", "m", "sub AS q_sub")
-      .join(broadcast(cent), "m")
-      .selectExpr("q_id", "q_nrm", "m", "c_id",
-        s"CAST(floor(graft_dot(q_sub, c_sub) * $QScale.0 + 0.5) AS BIGINT) AS pq",
-        "cq")
-    // ADC ranks the WHOLE corpus per query; keep the adaptive top-rerankK
-    // and re-score them exactly — the same refine contract as ivfPqTopK,
-    // so solo-PQ recall no longer decays as probed populations grow with
-    // the corpus (the round-12 sf0.1 gate fragility): the ADC cut is a
-    // constant FRACTION of the corpus, and rerankK·Q full-vector reads
-    // stay negligible.
-    val adc = codes.join(broadcast(lut), Seq("m", "c_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id")
-      .agg(max("q_nrm").as("q_nrm"), sum("pq").as("adcq"), sum("cq").as("rq"))
-      .selectExpr("q_id", "vec_id",
-        s"""round((CAST(adcq AS DOUBLE) / $QScale.0)
-           |  / (q_nrm * sqrt(CAST(rq AS DOUBLE) / $QScale.0)), 6) AS asim""".stripMargin)
-      .withColumn("ark", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, vec_id ASC)"))
-      .where(s"ark <= ${rerankK(corpusStats(spark, dir).rows)}")
-    rankTopK(adc
-      .join(emb.select("vec_id", "emb", "nrm"), "vec_id")
-      .join(broadcast(emb.where(s"vec_id < $QuerySetSize")
-        .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm2")), "q_id")
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm2", "nrm")}, 6) AS sim"))
+    val pqc = IvfIndex.pqCodebook(emb)
+    val queries = queryBatch(emb)
+    IvfIndex.refineTopK(
+      IvfIndex.adc(IvfIndex.argmin(emb.selectExpr("vec_id", IvfIndex.subsOf("emb")), pqc),
+        IvfIndex.pqLut(queries, pqc), Seq("m", "code")),
+      rerankK(corpusStats(spark, dir).rows), queries, emb)
   }
 
   val pqTopKSql: String =
@@ -1128,67 +1084,23 @@ object Similarity {
     * for rerankK·Q rows (a key join against candidate ids) — everything
     * before that moves 4-byte-per-subspace codes through one list-id
     * shuffle. Both quantizers reuse the entries' deterministic seeded
-    * codebooks, so the oracle replays the identical index.
+    * codebooks, so the oracle replays the identical index. The steps are
+    * the persisted [[IvfIndex.Pq]] layout's over unpacked codes, with a
+    * ×1 cut where the layout keeps ×[[PqIdxRefine]].
     */
   def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    // coarse quantizer (g_ prefix: inverted-list id; shared w/ ivfTopK)
-    val gcent = emb.where(s"vec_id < ${nCentroids(spark, dir)}")
-      .selectExpr("vec_id AS g_id", "emb AS g_emb", "nrm AS g_nrm")
-    def nearestCoarse(src: DataFrame, idAs: String, keep: Int): DataFrame =
-      if (keep == 1) assignOne(src, gcent, idAs, "g_id", "g_emb", "g_nrm", "gsim", "grk")
-      else src.crossJoin(broadcast(gcent))
-        .selectExpr(s"vec_id AS $idAs", "emb", "nrm", "g_id",
-          s"round(${cosineExpr("emb", "g_emb", "nrm", "g_nrm")}, 6) AS gsim")
-        .withColumn("grk", expr(
-          s"row_number() OVER (PARTITION BY $idAs ORDER BY gsim DESC, g_id)"))
-        .where(s"grk <= $keep")
-    val lists = nearestCoarse(emb, "vec_id", 1).select("vec_id", "g_id")
-    // PQ encode (same construction as pqTopK: seeded sub-codebooks)
-    val subSlices = (0 until PqM)
-      .map(m => s"slice(emb, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    val subs = emb.selectExpr("vec_id", "nrm",
-      s"posexplode(array($subSlices)) AS (m, sub)")
-    val cent = subs.where(s"vec_id < $PqK")
-      .selectExpr("m", "vec_id AS c_id", "sub AS c_sub",
-        s"CAST(floor(graft_dot(sub, sub) * $QScale.0 + 0.5) AS BIGINT) AS cq")
-    val codes = subs.join(broadcast(cent), "m")
-      .selectExpr("vec_id", "m", "c_id",
-        s"""round(graft_dot(sub, sub) - 2 * graft_dot(sub, c_sub)
-           |  + graft_dot(c_sub, c_sub), 6) AS d2""".stripMargin)
-      .withColumn("crk", expr(
-        "row_number() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, c_id ASC)"))
-      .where("crk = 1").select("vec_id", "m", "c_id")
-    val lut = subs.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "nrm AS q_nrm", "m", "sub AS q_sub")
-      .join(broadcast(cent), "m")
-      .selectExpr("q_id", "q_nrm", "m", "c_id",
-        s"CAST(floor(graft_dot(q_sub, c_sub) * $QScale.0 + 0.5) AS BIGINT) AS pq",
-        "cq")
-    // candidate set = probed lists only; ADC-score candidates from codes
-    val probes = nearestCoarse(emb.where(s"vec_id < $QuerySetSize"), "q_id", NProbe)
-      .select("q_id", "g_id")
-    val cand = probes.join(lists, "g_id")
-      .where(col("vec_id") =!= col("q_id")).select("q_id", "vec_id")
-    val adc = cand
-      .join(codes, "vec_id")
-      .join(broadcast(lut), Seq("q_id", "m", "c_id"))
-      .groupBy("q_id", "vec_id")
-      .agg(max("q_nrm").as("q_nrm"), sum("pq").as("adcq"), sum("cq").as("rq"))
-      .selectExpr("q_id", "vec_id",
-        s"""round((CAST(adcq AS DOUBLE) / $QScale.0)
-           |  / (q_nrm * sqrt(CAST(rq AS DOUBLE) / $QScale.0)), 6) AS adc_sim""".stripMargin)
-      .withColumn("ark", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY adc_sim DESC, vec_id ASC)"))
-      .where(s"ark <= ${rerankK(corpusStats(spark, dir).rows)}")
-    // exact re-rank of the rerankK survivors (the only full-vector reads)
-    val qv = emb.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    rankTopK(adc.select("q_id", "vec_id")
-      .join(emb.select("vec_id", "emb", "nrm"), "vec_id")
-      .join(broadcast(qv), "q_id")
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    val cent = coarseCent(emb, nCentroids(spark, dir))
+    val pqc = IvfIndex.pqCodebook(emb)
+    val queries = queryBatch(emb)
+    // candidate set = probed lists only, ADC-scored from their codes
+    val cand = IvfIndex.probesOf(queries, cent).select("q_id", "c_id")
+      .join(nearestLists(emb, cent, "vec_id", 1).select("vec_id", "c_id"), "c_id")
+      .join(IvfIndex.argmin(emb.selectExpr("vec_id", IvfIndex.subsOf("emb")), pqc), "vec_id")
+    // exact re-rank of the rerankK (×1) survivors: the only full-vector reads
+    IvfIndex.refineTopK(
+      IvfIndex.adc(cand, IvfIndex.pqLut(queries, pqc), Seq("q_id", "m", "code")),
+      rerankK(corpusStats(spark, dir).rows), queries, emb)
   }
 
   val ivfPqTopKSql: String =
@@ -1326,13 +1238,8 @@ object Similarity {
     */
   def filteredTopK(spark: SparkSession, dir: String): DataFrame = {
     val corpus = embDouble(spark, dir)
-    val queries = corpus.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "label AS q_label",
-        "emb AS q_emb", "nrm AS q_nrm")
-    rankTopK(corpus.join(broadcast(queries),
-        col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    rankTopK(exactScores(corpus, queryBatch(corpus),
+      col("label") === col("q_label")))
   }
 
   val filteredTopKSql: String =
@@ -1436,7 +1343,7 @@ object Similarity {
       s"vec_id < ${CorpusOps.EvalEvery * CorpusOps.SemanticEvalCap}")
     val probes = IvfIndex.probesOf(evalQ, m.cent, DeconProbes)
     IvfIndex.Float.score(IvfIndex.touchedLists(spark, probes, path), probes,
-        evalQ, m, 0)
+        evalQ, m)
       .where(s"vec_id % ${CorpusOps.EvalEvery} != 0 AND " +
         s"sim >= ${CorpusOps.SemanticTau}")
       .selectExpr("vec_id AS doc_id",
@@ -1619,16 +1526,7 @@ object Similarity {
       // consumed by the truth cross-score, Lloyd training (KmRounds + 1
       // assignment passes), and the re-code write — compute once
       .localCheckpoint()
-    val truth = content
-      .join(broadcast(queries.selectExpr("vec_id AS q_id", "emb AS q_emb",
-        "nrm AS q_nrm")))
-      .where("vec_id <> q_id")
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK")
-      .select("q_id", "vec_id")
+    val truth = ranked(exactScores(content, queries)).select("q_id", "vec_id")
 
     val stale = IvfIndex.probe(spark, dir, aug, IvfIndex.Float, queries)
 
@@ -1863,12 +1761,9 @@ object Similarity {
     */
   def ivfSq8TopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    val m = IvfIndex.Model(coarseCent(emb, nCentroids(spark, dir)))
-    val queries = emb.where(s"vec_id < $QuerySetSize")
-    val probes = IvfIndex.probesOf(queries, m.cent)
-    IvfIndex.topK(IvfIndex.Sq8,
-      IvfIndex.Sq8.encode(nearestLists(emb, m.cent, "vec_id", 1), m),
-      probes, queries, m, emb, rerankK(corpusStats(spark, dir).rows))
+    inPlanTopK(IvfIndex.Sq8, emb,
+      IvfIndex.Model(coarseCent(emb, nCentroids(spark, dir))),
+      rerankK(corpusStats(spark, dir).rows))
   }
 
   val ivfSq8TopKSql: String =
@@ -2081,24 +1976,23 @@ object Similarity {
     */
   def ivfPqIdxRecallGate(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
-    val hist = emb.where(s"vec_id % $IvfSplitMod <> 0")
-    val q = waveQueries(emb, 0)
-      .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    val bf = hist.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK").select("q_id", "vec_id")
-    val hits = IvfIndex.search(spark, dir, IvfIndex.Pq).select("q_id", "vec_id")
-      .join(bf, Seq("q_id", "vec_id"))
-      .agg(count(lit(1)).as("hits"))
-    val truth = bf.agg(count(lit(1)).as("truth"))
-    hits.crossJoin(broadcast(truth))
-      .selectExpr("'ivf_pq_idx' AS method", "hits", "truth",
-        s"CAST($IvfPqIdxRecallPct AS BIGINT) AS thr_pct",
-        s"hits * 100 >= $IvfPqIdxRecallPct * truth AS ok")
+    val bf = ranked(exactScores(emb.where(s"vec_id % $IvfSplitMod <> 0"),
+      waveQueries(emb, 0))).select("q_id", "vec_id")
+    recallRow(IvfIndex.search(spark, dir, IvfIndex.Pq), bf, "ivf_pq_idx",
+      IvfPqIdxRecallPct)
   }
+
+  /** One recall-gate row: the hits of the `topk` (q_id, vec_id) pairs in
+    * the `bf` truth and the truth size as exact integers, with the `pct`
+    * threshold and its verdict.
+    */
+  private def recallRow(topk: DataFrame, bf: DataFrame, method: String,
+      pct: Int): DataFrame =
+    topk.select("q_id", "vec_id").join(bf, Seq("q_id", "vec_id"))
+      .agg(count(lit(1)).as("hits"))
+      .crossJoin(broadcast(bf.agg(count(lit(1)).as("truth"))))
+      .selectExpr(s"'$method' AS method", "hits", "truth",
+        s"CAST($pct AS BIGINT) AS thr_pct", s"hits * 100 >= $pct * truth AS ok")
 
   val ivfPqIdxRecallGateSql: String =
     s"""WITH ${ivfPqIncrCtes(s"vec_id % $IvfSplitMod <> 0", 0)},
@@ -2138,7 +2032,6 @@ object Similarity {
   val X10Copies = 10
 
   private def emb10(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val vBase = corpusStats(spark, dir).maxKey + 1
     // widen the single-file base scan BEFORE the ×10 explode + per-row
     // vector derivation (BatchSizing: row-derived floor, no-op on a wide
@@ -2194,50 +2087,21 @@ object Similarity {
     */
   def recallGateX10(spark: SparkSession, dir: String): DataFrame = {
     val emb = emb10(spark, dir).cache()
-    val nc = nCentroids(corpusStats(spark, dir).rows * X10Copies)
-    def topk(cand: DataFrame): DataFrame = cand
-      .withColumn("rk", expr(
-        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC)"))
-      .where(s"rk <= $TopK").select("q_id", "vec_id")
-    val queries = emb.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm")
-    val bf = topk(emb.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
+    val rows = corpusStats(spark, dir).rows * X10Copies
+    val bf = ranked(exactScores(emb, queryBatch(emb))).select("q_id", "vec_id")
       .cache()
-    val cent = coarseCent(emb, nc)
-    val assigned = nearestLists(emb, cent, "vec_id", 1)
-      .select("vec_id", "emb", "nrm", "c_id")
-    val qv = emb.where(s"vec_id < $QuerySetSize")
-    val probes = IvfIndex.probesOf(qv, cent)
-    val ivf = topk(probes.join(assigned, "c_id")
-      .where(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim"))
-    // the SQ8-stored layout at the same ×10 scale: quantized lists over
-    // the same assignment, integer-dot probe, adaptive exact re-rank —
-    // recall-at-scale of the quantized index is a gate too, not only the
-    // float layout's (round-13, completing verdict item 4's evidence)
-    val rerank = rerankK(corpusStats(spark, dir).rows * X10Copies)
-    def layoutTopK(layout: IvfIndex.Layout, m: IvfIndex.Model): DataFrame =
-      IvfIndex.topK(layout, layout.encode(assigned, m), probes, qv, m, emb,
-        rerank).select("q_id", "vec_id")
-    val sq8 = layoutTopK(IvfIndex.Sq8, IvfIndex.Model(cent))
-    // the PQ-coded layout at the same ×10 scale: codes over the same
-    // assignment, ADC probe, ×PqIdxRefine adaptive exact re-rank —
-    // recall-at-scale is now a hash-checked gate for ALL THREE list
-    // layouts (round-14, completing the storage-ladder evidence)
-    val pq = layoutTopK(IvfIndex.Pq, IvfIndex.Pq.train(emb, cent, nc))
-    val truth = bf.agg(count(lit(1)).as("truth"))
-    def gateRow(hits: DataFrame, name: String): DataFrame = hits
-      .join(bf, Seq("q_id", "vec_id"))
-      .agg(count(lit(1)).as("hits"))
-      .crossJoin(broadcast(truth))
-      .selectExpr(s"'$name' AS method", "hits", "truth",
-        s"CAST($RecallGateX10Pct AS BIGINT) AS thr_pct",
-        s"hits * 100 >= $RecallGateX10Pct * truth AS ok")
-    gateRow(ivf, "ivf_x10").unionByName(gateRow(sq8, "ivf_sq8_x10"))
-      .unionByName(gateRow(pq, "ivf_pq_x10"))
+    val cent = coarseCent(emb, nCentroids(rows))
+    // every list layout over the same ×10 assignment and probes: float
+    // lists, and the SQ8 (round-13) and PQ (round-14) codes with their
+    // adaptive exact re-rank — recall at scale is a hash-checked gate for
+    // all three
+    def gateRow(layout: IvfIndex.Layout, m: IvfIndex.Model, method: String) =
+      recallRow(inPlanTopK(layout, emb, m, rerankK(rows)), bf, method,
+        RecallGateX10Pct)
+    gateRow(IvfIndex.Float, IvfIndex.Model(cent), "ivf_x10")
+      .unionByName(gateRow(IvfIndex.Sq8, IvfIndex.Model(cent), "ivf_sq8_x10"))
+      .unionByName(gateRow(IvfIndex.Pq,
+        IvfIndex.Pq.train(emb, cent, nCentroids(rows)), "ivf_pq_x10"))
       .orderBy("method")
   }
 
@@ -2450,13 +2314,8 @@ object Similarity {
     */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val corpus = embDouble(spark, dir)
-    val anchors = corpus.where(s"vec_id < $QuerySetSize")
-      .selectExpr("vec_id AS q_id", "label AS q_label",
-        "emb AS q_emb", "nrm AS q_nrm")
-    corpus.join(broadcast(anchors), col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        "CASE WHEN label = q_label THEN 'positive' ELSE 'hard_negative' END AS role",
-        s"round(${cosineExpr("q_emb", "emb", "q_nrm", "nrm")}, 6) AS sim")
+    exactScores(corpus, queryBatch(corpus), keep = Seq(
+        "CASE WHEN label = q_label THEN 'positive' ELSE 'hard_negative' END AS role"))
       .withColumn("rk", expr(
         "row_number() OVER (PARTITION BY q_id, role ORDER BY sim DESC, vec_id ASC)"))
       .where(s"rk <= $HnK")

@@ -4,8 +4,9 @@ package graft
   * lint — harvested from the prepared plans (AQE off, sf0.001) and treated
   * as a CEILING: an entry growing past its pin fails the suite. Re-pin
   * deliberately, with the rationale in the commit, never by reflex.
-  * Notable pins: `sim_recall_gate` (38) runs all seven ANN constructions
-  * plus the overlap join — a declared verification surface;
+  * Notable pins: `sim_recall_gate` (26) runs all eight ANN constructions
+  * plus the brute-force truth and the hit join — a declared verification
+  * surface;
   * `pipeline_clean_corpus` (7) is the full multi-stage dedup funnel.
   */
 object PlanAuditBudgets {
@@ -216,12 +217,16 @@ object PlanAuditBudgets {
     "sim_incremental_ivf_compact" -> 2,
     "sim_incremental_ivf_sq8" -> 2,
     "sim_incremental_ivf_sq8_append" -> 2,
-    "sim_ivf_topk" -> 5,
-    // flat IVF's 5 plus the centroid→L1-cell assignment agg (codebook-
+    // 3 since the in-plan probe runs IvfIndex.topK, whose Float layout
+    // broadcasts the Q·NProbe probe rows into the list join instead of
+    // shuffling both sides of it
+    "sim_ivf_topk" -> 3,
+    // flat IVF's 3 plus the centroid→L1-cell assignment agg (codebook-
     // sized rows; the query-side L1/fine rank windows ride the same
-    // Q-partitioned exchanges the flat probe already pays)
-    "sim_ivf2_topk" -> 6,
-    "sim_ivf_trained_topk" -> 5,
+    // Q-partitioned exchanges the flat probe already pays); 4 since the
+    // probe broadcast above
+    "sim_ivf2_topk" -> 4,
+    "sim_ivf_trained_topk" -> 3, // flat IVF's shape over trained centroids
     // IVF-PQ composes three indexes (coarse lists, per-subspace codes,
     // candidate ADC) plus an exact re-rank join — each stage shuffles once
     "sim_ivfpq_topk" -> 8,
@@ -252,7 +257,9 @@ object PlanAuditBudgets {
     // 39 since the SQ8-stored-IVF construction joined (8 constructions)
     // 30 since each construction's rank-bounded top-k is ordered without
     // a range exchange (RankedOrder)
-    "sim_recall_gate" -> 30,
+    // 26 since the ivf and ivf_trained constructions broadcast their
+    // probe rows into the list join (2 each, as in sim_ivf_topk)
+    "sim_recall_gate" -> 26,
     // ×10 gate: brute-force truth + one IVF construction over the derived
     // corpus (windows for both top-ks, assignment, probe set, hit join) —
     // a declared verification surface, constant methods regardless of sf
@@ -261,7 +268,9 @@ object PlanAuditBudgets {
     // 16 since r14: the PQ-coded construction joined (sub-code argmin
     // window, ADC aggregate, cut window, its hit join) — all three list
     // layouts now recall-gate at ×10
-    "sim_recall_gate_x10" -> 16,
+    // 14 since the float construction runs IvfIndex.topK: its probe rows
+    // are broadcast into the list join instead of shuffling both sides
+    "sim_recall_gate_x10" -> 14,
     "sim_lsh_multi_topk" -> 2, // bucket join, candidate dedup
     // assignment argmax agg + emb rejoin (the cached `assigned` subtree,
     // appearing on both self-join sides), c_id-keyed pair join, dropped-set

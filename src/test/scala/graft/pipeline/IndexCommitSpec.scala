@@ -111,4 +111,19 @@ class IndexCommitSpec extends AnyFunSuite {
     assert(committed(root))
     assert(readFile(new Path(root, "data")) === "data-fresh")
   }
+
+  private val key = IndexCommit.Content(rows = 3, maxKey = 2, fp = 7)
+
+  test("scratch-corpus index roots lie under the TempDirs root") {
+    val corpus = graft.TempDirs.scoped("index-commit-corpus")
+    val scratch = Paths.get(corpus).getParent.toString
+    val root = IndexCommit.root("fam", corpus, "_b4", key)
+    assert(root.startsWith(s"$scratch/graft_fam/"), root)
+    assert(root.endsWith("_b4_n3_f7"), root)
+  }
+
+  test("index roots of corpora outside the scratch root keep the base") {
+    assert(IndexCommit.root("fam", "/data/sf0.001", "_b4", key, "_pq") ===
+      s"${IndexCommit.Base}/graft_fam/_data_sf0.001_b4_n3_f7_pq")
+  }
 }

@@ -245,19 +245,37 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("pq topk: k ranked candidates per query, sims are valid cosines") {
-    val byQ = Similarity.pqTopK(spark, dir).collect()
-      .groupBy(_.getAs[Long]("q_id"))
-    assert(byQ.size == Similarity.QuerySetSize)
-    byQ.values.foreach { rows =>
-      assert(rows.length == Similarity.TopK)
-      val sims = rows.sortBy(_.getAs[Long]("rk")).map(_.getAs[Double]("sim"))
-      assert(sims.zip(sims.tail).forall { case (a, b) => a >= b }, "ranked desc")
-      // ADC sim is a true cosine against the RECONSTRUCTED vector, so it is
-      // bounded like any cosine (but may exceed the exact-best sim — the
-      // quantized reconstruction can overestimate; no IVF-style bound here)
-      sims.foreach(s => assert(math.abs(s) <= 1.0 + 1e-5))
-    }
+  test("ANN top-k entries re-rank exactly, rank 1 under the exact best") {
+    val emb = Similarity.embDouble(spark, dir)
+    val best = Similarity.bruteForceTopK(spark, dir).where("rk = 1")
+      .selectExpr("q_id", "sim AS best")
+    Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "pq" -> Similarity.pqTopK, "ivfpq" -> Similarity.ivfPqTopK,
+      "ivf_sq8" -> Similarity.ivfSq8TopK, "ivf" -> Similarity.ivfTopK,
+      "ivf_trained" -> Similarity.ivfTrainedTopK, "ivf2" -> Similarity.ivf2TopK)
+      .foreach { case (name, entry) =>
+        val rows = entry(spark, dir)
+          .join(emb.selectExpr("vec_id AS q_id", "emb AS q_emb", "nrm AS q_nrm"), "q_id")
+          .join(emb.select("vec_id", "emb", "nrm"), "vec_id")
+          .join(best, "q_id")
+          .selectExpr("q_id", "vec_id", "rk", "sim", "best",
+            "round(graft_dot(q_emb, emb) / (q_nrm * nrm), 6) AS exact")
+          .collect()
+        assert(rows.length == Similarity.QuerySetSize * Similarity.TopK, name)
+        rows.foreach { r =>
+          assert(r.getAs[Double]("sim") == r.getAs[Double]("exact"),
+            s"$name: sim of (${r.getAs[Long]("q_id")}, ${r.getAs[Long]("vec_id")}) " +
+              s"is ${r.getAs[Double]("sim")}, its exact cosine ${r.getAs[Double]("exact")}")
+        }
+        rows.groupBy(_.getAs[Long]("q_id")).foreach { case (q, qr) =>
+          val sims = qr.sortBy(_.getAs[Long]("rk")).map(_.getAs[Double]("sim"))
+          assert(sims.zip(sims.tail).forall { case (a, b) => a >= b },
+            s"$name: query $q ranked desc")
+          assert(sims.head <= qr.head.getAs[Double]("best"),
+            s"$name: query $q rank 1 beats the brute-force best")
+        }
+      }
   }
 
   test("recall gate: every approximate index clears its declared threshold") {
