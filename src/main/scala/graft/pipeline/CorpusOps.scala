@@ -506,14 +506,13 @@ object CorpusOps {
   def mergeMvDelta(spark: SparkSession, work: String, docs: DataFrame,
       ver: Long): Unit = {
     val delta = rollup(docs)
-    val touched = delta.select("source").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // metadata-scale
+    val touched = IndexCommit.touchedDirs(delta, "source")
     if (touched.isEmpty) return
     val root = new org.apache.hadoop.fs.Path(work)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existing = touched
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(root, s"source=$s")))
-      .map(s => s"$work/source=$s")
+      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(root, d)))
+      .map(d => s"$work/$d")
     val current =
       if (existing.isEmpty)
         delta.limit(0).withColumn("ver", lit(0L))
@@ -524,7 +523,7 @@ object CorpusOps {
       .agg(sum("n_docs").as("n_docs"), sum("sum_chars").as("sum_chars"))
       .withColumn("ver", lit(ver))
     graft.streaming.Sinks.partitionedUpsertBatch(
-      merged, work,
+      merged, work, touched,
       partitionCols = Seq("source"), keyCols = Seq("source", "lang"),
       versionCols = Seq("ver"), sortCols = Seq("lang"))
   }

@@ -867,44 +867,6 @@ object Dedup {
       s"index path carries no _b<buckets> suffix: $indexPath"))
   }
 
-  // ---- bucket manifest: the metastore stand-in for partition listing ----
-
-  /** Name of the build-time bucket manifest inside an index dir: one
-    * `band,bhp` line per non-empty bucket. This is the probe's ONLY
-    * pruning input — never the filesystem. A real deployment would keep
-    * this in the metastore / a table format's partition metadata; a plain
-    * committed file carries the same information on any Hadoop-compatible
-    * store (local, HDFS, S3A), which is what makes the pruned probe
-    * object-store-portable: on a store where directory probing is slow,
-    * unreliable, or (driver-side `java.io.File`) simply wrong, the
-    * manifest still answers "which buckets exist" in one small read.
-    */
-  val ManifestFile = "_buckets"
-
-  /** Overwrite the index's bucket manifest with `buckets`. Metadata-scale
-    * by construction (≤ B × IndexBuckets lines).
-    */
-  private[pipeline] def writeManifest(spark: SparkSession, indexPath: String,
-      buckets: Set[(Int, Int)]): Unit =
-    IndexCommit.writeManifest(spark, indexPath, ManifestFile,
-      buckets.toSeq.sorted.map { case (b, h) => s"$b,$h" })
-
-  /** The committed bucket set of an index; fails loud when the manifest
-    * is absent ([[IndexCommit.readLines]]).
-    */
-  def readManifest(spark: SparkSession, indexPath: String): Set[(Int, Int)] =
-    IndexCommit.readManifest(spark, indexPath, ManifestFile,
-      s"no $ManifestFile manifest at $indexPath — index was not built by " +
-        "ensureMinhashIndex (or predates the manifest); rebuild the index")
-      .map { l => val Array(b, h) = l.split(','); (b.toInt, h.toInt) }.toSet
-
-  /** Add `extra` buckets to an index's manifest (the append path's
-    * metadata commit — new buckets become probe-visible).
-    */
-  private[pipeline] def augmentManifest(spark: SparkSession, indexPath: String,
-      extra: Set[(Int, Int)]): Unit =
-    writeManifest(spark, indexPath, readManifest(spark, indexPath) ++ extra)
-
   /** Build-once: write the historical corpus's MinHash band index —
     * (doc_id, band, bh) plus the full 16-component signature (i0..i15) —
     * partitioned by (band, bhp = pmod(bh, IndexBuckets)), iff no committed
@@ -917,12 +879,12 @@ object Dedup {
     * those dirs — see [[incrementalProbe]] with `prune = true`. Rows are
     * range-sorted by bh inside each bucket file so parquet row-group
     * stats stay tight if buckets ever span row groups. The build commits
-    * the partitioned data and the [[ManifestFile]] bucket manifest the
-    * pruned probe consults through [[IndexCommit.publish]].
+    * the partitioned data and the bucket manifest the pruned probe
+    * consults through [[IndexCommit.publishPartitioned]].
     */
   def ensureMinhashIndex(spark: SparkSession, dir: String): String =
-    IndexCommit.publish(spark, indexPath(spark, dir), Seq(IndexCommit.Root),
-      Seq(ManifestFile)) { tmp =>
+    IndexCommit.publishPartitioned(spark, indexPath(spark, dir),
+      Seq(IndexCommit.Root), Seq("band", "bhp")) { tmp =>
       val hist = Tables.load(spark, dir, "documents")
         .where(s"doc_id % $IncrSplitMod <> 0")
       val sig = minhashSignatures(hist)
@@ -934,11 +896,7 @@ object Dedup {
         .sortWithinPartitions("band", "bhp", "bh")
         .write.mode("overwrite").partitionBy("band", "bhp")
         .parquet(tmp)
-      // manifest = the dirs the write just created, listed ONCE at build
-      // time (a one-time O(B×buckets) LIST is the layout-commit cost)
-      writeManifest(spark, tmp, IndexCommit.partitionValues(spark, tmp, "band")
-        .flatMap(b => IndexCommit.partitionValues(spark, s"$tmp/band=$b", "bhp")
-          .map(h => (b.toInt, h.toInt))).toSet)
+      Map.empty
     }
 
   /** The persisted index, read back (the driver-checkable surface of the
@@ -1007,7 +965,7 @@ object Dedup {
     * bucket set — distinct (band, pmod(bh, buckets)) of its OWN band
     * hashes, at most B × IndexBuckets values, collected to the driver
     * (metadata-scale, never data-scale) — intersects it with the index's
-    * build-time [[ManifestFile]] bucket manifest (the metastore stand-in;
+    * build-time bucket manifest (the metastore stand-in;
     * NEVER the filesystem — a driver that probes paths is wrong on any
     * store where "exists" is slow or lies, and a miss would fail SILENT
     * to an empty result instead of loud), and opens the index reader
@@ -1032,19 +990,10 @@ object Dedup {
     val newBands = minhashSignatures(incoming)
       .selectExpr(Seq("doc_id") ++ (0 until H).map(i => s"m$i")
         :+ s"posexplode($bandArrayExpr) AS (band, bh)": _*)
-    val touchedDirs = Option.when(prune) {
-      val p = bucketsOf(indexPath)
-      val manifest = readManifest(spark, indexPath) // fails loud if absent
-      newBands
-        .selectExpr("band", s"CAST(pmod(bh, $p) AS INT) AS bhp").distinct()
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)))
-        .filter(manifest.contains) // absent from manifest = no rows
-        .map { case (b, h) => s"band=$b/bhp=$h" }
-        .sorted.toSeq
-    }
-    val idxPruned = IndexCommit.read(spark, indexPath, IndexCommit.Root, touchedDirs)
-    val idx = idxPruned
+    val idx = (if (!prune) IndexCommit.read(spark, indexPath, IndexCommit.Root, None)
+      else IndexCommit.readPruned(spark, indexPath, IndexCommit.Root,
+        IndexCommit.touchedDirs(newBands.selectExpr("band",
+          s"CAST(pmod(bh, ${bucketsOf(indexPath)}) AS INT) AS bhp"), "band", "bhp")))
       .selectExpr(Seq("doc_id AS hist_id", "band", "bh")
         ++ (0 until H).map(i => s"i$i"): _*)
     val matchExpr = matchSum("m", "i")
@@ -1210,7 +1159,7 @@ object Dedup {
     * buckets) — independent of index size ([[graft.tools.Scale]] `inplace`
     * measures it against 1×/10×/100× indexes).
     *
-    * The manifest commit ([[augmentManifest]]) is LOAD-BEARING, not
+    * The manifest commit ([[IndexCommit.augment]]) is LOAD-BEARING, not
     * bookkeeping: an accepted row landing in a bucket the manifest does
     * not name would be invisible to the pruned wave-2 probe — and the
     * DuckDB oracle (which recomputes from scratch) would break the hash.
@@ -1325,14 +1274,12 @@ object Dedup {
     val accepted = bandRowsFor(docsToAppend, p)
       .persist() // read 3× below (touched set, merge, write) — one compute
     try {
-      val touchedBuckets = timed(phase, "probe_wave1_sign_accepted") {
-        accepted.select("band", "bhp").distinct()
-          .collect() // ≤ B × p bucket ids: metadata-scale
-          .map(r => (r.getInt(0), r.getInt(1))).toSet
+      val touched = timed(phase, "probe_wave1_sign_accepted") {
+        IndexCommit.touchedDirs(accepted, "band", "bhp") // ≤ B × p buckets
       }
       timed(phase, "bucketwise_append") {
         graft.streaming.Sinks.partitionedUpsertBatch(
-          accepted.toDF(), augIndexPath,
+          accepted.toDF(), augIndexPath, touched,
           partitionCols = Seq("band", "bhp"),
           keyCols = Seq("doc_id", "band"), versionCols = Seq("bh"),
           sortCols = Seq("bh"))
@@ -1341,7 +1288,7 @@ object Dedup {
       // bucket the manifest does not name would be invisible to the
       // pruned probe
       timed(phase, "manifest_commit") {
-        augmentManifest(spark, augIndexPath, touchedBuckets)
+        IndexCommit.augment(spark, augIndexPath, touched)
       }
     } finally accepted.unpersist()
   }

@@ -33,9 +33,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * committed index, discard their temp, and proceed — no torn state is
   * ever visible at the final path.
   *
-  * It also owns the one line-file format of the families' manifests
-  * (`_buckets`, `_postings`, `_lists`, the snapshot versions): each caller
-  * keeps its own line syntax and its own missing-manifest message.
+  * It owns the one partition manifest of every bucketed index (the IVF
+  * lists, the MinHash bands, the line index, the BM25 term buckets):
+  * [[PartitionsFile]] at the index root, one partition dir per line
+  * (`c_id=5`, `band=1/bhp=3`, `lb=7`, `tb=12`) plus the index's totals
+  * (`#n_docs=N`). The build writes it from one listing of the dirs it
+  * wrote ([[publishPartitioned]]), a probe reads only the touched dirs it
+  * names ([[readPruned]]), and an append adds exactly the dirs it touched
+  * ([[augment]]) — the touched set computed once ([[touchedDirs]]) and
+  * shared with the upsert that writes them. The plain line files under it
+  * ([[writeLines]], [[readLines]]) also carry the snapshot versions and
+  * the OPQ rotation.
   *
   * And it owns the one pruned reader of committed index artifacts: the
   * schema record [[SchemaFile]] holds one inference per artifact, made at
@@ -131,32 +139,80 @@ object IndexCommit {
     text.split('\n').toSeq.filter(_.nonEmpty)
   }
 
-  /** Overwrite the manifest `file` of the index at `root` with `lines`. */
-  def writeManifest(spark: SparkSession, root: String, file: String,
-      lines: Seq[String]): Unit = {
-    val (fs, r) = fsOf(spark, root)
-    writeLines(fs, new Path(r, file), lines)
+  /** The one partition manifest of a bucketed index, at its root: one
+    * partition dir per line, relative to the partitioned artifact
+    * (`c_id=5`, `band=1/bhp=3`), then one `#<key>=<value>` line per index
+    * total. A dir line starts with its column name, so no `#` total
+    * line reads as a dir. The probes' ONLY pruning input: never the
+    * filesystem, whose "exists" is slow or wrong on an object store.
+    */
+  final val PartitionsFile = "_partitions"
+
+  private val TotalMark = "#"
+
+  /** Partition dirs in value order: numeric values compare as numbers. */
+  private val DirOrder: Ordering[String] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    Ordering.by((d: String) => d.split('/').toSeq.map { kv =>
+      val (k, v) = kv.splitAt(kv.indexOf('=') + 1)
+      (k, v.toLongOption.getOrElse(Long.MaxValue), v)
+    })
   }
 
-  /** The non-empty lines of the manifest `file` of the index at `root`;
-    * fails loud with `absent` ([[readLines]]).
-    */
-  def readManifest(spark: SparkSession, root: String, file: String,
-      absent: => String): Seq[String] = {
+  private def writePartitions(spark: SparkSession, root: String,
+      dirs: Iterable[String], totals: Map[String, Long]): Unit = {
     val (fs, r) = fsOf(spark, root)
-    readLines(fs, new Path(r, file), absent)
+    writeLines(fs, new Path(r, PartitionsFile), dirs.toSeq.distinct.sorted(DirOrder) ++
+      totals.toSeq.sortBy(_._1).map { case (k, v) => s"$TotalMark$k=$v" })
   }
 
-  /** The values `v` of the `<column>=v` partition dirs directly under
-    * `dir`: a build's one listing of the layout it just wrote, for its
-    * manifest (probes never list).
+  /** The committed dirs and totals of the index at `root`; fails loud when
+    * the manifest is absent ([[readLines]]).
     */
-  def partitionValues(spark: SparkSession, dir: String,
-      column: String): Seq[String] = {
-    val (fs, d) = fsOf(spark, dir)
-    fs.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith(s"$column=")).map(_.stripPrefix(s"$column="))
+  private def manifest(spark: SparkSession,
+      root: String): (Set[String], Map[String, Long]) = {
+    val (fs, r) = fsOf(spark, root)
+    val (totals, dirs) = readLines(fs, new Path(r, PartitionsFile),
+      s"no $PartitionsFile manifest at $root — the index was not committed " +
+        "by IndexCommit.publishPartitioned; rebuild the index")
+      .partition(_.startsWith(TotalMark))
+    (dirs.toSet, totals.map { l =>
+      val Array(k, v) = l.stripPrefix(TotalMark).split('='); k -> v.toLong
+    }.toMap)
   }
+
+  /** The committed partition dirs of the index at `root`. */
+  def partitions(spark: SparkSession, root: String): Set[String] =
+    manifest(spark, root)._1
+
+  private def noTotal(root: String, key: String) = new IllegalStateException(
+    s"no total $key in the $PartitionsFile manifest at $root; rebuild the index")
+
+  /** The committed totals `keys` of the index at `root`; fails loud when
+    * the manifest or one of the totals is absent.
+    */
+  def totals(spark: SparkSession, root: String, keys: Seq[String]): Seq[Long] = {
+    val committed = manifest(spark, root)._2
+    keys.map(k => committed.getOrElse(k, throw noTotal(root, k)))
+  }
+
+  /** The partition dirs (`c=v[/c=v]`) of `frame`'s distinct `cols` values:
+    * the dirs a batch lands in or a probe touches, through ONE collect
+    * (metadata-scale: at most the index's partition count).
+    */
+  def touchedDirs(frame: DataFrame, cols: String*): Seq[String] =
+    frame.select(cols.map(col): _*).distinct().collect().toSeq
+      .map(r => cols.indices.map(i => s"${cols(i)}=${r.get(i)}").mkString("/"))
+      .sorted(DirOrder)
+
+  /** The `cols` partition dirs (`c=v[/c=v]`) under `dir`: a build's one
+    * listing of the layout it just wrote.
+    */
+  private def listPartitions(fs: FileSystem, dir: Path,
+      cols: Seq[String]): Seq[String] =
+    fs.globStatus(new Path(dir, cols.map(c => s"$c=*").mkString("/")))
+      .toSeq.filter(_.isDirectory).map(s => Iterator.iterate(s.getPath)(_.getParent)
+        .take(cols.size).map(_.getName).toSeq.reverse.mkString("/"))
 
   /** Record the schemas of `artifacts` under `root` in its [[SchemaFile]],
     * each exactly as `spark.read.parquet` infers it (the one inference the
@@ -184,11 +240,11 @@ object IndexCommit {
   }
 
   /** What the index at `root` lacks of its declared `artifacts` (each one's
-    * `_SUCCESS` and schema record) and `manifests`, relative to `root`:
-    * empty exactly when the index is committed.
+    * `_SUCCESS` and schema record) and `files`, relative to `root`: empty
+    * exactly when the index is committed.
     */
   def missing(spark: SparkSession, root: String, artifacts: Seq[String],
-      manifests: Seq[String]): Seq[String] = {
+      files: Seq[String]): Seq[String] = {
     val (fs, r) = fsOf(spark, root)
     val record = new Path(r, SchemaFile)
     val recorded =
@@ -198,24 +254,65 @@ object IndexCommit {
       val success = if (a == Root) "_SUCCESS" else s"$a/_SUCCESS"
       Option.when(!fs.exists(new Path(r, success)))(success) ++
         Option.when(!recorded(a))(s"$SchemaFile:$a")
-    } ++ manifests.filterNot(m => fs.exists(new Path(r, m)))
+    } ++ files.filterNot(m => fs.exists(new Path(r, m)))
   }
+
+  /** [[missing]] for a bucketed index, whose manifest is declared too. */
+  def missingPartitioned(spark: SparkSession, root: String,
+      artifacts: Seq[String], files: Seq[String] = Nil): Seq[String] =
+    missing(spark, root, artifacts, PartitionsFile +: files)
 
   /** The one commit rule: reuse the committed index at `root`, or run
     * `build` into a temp sibling dir (it writes the declared `artifacts`,
-    * each with its `_SUCCESS`, and the declared `manifests`), record the
+    * each with its `_SUCCESS`, and the declared line `files`), record the
     * artifacts' schemas and publish the whole index with one atomic
     * rename ([[ensure]]). Returns `root`.
     */
   def publish(spark: SparkSession, root: String, artifacts: Seq[String],
-      manifests: Seq[String] = Nil)(build: String => Unit): String = {
+      files: Seq[String] = Nil)(build: String => Unit): String = {
     val (fs, r) = fsOf(spark, root)
-    ensure(fs, r)(p => missing(spark, p.toString, artifacts, manifests).isEmpty) {
+    ensure(fs, r)(p => missing(spark, p.toString, artifacts, files).isEmpty) {
       tmp =>
         build(tmp.toString)
         recordSchemas(spark, tmp.toString, artifacts)
     }
     root
+  }
+
+  /** [[publish]] for a bucketed index: `artifact` is written partitioned
+    * by `cols`, and its manifest is the one listing of the partition dirs
+    * the build wrote plus the totals `build` returns. An index without the
+    * manifest is uncommitted, so a root from before it rebuilds once.
+    */
+  def publishPartitioned(spark: SparkSession, root: String,
+      artifacts: Seq[String], cols: Seq[String], files: Seq[String] = Nil,
+      artifact: String = Root)(build: String => Map[String, Long]): String =
+    publish(spark, root, artifacts, PartitionsFile +: files) { tmp =>
+      val totals = build(tmp)
+      val (fs, dir) = fsOf(spark, artifactPath(tmp, artifact))
+      writePartitions(spark, tmp, listPartitions(fs, dir, cols), totals)
+    }
+
+  /** The pruned read of a bucketed index: the `touched` dirs of `artifact`
+    * that its manifest names, read by [[read]]. A touched dir absent from
+    * the manifest holds no rows; a missing manifest fails loud.
+    */
+  def readPruned(spark: SparkSession, root: String, artifact: String,
+      touched: Seq[String]): DataFrame = {
+    val committed = partitions(spark, root)
+    read(spark, root, artifact, Some(touched.distinct.filter(committed).sorted(DirOrder)))
+  }
+
+  /** The append commit of a bucketed index: the `touched` dirs join its
+    * manifest and `added` is summed into its totals, in one write. Fails
+    * loud when the manifest or one of the added totals is absent.
+    */
+  def augment(spark: SparkSession, root: String, touched: Seq[String],
+      added: Map[String, Long] = Map.empty): Unit = {
+    val (dirs, totals) = manifest(spark, root)
+    writePartitions(spark, root, dirs ++ touched, totals ++ added.map {
+      case (k, v) => k -> (v + totals.getOrElse(k, throw noTotal(root, k)))
+    })
   }
 
   /** The pruned reader: `dirs` (partition dirs relative to the artifact,

@@ -17,9 +17,11 @@ import Similarity._
   *    (with corpus-adaptive sizing an index's codebook and a different
   *    corpus's derived one need not agree, so every consumer reads it back
   *    from here);
-  *  - the layout's extra training artifacts ([[Layout.artifacts]]);
-  *  - [[ListsManifestFile]]: the non-empty list ids, the probe's ONLY
-  *    pruning input (never the filesystem);
+  *  - the layout's extra training artifacts ([[Layout.artifacts]]) and
+  *    line files ([[Layout.files]]);
+  *  - the partition manifest ([[IndexCommit.publishPartitioned]]): the
+  *    non-empty `c_id=` list dirs, the probe's ONLY pruning input (never
+  *    the filesystem);
   *  - [[IndexCommit.SchemaFile]]: the schemas of the lists and of every
   *    artifact, which every probe reads under ([[IndexCommit.read]]).
   *
@@ -31,17 +33,14 @@ import Similarity._
   */
 object IvfIndex {
 
-  /** One non-empty `c_id` per line (the metastore-stand-in contract of
-    * [[Dedup.ManifestFile]], single-level key here).
-    */
-  final val ListsManifestFile = "_lists"
-
-  /** Artifact subdirs carry a leading underscore: invisible to parquet
-    * scans of the index root, like `_lists`/`_SUCCESS`.
+  /** Artifact subdirs and files carry a leading underscore: invisible to
+    * parquet scans of the index root, like the manifest and `_SUCCESS`.
     */
   final val CodebookDir = "_codebook"
   final val PqCodebookDir = "_pqcodebook"
-  final val OpqPermDir = "_opqperm"
+
+  /** The OPQ rotation: one source dimension per line, in target order. */
+  final val OpqPermFile = "_opqperm"
 
   /** The trained artifacts of one index: the coarse codebook (c_id, c_emb,
     * c_nrm), the PQ sub-codebook (m, p_id, p_sub[, pcq]) of the code
@@ -54,14 +53,15 @@ object IvfIndex {
     * on top of the shared protocol — its path `tag` (part of the on-disk
     * contract: an index built under other rules is never reused), the
     * training `artifacts` it persists beyond the codebook and manifest,
-    * the `encode` of assigned rows into list rows, and its `score` of
+    * its line `files`, the `encode` of assigned rows into list rows, and
+    * its `score` of
     * probed list rows. `refine` multiplies [[rerankK]] into the cut of the
     * approximate layouts' exact re-rank ([[topK]]); 0 marks exact scores.
     * The in-plan [[ivfPqTopK]] composes the same steps over unpacked codes
     * and cuts at ×1.
     */
   sealed abstract class Layout(val tag: String, val artifacts: Seq[String],
-      val refine: Int) {
+      val refine: Int, val files: Seq[String] = Nil) {
 
     /** The model trained on `emb` around the coarse codebook `cent`. */
     def train(emb: DataFrame, cent: DataFrame, nc: Int): Model = Model(cent)
@@ -136,8 +136,8 @@ object IvfIndex {
     * corpus it reaches the 72% recall gate at ×[[PqResRefine]], half the
     * raw-code layout's re-rank IO.
     */
-  sealed abstract class Residual(t: String, a: Seq[String])
-      extends Layout(t, a, PqResRefine) {
+  sealed abstract class Residual(t: String, a: Seq[String],
+      f: Seq[String] = Nil) extends Layout(t, a, PqResRefine, f) {
 
     def encode(assigned: DataFrame, m: Model): DataFrame = pack(argmin(
       assigned.join(broadcast(m.cent.select("c_id", "c_emb")), "c_id")
@@ -182,9 +182,10 @@ object IvfIndex {
 
   /** OPQ (FAISS `OPQMatrix` + IndexIVFPQ) restricted to permutations: the
     * residual layout at the same byte budget, with the rotation learned by
-    * [[opqPermutation]] at build time and persisted in [[OpqPermDir]].
+    * [[opqPermutation]] at build time and persisted in [[OpqPermFile]], so
+    * opening the index reads it with no job.
     */
-  case object Opq extends Residual("_opq1", Seq(PqCodebookDir, OpqPermDir)) {
+  case object Opq extends Residual("_opq1", Seq(PqCodebookDir), Seq(OpqPermFile)) {
     override def train(emb: DataFrame, cent: DataFrame, nc: Int): Model = {
       val perm = opqPermutation(emb.where(s"vec_id % $IvfSplitMod <> 0"), cent)
       Model(cent, Some(pqCodebookRes(emb, cent, nc, perm)), perm)
@@ -207,52 +208,33 @@ object IvfIndex {
   private def artifacts(layout: Layout): Seq[String] =
     IndexCommit.Root +: CodebookDir +: layout.artifacts
 
-  private def listsManifestWrite(spark: SparkSession, indexPath: String,
-      lists: Set[Long]): Unit =
-    IndexCommit.writeManifest(spark, indexPath, ListsManifestFile,
-      lists.toSeq.sorted.map(_.toString))
-
-  /** Committed inverted-list ids; fails loud when absent
-    * ([[IndexCommit.readLines]]).
-    */
-  def listsManifestRead(spark: SparkSession, indexPath: String): Set[Long] =
-    IndexCommit.readManifest(spark, indexPath, ListsManifestFile,
-      s"no $ListsManifestFile manifest at $indexPath — index was not " +
-        "built by IvfIndex.ensure; rebuild the index")
-      .map(_.toLong).toSet
-
   /** Repartition-by-list write of list rows under `root`. */
   private def writeLists(lists: DataFrame, root: String, mode: String): Unit =
     lists.repartition(col("c_id"))
       .sortWithinPartitions("c_id", "vec_id")
       .write.mode(mode).partitionBy("c_id").parquet(root)
 
-  /** Build-then-publish an index root ([[IndexCommit.publish]]): `build`
-    * lays the list dirs and artifacts into a temp sibling and the manifest
-    * of the written list dirs follows. A no-op when `root` already holds a
-    * committed `layout` index.
+  /** Build-then-publish an index root ([[IndexCommit.publishPartitioned]]):
+    * `build` lays the list dirs and artifacts into a temp sibling and the
+    * manifest of the written `c_id=` dirs follows. A no-op when `root`
+    * already holds a committed `layout` index.
     */
   private def publish(spark: SparkSession, root: String, layout: Layout)(
       build: String => Unit): String =
-    IndexCommit.publish(spark, root, artifacts(layout), Seq(ListsManifestFile)) {
-      tmp =>
-        build(tmp)
-        listsManifestWrite(spark, tmp,
-          IndexCommit.partitionValues(spark, tmp, "c_id").map(_.toLong).toSet)
-    }
+    IndexCommit.publishPartitioned(spark, root, artifacts(layout), Seq("c_id"),
+      layout.files) { tmp => build(tmp); Map.empty }
 
   /** Lists plus every artifact of `m` into `tmp`. */
   private def writeIndex(spark: SparkSession, tmp: String, lists: DataFrame,
       m: Model): Unit = {
-    import spark.implicits._
     writeLists(lists, tmp, "overwrite")
     m.cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
     m.pq.foreach(_.coalesce(1).write.mode("overwrite")
       .parquet(s"$tmp/$PqCodebookDir"))
-    if (m.perm.nonEmpty)
-      m.perm.zipWithIndex.map { case (src, pos) => (pos, src) }
-        .toDF("pos", "src").coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/$OpqPermDir")
+    if (m.perm.nonEmpty) {
+      val (fs, root) = IndexCommit.fsOf(spark, tmp)
+      IndexCommit.writeLines(fs, new Path(root, OpqPermFile), m.perm.map(_.toString))
+    }
   }
 
   /** Build-once: the historical corpus assigned to its nearest coarse
@@ -276,17 +258,20 @@ object IvfIndex {
     * neighbors.
     */
   def open(spark: SparkSession, indexPath: String, layout: Layout): Model = {
-    val gone = IndexCommit.missing(spark, indexPath, artifacts(layout),
-      Seq(ListsManifestFile))
+    val gone = IndexCommit.missingPartitioned(spark, indexPath,
+      artifacts(layout), layout.files)
     if (gone.nonEmpty)
       throw new IllegalStateException(
         s"$layout IVF index at $indexPath lacks ${gone.mkString(", ")} — " +
           "it was not built by IvfIndex.ensure; rebuild the index")
     def read(a: String): DataFrame = IndexCommit.read(spark, indexPath, a, None)
+    val (fs, root) = IndexCommit.fsOf(spark, indexPath)
     Model(read(CodebookDir),
       Option.when(layout.artifacts.contains(PqCodebookDir))(read(PqCodebookDir)),
-      if (!layout.artifacts.contains(OpqPermDir)) Nil
-      else read(OpqPermDir).orderBy("pos").collect().map(_.getInt(1)).toSeq)
+      if (!layout.files.contains(OpqPermFile)) Nil
+      else IndexCommit.readLines(fs, new Path(root, OpqPermFile),
+        s"no $OpqPermFile at $indexPath")
+        .map(_.toInt))
   }
 
   // ------------------------------------------------------------- probing
@@ -297,20 +282,14 @@ object IvfIndex {
     nearestLists(queries, cent, "q_id", nprobe)
       .selectExpr("q_id", "emb AS q_emb", "nrm AS q_nrm", "c_id")
 
-  /** The list rows of the probed lists: manifest-intersected, read as
-    * basePath-rooted point lookups of the touched `c_id=` dirs only
-    * ([[IndexCommit.read]]) — the reader never lists the index root.
+  /** The list rows of the probed lists: the probes' `c_id=` dirs
+    * (≤ Q × NProbe), manifest-intersected and point-read
+    * ([[IndexCommit.readPruned]]) — the reader never lists the index root.
     */
   private[pipeline] def touchedLists(spark: SparkSession, probes: DataFrame,
-      indexPath: String): DataFrame = {
-    val manifest = listsManifestRead(spark, indexPath) // fails loud if absent
-    val touched = probes.select("c_id").distinct()
-      .collect() // ≤ Q × NProbe list ids: metadata-scale
-      .map(_.getLong(0))
-      .filter(manifest.contains) // absent from manifest = empty list
-      .sorted.map(c => s"c_id=$c")
-    IndexCommit.read(spark, indexPath, IndexCommit.Root, Some(touched.toSeq))
-  }
+      indexPath: String): DataFrame =
+    IndexCommit.readPruned(spark, indexPath, IndexCommit.Root,
+      IndexCommit.touchedDirs(probes, "c_id"))
 
   /** Ranked top-`k` of probed list rows. An exact layout ranks its scores;
     * an approximate one goes through [[refineTopK]] with a cut of
@@ -387,14 +366,12 @@ object IvfIndex {
         .select("vec_id", "emb", "nrm", "c_id"), m)
       .persist() // read twice (touched set, write) — one compute
     try {
-      val touched = wave.select("c_id").distinct()
-        .collect().map(_.getLong(0)).toSet // ≤ |wave| list ids
+      val touched = IndexCommit.touchedDirs(wave, "c_id") // ≤ |wave| lists
       if (merge) graft.streaming.Sinks.partitionedUpsertBatch(wave, indexPath,
-        partitionCols = Seq("c_id"), keyCols = Seq("vec_id"),
+        touched, partitionCols = Seq("c_id"), keyCols = Seq("vec_id"),
         versionCols = Seq("vec_id"), sortCols = Seq("vec_id"))
       else writeLists(wave, indexPath, "append")
-      listsManifestWrite(spark, indexPath,
-        listsManifestRead(spark, indexPath) ++ touched)
+      IndexCommit.augment(spark, indexPath, touched)
     } finally wave.unpersist()
   }
 
@@ -495,13 +472,14 @@ object IvfIndex {
 
   // -------------------------------------------------- index maintenance
 
-  /** Per-list data-file counts of a committed index — the fragmentation
-    * accounting ([[graft.pipeline.IvfCompactSpec]] pins N→1).
+  /** Per-list data-file counts of a committed index, by `c_id=` dir —
+    * the fragmentation accounting ([[graft.pipeline.IvfCompactSpec]] pins
+    * N→1).
     */
-  def listFileCounts(spark: SparkSession, indexPath: String): Map[Long, Int] = {
+  def listFileCounts(spark: SparkSession, indexPath: String): Map[String, Int] = {
     val (fs, _) = IndexCommit.fsOf(spark, indexPath)
-    listsManifestRead(spark, indexPath).toSeq.sorted.map { c =>
-      c -> fs.listStatus(new Path(s"$indexPath/c_id=$c")).count { s =>
+    IndexCommit.partitions(spark, indexPath).map { d =>
+      d -> fs.listStatus(new Path(s"$indexPath/$d")).count { s =>
         val n = s.getPath.getName
         s.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
@@ -516,16 +494,13 @@ object IvfIndex {
     * is proportional to the fragmented lists only.
     */
   def compact(spark: SparkSession, src: String, dst: String): Unit = {
-    val counts = listFileCounts(spark, src)
-    val fragmented = counts.collect { case (c, n) if n > 1 => c }.toSeq.sorted
+    val (single, fragmented) = listFileCounts(spark, src).partition(_._2 <= 1)
     publish(spark, dst, Float) { tmp =>
-      counts.keys.filter(counts(_) <= 1).toSeq.sorted.foreach { c =>
-        graft.TempDirs.copyTree(spark, s"$src/c_id=$c", s"$tmp/c_id=$c")
-      }
+      single.keys.foreach(d => graft.TempDirs.copyTree(spark, s"$src/$d", s"$tmp/$d"))
       graft.TempDirs.copyTree(spark, s"$src/$CodebookDir", s"$tmp/$CodebookDir")
       if (fragmented.nonEmpty)
-        writeLists(IndexCommit.read(spark, src, IndexCommit.Root,
-            Some(fragmented.map(c => s"c_id=$c")))
+        writeLists(IndexCommit.readPruned(spark, src, IndexCommit.Root,
+            fragmented.keys.toSeq)
           .select("vec_id", "emb", "nrm", "c_id"), tmp, "append")
       val (fs, succ) = IndexCommit.fsOf(spark, s"$tmp/_SUCCESS")
       if (!fs.exists(succ)) fs.create(succ).close()

@@ -182,17 +182,17 @@ object LineDedup {
 
   /** Build-once: the BASE corpus's (line, first_key) table — the batch
     * form of `stream_line_dedup`'s standing RocksDB state — partitioned
-    * into [[LineBuckets]] `lb=` hash buckets with a [[Dedup.ManifestFile]]
-    * manifest and a schema record, so a refresh probe reads only its
-    * batch's touched buckets (the [[Dedup.ensureMinhashIndex]] storage
-    * contract; manifest lines reuse the (band, bhp) form with band pinned
-    * to 0), at its content-keyed [[IndexCommit.root]].
+    * into [[LineBuckets]] `lb=` hash buckets with a partition manifest
+    * and a schema record ([[IndexCommit.publishPartitioned]]), so a
+    * refresh probe reads only its batch's touched buckets (the
+    * [[Dedup.ensureMinhashIndex]] storage contract), at its content-keyed
+    * [[IndexCommit.root]].
     */
   def ensureLineIndex(spark: SparkSession, dir: String): String =
-    IndexCommit.publish(spark,
+    IndexCommit.publishPartitioned(spark,
       IndexCommit.root("line_index", dir, s"_b$LineBuckets",
         Dedup.docsStats(spark, dir)),
-      Seq(IndexCommit.Root), Seq(Dedup.ManifestFile)) { tmp =>
+      Seq(IndexCommit.Root), Seq("lb")) { tmp =>
       val base = graft.Tables.load(spark, dir, "documents")
         .where(s"doc_id % ${Dedup.IncrSplitMod} <> 0")
       lineTable(base)
@@ -204,8 +204,7 @@ object LineDedup {
         .repartition(org.apache.spark.sql.functions.col("lb"))
         .sortWithinPartitions("lb", "line")
         .write.mode("overwrite").partitionBy("lb").parquet(tmp)
-      Dedup.writeManifest(spark, tmp, IndexCommit.partitionValues(spark, tmp, "lb")
-        .map(l => (0, l.toInt)).toSet)
+      Map.empty
     }
 
   /** Refresh probe: per-doc line accounting for an incoming batch against
@@ -213,7 +212,7 @@ object LineDedup {
     * equal to the corpus+batch recompute restricted to the batch's rows,
     * with base-corpus IO bounded by the batch's touched `lb=` buckets
     * (manifest-intersected point lookups under the recorded schema,
-    * [[IndexCommit.read]]; the index root is never listed). A batch line
+    * [[IndexCommit.readPruned]]; the index root is never listed). A batch line
     * occurrence is kept iff its packed key is the minimum over {base first
     * key if present, batch-internal minimum}.
     */
@@ -224,12 +223,9 @@ object LineDedup {
     val batchLines = lineTable(incoming)
       .selectExpr("doc_id", "line_idx", "line",
         s"doc_id * ${1L << IdxBits} + line_idx AS k")
-    val manifest = Dedup.readManifest(spark, path).map(_._2) // fails loud
-    val touched = batchLines
-      .selectExpr(s"CAST(pmod(xxhash64(line), $LineBuckets) AS INT) AS lb")
-      .distinct().collect().map(_.getInt(0)) // ≤ LineBuckets: metadata
-      .filter(manifest.contains).sorted.map(l => s"lb=$l")
-    val idx = IndexCommit.read(spark, path, IndexCommit.Root, Some(touched.toSeq))
+    val idx = IndexCommit.readPruned(spark, path, IndexCommit.Root,
+      IndexCommit.touchedDirs(batchLines.selectExpr(
+        s"CAST(pmod(xxhash64(line), $LineBuckets) AS INT) AS lb"), "lb"))
     val batchFirsts = batchLines.groupBy("line")
       .agg(expr("min(k) AS batch_first"))
     batchLines

@@ -38,7 +38,7 @@ import graft.Tables
   * + two partial-agg shuffles, exactly [[TextAnalysis.tfidf]]'s cost); the
   * PRODUCTION path is the persisted index — postings partitioned by
   * `tb = polyhash(term) mod 64`, so a query touches only its own terms'
-  * buckets (selected via the build-time `_postings` manifest, never the
+  * buckets (selected via the build-time partition manifest, never the
   * filesystem — the [[Dedup.ensureMinhashIndex]] object-store contract),
   * and per-term df rides in a `stats` table bucketed the same way while
   * the corpus-wide N/TT totals are committed in that same manifest, so
@@ -205,53 +205,21 @@ object Retrieval {
 
   // ------------------------------------------------- persisted index
 
-  /** Bucket manifest (`_postings`): one `tb` line per non-empty bucket —
-    * the probe's ONLY pruning input, never the filesystem (the
-    * [[Dedup.ManifestFile]] object-store contract: a metastore stand-in
-    * that answers "which buckets exist" in one small read on any
-    * Hadoop-compatible store) — plus the corpus totals as
-    * `n_docs=<N>` and `total_tokens=<TT>` lines, committed by the same
-    * write at build and at every append.
-    */
-  val ManifestFile = "_postings"
-
   private val TotalsKeys = Seq("n_docs", "total_tokens")
 
-  private[pipeline] def writeTbManifest(spark: SparkSession, root: String,
-      tbs: Set[Int], totals: (Long, Long)): Unit =
-    IndexCommit.writeManifest(spark, root, ManifestFile,
-      tbs.toSeq.sorted.map(_.toString) ++
-        TotalsKeys.zip(Seq(totals._1, totals._2)).map { case (k, v) => s"$k=$v" })
-
-  /** The manifest's lines; fails loud when absent ([[IndexCommit.readLines]]). */
-  private def manifestLines(spark: SparkSession, root: String): Seq[String] =
-    IndexCommit.readManifest(spark, root, ManifestFile,
-      s"no $ManifestFile manifest at $root — index was not built by " +
-        "ensureBm25Index (or predates the manifest); rebuild the index")
-
-  def readTbManifest(spark: SparkSession, root: String): Set[Int] =
-    manifestLines(spark, root).filterNot(_.contains('=')).map(_.toInt).toSet
-
-  /** The committed corpus totals (n_docs, total_tokens); fails loud when
-    * the manifest carries none (an index built before the totals moved
-    * into the manifest is rebuilt by [[ensureBm25Index]]).
+  /** The committed corpus totals (n_docs, total_tokens), which the index's
+    * partition manifest carries beside its `tb=` dirs; fails loud when one
+    * is absent ([[IndexCommit.totals]]).
     */
   def readTotals(spark: SparkSession, root: String): (Long, Long) = {
-    val kv = manifestLines(spark, root).filter(_.contains('=')).map { l =>
-      val Array(k, v) = l.split('='); k -> v.toLong
-    }.toMap
-    val Seq(n, tt) = TotalsKeys.map(k => kv.getOrElse(k,
-      throw new IllegalStateException(s"no $k in the $ManifestFile manifest " +
-        s"at $root — the index predates committed totals; rebuild the index")))
+    val Seq(n, tt) = IndexCommit.totals(spark, root, TotalsKeys)
     (n, tt)
   }
 
-  /** Commit the wave's buckets and its token/document counts together. */
-  private def augmentTbManifest(spark: SparkSession, root: String,
-      extra: Set[Int], added: (Long, Long)): Unit = {
-    val (n, tt) = readTotals(spark, root)
-    writeTbManifest(spark, root, readTbManifest(spark, root) ++ extra,
-      (n + added._1, tt + added._2))
+  /** The corpus totals of `docs` as the manifest's total entries. */
+  private def totalsOf(docs: DataFrame): Map[String, Long] = {
+    val m = metaOf(docs).head()
+    TotalsKeys.zip(Seq(m.getLong(0), m.getLong(1))).toMap
   }
 
   /** The committed totals as a literal one-row relation: a bounded
@@ -267,23 +235,24 @@ object Retrieval {
     * convention), at its [[IndexCommit.root]] keyed by the term-bucket
     * count (`p1` = the positional-postings layout generation, so a
     * pre-positions index is never reused by phrase probes). Three
-    * artifacts plus the manifest, published by [[IndexCommit.publish]]:
+    * artifacts plus the partition manifest, published by
+    * [[IndexCommit.publishPartitioned]]:
     *
     *  - `postings/tb=<n>/` — (term, doc_id, tf, dl, ver) rows partitioned
     *    by term bucket, term-sorted inside each file;
     *  - `stats/tb=<n>/`   — (term, df, ver) bucketed identically, so an
     *    append recomputes df for exactly the touched buckets;
     *  - `blockmax/tb=<n>/` — the block-max sidecar ([[BlockDocs]]);
-    *  - `_postings`       — the bucket manifest the pruned probe reads,
-    *    with the corpus-global (n_docs, total_tokens) idf/avgdl inputs,
-    *    which every append must update and no bucket-local rewrite can
-    *    carry.
+    *  - the partition manifest — the `postings` bucket dirs the pruned
+    *    probe reads, with the corpus-global (n_docs, total_tokens)
+    *    idf/avgdl inputs, which every append must update and no
+    *    bucket-local rewrite can carry.
     */
   def ensureBm25Index(spark: SparkSession, dir: String): String =
-    IndexCommit.publish(spark,
+    IndexCommit.publishPartitioned(spark,
       IndexCommit.root("bm25_index", dir, s"_p1_t$TermBuckets",
         Dedup.docsStats(spark, dir)),
-      Seq("postings", "stats", "blockmax"), Seq(ManifestFile)) { tmp =>
+      Seq("postings", "stats", "blockmax"), Seq("tb"), artifact = "postings") { tmp =>
       val hist = Tables.load(spark, dir, "documents")
         .where(s"doc_id % ${Dedup.IncrSplitMod} <> 0")
       val postings = postingsOf(hist)
@@ -306,10 +275,7 @@ object Retrieval {
         .sortWithinPartitions("tb", "term", "blk")
         .write.mode("overwrite").partitionBy("tb")
         .parquet(s"$tmp/blockmax")
-      val m = metaOf(hist).head()
-      val tbs = spark.read.parquet(s"$tmp/postings")
-        .select("tb").distinct().collect().map(_.getInt(0)).toSet
-      writeTbManifest(spark, tmp, tbs, (m.getLong(0), m.getLong(1)))
+      totalsOf(hist)
     }
 
   /** The build's driver-checkable surface: per-bucket totals of BOTH index
@@ -351,35 +317,27 @@ object Retrieval {
        |FROM pa JOIN sa ON pa.tb = sa.tb ORDER BY tb""".stripMargin
   }
 
-  /** Manifest-pruned probe of an already-built index at `root`: the
-    * touched-bucket set is the query terms' own `tb` values — computed
-    * DRIVER-SIDE from the [[polyHashLocal]] mirror (pure metadata, zero
-    * jobs) — intersected with the manifest; the postings AND stats readers
-    * open only those `tb=` dirs (basePath-rooted point lookups), so the
-    * probe's listing and scan footprint is query-proportional, not
-    * index-proportional. idf and avgdl come from the committed totals +
-    * the pruned stats, so the scores are identical to the full scan by
-    * construction.
+  /** The `tb=` dirs of `terms`, computed DRIVER-SIDE from the
+    * [[polyHashLocal]] mirror (pure metadata, zero jobs). A probe reads
+    * them through [[IndexCommit.readPruned]], which intersects them with
+    * the manifest, so the postings AND stats readers open only those dirs
+    * (basePath-rooted point lookups): the probe's listing and scan
+    * footprint is query-proportional, not index-proportional. idf and
+    * avgdl come from the committed totals + the pruned stats, so the
+    * scores are identical to the full scan by construction.
     */
-  private def touchedBuckets(spark: SparkSession, root: String,
-      pairs: Seq[(Long, String)] = queryPairs): Seq[Int] =
-    pairs.map(p => termBucket(p._2)).toSet
-      .intersect(readTbManifest(spark, root)) // fails loud if absent
-      .toSeq.sorted
+  private def bucketDirs(terms: Iterable[String]): Seq[String] =
+    terms.map(t => s"tb=${termBucket(t)}").toSeq.distinct
 
-  /** Point-lookup read of `sub`'s touched `tb=` dirs ([[IndexCommit.read]]:
-    * recorded schema, empty-touched ⇒ an empty frame, NOT a full scan).
-    */
-  private def prunedRead(spark: SparkSession, root: String, sub: String,
-      touched: Seq[Int]): DataFrame =
-    IndexCommit.read(spark, root, sub, Some(touched.map(tb => s"tb=$tb")))
+  private def touchedBuckets(pairs: Seq[(Long, String)] = queryPairs): Seq[String] =
+    bucketDirs(pairs.map(_._2))
 
   def prunedTopK(spark: SparkSession, root: String): DataFrame = {
-    val touched = touchedBuckets(spark, root)
+    val touched = touchedBuckets()
     scoreTopK(queryTerms(spark),
-      prunedRead(spark, root, "postings", touched)
+      IndexCommit.readPruned(spark, root, "postings", touched)
         .select("term", "doc_id", "tf", "dl"),
-      prunedRead(spark, root, "stats", touched).select("term", "df"),
+      IndexCommit.readPruned(spark, root, "stats", touched).select("term", "df"),
       metaFrame(spark, root))
   }
 
@@ -419,14 +377,15 @@ object Retrieval {
     * wave's tokenize+explode), upsert the wave's postings, recompute df
     * from the merged postings of exactly the touched buckets and upsert
     * it into `stats`, and commit the manifest with the wave's counts
-    * added to the totals. `sidecar` (none by default), given the touched
-    * buckets' merged postings and the working root, upserts one more
-    * derived table concurrently with the stats upsert. Returns the
-    * working root.
+    * added to the totals. The wave's touched `tb=` dirs are collected
+    * once and drive every upsert and the manifest commit. `sidecar` (none
+    * by default), given the touched buckets' merged postings, the working
+    * root and the touched dirs, upserts one more derived table
+    * concurrently with the stats upsert. Returns the working root.
     */
   private[pipeline] def appendWave(spark: SparkSession, dir: String, src: String,
       scope: String,
-      sidecar: (DataFrame, String) => Unit = (_, _) => ()): String = {
+      sidecar: (DataFrame, String, Seq[String]) => Unit = (_, _, _) => ()): String = {
     val work = graft.TempDirs.scoped(scope) + "/index"
     // hermeticity tax only — runs concurrently with the wave's
     // tokenize+explode below, joined before the first upsert write
@@ -441,15 +400,15 @@ object Retrieval {
       try {
         // the touched-set collect fills the persist NOW, overlapping the
         // working-copy seed; the upsert then starts from warm rows
-        val touched = wavePostings.select("tb").distinct()
-          .collect().map(_.getInt(0)).toSet // metadata-scale
+        val touched = IndexCommit.touchedDirs(wavePostings, "tb")
         seeded()
         graft.streaming.Sinks.partitionedUpsertBatch(
-          wavePostings, s"$work/postings",
+          wavePostings, s"$work/postings", touched,
           partitionCols = Seq("tb"), keyCols = Seq("term", "doc_id"),
           versionCols = Seq("ver"), sortCols = Seq("term", "doc_id"))
         if (touched.nonEmpty) {
-          val merged = prunedRead(spark, work, "postings", touched.toSeq.sorted)
+          // the touched dirs are not in the manifest yet: read them as-is
+          val merged = IndexCommit.read(spark, work, "postings", Some(touched))
           val newStats = merged.groupBy("term").agg(count(lit(1)).as("df"))
             .withColumn("tb", expr(tbExpr)).withColumn("ver", lit(1L))
           // a sidecar derives from the same COMMITTED merged postings and
@@ -458,14 +417,13 @@ object Retrieval {
           // tasks + a 64-file commit, and back-filling one job's tail with
           // the other's tasks halves the wave's sidecar-maintenance wall
           graft.Overlap.background(graft.streaming.Sinks.partitionedUpsertBatch(
-              newStats, s"$work/stats",
+              newStats, s"$work/stats", touched,
               partitionCols = Seq("tb"), keyCols = Seq("term"),
               versionCols = Seq("ver"), sortCols = Seq("term"))) { _ =>
-            sidecar(merged, work)
+            sidecar(merged, work, touched)
           }
         }
-        val add = metaOf(wave).head()
-        augmentTbManifest(spark, work, touched, (add.getLong(0), add.getLong(1)))
+        IndexCommit.augment(spark, work, touched, totalsOf(wave))
         work
       } finally wavePostings.unpersist(false)
     }
@@ -511,9 +469,9 @@ object Retrieval {
     * used).
     */
   private def qstatsIdf(spark: SparkSession, root: String,
-      touched: Seq[Int], nd: Long, tt: Long,
+      touched: Seq[String], nd: Long, tt: Long,
       qt: SparkSession => DataFrame = queryTerms): DataFrame =
-    prunedRead(spark, root, "stats", touched).select("term", "df")
+    IndexCommit.readPruned(spark, root, "stats", touched).select("term", "df")
       .join(broadcast(qt(spark)), "term")
       .selectExpr("query_id", "term", "df",
         s"CAST($nd AS BIGINT) AS n_docs",
@@ -563,14 +521,14 @@ object Retrieval {
 
   private[graft] def blockSurvivors(spark: SparkSession, root: String)
       : DataFrame = {
-    val touched = touchedBuckets(spark, root)
+    val touched = touchedBuckets()
     val (nd, tt) = readTotals(spark, root)
     val qstats = qstatsIdf(spark, root, touched, nd, tt)
       .select("query_id", "term", "idfq", "n_docs", "total_tokens")
-    val postings = prunedRead(spark, root, "postings", touched)
+    val postings = IndexCommit.readPruned(spark, root, "postings", touched)
       .select("term", "doc_id", "tf", "dl")
     val theta = phase1Theta(postings, qstats)
-    prunedRead(spark, root, "blockmax", touched)
+    IndexCommit.readPruned(spark, root, "blockmax", touched)
       .selectExpr("term", "blk", "max_tf AS tf", "min_dl AS dl")
       .join(broadcast(qstats), "term")
       .selectExpr("query_id", "blk", s"${tfFactorExpr("div")} * idfq AS ubw")
@@ -591,10 +549,10 @@ object Retrieval {
     * machinery actually dropping blocks, and equality holds either way.
     */
   def blockMaxTopK(spark: SparkSession, root: String): DataFrame = {
-    val touched = touchedBuckets(spark, root)
+    val touched = touchedBuckets()
     val (nd, tt) = readTotals(spark, root)
     val survivors = blockSurvivors(spark, root).select("query_id", "blk")
-    prunedRead(spark, root, "postings", touched)
+    IndexCommit.readPruned(spark, root, "postings", touched)
       .select("term", "doc_id", "tf", "dl")
       .withColumn("blk", expr(s"doc_id div $BlockDocs"))
       .join(broadcast(qstatsIdf(spark, root, touched, nd, tt)), "term")
@@ -635,10 +593,11 @@ object Retrieval {
   /** The [[appendWave]] sidecar that rebuilds the touched buckets'
     * blockmax rows from their merged postings.
     */
-  private[pipeline] def blockMaxSidecar(merged: DataFrame, work: String): Unit =
+  private[pipeline] def blockMaxSidecar(merged: DataFrame, work: String,
+      touched: Seq[String]): Unit =
     graft.streaming.Sinks.partitionedUpsertBatch(
       blockMaxOf(merged, 1L),
-      s"$work/blockmax",
+      s"$work/blockmax", touched,
       partitionCols = Seq("tb"), keyCols = Seq("term", "blk"),
       versionCols = Seq("ver"), sortCols = Seq("term", "blk"))
 
@@ -707,8 +666,8 @@ object Retrieval {
     */
   def blockMaxSkewed(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureBm25Index(spark, skewedStage(spark, dir))
-    val touched = touchedBuckets(spark, root)
-    val cand = prunedRead(spark, root, "blockmax", touched)
+    val touched = touchedBuckets()
+    val cand = IndexCommit.readPruned(spark, root, "blockmax", touched)
       .join(broadcast(queryTerms(spark)), "term")
       .select("query_id", "blk").distinct()
       .groupBy("query_id").agg(count(lit(1)).as("n_blocks"))
@@ -889,14 +848,14 @@ object Retrieval {
       : (Seq[(Long, Long, Long, Long)], Map[Long, (Long, Long, Long)]) = {
     import spark.implicits._
     val pairs = wandPairs
-    val touched = touchedBuckets(spark, root, pairs)
+    val touched = touchedBuckets(pairs)
     val (nd, tt) = readTotals(spark, root)
     val qstats = qstatsIdf(spark, root, touched, nd, tt, wandQueryTerms)
       .select("query_id", "term", "idfq", "n_docs", "total_tokens")
-    val postings = prunedRead(spark, root, "postings", touched)
+    val postings = IndexCommit.readPruned(spark, root, "postings", touched)
       .select("term", "doc_id", "tf", "dl")
     // per-(query, block) upper bounds — reused every round
-    val ub = prunedRead(spark, root, "blockmax", touched)
+    val ub = IndexCommit.readPruned(spark, root, "blockmax", touched)
       .selectExpr("term", "blk", "max_tf AS tf", "min_dl AS dl")
       .join(broadcast(qstats), "term")
       .selectExpr("query_id", "blk", s"${tfFactorExpr("div")} * idfq AS ubw")
@@ -1107,7 +1066,7 @@ object Retrieval {
     RelevantTerms.map(t => s"'$t'").mkString("array(", ", ", ")")
 
   def queryPayload(spark: SparkSession, root: String): DataFrame = {
-    val stats = prunedRead(spark, root, "stats", touchedBuckets(spark, root))
+    val stats = IndexCommit.readPruned(spark, root, "stats", touchedBuckets())
       .select("term", "df")
     queryTerms(spark).join(stats, "term")
       .crossJoin(broadcast(metaFrame(spark, root)))
@@ -1334,11 +1293,10 @@ object Retrieval {
         "explode(array_distinct(split(text, ' '))) AS term")
     val termStrs = qterms.select("term").distinct()
       .collect().map(_.getString(0)) // query-scale: the example docs' terms
-    val touched = termStrs.map(termBucket).toSet
-      .intersect(readTbManifest(spark, root)).toSeq.sorted
-    val qstats = prunedRead(spark, root, "stats", touched)
+    val touched = bucketDirs(termStrs)
+    val qstats = IndexCommit.readPruned(spark, root, "stats", touched)
       .select("term", "df").join(broadcast(qterms), "term")
-    val lexRanks = prunedRead(spark, root, "postings", touched)
+    val lexRanks = IndexCommit.readPruned(spark, root, "postings", touched)
       .select("term", "doc_id", "tf", "dl")
       .join(broadcast(qstats), "term")
       .where("doc_id <> query_id")
@@ -1535,9 +1493,8 @@ object Retrieval {
     val plens = Phrases.map { case (id, p) =>
       (id, p.split(' ').length.toLong)
     }.toDF("query_id", "plen")
-    val touched = Phrases.flatMap(_._2.split(' ')).map(termBucket).toSet
-      .intersect(readTbManifest(spark, root)).toSeq.sorted
-    prunedRead(spark, root, "postings", touched)
+    val touched = bucketDirs(Phrases.flatMap(_._2.split(' ')))
+    IndexCommit.readPruned(spark, root, "postings", touched)
       .select("term", "doc_id", "positions")
       .join(broadcast(pterms), "term")
       .selectExpr("query_id", "doc_id", "qoff", "explode(positions) AS pos")

@@ -87,8 +87,9 @@ object Sinks {
 
   /** Partition-wise streaming UPSERT: the 100 TB form of [[upsertParquet]].
     * The snapshot table is hive-partitioned by `partitionCols`; each
-    * micro-batch (1) computes its touched partition set (distinct
-    * `partitionCols` of the batch — metadata-scale), (2) reads the current
+    * micro-batch (1) computes its touched partition set once (distinct
+    * `partitionCols` of the batch — metadata-scale —
+    * [[graft.pipeline.IndexCommit.touchedDirs]]), (2) reads the current
     * rows of ONLY those partitions (basePath-rooted point lookups, the
     * same open-touched-dirs-only discipline as the pruned dedup probe),
     * (3) merges latest-version-per-key, and (4) rewrites ONLY the touched
@@ -119,8 +120,9 @@ object Sinks {
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        partitionedUpsertBatch(batch, path, partitionCols, keyCols,
-          versionCols, sortCols)
+        partitionedUpsertBatch(batch, path,
+          graft.pipeline.IndexCommit.touchedDirs(batch, partitionCols: _*),
+          partitionCols, keyCols, versionCols, sortCols)
       }
 
   /** One micro-batch (or one plain batch) of the partition-wise upsert —
@@ -128,22 +130,21 @@ object Sinks {
     * caller (the bucketed-index ingest loop's probe → append →
     * manifest-commit cycle, [[graft.pipeline.Dedup.appendInplaceCore]])
     * can run ONE merge directly instead of nesting a streaming query.
-    * Idempotence and crash-safety contracts are documented on the sink.
+    * `touched` is the batch's partition dirs
+    * ([[graft.pipeline.IndexCommit.touchedDirs]]), computed once by the
+    * caller, which commits the same set to its manifest. Idempotence and
+    * crash-safety contracts are documented on the sink.
     */
   def partitionedUpsertBatch(batch: DataFrame, path: String,
-      partitionCols: Seq[String], keyCols: Seq[String],
+      touched: Seq[String], partitionCols: Seq[String], keyCols: Seq[String],
       versionCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
-    val touched = batch.select(partitionCols.map(col): _*).distinct()
-      .collect() // ≤ #partition values of one batch: metadata-scale
     if (touched.nonEmpty) {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dirs = touched.toSeq.map(r => partitionCols.indices
-        .map(i => s"${partitionCols(i)}=${r.get(i)}").mkString("/"))
-      val existingDirs = dirs
+      val existingDirs = touched
         .filter(d => fs.exists(new org.apache.hadoop.fs.Path(root, d)))
         .map(d => s"$path/$d")
       val current =

@@ -62,6 +62,19 @@ object Scale {
     val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
   }
 
+  /** Best-of-2 wall of building `df` and writing it to the noop sink,
+    * after one untimed warmup; the cache is cleared after every run.
+    */
+  private def bestOf2(spark: SparkSession)(df: => DataFrame): Double = {
+    def once(): Double = {
+      val t = timed(df.write.format("noop").mode("overwrite").save())
+      spark.catalog.clearCache()
+      t
+    }
+    once()
+    math.min(once(), once())
+  }
+
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: base :: out :: k :: rest =>
       gen(spark, base, out, k.toInt, corpusOnly = rest.contains("corpusOnly"),
@@ -196,13 +209,7 @@ object Scale {
       names: Seq[String]): Unit = {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t = timed(fn(spark, dir).write.format("noop").mode("overwrite").save())
-        spark.catalog.clearCache()
-        t
-      }
-      once() // untimed warmup
-      val best = math.min(once(), once())
+      val best = bestOf2(spark)(fn(spark, dir))
       val rows =
         if (countShaped(name)) { val n = fn(spark, dir).count(); spark.catalog.clearCache(); n }
         else -1L
@@ -289,14 +296,7 @@ object Scale {
     val (paths, secs) = Seq(IvfIndex.Float, IvfIndex.Sq8, IvfIndex.Pq).map {
       layout =>
         val path = IvfIndex.ensure(spark, indexDir, layout)
-        def once(): Double = {
-          val t = timed(IvfIndex.probe(spark, indexDir, path, layout, queries)
-            .write.format("noop").mode("overwrite").save())
-          spark.catalog.clearCache()
-          t
-        }
-        once() // untimed warmup
-        (path, math.min(once(), once()))
+        (path, bestOf2(spark)(IvfIndex.probe(spark, indexDir, path, layout, queries)))
     }.unzip
     val indexRows = spark.read.parquet(paths.head).count()
     val nCent = IvfIndex.open(spark, paths.head, IvfIndex.Float).cent.count()
@@ -331,29 +331,20 @@ object Scale {
     def read(artifact: String) =
       graft.pipeline.IndexCommit.read(spark, root, artifact, None)
     val postRows = read("postings").count()
-    val manifest = Retrieval.readTbManifest(spark, root)
+    val manifest = graft.pipeline.IndexCommit.partitions(spark, root)
     val touched = Retrieval.Queries.flatMap(_._2.split(' '))
-      .map(Retrieval.termBucket).toSet.intersect(manifest).size
-    def once(df: => org.apache.spark.sql.DataFrame): Double = {
-      val t = timed(df.write.format("noop").mode("overwrite").save())
-      spark.catalog.clearCache()
-      t
-    }
-    def pruned() = once(Retrieval.prunedTopK(spark, root))
-    def full() = once(Retrieval.scoreTopK(
-      Retrieval.queryTerms(spark),
-      read("postings").select("term", "doc_id", "tf", "dl"),
-      read("stats").select("term", "df"),
-      Retrieval.metaFrame(spark, root)))
+      .map(t => s"tb=${Retrieval.termBucket(t)}").toSet.intersect(manifest).size
     val qterms = Retrieval.queryTerms(spark)
     val candPairs = read("blockmax")
       .join(qterms, "term").select("query_id", "blk").distinct().count()
     val survPairs = Retrieval.blockSurvivors(spark, root).count()
-    def blockmax() = once(Retrieval.blockMaxTopK(spark, root))
-    pruned(); full(); blockmax() // untimed warmup
-    val secP = math.min(pruned(), pruned())
-    val secF = math.min(full(), full())
-    val secB = math.min(blockmax(), blockmax())
+    val secP = bestOf2(spark)(Retrieval.prunedTopK(spark, root))
+    val secF = bestOf2(spark)(Retrieval.scoreTopK(
+      Retrieval.queryTerms(spark),
+      read("postings").select("term", "doc_id", "tf", "dl"),
+      read("stats").select("term", "df"),
+      Retrieval.metaFrame(spark, root)))
+    val secB = bestOf2(spark)(Retrieval.blockMaxTopK(spark, root))
     println(s"""[scale] {"bm25probe_index":"$indexDir","postings_rows":$postRows,"buckets":${manifest.size},"touched_buckets":$touched,"sec_pruned":${num(secP)},"sec_full":${num(secF)},"sec_blockmax":${num(secB)},"blockmax_candidate_pairs":$candPairs,"blockmax_surviving_pairs":$survPairs}""")
     spark.stop()
   }
@@ -458,16 +449,10 @@ object Scale {
     val incoming = Tables.load(spark, batchDir, "documents")
       .where(s"doc_id % ${Dedup.IncrSplitMod * batchDivisor} = 0")
     val batchRows = incoming.count()
-    def once(prune: Boolean): Double = {
-      val t = timed(Dedup.incrementalProbe(spark, incoming, indexPath, prune)
-        .write.format("noop").mode("overwrite").save())
-      spark.catalog.clearCache()
-      t
-    }
-    once(prune = false) // untimed warmup
-    val full = math.min(once(prune = false), once(prune = false))
-    once(prune = true)
-    val pruned = math.min(once(prune = true), once(prune = true))
+    def best(prune: Boolean): Double =
+      bestOf2(spark)(Dedup.incrementalProbe(spark, incoming, indexPath, prune))
+    val full = best(prune = false)
+    val pruned = best(prune = true)
     val cand = Dedup.incrementalProbe(spark, incoming, indexPath).count()
     spark.catalog.clearCache()
     // the probed index's ACTUAL layout, parsed from its path (ADVICE r16:

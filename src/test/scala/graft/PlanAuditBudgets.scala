@@ -272,11 +272,9 @@ object PlanAuditBudgets {
     // are broadcast into the list join instead of shuffling both sides
     "sim_recall_gate_x10" -> 14,
     "sim_lsh_multi_topk" -> 2, // bucket join, candidate dedup
-    // assignment argmax agg + emb rejoin (the cached `assigned` subtree,
-    // appearing on both self-join sides), c_id-keyed pair join, dropped-set
-    // distinct, verdict join, presentation sort — ceiling pinned at the
-    // AQE-off static count
-    "sim_semdedup" -> 8,
+    // ceiling pinned at the AQE-off static count; the assignment agg runs
+    // inside the cached `assigned` relation, which the count does not enter
+    "sim_semdedup" -> 3,
     "sql_shared_big_spenders" -> 2,
     "sql_shared_correlated_subquery" -> 2,
     "sql_shared_discount_revenue" -> 2,
@@ -289,6 +287,10 @@ object PlanAuditBudgets {
     "stream_dedup_first" -> 2,
     "stream_fads_region_sharded" -> 0,
     "stream_incremental_dedup" -> 3,
+    // the codebook's one-row collect_list agg (broadcast as one array) and
+    // the presentation sort; the list rows are a broadcast static side
+    "stream_incremental_ivf" -> 2,
+    "stream_incremental_ivf_sq8" -> 2,
     "stream_interval_join" -> 1,
     "stream_partitioned_sink" -> 2,
     "stream_session_counts" -> 2,

@@ -105,6 +105,16 @@ class SessionSpec extends AnyFunSuite {
     assert(calls.isEmpty, s"commit calls outside IndexCommit: $calls")
   }
 
+  test("under src/main only IndexCommit names the partition manifest or " +
+    "reads and writes it, and no retired per-family manifest is named") {
+    val named = (Seq("PartitionsFile", "writePartitions", "IndexCommit.manifest")
+      .flatMap(sites("src/main/scala", _)) ++
+      Seq("\"_partitions\"", "\"_lists\"", "\"_buckets\"", "\"_postings\"")
+        .flatMap(sites("src/main/scala", _, inStrings = true)))
+      .filterNot(_.startsWith("graft/pipeline/IndexCommit.scala:"))
+    assert(named.isEmpty, s"partition manifest named outside IndexCommit: $named")
+  }
+
   test("the /tmp index base is written only in IndexCommit") {
     val bases = sites("src/main/scala", "\"/tmp", inStrings = true)
     assert(bases.size == 1 && bases.head.startsWith("graft/pipeline/IndexCommit.scala:"),

@@ -122,27 +122,25 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSpec {
     // the manifest is complete and exact: it names precisely the bucket
     // dirs the build committed (so intersecting against it is equivalent
     // to — and replaces — any filesystem existence probing)
-    val manifest = Dedup.readManifest(spark, path)
+    val manifest = IndexCommit.partitions(spark, path)
     val onDisk = Files.walk(Paths.get(path)).iterator().asScala
       .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("bhp=")).map { p =>
-        (p.getParent.getFileName.toString.stripPrefix("band=").toInt,
-          p.getFileName.toString.stripPrefix("bhp=").toInt)
-      }.toSet
+        p.getFileName.toString.startsWith("bhp="))
+      .map(p => s"${p.getParent.getFileName}/${p.getFileName}").toSet
     assert(manifest == onDisk,
       "manifest must name exactly the committed bucket dirs")
 
     // hide the manifest: the probe must FAIL LOUD at plan-construction
     // time, not fall back to filesystem probing or a silent empty result
     // (the object-store failure mode of driver-side java.io.File checks)
-    val mf = Paths.get(path, Dedup.ManifestFile)
+    val mf = Paths.get(path, IndexCommit.PartitionsFile)
     val hidden = Paths.get(path + ".manifest_hidden")
     Files.move(mf, hidden)
     try {
       val ex = intercept[IllegalStateException] {
         Dedup.incrementalProbe(spark, tiny, path, prune = true)
       }
-      assert(ex.getMessage.contains(Dedup.ManifestFile),
+      assert(ex.getMessage.contains(IndexCommit.PartitionsFile),
         s"error must name the missing manifest, got: ${ex.getMessage}")
     } finally Files.move(hidden, mf)
   }
@@ -160,17 +158,16 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSpec {
     val specBuckets = 64
     val aug = graft.TempDirs.scoped("inplace-spec") +
       s"/index_b$specBuckets"
-    spark.read.parquet(path)
-      .withColumn("bhp", org.apache.spark.sql.functions.expr(
-        s"CAST(pmod(bh, $specBuckets) AS INT)"))
-      .repartition(col("band"), col("bhp"))
-      .sortWithinPartitions("band", "bhp", "bh")
-      .write.mode("overwrite").partitionBy("band", "bhp").parquet(aug)
-    val augBuckets = spark.read.parquet(aug)
-      .selectExpr("band", "CAST(bhp AS INT) AS bhp").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    Dedup.writeManifest(spark, aug, augBuckets)
-    IndexCommit.recordSchemas(spark, aug, Seq(IndexCommit.Root))
+    IndexCommit.publishPartitioned(spark, aug, Seq(IndexCommit.Root),
+        Seq("band", "bhp")) { tmp =>
+      spark.read.parquet(path)
+        .withColumn("bhp", org.apache.spark.sql.functions.expr(
+          s"CAST(pmod(bh, $specBuckets) AS INT)"))
+        .repartition(col("band"), col("bhp"))
+        .sortWithinPartitions("band", "bhp", "bh")
+        .write.mode("overwrite").partitionBy("band", "bhp").parquet(tmp)
+      Map.empty
+    }
     val rowsBefore = spark.read.parquet(aug).count()
     val before = fileState(aug)
       .filter(_._1.startsWith("band=")) // data files only, not _SUCCESS etc.

@@ -37,7 +37,7 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkSpec {
 
     val first = IvfIndex.search(spark, dir, IvfIndex.Float).collect().toSeq
     assert(new File(path + "/_SUCCESS").exists(), "index must be committed")
-    assert(new File(path + "/" + IvfIndex.ListsManifestFile).exists(),
+    assert(new File(path + "/" + IndexCommit.PartitionsFile).exists(),
       "manifest must be committed with the index")
     val stateAfterBuild = fileState(path)
 
@@ -55,11 +55,10 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkSpec {
     assert(idx.count() == nHist)
     assert(idx.select("vec_id").distinct().count() == nHist,
       "a vector must belong to exactly one inverted list")
-    // manifest names exactly the non-empty lists (partition-column
-    // inference reads c_id back as INT — cast to the manifest's LONG)
-    val listsOnDisk = idx.selectExpr("CAST(c_id AS BIGINT)").distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(IvfIndex.listsManifestRead(spark, path) == listsOnDisk)
+    // the manifest names exactly the non-empty list dirs
+    val listsOnDisk = idx.select("c_id").distinct()
+      .collect().map(r => s"c_id=${r.get(0)}").toSet
+    assert(IndexCommit.partitions(spark, path) == listsOnDisk)
   }
 
   test("append rewrites only probed/touched list dirs and surfaces wave-1") {
@@ -205,13 +204,13 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkSpec {
 
   test("missing manifest: reader fails loud, ensure treats as uncommitted") {
     val path = IvfIndex.ensure(spark, dir, IvfIndex.Float)
-    val mf = Paths.get(path, IvfIndex.ListsManifestFile)
+    val mf = Paths.get(path, IndexCommit.PartitionsFile)
     Files.delete(mf)
     // the probe's pruning input must never silently degrade to empty
     val e = intercept[IllegalStateException] {
-      IvfIndex.listsManifestRead(spark, path)
+      IndexCommit.partitions(spark, path)
     }
-    assert(e.getMessage.contains(IvfIndex.ListsManifestFile))
+    assert(e.getMessage.contains(IndexCommit.PartitionsFile))
     // an index without its manifest is uncommitted: the next ensure
     // rebuilds BOTH artifacts and the probe works again
     val rows = IvfIndex.search(spark, dir, IvfIndex.Float).collect()
@@ -222,7 +221,7 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkSpec {
     val layouts = Seq(IvfIndex.Float, IvfIndex.Sq8, IvfIndex.Pq, IvfIndex.PqRes,
       IvfIndex.Opq)
     for (layout <- layouts; artifact <- Seq("_SUCCESS", IvfIndex.CodebookDir,
-        IvfIndex.ListsManifestFile) ++ layout.artifacts) {
+        IndexCommit.PartitionsFile) ++ layout.artifacts ++ layout.files) {
       val path = IvfIndex.ensure(spark, dir, layout)
       deleteRecursively(Paths.get(path, artifact))
       val e = intercept[IllegalStateException] {
@@ -246,7 +245,7 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkSpec {
     val model = IvfIndex.open(spark, work, IvfIndex.Sq8)
     // the manifest vanishes mid-append: after the wave is persisted and
     // upserted, the manifest read fails
-    Files.delete(Paths.get(work, IvfIndex.ListsManifestFile))
+    Files.delete(Paths.get(work, IndexCommit.PartitionsFile))
     spark.catalog.clearCache()
     val wave = Similarity.corpusFloats(spark, dir)
       .where(s"vec_id % ${2 * Similarity.IvfSplitMod} = 0")
@@ -265,7 +264,7 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkSpec {
     val first = IvfIndex.search(spark, dir, IvfIndex.Sq8).collect().toSeq
     assert(first.nonEmpty)
     assert(new File(path + "/_SUCCESS").exists(), "index must be committed")
-    assert(new File(path + "/" + IvfIndex.ListsManifestFile).exists())
+    assert(new File(path + "/" + IndexCommit.PartitionsFile).exists())
     val stateAfterBuild = fileState(path)
 
     val idx = spark.read.parquet(path)
@@ -339,7 +338,7 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkSpec {
     val first = IvfIndex.search(spark, dir, IvfIndex.Pq).collect().toSeq
     assert(first.nonEmpty)
     assert(new File(path + "/_SUCCESS").exists(), "index must be committed")
-    assert(new File(path + "/" + IvfIndex.ListsManifestFile).exists())
+    assert(new File(path + "/" + IndexCommit.PartitionsFile).exists())
     val stateAfterBuild = fileState(path)
 
     val idx = spark.read.parquet(path)

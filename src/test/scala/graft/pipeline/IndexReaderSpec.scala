@@ -84,28 +84,28 @@ class IndexReaderSpec extends AnyFunSuite with SparkSpec {
 
   /** Every persisted index family: its build-or-reuse call, the artifacts
     * its committed rule must cover (the first is the one whose `_SUCCESS`
-    * the rebuild case removes) and its manifest files.
+    * the rebuild case removes) and its manifest and line files.
     */
   private def families: Seq[(String, () => String, Seq[String], Seq[String])] = {
     import IndexCommit.Root
     Seq(
       ("bm25", () => Retrieval.ensureBm25Index(spark, dir),
-        Seq("blockmax", "postings", "stats"), Seq(Retrieval.ManifestFile)),
+        Seq("blockmax", "postings", "stats"), Seq(IndexCommit.PartitionsFile)),
       ("bm25 skew corpus", () => Retrieval.skewedStage(spark, dir),
         Seq("documents.parquet"), Nil),
       ("bm25 wand corpus", () => Retrieval.wandStage(spark, dir),
         Seq("documents.parquet"), Nil),
       ("minhash", () => Dedup.ensureMinhashIndex(spark, dir),
-        Seq(Root), Seq(Dedup.ManifestFile)),
+        Seq(Root), Seq(IndexCommit.PartitionsFile)),
       ("line", () => LineDedup.ensureLineIndex(spark, dir),
-        Seq(Root), Seq(Dedup.ManifestFile)),
+        Seq(Root), Seq(IndexCommit.PartitionsFile)),
       ("eval-gram", () => Refresh.ensureEvalGramIndex(spark, dir), Seq(Root), Nil),
       ("aggregate MV", () => CorpusOps.ensureAggMv(spark, dir), Seq(Root), Nil),
       ("bucketed", () => graft.ops.BucketedJoin.stagedRoot(spark, dir),
         Seq("orders", "lineitem"), Nil)) ++
       ivfLayouts.map(l => (s"ivf $l", () => IvfIndex.ensure(spark, dir, l),
         Seq(IvfIndex.CodebookDir, Root) ++ l.artifacts,
-        Seq(IvfIndex.ListsManifestFile)))
+        IndexCommit.PartitionsFile +: l.files))
   }
 
   test("an index lacking its schema record, an artifact's _SUCCESS or a " +

@@ -47,7 +47,7 @@ class IvfRefreshSpec extends AnyFunSuite with SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/${IvfIndex.CodebookDir}/_SUCCESS")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      root, IvfIndex.ListsManifestFile)))
+      root, IndexCommit.PartitionsFile)))
 
     // re-code preserved the vector set exactly: same ids, same count,
     // and the manifest names exactly the non-empty lists
@@ -60,8 +60,8 @@ class IvfRefreshSpec extends AnyFunSuite with SparkSpec {
     val listDirs = fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
       .filter(s => s.isDirectory &&
         s.getPath.getName.startsWith("c_id=") )
-      .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSet
-    assert(IvfIndex.listsManifestRead(spark, root) == listDirs,
+      .map(_.getPath.getName).toSet
+    assert(IndexCommit.partitions(spark, root) == listDirs,
       "manifest must name exactly the written lists")
 
     // the retrained codebook differs from the frozen one — the refresh
