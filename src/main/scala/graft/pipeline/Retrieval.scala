@@ -326,7 +326,7 @@ object Retrieval {
     * avgdl come from the committed totals + the pruned stats, so the
     * scores are identical to the full scan by construction.
     */
-  private def bucketDirs(terms: Iterable[String]): Seq[String] =
+  private[graft] def bucketDirs(terms: Iterable[String]): Seq[String] =
     terms.map(t => s"tb=${termBucket(t)}").toSeq.distinct
 
   private def touchedBuckets(pairs: Seq[(Long, String)] = queryPairs): Seq[String] =

@@ -332,8 +332,8 @@ object Scale {
       graft.pipeline.IndexCommit.read(spark, root, artifact, None)
     val postRows = read("postings").count()
     val manifest = graft.pipeline.IndexCommit.partitions(spark, root)
-    val touched = Retrieval.Queries.flatMap(_._2.split(' '))
-      .map(t => s"tb=${Retrieval.termBucket(t)}").toSet.intersect(manifest).size
+    val touched = Retrieval.bucketDirs(Retrieval.Queries.flatMap(_._2.split(' ')))
+      .toSet.intersect(manifest).size
     val qterms = Retrieval.queryTerms(spark)
     val candPairs = read("blockmax")
       .join(qterms, "term").select("query_id", "blk").distinct().count()
