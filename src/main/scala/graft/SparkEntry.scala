@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.fads.Fads
-import graft.ops.FadsBatch
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -15,79 +13,13 @@ object SparkEntry {
   val eventsFadsConfig: Fads.Config =
     Fads.Config(k = 10, bufferConstraint = 30, reuseTtlMs = 60000L, nQid = 2)
 
-  /** Shard-key expressions shared by the scale-out replays AND their
-    * invariant gates ([[ops.FadsInvariants]]) — single definitions so a gate
-    * can never silently check a differently-sharded pipeline than the one
-    * the released query runs (the same no-drift rule as `eventsFadsConfig`).
-    */
-  val hashShard: Column = pmod(col("user_id"), lit(8))
-
-  /** value ∈ [0, ~500): 8 fixed-width regions of the QID space. */
-  val regionShard: Column = least(floor(col("value") / 64.0), lit(7L))
-
-  /** Replay reporting surfaces carry `ts_us` (micros), not raw nanos: the
-    * DuckDB oracle reads TIMESTAMP(NANOS) parquet at microsecond precision.
-    */
-  private def reportTsUs(df: DataFrame): DataFrame =
-    df.withColumn("ts_us", Tables.tsNanosToMicros("ts")).drop("ts")
-
-  def fadsReplay(spark: SparkSession, dir: String): DataFrame = {
-    val events = Tables.load(spark, dir, "events")
-    FadsBatch.anonymize(
-      events,
-      qidCols = Seq("user_id", "value"),
-      pidCol = "user_id",
-      orderCols = Seq("ts", "event_id"),
-      clockCol = Tables.tsNanosToMillis("ts"),
-      cfg = eventsFadsConfig)
-  }
-
-  /** Scale-out FADS variant 2: shard by QID-SPACE REGION (value range
-    * buckets) instead of an identity hash — clusters then form among
-    * numerically close tuples, so the sharded QID's intervals come out far
-    * tighter than single-stream while shards run in parallel (SURVEY §7.3
-    * hard part 1's proposed scale-out design). `globalNorm = true` fixes
-    * distance/info-loss normalization to the true domain bounds so the
-    * NON-sharded QIDs keep single-stream-grade intervals too (round-1
-    * measured 647 vs 435 avg user_id width without it — shard-local bounds
-    * over-weighted the compressed value dimension in every kNN).
-    */
-  def fadsReplayRegionSharded(spark: SparkSession, dir: String): DataFrame = {
-    val events = Tables.load(spark, dir, "events")
-      .withColumn("shard", regionShard)
-    FadsBatch.anonymizeByKey(
-      events,
-      shardCol = "shard",
-      qidCols = Seq("user_id", "value"),
-      pidCol = "user_id",
-      orderCols = Seq("ts", "event_id"),
-      clockCol = Tables.tsNanosToMillis("ts"),
-      cfg = eventsFadsConfig,
-      globalNorm = true)
-  }
-
-  /** Scale-out FADS: 8 independent shards keyed on user_id — the 100 TB
-    * shape (one shuffle, per-shard sequential state, parallel shards).
-    */
-  def fadsReplaySharded(spark: SparkSession, dir: String): DataFrame = {
-    val events = Tables.load(spark, dir, "events")
-      .withColumn("shard", hashShard)
-    FadsBatch.anonymizeByKey(
-      events,
-      shardCol = "shard",
-      qidCols = Seq("user_id", "value"),
-      pidCol = "user_id",
-      orderCols = Seq("ts", "event_id"),
-      clockCol = Tables.tsNanosToMillis("ts"),
-      cfg = eventsFadsConfig)
-  }
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the reference's core capability — streaming k-anonymization — replayed
     * deterministically over the `events` table.
     */
   def entry(spark: SparkSession): DataFrame =
-    fadsReplay(spark, "/root/testdata/sf0.001")
+    ops.FadsReplays.replay(spark, "/root/testdata/sf0.001",
+      ops.FadsReplays("q9_fads_replay"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -98,6 +30,7 @@ object SparkEntry {
       ops.Sketches.all ++
       ops.AsofJoin.all ++
       ops.SkewJoin.all ++
+      ops.FadsReplays.entries ++
       ops.FadsInvariants.all ++
       ops.AggFamilies.all ++
       ops.TableOps.all ++
@@ -132,18 +65,6 @@ object SparkEntry {
       pipeline.SubstringDedup.all ++
       pipeline.Containment.all ++
       pipeline.Refresh.all ++ Map(
-      // reporting surface: flat `q_lo`/`q_hi` doubles (GenEvent shape) — the
-      // struct API stays for library callers, but driver-facing output must
-      // be hashable by flat-column tooling (pandas cannot hash structs).
-      // `ts` reports as microseconds (`ts_us`): the DuckDB oracle reads the
-      // TIMESTAMP(NANOS) parquet at microsecond precision, so raw nanos
-      // would be unverifiable (same convention as TableOps/EventAnalytics).
-      "q9_fads_replay" -> ((s: SparkSession, dir: String) =>
-        reportTsUs(FadsBatch.flattenIntervals(fadsReplay(s, dir), Seq("user_id", "value")))),
-      "q9_fads_sharded" -> ((s: SparkSession, dir: String) =>
-        reportTsUs(FadsBatch.flattenIntervals(fadsReplaySharded(s, dir), Seq("user_id", "value")))),
-      "q9_fads_region_sharded" -> ((s: SparkSession, dir: String) =>
-        reportTsUs(FadsBatch.flattenIntervals(fadsReplayRegionSharded(s, dir), Seq("user_id", "value")))),
       "stream_window_counts" -> ((s: SparkSession, dir: String) =>
         streaming.Windows.windowCountsQuery(s, dir)),
       "stream_sliding_counts" -> ((s: SparkSession, dir: String) =>
@@ -183,36 +104,6 @@ object SparkEntry {
       // O7's partitioned foreachBatch sink end-to-end (was spec-only)
       "stream_partitioned_sink" -> ((s: SparkSession, dir: String) =>
         streaming.Sinks.partitionedSinkQuery(s, dir)),
-      // reference-parity replay: quirk Q2 (distance precedence bug) + Q4
-      // (PID filter disabled) enabled; Q3 stays OFF here (the established
-      // partial-parity surface, kept for continuity)
-      "q9_fads_replay_refmode" -> ((s: SparkSession, dir: String) => {
-        val refCfg = eventsFadsConfig.copy(quirks =
-          graft.fads.Fads.Quirks(referenceDistance = true, uniquePid = false))
-        reportTsUs(FadsBatch.flattenIntervals(
-          ops.FadsBatch.anonymize(
-            Tables.load(s, dir, "events"),
-            qidCols = Seq("user_id", "value"), pidCol = "user_id",
-            orderCols = Seq("ts", "event_id"),
-            clockCol = Tables.tsNanosToMillis("ts"), cfg = refCfg),
-          Seq("user_id", "value")))
-      }),
-      // FULL reference parity (round-7 verdict item 8): Q2 + Q4 + Q3 — the
-      // :355 raw-field-index bug, emulated by carrying the tuple's leading
-      // raw numeric fields (event_id, ts-nanos) into the kNN distance while
-      // bounds/containment/loss stay QID-based (Fads.Quirks scaladoc)
-      "q9_fads_replay_refmode_raw" -> ((s: SparkSession, dir: String) => {
-        val refCfg = eventsFadsConfig.copy(quirks = graft.fads.Fads.Quirks(
-          referenceDistance = true, rawFieldDistance = true, uniquePid = false))
-        reportTsUs(FadsBatch.flattenIntervals(
-          ops.FadsBatch.anonymize(
-            Tables.load(s, dir, "events"),
-            qidCols = Seq("user_id", "value"), pidCol = "user_id",
-            orderCols = Seq("ts", "event_id"),
-            clockCol = Tables.tsNanosToMillis("ts"), cfg = refCfg,
-            rawCols = Seq("event_id", "ts")),
-          Seq("user_id", "value")))
-      }),
       "pipeline_clean_corpus" -> ((s: SparkSession, dir: String) =>
         pipeline.CleanCorpus.query(s, dir)),
       // O1/O2 end-to-end: reference-format taxi CSV lines → typed rides
@@ -220,24 +111,7 @@ object SparkEntry {
         sources.TaxiRideSource.parseQuery(s, dir)),
       // O3's error-tolerant twin: PERMISSIVE CSV parse accounting
       "x_csv_permissive" -> ((s: SparkSession, dir: String) =>
-        sources.CsvParser.permissiveQuery(s, dir)),
-      // THE reference pipeline, end-to-end: taxi lines → typed rides → FADS
-      // generalizer with the job's exact config (k=10, buffer=30, TTL=60 s,
-      // QIDs={rideId, taxiId, endTime}, pid=rideId —
-      // TransactionGeneralizationJob.java:66-71); deterministic clock =
-      // startTime. Stateful-sequential ⇒ rows-only, like the q9 family.
-      "taxi_fads_replay" -> ((s: SparkSession, dir: String) => {
-        val rides = sources.TaxiRideSource.syntheticRides(s, dir)
-        FadsBatch.flattenIntervals(
-          FadsBatch.anonymize(rides,
-            qidCols = Seq("rideId", "taxiId", "endTime"),
-            pidCol = "rideId",
-            orderCols = Seq("startTime", "rideId"),
-            clockCol = col("startTime"),
-            cfg = Fads.Config(k = 10, bufferConstraint = 30,
-              reuseTtlMs = 60000L, nQid = 3)),
-          Seq("rideId", "taxiId", "endTime"))
-      })
+        sources.CsvParser.permissiveQuery(s, dir))
     )
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -344,10 +344,12 @@ object Fads {
       s / cfg.nQid
     }
 
-    /** Convenience: run a whole bounded input deterministically (the
-      * specs' oracle; the batch replay, `FadsBatch.runPartitions`, has its
-      * own loop over per-shard state). `clock` maps each input to the
-      * processing-time instant at which it is handled.
+    /** Convenience: run a whole bounded input deterministically as ONE
+      * stream (the specs' oracle). `clock` maps each input to the
+      * processing-time instant at which it is handled. The batch replay of
+      * every [[graft.ops.FadsReplays]] variant does not call it: its one
+      * entry point, `FadsBatch.anonymize`, loops in `runPartitions`, which
+      * starts a fresh state at each shard boundary of a sorted partition.
       */
     def runAll(input: Iterator[In], clock: In => Long): Iterator[Out] = {
       val st = new State(cfg.nQid)

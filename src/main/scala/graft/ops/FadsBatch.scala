@@ -19,7 +19,7 @@ import graft.fads.Fads
   * global bounds, reusable clusters) is a single stream context — the
   * reference is only correct at parallelism 1 (SURVEY.md §3.3). So
   * [[anonymize]] runs the core on ONE partition, which is faithful but not
-  * scalable. For cluster-scale data use [[anonymizeByKey]]: the stream is
+  * scalable. For cluster-scale data give it a shard column: the stream is
   * sharded by a caller-chosen key (e.g. tenant, geography, QID-space region)
   * and an independent FADS instance runs per shard — each shard keeps the full
   * k-anonymity guarantee *within* the shard, shards process in parallel, and
@@ -55,11 +55,24 @@ object FadsBatch {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** Faithful single-stream replay: order by `orderCols`, run the FADS core
-    * once over the whole input (single partition), drain at EOF.
+  /** The one FADS replay over a bounded input: order by `orderCols`, run
+    * the core sequentially and drain at EOF — over the whole input on ONE
+    * partition, or, with `shardCol`, as an independent stream per shard
+    * value (one hash shuffle on the shard, in-partition sort, parallelism =
+    * #shards, no driver-side collection). Callers reach it through the
+    * variant table [[FadsReplays]].
     *
     * @param clockCol LONG column supplying the deterministic processing-time
     *                 instant (ms) for each row — normally `unix_millis(ts)`.
+    * @param globalNorm when true, one extra pre-pass aggregation computes
+    *        the TRUE per-QID domain bounds over the whole input and fixes
+    *        every shard's distance/info-loss normalization to them (see
+    *        [[Fads.Config.fixedLo]]). Essential for region sharding: a shard
+    *        seeing only a slice of a QID's domain would otherwise over-weight
+    *        that QID in kNN and drag the other QIDs' intervals wide. Cost at
+    *        100 TB: one map-side-combined min/max agg (a few doubles to the
+    *        driver, shipped back in the task closure) — noise next to the
+    *        shard shuffle.
     * @param rawCols  columns whose doubles feed [[Fads.In.raw]] — only for
     *                 the [[Fads.Quirks.rawFieldDistance]] reference-parity
     *                 replay (the raw tuple's leading numeric fields); Nil
@@ -72,52 +85,26 @@ object FadsBatch {
       orderCols: Seq[String],
       clockCol: org.apache.spark.sql.Column,
       cfg: Fads.Config,
+      shardCol: Option[String] = None,
+      globalNorm: Boolean = false,
       rawCols: Seq[String] = Nil): DataFrame = {
-    val prepared = df
-      .withColumn("__clock_ms", clockCol.cast(LongType))
-      .repartition(1)
-      .sortWithinPartitions(orderCols.map(col): _*)
-    runPartitions(prepared, df.schema, qidCols, pidCol, cfg, rawCols = rawCols)
-  }
-
-  /** Scale-out variant: an independent FADS stream per `shardCol` value.
-    * One shuffle (hash on shard), in-partition sort, then per-shard
-    * sequential replay — parallelism = #shards, no driver-side collection.
-    *
-    * @param globalNorm when true, one extra pre-pass aggregation computes
-    *        the TRUE per-QID domain bounds over the whole input and fixes
-    *        every shard's distance/info-loss normalization to them (see
-    *        [[Fads.Config.fixedLo]]). Essential for region sharding: a shard
-    *        seeing only a slice of a QID's domain would otherwise over-weight
-    *        that QID in kNN and drag the other QIDs' intervals wide. Cost at
-    *        100 TB: one map-side-combined min/max agg (a few doubles to the
-    *        driver, shipped back in the task closure) — noise next to the
-    *        shard shuffle.
-    */
-  def anonymizeByKey(
-      df: DataFrame,
-      shardCol: String,
-      qidCols: Seq[String],
-      pidCol: String,
-      orderCols: Seq[String],
-      clockCol: org.apache.spark.sql.Column,
-      cfg: Fads.Config,
-      globalNorm: Boolean = false): DataFrame = {
     val effCfg = if (globalNorm) globalBounds(df, qidCols, cfg) else cfg
-    val prepared = df
-      .withColumn("__clock_ms", clockCol.cast(LongType))
-      .repartition(col(shardCol))
-      .sortWithinPartitions((shardCol +: orderCols).map(col): _*)
+    val clocked = df.withColumn("__clock_ms", clockCol.cast(LongType))
     // a partition may hold several shards back-to-back (hash collisions);
     // runPartitions starts a fresh engine whenever the shard value changes,
     // which the sort guarantees is a contiguous run
-    runPartitions(prepared, df.schema, qidCols, pidCol, effCfg, Some(shardCol))
+    val prepared = shardCol match {
+      case None => clocked.repartition(1).sortWithinPartitions(orderCols.map(col): _*)
+      case Some(s) => clocked.repartition(col(s))
+        .sortWithinPartitions((s +: orderCols).map(col): _*)
+    }
+    runPartitions(prepared, df.schema, qidCols, pidCol, effCfg, shardCol, rawCols)
   }
 
   /** `cfg` with distance/info-loss normalization fixed to the true per-QID
     * domain bounds of `df` (see [[Fads.Config.fixedLo]]), from one
-    * map-side-combined min/max pre-pass. The batch ([[anonymizeByKey]]
-    * with `globalNorm`) and stream
+    * map-side-combined min/max pre-pass. The batch ([[anonymize]] with
+    * `globalNorm`) and stream
     * ([[graft.streaming.FadsStream.regionCfg]]) twins of region sharding
     * both take their bounds from here.
     */
@@ -138,8 +125,8 @@ object FadsBatch {
       qidCols: Seq[String],
       pidCol: String,
       cfg: Fads.Config,
-      shardCol: Option[String] = None,
-      rawCols: Seq[String] = Nil): DataFrame = {
+      shardCol: Option[String],
+      rawCols: Seq[String]): DataFrame = {
     val schema = prepared.schema
     val outSchema = generalizedSchema(outBase, qidCols)
     val qidIdx = qidCols.map(schema.fieldIndex).toArray

@@ -2,8 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
-import graft.fads.Fads
 
 /** Driver-checkable invariants over the stateful FADS replay output — the
   * hard correctness gate for the one operator family a SQL oracle cannot
@@ -32,18 +30,15 @@ import graft.fads.Fads
   *    ≥ k distinct PIDs.
   *  - '''suppression bound''' — a healthy engine suppresses a minority of
   *    tuples at reference parameters; gated as a boolean with headroom (the
-  *    measured fraction is stated per query below).
+  *    measured fractions are stated at `summarise` below).
   *
   * To make containment checkable post-hoc, the original QID values ride
   * through the engine as extra payload columns (`orig_*`) — the engine never
   * sees them (payload is opaque, [[graft.fads.Fads.In]]), so the check cannot
-  * influence the replay.
+  * influence the replay. Each gate is declared on its variant's row of
+  * [[FadsReplays]]: that replay, with the `orig_*` carry, summarised.
   */
 object FadsInvariants {
-
-  /** Copy each QID into an `orig_<q>` payload column before anonymization. */
-  private def withOrig(df: DataFrame, qidCols: Seq[String]): DataFrame =
-    qidCols.foldLeft(df)((d, q) => d.withColumn(s"orig_$q", col(q)))
 
   /** Row-level containment violation: original value outside [lo, hi].
     * NULL-hardened: a NULL orig/lo/hi makes the comparison NULL, and `sum`
@@ -119,189 +114,59 @@ object FadsInvariants {
     }
   }
 
-  private def anonymizeEvents(
-      spark: SparkSession,
-      dir: String,
-      cfg: Fads.Config,
-      rawCols: Seq[String] = Nil): DataFrame = {
-    val events = withOrig(Tables.load(spark, dir, "events"), Seq("user_id", "value"))
-    FadsBatch.flattenIntervals(
-      FadsBatch.anonymize(
-        events,
-        qidCols = Seq("user_id", "value"),
-        pidCol = "user_id",
-        orderCols = Seq("ts", "event_id"),
-        clockCol = Tables.tsNanosToMillis("ts"),
-        cfg = cfg,
-        rawCols = rawCols),
-      Seq("user_id", "value"))
-  }
+  private val invariantRowSql: String =
+    """SELECT count(*)::BIGINT AS n_released, CAST(0 AS BIGINT) AS contain_viol,
+      |       CAST(0 AS BIGINT) AS groups_lt_k, true AS supp_frac_ok
+      |FROM events""".stripMargin
 
-  /** Reference-parameter config for `events` (mirrors
-    * [[graft.SparkEntry.eventsFadsConfig]]; duplicated literals would drift,
-    * so read it from there).
+  /** `n_out` per event_type must equal DuckDB's per-type input counts (in ==
+    * out through the engine, drain included) and `contain_viol` must be 0.
     */
-  private def eventsCfg: Fads.Config = graft.SparkEntry.eventsFadsConfig
-
-  /** Per-event_type containment + cardinality over the single-stream replay:
-    * `n_out` must equal DuckDB's per-type input counts (in == out through the
-    * engine, drain included), `contain_viol` must be 0.
-    */
-  def replayInvariants(spark: SparkSession, dir: String): DataFrame =
-    anonymizeEvents(spark, dir, eventsCfg)
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n_out"),
-        sum(violation(Seq("user_id", "value")).cast("long")).as("contain_viol"))
-      .orderBy("event_type")
-
-  val replayInvariantsSql: String =
+  private val perTypeSql: String =
     """SELECT event_type, count(*)::BIGINT AS n_out, CAST(0 AS BIGINT) AS contain_viol
       |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin
 
-  /** Group-level k-anonymity gate for the single-stream replay.
+  /** Gate `g`'s summary over `flat`, its variant's reporting frame with
+    * `orig_*` payload ([[FadsReplays.frame]]).
     *
-    * Measured suppressed fractions at reference parameters, sf0.01 (the
-    * driver's correctness scale): replay 0.09%, hash-sharded 1.25%,
-    * region-sharded 0.33%, refmode/taxi 0% — bound 0.5 leaves wide headroom
-    * while still failing a suppress-everything regression. Tiny inputs: the
-    * HASH-sharded variant at sf0.001 (15 distinct users split 8 ways ⇒ no
-    * shard ever sees k=10 distinct PIDs) legitimately suppresses 100% — a
-    * real lesson in not over-sharding below ~k·PIDs per shard — so the
-    * sharded gate is CAPACITY-AWARE ([[invariantRow]]'s `shardCol` branch):
+    * The group gates count distinct PIDs unless the variant's config turns
+    * the paper's distinct-PID filter off (quirk Q4, the refmode variants):
+    * there the box-group still has ≥ k ROWS (that part of the algorithm is
+    * unchanged). Measured suppressed fractions at reference parameters,
+    * sf0.01 (the scale the oracles are checked at): replay 0.09%, hash-sharded
+    * 1.25%, region-sharded 0.33%, refmode/taxi 0% — bound 0.5 leaves wide
+    * headroom while still failing a suppress-everything regression. Tiny
+    * inputs: the HASH-sharded variant at sf0.001 (15 distinct users split 8
+    * ways ⇒ no shard ever sees k=10 distinct PIDs) legitimately suppresses
+    * 100% — a real lesson in not over-sharding below ~k·PIDs per shard — so
+    * its gate is CAPACITY-AWARE ([[invariantRow]]'s `shardCol` branch):
     * below capacity it demands exactly-full suppression (the only k-safe
-    * output), at operating scale it applies the fraction bound.
+    * output), at operating scale it applies the fraction bound. Merging
+    * box-groups across shards only grows them, so the global check stays
+    * valid for every sharded variant.
     */
-  def kanonInvariants(spark: SparkSession, dir: String): DataFrame =
-    invariantRow(
-      anonymizeEvents(spark, dir, eventsCfg),
-      Seq("user_id", "value"), "orig_user_id",
-      eventsCfg.k, usePids = true, suppFracBound = 0.5)
-
-  private def invariantRowSql: String =
-    """SELECT count(*)::BIGINT AS n_released, CAST(0 AS BIGINT) AS contain_viol,
-      |       CAST(0 AS BIGINT) AS groups_lt_k, true AS supp_frac_ok
-      |FROM events""".stripMargin
-
-  val kanonInvariantsSql: String = invariantRowSql
-
-  /** Hash-sharded scale-out replay: the same guarantees hold per shard, and
-    * merging box-groups across shards only grows them — the global check
-    * stays valid.
-    */
-  def shardedInvariants(spark: SparkSession, dir: String): DataFrame = {
-    val events = withOrig(Tables.load(spark, dir, "events"), Seq("user_id", "value"))
-      .withColumn("shard", graft.SparkEntry.hashShard)
-    val flat = FadsBatch.flattenIntervals(
-      FadsBatch.anonymizeByKey(
-        events, shardCol = "shard",
-        qidCols = Seq("user_id", "value"), pidCol = "user_id",
-        orderCols = Seq("ts", "event_id"),
-        clockCol = Tables.tsNanosToMillis("ts"),
-        cfg = eventsCfg),
-      Seq("user_id", "value"))
-    invariantRow(flat, Seq("user_id", "value"), "orig_user_id",
-      eventsCfg.k, usePids = true, suppFracBound = 0.5,
-      shardCol = Some("shard"))
+  private def summarise(v: FadsReplays.Variant, g: FadsReplays.Summary,
+      flat: DataFrame): DataFrame = g match {
+    case FadsReplays.PerType =>
+      flat.groupBy("event_type")
+        .agg(
+          count(lit(1)).as("n_out"),
+          sum(violation(v.qidCols).cast("long")).as("contain_viol"))
+        .orderBy("event_type")
+    case _ =>
+      invariantRow(flat, v.qidCols, s"orig_${v.pidCol}", v.cfg.k,
+        usePids = v.cfg.quirks.uniquePid, suppFracBound = 0.5,
+        shardCol = if (g == FadsReplays.ShardCapacity) Some("shard") else None)
   }
 
-  val shardedInvariantsSql: String = invariantRowSql
+  val all: Map[String, (SparkSession, String) => DataFrame] =
+    FadsReplays.gates.map { case (key, v, g) =>
+      key -> ((s: SparkSession, dir: String) =>
+        summarise(v, g, FadsReplays.frame(s, dir, v, orig = true)))
+    }.toMap
 
-  /** Region-sharded (QID-space) scale-out replay with fixed-domain
-    * normalization — the tight-interval variant (SparkEntry scaladoc).
-    */
-  def regionInvariants(spark: SparkSession, dir: String): DataFrame = {
-    val events = withOrig(Tables.load(spark, dir, "events"), Seq("user_id", "value"))
-      .withColumn("shard", graft.SparkEntry.regionShard)
-    val flat = FadsBatch.flattenIntervals(
-      FadsBatch.anonymizeByKey(
-        events, shardCol = "shard",
-        qidCols = Seq("user_id", "value"), pidCol = "user_id",
-        orderCols = Seq("ts", "event_id"),
-        clockCol = Tables.tsNanosToMillis("ts"),
-        cfg = eventsCfg,
-        globalNorm = true),
-      Seq("user_id", "value"))
-    invariantRow(flat, Seq("user_id", "value"), "orig_user_id",
-      eventsCfg.k, usePids = true, suppFracBound = 0.5)
-  }
-
-  val regionInvariantsSql: String = invariantRowSql
-
-  /** Reference-parity replay (quirks Q2 + Q4 on): the PID filter is OFF by
-    * design there, so the group gate counts ROWS, not distinct PIDs — the
-    * box-group still has ≥ k rows (that part of the algorithm is unchanged).
-    */
-  def refmodeInvariants(spark: SparkSession, dir: String): DataFrame = {
-    val cfg = eventsCfg.copy(quirks =
-      Fads.Quirks(referenceDistance = true, uniquePid = false))
-    invariantRow(
-      anonymizeEvents(spark, dir, cfg),
-      Seq("user_id", "value"), "orig_user_id",
-      cfg.k, usePids = false, suppFracBound = 0.5)
-  }
-
-  val refmodeInvariantsSql: String = invariantRowSql
-
-  /** Full-parity replay (Q2 + Q3 raw-field distance + Q4) — the kNN metric
-    * is deliberately wrong in three reference-faithful ways, but the
-    * RELEASE CONTRACT must still hold: every tuple released exactly once,
-    * intervals contain their originals, suppression bounded. A quirk that
-    * broke anything beyond neighbor CHOICE would trip this row.
-    */
-  def refmodeRawInvariants(spark: SparkSession, dir: String): DataFrame = {
-    val cfg = eventsCfg.copy(quirks = Fads.Quirks(
-      referenceDistance = true, rawFieldDistance = true, uniquePid = false))
-    invariantRow(
-      anonymizeEvents(spark, dir, cfg, rawCols = Seq("event_id", "ts")),
-      Seq("user_id", "value"), "orig_user_id",
-      cfg.k, usePids = false, suppFracBound = 0.5)
-  }
-
-  val refmodeRawInvariantsSql: String = invariantRowSql
-
-  /** End-to-end taxi replay (the reference's own pipeline and parameters,
-    * TransactionGeneralizationJob.java:66-71). rideId is both a QID and the
-    * PID — generalization destroys it in the output, which is exactly why the
-    * `orig_*` carry is the only way to check containment here.
-    */
-  def taxiInvariants(spark: SparkSession, dir: String): DataFrame = {
-    val qids = Seq("rideId", "taxiId", "endTime")
-    val rides = withOrig(graft.sources.TaxiRideSource.syntheticRides(spark, dir), qids)
-    val flat = FadsBatch.flattenIntervals(
-      FadsBatch.anonymize(
-        rides,
-        qidCols = qids,
-        pidCol = "rideId",
-        orderCols = Seq("startTime", "rideId"),
-        clockCol = col("startTime"),
-        cfg = Fads.Config(k = 10, bufferConstraint = 30,
-          reuseTtlMs = 60000L, nQid = 3)),
-      qids)
-    invariantRow(flat, qids, "orig_rideId",
-      k = 10, usePids = true, suppFracBound = 0.5)
-  }
-
-  val taxiInvariantsSql: String =
-    """SELECT count(*)::BIGINT AS n_released, CAST(0 AS BIGINT) AS contain_viol,
-      |       CAST(0 AS BIGINT) AS groups_lt_k, true AS supp_frac_ok
-      |FROM events""".stripMargin
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q9_inv_replay" -> replayInvariants,
-    "q9_inv_kanon" -> kanonInvariants,
-    "q9_inv_sharded" -> shardedInvariants,
-    "q9_inv_region" -> regionInvariants,
-    "q9_inv_refmode" -> refmodeInvariants,
-    "q9_inv_refmode_raw" -> refmodeRawInvariants,
-    "taxi_inv_replay" -> taxiInvariants)
-
-  val oracles: Map[String, String] = Map(
-    "q9_inv_replay" -> replayInvariantsSql,
-    "q9_inv_kanon" -> kanonInvariantsSql,
-    "q9_inv_sharded" -> shardedInvariantsSql,
-    "q9_inv_region" -> regionInvariantsSql,
-    "q9_inv_refmode" -> refmodeInvariantsSql,
-    "q9_inv_refmode_raw" -> refmodeRawInvariantsSql,
-    "taxi_inv_replay" -> taxiInvariantsSql)
+  val oracles: Map[String, String] =
+    FadsReplays.gates.map { case (key, _, g) =>
+      key -> (if (g == FadsReplays.PerType) perTypeSql else invariantRowSql)
+    }.toMap
 }

@@ -22,7 +22,7 @@ package graft.ops
   *    is emitted with the exact IEEE operation order of the Scala engine
   *    (left-fold starting at 0.0, divide by nQid last), so comparisons and
   *    sort keys branch identically; verified bit-exact vs the engine output
-  *    at sf0.001/sf0.01 for all five replay entries (tools/fads_replay.py is
+  *    at sf0.001/sf0.01 for every replay entry (tools/fads_replay.py is
   *    the independent third implementation used to cross-check).
   *
   * One recursion iteration = one release event (~n/10 on cluster-heavy
@@ -273,103 +273,52 @@ $payloadSelect
 
   // ------------------------------------------------------- entry oracles
 
-  /** DuckDB reads the events TIMESTAMP(NANOS) parquet at microsecond
-    * precision, so the replay reporting surface carries `ts_us` (the repo's
-    * established oracle convention — e.g. TableOps/EventAnalytics), not the
-    * raw nanos LONG.
+  /** The oracle of replay variant `v`, every parameter read from its
+    * [[FadsReplays]] row. The payload select lists the input's columns in
+    * order, each QID as its `olo`/`ohi` interval and each timestamp as
+    * `<c>_us` (DuckDB reads TIMESTAMP(NANOS) parquet at microsecond
+    * precision); `withShard` keeps the `shard` column.
     */
-  private def eventsPayload(withShard: Boolean) = {
-    val shardCol = if (withShard) " i.shard," else ""
-    s"""SELECT i.event_id, epoch_us(i.ts) AS ts_us,
-       |       o.olo1 AS user_id_lo, o.ohi1 AS user_id_hi, i.event_type,
-       |       o.olo2 AS value_lo, o.ohi2 AS value_hi, i.props,$shardCol o.osup AS suppressed
-       |FROM fout o JOIN inp i ON i.shard = o.shard AND i.seq = o.oseq""".stripMargin
+  private def variantSql(v: FadsReplays.Variant, withShard: Boolean): String = {
+    val in = v.input
+    // column `c` of a `src` row, timestamps as epoch-nanos like Spark's
+    def sqlCol(c: String) = if (in.tsCols.contains(c)) s"epoch_ns(src.$c)" else s"src.$c"
+    def sqlDouble(c: String) =
+      if (in.doubles(c)) sqlCol(c) else s"CAST(${sqlCol(c)} AS DOUBLE)"
+    val payload = in.cols.flatMap { c =>
+      val q = v.qidCols.indexOf(c) + 1
+      if (q > 0) Seq(s"o.olo$q AS ${c}_lo", s"o.ohi$q AS ${c}_hi")
+      else if (in.tsCols.contains(c)) Seq(s"epoch_us(i.$c) AS ${c}_us")
+      else Seq(s"i.$c")
+    } ++ (if (withShard) Seq("i.shard") else Nil) :+ "o.osup AS suppressed"
+    replaySql(
+      nq = v.cfg.nQid, k = v.cfg.k, b = v.cfg.bufferConstraint,
+      ttlMs = v.cfg.reuseTtlMs,
+      inputCte = in.cte,
+      shardExpr = v.shard.fold("0")(_.sql),
+      qidExprs = v.qidCols.map(sqlDouble),
+      pidExpr = sqlCol(v.pidCol),
+      clockExpr = v.clock.sql,
+      orderBy = v.orderCols.map(c => s"src.$c").mkString(", "),
+      payloadSelect = payload.mkString("SELECT ", ", ",
+        "\nFROM fout o JOIN inp i ON i.shard = o.shard AND i.seq = o.oseq"),
+      refDist = v.cfg.quirks.referenceDistance,
+      uniquePid = v.cfg.quirks.uniquePid,
+      globalNorm = v.globalNorm,
+      rawExprs = v.rawCols.map(sqlDouble))
   }
 
-  private def eventsSql(shardExpr: String, refDist: Boolean = false,
-      uniquePid: Boolean = true, globalNorm: Boolean = false,
-      payloadShard: Option[Boolean] = None,
-      rawExprs: Seq[String] = Nil): String = {
-    val cfg = graft.SparkEntry.eventsFadsConfig
-    replaySql(
-      nq = cfg.nQid, k = cfg.k, b = cfg.bufferConstraint, ttlMs = cfg.reuseTtlMs,
-      inputCte = "SELECT * FROM events",
-      shardExpr = shardExpr,
-      qidExprs = Seq("CAST(src.user_id AS DOUBLE)", "src.value"),
-      pidExpr = "src.user_id",
-      clockExpr = "epoch_ns(src.ts) // 1000000",
-      orderBy = "src.ts, src.event_id",
-      payloadSelect =
-        eventsPayload(withShard = payloadShard.getOrElse(shardExpr != "0")),
-      refDist = refDist, uniquePid = uniquePid, globalNorm = globalNorm,
-      rawExprs = rawExprs)
-  }
-
-  /** Ride construction mirrors TaxiRideSource.parseQuerySql (same integer
-    * arithmetic, already oracle-green via `taxi_parse`).
+  /** Oracles for the seven stateful replay entries: one per variant, and
+    * the STREAMING region-sharded run, which replays the identical
+    * per-shard sequential order (in-order chunks through one per-shard
+    * state, sentinel drain) and so shares the batch twin's oracle — minus
+    * the shard column, which the GenEvent streaming schema doesn't carry.
+    * int64→double conversion rounds identically in both engines (IEEE
+    * nearest), so the raw-field variant's huge nanos stay bit-comparable.
     */
-  private val taxiSrc =
-    """SELECT event_id AS rideId,
-      |       1000 + user_id AS taxiId,
-      |       2000 + user_id AS driverId,
-      |       (event_id % 2 = 0) AS isStart,
-      |       (epoch_ms(ts) // 1000) * 1000 AS startTime,
-      |       (epoch_ms(ts) // 1000 + event_id % 3600) * 1000 AS endTime,
-      |       CASE WHEN event_id % 7 = 0 THEN 0.0
-      |            ELSE ((user_id % 90)::VARCHAR || '.' || lpad((event_id % 1000)::VARCHAR, 3, '0'))::DOUBLE END AS startLon,
-      |       CASE WHEN event_id % 11 = 0 THEN 0.0
-      |            ELSE ((user_id % 60)::VARCHAR || '.' || lpad((user_id % 1000)::VARCHAR, 3, '0'))::DOUBLE END AS startLat,
-      |       ((event_id % 90)::VARCHAR || '.' || lpad((user_id % 500)::VARCHAR, 3, '0'))::DOUBLE AS endLon,
-      |       CASE WHEN event_id % 13 = 0 THEN 0.0
-      |            ELSE ((event_id % 60)::VARCHAR || '.' || lpad((event_id % 500)::VARCHAR, 3, '0'))::DOUBLE END AS endLat,
-      |       (1 + event_id % 6)::SMALLINT AS passengerCnt
-      |FROM events""".stripMargin
-
-  private val taxiPayload =
-    """SELECT o.olo1 AS rideId_lo, o.ohi1 AS rideId_hi,
-      |       o.olo2 AS taxiId_lo, o.ohi2 AS taxiId_hi,
-      |       i.driverId, i.isStart, i.startTime,
-      |       o.olo3 AS endTime_lo, o.ohi3 AS endTime_hi,
-      |       i.startLon, i.startLat, i.endLon, i.endLat, i.passengerCnt,
-      |       o.osup AS suppressed
-      |FROM fout o JOIN inp i ON i.shard = o.shard AND i.seq = o.oseq""".stripMargin
-
-  private def taxiSql: String =
-    replaySql(
-      nq = 3, k = 10, b = 30, ttlMs = 60000L,
-      inputCte = taxiSrc,
-      shardExpr = "0",
-      qidExprs = Seq("CAST(src.rideId AS DOUBLE)", "CAST(src.taxiId AS DOUBLE)",
-        "CAST(src.endTime AS DOUBLE)"),
-      pidExpr = "src.rideId",
-      clockExpr = "src.startTime",
-      orderBy = "src.startTime, src.rideId",
-      payloadSelect = taxiPayload)
-
-  /** Oracles for the five stateful replay entries (shard expressions mirror
-    * [[graft.SparkEntry.hashShard]]/[[graft.SparkEntry.regionShard]]).
-    */
-  val oracles: Map[String, String] = Map(
-    "q9_fads_replay" -> eventsSql("0"),
-    "q9_fads_replay_refmode" -> eventsSql("0", refDist = true, uniquePid = false),
-    // FULL reference parity: Q2 (precedence) + Q3 (raw-field index:
-    // distance reads fields 0..1 = event_id, ts-nanos, normalized by the
-    // true QID bounds) + Q4 (PID filter disabled). int64→double conversion
-    // rounds identically in both engines (IEEE nearest), so the huge nanos
-    // values stay bit-comparable.
-    "q9_fads_replay_refmode_raw" -> eventsSql("0", refDist = true,
-      uniquePid = false,
-      rawExprs = Seq("CAST(src.event_id AS DOUBLE)",
-        "CAST(epoch_ns(src.ts) AS DOUBLE)")),
-    "q9_fads_sharded" -> eventsSql("src.user_id % 8"),
-    "q9_fads_region_sharded" -> eventsSql(
-      "least(floor(src.value / 64.0), 7)::BIGINT", globalNorm = true),
-    // the STREAMING region-sharded run replays the identical per-shard
-    // sequential order (one sorted micro-batch per shard + sentinel drain),
-    // so it shares the batch twin's oracle — minus the shard column, which
-    // the GenEvent streaming schema doesn't carry
-    "stream_fads_region_sharded" -> eventsSql(
-      "least(floor(src.value / 64.0), 7)::BIGINT", globalNorm = true,
-      payloadShard = Some(false)),
-    "taxi_fads_replay" -> taxiSql)
+  val oracles: Map[String, String] =
+    FadsReplays.variants.map(v =>
+      v.key -> variantSql(v, withShard = v.shard.isDefined)).toMap +
+      ("stream_fads_region_sharded" ->
+        variantSql(FadsReplays("q9_fads_region_sharded"), withShard = false))
 }

@@ -500,8 +500,9 @@ object CorpusOps {
     * `work`, additively and touched-partition-only — the SAME body a
     * streaming `foreachBatch` maintenance runs per micro-batch
     * ([[incrementalMv]] calls it once; `StreamingMvSpec` drives it across
-    * a real micro-batched stream). `ver` is any strictly increasing batch
-    * version so the upsert keeps the newest merged row per key.
+    * a real micro-batched stream). The merged frame replaces the touched
+    * partitions whole, so they are read once; `ver` stamps its rows with
+    * the batch version.
     */
   def mergeMvDelta(spark: SparkSession, work: String, docs: DataFrame,
       ver: Long): Unit = {
@@ -522,10 +523,9 @@ object CorpusOps {
       .groupBy("source", "lang")
       .agg(sum("n_docs").as("n_docs"), sum("sum_chars").as("sum_chars"))
       .withColumn("ver", lit(ver))
-    graft.streaming.Sinks.partitionedUpsertBatch(
-      merged, work, touched,
-      partitionCols = Seq("source"), keyCols = Seq("source", "lang"),
-      versionCols = Seq("ver"), sortCols = Seq("lang"))
+    // current ∪ delta regrouped holds every key of the touched partitions
+    graft.streaming.Sinks.replacePartitions(merged, work,
+      partitionCols = Seq("source"), sortCols = Seq("lang"))
   }
 
   def incrementalMv(spark: SparkSession, dir: String): DataFrame = {

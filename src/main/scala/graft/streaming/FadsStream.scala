@@ -274,13 +274,13 @@ object FadsStream {
       // production job with few plans never notices.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
 
-  /** Typed twin of `SparkEntry.regionShard` — floor, not toLong truncation:
-    * truncation rounds toward zero, so a negative value would land in a
-    * different shard than the batch twin's least(floor(value / 64.0), 7)
-    * and the shared oracle (code review r6). A capture-free FUNCTION VALUE,
-    * not a method: an eta-expanded method here would close over the
-    * non-serializable FadsStream module and fail task serialization inside
-    * groupByKey.
+  /** Typed twin of [[graft.ops.FadsReplays.regionShard]] — floor, not
+    * toLong truncation: truncation rounds toward zero, so a negative value
+    * would land in a different shard than the batch twin's
+    * least(floor(value / 64.0), 7) and the shared oracle (code review r6).
+    * A capture-free FUNCTION VALUE, not a method: an eta-expanded method
+    * here would close over the non-serializable FadsStream module and fail
+    * task serialization inside groupByKey.
     */
   val regionShardOf: Event => Long =
     e => math.min(math.floor(e.value / 64.0).toLong, 7L)
@@ -299,63 +299,32 @@ object FadsStream {
     * streaming shape (8 independent QID-region shards through ONE
     * transformWithState operator, per-shard state + per-shard drain), run to
     * completion and hash-checked against the same recursive-CTE oracle as
-    * the batch twin `q9_fads_region_sharded` (round-5 verdict item 6; the
-    * streaming==batch equivalence the specs assert is therefore also
-    * driver-checked now).
+    * the batch twin `q9_fads_region_sharded`.
     *
-    * Determinism contract: all events arrive in one micro-batch (10k rows at
-    * sf0.01 — far under [[FadsProcessor.DefaultMaxBatchRows]]), the operator
-    * sorts per shard by (ts, event_id), and drain uses one sentinel per
-    * shard, so the replay equals the batch per-shard sequential order.
-    * Normalization uses the true domain bounds (globalNorm), computed by the
-    * same pre-pass as the batch twin ([[regionCfg]]).
-    *
-    * COST NOTE: the `collect()` feeds MemoryStream — a driver-resident TEST
-    * source chosen for deterministic batch boundaries; the distributed
-    * surface under test is the sharded transformWithState operator. The
-    * production source is [[PacedReplay]] (files), as Bench runs it.
+    * Determinism contract: the events are staged in (ts, event_id) order
+    * and replayed as in-order chunks ([[PacedReplay.drain]], 8 state
+    * partitions: a shard per store); the operator sorts each trigger's rows
+    * per shard and carries the shard's engine state to the next trigger, so
+    * every shard sees its rows in the batch per-shard sequential order. One
+    * drain sentinel per shard trails the real rows (`ts` sorts last, `value`
+    * routes it to its region). Normalization uses the true domain bounds
+    * (globalNorm), computed by the same pre-pass as the batch twin
+    * ([[regionCfg]]).
     */
-  def regionShardedQuery(spark: SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  def regionShardedQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val events = eventsFrame(spark, dir).as[Event]
+    val events = eventsFrame(spark, dir)
+    val sentinels = (0 until 8)
+      .map(s => Event(-1L, Long.MaxValue, 0L, "", s * 64.0, "")).toDF()
     val cfg = regionCfg(spark, dir)
-    val shardOf = regionShardOf
-
-    val table = s"stream_fads_region_${System.nanoTime()}"
-    // 8 shards = 8 state stores
-    StateSizing.pinned(spark, Some(8)) {
-      try {
-        implicit val sqlCtx = spark.sqlContext
-        val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-        val query = anonymizeSharded(src.toDS(), cfg, shardOf)
-          .writeStream.format("memory").queryName(table).outputMode("append")
-          // throwaway checkpoint on the session scratch tier (TempDirs doc)
-          .option("checkpointLocation", graft.TempDirs.scoped("ckpt"))
-          .start()
-        try {
-          src.addData(events.orderBy("ts", "event_id").collect().toIndexedSeq)
-          query.processAllAvailable()
-          // one drain sentinel per shard, routed by value (region key)
-          src.addData((0 until 8).map(s =>
-            Event(-1L, 0L, 0L, "", s * 64.0, "")))
-          query.processAllAvailable()
-        } finally query.stop()
-        // materialize before the memory table is dropped; ts_us reporting
-        // convention (DuckDB reads TIMESTAMP(NANOS) at micros)
-        val projected = spark.table(table)
-          .select(col("event_id"), graft.Tables.tsNanosToMicros("ts").as("ts_us"),
-            col("user_id_lo"), col("user_id_hi"), col("event_type"),
-            col("value_lo"), col("value_hi"), col("props"), col("suppressed"))
-        val out = projected.collect()
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(out.toIndexedSeq, 1), projected.schema)
-      } finally {
-        // drop the memory-sink view: each invocation otherwise pins its
-        // full collected output in driver memory for the session lifetime
-        spark.catalog.dropTempView(table)
-      }
+    PacedReplay.drain(events.unionByName(sentinels), Seq("ts", "event_id"),
+        events.count(), "graft_stream_fads_region", "append", Some(8)) { replay =>
+      // ts_us reporting convention (DuckDB reads TIMESTAMP(NANOS) at micros)
+      anonymizeSharded(replay.as[Event], cfg, regionShardOf)
+        .select(col("event_id"), graft.Tables.tsNanosToMicros("ts").as("ts_us"),
+          col("user_id_lo"), col("user_id_hi"), col("event_type"),
+          col("value_lo"), col("value_hi"), col("props"), col("suppressed"))
     }
   }
 

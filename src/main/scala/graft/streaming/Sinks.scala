@@ -155,17 +155,30 @@ object Sinks {
         .map(_.unionByName(batch.toDF())).getOrElse(batch.toDF())
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(versionCols.map(c => col(c).desc): _*)
-      merged
-        .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-        .drop("__rn")
-        .repartition(partitionCols.map(col): _*)
-        .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCols: _*)
-        .parquet(path)
+      replacePartitions(
+        merged.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
+          .drop("__rn"),
+        path, partitionCols, sortCols)
     }
     ()
+  }
+
+  /** The upsert's write tail: replace exactly the partition dirs `rows`
+    * holds under `path` with `rows` (dynamic partition overwrite), one task
+    * per partition value, sorted by `sortCols` inside it. For a caller whose
+    * frame already holds every key of its touched partitions (an MV delta
+    * merged with the current rows, [[graft.pipeline.CorpusOps.mergeMvDelta]]),
+    * so the upsert's latest-per-key read of those dirs would be redundant.
+    */
+  def replacePartitions(rows: DataFrame, path: String,
+      partitionCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
+    import org.apache.spark.sql.functions.col
+    rows.repartition(partitionCols.map(col): _*)
+      .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
   }
 
   /** Driver entry for the partitioned foreachBatch sink (O7's last

@@ -19,6 +19,7 @@ import graft.streaming.ProgressSummary
   *  - every Spark job (wall, stages, tasks, summed task time, description),
   *    rolled up by phase and description, with the jobs over 200 ms listed;
   *  - a per-stage-name rollup, where the wall time actually lives;
+  *  - per phase, the bytes and records its tasks read from input files;
   *  - every streaming trigger's [[ProgressSummary]] line: duration
   *    breakdown and state-store commit metrics (a streaming entry's
   *    queries are gone once it returns).
@@ -32,7 +33,7 @@ object Diag {
 
   final case class JobRow(phase: String, desc: String, started: Long,
       nStages: Int, var ended: Long = -1L, var nTasks: Int = 0,
-      var taskMs: Long = 0L)
+      var taskMs: Long = 0L, var inBytes: Long = 0L, var inRecords: Long = 0L)
 
   /** The phases of one run, in order. */
   private val Phases = Seq("define", "action")
@@ -88,6 +89,11 @@ object Diag {
             .map(m => m.executorRunTime + m.executorDeserializeTime).getOrElse(0L)
           val (n, t) = stageTasks.getOrElse(e.stageId, (0, 0L))
           stageTasks(e.stageId) = (n + 1, t + ms)
+          Option(e.taskMetrics).foreach { m =>
+            val job = jobs(stageToJob(e.stageId))
+            job.inBytes += m.inputMetrics.bytesRead
+            job.inRecords += m.inputMetrics.recordsRead
+          }
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (phase.nonEmpty) {
@@ -146,13 +152,15 @@ object Diag {
       println(s"  first run ${split(first)}; last run ${split(last)}")
       Phases.foreach { ph =>
         val rs = rows.filter(_.phase == ph)
-        println(f"  $ph%-6s jobs=${rs.size}%-3d sum job wall ${s(rs.map(wall).sum)}")
+        println(f"  $ph%-6s jobs=${rs.size}%-3d sum job wall ${s(rs.map(wall).sum)}" +
+          s"  input ${rs.map(_.inBytes).sum} B / ${rs.map(_.inRecords).sum} records")
       }
       rows.groupBy(r => (r.phase, r.desc.take(90))).toSeq
         .sortBy(-_._2.map(wall).sum)
         .foreach { case ((ph, d), rs) =>
           println(f"  ${s(rs.map(wall).sum)}  $ph%-6s jobs=${rs.size}%-3d " +
-            f"tasks=${rs.map(_.nTasks).sum}%-5d taskTime=${s(rs.map(_.taskMs).sum)}  $d")
+            f"tasks=${rs.map(_.nTasks).sum}%-5d taskTime=${s(rs.map(_.taskMs).sum)}  " +
+            s"in=${rs.map(_.inRecords).sum}  $d")
         }
       jobs.toSeq.filter(j => wall(j._2) > 200).sortBy(j => -wall(j._2)).take(20)
         .foreach { case (id, r) =>

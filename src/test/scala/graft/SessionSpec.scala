@@ -115,6 +115,16 @@ class SessionSpec extends AnyFunSuite {
     assert(named.isEmpty, s"partition manifest named outside IndexCommit: $named")
   }
 
+  test("under src/main only the FadsReplays variant table calls the FADS " +
+    "batch replay, and only Sinks names MemoryStream") {
+    val replays = sites("src/main/scala", "FadsBatch.anonymize")
+      .filterNot(_.startsWith("graft/ops/FadsReplays.scala:"))
+    assert(replays.isEmpty, s"FADS batch replays outside the table: $replays")
+    val memory = sites("src/main/scala", "MemoryStream")
+      .filterNot(_.startsWith("graft/streaming/Sinks.scala:"))
+    assert(memory.isEmpty, s"MemoryStream outside Sinks: $memory")
+  }
+
   test("the /tmp index base is written only in IndexCommit") {
     val bases = sites("src/main/scala", "\"/tmp", inStrings = true)
     assert(bases.size == 1 && bases.head.startsWith("graft/pipeline/IndexCommit.scala:"),

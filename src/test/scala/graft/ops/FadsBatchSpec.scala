@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, SparkSpec, Tables}
+import graft.{SparkSpec, Tables}
 
 /** Batch FADS surface: cardinality, containment, and the sharded scale-out
   * mode's per-shard independence; plus a golden-output drift guard at
@@ -16,7 +16,7 @@ class FadsBatchSpec extends AnyFunSuite with SparkSpec {
     val in = Tables.load(spark, dir, "events").collect()
       .map(r => r.getAs[Long]("event_id") ->
         (r.getAs[Long]("user_id").toDouble, r.getAs[Double]("value"))).toMap
-    val out = SparkEntry.fadsReplay(spark, dir).collect()
+    val out = FadsReplays.replay(spark, dir, FadsReplays("q9_fads_replay")).collect()
     assert(out.length == in.size)
     out.foreach { r =>
       val (u, v) = in(r.getAs[Long]("event_id"))
@@ -29,7 +29,7 @@ class FadsBatchSpec extends AnyFunSuite with SparkSpec {
 
   test("sharded replay: cardinality preserved, intervals respect shard bounds") {
     val events = Tables.load(spark, dir, "events").collect()
-    val out = SparkEntry.fadsReplaySharded(spark, dir).collect()
+    val out = FadsReplays.replay(spark, dir, FadsReplays("q9_fads_sharded")).collect()
     assert(out.length == events.length)
     // per-shard user_id bounds: every emitted interval must sit inside the
     // shard's own global bounds (state never leaks across shards)
@@ -59,8 +59,8 @@ class FadsBatchSpec extends AnyFunSuite with SparkSpec {
         .collect()(0)
       (r.getDouble(0), r.getDouble(1))
     }
-    val (svw, suw) = widths(SparkEntry.fadsReplay(spark, qdir))
-    val (rvw, ruw) = widths(SparkEntry.fadsReplayRegionSharded(spark, qdir))
+    val (svw, suw) = widths(FadsReplays.replay(spark, qdir, FadsReplays("q9_fads_replay")))
+    val (rvw, ruw) = widths(FadsReplays.replay(spark, qdir, FadsReplays("q9_fads_region_sharded")))
     assert(rvw < svw, s"sharded QID not tighter: region $rvw vs single $svw")
     assert(ruw <= 1.2 * suw, s"non-sharded QID degraded: region $ruw vs single $suw")
   }
@@ -68,7 +68,7 @@ class FadsBatchSpec extends AnyFunSuite with SparkSpec {
   test("golden output: sf0.001 replay matches the checked-in fingerprint") {
     // compact drift guard: row count + deterministic aggregate fingerprint of
     // the full output (any algorithm change flips it)
-    val out = SparkEntry.fadsReplay(spark, dir)
+    val out = FadsReplays.replay(spark, dir, FadsReplays("q9_fads_replay"))
       .selectExpr("event_id", "user_id.lo AS ulo", "user_id.hi AS uhi",
         "value.lo AS vlo", "value.hi AS vhi", "CAST(suppressed AS INT) AS sup")
     val fp = out.selectExpr(

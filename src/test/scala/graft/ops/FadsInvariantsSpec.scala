@@ -17,7 +17,7 @@ class FadsInvariantsSpec extends AnyFunSuite with SparkSpec {
     val inCounts = graft.Tables.load(spark, dir, "events")
       .groupBy("event_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val rows = FadsInvariants.replayInvariants(spark, dir).collect()
+    val rows = FadsInvariants.all("q9_inv_replay")(spark, dir).collect()
     assert(rows.map(_.getString(0)).toSet == inCounts.keySet)
     rows.foreach { r =>
       assert(r.getLong(1) == inCounts(r.getString(0)), s"n_out for ${r.getString(0)}")
@@ -40,16 +40,8 @@ class FadsInvariantsSpec extends AnyFunSuite with SparkSpec {
 
   test("the gate turns red on a corrupted replay") {
     import org.apache.spark.sql.functions._
-    val flat = FadsBatch.flattenIntervals(
-      FadsBatch.anonymize(
-        graft.Tables.load(spark, dir, "events")
-          .withColumn("orig_user_id", col("user_id"))
-          .withColumn("orig_value", col("value")),
-        qidCols = Seq("user_id", "value"), pidCol = "user_id",
-        orderCols = Seq("ts", "event_id"),
-        clockCol = graft.Tables.tsNanosToMillis("ts"),
-        cfg = graft.SparkEntry.eventsFadsConfig),
-      Seq("user_id", "value"))
+    val flat = FadsReplays.frame(spark, dir, FadsReplays("q9_fads_replay"),
+      orig = true)
     // shrink every interval to a point below the original: containment breaks
     // on (nearly) every row, and every group's box collapses
     val corrupted = flat

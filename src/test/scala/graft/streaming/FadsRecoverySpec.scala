@@ -156,7 +156,8 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
     val got = spark.read.parquet(outDir).as[GenEvent].collect()
       .map(g => (g.event_id, g.user_id_lo, g.user_id_hi, g.value_lo, g.value_hi, g.suppressed))
       .sortBy(_._1)
-    val want = SparkEntry.fadsReplay(spark, sfDir).collect().map { r =>
+    val want = graft.ops.FadsReplays.replay(spark, sfDir,
+      graft.ops.FadsReplays("q9_fads_replay")).collect().map { r =>
       val u = r.getStruct(r.fieldIndex("user_id"))
       val v = r.getStruct(r.fieldIndex("value"))
       (r.getLong(r.fieldIndex("event_id")),
@@ -296,7 +297,8 @@ class FadsRecoverySpec extends AnyFunSuite with SparkSpec {
     val got = spark.read.parquet(outDir).as[GenEvent].collect()
       .map(g => (g.event_id, g.user_id_lo, g.user_id_hi, g.value_lo, g.value_hi, g.suppressed))
       .sortBy(_._1)
-    val want = SparkEntry.fadsReplayRegionSharded(spark, sfDir).collect().map { r =>
+    val want = graft.ops.FadsReplays.replay(spark, sfDir,
+      graft.ops.FadsReplays("q9_fads_region_sharded")).collect().map { r =>
       val u = r.getStruct(r.fieldIndex("user_id"))
       val v = r.getStruct(r.fieldIndex("value"))
       (r.getLong(r.fieldIndex("event_id")),

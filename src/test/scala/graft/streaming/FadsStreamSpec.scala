@@ -42,7 +42,8 @@ class FadsStreamSpec extends AnyFunSuite with SparkSpec {
       .map(g => (g.event_id, g.user_id_lo, g.user_id_hi, g.value_lo, g.value_hi, g.suppressed))
       .sortBy(_._1)
 
-    val want = SparkEntry.fadsReplay(spark, sfDir).collect().map { r =>
+    val want = graft.ops.FadsReplays.replay(spark, sfDir,
+      graft.ops.FadsReplays("q9_fads_replay")).collect().map { r =>
       val u = r.getStruct(r.fieldIndex("user_id"))
       val v = r.getStruct(r.fieldIndex("value"))
       (r.getLong(r.fieldIndex("event_id")),
@@ -92,9 +93,10 @@ class FadsStreamSpec extends AnyFunSuite with SparkSpec {
     val events = Tables.load(spark, sfDir, "events")
       .withColumn("shard", org.apache.spark.sql.functions.expr(
         "least(CAST(floor(value / 128.0) AS BIGINT), 3L)"))
-    val want = graft.ops.FadsBatch.anonymizeByKey(events, "shard",
+    val want = graft.ops.FadsBatch.anonymize(events,
         Seq("user_id", "value"), "user_id", Seq("ts", "event_id"),
-        Tables.tsNanosToMillis("ts"), SparkEntry.eventsFadsConfig, globalNorm = true)
+        Tables.tsNanosToMillis("ts"), SparkEntry.eventsFadsConfig,
+        shardCol = Some("shard"), globalNorm = true)
       .collect().map { r =>
         val u = r.getStruct(r.fieldIndex("user_id"))
         val v = r.getStruct(r.fieldIndex("value"))

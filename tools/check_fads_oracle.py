@@ -3,7 +3,10 @@
 independent pure-Python replica in fads_replay.py, bit-exactly per event.
 
 Usage: python3 tools/check_fads_oracle.py <sfDir> <verifyOutDir>
-Checks whichever of the 5 stateful replay entries are present in outDir.
+Checks whichever of the 7 stateful replay entries are present in outDir:
+the six batch replays and stream_fads_region_sharded, which replays the
+same per-shard order as q9_fads_region_sharded and is compared against the
+same replica (its GenEvent output has no shard column; none is read).
 """
 import sys
 
@@ -111,13 +114,16 @@ def main(sf_dir, out_dir):
         ok &= compare("q9_fads_sharded", expected_map(out, id_of),
                       spark_out(con, out_dir, "q9_fads_sharded", "event_id",
                                 ["user_id", "value"]))
-    if present("q9_fads_region_sharded"):
+    region = [n for n in ("q9_fads_region_sharded",
+                          "stream_fads_region_sharded") if present(n)]
+    if region:
         sharded = [(min(int(q[1] // 64), 7), q, p, s, c)
                    for q, p, s, c in seq_rows]
         out = fads_replay.replay_sharded(sharded, global_norm=True, **CFG)
-        ok &= compare("q9_fads_region_sharded", expected_map(out, id_of),
-                      spark_out(con, out_dir, "q9_fads_region_sharded",
-                                "event_id", ["user_id", "value"]))
+        for name in region:
+            ok &= compare(name, expected_map(out, id_of),
+                          spark_out(con, out_dir, name, "event_id",
+                                    ["user_id", "value"]))
     if present("taxi_fads_replay"):
         # rideId/taxiId/endTime are QIDs (generalized away), so no join key
         # survives — compare full rows as sorted multisets instead (which is
